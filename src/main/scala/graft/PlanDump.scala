@@ -2,36 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Env-gated STEADY-STATE ROUND plan evidence for the iterative tier
-  * (VERDICT r18 item 4/6): the final plans of PageRank/BFS/LabelProp/
-  * Components/SCC queries are checkpoint leaves that swallow the round
-  * plans, so the per-round join shape (cached edge side under a
-  * shuffled-hash join, exchanges carrying only the O(nodes) frame) is
-  * invisible in the query-level dump. When GRAFT_ROUND_PLAN_DIR is set,
-  * each instrumented loop writes its round-2 frame's formatted plan
-  * (round 2 = steady state: every input is already a leaf or a cache)
-  * to <dir>/<tag>.txt, once per tag per JVM. Off (zero work — not even
-  * planning) unless the env var is set, so bench/verify runs never pay
-  * for it.
-  */
-object RoundPlanDump {
-  private val seen =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  def dump(tag: String, df: org.apache.spark.sql.DataFrame): Unit =
-    sys.env.get("GRAFT_ROUND_PLAN_DIR").foreach { d =>
-      if (seen.add(tag)) {
-        try {
-          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-          val txt = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-            .queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(d, s"$tag.txt"), txt)
-        } catch { case _: Throwable => () }
-      }
-    }
-}
-
 /** Dump `.explain("formatted")` for named queries to files — the
   * optimization-round evidence artifact (plans/rNN/<query>_{before,after}.txt).
   * Usage: runMain graft.PlanDump <dataDir> <outDir> <suffix> <q1> <q2> ...

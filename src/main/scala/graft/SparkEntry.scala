@@ -3998,12 +3998,6 @@ object Queries {
   // driver-side. Ranks live in scaled int64 (S=1e9) with floor division,
   // so every round is bit-identical in any engine and the oracle can
   // unroll them as CTEs; fp PageRank would drift by summation order.
-  // Iteration discipline (the Components.ccWithRounds pattern): each
-  // round's ranks are localCheckpoint(true)-materialized so plan size
-  // stays O(1) in rounds (lineage would otherwise double per round), and
-  // the cached edge frames are unpersisted before returning — the final
-  // frame references only the last checkpoint, so nothing strands in the
-  // block manager across the 184-query drive or repeated bench runs.
   val PrScale = 1000000000L
   val PrRounds = 3
   val PrRoundsDeep = 10
@@ -4016,77 +4010,44 @@ object Queries {
 
   def pagerankRounds(spark: SparkSession, dir: String, rounds: Int): DataFrame = {
     require(rounds >= 1, "pagerank needs at least one round")
-    // shared memoized graph (copurchaseEdges); localCheckpoint still
-    // truncates lineage so round plans stay O(1) regardless of how the
-    // memo was built, and reads from its cache when warm
     val e0 = copurchaseEdges(spark, dir)
       .select(col("item_a").as("src"), col("item_b").as("dst"))
       .leanCheckpoint()
     val edges = e0.unionByName(
       e0.select(col("dst").as("src"), col("src").as("dst")))
     val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    // one cached frame reused by every round (edge ⋈ out-degree),
-    // HASH-PARTITIONED ON THE ROUND JOIN KEY so every round's join
-    // reuses the cached partitioning instead of re-exchanging O(edges)
-    // rows (guide §2.4: two operations keyed the same way share one
-    // exchange); the shuffle_hash hint below then builds the hash table
-    // on the O(nodes) rank side, so the edge side is neither shuffled
-    // NOR sorted per round — per-round exchanges carry O(nodes), and
-    // the contribution agg's map-side partial reduces the O(edges) fan
-    // before its exchange. Partition count sized to the DATA (round 19,
-    // operators/IterParts), not the session core count: every round
-    // runs that many tasks over the cache, so a core-count cache made
-    // the whole tier sequential-fixed-cost-bound at fixture scale.
-    val nParts = graft.operators.IterParts.forRows(e0, 2L * e0.count(), 32)
-    val withDeg = edges.join(deg, "src")
-      .repartition(nParts, col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize the cache BEFORE the first round compiles its plan:
-    // an unmaterialized cached AdaptiveSparkPlan reports unknown output
-    // partitioning, so the first job would re-exchange the O(edges)
-    // frame at the session default instead of reusing the cache layout
-    // (observed on the r19 round-plan dumps); one warm count — a local
-    // read pass the first round pays anyway — keeps every round's join
-    // on the cached partitioning
-    withDeg.count()
+    // one cached frame reused by every round (edge ⋈ out-degree); the
+    // contribution agg's map-side partial reduces the O(edges) fan
+    // before its exchange
+    val withDeg = graft.operators.Fixpoint.cache(
+      edges.join(deg, "src"), "src", 2L * e0.count(), 32)
     val base = lit(15L * PrScale / 100L)
-    // the rank side is explicitly repartitioned to the CACHE's layout
-    // before each join: a rank frame that arrives with some other
-    // partitioning (the initial deg projection, or a fused first
-    // round's agg output at the session default) would otherwise
-    // "satisfy" the join on its side and make EnsureRequirements
-    // re-exchange the O(edges) cache instead — observed on the r19
-    // round-plan dumps; the O(nodes) rank exchange is the per-round
-    // design, the O(edges) one is what the cache exists to remove
+    // `div` (integer division on int64) — NOT `/`, which routes longs
+    // through double and can misround once 85·p crosses 2^53.
     def round(rk: DataFrame): DataFrame = {
-      val co = rk.repartition(nParts, col("i"))
-      withDeg.join(co.hint("shuffle_hash"), withDeg("src") === co("i"))
+      val co = withDeg.probe(rk, "i")
+      withDeg.df.join(co, withDeg.df("src") === co("i"))
         .select(col("dst"), expr("(85 * p) div (100 * d)").as("contrib"))
         .groupBy(col("dst").as("i"))
         .agg((base + sum(col("contrib"))).as("p"))
     }
-    // `div` (integer division on int64) — NOT `/`, which routes longs
-    // through double and can misround once 85·p crosses 2^53.
-    // TWO rounds per checkpoint job (round 19, §1.2 job-count
-    // discipline): the round body references the previous rank frame
-    // exactly ONCE, so chaining a second round grows the per-job plan
-    // linearly with zero recompute — same arithmetic, same exact
-    // integer results, half the sequential job latency of the loop.
-    // (Bodies that reference their input ≥2× must NOT be fused this
-    // way — the SCC trim unroll measured that blowup.)
-    var ranks = deg.select(col("src").as("i"), lit(PrScale).as("p"))
-    var r = 1
-    while (r <= rounds) {
-      val one = round(ranks)
-      val fused = if (r + 1 <= rounds) round(one) else one
-      if (r >= 2) graft.RoundPlanDump.dump("pagerank_round2", fused)
-      ranks = fused.leanCheckpoint()
-      r += (if (r + 1 <= rounds) 2 else 1)
-    }
+    val ranks = prFused(deg.select(col("src").as("i"), lit(PrScale).as("p")),
+      rounds, "pagerank")(round)
     withDeg.unpersist()
     ranks.select(col("i").as("item"), col("p").as("rank_score"))
       .orderBy(col("rank_score").desc, col("item"))
   }
+
+  /** `rounds` PageRank rounds, TWO per checkpoint job: the round body
+    * references the previous rank frame exactly once, so chaining a
+    * second round grows the per-job plan linearly with zero recompute —
+    * same exact integer results, half the sequential job latency.
+    */
+  private def prFused(init: DataFrame, rounds: Int, tag: String)(
+      round: DataFrame => DataFrame): DataFrame =
+    graft.operators.Fixpoint.rounds(init, (rounds + 1) / 2, tag) { (rk, i) =>
+      if (2 * i <= rounds) round(round(rk)) else round(rk)
+    }
 
   // --- q156: GROUPING SETS report ------------------------------------------------
   // The explicit grouping-sets lattice (detail, per-flag, grand total)
@@ -5731,38 +5692,18 @@ object Queries {
     val edges = e0.unionByName(
       e0.select(col("dst").as("src"), col("src").as("dst"), col("w")))
     val wsum = edges.groupBy("src").agg(sum(col("w")).as("tw"))
-    // cache partitioned on the round join key, data-sized (IterParts —
-    // see pagerankRounds) + rank-side hash build: rounds never exchange
-    // or sort the O(edges) frame and per-round task count follows the
-    // graph, not the session core count
-    val nParts = graft.operators.IterParts.forRows(e0, 2L * e0.count(), 40)
-    val withW = edges.join(wsum, "src")
-      .repartition(nParts, col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // warm the cache so round 1 already reuses its partitioning (see
-    // pagerankRounds)
-    withW.count()
+    val withW = graft.operators.Fixpoint.cache(
+      edges.join(wsum, "src"), "src", 2L * e0.count(), 40)
     val base = lit(15L * PrScale / 100L)
-    // rank side co-partitioned to the cache's layout before each join
-    // (see pagerankRounds — keeps EnsureRequirements off the cache)
     def round(rk: DataFrame): DataFrame = {
-      val co = rk.repartition(nParts, col("i"))
-      withW.join(co.hint("shuffle_hash"), withW("src") === co("i"))
+      val co = withW.probe(rk, "i")
+      withW.df.join(co, withW.df("src") === co("i"))
         .select(col("dst"), expr("w * ((85 * p) div (100 * tw))").as("contrib"))
         .groupBy(col("dst").as("i"))
         .agg((base + sum(col("contrib"))).as("p"))
     }
-    // two rounds per checkpoint job — single-reference round body, so
-    // fusion is recompute-free (see pagerankRounds)
-    var ranks = wsum.select(col("src").as("i"), lit(PrScale).as("p"))
-    var r = 1
-    while (r <= rounds) {
-      val one = round(ranks)
-      val fused = if (r + 1 <= rounds) round(one) else one
-      if (r >= 2) graft.RoundPlanDump.dump("pagerank_weighted_round2", fused)
-      ranks = fused.leanCheckpoint()
-      r += (if (r + 1 <= rounds) 2 else 1)
-    }
+    val ranks = prFused(wsum.select(col("src").as("i"), lit(PrScale).as("p")),
+      rounds, "pagerank_weighted")(round)
     withW.unpersist()
     ranks.select(col("i").as("item"), col("p").as("rank_score"))
       .orderBy(col("rank_score").desc, col("item"))
@@ -5858,35 +5799,28 @@ object Queries {
       .unionByName(ed.select(col("dst").as("i"))).distinct()
       .leanCheckpoint()
     val outw = ed.groupBy("src").agg(sum(col("w")).as("tw"))
-    // cache partitioned on the round join key, data-sized (IterParts —
-    // see pagerankRounds) + rank-side hash build: rounds never exchange
-    // or sort the O(edges) frame
-    val withW = ed.join(outw, "src")
-      .repartition(
-        graft.operators.IterParts.forRows(ed, ed.count(), 40),
-        col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val withW = graft.operators.Fixpoint.cache(
+      ed.join(outw, "src"), "src", ed.count(), 40)
     // 1-row frames, broadcast — the q101 global-span pattern (never a
     // driver collect in the loop)
     val nn = nodes.agg(count(lit(1)).as("nn"))
     val base = lit(15L * PrScale / 100L)
-    var ranks = nodes.select(col("i"), lit(PrScale).as("p"))
-    for (r <- 1 to rounds) {
-      val dang = ranks.join(outw, ranks("i") === outw("src"), "left_anti")
+    val init = nodes.select(col("i"), lit(PrScale).as("p"))
+    val ranks = graft.operators.Fixpoint.rounds(init, rounds,
+        "pagerank_directed") { (rk, _) =>
+      val dang = rk.join(outw, rk("i") === outw("src"), "left_anti")
         .agg(coalesce(sum(col("p")), lit(0L)).as("d"))
-      val contrib = withW.join(ranks.hint("shuffle_hash"),
-          withW("src") === ranks("i"))
+      val co = withW.probe(rk, "i")
+      val contrib = withW.df.join(co, withW.df("src") === co("i"))
         .select(col("dst"), expr("w * ((85 * p) div (100 * tw))").as("c"))
         .groupBy("dst").agg(sum(col("c")).as("cs"))
-      val next = nodes
+      nodes
         .join(contrib, nodes("i") === contrib("dst"), "left")
         .crossJoin(broadcast(dang))
         .crossJoin(broadcast(nn))
         .select(col("i"),
           (base + coalesce(col("cs"), lit(0L)) +
             expr("(85 * d) div (100 * nn)")).as("p"))
-      if (r == 2) graft.RoundPlanDump.dump("pagerank_directed_round2", next)
-      ranks = next.leanCheckpoint()
     }
     withW.unpersist()
     ranks.select(col("i").as("item"), col("p").as("rank_score"))
@@ -6664,33 +6598,17 @@ object Queries {
       .filter(col("cs") =!= col("cd"))
       .select(col("cs").as("s"), col("cd").as("d")).distinct()
       .leanCheckpoint()
-    var depth = comp.select(col("scc_id").as("c")).distinct()
-      .withColumn("dep", lit(0L)).leanCheckpoint()
-    // dep starts all-zero, so the initial witness sum is 0 by
-    // construction — no job needed to measure it; and each round's sum
-    // rides the materializing action itself (localCheckpointSummed, the
-    // Scc/Components discipline) instead of a second aggregate job, so
-    // the depth loop is ONE job per round instead of two (guide §1.2:
-    // at fixpoint scale the sequential job latency IS the cost).
-    var prevSum = BigInt(0)
-    var converged = false
-    var round = 0
-    while (!converged && round < CondMaxRounds) {
-      round += 1
-      val upd = ce.join(depth, ce("s") === depth("c"))
+    val init = comp.select(col("scc_id").as("c")).distinct()
+      .withColumn("dep", lit(0L))
+    val (depth, _) = graft.operators.Fixpoint.untilStable(init, "dep",
+        CondMaxRounds, "condensation depth (a cycle would mean the SCC " +
+          "contraction is wrong)", "condensation") { d =>
+      val upd = ce.join(d, ce("s") === d("c"))
         .groupBy(ce("d").as("c2")).agg(max(col("dep") + 1).as("din"))
-      val (next, _, sNow) = LeanCheckpoint.localCheckpointSummed(
-        depth.join(upd, depth("c") === upd("c2"), "left")
-          .select(depth("c"),
-            greatest(col("dep"), coalesce(col("din"), col("dep"))).as("dep")),
-        "dep")
-      depth = next
-      converged = sNow == prevSum
-      prevSum = sNow
+      d.join(upd, d("c") === upd("c2"), "left")
+        .select(d("c"),
+          greatest(col("dep"), coalesce(col("din"), col("dep"))).as("dep"))
     }
-    require(converged,
-      s"condensation depth did not fixpoint within $CondMaxRounds rounds " +
-        "(a cycle would mean the SCC contraction is wrong)")
     val sizes = comp.groupBy("scc_id").agg(count(lit(1)).as("scc_size"))
     depth.join(sizes, depth("c") === sizes("scc_id"))
       .select(col("scc_id"), col("scc_size"), col("dep").as("depth"))

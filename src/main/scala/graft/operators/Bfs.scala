@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.LeanCheckpoint.Ops
+import org.apache.spark.storage.StorageLevel
 
 /** Bounded-depth breadth-first search (single-source shortest hops) as
   * synchronous frontier expansion — the Pregel/Bulk-Synchronous-Parallel
@@ -10,8 +11,7 @@ import org.apache.spark.sql.graft.LeanCheckpoint.Ops
   * equi-joins: round r joins the current distance frame against the
   * edge list and keeps the per-vertex MIN hop. Every shuffle is on the
   * vertex key, so 1000 executors each own a vertex range and rounds are
-  * embarrassingly parallel; `localCheckpoint(true)` per round keeps the
-  * plan O(1) in depth (the PageRank/k-core iteration discipline).
+  * embarrassingly parallel; one round per `Fixpoint.rounds` job.
   *
   * Depth is CAPPED (`maxHops`) so run cost is deterministic and the SQL
   * oracle can unroll the same count — on small-world graphs (the
@@ -34,37 +34,25 @@ object Bfs {
   def hops(edges: DataFrame, aCol: String, bCol: String,
            sources: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1, "bfs needs at least one hop")
-    // both directions once, up front — each round reuses the same frame,
-    // cached hash-partitioned on the per-round join key `u` so rounds
-    // neither exchange nor sort O(edges) (guide §2.4); the per-round
-    // hash table builds on the frontier side, which only ever holds the
-    // newest ring of vertices
-    // Persist the RAW edge projection before counting/mirroring so the
-    // caller's (possibly expensive) upstream runs once, into this cache
-    // (the Components discipline); the count then sizes the mirrored
-    // cache's partitioning to the GRAPH (IterParts), not the session
-    // core count — per-round tasks over the cache follow the data.
+    // the raw projection is persisted so the caller's upstream runs once,
+    // for both the sizing count and the mirrored cache
     val e0 = edges.select(col(aCol).as("u"), col(bCol).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val undirected = e0
-      .unionByName(e0.select(col("v").as("u"), col("u").as("v")))
-      .repartition(IterParts.forRows(e0, 2L * e0.count(), 32), col("u"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var dist = sources.select(col("n"), lit(0).as("hop"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val undirected = Fixpoint.cache(
+      e0.unionByName(e0.select(col("v").as("u"), col("u").as("v"))),
+      "u", 2L * e0.count(), 32)
+    val init = sources.select(col("n"), lit(0).as("hop"))
       .groupBy("n").agg(min("hop").as("hop"))
       .leanCheckpoint()
-    for (r <- 1 to maxHops) {
+    val dist = Fixpoint.rounds(init, maxHops, "bfs") { (d, r) =>
       // expand ONLY from the newest frontier: a vertex first reached at
       // round r-1 is the only one that can reveal a new vertex at r
-      val frontier = dist.filter(col("hop") === (r - 1)).hint("shuffle_hash")
-      val reached = frontier.join(undirected, frontier("n") === undirected("u"))
+      val frontier = undirected.probe(d.filter(col("hop") === (r - 1)), "n")
+      val reached = frontier
+        .join(undirected.df, frontier("n") === undirected.df("u"))
         .select(col("v").as("n"), lit(r).as("hop"))
-      val next = dist.unionByName(reached)
-        .groupBy("n").agg(min("hop").as("hop"))
-      if (r == 2) graft.RoundPlanDump.dump("bfs_round2", next)
-      dist = next.leanCheckpoint()
+      d.unionByName(reached).groupBy("n").agg(min("hop").as("hop"))
     }
-    // the final dist frame is a checkpointed leaf — safe to drop the caches
     undirected.unpersist()
     e0.unpersist()
     dist.select(col("n").as("node"), col("hop").cast("long").as("hop"))

@@ -17,9 +17,8 @@ import org.apache.spark.sql.graft.LeanCheckpoint.Ops
   * needs O(diameter) rounds — a 100-hop chain takes 100 rounds; the jump
   * halves every label path per round, giving O(log diameter) like the
   * large-star/small-star family but with one extra node-sized join per
-  * round instead of re-materializing the edge set. Labels only decrease,
-  * so the sum of labels is a monotone convergence witness — the loop
-  * stops when one round leaves the sum unchanged (fixpoint).
+  * round instead of re-materializing the edge set. The loop is
+  * `Fixpoint.minLabel` over the mirrored edge list, shared with SCC.
   *
   * Scale: each round is two joins + one aggregation, all keyed on node
   * ids — fully distributed, nothing driver-side except the 1-row
@@ -35,7 +34,8 @@ object Components {
     ccWithRounds(nodes, edges, maxIter)._1
 
   /** As `connectedComponents`, also reporting the rounds to fixpoint
-    * (exercised by the convergence-rate property spec).
+    * (exercised by the convergence-rate property spec). Fails when
+    * `maxIter` binds: partial labels would split components.
     */
   private[graft] def ccWithRounds(nodes: DataFrame, edges: DataFrame,
                                   maxIter: Int): (DataFrame, Int) = {
@@ -44,78 +44,26 @@ object Components {
     // the Jaccard pair pipeline) would be computed twice into the cache.
     val e0 = edges.select(col("src"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // cached hash-partitioned on `dst`, the per-round join key, so the
-    // neighbor-min join never re-exchanges or sorts O(edges) (guide
-    // §2.4); the per-round hash table builds on the O(nodes) label side.
-    // Partition count sized to the graph (IterParts), not the session
-    // core count — per-round tasks over this cache follow the data
-    val bidir = e0
-      .unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(IterParts.forRows(e0, 2L * e0.count(), 32), col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     // Only nodes INCIDENT to an edge can ever change label: iterate over
     // that subgraph and pass every isolated node through with label = id
     // at the end. In a near-dup corpus the pair subgraph is a sliver of
     // the corpus, so each round shuffles O(|pairs|), not O(|corpus|) —
     // at a billion documents the rounds never touch the billion.
-    val touched = bidir.select(col("src").as("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Each round's plan references the previous labels TWICE (probe side
-    // and neighbor-min side), so lineage doubles per iteration — an eager
-    // localCheckpoint truncates it to a leaf each round, keeping plan
-    // size O(1) regardless of graph diameter.
-    // every round is exactly ONE job: the convergence witness (label
-    // sum) rides the materializing action itself (the Scc discipline —
-    // LeanCheckpoint.localCheckpointSummed), halving the loop's job
-    // count vs a separate aggregate action per round; at fixpoint scale
-    // the sequential job latency IS the cost, not the row work
-    var (labels, _, prevSum) = org.apache.spark.sql.graft.LeanCheckpoint
-      .localCheckpointSummed(
-        touched.select(col("id"), col("id").as("label")), "label")
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
-      val nbrMin = bidir.join(labels.hint("shuffle_hash"),
-          bidir("dst") === labels("id"))
-        .groupBy("src").agg(min("label").as("nbr_label"))
-      val stepped = labels.join(nbrMin, labels("id") === nbrMin("src"), "left")
-        .select(labels("id"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("step"))
-      // Pointer jump (path halving): follow the stepped label to ITS
-      // label. Every label value is a node id, so the parent lookup is an
-      // equi-join against the same round's label table.
-      val parents = labels.select(col("id").as("p_id"), col("label").as("p_label"))
-      val roundFrame = stepped
-        .join(parents, stepped("step") === parents("p_id"), "left")
-        .select(stepped("id"),
-          least(col("step"), coalesce(col("p_label"), col("step")))
-            .as("label"))
-      if (it == 1) graft.RoundPlanDump.dump("components_round2", roundFrame)
-      val (next, _, s) = org.apache.spark.sql.graft.LeanCheckpoint
-        .localCheckpointSummed(roundFrame, "label")
-      labels = next
-      converged = s == prevSum
-      prevSum = s
-      it += 1
-    }
+    val touched = e0.select(col("src").as("n"))
+      .unionByName(e0.select(col("dst").as("n"))).distinct()
+    val (labels, rounds) = Fixpoint.minLabel(touched,
+      e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst"))),
+      maxIter, "connected components (maxIter)", "components")
     // Materialize the isolated-node side (label = id) BEFORE unpersisting
-    // the cached edge derivatives: the anti-join references `touched`,
-    // whose upstream is the caller's (possibly very expensive) pair
-    // pipeline. Without the eager checkpoint the caller's first action on
-    // the result would recompute that entire pipeline a second time after
-    // the caches below are dropped. One checkpointed pass over node ids
-    // here is O(|nodes|); the recompute it prevents is the dominant stage
-    // of the whole query.
+    // the raw edges: the caller's first action on the result must not
+    // recompute the (possibly very expensive) edge pipeline. `labels`
+    // holds exactly the touched nodes and is a checkpointed leaf.
     val isolated = nodes.select(col("id"))
-      .join(touched, Seq("id"), "left_anti")
+      .join(labels.select(col("n").as("id")), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("label"))
       .leanCheckpoint()
-    // `labels` and `isolated` are now both checkpointed leaves — the
-    // returned frame no longer references any of the cached inputs.
-    val all = labels.unionByName(isolated)
-    touched.unpersist()
-    bidir.unpersist()
     e0.unpersist()
-    (all, it)
+    (labels.select(col("n").as("id"), col("c").as("label"))
+      .unionByName(isolated), rounds)
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 
 /** Scale-adaptive partition count for the iterative graph tier's cached
-  * round frames (PageRank/BFS/LabelProp/Components edge caches).
+  * round frames (`Fixpoint.cache`).
   *
   * These caches were previously partitioned by their build join at the
   * session's `spark.sql.shuffle.partitions` — the CORE count in the
@@ -32,20 +32,13 @@ import org.apache.spark.sql.DataFrame
   *    core count — the scale regime, where per-partition state must
   *    stay bounded and task count must not explode.
   *
-  * Env knobs: SPARK_GRAFT_GRAPH_PART_BYTES (LARGE, default 256 MB),
-  * SPARK_GRAFT_GRAPH_PART_BYTES_MIN (SMALL, default 16 MB).
   * Partitioning never affects results (all round operations are keyed
   * joins/aggs over commutative combines), only task counts.
   */
 object IterParts {
 
-  private def largeTarget: Long =
-    sys.env.get("SPARK_GRAFT_GRAPH_PART_BYTES").map(_.toLong)
-      .getOrElse(256L << 20)
-
-  private def smallTarget: Long =
-    sys.env.get("SPARK_GRAFT_GRAPH_PART_BYTES_MIN").map(_.toLong)
-      .getOrElse(16L << 20)
+  private val LargeTarget = 256L << 20
+  private val SmallTarget = 16L << 20
 
   /** Partition count for a cached iteration frame of `rows` rows at
     * ~`rowBytes` each; `df` only supplies the session's parallelism.
@@ -58,11 +51,11 @@ object IterParts {
     * adopts the cache's partitioning and only the O(nodes) side
     * shuffles.
     */
-  def forRows(df: DataFrame, rows: Long, rowBytes: Long): Int = {
+  private[operators] def forRows(df: DataFrame, rows: Long, rowBytes: Long): Int = {
     val bytes = rows * rowBytes
     val par = df.sparkSession.sparkContext.defaultParallelism.toLong
-    val smallCap = math.max(2L, bytes / smallTarget)
-    val scaleFloor = bytes / largeTarget
+    val smallCap = math.max(2L, bytes / SmallTarget)
+    val scaleFloor = bytes / LargeTarget
     math.min(1L << 20,
       math.max(2L, math.max(scaleFloor, math.min(par, smallCap)))).toInt
   }

@@ -15,9 +15,8 @@ import org.apache.spark.sql.graft.LeanCheckpoint.Ops
   *
   * Plan shape per round: one degree hash-agg + two left-semi joins
   * (keep edges whose BOTH endpoints survive) — all equi-joins/aggs on
-  * vertex keys, nothing driver-side, and `localCheckpoint(true)` per
-  * round keeps the plan O(1) in rounds (the q155/q186 PageRank
-  * iteration discipline). Per-round cost is O(|remaining edges|), and
+  * vertex keys, all on executors, one round per `Fixpoint.rounds`
+  * job. Per-round cost is O(|remaining edges|), and
   * the edge set only shrinks — the classic peel does O(rounds) passes
   * where rounds is bounded by the graph's degeneracy ordering depth,
   * typically ≤ 10-20 on real power-law graphs.
@@ -47,14 +46,14 @@ object KCore {
     // where the earlier semi-join form dropped it on round 1. A null
     // endpoint is not a vertex; no caller passes one, and now neither
     // join form could disagree if one did.
-    var e = edges
+    val init = edges
       .filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .select(least(col(aCol), col(bCol)).as("x"),
         greatest(col(aCol), col(bCol)).as("y"))
       .leanCheckpoint()
-    for (r <- 1 to rounds) {
-      val deg = e.select(col("x").as("n"))
-        .unionByName(e.select(col("y").as("n")))
+    val e = Fixpoint.rounds(init, rounds, "kcore") { (cur, _) =>
+      val deg = cur.select(col("x").as("n"))
+        .unionByName(cur.select(col("y").as("n")))
         .groupBy("n").agg(count(lit(1)).as("deg"))
       // peel by ANTI-joining the DROPPED set rather than semi-joining
       // the kept set — identical semantics (every endpoint of e has a
@@ -66,11 +65,9 @@ object KCore {
       // construction — a round whose dropped set is genuinely large
       // falls back to a shuffled join on its own)
       val dropped = deg.filter(col("deg") < k).select("n")
-      val next = e.join(dropped.select(col("n").as("x")), Seq("x"), "left_anti")
+      cur.join(dropped.select(col("n").as("x")), Seq("x"), "left_anti")
         .join(dropped.select(col("n").as("y")), Seq("y"), "left_anti")
         .select("x", "y")
-      if (r == 2) graft.RoundPlanDump.dump("kcore_round2", next)
-      e = next.leanCheckpoint()
     }
     e.select(col("x").as("n")).unionByName(e.select(col("y").as("n")))
       .groupBy("n").agg(count(lit(1)).as("core_deg"))

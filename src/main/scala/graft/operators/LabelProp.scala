@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.LeanCheckpoint.Ops
+import org.apache.spark.storage.StorageLevel
 
 /** Community detection by SYNCHRONOUS label propagation (Raghavan et
   * al. 2007, "Near linear time algorithm to detect community structures
@@ -19,8 +20,7 @@ import org.apache.spark.sql.graft.LeanCheckpoint.Ops
   * well-defined — the bounded-round form IS the operator (ClickHouse
   * and Neo4j GDS ship maxIterations for the same reason). Per round:
   * one equi-join (edge × label) + two keyed aggregations, all shuffles
-  * on vertex keys; `localCheckpoint(true)` keeps the plan O(1) in
-  * rounds (the PageRank/k-core/BFS iteration discipline).
+  * on vertex keys, one round per `Fixpoint.rounds` job.
   */
 object LabelProp {
 
@@ -31,61 +31,28 @@ object LabelProp {
   def propagate(edges: DataFrame, aCol: String, bCol: String,
                 rounds: Int): DataFrame = {
     require(rounds >= 1, "label propagation needs at least one round")
-    // The edge frame is joined on `v` EVERY round: cache it already
-    // hash-partitioned on the join key (guide §2.4 — keyed operations
-    // share one exchange) and build the per-round hash table on the
-    // O(nodes) label side, so rounds neither exchange nor sort the
-    // O(edges) frame. A plain persist (not a checkpoint) is enough:
-    // round plans reference this one fixed subtree, lineage growth
-    // lives in `labels`, which keeps the leanCheckpoint discipline.
-    // Persist the RAW edge projection before counting/mirroring so the
-    // caller's (possibly expensive) upstream runs once, into this cache
-    // (the Components discipline); the count then sizes the mirrored
-    // cache's partitioning to the GRAPH (IterParts), not the session
-    // core count — per-round tasks over the cache follow the data.
+    // the raw projection is persisted so the caller's upstream runs once,
+    // for both the sizing count and the mirrored cache
     val e0 = edges.select(col(aCol).as("u"), col(bCol).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nParts = IterParts.forRows(e0, 2L * e0.count(), 32)
-    val undirected = e0
-      .unionByName(e0.select(col("v").as("u"), col("u").as("v")))
-      .repartition(nParts, col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // warm the cache so round 1 already reuses its partitioning (an
-    // unmaterialized cached AdaptiveSparkPlan reports unknown output
-    // partitioning — the first join would re-exchange O(edges))
-    undirected.count()
-    var labels = undirected.select(col("u").as("n"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val undirected = Fixpoint.cache(
+      e0.unionByName(e0.select(col("v").as("u"), col("u").as("v"))),
+      "v", 2L * e0.count(), 32)
+    val init = undirected.df.select(col("u").as("n"))
       .distinct()
       .withColumn("lbl", col("n"))
       .leanCheckpoint()
-    // label side co-partitioned to the cache's layout before each join
-    // (the pagerankRounds discipline — a label frame arriving with the
-    // session-default partitioning would make EnsureRequirements
-    // re-exchange the O(edges) cache instead)
-    def round(lb: DataFrame): DataFrame = undirected
-      .join(lb.withColumnRenamed("n", "v")
-        .repartition(nParts, col("v")).hint("shuffle_hash"), Seq("v"))
-      .groupBy(col("u").as("n"), col("lbl"))
-      .agg(count(lit(1)).as("cnt"))
-      // argmax by (count DESC, label ASC) as one struct-max: largest
-      // cnt wins; within it the largest -lbl = the SMALLEST label
-      .groupBy("n")
-      .agg(max(struct(col("cnt"), (-col("lbl")).as("neg"))).as("m"))
-      .select(col("n"), (-col("m.neg")).as("lbl"))
-    // two rounds per checkpoint job — the round body references the
-    // previous label frame exactly once, so the fusion is recompute-
-    // free (the pagerankRounds §1.2 discipline); identical labels,
-    // half the loop's sequential job latency
-    var r = 1
-    while (r <= rounds) {
-      val one = round(labels)
-      val fused = if (r + 1 <= rounds) round(one) else one
-      if (r >= 2) graft.RoundPlanDump.dump("labelprop_round2", fused)
-      labels = fused.leanCheckpoint()
-      r += (if (r + 1 <= rounds) 2 else 1)
+    val labels = Fixpoint.rounds(init, rounds, "labelprop") { (lb, _) =>
+      val side = undirected.probe(lb.withColumnRenamed("n", "v"), "v")
+      undirected.df.join(side, Seq("v"))
+        .groupBy(col("u").as("n"), col("lbl"))
+        .agg(count(lit(1)).as("cnt"))
+        // argmax by (count DESC, label ASC) as one struct-max: largest
+        // cnt wins; within it the largest -lbl = the SMALLEST label
+        .groupBy("n")
+        .agg(max(struct(col("cnt"), (-col("lbl")).as("neg"))).as("m"))
+        .select(col("n"), (-col("m.neg")).as("lbl"))
     }
-    // the final labels frame is a checkpointed leaf — it no longer
-    // references the cached edge frames, so the caches can drop now
     undirected.unpersist()
     e0.unpersist()
     labels.select(col("n").as("node"), col("lbl").as("label"))

@@ -29,13 +29,8 @@ import org.apache.spark.sql.graft.LeanCheckpoint
   *     round, so the loop terminates in ≤ condensation-depth rounds —
   *     measured 4–5 on the gated basket subgraph at every SF).
   *
-  * BOTH fixpoints are min-label propagations with POINTER JUMPING (the
-  * Components.scala path halving): label values are node ids, so
-  * label(label(v)) is one equi-join of the label table with itself;
-  * each round takes the min of the edge-propagated label and the
-  * jumped label. Plain edge-min needs O(longest path) rounds — a
-  * 100-hop chain takes 100; the jump halves every label path per
-  * round, giving O(log diameter). Correctness invariant (both
+  * BOTH fixpoints are `Fixpoint.minLabel` (min-label propagation with
+  * pointer jumping, O(log diameter) rounds). Correctness invariant (both
   * phases): a label is always the id of a node in the set it
   * summarizes ({v} ∪ ancestors, resp. {v} ∪ same-color descendants),
   * and those sets are closed under following labels — so jumped
@@ -44,24 +39,9 @@ import org.apache.spark.sql.graft.LeanCheckpoint
   * round-end equality forces the edge step to have been a no-op).
   * The backward phase reuses the same fixpoint on REVERSED same-color
   * edges; marked ⟺ m(v) = color(v), since the class root is the
-  * class minimum.
-  *
-  * Round materialization uses `LeanCheckpoint` (a bare LogicalRDD
-  * leaf), NOT `Dataset.localCheckpoint`: the builtin carries origin
-  * stats/constraints into each leaf and iterated self-joins compound
-  * that metadata — measured ~2.5× DRIVER time growth per round at
-  * constant stage/task/record counts (restricted sf0.01 verify 53 s →
-  * 695 s) until the loop crawls. See LeanCheckpoint's scaladoc.
-  *
-  * Scale shape: every step is an equi-join or hash-agg on vertex keys
-  * over frames that only shrink; one lean checkpoint per round keeps
-  * plans O(1) in rounds (the PageRank discipline); the only driver
-  * values are per-round 1-row label sums (the Components monotone
-  * convergence witness — labels only decrease, so an unchanged sum IS
-  * elementwise fixpoint). Rounds are CAPPED and the caps are REQUIRED
-  * non-binding: a partial fixpoint would silently merge or split
-  * components, so the operator fails fast instead of returning
-  * plausible wrong labels.
+  * class minimum. Their round caps are REQUIRED non-binding (a partial
+  * fixpoint would silently merge or split components), and so is the
+  * outer cap.
   *
   * Determinism: min-label over int64 ids — no RNG, no tiebreak
   * ambiguity; scc_id is the component's minimum node id, the same
@@ -71,63 +51,6 @@ object Scc {
 
   private def ckpt(df: DataFrame): DataFrame =
     LeanCheckpoint.localCheckpoint(df)
-
-  /** Jumped min-label fixpoint: starting from label(v) = v, repeatedly
-    * set label(v) = min(label(v), min over in-edge labels (flowing
-    * src → dst), label(label(v))) until the label sum is unchanged.
-    * Returns (n, c) at fixpoint. Fails fast if `maxRounds` binds.
-    */
-  private def minLabelFixpoint(nodes: DataFrame, edges: DataFrame,
-                               maxRounds: Int, what: String): DataFrame = {
-    // every round is exactly ONE job: the convergence witness (label
-    // sum) rides the materializing action (localCheckpointSummed), so
-    // the loop pays no separate aggregate job — at fixpoint scale the
-    // sequential job latency is the cost, not the row work.
-    // The edge frame is joined on `src` EVERY round: cache it
-    // hash-partitioned on the join key, data-sized (IterParts — the
-    // Components/PageRank §2.4 discipline), and build the per-round
-    // hash table on the O(nodes) label side, so rounds neither
-    // exchange nor sort the O(edges) frame.
-    val eP = edges
-      .repartition(IterParts.forRows(edges, edges.count(), 24), col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var (lab, _, prevSum) = LeanCheckpoint.localCheckpointSummed(
-      nodes.select(col("n"), col("n").as("c")), "c")
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      round += 1
-      val upd = eP.join(lab.hint("shuffle_hash"), eP("src") === lab("n"))
-        .groupBy(eP("dst").as("n2")).agg(min("c").as("cin"))
-      val stepped = lab.join(upd, lab("n") === upd("n2"), "left")
-        .select(lab("n"),
-          least(col("c"), coalesce(col("cin"), col("c"))).as("step"))
-      // pointer jump (path halving): follow the stepped label to ITS
-      // label — one self-join, since every label value is a node id.
-      // (Chaining MORE lookups through the round-start table was tried
-      // and measured a no-op on the gated graph — real label forests
-      // saturate at self-labeled roots after one hop, so the extra
-      // joins buy nothing; the cycle-graph worst case where they would
-      // pay is not what basket/citation graphs look like.)
-      val parents = lab.select(col("n").as("p_id"), col("c").as("p_c"))
-      val roundFrame = stepped
-        .join(parents, stepped("step") === parents("p_id"), "left")
-        .select(stepped("n"),
-          least(col("step"), coalesce(col("p_c"), col("step"))).as("c"))
-      if (round == 2) graft.RoundPlanDump.dump("scc_minlabel_round2", roundFrame)
-      val (next, _, s) = LeanCheckpoint.localCheckpointSummed(roundFrame, "c")
-      lab = next
-      converged = s == prevSum
-      prevSum = s
-    }
-    // `lab` is a checkpointed leaf — it no longer references the cache
-    eP.unpersist()
-    require(converged,
-      s"SCC $what did not fixpoint within $maxRounds rounds")
-    if (sys.env.contains("GRAFT_SCC_DEBUG"))
-      System.err.println(s"[scc] $what: $round rounds")
-    lab
-  }
 
   /** (node, scc_id) for every vertex of `edges` (cols `src`, `dst`;
     * self-loops and duplicates tolerated). scc_id = min node id in the
@@ -155,19 +78,12 @@ object Scc {
                  maxTrimRounds: Int = 15): DataFrame = {
     require(maxOuterRounds >= 1 && maxPropRounds >= 1,
       "SCC round caps must be positive")
-    val dbg = sys.env.contains("GRAFT_SCC_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(what: String): Unit = if (dbg) {
-      System.err.println(f"[scc] $what: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      t0 = System.nanoTime()
-    }
     var remE = ckpt(edges.select(col("src"), col("dst")).distinct())
     var remN = ckpt(remE.select(col("src").as("n"))
       .unionByName(remE.select(col("dst").as("n"))).distinct())
     var out: DataFrame = null
     var outer = 0
     var remaining = remN.count()
-    lap("graph build")
     while (remaining > 0 && outer < maxOuterRounds) {
       outer += 1
       // 0. trim: peel trivial (tendril) SCCs layer by layer. Each layer
@@ -214,8 +130,6 @@ object Scc {
               when(col("din").isNull || col("din") === 0L ||
                 col("dout") === 0L, 1L).otherwise(0L).as("triv")), "triv")
         val nTriv = sTriv.toLong
-        if (dbg)
-          System.err.println(s"[scc] trim layer $trimRound: $nTriv peeled")
         if (nTriv == 0) trimming = false
         else {
           val found = batch.filter(col("triv") === 1L)
@@ -231,13 +145,12 @@ object Scc {
           .join(remN.select(col("n").as("src")), Seq("src"), "left_semi")
           .join(remN.select(col("n").as("dst")), Seq("dst"), "left_semi")
           .select("src", "dst"))
-      lap(s"trim (outer $outer)")
       if (remaining == 0) {
         // trim finished the graph; nothing left to color this round
       } else {
       // 1. forward min-label fixpoint over the remaining subgraph
-      val color = minLabelFixpoint(remN, remE, maxPropRounds,
-        s"forward coloring (outer round $outer)")
+      val color = Fixpoint.minLabel(remN, remE, maxPropRounds,
+        s"SCC forward coloring (outer round $outer)", "scc_minlabel")._1
       // 2. backward min-reach fixpoint restricted to same-color edges:
       //    the same jumped min-label propagation on REVERSED edges —
       //    m(v) = min over {v} ∪ same-color descendants(v)
@@ -246,9 +159,8 @@ object Scc {
       val ecRev = ckpt(remE.join(cs, "src").join(cd, "dst")
         .filter(col("cs") === col("cd"))
         .select(col("dst").as("src"), col("src").as("dst")))
-      lap(s"forward+ecRev (outer $outer)")
-      val reach = minLabelFixpoint(remN, ecRev, maxPropRounds,
-        s"backward marking (outer round $outer)")
+      val reach = Fixpoint.minLabel(remN, ecRev, maxPropRounds,
+        s"SCC backward marking (outer round $outer)", "scc_minlabel")._1
       // marked ⟺ m(v) = color(v): the class root is the class MIN id,
       // so reaching it is the only way m can hit the color value
       val marked = ckpt(reach.select(col("n"), col("c").as("m"))
@@ -268,7 +180,6 @@ object Scc {
         .join(mN.select(col("n").as("dst")), Seq("dst"), "left_anti")
         .select("src", "dst"))
       remaining = nRem
-      lap(s"backward+peel (outer $outer)")
       }
     }
     require(remaining == 0,
