@@ -44,12 +44,6 @@ object Medallion {
       scdType: Int = 1,
       buckets: Int = 16)
 
-  /** Gold stores fold back into one snapshot root once the manifest
-    * references more than this many (bounds small-file accumulation from
-    * many tiny incremental commits — the Delta OPTIMIZE analog).
-    */
-  val CompactAfterRoots = 16
-
   /** Outcome of one table's run. `extracted` = rows in the (low, high]
     * slice; `cleaned` = slice rows passing the DQ expectations (what
     * proceeds to the gold merge); `goldRows` = rows in the committed gold
@@ -64,12 +58,10 @@ object Medallion {
   /** Per-table high-watermark state, kept compacted: each update rewrites
     * the tiny state table (one row per table, max watermark wins) through
     * the crash-safe snapshot protocol instead of appending a row per run —
-    * N runs leave ≤ 1 row per table, and `get` reads a bounded table.
+    * N runs leave ≤ 1 row per table, and `snapshot` reads a bounded table.
     */
   final class WatermarkStore(spark: SparkSession, path: String) {
     import spark.implicits._
-
-    def get(table: String): Option[java.sql.Timestamp] = snapshot().get(table)
 
     /** The whole state in one read: one manifest resolution + one scan of
       * the one-row-per-table state, regardless of how many tables the run
@@ -79,9 +71,6 @@ object Medallion {
       if (!Snapshots.exists(spark, path)) Map.empty
       else Snapshots.read(spark, path).collect()
         .map(r => r.getString(0) -> r.getTimestamp(1)).toMap
-
-    def update(table: String, wm: java.sql.Timestamp): Unit =
-      updateAll(Map(table -> wm))
 
     /** One commit for a whole run's watermarks (max wins per table). Safe
       * at run granularity: gold merges are replay-idempotent, so a crash
@@ -100,12 +89,13 @@ object Medallion {
   /** Run one incremental pass for every table spec:
     * extract (wm, high] → clean → merge into bucketed gold. Returns
     * per-table stats. `source(name)` provides the changelog frame (any
-    * reader).
+    * reader). Gold stores fold back into one snapshot root once their
+    * manifest references more than `compactAfterRoots`.
     */
   def run(spark: SparkSession, specs: Seq[TableSpec],
           source: String => DataFrame, stateDir: String,
           highWatermark: java.sql.Timestamp,
-          compactAfterRoots: Int = CompactAfterRoots): Seq[RunResult] = {
+          compactAfterRoots: Int = Snapshots.CompactAfterRoots): Seq[RunResult] = {
     val store = new WatermarkStore(spark, s"$stateDir/_watermarks")
     // resolve the watermark state ONCE per run, not once per table
     val lows = store.snapshot()

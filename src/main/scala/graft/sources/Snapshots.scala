@@ -1,11 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Crash-safe parquet snapshot store: a manifest-pointer commit protocol
-  * with never-zero live copies, in two flavors:
+  * with never-zero live copies, in three flavors:
   *
   *  - '''whole-table''' (`commit`): every commit writes a complete snapshot
   *    dir. Right for small state tables (watermarks, streaming indexes).
@@ -19,6 +19,9 @@ import org.apache.spark.sql.functions._
   *    (reference: local_spotify_dab/src/gold/spotify_etl/transformations/
   *    DimArtist.py:96-101 `stored_as_scd_type=2`; FactStream.py:96-105 —
   *    `create_auto_cdc_flow` commits only changed files via the Delta log).
+  *  - '''append-only log''' (`appendCommit`): each commit adds one segment
+  *    dir and carries the earlier ones; a caller token per segment makes
+  *    redelivery a no-op.
   *
   * Layout under `target/`:
   * {{{
@@ -38,21 +41,34 @@ import org.apache.spark.sql.functions._
   *  - bucketed: a header `buckets=<N>` then one line per non-empty bucket
   *    `<bucket>\t<relative dir>\t<rows>`. Row counts ride in the manifest
   *    so readers and stats never need a data scan.
+  *  - append-only log: a header `log` then one line per segment
+  *    `<relative dir>\t<rows>\t<token>`.
+  * `render` writes these and `parseManifest` reads them; nothing else
+  * touches manifest text.
   *
-  * Commit protocol (both flavors, the three steps in order):
-  *  1. stage the new snapshot dir (salted name) — readers unaffected;
-  *  2. publish manifest `<v+1>` by compare-and-set: the content is staged
-  *     in a dot-temp file and the version number claimed with an
+  * Commit protocol: every flavor stages a salted snapshot dir (readers
+  * unaffected), then publishes through ONE loop (`commitLoop`):
+  *  1. read the current version `v` and its manifest;
+  *  2. a per-flavor function derives the next manifest (whole-table: the
+  *     staged dir; bucketed: the touched buckets replaced, every other one
+  *     carried; log: the new segment appended) or declines (a replayed log
+  *     token, a compaction whose base moved);
+  *  3. check the staged dir still exists and still holds its gc lease
+  *     (named for a version ≥ `v`, see `stagePath`);
+  *  4. claim manifest `<v+1>` by compare-and-set (`casPublish`): the content
+  *     is staged in a dot-temp file and the version claimed with an
   *     atomic-if-absent primitive — `link(2)` on local filesystems (POSIX
   *     rename overwrites, so it cannot claim), rename + content read-back
-  *     on HDFS-style stores (their rename refuses an existing target);
-  *     after the win the staged dir's existence is re-verified, and a
-  *     corrective manifest rolls back a commit whose dir a racing gc
-  *     reaped inside the check-to-claim window;
-  *  3. gc — delete snapshot dirs referenced by NONE of the retained
-  *     manifests (`retainManifests` previous versions are kept as a grace
-  *     window for in-flight readers), and manifests below the retained
-  *     window.
+  *     on HDFS-style stores (their rename refuses an existing target). A
+  *     lost claim re-runs the loop from step 1;
+  *  5. verify the staged dir survived the claim. A gc racing the
+  *     check-to-claim window can reap it; then `repair` publishes a
+  *     corrective manifest without the dead dir — the whole-table pointer
+  *     rolls back, the touched buckets get their prior entries back, the
+  *     log loses the dead segment — and the writer re-stages.
+  * Then gc deletes snapshot dirs referenced by NONE of the retained
+  * manifests (`retainManifests` previous versions are kept as a grace
+  * window for in-flight readers), and manifests below the retained window.
   *
   * A crash between any two steps leaves a fully-readable store; nothing
   * relies on directory-rename atomicity (object stores don't provide it).
@@ -110,17 +126,22 @@ object Snapshots {
 
   private def fmt(v: Long): String = f"$v%08d"
 
-  /** Highest published version, if any commit has completed. */
-  def currentVersion(spark: SparkSession, target: String): Option[Long] = {
+  /** Every version still readable at `target`, ascending — the retained
+    * time-travel window. gc keeps `retainManifests` previous versions
+    * plus the current one, so history depth is a store policy, exactly
+    * like transaction-log table formats' retention.
+    */
+  def versions(spark: SparkSession, target: String): Seq[Long] = {
     val fs = fsOf(spark, target)
     val dir = manifestPath(target)
-    if (!fs.exists(dir)) None
-    else {
-      val vs = fs.listStatus(dir).iterator.map(_.getPath.getName)
-        .filter(_.forall(_.isDigit)).map(_.toLong).toSeq
-      if (vs.isEmpty) None else Some(vs.max)
-    }
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).iterator.map(_.getPath.getName)
+      .filter(_.forall(_.isDigit)).map(_.toLong).toSeq.sorted
   }
+
+  /** Highest published version, if any commit has completed. */
+  def currentVersion(spark: SparkSession, target: String): Option[Long] =
+    versions(spark, target).lastOption
 
   /** True once at least one commit has been published. */
   def exists(spark: SparkSession, target: String): Boolean =
@@ -152,56 +173,56 @@ object Snapshots {
     } else WholeTable(lines.head)
   }
 
+  /** The inverse of `parseManifest` — the only writer of manifest text. */
+  private def render(m: Manifest): String = m match {
+    case WholeTable(dir) => dir
+    case Bucketed(n, entries) => (s"buckets=$n" +: entries.sortBy(_.bucket)
+      .map(e => s"${e.bucket}\t${e.dir}\t${e.rows}")).mkString("\n")
+    case AppendLog(segments) =>
+      ("log" +: segments.map(s => s"${s.dir}\t${s.rows}\t${s.token}")).mkString("\n")
+  }
+
   private def readManifest(spark: SparkSession, target: String, v: Long): Manifest =
     parseManifest(manifestContent(spark, target, v))
+
+  /** The current version (0 before the first commit) and its manifest. */
+  private def current(spark: SparkSession, target: String): (Long, Option[Manifest]) =
+    currentVersion(spark, target)
+      .fold((0L, Option.empty[Manifest]))(v => (v, Some(readManifest(spark, target, v))))
+
+  private def bucketsOf(target: String, m: Manifest): (Int, Seq[BucketEntry]) = m match {
+    case Bucketed(n, entries) => (n, entries)
+    case _ => throw new IllegalStateException(s"$target is not a bucketed store")
+  }
+
+  private def segmentsOf(target: String, m: Manifest): Seq[LogSegment] = m match {
+    case AppendLog(segments) => segments
+    case _ => throw new IllegalStateException(s"$target is not a log store")
+  }
 
   /** Bucket layout of the current manifest: (numBuckets, entries). None if
     * no commit has been published; throws on a non-bucketed store.
     */
   def currentBuckets(spark: SparkSession, target: String): Option[(Int, Seq[BucketEntry])] =
-    currentVersion(spark, target).map { v =>
-      readManifest(spark, target, v) match {
-        case Bucketed(n, entries) => (n, entries)
-        case _ =>
-          throw new IllegalStateException(s"$target is not a bucketed store")
-      }
-    }
+    current(spark, target)._2.map(bucketsOf(target, _))
 
   /** Segments of the current log manifest. None if no commit has been
     * published; throws on a non-log store.
     */
   def logSegments(spark: SparkSession, target: String): Option[Seq[LogSegment]] =
-    currentVersion(spark, target).map { v =>
-      readManifest(spark, target, v) match {
-        case AppendLog(segments) => segments
-        case _ => throw new IllegalStateException(s"$target is not a log store")
-      }
-    }
+    current(spark, target)._2.map(segmentsOf(target, _))
 
   /** Total rows of the current bucketed/log snapshot — straight from
     * manifest metadata, no data scan.
     */
   def totalRows(spark: SparkSession, target: String): Long =
-    currentVersion(spark, target).map { v =>
-      readManifest(spark, target, v) match {
-        case Bucketed(_, entries) => entries.map(_.rows).sum
-        case AppendLog(segments) => segments.map(_.rows).sum
-        case WholeTable(_) =>
-          throw new IllegalStateException(s"$target stores no row counts (whole-table)")
-      }
-    }.getOrElse(0L)
+    current(spark, target)._2.fold(0L)(rowsOf(target, _))
 
-  /** Every version still readable at `target`, ascending — the retained
-    * time-travel window. gc keeps `retainManifests` previous versions
-    * plus the current one, so history depth is a store policy, exactly
-    * like transaction-log table formats' retention.
-    */
-  def versions(spark: SparkSession, target: String): Seq[Long] = {
-    val fs = fsOf(spark, target)
-    val dir = manifestPath(target)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).iterator.map(_.getPath.getName)
-      .filter(_.forall(_.isDigit)).map(_.toLong).toSeq.sorted
+  private def rowsOf(target: String, m: Manifest): Long = m match {
+    case Bucketed(_, entries) => entries.map(_.rows).sum
+    case AppendLog(segments) => segments.map(_.rows).sum
+    case WholeTable(_) =>
+      throw new IllegalStateException(s"$target stores no row counts (whole-table)")
   }
 
   /** Time travel: read the snapshot a SPECIFIC published version pointed
@@ -256,9 +277,10 @@ object Snapshots {
   }
 
   /** Bounded attempts for optimistic-concurrency loops: version CAS
-    * retries inside a publish, and full re-merge retries in
-    * `mergeCommitBuckets`. Contention beyond this indicates a misconfigured
-    * orchestrator (many writers hammering one store), not a transient race.
+    * retries inside a publish, and full re-stage retries in `commit`,
+    * `mergeCommitBuckets` and `appendCommit`. Contention beyond this
+    * indicates a misconfigured orchestrator (many writers hammering one
+    * store), not a transient race.
     */
   val MaxCommitRetries = 8
 
@@ -272,9 +294,9 @@ object Snapshots {
     // so a dir named at-or-above the store's current version is immune to
     // any gc whose view predates this writer's publish. Writers must
     // therefore never publish a dir named for an older version than the
-    // one they are CASing against (publish/publishBuckets/appendCommit
-    // all enforce this — the round-12 storm drill caught the lost-update
-    // race reusing a stale-named stage across several lost CASes opens).
+    // one they are CASing against (`commitLoop` enforces this for every
+    // flavor — the Round12FaultSpec storm drill caught the lost-update race
+    // reusing a stale-named stage across several lost CASes opens).
     // The salt is what prevents two concurrent writers from staging into
     // one directory.
     new Path(target, s"snap-${fmt(v)}-${newSalt()}")
@@ -289,7 +311,7 @@ object Snapshots {
       case d => d.toLong
     }
 
-  /** Step 1 (whole-table): stage the next complete snapshot dir (invisible
+  /** Stage (whole-table) the next complete snapshot dir (invisible
     * to readers). Returns the staged dir name (relative to the store root).
     */
   def writeSnapshot(df: DataFrame, target: String): String = {
@@ -298,7 +320,7 @@ object Snapshots {
     p.getName
   }
 
-  /** Step 1 (bucketed): write ONLY the touched buckets' data. `df` must
+  /** Stage (bucketed): write ONLY the touched buckets' data. `df` must
     * carry `BucketCol`; each bucket lands in `<staged dir>/graft_bucket=<b>`.
     * A rebalance hint keyed on the bucket routes each bucket's rows
     * together (AQE sizes the output partitions), so file count per bucket
@@ -315,73 +337,108 @@ object Snapshots {
     p.getName
   }
 
-  /** Step 2 — the commit point (whole-table): claim the next version for
-    * the staged dir, retrying past versions claimed by concurrent writers.
-    * Returns the published version. Throws ConcurrentModificationException
-    * if the staged dir was reaped by a concurrent writer's gc before this
-    * writer won a version (the caller must re-stage — `commit` does).
+  private def conflict(msg: String) = new java.util.ConcurrentModificationException(msg)
+
+  /** The one commit loop behind every publish (steps 1-5 of the protocol
+    * in the header): `next` derives the manifest to publish from the
+    * current one, or declines with None. Returns the published version
+    * and manifest, or None when `next` declined. Throws
+    * ConcurrentModificationException when the staged dir is gone or has
+    * lost its gc lease, when a racing gc reaped it under a won claim (the
+    * store is repaired first), or after MaxCommitRetries lost claims —
+    * every case the caller cures by re-staging.
     */
-  def publish(spark: SparkSession, target: String, stagedDir: String): Long = {
+  private def commitLoop(spark: SparkSession, target: String, stagedDir: String)
+                        (next: Option[Manifest] => Option[Manifest]): Option[(Long, Manifest)] = {
     val fs = fsOf(spark, target)
+    val staged = new Path(target, stagedDir)
     var attempt = 0
     while (attempt < MaxCommitRetries) {
-      if (!fs.exists(new Path(target, stagedDir)))
-        throw new java.util.ConcurrentModificationException(
-          s"staged snapshot $stagedDir at $target was garbage-collected " +
-            "by a concurrent commit before publish — re-stage and retry")
-      val cur = currentVersion(spark, target)
+      val (v, cur) = current(spark, target)
+      val m = next(cur) match { case Some(x) => x; case None => return None }
+      if (!fs.exists(staged))
+        throw conflict(s"staged snapshot $stagedDir at $target was garbage-collected " +
+          "by a concurrent commit before publish — re-stage and retry")
       // a dir named for an older version than the current one has lost
       // its gc lease: a racing gc can reap it in the unobservable window
       // right after the post-win verify below — refuse to publish it
-      if (stagedVersion(stagedDir) < cur.getOrElse(0L))
-        throw new java.util.ConcurrentModificationException(
-          s"staged snapshot $stagedDir at $target is named for an older " +
-            "version than the store's current one (gc lease expired) — " +
-            "re-stage and retry")
-      val v = cur.getOrElse(0L) + 1
-      if (casPublish(spark, target, v, stagedDir)) {
+      if (stagedVersion(stagedDir) < v)
+        throw conflict(s"staged snapshot $stagedDir at $target is named for an older " +
+          "version than the store's current one (gc lease expired) — re-stage and retry")
+      if (casPublish(spark, target, v + 1, render(m))) {
         // a gc racing this publish can reap the staged dir in the window
         // between the existence check above and the CAS win (needs
         // ≥ retainManifests+2 concurrent commits inside that window).
-        // Verify AFTER the win; on failure roll the pointer back to the
-        // previous snapshot so no reader resolves the dead dir, then make
-        // the caller re-stage.
-        if (fs.exists(new Path(target, stagedDir))) return v
-        correctWholeTable(spark, target, v, cur)
-        throw new java.util.ConcurrentModificationException(
-          s"staged snapshot $stagedDir at $target was garbage-collected " +
-            "between the existence check and the version CAS — corrective " +
-            "manifest published; re-stage and retry")
+        // Verify AFTER the win; on failure repair the store so no reader
+        // or re-merge ever resolves the dead dir, then make the caller
+        // re-stage.
+        if (fs.exists(staged)) return Some((v + 1, m))
+        repair(spark, target, stagedDir, cur)
+        throw conflict(s"staged snapshot $stagedDir at $target was garbage-collected " +
+          "between the existence check and the version CAS — corrective " +
+          "manifest published; re-stage and retry")
       }
       attempt += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the publish race $MaxCommitRetries times at $target")
+    throw conflict(s"lost the publish race $MaxCommitRetries times at $target")
   }
 
-  /** Roll a whole-table store back to its pre-`broken` snapshot pointer
-    * after a post-win verify found the just-published dir reaped. A later
-    * commit (version > `broken`) fully supersedes a whole-table snapshot,
-    * so correction stops as soon as the store moved past the broken
-    * version; a previous manifest that already aged out means exactly
-    * that supersession happened.
+  /** Publish a corrective manifest with no reference to `dead`, a staged
+    * root a racing gc reaped after its commit won. `prior` is the manifest
+    * that commit replaced. Per flavor: a whole-table pointer rolls back to
+    * `prior`; each bucket pointing into `dead` gets its `prior` entry back
+    * (a bucket with none drops out — it held no rows before); a log cuts
+    * the dead segment. Later manifests carry entries forward verbatim, so
+    * the dead references stay identifiable wherever they were dragged;
+    * once none is left (a later commit superseded them) there is nothing
+    * to do.
     */
-  private def correctWholeTable(spark: SparkSession, target: String,
-                                broken: Long, prevV: Option[Long]): Unit =
-    prevV.foreach { pv =>
-      try {
-        val prevContent = manifestContent(spark, target, pv)
-        var attempt = 0
-        while (attempt < MaxCommitRetries) {
-          val cv = currentVersion(spark, target).getOrElse(broken)
-          if (cv > broken) return
-          if (casPublish(spark, target, broken + 1, prevContent)) return
-          attempt += 1
-        }
-      } catch { case _: java.io.IOException => () }
+  private def repair(spark: SparkSession, target: String, dead: String,
+                     prior: Option[Manifest]): Unit = {
+    def isDead(dir: String) = rootOf(dir) == dead
+    var attempt = 0
+    while (attempt < MaxCommitRetries) {
+      val (v, cur) = current(spark, target)
+      val fixed = cur.flatMap {
+        case WholeTable(dir) if dir == dead => prior
+        case Bucketed(n, entries) if entries.exists(e => isDead(e.dir)) =>
+          val (bad, good) = entries.partition(e => isDead(e.dir))
+          val restored = prior.toSeq.flatMap(bucketsOf(target, _)._2)
+            .filter(p => bad.exists(_.bucket == p.bucket))
+          Some(Bucketed(n, good ++ restored))
+        case AppendLog(segments) if segments.exists(s => isDead(s.dir)) =>
+          Some(AppendLog(segments.filterNot(s => isDead(s.dir))))
+        case _ => None
+      }
+      if (fixed.forall(m => casPublish(spark, target, v + 1, render(m)))) return
+      attempt += 1
+    }
+  }
+
+  /** Run a whole stage-and-publish `body` up to MaxCommitRetries times,
+    * re-running it on a lost commit race: a ConcurrentModificationException
+    * (a moved base, a reaped or stale stage, a lost claim storm) or a
+    * missing file under this store (`fileNotFoundRooted`).
+    */
+  private def retrying[A](target: String, attempt: Int = 1)(body: => A): A =
+    try body
+    catch {
+      case e: Exception if attempt < MaxCommitRetries &&
+          (e.isInstanceOf[java.util.ConcurrentModificationException] ||
+            fileNotFoundRooted(e, target)) =>
+        retrying(target, attempt + 1)(body)
     }
 
-  /** Step 2 (bucketed): publish the staged dir's entries for the `touched`
+  /** The commit point (whole-table): claim the next version for
+    * the staged dir, retrying past versions claimed by concurrent writers.
+    * Returns the published version. Throws ConcurrentModificationException
+    * if the staged dir was reaped by a concurrent writer's gc (the caller
+    * must re-stage — `commit` does).
+    */
+  def publish(spark: SparkSession, target: String, stagedDir: String): Long =
+    commitLoop(spark, target, stagedDir)(_ => Some(WholeTable(stagedDir))).get._1
+
+  /** The commit point (bucketed): publish the staged dir's entries for the `touched`
     * buckets (row counts from the caller — no data scan here) with every
     * other bucket carried forward by reference from the manifest current
     * AT PUBLISH TIME. Returns total rows of the published snapshot.
@@ -401,91 +458,25 @@ object Snapshots {
                      numBuckets: Int, touched: Seq[Int],
                      rowsByBucket: Map[Int, Long],
                      expectedTouched: Option[Seq[BucketEntry]] = None): Long = {
-    val fs = fsOf(spark, target)
     val touchedSet = touched.toSet
-    val fresh = touched.flatMap { b =>
-      val rows = rowsByBucket.getOrElse(b, 0L)
-      // a touched bucket with zero surviving rows simply drops out of the
-      // manifest (its stale dir becomes unreferenced garbage)
-      if (rows > 0) Some(BucketEntry(b, s"$stagedDir/$BucketCol=$b", rows)) else None
-    }
-    var attempt = 0
-    while (attempt < MaxCommitRetries) {
-      val cur = currentVersion(spark, target)
-      val prev = cur.map(pv => readManifest(spark, target, pv)) match {
-        case Some(Bucketed(n, entries)) =>
-          require(n == numBuckets,
-            s"bucket count is pinned at $n for $target, got $numBuckets")
-          entries
-        case Some(_) =>
-          throw new IllegalStateException(s"$target already holds a non-bucketed store")
-        case None => Seq.empty
+    // a touched bucket with zero surviving rows simply drops out of the
+    // manifest (its stale dir becomes unreferenced garbage)
+    val fresh = touched.flatMap(b => rowsByBucket.get(b).filter(_ > 0)
+      .map(BucketEntry(b, s"$stagedDir/$BucketCol=$b", _)))
+    val (_, published) = commitLoop(spark, target, stagedDir) { cur =>
+      val prev = cur.fold(Seq.empty[BucketEntry]) { m =>
+        val (n, entries) = bucketsOf(target, m)
+        require(n == numBuckets,
+          s"bucket count is pinned at $n for $target, got $numBuckets")
+        entries
       }
-      expectedTouched.foreach { exp =>
-        val now = prev.filter(e => touchedSet(e.bucket))
-        if (now.toSet != exp.toSet)
-          throw new java.util.ConcurrentModificationException(
-            s"buckets ${touched.mkString(",")} of $target changed under this " +
-              "merge (concurrent commit to the same buckets) — re-merge " +
-              "against the current snapshot and re-stage")
-      }
-      if (!fs.exists(new Path(target, stagedDir)))
-        throw new java.util.ConcurrentModificationException(
-          s"staged snapshot $stagedDir at $target was garbage-collected " +
-            "by a concurrent commit before publish — re-stage and retry")
-      // same gc-lease rule as `publish`: a stale-named stage can be
-      // reaped right after the post-win verify — never publish it
-      if (stagedVersion(stagedDir) < cur.getOrElse(0L))
-        throw new java.util.ConcurrentModificationException(
-          s"staged snapshot $stagedDir at $target is named for an older " +
-            "version than the store's current one (gc lease expired) — " +
-            "re-merge and re-stage")
-      val entries = (prev.filterNot(e => touchedSet(e.bucket)) ++ fresh).sortBy(_.bucket)
-      val content = (s"buckets=$numBuckets" +:
-        entries.map(e => s"${e.bucket}\t${e.dir}\t${e.rows}")).mkString("\n")
-      if (casPublish(spark, target, cur.getOrElse(0L) + 1, content)) {
-        // post-win verify, same gc race as whole-table publish: on
-        // failure, point every touched bucket back at its pre-commit
-        // entry so no reader or re-merge ever resolves the dead dir
-        if (fs.exists(new Path(target, stagedDir)))
-          return entries.map(_.rows).sum
-        correctBuckets(spark, target, numBuckets, fresh, prev.filter(e => touchedSet(e.bucket)))
-        throw new java.util.ConcurrentModificationException(
-          s"staged snapshot $stagedDir at $target was garbage-collected " +
-            "between the existence check and the version CAS — corrective " +
-            "manifest published; re-merge and re-stage")
-      }
-      attempt += 1
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the publish race $MaxCommitRetries times at $target")
-  }
-
-  /** Replace `broken` bucket entries (a just-published commit whose staged
-    * dir a racing gc reaped) with their `prior` values wherever the
-    * CURRENT manifest still carries them. Later commits that already
-    * rewrote a broken bucket keep their own entry; a broken bucket with no
-    * prior entry simply drops out (it held no rows before this commit).
-    */
-  private def correctBuckets(spark: SparkSession, target: String, numBuckets: Int,
-                             broken: Seq[BucketEntry], prior: Seq[BucketEntry]): Unit = {
-    val brokenSet = broken.map(e => (e.bucket, e.dir)).toSet
-    val priorByBucket = prior.map(e => e.bucket -> e).toMap
-    var attempt = 0
-    while (attempt < MaxCommitRetries) {
-      val cv = currentVersion(spark, target).getOrElse(return)
-      val entriesNow = readManifest(spark, target, cv) match {
-        case Bucketed(_, es) => es
-        case _ => return
-      }
-      val (bad, good) = entriesNow.partition(e => brokenSet((e.bucket, e.dir)))
-      if (bad.isEmpty) return // every broken entry already superseded
-      val repaired = (good ++ bad.flatMap(e => priorByBucket.get(e.bucket))).sortBy(_.bucket)
-      val content = (s"buckets=$numBuckets" +:
-        repaired.map(e => s"${e.bucket}\t${e.dir}\t${e.rows}")).mkString("\n")
-      if (casPublish(spark, target, cv + 1, content)) return
-      attempt += 1
-    }
+      if (expectedTouched.exists(_.toSet != prev.filter(e => touchedSet(e.bucket)).toSet))
+        throw conflict(s"buckets ${touched.mkString(",")} of $target changed under this " +
+          "merge (concurrent commit to the same buckets) — re-merge " +
+          "against the current snapshot and re-stage")
+      Some(Bucketed(numBuckets, prev.filterNot(e => touchedSet(e.bucket)) ++ fresh))
+    }.get
+    rowsOf(target, published)
   }
 
   /** An atomic manifest-claim primitive for one filesystem scheme:
@@ -621,15 +612,17 @@ object Snapshots {
     won
   }
 
-  /** Snapshot roots (snap-XXXXXXXX dir names) referenced by manifest `v`. */
-  private def rootsOf(spark: SparkSession, target: String, v: Long): Set[String] =
-    readManifest(spark, target, v) match {
-      case WholeTable(name) => Set(name)
-      case Bucketed(_, entries) => entries.map(_.dir.takeWhile(_ != '/')).toSet
-      case AppendLog(segments) => segments.map(_.dir.takeWhile(_ != '/')).toSet
-    }
 
-  /** Step 3: delete snapshot dirs referenced by NONE of the retained
+  private def rootOf(dir: String): String = dir.takeWhile(_ != '/')
+
+  /** Snapshot roots (snap-XXXXXXXX dir names) a manifest references. */
+  private def roots(m: Manifest): Set[String] = m match {
+    case WholeTable(dir) => Set(dir)
+    case Bucketed(_, entries) => entries.map(e => rootOf(e.dir)).toSet
+    case AppendLog(segments) => segments.map(s => rootOf(s.dir)).toSet
+  }
+
+  /** Delete snapshot dirs referenced by NONE of the retained
     * manifests, and manifests below the retained window.
     * `retainManifests` previous versions (default 1) stay live as a grace
     * window for in-flight readers that resolved a manifest just before a
@@ -660,7 +653,7 @@ object Snapshots {
       val keep = math.max(1L, cur - retainManifests)
       val live = (keep to cur).iterator
         .filter(v => fs.exists(new Path(manifestPath(target), fmt(v))))
-        .flatMap(v => rootsOf(spark, target, v)).toSet
+        .flatMap(v => roots(readManifest(spark, target, v))).toSet
       snaps.foreach { p =>
         if (!live(p.getName) && stagedVersion(p.getName) < keep) fs.delete(p, true)
       }
@@ -680,26 +673,15 @@ object Snapshots {
     * state tables where the latest complete snapshot is the truth.
     */
   def commit(df: DataFrame, target: String, retainManifests: Int = 1): Unit = {
-    val spark = df.sparkSession
-    var attempt = 0
-    var published = false
-    while (!published) {
-      val dir = writeSnapshot(df, target)
-      try { publish(spark, target, dir); published = true }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1; if (attempt >= MaxCommitRetries) throw e
-      }
-    }
-    gc(spark, target, retainManifests)
+    retrying(target)(publish(df.sparkSession, target, writeSnapshot(df, target)))
+    gc(df.sparkSession, target, retainManifests)
   }
 
   /** Number of distinct snapshot roots the current bucketed manifest
     * references — the store's fragmentation measure.
     */
   def referencedRoots(spark: SparkSession, target: String): Int =
-    currentBuckets(spark, target)
-      .map(_._2.map(_.dir.takeWhile(_ != '/')).toSet.size).getOrElse(0)
+    currentBuckets(spark, target).fold(0) { case (n, es) => roots(Bucketed(n, es)).size }
 
   /** Fold a fragmented bucketed store back into a single snapshot root:
     * read every live bucket, rewrite all of them into `snap-<v+1>`, and
@@ -731,11 +713,39 @@ object Snapshots {
       }
     }
 
+  /** The fragmentation past which the medallion gold layer and the
+    * streaming SCD/IVM sinks fold a bucketed store back into one root
+    * (bounds small-file accumulation from many tiny incremental commits —
+    * the Delta OPTIMIZE analog).
+    */
+  val CompactAfterRoots = 16
+
   /** Compact when fragmentation crosses `maxRoots` referenced snapshot
     * roots. O(1) manifest check per call; the rewrite runs only when due.
     */
   def maybeCompact(spark: SparkSession, target: String, maxRoots: Int): Unit =
     if (referencedRoots(spark, target) > maxRoots) compactBuckets(spark, target)
+
+  /** Parquet footer row counts of the files under `dir` (recursive),
+    * summed per parent directory name — a metadata read per file in this
+    * process, no Spark action and no data scan. Plain per-level listings and
+    * one shared read-options object keep it cheap: a located recursive
+    * listing (which resolves every file's permissions) or a reader that
+    * builds its own options is over ten times slower per file on the
+    * local filesystem.
+    */
+  private def footerRows(spark: SparkSession, dir: Path): Map[String, Long] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = dir.getFileSystem(conf)
+    def files(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
+      .flatMap(s => if (s.isDirectory) files(s.getPath) else Seq(s))
+    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
+    files(dir).filter(_.getPath.getName.endsWith(".parquet")).map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf), options)
+      try f.getPath.getParent.getName -> r.getRecordCount finally r.close()
+    }.groupMapReduce(_._1)(_._2)(_ + _)
+  }
 
   /** The bucketed read-merge-write commit both the medallion gold layer
     * and the streaming SCD sinks run on: prune the stored table to the
@@ -747,50 +757,18 @@ object Snapshots {
     * Mechanics per commit, all slice-proportional:
     *  1. one probe action over `updates` (distinct over ≤ numBuckets
     *     values) decides the pruning — an empty slice commits NOTHING;
-    *  2. per-bucket manifest row counts ride an `Observation` on the
-    *     write itself (conditional aggregates over the known touched
-    *     list — no extra count actions);
+    *  2. per-bucket manifest row counts come from the staged files'
+    *     parquet footers — metadata only, no extra action, at any
+    *     touched-set width;
     *  3. publish + reference-based gc as usual.
     *
     * Returns total rows now in the store (from manifest metadata).
     */
-  /** Per-bucket manifest counts ride an `Observation` on the write itself
-    * up to this many touched buckets; beyond it, one conditional aggregate
-    * per bucket would pile thousands of expressions into a single observe
-    * node (codegen/driver blowup), so counts come from the staged files'
-    * parquet footers instead — a driver-side metadata read, still no data
-    * scan.
-    */
-  val ObservePerBucketLimit = 64
-
-  /** Sum of parquet footer row counts under `dir` (recursive) — metadata
-    * only, no data scan.
-    */
-  private def footerRows(spark: SparkSession, dir: Path): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) 0L
-    else {
-      var sum = 0L
-      val it = fs.listFiles(dir, true)
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) {
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-          try sum += r.getRecordCount finally r.close()
-        }
-      }
-      sum
-    }
-  }
-
   def mergeCommitBuckets(updates: DataFrame, target: String, keys: Seq[String],
-                         numBuckets: Int, retainManifests: Int = 1)
+                         numBuckets: Int)
                         (init: DataFrame => DataFrame)
                         (merge: (DataFrame, DataFrame) => DataFrame): Long = {
     val spark = updates.sparkSession
-    val fs = fsOf(spark, target)
     val bucket = bucketOf(keys, numBuckets)
     // the slice feeds two actions (the probe and the write); persist it so
     // the source is scanned once, spilling to disk for oversized batches
@@ -798,8 +776,7 @@ object Snapshots {
     try {
       val touched = u.select(bucket.as(BucketCol)).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
-      if (touched.isEmpty)
-        return currentBuckets(spark, target).map(_._2.map(_.rows).sum).getOrElse(0L)
+      val touchedSet = touched.toSet
       // Optimistic concurrency: each attempt merges against the CURRENT
       // manifest; a publish-time conflict on this writer's buckets (or a
       // reaped staged dir) re-runs the merge against the new state, so
@@ -809,63 +786,30 @@ object Snapshots {
       // dirs out mid-write) surfaces as a FileNotFound-rooted failure
       // from the write action — a conflict in disguise, retried the same
       // way instead of killing the job on a transient race.
-      var attempt = 0
-      while (true) try {
-        val current = currentBuckets(spark, target)
-        val touchedEntries = current.toSeq.flatMap(_._2)
-          .filter(e => touched.contains(e.bucket))
+      if (touched.isEmpty) totalRows(spark, target)
+      else retrying(target) {
+        val touchedEntries = currentBuckets(spark, target).toSeq.flatMap(_._2)
+          .filter(e => touchedSet(e.bucket))
         // keys sharing a bucket with a touched key ride through the merge's
         // untouched path and rewrite into the same bucket
         val merged =
           if (touchedEntries.isEmpty) init(u)
           else merge(readEntries(spark, target, touchedEntries), u)
-        val useObs = touched.size <= ObservePerBucketLimit
-        val obs = Observation()
-        val perBucket = touched.map(b =>
-          count(when(col(BucketCol) === b, 1)).as(s"b_$b"))
-        val tagged = merged.withColumn(BucketCol, bucket)
-        val staged =
-          if (useObs) tagged.observe(obs, count(lit(1)).as("n"), perBucket: _*)
-          else tagged
-        val dir = writeBucketSnapshot(staged, target)
-        val rowsByBucket =
-          if (useObs) {
-            val metrics = obs.get
-            val byBucket = touched.map(b =>
-              b -> metrics.getOrElse(s"b_$b", 0L).asInstanceOf[Long]).toMap
-            // a merge emitting keys OUTSIDE the touched buckets would write
-            // rows no manifest entry points at — fail loudly, never silently
-            val written = metrics.getOrElse("n", 0L).asInstanceOf[Long]
-            require(written == byBucket.values.sum,
-              s"merge produced $written rows but only ${byBucket.values.sum} " +
-                s"land in the touched buckets $touched of $target — merge must " +
-                "not invent keys outside the update slice's buckets")
-            byBucket
-          } else {
-            // footer mode: counts from the written partition dirs; a stray
-            // bucket dir is the same invented-key defect, detected by name
-            val written = fs.listStatus(new Path(target, dir))
-              .map(_.getPath.getName).filter(_.startsWith(s"$BucketCol="))
-              .map(_.stripPrefix(s"$BucketCol=").toInt).toSeq
-            val stray = written.filterNot(touched.contains)
-            require(stray.isEmpty,
-              s"merge wrote buckets $stray outside the touched set $touched " +
-                s"of $target — merge must not invent keys outside the update " +
-                "slice's buckets")
-            written.map(b =>
-              b -> footerRows(spark, new Path(target, s"$dir/$BucketCol=$b"))).toMap
-          }
+        val dir = writeBucketSnapshot(merged.withColumn(BucketCol, bucket), target)
+        val rowsByBucket = footerRows(spark, new Path(target, dir))
+          .map { case (d, n) => d.stripPrefix(s"$BucketCol=").toInt -> n }
+        // a merge emitting keys OUTSIDE the touched buckets would write
+        // rows no manifest entry points at — fail loudly, never silently
+        val stray = rowsByBucket.keys.filterNot(touchedSet).toSeq.sorted
+        require(stray.isEmpty,
+          s"merge wrote buckets $stray outside the touched set $touched " +
+            s"of $target — merge must not invent keys outside the update " +
+            "slice's buckets")
         val total = publishBuckets(spark, target, dir, numBuckets, touched,
           rowsByBucket, expectedTouched = Some(touchedEntries))
-        gc(spark, target, retainManifests)
-        return total
-      } catch {
-        case e: Exception
-            if e.isInstanceOf[java.util.ConcurrentModificationException] ||
-              fileNotFoundRooted(e, target) =>
-          attempt += 1; if (attempt >= MaxCommitRetries) throw e
+        gc(spark, target)
+        total
       }
-      0L // unreachable
     } finally u.unpersist()
   }
 
@@ -913,6 +857,7 @@ object Snapshots {
     fnf && inStore
   }
 
+
   /** Append-only commit: write ONLY `df` as a new log segment and publish
     * a manifest carrying every previous segment forward by reference — the
     * write side is O(batch) however large the table has grown. `token`
@@ -921,90 +866,25 @@ object Snapshots {
     * for the manifest comes from the new segment's parquet footers
     * (metadata-only read, no data scan).
     */
-  def appendCommit(df: DataFrame, target: String, token: Long,
-                   retainManifests: Int = 1): Boolean = {
+  def appendCommit(df: DataFrame, target: String, token: Long): Boolean = {
     val spark = df.sparkSession
-    val fs = fsOf(spark, target)
-    // the version and the segment list MUST come from ONE currentVersion
-    // resolution: deriving segments at version V but CASing at a freshly
-    // re-read version would let a concurrent append publish V+1 between
-    // the two reads and have its segment silently dropped from this
-    // writer's V+2 manifest (readers resolve max version — lost rows).
-    // With the pair read, a log that moved in between always loses the
-    // CAS and retries against the new state.
-    def logNow(): (Long, Seq[LogSegment]) = {
-      val vOpt = currentVersion(spark, target)
-      val segments = vOpt.map(v => readManifest(spark, target, v)) match {
-        case Some(AppendLog(s)) => s
-        case Some(_) =>
-          throw new IllegalStateException(s"$target already holds a non-log store")
-        case None => Seq.empty
+    def log(cur: Option[Manifest]) = cur.fold(Seq.empty[LogSegment])(segmentsOf(target, _))
+    def replayed(cur: Option[Manifest]) = log(cur).lastOption.exists(_.token >= token)
+    retrying(target) {
+      // a replay stages nothing
+      !replayed(current(spark, target)._2) && {
+        val dir = writeSnapshot(df, target)
+        val segment =
+          LogSegment(dir, footerRows(spark, new Path(target, dir)).values.sum, token)
+        // the carried segments come from the manifest the loop CASes
+        // against, so an append landing in between costs this writer the
+        // claim (and a re-derive), never its segment
+        val won = commitLoop(spark, target, dir) { cur =>
+          if (replayed(cur)) None else Some(AppendLog(log(cur) :+ segment))
+        }.isDefined
+        if (won) gc(spark, target)
+        won
       }
-      (vOpt.getOrElse(0L), segments)
-    }
-    if (logNow()._2.lastOption.exists(_.token >= token)) return false
-    var dir: String = null
-    var rows = 0L
-    var attempt = 0
-    while (attempt < MaxCommitRetries) {
-      try {
-        val (v, prev) = logNow() // re-read: a CAS loss means the log moved
-        if (prev.lastOption.exists(_.token >= token)) return false
-        // gc-lease rule (see stagePath): a dir staged while the log was at
-        // an older version becomes reap-eligible to a racing gc, and the
-        // post-win verify below cannot close that window (the reap can
-        // land just after it — the round-12 storm drill caught exactly
-        // this lost update). Re-stage under a current-version name.
-        if (dir != null && stagedVersion(dir) < v) dir = null
-        if (dir == null || !fs.exists(new Path(target, dir))) {
-          // first pass, or a concurrent commit's gc reaped the staged
-          // segment — (re-)stage; footer row count is metadata only
-          dir = writeSnapshot(df, target)
-          rows = footerRows(spark, new Path(target, dir))
-        }
-        val segments = prev :+ LogSegment(dir, rows, token)
-        val ok = casPublish(spark, target, v + 1,
-          ("log" +: segments.map(s => s"${s.dir}\t${s.rows}\t${s.token}")).mkString("\n"))
-        if (ok) {
-          // post-win verify, same gc race as the snapshot publishes: a
-          // reaped segment is cut back out of the log by a corrective
-          // manifest, then the commit retries with a fresh staging
-          if (fs.exists(new Path(target, dir))) {
-            gc(spark, target, retainManifests); return true
-          }
-          correctLog(spark, target, dir)
-          dir = null
-        }
-      } catch {
-        // the staged segment can vanish BETWEEN the existence check and
-        // the footer read (gc racing this commit) — re-stage and retry
-        case e: Exception if fileNotFoundRooted(e, target) => dir = null
-      }
-      attempt += 1
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the publish race $MaxCommitRetries times at $target")
-  }
-
-  /** Cut a dead segment (its dir reaped by a racing gc after the version
-    * CAS was won) back out of the CURRENT log manifest so no reader
-    * resolves it. Later manifests carry segments forward verbatim, so the
-    * dead entry stays identifiable by dir name wherever it was dragged.
-    */
-  private def correctLog(spark: SparkSession, target: String, badDir: String): Unit = {
-    var attempt = 0
-    while (attempt < MaxCommitRetries) {
-      val v = currentVersion(spark, target).getOrElse(return)
-      val segments = readManifest(spark, target, v) match {
-        case AppendLog(s) => s
-        case _ => return
-      }
-      if (!segments.exists(_.dir == badDir)) return
-      val repaired = segments.filterNot(_.dir == badDir)
-      val content =
-        ("log" +: repaired.map(s => s"${s.dir}\t${s.rows}\t${s.token}")).mkString("\n")
-      if (casPublish(spark, target, v + 1, content)) return
-      attempt += 1
     }
   }
 
@@ -1012,20 +892,21 @@ object Snapshots {
     * committed token). One full rewrite — amortize with `maybeCompactLog`.
     */
   def compactLog(spark: SparkSession, target: String): Unit =
-    currentVersion(spark, target).foreach { baseV =>
-      logSegments(spark, target).foreach { segments =>
-        val live = segments.filter(_.rows > 0)
-        if (segments.size > 1 && live.nonEmpty) {
-          val full = spark.read.parquet(
-            live.map(s => new Path(target, s.dir).toString): _*)
-          val dir = writeSnapshot(full, target)
-          // compaction is optional maintenance: publish only if the log
-          // has not moved since we read it (a lost CAS just abandons the
-          // staged dir to the next gc — never clobbers a concurrent append)
-          val ok = casPublish(spark, target, baseV + 1,
-            s"log\n$dir\t${live.map(_.rows).sum}\t${segments.last.token}")
-          if (ok) gc(spark, target)
-        }
+    logSegments(spark, target).foreach { segments =>
+      val live = segments.filter(_.rows > 0)
+      if (segments.size > 1 && live.nonEmpty) {
+        val dir = writeSnapshot(
+          spark.read.parquet(live.map(s => new Path(target, s.dir).toString): _*), target)
+        val folded = AppendLog(Seq(LogSegment(dir, live.map(_.rows).sum, segments.last.token)))
+        // compaction is optional maintenance: publish only over the log it
+        // read — a moved log declines and a reaped stage cancels the pass,
+        // leaving the staged dir to the next gc, never clobbering a
+        // concurrent append
+        try {
+          val base = Some(AppendLog(segments))
+          if (commitLoop(spark, target, dir)(cur => if (cur == base) Some(folded) else None)
+              .isDefined) gc(spark, target)
+        } catch { case _: java.util.ConcurrentModificationException => () }
       }
     }
 

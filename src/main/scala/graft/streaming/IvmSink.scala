@@ -95,7 +95,7 @@ object IvmSink {
           v.unionByName(marker(v))
         }
       })
-    Snapshots.maybeCompact(spark, path, ScdSinks.MaxRoots)
+    Snapshots.maybeCompact(spark, path, Snapshots.CompactAfterRoots)
     ()
   }
 }

@@ -38,7 +38,7 @@ object ScdSinks {
     Snapshots.mergeCommitBuckets(batch, path, keys, buckets)(
       Dedup.latestByKey(_, keys, orderCols))(
       (base, b) => Scd.scd1Merge(base, b, keys, orderCols))
-    Snapshots.maybeCompact(batch.sparkSession, path, MaxRoots)
+    Snapshots.maybeCompact(batch.sparkSession, path, Snapshots.CompactAfterRoots)
   }
 
   /** SCD2 history sink: merge each micro-batch of change rows into the
@@ -50,11 +50,6 @@ object ScdSinks {
     Snapshots.mergeCommitBuckets(batch, path, keys, buckets)(
       Scd.scd2FromChangelog(_, keys, seqCol, tieCols))(
       (hist, b) => Scd.scd2Merge(hist, b, keys, seqCol, tieCols))
-    Snapshots.maybeCompact(batch.sparkSession, path, MaxRoots)
+    Snapshots.maybeCompact(batch.sparkSession, path, Snapshots.CompactAfterRoots)
   }
-
-  /** Fold fragmented stores back to one root past this many referenced
-    * snapshot dirs (one amortized full rewrite).
-    */
-  val MaxRoots = 16
 }

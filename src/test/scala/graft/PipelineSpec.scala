@@ -349,7 +349,7 @@ class PipelineSpec extends AnyFunSuite {
     val target = TestSession.tempDir("graft_footer") + "/t"
     val n = 500
     val df = (0 until n).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-    val buckets = 128 // > ObservePerBucketLimit distinct buckets touched
+    val buckets = 128
     val total = Snapshots.mergeCommitBuckets(df, target, Seq("id"), buckets)(
       identity)((b, u) => b.unionByName(u))
     assert(total == n, "footer-derived manifest counts must equal the data")
@@ -359,8 +359,6 @@ class PipelineSpec extends AnyFunSuite {
     val trueDist = df.groupBy(Snapshots.bucketOf(Seq("id"), buckets).as("b"))
       .count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(entries.map(e => e.bucket -> e.rows).toMap == trueDist)
-    assert(entries.size > Snapshots.ObservePerBucketLimit,
-      "fixture must actually exercise the footer path")
   }
 
   test("a store merged down to zero rows reads with a clear guard") {
@@ -789,5 +787,195 @@ class PipelineSpec extends AnyFunSuite {
       assert(toks == toks.sorted && toks.distinct == toks,
         s"iteration $it: log tokens must be strictly increasing, got $toks")
     }
+  }
+
+  // --- repair: a staged dir reaped under a won CAS, one drill per flavor ---------
+
+  private def snapRoots(target: String): Set[String] =
+    Option(new java.io.File(target).listFiles).toSeq.flatten
+      .map(_.getName).filter(_.startsWith("snap-")).toSet
+
+  /** Runs `body` under a `file` claim that wins each version through
+    * `link(2)` and, on its FIRST win for a manifest of `target`, deletes
+    * every snapshot root not in `keep`: the gc reap that lands between a
+    * publish's staged-dir check and its version CAS, made deterministic.
+    * Returns the body's result and the reaped root names.
+    */
+  private def reapOnFirstWin[A](target: String, keep: Set[String])(body: => A): (A, Set[String]) = {
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val reaped = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val root = new java.io.File(target).getAbsolutePath + "/"
+    Snapshots.registerClaim("file", (fs, tmp, dst) => {
+      val won =
+        try {
+          Files.createLink(java.nio.file.Paths.get(dst.toUri.getPath),
+            java.nio.file.Paths.get(tmp.toUri.getPath))
+          true
+        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      if (won && dst.toUri.getPath.startsWith(root) && armed.getAndSet(false))
+        snapRoots(target).filterNot(keep).foreach { n =>
+          reaped.add(n)
+          fs.delete(new org.apache.hadoop.fs.Path(target, n), true)
+        }
+      won
+    })
+    try {
+      val out = body
+      (out, scala.jdk.CollectionConverters.SetHasAsScala(reaped).asScala.toSet)
+    } finally Snapshots.unregisterClaim("file")
+  }
+
+  test("repair, whole-table: a reaped stage rolls the pointer back to the previous snapshot") {
+    import spark.implicits._
+    val target = TestSession.tempDir("graft_repair_whole") + "/t"
+    Snapshots.commit(Seq((1L, "a")).toDF("id", "v"), target)
+    val keep = snapRoots(target)
+    val staged = Snapshots.writeSnapshot(Seq((2L, "b")).toDF("id", "v"), target)
+    val (e, reaped) = reapOnFirstWin(target, keep) {
+      intercept[java.util.ConcurrentModificationException] {
+        Snapshots.publish(spark, target, staged)
+      }
+    }
+    assert(reaped == Set(staged), s"fixture must reap exactly the stage, reaped $reaped")
+    assert(e.getMessage.contains("corrective manifest"), e.getMessage)
+    // v2 named the dead dir; the corrective v3 points back at v1's snapshot
+    assert(Snapshots.currentVersion(spark, target).contains(3L))
+    assert(Snapshots.read(spark, target).as[(Long, String)].collect().toSeq == Seq(1L -> "a"))
+  }
+
+  test("repair, bucketed: touched buckets return to their prior entries, new ones drop out") {
+    import spark.implicits._
+    val target = TestSession.tempDir("graft_repair_buckets") + "/t"
+    def stage(rows: Seq[(Int, Long)]): String = Snapshots.writeBucketSnapshot(
+      rows.toDF(Snapshots.BucketCol, "id"), target)
+    val first = stage(Seq(0 -> 1L, 1 -> 2L, 1 -> 3L))
+    Snapshots.publishBuckets(spark, target, first, 4, Seq(0, 1), Map(0 -> 1L, 1 -> 2L))
+    val prior = Snapshots.currentBuckets(spark, target).get
+    val keep = snapRoots(target)
+    // rewrites bucket 1 (has a prior entry) and opens bucket 2 (has none)
+    val second = stage(Seq(1 -> 20L, 2 -> 30L))
+    val (_, reaped) = reapOnFirstWin(target, keep) {
+      intercept[java.util.ConcurrentModificationException] {
+        Snapshots.publishBuckets(spark, target, second, 4, Seq(1, 2), Map(1 -> 1L, 2 -> 1L))
+      }
+    }
+    assert(reaped == Set(second), s"fixture must reap exactly the stage, reaped $reaped")
+    assert(Snapshots.currentVersion(spark, target).contains(3L))
+    assert(Snapshots.currentBuckets(spark, target).get == prior,
+      "every touched bucket must point back at its prior entry")
+    assert(Snapshots.read(spark, target).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L))
+    assert(Snapshots.totalRows(spark, target) == 3)
+  }
+
+  test("repair, log: the dead segment is cut and the retried append lands once") {
+    import spark.implicits._
+    val target = TestSession.tempDir("graft_repair_log") + "/t"
+    assert(Snapshots.appendCommit(Seq((1L, "a")).toDF("id", "v"), target, 1L))
+    val keep = snapRoots(target)
+    val (landed, reaped) = reapOnFirstWin(target, keep) {
+      Snapshots.appendCommit(Seq((2L, "b"), (3L, "c")).toDF("id", "v"), target, 2L)
+    }
+    assert(landed, "the append must retry past the reaped stage")
+    assert(reaped.size == 1, s"fixture must reap exactly the first stage, reaped $reaped")
+    val segments = Snapshots.logSegments(spark, target).get
+    assert(segments.map(_.token) == Seq(1L, 2L))
+    assert(segments.forall(s => !reaped(s.dir)), s"dead segment still referenced: $segments")
+    // v2 carried the dead segment, v3 cut it, v4 is the retried append
+    assert(Snapshots.currentVersion(spark, target).contains(4L))
+    assert(Snapshots.read(spark, target).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L))
+    assert(Snapshots.totalRows(spark, target) == 3)
+    assert(!Snapshots.appendCommit(Seq((2L, "b")).toDF("id", "v"), target, 2L),
+      "the landed token replays as a no-op")
+  }
+
+  // --- the on-disk manifest formats, pinned ---------------------------------------
+
+  /** Hand-writes manifest `v` of `target` with exactly `lines`. */
+  private def writeManifest(target: String, v: Long, lines: Seq[String]): Unit = {
+    val dir = java.nio.file.Paths.get(target, "_manifests")
+    Files.createDirectories(dir)
+    Files.write(dir.resolve(f"$v%08d"), lines.mkString("\n").getBytes("UTF-8"))
+  }
+
+  /** The current manifest's lines, byte-exact: a trailing newline would
+    * show up as an empty last line.
+    */
+  private def manifestLines(target: String): Seq[String] = {
+    val v = Snapshots.currentVersion(spark, target).get
+    new String(Files.readAllBytes(java.nio.file.Paths.get(target, "_manifests", f"$v%08d")),
+      "UTF-8").split("\n", -1).toSeq
+  }
+
+  test("manifest format: a hand-written whole-table store reads and extends") {
+    import spark.implicits._
+    val target = TestSession.tempDir("graft_fmt_whole") + "/t"
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$target/snap-00000001-0000aaaa")
+    writeManifest(target, 1, Seq("snap-00000001-0000aaaa"))
+    assert(Snapshots.read(spark, target).as[(Long, String)].collect().toSet ==
+      Set(1L -> "a", 2L -> "b"))
+    val e = intercept[IllegalStateException] { Snapshots.totalRows(spark, target) }
+    assert(e.getMessage.contains("whole-table"))
+    Snapshots.commit(Seq((3L, "c")).toDF("id", "v"), target)
+    assert(Snapshots.currentVersion(spark, target).contains(2L))
+    assert(manifestLines(target).size == 1 && manifestLines(target).head.startsWith("snap-00000002-"))
+    assert(Snapshots.read(spark, target).as[(Long, String)].collect().toSeq == Seq(3L -> "c"))
+  }
+
+  test("manifest format: a hand-written bucketed store reads and carries entries verbatim") {
+    import spark.implicits._
+    val target = TestSession.tempDir("graft_fmt_buckets") + "/t"
+    val root = "snap-00000001-0000bbbb"
+    Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("id", "v")
+      .withColumn(Snapshots.BucketCol, Snapshots.bucketOf(Seq("id"), 4))
+      .write.partitionBy(Snapshots.BucketCol).parquet(s"$target/$root")
+    val byBucket = Seq(1L, 2L, 3L, 4L).toDF("id")
+      .select(Snapshots.bucketOf(Seq("id"), 4).as("b")).groupBy("b").count()
+      .as[(Int, Long)].collect().sorted.toSeq
+    val entryLines = byBucket.map { case (b, n) => s"$b\t$root/${Snapshots.BucketCol}=$b\t$n" }
+    writeManifest(target, 1, "buckets=4" +: entryLines)
+    assert(Snapshots.currentBuckets(spark, target).contains((4, byBucket.map {
+      case (b, n) => Snapshots.BucketEntry(b, s"$root/${Snapshots.BucketCol}=$b", n)
+    })))
+    assert(Snapshots.totalRows(spark, target) == 4)
+    assert(Snapshots.read(spark, target).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L, 4L))
+    // a merge touching key 1's bucket carries every other line verbatim
+    val b1 = Seq(1L).toDF("id").select(Snapshots.bucketOf(Seq("id"), 4)).head.getInt(0)
+    Snapshots.mergeCommitBuckets(Seq((1L, "a2")).toDF("id", "v"), target, Seq("id"), 4)(
+      identity)((base, u) => base.filter(col("id") =!= 1L).unionByName(u))
+    val lines = manifestLines(target)
+    assert(lines.head == "buckets=4")
+    assert(lines.tail.filterNot(_.startsWith(s"$b1\t")) ==
+      entryLines.filterNot(_.startsWith(s"$b1\t")))
+    assert(lines.tail.exists(l => l.startsWith(s"$b1\tsnap-00000002-")))
+    assert(lines.tail.map(_.takeWhile(_ != '\t').toInt) == byBucket.map(_._1),
+      "entries are written in bucket order")
+    assert(Snapshots.read(spark, target).as[(Long, String)].collect().toMap ==
+      Map(1L -> "a2", 2L -> "b", 3L -> "c", 4L -> "d"))
+    assert(Snapshots.totalRows(spark, target) == 4)
+  }
+
+  test("manifest format: a hand-written log store reads and appends verbatim") {
+    import spark.implicits._
+    val target = TestSession.tempDir("graft_fmt_log") + "/t"
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$target/snap-00000001-0000cccc")
+    Seq((3L, "c")).toDF("id", "v").write.parquet(s"$target/snap-00000002-0000dddd")
+    val segLines = Seq("snap-00000001-0000cccc\t2\t5", "snap-00000002-0000dddd\t1\t7")
+    writeManifest(target, 2, "log" +: segLines)
+    assert(Snapshots.logSegments(spark, target).contains(Seq(
+      Snapshots.LogSegment("snap-00000001-0000cccc", 2, 5),
+      Snapshots.LogSegment("snap-00000002-0000dddd", 1, 7))))
+    assert(Snapshots.totalRows(spark, target) == 3)
+    assert(Snapshots.read(spark, target).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L))
+    assert(!Snapshots.appendCommit(Seq((9L, "z")).toDF("id", "v"), target, 7L),
+      "token 7 is already in the hand-written log")
+    assert(Snapshots.appendCommit(Seq((4L, "d")).toDF("id", "v"), target, 8L))
+    val lines = manifestLines(target)
+    assert(lines.take(3) == "log" +: segLines)
+    assert(lines.size == 4 && lines(3).startsWith("snap-00000003-") && lines(3).endsWith("\t1\t8"))
+    assert(Snapshots.totalRows(spark, target) == 4)
   }
 }

@@ -178,6 +178,7 @@ class Round12FaultSpec extends AnyFunSuite {
 
   test("gc lease: publish refuses a staged dir named for an older version") {
     import spark.implicits._
+    import org.apache.hadoop.fs.Path
     // The storm drill surfaced this lost update: a CAS loser that reuses
     // a dir staged several versions ago can win a later CAS while a
     // racing gc (whose view predates the publish) reaps the dir AFTER
@@ -185,22 +186,71 @@ class Round12FaultSpec extends AnyFunSuite {
     // The fix is a gc LEASE on the staged dir's name-version: publish
     // refuses any dir named below the store's current version, forcing a
     // re-stage under a fresh (gc-immune) name. This pins the refusal
-    // deterministically — no thread timing required.
-    val target = TestSession.tempDir("graft_lease") + "/t"
-    val stale = Snapshots.writeSnapshot(
-      Seq((1L, "a")).toDF("id", "v"), target) // named snap-00000001-…
-    Snapshots.commit(Seq((2L, "b")).toDF("id", "v"), target) // version 1
-    Snapshots.commit(Seq((3L, "c")).toDF("id", "v"), target) // version 2
+    // deterministically — no thread timing required — for every flavor
+    // on one fixture: a dir staged for version 1, then two commits that
+    // move the store to version 2 before the dir is offered.
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(target, stale)),
-      "fixture: the stale stage must still exist (gc keep horizon spares it)")
-    val e = intercept[java.util.ConcurrentModificationException] {
-      Snapshots.publish(spark, target, stale)
+    def ids(target: String): Seq[Long] =
+      Snapshots.read(spark, target).select("id").as[Long].collect().sorted.toSeq
+    def fixture(tag: String)(stage: String => String)(advance: (String, Long) => Unit)
+        : (String, String) = {
+      val target = TestSession.tempDir(s"graft_lease_$tag") + "/t"
+      val stale = stage(target) // named snap-00000001-…
+      advance(target, 2L); advance(target, 3L) // versions 1 and 2
+      assert(fs.exists(new Path(target, stale)),
+        s"fixture: the $tag stage must still exist (gc keep horizon spares it)")
+      (target, stale)
     }
-    assert(e.getMessage.contains("gc lease"), e.getMessage)
-    // the store is undisturbed: version 2's content is still the truth
-    assert(Snapshots.read(spark, target).select("id")
-      .as[Long].collect().toSeq == Seq(3L))
+    def refused(publish: => Long): Unit = {
+      val e = intercept[java.util.ConcurrentModificationException](publish)
+      assert(e.getMessage.contains("gc lease"), e.getMessage)
+    }
+
+    // whole-table: the store is undisturbed, version 2's content is the truth
+    val (whole, wholeStale) = fixture("whole")(
+      Snapshots.writeSnapshot(Seq((1L, "a")).toDF("id", "v"), _))(
+      (t, id) => Snapshots.commit(Seq((id, "b")).toDF("id", "v"), t))
+    refused(Snapshots.publish(spark, whole, wholeStale))
+    assert(ids(whole) == Seq(3L))
+
+    // bucketed: the stale stage would rewrite key 1's bucket
+    val b1 = Seq(1L).toDF("id").select(Snapshots.bucketOf(Seq("id"), 4)).head.getInt(0)
+    val (buckets, bucketsStale) = fixture("buckets")(t => Snapshots.writeBucketSnapshot(
+      Seq((1L, "a")).toDF("id", "v").withColumn(Snapshots.BucketCol, lit(b1)), t))(
+      (t, id) => Snapshots.mergeCommitBuckets(Seq((id, "b")).toDF("id", "v"), t,
+        Seq("id"), 4)(identity)((b, u) => b.unionByName(u)))
+    refused(Snapshots.publishBuckets(spark, buckets, bucketsStale, 4, Seq(b1), Map(b1 -> 1L)))
+    assert(ids(buckets) == Seq(2L, 3L))
+
+    // log: appendCommit stages its own segment, so the fixture's two
+    // commits land inside its first version claim, as concurrent appenders
+    // would; the lease must make it re-stage instead of publishing the
+    // stale segment
+    val log = TestSession.tempDir("graft_lease_log") + "/t"
+    val logStale = new java.util.concurrent.atomic.AtomicReference[String]()
+    def append(id: Long): Boolean =
+      Snapshots.appendCommit(Seq((id, "b")).toDF("id", "v"), log, token = id)
+    Snapshots.registerClaim("file", (_, tmp, dst) => {
+      if (logStale.compareAndSet(null, "")) {
+        logStale.set(new java.io.File(log).list().filter(_.startsWith("snap-")).head)
+        append(2L); append(3L) // versions 1 and 2, through this same claim
+        assert(fs.exists(new Path(log, logStale.get)),
+          "fixture: the log stage must still exist (gc keep horizon spares it)")
+      }
+      try {
+        java.nio.file.Files.createLink(java.nio.file.Paths.get(dst.toUri.getPath),
+          java.nio.file.Paths.get(tmp.toUri.getPath))
+        true
+      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    })
+    val landed = try append(10L) finally Snapshots.unregisterClaim("file")
+    assert(landed)
+    assert(logStale.get.startsWith("snap-00000001-"), logStale.get)
+    val segments = Snapshots.logSegments(spark, log).get
+    assert(segments.map(_.token) == Seq(2L, 3L, 10L))
+    assert(!segments.exists(_.dir == logStale.get),
+      s"the stale segment ${logStale.get} was published: $segments")
+    assert(ids(log) == Seq(2L, 3L, 10L))
   }
 }
