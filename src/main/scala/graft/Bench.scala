@@ -1,41 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the box's cores so ad-hoc runs measure the same thing as
-    // the driver's local[32] runs instead of a 4-core slice
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The UI is off but the AppStatus/SQL listeners still retain
-      // per-job/stage/task/execution state in heap at their DEFAULTS
-      // (1000 jobs / 1000 stages / 100k tasks / 1000 SQL executions,
-      // each SQL execution holding its full plan graph string). A
-      // 283-query × 5-runs suite churns ~10k executions through those
-      // stores, so late queries ran against a heap holding megabytes of
-      // dead plan descriptions (round-18 in-suite inflation, VERDICT r17
-      // item 1). Nothing reads the stores in a bench run — keep them
-      // small and constant-size.
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "5000")
-      .config("spark.sql.ui.retainedExecutions", "20")
-      .config("spark.appStateStore.asyncTracking.enable", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_QUERIES=q21_...,q22_... restricts the run (scaling
-    // studies on one table family); unset = the full surface.
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty) // "" behaves as unset, not match-nothing
-    val queries = SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    require(queries.nonEmpty, "SPARK_GRAFT_QUERIES matched no queries")
+    val spark = Sessions.local()
+    // SPARK_GRAFT_QUERIES restricts the run (scaling studies on one table
+    // family); unset = the full surface.
+    val queries = Sessions.selectQueries()
     // Warmup: run every query once at the smallest SF so JIT + codegen
     // compilation costs don't land on the first timed queries.
     val warmDir = "/root/testdata/sf0.001"
@@ -140,8 +110,8 @@ object Bench {
     // tables from the streaming gate queries accumulate one table per
     // RUN — those live in the MEMOIZED STREAM SESSION's catalog, which
     // this session cannot see; Queries.evictMemos() stops that session's
-    // strays and drops its graft_q* sinks (ADVICE r18 item 3), while the
-    // drop loop below covers any sink registered on THIS session; (3)
+    // strays and drops its graft_q* sinks, and Sessions.dropStrays does
+    // the same for THIS session; (3)
     // the memo maps keep (1) reachable forever. The sweep evicts the
     // memos FIRST (so no memoized plan dangles over a freed
     // lineage-free checkpoint), then unpersists every persistent RDD,
@@ -151,12 +121,8 @@ object Bench {
     // first run below — the same footing as their isolated adjudication
     // runs, so medians stay comparable to BASELINE.md.
     def sweep(): Unit = {
-      spark.streams.active.foreach(q => try q.stop() catch { case _: Throwable => () })
+      Sessions.dropStrays(spark)
       Queries.evictMemos()
-      try spark.catalog.listTables().collect()
-        .filter(t => t.isTemporary && t.name.startsWith("graft_q"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      catch { case _: Throwable => () }
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       spark.catalog.clearCache()
@@ -209,7 +175,7 @@ object Bench {
     // SPARK_GRAFT_QUERIES restriction is already an isolation run) and
     // only for rows with a pin (new queries have nothing to exceed).
     val pins: Map[String, Double] =
-      if (only.isDefined) Map.empty
+      if (queries.size < SparkEntry.queries.size) Map.empty
       else try {
         val txt = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get("BASELINE.md")), "UTF-8")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named queries to files — the
   * optimization-round evidence artifact (plans/rNN/<query>_{before,after}.txt).
   * Usage: runMain graft.PlanDump <dataDir> <outDir> <suffix> <q1> <q2> ...
@@ -12,15 +10,7 @@ object PlanDump {
     val out = args(1)
     val suffix = args(2)
     val names = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     names.foreach { n =>
       val fn = SparkEntry.queries(n)

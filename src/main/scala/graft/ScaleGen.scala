@@ -94,75 +94,68 @@ object ScaleGen {
   def scaleEvents(df: DataFrame, factor: Int): DataFrame =
     scaleByKeyOffset(df, factor, Seq("event_id", "user_id"))
 
-  def main(args: Array[String]): Unit = {
+  /** One scaling run as the three mains share it: `src dest [factor=10]`
+    * from `args`, a session whose parquet writer pins TIMESTAMP_MICROS
+    * (Spark defaults to INT96; scaled copies of MICROS-era fixtures carry
+    * the source's physical annotation), `scale` writing the scaled tables
+    * with `write`, then every other table of `src` copied through so the
+    * dest dir is a complete SF directory any tool (Bench, Verify) can
+    * point at.
+    */
+  private def run(name: String, tag: String, args: Array[String])(
+      scale: (SparkSession, String, Int, (DataFrame, String) => Unit) => Unit): Unit = {
     val src = args(0)
     val dest = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Spark's parquet writer defaults to INT96 timestamps; pin MICROS so
-      // scaled copies of MICROS-era fixtures carry the same physical
-      // annotation as the source (both re-detect as TsMicros either way,
-      // but the written contract should match the stated one).
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dest))
-    scaleDocuments(Tables.documents(spark, src), factor)
-      .repartition(cpus.toInt)
-      .write.mode("overwrite").parquet(s"$dest/documents.parquet")
-    val dim = Tables.embeddings(spark, src)
-      .select(size(col("embedding"))).first().getInt(0)
-    scaleEmbeddings(Tables.embeddings(spark, src), factor, dim)
-      .repartition(cpus.toInt)
-      .write.mode("overwrite").parquet(s"$dest/embeddings.parquet")
-    // Fact tables for the ETL/star family's second decade.
-    scaleOrders(spark.read.parquet(s"$src/orders.parquet"), factor)
-      .repartition(cpus.toInt)
-      .write.mode("overwrite").parquet(s"$dest/orders.parquet")
-    scaleLineitem(spark.read.parquet(s"$src/lineitem.parquet"), factor)
-      .repartition(cpus.toInt)
-      .write.mode("overwrite").parquet(s"$dest/lineitem.parquet")
-    // events.ts format follows the source fixtures (Tables.eventsTsUnit
-    // detects TIMESTAMP(MICROS) vs TIMESTAMP(NANOS)). MICROS sources copy
-    // through as native TimestampType (written back as TIMESTAMP(MICROS),
-    // which Tables.events re-detects); NANOS sources copy as raw INT64
-    // nanos, which the long-read path picks up. The scaled dir feeds Bench
-    // only, never the DuckDB oracle.
-    val evSrc = Tables.eventsTsUnit(spark, src) match {
-      case Tables.TsMicros => Tables.events(spark, src)
-      case Tables.TsNanos  => Tables.eventsRawNanos(spark, src)
-    }
-    scaleEvents(evSrc, factor)
-      .repartition(cpus.toInt)
-      .write.mode("overwrite").parquet(s"$dest/events.parquet")
-
-    // Pass the remaining (dim) tables through so the dest dir is a complete
-    // SF directory any tool (Bench, Verify) can point at.
-    val scaled = Set("documents.parquet", "embeddings.parquet",
-      "orders.parquet", "lineitem.parquet", "events.parquet")
+    // fail up front on a missing/non-local src: listFiles() below would
+    // return null and NPE after work was already done
     val srcDir = new java.io.File(src)
-    srcDir.listFiles().filter(_.getName.endsWith(".parquet"))
-      .filterNot(f => scaled(f.getName))
-      .foreach { f =>
-        val out = java.nio.file.Paths.get(dest, f.getName)
-        if (!java.nio.file.Files.exists(out)) {
-          if (f.isDirectory) {
-            spark.read.parquet(f.getPath).write.mode("overwrite")
-              .parquet(out.toString)
-          } else {
-            java.nio.file.Files.copy(f.toPath, out)
-          }
-        }
+    require(srcDir.isDirectory,
+      s"$name src must be a local testdata directory, got $src")
+    val cpus = Sessions.envCpus
+    val spark = Sessions.local(cpus)
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dest))
+    scale(spark, src, factor, (df, table) =>
+      df.repartition(cpus).write.mode("overwrite").parquet(s"$dest/$table"))
+    srcDir.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
+      val out = java.nio.file.Paths.get(dest, f.getName)
+      if (!java.nio.file.Files.exists(out)) {
+        if (f.isDirectory)
+          spark.read.parquet(f.getPath).write.mode("overwrite")
+            .parquet(out.toString)
+        else { java.nio.file.Files.copy(f.toPath, out); () }
       }
-    println(s"""{"scaled":"$src -> $dest","factor":$factor}""")
+    }
+    println(s"""{"$tag":"$src -> $dest","factor":$factor}""")
     spark.stop()
   }
+
+  def main(args: Array[String]): Unit =
+    run("ScaleGen", "scaled", args) { (spark, src, factor, write) =>
+      write(scaleDocuments(Tables.documents(spark, src), factor),
+        "documents.parquet")
+      val dim = Tables.embeddings(spark, src)
+        .select(size(col("embedding"))).first().getInt(0)
+      write(scaleEmbeddings(Tables.embeddings(spark, src), factor, dim),
+        "embeddings.parquet")
+      // Fact tables for the ETL/star family's second decade.
+      write(scaleOrders(spark.read.parquet(s"$src/orders.parquet"), factor),
+        "orders.parquet")
+      write(scaleLineitem(spark.read.parquet(s"$src/lineitem.parquet"), factor),
+        "lineitem.parquet")
+      // events.ts format follows the source fixtures (Tables.eventsTsUnit
+      // detects TIMESTAMP(MICROS) vs TIMESTAMP(NANOS)). MICROS sources copy
+      // through as native TimestampType (written back as TIMESTAMP(MICROS),
+      // which Tables.events re-detects); NANOS sources copy as raw INT64
+      // nanos, which the long-read path picks up. The scaled dir feeds Bench
+      // only, never the DuckDB oracle.
+      val evSrc = Tables.eventsTsUnit(spark, src) match {
+        case Tables.TsMicros => Tables.events(spark, src)
+        case Tables.TsNanos  => Tables.eventsRawNanos(spark, src)
+      }
+      write(scaleEvents(evSrc, factor), "events.parquet")
+    }
 
   /** Graph-drill variant (`runMain graft.ScaleGenGraph src dest factor`):
     * lineitem replicated with BOTH l_orderkey and l_partkey offset, all
@@ -176,104 +169,40 @@ object ScaleGen {
     * the graph family's exponents should be fitted on (same reasoning as
     * scaleEvents preserving per-user timelines).
     */
-  def graphMain(args: Array[String]): Unit = {
-    val src = args(0)
-    val dest = args(1)
-    val factor = if (args.length > 2) args(2).toInt else 10
-    // fail up front on a missing/non-local src: listFiles() below would
-    // return null and NPE after work was already done (matches scaleMain)
-    val srcDir = new java.io.File(src)
-    require(srcDir.isDirectory,
-      s"ScaleGenGraph src must be a local testdata directory, got $src")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dest))
-    scaleByKeyOffset(spark.read.parquet(s"$src/lineitem.parquet"), factor,
-        Seq("l_orderkey", "l_partkey"))
-      .repartition(cpus.toInt)
-      .write.mode("overwrite").parquet(s"$dest/lineitem.parquet")
-    srcDir.listFiles()
-      .filter(f => f.getName.endsWith(".parquet") &&
-        f.getName != "lineitem.parquet")
-      .foreach { f =>
-        val out = java.nio.file.Paths.get(dest, f.getName)
-        if (!java.nio.file.Files.exists(out)) {
-          if (f.isDirectory)
-            spark.read.parquet(f.getPath).write.mode("overwrite")
-              .parquet(out.toString)
-          else { java.nio.file.Files.copy(f.toPath, out); () }
-        }
-      }
-    println(s"""{"graph_scaled":"$src -> $dest","factor":$factor}""")
-    spark.stop()
-  }
+  def graphMain(args: Array[String]): Unit =
+    run("ScaleGenGraph", "graph_scaled", args) { (spark, src, factor, write) =>
+      write(scaleByKeyOffset(spark.read.parquet(s"$src/lineitem.parquet"),
+        factor, Seq("l_orderkey", "l_partkey")), "lineitem.parquet")
+    }
+
+  /** Lineitem-only facts scaler (`runMain graft.ScaleGenLineitem src dest
+    * factor`): lineitem replicated with l_orderkey offset (per-part
+    * chains grow `factor`× DEEPER — the q210 FIFO drill regime, where
+    * per-key cumulative totals cross many bucket widths), every other
+    * table passed through. Much cheaper than `main` when only the
+    * lineitem family is under drill (no document/embedding blow-up).
+    */
+  def lineitemMain(args: Array[String]): Unit =
+    run("ScaleGenLineitem", "lineitem_scaled", args) { (spark, src, factor, write) =>
+      val li = spark.read.parquet(s"$src/lineitem.parquet")
+      // Detect an already-scaled source: offsets are i·IdStride, so
+      // replicating a dir whose keys already reach the stride would
+      // collide replica 1's keys with the source's replica 1 — silently
+      // corrupting per-key chains. Always scale from the ORIGINAL
+      // fixture dir.
+      val maxKey = li.agg(max("l_orderkey")).collect()(0).getLong(0)
+      require(maxKey < IdStride,
+        s"$src looks already scaled (max l_orderkey $maxKey >= IdStride " +
+          s"$IdStride): replica offsets would collide — always " +
+          "scale from the ORIGINAL fixture dir")
+      write(scaleLineitem(li, factor), "lineitem.parquet")
+    }
 }
 
 object ScaleGenGraph {
   def main(args: Array[String]): Unit = ScaleGen.graphMain(args)
 }
 
-/** Lineitem-only facts scaler (`runMain graft.ScaleGenLineitem src dest
-  * factor`): lineitem replicated with l_orderkey offset (per-part
-  * chains grow `factor`× DEEPER — the q210 FIFO drill regime, where
-  * per-key cumulative totals cross many bucket widths), every other
-  * table passed through. Much cheaper than scaleMain when only the
-  * lineitem family is under drill (no document/embedding blow-up).
-  * ALWAYS scale from the ORIGINAL fixture dir: offsets are i·IdStride,
-  * so re-scaling an already-scaled dir collides keys.
-  */
 object ScaleGenLineitem {
-  def main(args: Array[String]): Unit = {
-    val src = args(0)
-    val dest = args(1)
-    val factor = if (args.length > 2) args(2).toInt else 10
-    val srcDir = new java.io.File(src)
-    require(srcDir.isDirectory,
-      s"ScaleGenLineitem src must be a local testdata directory, got $src")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dest))
-    val li = spark.read.parquet(s"$src/lineitem.parquet")
-    // Detect an already-scaled source instead of relying on the scaladoc:
-    // offsets are i·IdStride, so replicating a dir whose keys already
-    // reach the stride would collide replica 1's keys with the source's
-    // replica 1 — silently corrupting per-key chains.
-    val maxKey = li.agg(org.apache.spark.sql.functions.max("l_orderkey"))
-      .collect()(0).getLong(0)
-    require(maxKey < ScaleGen.IdStride,
-      s"$src looks already scaled (max l_orderkey $maxKey >= IdStride " +
-        s"${ScaleGen.IdStride}): replica offsets would collide — always " +
-        "scale from the ORIGINAL fixture dir")
-    ScaleGen.scaleLineitem(li, factor)
-      .repartition(cpus.toInt)
-      .write.mode("overwrite").parquet(s"$dest/lineitem.parquet")
-    srcDir.listFiles()
-      .filter(f => f.getName.endsWith(".parquet") &&
-        f.getName != "lineitem.parquet")
-      .foreach { f =>
-        val out = java.nio.file.Paths.get(dest, f.getName)
-        if (!java.nio.file.Files.exists(out)) {
-          if (f.isDirectory)
-            spark.read.parquet(f.getPath).write.mode("overwrite")
-              .parquet(out.toString)
-          else { java.nio.file.Files.copy(f.toPath, out); () }
-        }
-      }
-    println(s"""{"lineitem_scaled":"$src -> $dest","factor":$factor}""")
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit = ScaleGen.lineitemMain(args)
 }

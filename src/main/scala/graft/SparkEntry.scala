@@ -952,12 +952,9 @@ object Queries {
       lit(0.5) * least(lit(1.0), size(ws).cast("double") / lit(200.0))
   }
 
-  private val decisionMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val pairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val coEdgesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val decisionMemo = new SessionMemo[String, DataFrame]
+  private val pairsMemo = new SessionMemo[String, DataFrame]
+  private val coEdgesMemo = new SessionMemo[String, DataFrame]
 
   /** Drop every memoized DataFrame so a harness can unpersist ALL
     * persistent RDDs (including the lineage-free localCheckpoint leaves
@@ -972,18 +969,11 @@ object Queries {
     decisionMemo.clear()
     pairsMemo.clear()
     coEdgesMemo.clear()
+    cfxCodebookMemo.releaseStopped()
     // The stream-gate sessions have their OWN StreamingQueryManager and
-    // catalog — the bench session's sweep cannot reach them. Stop any
-    // stray stream and drop the memory-sink temp tables here, where the
-    // memoized sessions are visible; the sessions themselves are kept
-    // (cheap, conf-stable).
-    streamSessionMemo.values.forEach { s =>
-      s.streams.active.foreach(q => try q.stop() catch { case _: Throwable => () })
-      try s.catalog.listTables().collect()
-        .filter(t => t.isTemporary && t.name.startsWith("graft_q"))
-        .foreach(t => s.catalog.dropTempView(t.name))
-      catch { case _: Throwable => () }
-    }
+    // catalog — the bench session's sweep cannot reach them; the
+    // sessions themselves are kept (cheap, conf-stable).
+    streamSessions.values.foreach(Sessions.dropStrays)
   }
 
   /** A memoized frame whose persist may have been dropped externally
@@ -999,37 +989,12 @@ object Queries {
     df
   }
 
-  private val tmpDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-  private lazy val tmpCleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tmpDirs.forEach(p => deleteRecursively(p.toFile))))
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
-  /** Temp dir for gate queries that exercise filesystem machinery
-    * (bucketed writes, snapshot stores, stream checkpoints). Registered
-    * for recursive deletion at JVM exit so repeated bench/suite
-    * invocations can't accumulate disk across a session's lifetime — the
-    * returned DataFrames read these paths LAZILY, so deletion can't be
-    * earlier than shutdown without breaking re-evaluation.
-    */
-  private[graft] def tempDir(tag: String): String = {
-    tmpCleanupHook
-    val p = java.nio.file.Files.createTempDirectory(tag)
-    tmpDirs.add(p)
-    p.toString
-  }
-
   /** The corpus's verified near-dup pair list (LSH candidates + exact
     * Jaccard ≥ threshold), computed once per (session, dir) — the shared
     * upstream of the decision table AND the pair-level reports (q87).
     */
   def verifiedPairs(spark: SparkSession, dir: String): DataFrame =
-    ensureCached(pairsMemo.computeIfAbsent((spark, dir), _ =>
+    ensureCached(pairsMemo(spark, dir)(
       NearDup.lshVerifiedJaccardPairs(
         Tables.documents(spark, dir), "doc_id", "text", JaccardN, JaccardThreshold)))
 
@@ -1038,7 +1003,7 @@ object Queries {
     * to every consumer after that.
     */
   def dedupDecisionTable(spark: SparkSession, dir: String): DataFrame =
-    ensureCached(decisionMemo.computeIfAbsent((spark, dir), _ =>
+    ensureCached(decisionMemo(spark, dir)(
       NearDup.componentTable(
         Tables.documents(spark, dir), "doc_id", "text",
         JaccardN, JaccardThreshold, docQuality, carryCols = Seq("source"),
@@ -1057,7 +1022,7 @@ object Queries {
     * pays the rebuild once.
     */
   def copurchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    ensureCached(coEdgesMemo.computeIfAbsent((spark, dir), _ =>
+    ensureCached(coEdgesMemo(spark, dir)(
       Analytics.coOccurrencePairs(
         Tables.lineitem(spark, dir).select("l_orderkey", "l_partkey"),
         "l_orderkey", "l_partkey", minSupport = 1L,
@@ -3117,36 +3082,32 @@ object Queries {
     * (32 here) multiplies pure overhead: the state rows would fit ONE
     * partition. Results are partitioning-independent (keyed state,
     * hash-verified by the oracle); production deployments size this to
-    * load — the default is env-overridable (SPARK_GRAFT_STREAM_PARTS)
-    * and the batch session is untouched. The caller session's conf is
-    * copied wholesale so gate semantics can't drift between sessions.
+    * load, and the batch session is untouched. The caller session's conf
+    * is copied wholesale so gate semantics can't drift between sessions.
     */
-  private val streamSessionMemo =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
+  private val streamSessions = new SessionMemo[Unit, SparkSession]
+  private val StreamParts = 4
 
   private def streamSpark(spark: SparkSession): SparkSession =
-    // ONE stream session per parent session (ADVICE r18 item 4), not
-    // one per gate invocation: a 5-run bench used to allocate dozens of
-    // throwaway sessions per suite, each holding its memory-sink temp
-    // tables until GC. The memoized session is also reachable by
-    // evictMemos(), which stops its strays and drops its graft_q* sink
-    // tables on every bench sweep — the leak class the sweep previously
-    // could not see (ADVICE r18 item 3).
-    streamSessionMemo.computeIfAbsent(spark, parent => {
-      val parts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4")
-      val s = parent.newSession()
-      parent.conf.getAll.foreach { case (k, v) =>
+    // ONE stream session per parent session, not one per gate
+    // invocation: a 5-run bench used to allocate dozens of throwaway
+    // sessions per suite, each holding its memory-sink temp tables until
+    // GC. evictMemos() stops the memoized sessions' strays and drops
+    // their graft_q* sink tables on every bench sweep.
+    streamSessions(spark, ()) {
+      val s = spark.newSession()
+      spark.conf.getAll.foreach { case (k, v) =>
         try s.conf.set(k, v) catch { case _: Throwable => () }
       }
-      s.conf.set("spark.sql.shuffle.partitions", parts)
+      s.conf.set("spark.sql.shuffle.partitions", StreamParts.toString)
       s
-    })
+    }
 
   private def runToTable(q: org.apache.spark.sql.streaming.DataStreamWriter[_],
                          tag: String): String = {
     val name = tag + java.lang.Long.toHexString(
       java.util.concurrent.ThreadLocalRandom.current().nextLong())
-    val cp = Queries.tempDir(tag)
+    val cp = Sessions.tempDir(tag)
     q.queryName(name).format("memory")
       .option("checkpointLocation", s"$cp/cp")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -3174,7 +3135,7 @@ object Queries {
                                 tag: String): String = {
     val name = tag + java.lang.Long.toHexString(
       java.util.concurrent.ThreadLocalRandom.current().nextLong())
-    val cp = Queries.tempDir(tag)
+    val cp = Sessions.tempDir(tag)
     val sq = q.queryName(name).format("memory")
       .option("checkpointLocation", s"$cp/cp")
       .start()
@@ -4274,7 +4235,7 @@ object Queries {
     val id = java.lang.Long.toHexString(
       java.util.concurrent.ThreadLocalRandom.current().nextLong())
     val (tl, tr) = (s"graft_bkt_ord_$id", s"graft_bkt_cust_$id")
-    val base = tempDir("graft_bkt_")
+    val base = Sessions.tempDir("graft_bkt_")
     Bucketing.saveBucketed(
       Tables.orders(spark, dir).groupBy("o_custkey")
         .agg(count(lit(1)).as("n_orders"),
@@ -4535,7 +4496,7 @@ object Queries {
   // the reader must neither drop nor mangle a single row.
   def rescueAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tmp = tempDir("graft_rescue_")
+    val tmp = Sessions.tempDir("graft_rescue_")
     Tables.events(spark, dir)
       .select(col("event_id"), dec2(col("value")).as("v"))
       .as[(Long, java.math.BigDecimal)]
@@ -4571,7 +4532,7 @@ object Queries {
 
   def timeTravel(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshots
-    val tmp = tempDir("graft_travel_")
+    val tmp = Sessions.tempDir("graft_travel_")
     val target = s"$tmp/state"
     TravelTs.foreach { hi =>
       Snapshots.commit(
@@ -4604,7 +4565,7 @@ object Queries {
 
   def medallionRun(spark: SparkSession, dir: String): DataFrame = {
     import graft.pipeline.Medallion
-    val tmp = tempDir("graft_med_")
+    val tmp = Sessions.tempDir("graft_med_")
     val spec = Medallion.TableSpec("events_gold", Seq("user_id"), "ts",
       tieCols = Seq("event_id"),
       rules = Seq(Quality.Rule("user_id_present", col("user_id").isNull)))
@@ -4625,7 +4586,7 @@ object Queries {
   // involved. The oracle derives both generations from `events`.
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tmp = tempDir("graft_evolve_")
+    val tmp = Sessions.tempDir("graft_evolve_")
     val landing = s"$tmp/landing"
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), (dec2(col("value")) * 100).cast("long").as("cents"),
@@ -4659,7 +4620,7 @@ object Queries {
   // reference's DLT SCD1 flow, on the hash gate.
   def streamedScd1(spark0: SparkSession, dir: String): DataFrame = {
     val spark = streamSpark(spark0)
-    val tmp = tempDir("graft_scd1s_")
+    val tmp = Sessions.tempDir("graft_scd1s_")
     val q = Tables.eventsStream(spark, dir)
       .select("user_id", "event_id", "ts", "event_type")
       .writeStream
@@ -4681,7 +4642,7 @@ object Queries {
   // contract that decides scan cost at 100 TB, content-checked against
   // the oracle's unpartitioned filter.
   def partitionedWrite(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = tempDir("graft_partw_")
+    val tmp = Sessions.tempDir("graft_partw_")
     graft.sources.Sources.writePartitioned(
       Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("ts"),
@@ -5845,7 +5806,7 @@ object Queries {
 
   def bitemporal(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshots
-    val target = s"${tempDir("graft_bitemporal_")}/scd2"
+    val target = s"${Sessions.tempDir("graft_bitemporal_")}/scd2"
     TravelTs.foreach { k =>
       Snapshots.commit(
         Scd.scd2FromChangelog(
@@ -6788,7 +6749,7 @@ object Queries {
   val HilDayHi: Long = java.time.LocalDate.of(1996, 12, 31).toEpochDay
 
   def hilbertLayoutWrite(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"${tempDir("graft_hilw_")}/orders_hilbert"
+    val path = s"${Sessions.tempDir("graft_hilw_")}/orders_hilbert"
     val orders = Tables.orders(spark, dir)
       .withColumn("day",
         datediff(to_date(col("o_orderdate")), to_date(lit("1970-01-01")))
@@ -6893,7 +6854,7 @@ object Queries {
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     import graft.sources.Sources
-    val path = s"${tempDir("graft_orc_")}/lineitem_orc"
+    val path = s"${Sessions.tempDir("graft_orc_")}/lineitem_orc"
     val cols = Seq("l_returnflag", "l_shipdate", "l_extendedprice", "l_discount")
     Sources.writeOrc(
       Tables.lineitem(spark, dir).select(cols.map(col): _*), path)
@@ -7305,7 +7266,7 @@ object Queries {
     // beyond lookback + delay + a margin, so every real row's window
     // closes before the stream ends
     val sentinelTs = new java.sql.Timestamp(maxTs.getTime + 2L * 3600 * 1000)
-    val fixture = tempDir("graft_q263fx_")
+    val fixture = Sessions.tempDir("graft_q263fx_")
     val sentinels = Seq(
       (-1L, -1L, "purchase", sentinelTs),
       (-2L, -2L, "click", sentinelTs))
@@ -7527,7 +7488,7 @@ object Queries {
   def csvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     import graft.sources.Sources
-    val path = s"${tempDir("graft_csv_")}/lineitem_csv"
+    val path = s"${Sessions.tempDir("graft_csv_")}/lineitem_csv"
     Tables.lineitem(spark, dir)
       .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
       .write.option("header", "true").csv(path)
@@ -8002,8 +7963,8 @@ object Queries {
   val CfxCodes = 256
   val CfxNProbe = 2
   val CfxTrainIters = 2
-  private val cfxCodebookMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Boolean), IndexedSeq[IndexedSeq[Seq[Double]]]]()
+  private[graft] val cfxCodebookMemo =
+    new SessionMemo[(String, Boolean), IndexedSeq[IndexedSeq[Seq[Double]]]]
   // corpus expansion: each embeddings id spawns CfxExpand synthetic ids
   // (sid = vec_id·CfxExpand + j) — ~60 members per cluster at sf0.01,
   // so top-5 ranking inside a probed list requires real ADC precision
@@ -8059,12 +8020,12 @@ object Queries {
     // driver state (8 × 256 × 8 doubles); Bench's untimed first run
     // pays the training, the same footing the dedup decision-table
     // family gets from its pairsMemo.
-    val cbSub = cfxCodebookMemo.computeIfAbsent((spark, dir, encodeRaw), _ => {
+    val cbSub = cfxCodebookMemo(spark, (dir, encodeRaw)) {
       val cb = res.orderBy("vec_id").limit(CfxCodes)
         .select("r").collect().map(_.getSeq[Double](0))
       trainSubCodebook(sub, seedSubCodebook(cb, subDim, CfxSub),
         CfxTrainIters)
-    })
+    }
     val codes = assignSubCodes(sub, subCodebookDf(spark, cbSub))
     val pivots = (0 until CfxSub).map(s =>
       min(when(col("subspace") === s, col("code"))).as(s"c$s"))
@@ -8397,7 +8358,7 @@ object Queries {
       .join(broadcast(model), "bucket")
       .select(col("doc_id"), col("lang"),
         (col("bits_q") - col("bits_p")).as("delta_bits"))
-    val tmp = tempDir("graft_q281_")
+    val tmp = Sessions.tempDir("graft_q281_")
     // idempotent under foreachBatch's at-least-once contract (ADVICE r17
     // item 3): each micro-batch owns its OWN partition directory and
     // overwrites it wholesale, so a retried batch rewrites identical
@@ -8454,7 +8415,7 @@ object Queries {
   // so the gate shares q240's oracle verbatim.
   def streamedIvm(spark0: SparkSession, dir: String): DataFrame = {
     val spark = streamSpark(spark0)
-    val tmp = tempDir("graft_ivms_")
+    val tmp = Sessions.tempDir("graft_ivms_")
     val retracted = col("ts") <= utcTs(SplitTs) &&
       pmod(col("event_id"), lit(IvmDeleteMod)) === 0
     val signed = Tables.eventsStream(spark, dir)

@@ -1,33 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_QUERIES=q64_...,q65_... restricts the dump for local
-    // iteration; the driver leaves it unset and dumps the full surface.
-    // Blank names are dropped so SPARK_GRAFT_QUERIES="" behaves as unset
-    // (Set("") used to filter out EVERY query, silently dumping nothing
-    // while downstream compared stale output); a restriction that matches
-    // zero queries fails fast for the same reason.
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    val selected = SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    require(selected.nonEmpty,
-      s"SPARK_GRAFT_QUERIES=${sys.env.get("SPARK_GRAFT_QUERIES")} matched no queries")
+    // SPARK_GRAFT_QUERIES restricts the dump for local iteration; the
+    // driver leaves it unset and dumps the full surface.
+    val selected = Sessions.selectQueries()
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -55,14 +55,24 @@ object Scd {
     */
   def scd2Merge(history: DataFrame, updates: DataFrame, keys: Seq[String],
                 seqCol: String, tieCols: Seq[String]): DataFrame = {
-    val metaCols = Seq("effective_from", "effective_to", "is_current")
-    val batchKeys = updates.select(keys.map(col): _*).distinct()
-    val touched = history.join(batchKeys, keys, "left_semi")
-    val untouched = history.join(batchKeys, keys, "left_anti")
-    val changelog = touched.drop(metaCols: _*)
+    val (touched, untouched) = splitByBatchKeys(history, updates, keys)
+    val changelog = touched.drop(MetaCols: _*)
       .unionByName(updates)
       .dropDuplicates(keys ++ (seqCol +: tieCols))
     scd2FromChangelog(changelog, keys, seqCol, tieCols).unionByName(untouched)
+  }
+
+  private val MetaCols = Seq("effective_from", "effective_to", "is_current")
+
+  /** A history's rows split into those whose key the update batch touches
+    * and those it leaves alone (semi/anti joins against the batch's
+    * distinct keys).
+    */
+  private def splitByBatchKeys(history: DataFrame, updates: DataFrame,
+                               keys: Seq[String]): (DataFrame, DataFrame) = {
+    val batchKeys = updates.select(keys.map(col): _*).distinct()
+    (history.join(batchKeys, keys, "left_semi"),
+      history.join(batchKeys, keys, "left_anti"))
   }
 
   /** Temporal ALIGNMENT of two SCD2 histories of the same entity — the
@@ -186,13 +196,10 @@ object Scd {
   def scd2MergeTracked(history: DataFrame, updates: DataFrame,
                        keys: Seq[String], seqCol: String, tieCols: Seq[String],
                        trackCols: Seq[String]): DataFrame = {
-    val metaCols = Seq("effective_from", "effective_to", "is_current")
-    val batchKeys = updates.select(keys.map(col): _*).distinct()
-    val touched = history.join(batchKeys, keys, "left_semi")
-    val untouched = history.join(batchKeys, keys, "left_anti")
+    val (touched, untouched) = splitByBatchKeys(history, updates, keys)
     val histRows = touched
       .withColumn("__from", col("effective_from"))
-      .drop(metaCols: _*)
+      .drop(MetaCols: _*)
     val updRows = updates.withColumn("__from", col(seqCol))
     val dupW = Window
       .partitionBy((keys ++ (seqCol +: tieCols)).map(col): _*)

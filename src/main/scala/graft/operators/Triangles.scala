@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Triangle counting over an undirected graph by DEGREE ORIENTATION —
@@ -27,9 +27,9 @@ import org.apache.spark.sql.functions._
   * far the widest intermediate — at sf0.1 the closing join's exchange
   * alone shuffled 1.3 GB of wedge rows (bench diag) while the EDGE
   * frame is a few MB. When the edge frame is small enough to broadcast
-  * (measured by an exact count against an env-overridable bound, not a
-  * planner estimate), both the wedge-generating self-join and the
-  * closing join take the edge side as a broadcast hash relation: the
+  * (measured by an exact count against a bound derived from driver
+  * memory, not a planner estimate), both the wedge-generating self-join
+  * and the closing join take the edge side as a broadcast hash relation: the
   * wedge frame is then generated, probed and partially aggregated
   * inside ONE codegen pipeline over the cached edge partitions — it
   * never serializes into a shuffle at all (guide §3.1: broadcast the
@@ -41,14 +41,54 @@ import org.apache.spark.sql.functions._
   */
 object Triangles {
 
-  /** Edge-count bound under which the oriented/closing edge frames are
-    * broadcast (≈48 B/row in the built hash relation ⇒ the default 4 M
-    * edges is ~200 MB — guide §3.1's "a few hundred MB is fine" with
-    * margin). Production knob: SPARK_GRAFT_TRI_BCAST_MAX_EDGES.
+  /** Edge-count bound under which the oriented and closing edge frames
+    * are broadcast: both hash relations (≈48 B/row each) must fit in an
+    * eighth of the driver heap, which builds them, and in
+    * `spark.driver.maxResultSize` (0 = unlimited), since their rows are
+    * collected there first.
     */
-  private[graft] def defaultBcastMaxEdges: Long =
-    sys.env.get("SPARK_GRAFT_TRI_BCAST_MAX_EDGES").map(_.toLong)
-      .getOrElse(4000000L)
+  private[graft] def defaultBcastMaxEdges(spark: SparkSession): Long = {
+    val maxResult = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.sparkContext.getConf.get("spark.driver.maxResultSize", "1g"))
+    val heapShare = Runtime.getRuntime.maxMemory / 8
+    (if (maxResult > 0) math.min(heapShare, maxResult) else heapShare) / (2 * 48)
+  }
+
+  /** The shared front of both counts: edges canonicalized to (x, y) =
+    * (least, greatest); per-node degrees; every wedge (u; x, y) with
+    * x < y by id, enumerated from edges oriented (u, v) from the lower to
+    * the higher endpoint under the total order (deg, id); and the edge
+    * frame that closes a wedge at its canonical (x, y), broadcast-hinted
+    * together with the oriented side when an exact count over the
+    * (typically cached) edge frame fits `bcastMaxEdges`.
+    */
+  private final case class Prelude(e: DataFrame, deg: DataFrame,
+                                   wedges: DataFrame, closing: DataFrame)
+
+  private def prelude(edges: DataFrame, aCol: String, bCol: String,
+                      bcastMaxEdges: Long): Prelude = {
+    val e = edges.select(least(col(aCol), col(bCol)).as("x"),
+      greatest(col(aCol), col(bCol)).as("y"))
+    val small = e.count() <= bcastMaxEdges
+    def hinted(df: DataFrame) = if (small) broadcast(df) else df
+    val deg = e.select(col("x").as("n"))
+      .unionByName(e.select(col("y").as("n")))
+      .groupBy("n").agg(count(lit(1)).as("deg"))
+    // struct comparison is lexicographic in both engines
+    val withDeg = e
+      .join(deg.select(col("n").as("x"), col("deg").as("dx")), "x")
+      .join(deg.select(col("n").as("y"), col("deg").as("dy")), "y")
+    val xFirst = struct(col("dx"), col("x")) < struct(col("dy"), col("y"))
+    val oriented = withDeg.select(
+      when(xFirst, col("x")).otherwise(col("y")).as("u"),
+      when(xFirst, col("y")).otherwise(col("x")).as("v"))
+    val wedges = oriented.alias("e1").join(hinted(oriented).alias("e2"),
+        col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
+      .select(col("e1.u").as("u"),
+        least(col("e1.v"), col("e2.v")).as("x"),
+        greatest(col("e1.v"), col("e2.v")).as("y"))
+    Prelude(e, deg, wedges, hinted(e))
+  }
 
   /** One-row graph summary over undirected edges `(aCol, bCol)` (each
     * unordered pair present once, endpoints distinct): node/edge/wedge/
@@ -61,37 +101,13 @@ object Triangles {
     * representation) would silently miss triangles whose closing edge
     * arrived as (b, a) with a < b.
     */
+  def triangleStats(edges: DataFrame, aCol: String, bCol: String): DataFrame =
+    triangleStats(edges, aCol, bCol, defaultBcastMaxEdges(edges.sparkSession))
+
   def triangleStats(edges: DataFrame, aCol: String, bCol: String,
-                    bcastMaxEdges: Long = defaultBcastMaxEdges): DataFrame = {
-    val e = edges.select(least(col(aCol), col(bCol)).as("x"),
-      greatest(col(aCol), col(bCol)).as("y"))
-    // exact broadcast gate: one count over the (typically cached) edge
-    // frame decides whether the wedge pipeline can stay shuffle-free
-    val small = e.count() <= bcastMaxEdges
-    val deg = e.select(col("x").as("n"))
-      .unionByName(e.select(col("y").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("deg"))
-    // orient by the total order (deg, id): struct comparison is
-    // lexicographic in both engines
-    val withDeg = e
-      .join(deg.select(col("n").as("x"), col("deg").as("dx")), "x")
-      .join(deg.select(col("n").as("y"), col("deg").as("dy")), "y")
-    val oriented = withDeg.select(
-      when(struct(col("dx"), col("x")) < struct(col("dy"), col("y")),
-        col("x")).otherwise(col("y")).as("u"),
-      when(struct(col("dx"), col("x")) < struct(col("dy"), col("y")),
-        col("y")).otherwise(col("x")).as("v"))
-    val e1 = oriented.alias("e1")
-    val e2 = (if (small) broadcast(oriented) else oriented).alias("e2")
-    // wedge (u; v, w) with v < w BY ID — the closing edge is then looked
-    // up at its canonical (least, greatest) representation, which is how
-    // `edges` stores pairs
-    val wedges = e1.join(e2,
-        col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
-      .select(least(col("e1.v"), col("e2.v")).as("x"),
-        greatest(col("e1.v"), col("e2.v")).as("y"))
-    val tri = wedges.join(if (small) broadcast(e) else e,
-        Seq("x", "y"), "left_semi")
+                    bcastMaxEdges: Long): DataFrame = {
+    val Prelude(e, deg, wedges, closing) = prelude(edges, aCol, bCol, bcastMaxEdges)
+    val tri = wedges.select("x", "y").join(closing, Seq("x", "y"), "left_semi")
       .agg(count(lit(1)).as("n_triangles"))
     // open+closed wedge total Σ d(d−1)/2 — exact (d·(d−1) is even)
     val wedgeTotal = deg.agg(
@@ -117,33 +133,15 @@ object Triangles {
     * (left join), lcc = 0 — absence of closure is signal for
     * recommender/community work, not a missing row.
     */
+  def localTriangleStats(edges: DataFrame, aCol: String, bCol: String): DataFrame =
+    localTriangleStats(edges, aCol, bCol, defaultBcastMaxEdges(edges.sparkSession))
+
   def localTriangleStats(edges: DataFrame, aCol: String, bCol: String,
-                         bcastMaxEdges: Long = defaultBcastMaxEdges): DataFrame = {
-    val e = edges.select(least(col(aCol), col(bCol)).as("x"),
-      greatest(col(aCol), col(bCol)).as("y"))
-    val small = e.count() <= bcastMaxEdges
-    val deg = e.select(col("x").as("n"))
-      .unionByName(e.select(col("y").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("deg"))
-    val withDeg = e
-      .join(deg.select(col("n").as("x"), col("deg").as("dx")), "x")
-      .join(deg.select(col("n").as("y"), col("deg").as("dy")), "y")
-    val oriented = withDeg.select(
-      when(struct(col("dx"), col("x")) < struct(col("dy"), col("y")),
-        col("x")).otherwise(col("y")).as("u"),
-      when(struct(col("dx"), col("x")) < struct(col("dy"), col("y")),
-        col("y")).otherwise(col("x")).as("v"))
-    val e1 = oriented.alias("e1")
-    val e2 = (if (small) broadcast(oriented) else oriented).alias("e2")
-    // wedge (u; v, w) with v < w by id — its closing edge is canonical
-    // (v, w), so an INNER join (vs triangleStats' semi join) yields each
-    // triangle's full corner set exactly once
-    val triples = e1.join(e2,
-        col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
-      .select(col("e1.u").as("u"),
-        least(col("e1.v"), col("e2.v")).as("x"),
-        greatest(col("e1.v"), col("e2.v")).as("y"))
-      .join(if (small) broadcast(e) else e, Seq("x", "y"))
+                         bcastMaxEdges: Long): DataFrame = {
+    val Prelude(_, deg, wedges, closing) = prelude(edges, aCol, bCol, bcastMaxEdges)
+    // the closing edge is unique, so an INNER join (vs triangleStats'
+    // semi join) yields each triangle's full corner set exactly once
+    val triples = wedges.join(closing, Seq("x", "y"))
     // ONE evaluation of the wedge-close join: exploding the corner array
     // credits all three vertices in a single pass — a union of three
     // projections of `triples` re-runs the O(m^1.5) join subtree three

@@ -126,9 +126,7 @@ object Medallion {
           merge = (gold, e) =>
             if (spec.scdType == 2)
               Scd.scd2Merge(gold, e, spec.keys, spec.seqCol, spec.tieCols)
-            else Scd.scd1Merge(gold,
-              Dedup.latestByKey(e, spec.keys, spec.seqCol +: spec.tieCols),
-              spec.keys, spec.seqCol +: spec.tieCols))
+            else Scd.scd1Merge(gold, e, spec.keys, spec.seqCol +: spec.tieCols))
       Snapshots.maybeCompact(spark, goldPath, compactAfterRoots)
       def n(o: Observation): Long =
         o.get.getOrElse("n", 0L).asInstanceOf[Long]

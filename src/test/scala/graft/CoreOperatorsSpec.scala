@@ -5,35 +5,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
   val sf = "/root/testdata/sf0.001"
 
-  private val tmpDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-  private lazy val cleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tmpDirs.forEach(p => deleteRecursively(p.toFile))))
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
-  /** Temp dir deleted at JVM exit — every suite routes its scratch
-    * through here so repeated `sbt test` runs can't accumulate hundreds
-    * of graft_* dirs in /tmp (they did, for ten rounds).
-    */
-  def tempDir(tag: String): String = {
-    cleanupHook
-    val p = java.nio.file.Files.createTempDirectory(tag)
-    tmpDirs.add(p)
-    p.toString
-  }
+  /** Test scratch dir, deleted at JVM exit. */
+  def tempDir(tag: String): String = Sessions.tempDir(tag)
 }
 
 class CoreOperatorsSpec extends AnyFunSuite {
