@@ -4,7 +4,7 @@ import org.apache.spark.sql.{GraftColumnBridge, SparkSession, SparkSessionExtens
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import graft.functions.Lsh
-import graft.plans.{CmsCountersAgg, DamerauLevenshtein, DistinctNGrams, HllEstimateAgg, KmvEstimateAgg, MinHashSig, MisraGriesTopK, NfcCaseFold, PolyFingerprint, SimHash, TopKPairsAgg, VecDot}
+import graft.plans.{AsOfJoinStrategy, CmsCountersAgg, DamerauLevenshtein, DistinctNGrams, HllEstimateAgg, KmvEstimateAgg, MinHashSig, MisraGriesTopK, NfcCaseFold, PolyFingerprint, SimHash, TopKPairsAgg, VecDot}
 
 /** SQL surface for the graft kernels: every custom expression is callable
   * from `spark.sql(...)` as `graft_*`, so SQL-first users of the library
@@ -13,7 +13,7 @@ import graft.plans.{CmsCountersAgg, DamerauLevenshtein, DistinctNGrams, HllEstim
   *
   * Two registration paths:
   * - config: `spark.sql.extensions=graft.GraftExtensions` (new sessions)
-  * - imperative: `GraftFunctions.register(spark)` (live sessions)
+  * - imperative: `GraftFunctions.install(spark)` (live sessions)
   */
 object GraftFunctions {
 
@@ -43,11 +43,19 @@ object GraftFunctions {
     "graft_topk"        -> (args => TopKPairsAgg(args(0), args(1),
       lit2Int(args(2), "graft_topk k"))))
 
-  /** Register on a live session. */
-  def register(spark: SparkSession): Unit =
+  /** Install on a live session what `GraftExtensions` injects into a new
+    * one: the `graft_*` functions and the native as-of join strategy.
+    * Idempotent: each function is registered and the strategy appended
+    * only when absent.
+    */
+  def install(spark: SparkSession): Unit = {
     functions.foreach { case (name, builder) =>
       GraftColumnBridge.registerFunction(spark, name, builder)
     }
+    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ AsOfJoinStrategy
+  }
 }
 
 /** `spark.sql.extensions` entry point: the kernel SQL functions plus the
@@ -61,6 +69,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft", name),
         builder))
     }
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
   }
 }

@@ -1,14535 +1,27 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.Cols._
-import graft.operators._
-import graft.functions.TextAnalysis
-import org.apache.spark.sql.graft.LeanCheckpoint.Ops
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.queries._
 
 /** Driver contract — the complete operator surface (SURVEY.md §2), one
   * query per operator plus a DuckDB oracle where ANSI SQL can express it.
+  * Each query is declared once, beside its oracle, in its family object
+  * under `graft.queries`; the maps below are projections of those lists.
   */
 object SparkEntry {
 
   /** Flagship: star-join revenue by region/nation on sf0.001. */
   def entry(spark: SparkSession): DataFrame =
-    Queries.starRevenue(spark, "/root/testdata/sf0.001")
+    EtlQueries.starRevenue(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_incremental_extract" -> (Queries.incrementalExtract _),
-    "q02_dedup_latest"        -> (Queries.dedupLatest _),
-    "q03_scd2_build"          -> (Queries.scd2Build _),
-    "q04_scd1_latest"         -> (Queries.scd1Latest _),
-    "q05_bucket_enrich"       -> (Queries.bucketEnrich _),
-    "q06_dq_validate"         -> (Queries.dqValidate _),
-    "q07_dim_date"            -> (Queries.dimDate _),
-    "q08_star_revenue"        -> (Queries.starRevenue _),
-    "q09_star_compose"        -> (Queries.starCompose _),
-    "q10_agg_report"          -> (Queries.aggReport _),
-    "q11_top_n_per_group"     -> (Queries.topNPerGroup _),
-    "q12_json_extract"        -> (Queries.jsonExtract _),
-    "q13_rollup_report"       -> (Queries.rollupReport _),
-    "q14_agg_merge"           -> (Queries.aggMerge _),
-    "q15_validity_asof"       -> (Queries.validityAsOf _),
-    "q16_scd2_merge"          -> (Queries.scd2MergeIncremental _),
-    "q17_next_watermark"      -> (Queries.nextWatermark _),
-    "q18_dq_enforce"          -> (Queries.dqEnforce _),
-    "q19_star_date"           -> (Queries.starDateRevenue _),
-    "q20_dedup_exact"         -> (Queries.dedupExact _),
-    "q21_dedup_ngram_jaccard" -> (Queries.dedupNgramJaccard _),
-    "q22_dedup_minhash_lsh"   -> (Queries.dedupMinHashLsh _),
-    "q23_dedup_simhash"       -> (Queries.dedupSimHash _),
-    "q26_ann_lsh"             -> (Queries.annLsh _),
-    "q24_dedup_embedding"     -> (Queries.dedupEmbedding _),
-    "q25_ann_bruteforce"      -> (Queries.annBruteForce _),
-    "q27_text_langid"         -> (Queries.textLangid _),
-    "q28_text_quality"        -> (Queries.textQuality _),
-    "q29_text_tokens"         -> (Queries.textTokens _),
-    "q30_text_fingerprint"    -> (Queries.textFingerprint _),
-    "q31_multimodal_meta"     -> (Queries.multimodalMeta _),
-    "q32_sessionize"          -> (Queries.sessionize _),
-    "q33_ann_ivf"             -> (Queries.annIvf _),
-    "q34_dedup_clusters"      -> (Queries.dedupClusters _),
-    "q35_pivot_report"        -> (Queries.pivotReport _),
-    "q36_revenue_share"       -> (Queries.revenueShare _),
-    "q37_rolling_revenue"     -> (Queries.rollingRevenue _),
-    "q38_distinct_sketch"     -> (Queries.distinctSketch _),
-    "q39_stratified_sample"   -> (Queries.stratifiedSample _),
-    "q40_asof_join"           -> (Queries.asOfAttribution _),
-    "q41_tfidf_terms"         -> (Queries.tfidfTerms _),
-    "q42_embed_stats"         -> (Queries.embedStats _),
-    "q43_cube_report"         -> (Queries.cubeReport _),
-    "q44_text_normalize"      -> (Queries.textNormalize _),
-    "q45_multimodal_frames"   -> (Queries.multimodalFrames _),
-    "q46_token_histogram"     -> (Queries.tokenHistogram _),
-    "q51_dedup_embedding_lsh" -> (Queries.dedupEmbeddingLsh _),
-    "q47_text_repetition"     -> (Queries.textRepetition _),
-    "q48_quality_filter"      -> (Queries.qualityFilter _),
-    "q49_source_mix"          -> (Queries.sourceMix _),
-    "q50_dedup_prefix"        -> (Queries.dedupPrefix _),
-    "q52_shard_pack"          -> (Queries.shardPack _),
-    "q53_top_ngrams"          -> (Queries.topNgrams _),
-    "q54_text_unicode"        -> (Queries.textUnicode _),
-    "q55_pii_redact"          -> (Queries.piiRedact _),
-    "q56_decontaminate"       -> (Queries.decontaminate _),
-    "q57_lang_mix_weights"    -> (Queries.langMixWeights _),
-    "q58_shard_manifest"      -> (Queries.shardManifest _),
-    "q59_ann_ivf_trained"     -> (Queries.annIvfTrained _),
-    "q60_star_left"           -> (Queries.starLeft _),
-    "q61_ivf_assign_bigk"     -> (Queries.ivfAssignBigK _),
-    "q62_dedup_simhash_wide"  -> (Queries.dedupSimHashWide _),
-    "q63_dedup_minhash_wide"  -> (Queries.dedupMinHashLshWide _),
-    "q64_session_concurrency" -> (Queries.sessionConcurrency _),
-    "q65_cluster_canonical"   -> (Queries.clusterCanonical _),
-    "q66_funnel"              -> (Queries.funnel _),
-    "q67_retention"           -> (Queries.retention _),
-    "q68_percentile_report"   -> (Queries.percentileReport _),
-    "q69_bm25_search"         -> (Queries.bm25Search _),
-    "q70_value_outliers"      -> (Queries.valueOutliers _),
-    "q71_session_concurrency_fast" -> (Queries.sessionConcurrencyFast _),
-    "q72_global_rank"         -> (Queries.globalRank _),
-    "q73_session_overlap"     -> (Queries.sessionOverlap _),
-    "q74_cumulative_users"    -> (Queries.cumulativeUsers _),
-    "q75_event_transitions"   -> (Queries.eventTransitions _),
-    "q76_session_overlap_fast" -> (Queries.sessionOverlapFast _),
-    "q77_quality_sample"      -> (Queries.qualitySample _),
-    "q78_robust_outliers"     -> (Queries.robustOutliers _),
-    "q79_hybrid_search"       -> (Queries.hybridSearch _),
-    "q80_dup_rate_by_source"  -> (Queries.dupRateBySource _),
-    "q81_star_filtered"       -> (Queries.starFiltered _),
-    "q82_span_dup_rate"       -> (Queries.spanDupRate _),
-    "q83_budget_select"       -> (Queries.budgetSelect _),
-    "q84_asof_tolerance"      -> (Queries.asOfWindowAttribution _),
-    "q85_next_conversion"     -> (Queries.nextConversion _),
-    "q86_epoch_mix"           -> (Queries.epochMix _),
-    "q87_source_leakage"      -> (Queries.sourceLeakage _),
-    "q88_sketch_percentiles"  -> (Queries.sketchPercentiles _),
-    "q89_quality_dup_calibration" -> (Queries.qualityDupCalibration _),
-    "q90_grouped_distinct_sketch" -> (Queries.groupedDistinctSketch _),
-    "q91_semantic_dedup"      -> (Queries.semanticDedup _),
-    "q92_copurchase_pairs"    -> (Queries.copurchasePairs _),
-    "q94_cms_heavy_hitters"   -> (Queries.cmsHeavyHitters _),
-    "q93_revenue_anomaly"     -> (Queries.revenueAnomaly _),
-    "q95_sliding_active_users" -> (Queries.slidingActiveUsers _),
-    "q96_containment_pairs"   -> (Queries.containmentPairs _),
-    "q97_copurchase_similarity" -> (Queries.copurchaseSimilarity _),
-    "q98_source_drift"        -> (Queries.sourceDrift _),
-    "q99_decayed_value"       -> (Queries.decayedCustomerValue _),
-    "q100_local_supplier_volume" -> (Queries.localSupplierVolume _),
-    "q101_gap_fill_revenue"   -> (Queries.gapFillRevenue _),
-    "q102_supplier_load_islands" -> (Queries.supplierLoadIslands _),
-    "q103_mom_growth"         -> (Queries.momGrowth _),
-    "q104_dormant_customers"  -> (Queries.dormantCustomers _),
-    "q105_fuzzy_part_names"   -> (Queries.fuzzyPartNames _),
-    "q106_top_event_type"     -> (Queries.topEventType _),
-    "q107_metric_correlation" -> (Queries.metricCorrelation _),
-    "q108_token_gini"         -> (Queries.tokenGini _),
-    "q109_interarrival_hist"  -> (Queries.interarrivalHist _),
-    "q110_fk_audit"           -> (Queries.fkAudit _),
-    "q111_source_doc_cap"     -> (Queries.sourceDocCap _),
-    "q112_multi_touch"        -> (Queries.multiTouchAttribution _),
-    "q113_token_deciles"      -> (Queries.tokenDeciles _),
-    "q114_revenue_autocorr"   -> (Queries.revenueAutocorr _),
-    "q115_scd2_audit"         -> (Queries.scd2Audit _),
-    "q116_transition_probs"   -> (Queries.transitionProbs _),
-    "q117_join_key_skew"      -> (Queries.joinKeySkew _),
-    "q118_user_diversity"     -> (Queries.userDiversity _),
-    "q119_cluster_histogram"  -> (Queries.clusterSizeHistogram _),
-    "q120_segment_activity"   -> (Queries.segmentActivity _),
-    "q121_hll_distinct"       -> (Queries.hllDistinct _),
-    "q122_hll_grouped"        -> (Queries.groupedHllDistinct _),
-    "q123_source_novelty"     -> (Queries.sourceNovelty _),
-    "q124_embedding_dim_health" -> (Queries.embeddingDimHealth _),
-    "q125_dup_spans"          -> (Queries.dupSpans _),
-    "q126_bpe_tokens"         -> (Queries.bpeTokenCounts _),
-    "q127_sessionize_stream"  -> (Queries.sessionizeStreamed _),
-    "q128_funnel_stream"      -> (Queries.funnelStreamed _),
-    "q129_bloom_semi_join"    -> (Queries.bloomSemiRevenue _),
-    "q130_snapshot_diff"      -> (Queries.snapshotDelta _),
-    "q131_weighted_sample"    -> (Queries.weightedSample _),
-    "q132_doc_chunks"         -> (Queries.docChunks _),
-    "q133_abc_classification" -> (Queries.abcClassification _),
-    "q134_benford_digits"     -> (Queries.benfordDigits _),
-    "q135_part_skyline"       -> (Queries.partSkyline _),
-    "q136_bot_regularity"     -> (Queries.botRegularity _),
-    "q137_stream_key_registry" -> (Queries.streamedKeyRegistry _),
-    "q138_stream_daily_agg"   -> (Queries.streamedDailyAgg _),
-    "q139_stream_interval_join" -> (Queries.streamedIntervalJoin _),
-    "q140_quantile_normalize" -> (Queries.quantileNormalize _),
-    "q141_kmv_set_ops"        -> (Queries.kmvSetOps _),
-    "q142_inverted_index"     -> (Queries.invertedIndex _),
-    "q143_split_assign"       -> (Queries.splitAssign _),
-    "q144_asof_native"        -> (Queries.asOfNativeAttribution _),
-    "q145_asof_native_tolerance" -> (Queries.asOfNativeTolerance _),
-    "q146_asof_native_forward" -> (Queries.asOfNativeForward _),
-    "q147_zorder_manifest"    -> (Queries.zorderManifest _),
-    "q148_event_trigrams"     -> (Queries.eventTrigrams _),
-    "q149_range_plan"         -> (Queries.rangePlan _),
-    "q150_source_similarity"  -> (Queries.sourceSimilarity _),
-    "q151_rrf_fusion"         -> (Queries.rrfFusion _),
-    "q152_fd_profile"         -> (Queries.fdProfile _),
-    "q153_entity_clusters"    -> (Queries.entityClusters _),
-    "q154_pseudonym_audit"    -> (Queries.pseudonymAudit _),
-    "q155_pagerank_copurchase" -> (Queries.pagerankCopurchase _),
-    "q156_grouping_sets"      -> (Queries.groupingSetsReport _),
-    "q157_basket_lift"        -> (Queries.basketLift _),
-    "q158_distance_histogram" -> (Queries.distanceHistogram _),
-    "q159_pruning_simulator"  -> (Queries.pruningSimulator _),
-    "q160_ewma_revenue"       -> (Queries.ewmaRevenue _),
-    "q161_stream_static_enrich" -> (Queries.streamedStaticEnrich _),
-    "q162_funnel_lag_percentiles" -> (Queries.funnelLagPercentiles _),
-    "q163_salted_join"        -> (Queries.saltedJoinRevenue _),
-    "q164_bucketed_join"      -> (Queries.bucketedJoinRevenue _),
-    "q165_golden_records"     -> (Queries.goldenRecords _),
-    "q166_cdc_apply"          -> (Queries.cdcApply _),
-    "q167_inventory_balance"  -> (Queries.inventoryBalance _),
-    "q168_share_of_parent"    -> (Queries.shareOfParent _),
-    "q169_audio_rms"          -> (Queries.audioRms _),
-    "q170_profile_drift"      -> (Queries.profileDrift _),
-    "q171_session_entry_exit" -> (Queries.sessionEntryExit _),
-    "q172_image_decode"       -> (Queries.imageDecode _),
-    "q173_rescue_audit"       -> (Queries.rescueAudit _),
-    "q174_time_travel"        -> (Queries.timeTravel _),
-    "q175_medallion_run"      -> (Queries.medallionRun _),
-    "q176_schema_evolution"   -> (Queries.schemaEvolution _),
-    "q177_streamed_scd1"      -> (Queries.streamedScd1 _),
-    "q178_partitioned_write"  -> (Queries.partitionedWrite _),
-    "q179_sql_functions"      -> (Queries.sqlFunctions _),
-    "q180_late_arrivals"      -> (Queries.lateArrivals _),
-    "q181_quarantine_report"  -> (Queries.quarantineReport _),
-    "q182_rendered_star"      -> (Queries.renderedStar _),
-    "q183_bitmap_overlap"     -> (Queries.bitmapOverlap _),
-    "q184_lsh_evaluation"     -> (Queries.lshEvaluation _),
-    "q185_scd2_tracked"       -> (Queries.scd2Tracked _),
-    "q186_pagerank_deep"      -> (Queries.pagerankDeep _),
-    "q187_triangle_count"     -> (Queries.triangleCount _),
-    "q188_prefix_jaccard"     -> (Queries.prefixJaccard _),
-    "q189_hll_native_agg"     -> (Queries.hllNativeAgg _),
-    "q190_mg_heavy_hitters"   -> (Queries.mgHeavyHitters _),
-    "q191_kmv_native_agg"     -> (Queries.kmvNativeAgg _),
-    "q192_cramers_v"          -> (Queries.cramersV _),
-    "q193_session_window"     -> (Queries.sessionWindowAgg _),
-    "q194_cms_native_agg"     -> (Queries.cmsNativeAgg _),
-    "q195_revenue_trend"      -> (Queries.revenueTrend _),
-    "q196_weighted_median"    -> (Queries.weightedMedian _),
-    "q197_topk_native_agg"    -> (Queries.topKNativeAgg _),
-    "q198_local_triangles"    -> (Queries.localTriangles _),
-    "q199_kcore"              -> (Queries.kCoreCopurchase _),
-    "q200_dl_linkage"         -> (Queries.dlLinkage _),
-    "q201_window_funnel"      -> (Queries.windowFunnel _),
-    "q202_survival_table"     -> (Queries.survivalLifeTable _),
-    "q203_bfs_hops"           -> (Queries.bfsHops _),
-    "q204_cusum_changepoint"  -> (Queries.cusumChangepoint _),
-    "q205_principal_component" -> (Queries.principalComponent _),
-    "q206_label_communities"  -> (Queries.labelCommunities _),
-    "q207_ushape_attribution" -> (Queries.ushapeAttribution _),
-    "q208_seasonal_anomalies" -> (Queries.seasonalAnomalies _),
-    "q209_rolling_correlation" -> (Queries.rollingCorrelation _),
-    "q210_fifo_allocation"    -> (Queries.fifoAllocation _),
-    "q211_degree_assortativity" -> (Queries.degreeAssortativity _),
-    "q212_reciprocal_best_match" -> (Queries.reciprocalBestMatch _),
-    "q213_pagerank_weighted"  -> (Queries.pagerankWeighted _),
-    "q214_sql_kernels"        -> (Queries.sqlKernels _),
-    "q215_pmi_collocations"   -> (Queries.pmiCollocations _),
-    "q216_pagerank_directed"  -> (Queries.pagerankDirected _),
-    "q217_bitemporal"         -> (Queries.bitemporal _),
-    "q218_stream_cusum"       -> (Queries.cusumStreamed _),
-    "q219_stream_topk"        -> (Queries.topKStreamed _),
-    "q220_theilsen_trend"     -> (Queries.theilSenTrend _),
-    "q221_hilbert_manifest"   -> (Queries.hilbertManifest _),
-    "q222_recommendations"    -> (Queries.recommendations _),
-    "q223_pq_codes"           -> (Queries.pqCodes _),
-    "q224_kn_counts"          -> (Queries.knCounts _),
-    "q225_bpe_merges"         -> (Queries.bpeMerges _),
-    "q226_quantiles_decomposed" -> (Queries.quantilesDecomposed _),
-    "q227_hilbert_vs_morton"  -> (Queries.hilbertPruningCompare _),
-    "q228_conversion_ci"      -> (Queries.conversionCi _),
-    "q229_belief_revisions"   -> (Queries.beliefRevisions _),
-    "q230_hilbert_layout"     -> (Queries.hilbertLayoutWrite _),
-    "q231_weighted_median_decomposed" -> (Queries.weightedMedianDecomposed _),
-    "q232_scc"                -> (Queries.sccBaskets _),
-    "q233_colloc_spans"       -> (Queries.collocationSpanMining _),
-    "q234_stream_pq_assign"   -> (Queries.streamedPqAssign _),
-    "q235_weighted_quantiles" -> (Queries.weightedQuantiles _),
-    "q236_scc_condensation"   -> (Queries.sccCondensation _),
-    "q237_pq_adc_topk"        -> (Queries.pqAdcTopK _),
-    "q238_hilbert_two_level"  -> (Queries.hilbertTwoLevelCompare _),
-    "q239_ivf_pq_search"      -> (Queries.ivfPqSearch _),
-    "q240_ivm_signed"         -> (Queries.ivmSigned _),
-    "q241_join_size_cms"      -> (Queries.joinSizeCms _),
-    "q242_orc_roundtrip"      -> (Queries.orcRoundtrip _),
-    "q243_bloom_decontaminate" -> (Queries.decontaminateBloom _),
-    "q244_temporal_align"     -> (Queries.temporalAlign _),
-    "q245_stream_ivm"         -> (Queries.streamedIvm _),
-    "q246_ivf_pq_residual"    -> (Queries.ivfPqResidualSearch _),
-    "q247_ivm_join_agg"       -> (Queries.ivmJoinAgg _),
-    "q248_pattern_match"      -> (Queries.patternMatch _),
-    "q249_ivm_dim_change"     -> (Queries.ivmDimChange _),
-    "q250_split_leakage"      -> (Queries.splitLeakage _),
-    "q251_cluster_split"      -> (Queries.clusterSplit _),
-    "q252_interp_gap_fill"    -> (Queries.interpGapFill _),
-    "q253_link_prediction"    -> (Queries.linkPrediction _),
-    "q254_pq_recall"          -> (Queries.pqRecall _),
-    "q255_csv_roundtrip"      -> (Queries.csvRoundtrip _),
-    "q256_rolling_median"     -> (Queries.rollingMedian _),
-    "q257_residual_recall"    -> (Queries.residualRecall _),
-    "q258_scd2_tracked_except" -> (Queries.scd2TrackedExcept _),
-    "q259_pq_trained"         -> (Queries.pqTrainedSearch _),
-    "q260_trained_recall"     -> (Queries.trainedRecall _),
-    "q261_compaction_plan"    -> (Queries.compactionPlan _),
-    "q262_sliding_hll"        -> (Queries.slidingHll _),
-    "q263_stream_interval_left" -> (Queries.streamedIntervalLeftJoin _),
-    "q264_budget_waterfill"   -> (Queries.budgetWaterfill _),
-    "q265_time_in_state"      -> (Queries.timeInState _),
-    "q266_neyman_allocation"  -> (Queries.neymanAllocation _),
-    "q267_srm_check"          -> (Queries.srmCheck _),
-    "q268_stream_sliding_agg" -> (Queries.streamedSlidingAgg _),
-    "q269_stream_interval_full" -> (Queries.streamedIntervalFullJoin _),
-    "q270_cfx_fixture"        -> (Queries.cfxFixtureReport _),
-    "q271_cfx_trained_recall" -> (Queries.cfxTrainedRecall _),
-    "q272_cfx_raw_recall"     -> (Queries.cfxRawRecall _),
-    "q273_suffix_spans"       -> (Queries.suffixSpans _),
-    "q274_kn_perplexity"      -> (Queries.knPerplexity _),
-    "q275_sessionize_tws"     -> (Queries.sessionizeTws _),
-    "q276_dedup_tws_ttl"      -> (Queries.dedupTwsRegistry _),
-    "q277_zorder3_manifest"   -> (Queries.zorder3Manifest _),
-    "q278_hilbert3_vs_morton3" -> (Queries.hilbert3PruningCompare _),
-    "q279_dsir_weights"       -> (Queries.dsirWeights _),
-    "q280_dsir_select"        -> (Queries.dsirSelect _),
-    "q281_stream_dsir"        -> (Queries.streamedDsir _),
-    "q282_bpe_encode"         -> (Queries.bpeEncodeTrained _),
-    "q283_dedup_excise"       -> (Queries.dedupExcise _),
-  )
+  /** Every registered query, family by family. */
+  private[graft] def specs: Seq[QuerySpec] =
+    Seq(EtlQueries, DedupQueries, AnnQueries, TextQueries, CurationQueries,
+      SketchQueries, TemporalQueries, GraphQueries, StreamingQueries,
+      RuntimeQueries, AnalyticsQueries).flatMap(_.specs)
 
-  def oracleSql: Map[String, String] = Oracles.sql
-}
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(s => s.name -> s.run).toMap
 
-/** Implementations of the §2 inventory over the testdata star schema. */
-object Queries {
-
-  // --- q01: watermark-window incremental extraction ------------------------
-  // reference: pipeline/incremental_ingestion.json (lookup → copy window)
-  val WmLow  = "2024-01-10 00:00:00"
-  val WmHigh = "2024-01-20 00:00:00"
-
-  private def utcMicros(s: String): Long = {
-    val i = java.time.LocalDateTime.parse(s.replace(' ', 'T'))
-      .toInstant(java.time.ZoneOffset.UTC)
-    i.getEpochSecond * 1000000L + i.getNano / 1000L
-  }
-
-  def incrementalExtract(spark: SparkSession, dir: String): DataFrame =
-    Tables.eventsTsUnit(spark, dir) match {
-      case Tables.TsMicros =>
-        // MICROS files: the window predicate on the native TimestampType
-        // column pushes into the scan as GreaterThan/LessThanOrEqual —
-        // no long-domain translation needed. Bounds are built from exact
-        // UTC epoch micros (timestamp_micros), NOT a string cast, which
-        // would parse in the caller's session timezone and move the
-        // window under a non-UTC session.
-        Incremental.extractWindow(Tables.events(spark, dir), "ts",
-          timestamp_micros(lit(utcMicros(WmLow))),
-          timestamp_micros(lit(utcMicros(WmHigh))))
-          .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      case Tables.TsNanos =>
-        Incremental.extractWindowNanos(Tables.eventsRawNanos(spark, dir), "ts",
-          utcMicros(WmLow), utcMicros(WmHigh))
-          .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-          .select("event_id", "ts", "user_id", "event_type", "value", "props")
-    }
-
-  // --- q02: dedup by business key, latest by sequence ----------------------
-  def dedupLatest(spark: SparkSession, dir: String): DataFrame =
-    Dedup.latestByKey(
-      Tables.events(spark, dir).select("user_id", "event_type", "event_id", "ts", "value"),
-      keys = Seq("user_id", "event_type"), orderCols = Seq("ts", "event_id"))
-      .select("user_id", "event_type", "event_id", "ts", "value")
-
-  // --- q03: changelog → SCD2 validity intervals ----------------------------
-  def scd2Build(spark: SparkSession, dir: String): DataFrame =
-    Scd.scd2FromChangelog(
-      Tables.events(spark, dir).select("user_id", "event_id", "event_type", "value", "ts"),
-      keys = Seq("user_id"), seqCol = "ts", tieCols = Seq("event_id"))
-      .select("user_id", "event_id", "event_type", "value",
-        "effective_from", "effective_to", "is_current")
-
-  // --- q04: SCD1 latest snapshot per key ------------------------------------
-  def scd1Latest(spark: SparkSession, dir: String): DataFrame =
-    Scd.scd1Latest(
-      Tables.events(spark, dir).select("user_id", "event_id", "event_type", "value", "ts"),
-      keys = Seq("user_id"), orderCols = Seq("ts", "event_id"))
-      .select("user_id", "event_id", "event_type", "value", "ts")
-
-  // --- q05: CASE-bucket enrichment + distribution ---------------------------
-  // reference: Silver_Dimensions.py durationFlag buckets
-  def bucketEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    li.withColumn("qty_bucket",
-        Enrich.bucketize(col("l_quantity"), Seq(25.0 -> "low", 40.0 -> "medium"), "high"))
-      .groupBy("qty_bucket")
-      .agg(count(lit(1)).as("n_items"),
-        moneySum(dec2(col("l_quantity"))).as("sum_qty"),
-        moneySum(discounted(col("l_extendedprice"), col("l_discount"))).as("revenue"))
-      .orderBy("qty_bucket")
-  }
-
-  // --- q06: DQ expectations report ------------------------------------------
-  // reference: DimUser.py expectations + utils/transformations.py regex UDF
-  def dqRules: Seq[Quality.Rule] = Seq(
-    Quality.Rule("custkey_not_null", col("c_custkey").isNull),
-    Quality.Rule("name_format", !Quality.matchesFormat(col("c_name"), "^Customer#[0-9]{9}$")),
-    Quality.Rule("acctbal_non_negative", col("c_acctbal") < lit(0.0)),
-    Quality.Rule("nationkey_in_range", !col("c_nationkey").between(0, 24)))
-
-  def dqValidate(spark: SparkSession, dir: String): DataFrame =
-    Quality.report(Tables.customer(spark, dir), dqRules).orderBy("rule")
-
-  // --- q07: date dimension generation ---------------------------------------
-  def dimDate(spark: SparkSession, dir: String): DataFrame =
-    Enrich.dimDateFrom(Tables.orders(spark, dir), "o_orderdate").orderBy("date_key")
-
-  // --- q08: star join revenue by region/nation -------------------------------
-  def starRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val o  = Tables.orders(spark, dir).select("o_orderkey", "o_custkey")
-    val c  = Tables.customer(spark, dir).select("c_custkey", "c_nationkey")
-    val n  = Tables.nation(spark, dir)
-    val r  = Tables.region(spark, dir)
-    li.join(o, li("l_orderkey") === o("o_orderkey"))
-      .join(c, o("o_custkey") === c("c_custkey"))
-      .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-      .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-      .groupBy(col("r_name").as("region"), col("n_name").as("nation"))
-      .agg(moneySum(discounted(col("l_extendedprice"), col("l_discount"))).as("revenue"),
-        count(lit(1)).as("n_items"))
-      .select(col("region"), col("nation"), col("revenue"), col("n_items"))
-      .orderBy("region", "nation")
-  }
-
-  // --- q09: config-driven star composition (Jinja analog) --------------------
-  def starCompose(spark: SparkSession, dir: String): DataFrame =
-    StarSchema.compose(
-      fact = Tables.lineitem(spark, dir),
-      factCols = Seq("l_orderkey", "l_linenumber", "l_extendedprice"),
-      dims = Seq(
-        StarSchema.Dim(Tables.part(spark, dir), Seq("p_name", "p_brand"),
-          factKey = "l_partkey", dimKey = "p_partkey"),
-        StarSchema.Dim(Tables.supplier(spark, dir), Seq("s_name"),
-          factKey = "l_suppkey", dimKey = "s_suppkey", broadcastHint = true)))
-
-  // --- q60: LEFT-JOIN star composition (fact rows survive missing dims) ------
-  // reference: local_spotify_dab/Jinja/jinja_notebook.py:208-220 — the
-  // composer emits LEFT JOINs "to avoid dropping fact rows"; the dim here is
-  // deliberately restricted so unmatched orders prove the null-preserving path
-  def starLeft(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-    val cSub = Tables.customer(spark, dir).filter(col("c_custkey") % 3 === 0)
-    StarSchema.compose(
-      fact = o,
-      factCols = Seq("o_orderkey", "o_totalprice"),
-      dims = Seq(StarSchema.Dim(cSub, Seq("c_mktsegment"),
-        factKey = "o_custkey", dimKey = "c_custkey",
-        broadcastHint = true, joinType = "left")))
-      .groupBy(coalesce(col("c_mktsegment"), lit("UNMATCHED")).as("segment"))
-      .agg(count(lit(1)).as("n_orders"),
-        moneySum(dec2(col("o_totalprice"))).as("total_price"))
-      .orderBy("segment")
-  }
-
-  // --- q10: grouped pricing summary (exact decimal money math) ---------------
-  def aggReport(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-      .filter(col("l_shipdate") <= Cols.ntzTs("1998-09-01 00:00:00"))
-    li.groupBy("l_returnflag", "l_linestatus")
-      .agg(
-        moneySum(dec2(col("l_quantity"))).as("sum_qty"),
-        moneySum(dec2(col("l_extendedprice"))).as("sum_base_price"),
-        moneySum(discounted(col("l_extendedprice"), col("l_discount"))).as("sum_disc_price"),
-        moneySum(dec2(col("l_extendedprice")) *
-          dec4((lit(1.0) - col("l_discount")) * (lit(1.0) + col("l_tax")))).as("sum_charge"),
-        (moneySum(dec2(col("l_quantity"))) / count(lit(1))).as("avg_qty"),
-        count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
-  }
-
-  // --- q11: top-N per group via window ranking -------------------------------
-  def topNPerGroup(spark: SparkSession, dir: String): DataFrame = {
-    val rev = Tables.lineitem(spark, dir)
-      .groupBy("l_partkey")
-      .agg(sum(discounted(col("l_extendedprice"), col("l_discount"))).as("rev_exact"))
-    val p = Tables.part(spark, dir).select("p_partkey", "p_brand")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("p_brand").orderBy(col("rev_exact").desc, col("p_partkey"))
-    rev.join(broadcast(p), rev("l_partkey") === p("p_partkey"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("p_brand"), col("p_partkey"), col("rev_exact").cast("double").as("revenue"),
-        col("rank"))
-      .orderBy("p_brand", "rank")
-  }
-
-  // --- q12: JSON field extraction + aggregation ------------------------------
-  def jsonExtract(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .withColumn("k", Enrich.jsonLongField(col("props"), "k"))
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_events"), sum(col("k")).as("sum_k"))
-      .orderBy("event_type")
-
-  // --- q13: ROLLUP multi-level report ----------------------------------------
-  def rollupReport(spark: SparkSession, dir: String): DataFrame =
-    Tables.orders(spark, dir)
-      .rollup("o_orderstatus", "o_orderpriority")
-      .agg(count(lit(1)).as("n_orders"),
-        moneySum(dec2(col("o_totalprice"))).as("total_price"))
-      .orderBy("o_orderstatus", "o_orderpriority")
-
-  // --- q14: incremental aggregate merge (partial-agg combine) ----------------
-  val SplitTs = "2024-01-15 00:00:00"
-
-  def aggMerge(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    def partial(d: DataFrame) = d.groupBy("user_id")
-      .agg(count(lit(1)).as("n_events"), sum(dec2(col("value"))).as("total_value"))
-    val base    = partial(ev.filter(col("ts") <= utcTs(SplitTs)))
-    val updates = partial(ev.filter(col("ts") > utcTs(SplitTs)))
-    Incremental.mergeAggregates(Seq(base, updates), Seq("user_id"),
-        Seq("n_events", "total_value"))
-      .select(col("user_id"), col("n_events"), col("total_value").cast("double").as("total_value"))
-      .orderBy("user_id")
-  }
-
-  // --- q15: SCD2 point-in-time (as-of) snapshot -------------------------------
-  val AsOfTs = "2024-01-15 00:00:00"
-
-  def validityAsOf(spark: SparkSession, dir: String): DataFrame =
-    Scd.asOfSnapshot(scd2Build(spark, dir), utcTs(AsOfTs))
-      .select("user_id", "event_id", "event_type", "value", "effective_from", "effective_to")
-      .orderBy("user_id")
-
-  // --- q16: incremental SCD2 merge (batch path of the DLT auto-CDC flow) -----
-  // Builds history from the pre-split changelog, then merges the post-split
-  // batch; must equal the from-scratch rebuild (which is the oracle).
-  def scd2MergeIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir).select("user_id", "event_id", "event_type", "value", "ts")
-    val h1 = ev.filter(col("ts") <= utcTs(SplitTs))
-    val h2 = ev.filter(col("ts") > utcTs(SplitTs))
-    Scd.scd2Merge(
-      Scd.scd2FromChangelog(h1, Seq("user_id"), "ts", Seq("event_id")),
-      h2, Seq("user_id"), "ts", Seq("event_id"))
-      .select("user_id", "event_id", "event_type", "value",
-        "effective_from", "effective_to", "is_current")
-      .orderBy("user_id", "effective_from")
-  }
-
-  // --- q17: post-extraction watermark update (ADF max_cdc Script analog) -----
-  def nextWatermark(spark: SparkSession, dir: String): DataFrame =
-    Incremental.nextWatermark(
-      Incremental.extractWindow(Tables.events(spark, dir), "ts",
-        utcTs(WmLow), utcTs(WmHigh)),
-      "ts")
-
-  // --- q18: DQ enforcement — rows passing every expectation ------------------
-  // (expect_all_or_drop semantics: a NULL rule verdict keeps the row)
-  def dqEnforce(spark: SparkSession, dir: String): DataFrame =
-    Quality.enforce(Tables.customer(spark, dir), dqRules)
-      .select("c_custkey", "c_name", "c_nationkey", "c_acctbal")
-      .orderBy("c_custkey")
-
-  // --- q19: star join through the generated date dimension -------------------
-  // The dim is derived from the SAME orders projection as the fact-side
-  // date_key: every dim attribute here (year, month) is functional in
-  // date_key, so joining a separately-built dim frame would re-scan orders
-  // and then broadcast rows the fact side can compute in place. One scan
-  // of orders, one of lineitem; the standalone dim builder remains q07.
-  def starDateRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val d = col("o_orderdate").cast("date")
-    val o = Tables.orders(spark, dir).select(
-      col("o_orderkey"),
-      (year(d) * 10000 + month(d) * 100 + dayofmonth(d)).as("date_key"),
-      year(d).as("year"), month(d).as("month"))
-    val li = Tables.lineitem(spark, dir).select("l_orderkey", "l_extendedprice", "l_discount")
-    li.join(o, li("l_orderkey") === o("o_orderkey"))
-      .groupBy("year", "month")
-      .agg(moneySum(discounted(col("l_extendedprice"), col("l_discount"))).as("revenue"),
-        count(lit(1)).as("n_items"))
-      .orderBy("year", "month")
-  }
-
-  // --- q20: exact content dedup (hash-groupBy, canonical = min id) -----------
-  def dedupExact(spark: SparkSession, dir: String): DataFrame =
-    Dedup.exactByContent(Tables.documents(spark, dir), "text", "doc_id")
-      .orderBy("doc_id")
-
-  // --- q21: n-gram Jaccard near-duplicate pairs ------------------------------
-  val JaccardN = 3
-  val JaccardThreshold = 0.8
-  val JaccardMaxPostings = NearDup.DefaultMaxPostings
-
-  def dedupNgramJaccard(spark: SparkSession, dir: String): DataFrame =
-    NearDup.ngramJaccardPairs(Tables.documents(spark, dir), "doc_id", "text",
-      JaccardN, JaccardThreshold, JaccardMaxPostings)
-      .orderBy("doc_a", "doc_b")
-
-  // --- q22: MinHash signatures + LSH band bucketing → candidate pairs --------
-  def dedupMinHashLsh(spark: SparkSession, dir: String): DataFrame =
-    NearDup.minHashLshPairs(Tables.documents(spark, dir), "doc_id", "text",
-      JaccardN, graft.functions.Lsh.Mh16)
-      .orderBy("doc_a", "doc_b")
-
-  // --- q63: MinHash LSH at the wide (corpus-scale) geometry ------------------
-  // Same operator as q22 under Lsh.Mh64: 64-position signatures in 8 bands
-  // of 8 rows — band collisions fall s^4 -> s^8 (the corpus-size response
-  // for MinHash banding) and the Jaccard estimate runs at 1/64 resolution.
-  def dedupMinHashLshWide(spark: SparkSession, dir: String): DataFrame =
-    NearDup.minHashLshPairs(Tables.documents(spark, dir), "doc_id", "text",
-      JaccardN, graft.functions.Lsh.Mh64)
-      .orderBy("doc_a", "doc_b")
-
-  // --- q23: SimHash fingerprint near-dup (hamming <= k) ----------------------
-  val SimHammingMax = 3
-
-  def dedupSimHash(spark: SparkSession, dir: String): DataFrame =
-    NearDup.simHashPairs(Tables.documents(spark, dir), "doc_id", "text",
-      JaccardN, SimHammingMax, graft.functions.Lsh.Sim32)
-      .orderBy("doc_a", "doc_b")
-
-  // --- q62: SimHash near-dup at the wide (corpus-scale) geometry -------------
-  // Same operator and hamming contract as q23 under Lsh.Sim64: 64-bit
-  // fingerprint in 4×16-bit bands. Band collisions on unrelated docs drop
-  // from 2^-8 to 2^-16 — the corpus-size response — while pigeonhole
-  // completeness holds at the same radius, so q62's pairs are the
-  // 64-bit-verified subset of q23's.
-  def dedupSimHashWide(spark: SparkSession, dir: String): DataFrame =
-    NearDup.simHashPairs(Tables.documents(spark, dir), "doc_id", "text",
-      JaccardN, SimHammingMax, graft.functions.Lsh.Sim64)
-      .orderBy("doc_a", "doc_b")
-
-  // --- q26: random-hyperplane LSH bucketed ANN (scale path) -------------------
-  def annLsh(spark: SparkSession, dir: String): DataFrame =
-    NearDup.annLshTopK(Tables.embeddings(spark, dir), "vec_id", "embedding",
-      AnnQueryMaxId, AnnK)
-      .orderBy("query_id", "rank")
-
-  // --- q24: embedding-cosine near-duplicate pairs (brute-force baseline) -----
-  val CosineThreshold = 0.4
-
-  def dedupEmbedding(spark: SparkSession, dir: String): DataFrame =
-    NearDup.embeddingCosinePairs(Tables.embeddings(spark, dir), "vec_id",
-      "embedding", CosineThreshold)
-      .orderBy("vec_a", "vec_b")
-
-  // --- q51: embedding near-dup via hyperplane-band candidates (scale path) ----
-  def dedupEmbeddingLsh(spark: SparkSession, dir: String): DataFrame =
-    NearDup.embeddingLshPairs(Tables.embeddings(spark, dir), "vec_id",
-      "embedding", CosineThreshold)
-      .orderBy("vec_a", "vec_b")
-
-  // --- q25: brute-force cosine top-k ANN -------------------------------------
-  val AnnQueryMaxId = 10
-  val AnnK = 5
-
-  def annBruteForce(spark: SparkSession, dir: String): DataFrame = {
-    val e = NearDup.withNorm(Tables.embeddings(spark, dir), "vec_id", "embedding")
-    NearDup.annBruteForce(
-      queries = e.filter(col("vec_id") < AnnQueryMaxId),
-      corpus = e.filter(col("vec_id") >= AnnQueryMaxId),
-      k = AnnK)
-      .orderBy("query_id", "rank")
-  }
-
-  // --- q27: heuristic language ID vs the labeled lang column -----------------
-  def textLangid(spark: SparkSession, dir: String): DataFrame = {
-    val ws = TextAnalysis.words(col("text"))
-    Tables.documents(spark, dir)
-      .select(col("lang"), TextAnalysis.langPredict(ws).as("pred_lang"))
-      .groupBy("lang", "pred_lang")
-      .agg(count(lit(1)).as("n_docs"))
-      .orderBy("lang", "pred_lang")
-  }
-
-  // --- q28: document quality scoring (length/stopword/word-len ratios) -------
-  def textQuality(spark: SparkSession, dir: String): DataFrame = {
-    val ws = TextAnalysis.words(col("text"))
-    val enStops = TextAnalysis.LangProfiles.head._2
-    Tables.documents(spark, dir).select(
-      col("doc_id"),
-      size(ws).as("n_words"),
-      (TextAnalysis.totalWordLen(ws).cast("double") / size(ws)).as("avg_word_len"),
-      (TextAnalysis.stopwordCount(ws, enStops).cast("double") / size(ws)).as("stop_ratio"),
-      (length(regexp_replace(col("text"), "[a-z0-9 ]", "")).cast("double") /
-        length(col("text"))).as("punct_ratio"))
-      .withColumn("quality_score",
-        lit(0.5) * col("stop_ratio") +
-          lit(0.5) * least(lit(1.0), col("n_words").cast("double") / lit(200.0)))
-      .orderBy("doc_id")
-  }
-
-  // --- q29: token counting — whitespace, regex lexer, subword estimate -------
-  val TokenPattern = "[a-z]+|[0-9]+|[^a-z0-9 ]"
-
-  def textTokens(spark: SparkSession, dir: String): DataFrame = {
-    val ws = TextAnalysis.words(col("text"))
-    Tables.documents(spark, dir).select(
-      col("doc_id"),
-      size(ws).as("n_ws_tokens"),
-      regexp_count(col("text"), lit(TokenPattern)).as("n_re_tokens"),
-      aggregate(
-        transform(ws, w => floor((length(w) + lit(3)) / lit(4.0))),
-        lit(0L), (acc, x) => acc + x).as("n_subwords"))
-      .orderBy("doc_id")
-  }
-
-  // --- q30: rolling polynomial-hash document fingerprint ----------------------
-  def textFingerprint(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), TextAnalysis.rollingFingerprint(col("text")).as("fp"))
-      .orderBy("doc_id")
-
-  // --- q31: opaque media payload + typed metadata (decode stubbed) ------------
-  def multimodalMeta(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.extractMeta(Multimodal.payloadTable(Tables.documents(spark, dir)))
-      .orderBy("doc_id")
-
-  // --- q45: frame-sampling schedule for video payloads -------------------------
-  val FramesPerVideo = 4
-
-  def multimodalFrames(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.payloadTable(Tables.documents(spark, dir))
-      .filter(col("media_type") === "video/mp4")
-      .select(col("doc_id"),
-        posexplode(Multimodal.frameSampleOffsets(octet_length(col("payload")), FramesPerVideo))
-          .as(Seq("frame_idx", "byte_offset")))
-      .orderBy("doc_id", "frame_idx")
-
-  // --- q46: corpus token-length histogram --------------------------------------
-  val TokenBucketWidth = 20
-
-  def tokenHistogram(spark: SparkSession, dir: String): DataFrame = {
-    val nTok = size(TextAnalysis.words(col("text")))
-    Tables.documents(spark, dir)
-      .select(floor(nTok / lit(TokenBucketWidth.toDouble)).cast("long").as("bucket"),
-        nTok.cast("long").as("n"))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("total_tokens"))
-      .orderBy("bucket")
-  }
-
-  // --- q43: CUBE multi-dimensional aggregate (all grouping-set combinations) --
-  def cubeReport(spark: SparkSession, dir: String): DataFrame =
-    Tables.orders(spark, dir)
-      .cube("o_orderstatus", "o_orderpriority")
-      .agg(count(lit(1)).as("n_orders"),
-        moneySum(dec2(col("o_totalprice"))).as("total_price"))
-      .orderBy("o_orderstatus", "o_orderpriority")
-
-  // --- q44: text normalization — stopword removal + re-join -------------------
-  def textNormalize(spark: SparkSession, dir: String): DataFrame = {
-    val stops = TextAnalysis.LangProfiles.head._2
-    val ws = TextAnalysis.words(col("text"))
-    val kept = filter(ws, w => !w.isin(stops.map(lit): _*))
-    Tables.documents(spark, dir).select(
-      col("doc_id"),
-      array_join(kept, " ").as("clean_text"),
-      (size(ws) - size(kept)).as("n_removed"))
-      .orderBy("doc_id")
-  }
-
-  // --- q41: top TF-IDF terms per document --------------------------------------
-  // Log-free IDF (N/df) so scores are pure IEEE arithmetic on exact
-  // integers — bit-identical across engines; ranking is unchanged
-  // (x -> N/x and x -> log(N/x) are both monotone).
-  val TfIdfTopK = 3
-
-  def tfidfTerms(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val w = docs.select(col("doc_id"), explode(TextAnalysis.words(col("text"))).as("term"))
-    val tf = w.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    // df derived FROM tf (one row per doc×term already), not from a second
-    // explode of the corpus — halves the scan+shuffle volume
-    val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val n = docs.agg(count(lit(1)).as("n"))
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy(col("score").desc, col("term"))
-    tf.join(df, "term").crossJoin(broadcast(n))
-      .withColumn("score",
-        col("tf").cast("double") * (col("n").cast("double") / col("df").cast("double")))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= TfIdfTopK)
-      .select("doc_id", "term", "tf", "score", "rank")
-      .orderBy("doc_id", "rank")
-  }
-
-  // --- q42: per-dimension embedding statistics ---------------------------------
-  // Moments over values TRUNCATED to integer units of 1e-10: truncation
-  // (unlike decimal rounding) has no tie cases, so the quantized value is
-  // bit-identical in any engine; integer/decimal sums are then exact and
-  // order-independent. (Decimal HALF_UP vs HALF_EVEN tie handling differs
-  // between engines — measured one-quantum divergences at scale 10.)
-  def embedStats(spark: SparkSession, dir: String): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(12, 0)
-    val e = Tables.embeddings(spark, dir)
-      .select(posexplode(col("embedding")).as(Seq("pos", "v")))
-      .select(col("pos"),
-        (col("v").cast("double") * lit(1.0e10)).cast("long").cast(dec).as("q"))
-    // Variance numerator n*sq - s^2 computed EXACTLY in decimal — leaving
-    // only sqrt and two divisions in float. (With s^2/n in float, one
-    // engine's compiler contracted the expression differently, giving
-    // 1-ulp divergences.)
-    val d8 = org.apache.spark.sql.types.DecimalType(8, 0)
-    val d18 = org.apache.spark.sql.types.DecimalType(18, 0)
-    e.groupBy("pos")
-      .agg(count(lit(1)).as("n"),
-        sum(col("q")).as("s"),
-        sum(col("q") * col("q")).as("sq"))
-      .withColumn("var_num",
-        col("sq") * col("n").cast(d8) - col("s").cast(d18) * col("s").cast(d18))
-      .select(
-        col("pos"),
-        col("n"),
-        (col("s").cast("double") / col("n") / lit(1.0e10)).as("mean"),
-        (sqrt(col("var_num").cast("double")) / col("n") / lit(1.0e10)).as("std"))
-      .orderBy("pos")
-  }
-
-  // --- q40: as-of join — purchase attributed to latest preceding view ---------
-  def asOfAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select("user_id", "event_id", "event_type", "value", "ts")
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select("event_id", "user_id", "ts", "value")
-    val views = Dedup.latestByKey(
-      ev.filter(col("event_type") === "view")
-        .select("user_id", "ts", "event_id", "value"),
-      keys = Seq("user_id", "ts"), orderCols = Seq("event_id"))
-    AsOf.asOfJoin(purchases, views, Seq("user_id"), "ts",
-      Seq("value", "event_id"), "view_")
-      .orderBy("event_id")
-  }
-
-  // --- q84: as-of join with an attribution window (tolerance) ------------------
-  // q40 with the real-world constraint every attribution system carries: a
-  // view older than the window (3 days here) must NOT be credited. Same
-  // single-shuffle union+window plan; the tolerance is a post-carry
-  // null-out, not a join predicate, so the cost is unchanged.
-  val AsOfWindowMicros: Long = 3L * 86400 * 1000000L
-
-  def asOfWindowAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select("user_id", "event_id", "event_type", "value", "ts")
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select("event_id", "user_id", "ts", "value")
-    val views = Dedup.latestByKey(
-      ev.filter(col("event_type") === "view")
-        .select("user_id", "ts", "event_id", "value"),
-      keys = Seq("user_id", "ts"), orderCols = Seq("event_id"))
-    AsOf.asOfJoin(purchases, views, Seq("user_id"), "ts",
-      Seq("value", "event_id"), "view_",
-      toleranceMicros = Some(AsOfWindowMicros))
-      .orderBy("event_id")
-  }
-
-  // --- q85: forward as-of — time to conversion ---------------------------------
-  // For every view, the NEXT purchase by the same user within 7 days and
-  // the exact lag — the conversion-latency table funnels are tuned by.
-  // The forward direction is the same union+window carry over the
-  // reversed time order: still one shuffle on user_id, one per-key sort,
-  // never a per-key cross product of views x purchases.
-  val ConversionWindowMicros: Long = 7L * 86400 * 1000000L
-
-  /** The q85 view→next-purchase frame, unsorted — shared with q109's
-    * latency rollup.
-    */
-  private def nextConversionFrame(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select("user_id", "event_id", "event_type", "ts")
-    val views = ev.filter(col("event_type") === "view")
-      .select("event_id", "user_id", "ts")
-    val purchases = Dedup.latestByKey(
-        ev.filter(col("event_type") === "purchase")
-          .select("user_id", "ts", "event_id"),
-        keys = Seq("user_id", "ts"), orderCols = Seq("event_id"))
-      .withColumn("purchase_ts", col("ts"))
-    AsOf.asOfJoin(views, purchases, Seq("user_id"), "ts",
-      Seq("event_id", "purchase_ts"), "next_",
-      toleranceMicros = Some(ConversionWindowMicros), forward = true)
-      .select(col("event_id"), col("user_id"), col("ts"),
-        col("next_event_id"),
-        (unix_micros(col("next_purchase_ts")) - unix_micros(col("ts")))
-          .as("lag_micros"))
-  }
-
-  def nextConversion(spark: SparkSession, dir: String): DataFrame =
-    nextConversionFrame(spark, dir).orderBy("event_id")
-
-  // --- q38: KMV distinct-count sketch vs exact ---------------------------------
-  val KmvK = 256
-
-  def distinctSketch(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val est = graft.functions.Sketches.kmvDistinctEstimate(li, "l_orderkey", KmvK)
-    val exact = li.agg(count_distinct(col("l_orderkey")).as("exact_distinct"))
-    est.crossJoin(exact)
-      .select(col("k"), col("exact_distinct"), col("est_distinct"),
-        (col("est_distinct") / col("exact_distinct").cast("double")).as("est_ratio"))
-  }
-
-  // --- q39: deterministic stratified sampling by language ----------------------
-  // Corpus-mixing rates: downsample dominant languages, keep the rest.
-  val SampleRates: Seq[(String, Double)] =
-    Seq("en" -> 0.5, "de" -> 1.0, "fr" -> 1.0, "es" -> 1.0, "zh" -> 0.25)
-
-  def stratifiedSample(spark: SparkSession, dir: String): DataFrame = {
-    val rate = SampleRates.tail.foldLeft(
-      when(col("lang") === SampleRates.head._1, SampleRates.head._2)) {
-      case (acc, (l, r)) => acc.when(col("lang") === l, r)
-    }.otherwise(lit(0.0))
-    Tables.documents(spark, dir)
-      .withColumn("h", graft.functions.Sketches.keyHash(col("doc_id")))
-      .filter(graft.functions.Sketches.hashSampled(col("h"), rate))
-      .select("doc_id", "lang")
-      .orderBy("doc_id")
-  }
-
-  // --- q35: pivot report (status columns per priority) ------------------------
-  val OrderStatuses = Seq("F", "O", "P")
-
-  def pivotReport(spark: SparkSession, dir: String): DataFrame =
-    Analytics.pivotCounts(Tables.orders(spark, dir),
-      "o_orderpriority", "o_orderstatus", OrderStatuses, "n_")
-      .orderBy("o_orderpriority")
-
-  // --- q36: share-of-total within partition (percent-of-region revenue) -------
-  def revenueShare(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val o  = Tables.orders(spark, dir).select("o_orderkey", "o_custkey")
-    val c  = Tables.customer(spark, dir).select("c_custkey", "c_nationkey")
-    val n  = Tables.nation(spark, dir)
-    val r  = Tables.region(spark, dir)
-    val byNation = li.join(o, li("l_orderkey") === o("o_orderkey"))
-      .join(c, o("o_custkey") === c("c_custkey"))
-      .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-      .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-      .groupBy(col("r_name").as("region"), col("n_name").as("nation"))
-      .agg(sum(discounted(col("l_extendedprice"), col("l_discount"))).as("rev_dec"))
-    byNation
-      .withColumn("share", Analytics.shareOfTotal(byNation, Seq("region"), "rev_dec"))
-      .select(col("region"), col("nation"),
-        col("rev_dec").cast("double").as("revenue"), col("share"))
-      .orderBy("region", "nation")
-  }
-
-  // --- q37: rolling 7-day revenue over ship dates ------------------------------
-  def rollingRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.lineitem(spark, dir)
-      .groupBy(col("l_shipdate").cast("date").as("ship_day"))
-      .agg(sum(discounted(col("l_extendedprice"), col("l_discount"))).as("rev_dec"))
-      .withColumn("day_num", datediff(col("ship_day"), lit("1970-01-01").cast("date")))
-    daily
-      .withColumn("rolling_dec", Analytics.rollingSumDays("day_num", "rev_dec", 7))
-      .select(col("ship_day"),
-        col("rev_dec").cast("double").as("daily_revenue"),
-        col("rolling_dec").cast("double").as("rolling_7d_revenue"))
-      .orderBy("ship_day")
-  }
-
-  // --- the dedup DECISION layer: one component table, three reports ----------
-  // q34 (membership), q65 (keep/drop), and q80 (per-source health) all ride
-  // the LSH→verify→connected-components pipeline — by far their dominant
-  // cost — so the pipeline computes the decision table ONCE and each report
-  // is a cheap consumer. In-session the table is memoized + persisted per
-  // (session, dir); a production run Snapshots-commits it instead and
-  // reports read the commit (PipelineSpec exercises that path end-to-end).
-
-  /** The document quality score shared by q28 and the canonical choice:
-    * 0.5·stopword-ratio + 0.5·min(1, words/200).
-    */
-  private[graft] def docQuality: Column = {
-    val ws = TextAnalysis.words(col("text"))
-    val enStops = TextAnalysis.LangProfiles.head._2
-    lit(0.5) * (TextAnalysis.stopwordCount(ws, enStops).cast("double") / size(ws)) +
-      lit(0.5) * least(lit(1.0), size(ws).cast("double") / lit(200.0))
-  }
-
-  private val decisionMemo = new SessionMemo[String, DataFrame]
-  private val pairsMemo = new SessionMemo[String, DataFrame]
-  private val coEdgesMemo = new SessionMemo[String, DataFrame]
-
-  /** Drop every memoized DataFrame so a harness can unpersist ALL
-    * persistent RDDs (including the lineage-free localCheckpoint leaves
-    * the memoized plans embed — Components' label frames) without
-    * leaving dangling references that would fail fast on re-evaluation.
-    * After this call, the next consumer of each memo rebuilds its
-    * pipeline from the parquet inputs — the same footing as a fresh
-    * session. Driver-side pure-data memos (cfxCodebookMemo: bounded
-    * Scala arrays, no executor state) are deliberately kept.
-    */
-  private[graft] def evictMemos(): Unit = {
-    decisionMemo.clear()
-    pairsMemo.clear()
-    coEdgesMemo.clear()
-    cfxCodebookMemo.releaseStopped()
-    // The stream-gate sessions have their OWN StreamingQueryManager and
-    // catalog — the bench session's sweep cannot reach them; the
-    // sessions themselves are kept (cheap, conf-stable).
-    streamSessions.values.foreach(Sessions.dropStrays)
-  }
-
-  /** A memoized frame whose persist may have been dropped externally
-    * (Bench clears ALL cache between query blocks to measure each from
-    * equal footing) is re-registered for caching before use — the next
-    * action recomputes and re-caches it, so consumers after a clearCache
-    * behave exactly like first-ever consumers, instead of silently
-    * recomputing the full pipeline on EVERY action.
-    */
-  private def ensureCached(df: DataFrame): DataFrame = {
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df
-  }
-
-  /** The corpus's verified near-dup pair list (LSH candidates + exact
-    * Jaccard ≥ threshold), computed once per (session, dir) — the shared
-    * upstream of the decision table AND the pair-level reports (q87).
-    */
-  def verifiedPairs(spark: SparkSession, dir: String): DataFrame =
-    ensureCached(pairsMemo(spark, dir)(
-      NearDup.lshVerifiedJaccardPairs(
-        Tables.documents(spark, dir), "doc_id", "text", JaccardN, JaccardThreshold)))
-
-  /** The corpus's dedup decision table (NearDup.componentTable), computed
-    * once per (session, data dir) and served from the block-manager cache
-    * to every consumer after that.
-    */
-  def dedupDecisionTable(spark: SparkSession, dir: String): DataFrame =
-    ensureCached(decisionMemo(spark, dir)(
-      NearDup.componentTable(
-        Tables.documents(spark, dir), "doc_id", "text",
-        JaccardN, JaccardThreshold, docQuality, carryCols = Seq("source"),
-        precomputedPairs = Some(verifiedPairs(spark, dir)))))
-
-  /** The co-purchase pair graph (basket-bounded co-occurrence support
-    * counts at minSupport=1), computed ONCE per (session, dir) — the
-    * shared upstream of six queries: q92/q97/q157 (support ≥ 2 views,
-    * a pure filter of this frame), q155/q186 (PageRank edges) and q187
-    * (triangle counting). The graph build — distinct + windowed basket
-    * bound + per-basket self-join — dominates each consumer's cost, so
-    * recomputing it per query was the suite's single largest redundant
-    * expense (VERDICT r11 item 2). Same contract as the dedup decision
-    * memo: Bench's equal-footing clearCache drops the persist, and
-    * ensureCached re-registers it so each consumer's untimed first run
-    * pays the rebuild once.
-    */
-  def copurchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    ensureCached(coEdgesMemo(spark, dir)(
-      Analytics.coOccurrencePairs(
-        Tables.lineitem(spark, dir).select("l_orderkey", "l_partkey"),
-        "l_orderkey", "l_partkey", minSupport = 1L,
-        maxBasketSize = CoMaxBasket)))
-
-  // --- q34: near-dup clusters → canonical doc per component -------------------
-  // Edges come from the scale path: MinHash-LSH candidates verified with
-  // exact Jaccard on the candidate set only — never the all-pairs shingle
-  // self-join (whose cost is unbounded on a skewed corpus).
-  def dedupClusters(spark: SparkSession, dir: String): DataFrame =
-    dedupDecisionTable(spark, dir)
-      .select(col("doc_id"), col("cluster_id").as("canonical_id"),
-        (col("doc_id") === col("cluster_id")).as("is_canonical"))
-      .orderBy("doc_id")
-
-  // --- q65: canonical-document selection per near-dup cluster -----------------
-  // The keep/drop choice a training-data pipeline enforces: q34's components
-  // say which docs are duplicates; this picks which one to KEEP — argmax
-  // quality (q28's score) with min-doc_id tiebreak, computed as one
-  // struct-max aggregation in the shared decision table (no window, no
-  // per-cluster sort).
-  def clusterCanonical(spark: SparkSession, dir: String): DataFrame =
-    clusterCanonicalFrom(dedupDecisionTable(spark, dir))
-
-  /** q65 as a pure consumer of an already-materialized decision table. */
-  def clusterCanonicalFrom(table: DataFrame): DataFrame =
-    table.select(col("doc_id"), col("cluster_id"), col("canonical_doc"), col("keep"))
-      .orderBy("doc_id")
-
-  // --- q71: session concurrency via global prefix-sum (q64's scale twin) ------
-  // Same semantics and SAME oracle as q64, different algorithm: instead of
-  // materializing (session × contained-event) pairs — whose cardinality
-  // grows with user density squared — count events at each window boundary
-  // with ONE global running count (PrefixSum over day buckets) and
-  // subtract: n_in = cum(end⁺) − cum(start⁻), minus the session's own
-  // n_events (its window contains exactly its own events, by the gap
-  // construction). Boundary kinds order start(0) < event(1) < end(2) at
-  // equal micros, so start excludes and end includes equal-timestamp
-  // events — matching the inclusive [start, end] contract. O(n log n)
-  // versus q64's O(pairs); the pair join wins when concurrency is low,
-  // this wins unboundedly as it grows.
-  def sessionConcurrencyFast(spark: SparkSession, dir: String): DataFrame = {
-    val sess = Sessionize.sessions(
-        Tables.events(spark, dir).select("user_id", "event_id", "ts", "value"),
-        "user_id", "ts", Seq("event_id"), "value", SessionGapMicros)
-      .select(col("user_id"), col("session_seq"), col("session_start"),
-        col("session_end"), col("n_events"))
-    // BOTH window boundaries explode out of ONE pass over the sessions
-    // (the sessionize shuffle+sort runs once, not once per boundary
-    // kind), carrying n_events and the start micros so the final rollup
-    // needs no join back to the session frame.
-    val bounds = sess.select(col("user_id"), col("session_seq"),
-        col("n_events"), unix_micros(col("session_start")).as("st"),
-        explode(array(
-          struct(unix_micros(col("session_start")).as("us"), lit(0).as("kind")),
-          struct(unix_micros(col("session_end")).as("us"), lit(2).as("kind"))))
-          .as("e"))
-      .select(col("e.us").as("us"), col("e.kind").as("kind"), lit(0L).as("w"),
-        col("user_id"), col("session_seq"), col("n_events"), col("st"))
-    val evr = Tables.events(spark, dir).select(
-      unix_micros(col("ts")).as("us"), lit(1).as("kind"), lit(1L).as("w"),
-      lit(null).cast("long").as("user_id"), lit(null).cast("long").as("session_seq"),
-      lit(null).cast("long").as("n_events"), lit(null).cast("long").as("st"))
-    val all = bounds.unionByName(evr)
-      .withColumn("bucket", floor(col("us") / lit(86400000000L)).cast("long"))
-    val cum = PrefixSum.runningSum(all, "bucket",
-      Seq(col("us"), col("kind"), col("user_id"), col("session_seq")),
-      col("w"), "cum")
-    cum.filter(col("kind") =!= 1)
-      .groupBy("user_id", "session_seq")
-      .agg(min(when(col("kind") === 0, col("cum"))).as("c_start"),
-        max(when(col("kind") === 2, col("cum"))).as("c_end"),
-        max(col("n_events")).as("n_events"), max(col("st")).as("st"))
-      .select(col("user_id"), col("session_seq"),
-        timestamp_micros(col("st")).as("session_start"),
-        (col("c_end") - col("c_start") - col("n_events")).as("n_concurrent"))
-      .orderBy("user_id", "session_seq")
-  }
-
-  // --- q72: global revenue rank over the whole fact table ----------------------
-  // `row_number() OVER (ORDER BY ...)` with no PARTITION BY collapses any
-  // engine's window to one task; this computes the identical ranking with
-  // PrefixSum (weight 1) over value-derived buckets — parallel everywhere,
-  // same bit-exact ranks. Descending rank r = N − ascending_rank + 1 under
-  // the fully reversed tiebreak order, which is what the oracle declares.
-  def globalRank(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-      .select("l_orderkey", "l_linenumber", "l_extendedprice")
-    // price ∈ [~900, ~105k): 4096-wide buckets ≈ dozens of parallel slices,
-    // monotone in the (price, orderkey, linenumber) ascending order
-    val bucketed = li.withColumn("bucket",
-      floor(col("l_extendedprice") / lit(4096.0)).cast("long"))
-    val asc = PrefixSum.runningSum(bucketed, "bucket",
-      Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber")),
-      lit(1L), "asc_rank")
-    val n = li.agg(count(lit(1)).as("n_rows"))
-    asc.crossJoin(broadcast(n))
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"),
-        (col("n_rows") - col("asc_rank") + lit(1L)).as("revenue_rank"))
-      .orderBy("revenue_rank")
-  }
-
-  // --- q73: interval×interval overlap join — concurrent sessions --------------
-  // For every session, how many OTHER users' sessions overlap it — the
-  // interval-overlap generalization of q64. RangeJoin.intervalOverlapJoin
-  // claims each overlapping pair exactly once (in the bucket where the
-  // intersection starts), so the plan is still a hash-partitioned
-  // equi-join with no dedup pass and no nested loop.
-  def sessionOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val sess = Sessionize.sessions(
-        Tables.events(spark, dir).select("user_id", "event_id", "ts", "value"),
-        "user_id", "ts", Seq("event_id"), "value", SessionGapMicros)
-      .select(col("user_id"), col("session_seq"),
-        col("session_start"), col("session_end"))
-    val other = sess.select(col("user_id").as("b_user"),
-      col("session_start").as("b_start"), col("session_end").as("b_end"))
-    val pairs = RangeJoin.intervalOverlapJoin(
-      sess, other, "session_start", "session_end", "b_start", "b_end",
-      bucketMicros = SessionGapMicros,
-      extraPred = col("b_user") =!= col("user_id"))
-    val counts = pairs.groupBy("user_id", "session_seq")
-      .agg(count(lit(1)).as("n_overlapping"))
-    sess.join(counts, Seq("user_id", "session_seq"), "left")
-      .select(col("user_id"), col("session_seq"), col("session_start"),
-        coalesce(col("n_overlapping"), lit(0L)).as("n_overlapping"))
-      .orderBy("user_id", "session_seq")
-  }
-
-  // --- q76: session overlap via prefix-sums (q73's scale twin) -----------------
-  // Same oracle as q73, O(n log n): sessions overlapping [st, en] =
-  // startsUpTo(en) − endsBefore(st) − 1 (the −1 removes the session
-  // itself; other own-user sessions can never overlap, by the gap
-  // construction). Two global running counts — one over session STARTS
-  // (boundary after equal starts: start == en counts as overlap), one
-  // over session ENDS (boundary before equal ends: end == st counts as
-  // overlap, so it must NOT land in endsBefore).
-  def sessionOverlapFast(spark: SparkSession, dir: String): DataFrame = {
-    val sess = Sessionize.sessions(
-        Tables.events(spark, dir).select("user_id", "event_id", "ts", "value"),
-        "user_id", "ts", Seq("event_id"), "value", SessionGapMicros)
-      .select(col("user_id"), col("session_seq"), col("session_start"),
-        col("session_end"))
-    // Each session explodes into its two boundary rows in ONE pass (the
-    // sessionize shuffle+sort runs once), and the single kind order
-    // start(0) < end(1) serves BOTH counts at once: at an end row the
-    // start-weight cum is startsUpTo(en) (equal-ts starts sort before),
-    // at a start row the end-weight cum is endsBefore(st) (equal-ts ends
-    // sort after, so end == st is correctly NOT counted). One window +
-    // one bucket-prefix pass via runningSums; the start micros rides the
-    // rows, so no join back to the session frame.
-    val bounds = sess.select(col("user_id"), col("session_seq"),
-        unix_micros(col("session_start")).as("st"),
-        explode(array(
-          struct(unix_micros(col("session_start")).as("us"), lit(0).as("kind"),
-            lit(1L).as("ws"), lit(0L).as("we")),
-          struct(unix_micros(col("session_end")).as("us"), lit(1).as("kind"),
-            lit(0L).as("ws"), lit(1L).as("we")))).as("e"))
-      .select(col("user_id"), col("session_seq"), col("st"),
-        col("e.us").as("us"), col("e.kind").as("kind"),
-        col("e.ws").as("ws"), col("e.we").as("we"))
-      .withColumn("bucket", floor(col("us") / lit(86400000000L)).cast("long"))
-    val cum = PrefixSum.runningSums(bounds, "bucket",
-      Seq(col("us"), col("kind"), col("user_id"), col("session_seq")),
-      Seq(col("ws") -> "c_starts", col("we") -> "c_ends"))
-    cum.groupBy("user_id", "session_seq")
-      .agg(max(when(col("kind") === 1, col("c_starts"))).as("su"),
-        min(when(col("kind") === 0, col("c_ends"))).as("eb"),
-        max(col("st")).as("st"))
-      .select(col("user_id"), col("session_seq"),
-        timestamp_micros(col("st")).as("session_start"),
-        (col("su") - col("eb") - lit(1L)).as("n_overlapping"))
-      .orderBy("user_id", "session_seq")
-  }
-
-  // --- q74: daily active + cumulative distinct users ---------------------------
-  // Running COUNT(DISTINCT) is not decomposable — but "distinct users so
-  // far" ≡ "users whose FIRST day is ≤ this day": one per-user min-day
-  // agg turns the running distinct into a running SUM of first-seen
-  // counts over the tiny per-day frame. No growing state, no
-  // sort-the-world; the only windows run over one row per day.
-  def cumulativeUsers(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select(col("user_id"), Cols.utcDate(col("ts")).as("day"))
-    val daily = ev.groupBy("day").agg(countDistinct(col("user_id")).as("n_active"))
-    val firsts = ev.groupBy("user_id").agg(min(col("day")).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("n_new"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("day"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    daily.join(firsts, Seq("day"), "left")
-      .select(col("day"), col("n_active"),
-        coalesce(col("n_new"), lit(0L)).as("n_new"))
-      .withColumn("cum_users", sum(col("n_new")).over(w))
-      .orderBy("day")
-  }
-
-  // --- q75: event-type transition matrix ---------------------------------------
-  // Markov transition counts over each user's event sequence: one shuffle
-  // (the per-user window), then a hash-agg on the (from, to) pair — the
-  // behavioral-analytics matrix behind session-flow dashboards.
-  def eventTransitions(spark: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-      .withColumn("from_type", lag(col("event_type"), 1).over(w))
-      .filter(col("from_type").isNotNull)
-      .groupBy(col("from_type"), col("event_type").as("to_type"))
-      .agg(count(lit(1)).as("n_transitions"))
-      .orderBy("from_type", "to_type")
-  }
-
-  // --- q66: conversion funnel — view → click → purchase per user --------------
-  // The chain (first view, first click AFTER it, first purchase after
-  // THAT) resolves with conditional min-aggregations joined back on
-  // user_id — three hash-aggs and two equi-joins, every row constant
-  // size. (A collect_list-per-user form is one shuffle cheaper but puts a
-  // user's whole step history into a single row — one bot account with
-  // 10M clicks OOMs an executor; min/filter aggs have no such row.) All
-  // shuffles share the user_id key, so AQE coalesces them over one
-  // partitioning. Comparison domain is integer epoch-micros, shared with
-  // the oracle.
-  def funnel(spark: SparkSession, dir: String): DataFrame =
-    funnelFrom(Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        unix_micros(col("ts")).as("us")))
-
-  /** The funnel over any (user_id, event_type, event_id, us) frame —
-    * factored out so the randomized spec can drive it with adversarial
-    * tie patterns.
-    */
-  def funnelFrom(ev: DataFrame): DataFrame = {
-    // ONE scan, one shuffle: the chain (first view → first click after it
-    // → first purchase after that) resolves with two running mins over
-    // the SAME per-user time-ordered window — `rv` is the first view so
-    // far, `rc` the first QUALIFYING click so far (strictly after the
-    // first view; a null rv compares false, exactly the join-filter
-    // semantics) — then one grouped aggregate reads the chain off the
-    // rows. The second window references the first's output, so the two
-    // Window nodes stack on one sort with no new exchange, and the final
-    // groupBy rides the same user_id partitioning. Equivalent to the
-    // former three conditional-min-agg + join-back form (which scanned
-    // events seven times); rows stay constant-size — no per-user
-    // collected histories, so a bot with 10M clicks still costs one
-    // running min, not one giant row.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("us"), col("event_id"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val chained = ev
-      .withColumn("rv",
-        min(when(col("event_type") === "view", col("us"))).over(w))
-      .withColumn("rc",
-        min(when(col("event_type") === "click" && col("rv") < col("us"),
-          col("us"))).over(w))
-    chained.groupBy("user_id").agg(
-        min(when(col("event_type") === "view", col("us"))).as("t_view"),
-        min(when(col("event_type") === "click" && col("rv") < col("us"),
-          col("us"))).as("t_click"),
-        min(when(col("event_type") === "purchase" && col("rc") < col("us"),
-          col("us"))).as("t_purchase"))
-      .select(col("user_id"),
-        timestamp_micros(col("t_view")).as("view_ts"),
-        timestamp_micros(col("t_click")).as("click_ts"),
-        timestamp_micros(col("t_purchase")).as("purchase_ts"),
-        when(col("t_purchase").isNotNull, 3)
-          .when(col("t_click").isNotNull, 2)
-          .when(col("t_view").isNotNull, 1)
-          .otherwise(0).as("stage"))
-      .orderBy("user_id")
-  }
-
-  // --- q77: deterministic quality-weighted sampling ----------------------------
-  // Corpus downsampling with retention probability = the q28 quality
-  // score: a doc survives iff u(doc) < score, where u is a uniform-ish
-  // [0,1) value derived from the doc's id via the cross-engine polynomial
-  // fingerprint — NOT a RNG, so the sample is reproducible row-for-row in
-  // any engine, any partitioning, any retry (the property seeded RNGs
-  // lose the moment partitioning changes). One scan, no shuffle before
-  // the sink.
-  val SampleResolution = 1000000L
-
-  def qualitySample(spark: SparkSession, dir: String): DataFrame = {
-    val ws = TextAnalysis.words(col("text"))
-    val enStops = TextAnalysis.LangProfiles.head._2
-    val score = lit(0.5) * (TextAnalysis.stopwordCount(ws, enStops).cast("double") / size(ws)) +
-      lit(0.5) * least(lit(1.0), size(ws).cast("double") / lit(200.0))
-    val u = (graft.plans.VectorExprs.polyFingerprint(col("doc_id").cast("string"))
-      % lit(SampleResolution)).cast("double") / lit(SampleResolution.toDouble)
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), score.as("quality_score"), u.as("u"))
-      .filter(col("u") < col("quality_score"))
-      .select(col("doc_id"), col("quality_score"))
-      .orderBy("doc_id")
-  }
-
-  // --- q78: robust outliers — median/MAD instead of mean/stddev ----------------
-  // q70's z-score breaks when the contamination itself inflates the
-  // moments; median absolute deviation is the robust form. Two rounds of
-  // the exact percentile aggregate (bit-matched to quantile_cont, q68),
-  // each a distributed per-group sort over a tiny group dim broadcast
-  // back over the fact scan. Flag |v − median| > 3·MAD.
-  def robustOutliers(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir).select("event_id", "event_type", "value")
-    val med = ev.groupBy("event_type")
-      .agg(expr("percentile(value, 0.5D)").as("med"))
-    val withMed = ev.join(broadcast(med), "event_type")
-      .withColumn("dev", abs(col("value") - col("med")))
-    val mad = withMed.groupBy("event_type")
-      .agg(expr("percentile(dev, 0.5D)").as("mad"))
-    withMed.join(broadcast(mad), "event_type")
-      .filter(col("dev") > lit(3.0) * col("mad"))
-      .select(col("event_id"), col("event_type"), col("value"),
-        col("med"), col("mad"))
-      .orderBy("event_id")
-  }
-
-  // --- q67: cohort retention matrix over events --------------------------------
-  // cohort = a user's first active day; cell (cohort_day, day_offset) counts
-  // the cohort's users active that many days later. Two hash-aggs and one
-  // equi-join on user_id (broadcastable per-user cohort dim at any scale
-  // where users ≪ events; AQE picks it).
-  def retention(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select(col("user_id"), Cols.utcDate(col("ts")).as("day"))
-    val cohort = ev.groupBy("user_id").agg(min(col("day")).as("cohort_day"))
-    ev.join(cohort, "user_id")
-      .groupBy(col("cohort_day"),
-        datediff(col("day"), col("cohort_day")).as("day_offset"))
-      .agg(countDistinct(col("user_id")).as("n_users"))
-      .orderBy("cohort_day", "day_offset")
-  }
-
-  // --- q68: exact per-group percentile report ----------------------------------
-  // Exact `percentile` (sort-based, linear interpolation — the same
-  // definition as SQL quantile_cont), NOT percentile_approx: the report is
-  // per-group, groups are few, and the per-group sort distributes with the
-  // hash-agg. At 100 TB switch the caller to approx_percentile only when
-  // the group cardinality itself explodes.
-  def percentileReport(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy("l_returnflag")
-      .agg(expr(
-        "percentile(l_extendedprice, array(0.25D, 0.5D, 0.75D, 0.99D))").as("qs"))
-      .select(col("l_returnflag"),
-        element_at(col("qs"), 1).as("p25"),
-        element_at(col("qs"), 2).as("p50"),
-        element_at(col("qs"), 3).as("p75"),
-        element_at(col("qs"), 4).as("p99"))
-      .orderBy("l_returnflag")
-
-  // --- q88: histogram-sketch percentiles — q68's one-pass mergeable twin -------
-  // Same report shape as q68 without the distributed per-group sort: one
-  // hash-agg over (flag, price-bin), a cumulative over ≤1100 tiny rows
-  // per flag, linear interpolation inside the boundary bin. Error ≤ the
-  // 100-unit bin width (~0.1% of the price range); bin counts are
-  // ADDITIVE, so day-over-day / cluster-over-cluster merges are vector
-  // adds with no merge-order sensitivity — the property rank-based
-  // sketches (KLL/GK) give up. The spec pins every estimate within one
-  // bin width of q68's exact answer.
-  val SketchBinWidth = 100.0
-  val SketchBins = 1100
-  val SketchQs: Seq[Double] = Seq(0.25, 0.5, 0.75, 0.99)
-
-  def sketchPercentiles(spark: SparkSession, dir: String): DataFrame =
-    graft.functions.Sketches.histogramQuantiles(
-        Tables.lineitem(spark, dir).select("l_returnflag", "l_extendedprice"),
-        "l_returnflag", "l_extendedprice", SketchBinWidth, SketchBins, SketchQs)
-      .orderBy("l_returnflag")
-
-  // --- q90: per-group KMV distinct sketches (q38 partitioned) ------------------
-  // "Distinct users/ids per segment" without a per-segment COUNT(DISTINCT)
-  // over the raw table: the k-th smallest distinct hash per group. The
-  // report joins the exact count only to expose est_ratio for monitoring;
-  // the sketch side alone is the production shape (exact COUNT(DISTINCT)
-  // per group re-shuffles every raw row; the sketch dedups (group, hash)
-  // pairs once and ranks a tiny distinct frame).
-  // k sized to the SMALLEST corpus the library contracts to run on
-  // (sf0.001 has ~190 distinct ids per type; a group below k emits no
-  // sketch row by design, and the surface contract is rows > 0)
-  val GroupKmvK = 128
-
-  def groupedDistinctSketch(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir).select("event_type", "event_id")
-    graft.functions.Sketches.groupedKmvDistinct(ev, "event_type", "event_id", GroupKmvK)
-      .join(ev.groupBy("event_type")
-        .agg(countDistinct("event_id").as("exact_distinct")), "event_type")
-      .select(col("event_type"), col("k"), col("exact_distinct"),
-        col("est_distinct"),
-        (col("est_distinct") / col("exact_distinct").cast("double")).as("est_ratio"))
-      .orderBy("event_type")
-  }
-
-  // --- q91: semantic cluster-pruned embedding dedup (SemDeDup shape) -----------
-  // Cluster first, compare only within clusters: the published recipe for
-  // embedding dedup at web scale (k ~ 50k clusters there; the centroid
-  // count is the knob). Centroids here are a fixed id-order draw so the
-  // SQL twin replays them verbatim — production trains them
-  // (Ivf.trainKMeans) and the operator is unchanged.
-  val SemLists = 16
-
-  def semanticDedup(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val cents = emb.orderBy("vec_id").limit(SemLists)
-      .select(col("embedding").cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toSeq).toSeq
-    NearDup.clusterCosinePairs(emb, "vec_id", "embedding", cents, CosineThreshold)
-      .orderBy("vec_a", "vec_b")
-  }
-
-  // --- q94: count-min-sketch word frequencies -----------------------------------
-  // The bounded-memory frequency monitor: depth×width integer cells from
-  // one corpus pass, additive across shards/days/batches (vector add — the
-  // mergeability that lets a 100 TB run sketch per-partition and combine).
-  // The report joins the head words' exact counts with their CMS
-  // estimates, exposing the overestimate the ε·N bound promises.
-  val CmsDepth = 4
-  val CmsWidth = 512
-  val CmsTopK = 50
-
-  def cmsHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    val words = Tables.documents(spark, dir)
-      .select(explode(TextAnalysis.words(col("text"))).as("word"))
-    val fp = graft.plans.VectorExprs.polyFingerprint(col("word"))
-    val counters = graft.functions.Sketches.cmsCounters(words, fp, CmsDepth, CmsWidth)
-    val top = words.groupBy("word").agg(count(lit(1)).as("exact_n"))
-      .orderBy(col("exact_n").desc, col("word")).limit(CmsTopK)
-    graft.functions.Sketches.cmsEstimates(top, fp, counters,
-        CmsDepth, CmsWidth, "cms_est")
-      .withColumn("overcount", col("cms_est") - col("exact_n"))
-      .orderBy(col("exact_n").desc, col("word"))
-  }
-
-  // --- q96: asymmetric containment pairs ----------------------------------------
-  // The truncation/expansion duplicates Jaccard can't see (an excerpt
-  // inside a page scores Jaccard ~|A|/|B| but containment 1.0). Threshold
-  // 0.9 ≈ "nine tenths of the smaller document appears verbatim in the
-  // other" — the document-level decontamination/memorization signal.
-  val ContainmentThreshold = 0.9
-
-  def containmentPairs(spark: SparkSession, dir: String): DataFrame =
-    NearDup.ngramContainmentPairs(Tables.documents(spark, dir), "doc_id", "text",
-      JaccardN, ContainmentThreshold, JaccardMaxPostings)
-      .orderBy("doc_a", "doc_b")
-
-  // --- q92: market-basket co-purchase pairs ------------------------------------
-  // "Customers whose order contained X also bought Y": item-pair support
-  // over orders, the recommender co-occurrence primitive. Fan-out is the
-  // basket size squared (TPC-H orders hold ≤ ~13 distinct parts), so the
-  // pair explosion is bounded per order; the support filter + top-k keep
-  // the output tiny however large the corpus. Top-k is a total order
-  // (support DESC, then both keys) so ties can't flap between engines.
-  // CoMaxBasket is the ENFORCED basket bound (coOccurrencePairs
-  // quarantines larger baskets whole): far above any real order (TPC-H
-  // tops out ~13 distinct parts) so clean-data results are unchanged,
-  // and low enough that a poisoned 10^4-item bot basket can never fan
-  // out 10^8 pairs into one straggler task.
-  val CoMinSupport = 2L
-  val CoTopK = 100
-  val CoMaxBasket = 256L
-
-  def copurchasePairs(spark: SparkSession, dir: String): DataFrame =
-    copurchaseEdges(spark, dir)
-      .filter(col("n_baskets") >= CoMinSupport)
-      .orderBy(col("n_baskets").desc, col("item_a"), col("item_b"))
-      .limit(CoTopK)
-
-  // --- q93: trailing-window revenue anomaly flags -------------------------------
-  // Daily revenue vs its own trailing 28-day baseline: exact decimal daily
-  // sums (one hash-agg over the fact table — the only scan), then the
-  // trailing mean/var/z ride the tiny O(days) daily frame. The time-series
-  // ops-report twin of q70's per-group z-scores. Baseline stats run on the
-  // day total quantized to KILODOLLAR units (q42/q70's quantize-then-moment
-  // recipe): integer Σv and Σv² stay exactly double-representable, so the
-  // z is bit-stable cross-engine; the unit is the operator's knob — size
-  // it so Σv² over the window < 2^53 at your scale (a 1e-4 relative
-  // quantization is noise against a 2σ alarm threshold).
-  val AnomalyWindowDays = 28
-  val AnomalyMinPrior = 8
-  val AnomalyZ = 2.0
-  val AnomalyUnit = 1000.0
-
-  def revenueAnomaly(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.lineitem(spark, dir)
-      .groupBy(col("l_shipdate").cast("date").as("ship_day"))
-      .agg(sum(discounted(col("l_extendedprice"), col("l_discount"))).as("rev_dec"))
-      .withColumn("day_num", datediff(col("ship_day"), lit("1970-01-01").cast("date")))
-      // the decimal→double conversion is ≤ 15 significant digits (exact
-      // same nearest-double in any engine); the floor is unambiguous
-      // except at exact multiples of the unit, where the division is
-      // itself exact — deterministic either way
-      .withColumn("rev_ku",
-        floor(col("rev_dec").cast("double") / lit(AnomalyUnit)).cast("long"))
-    Analytics.trailingZScore(daily, "day_num", "rev_ku",
-        AnomalyWindowDays, AnomalyMinPrior)
-      .select(col("ship_day"),
-        col("rev_dec").cast("double").as("daily_revenue"),
-        col("n_prior"), col("trailing_mean"), col("z_score"),
-        (abs(col("z_score")) > lit(AnomalyZ)).as("is_anomaly"))
-      .orderBy("ship_day")
-  }
-
-  // --- q95: sliding 7-day distinct active users ---------------------------------
-  // Rolling reach (the WAU curve): sliding COUNT(DISTINCT user) per window
-  // end, decomposed into a bounded ×7 explode + two hash-dedups — never a
-  // day-range join (whose probe side grows with the window) and never a
-  // growing distinct state. Same decomposition family as q74.
-  val SlidingWindowDays = 7
-
-  def slidingActiveUsers(spark: SparkSession, dir: String): DataFrame =
-    Analytics.slidingDistinctCount(
-      Tables.events(spark, dir)
-        .select(col("user_id"), Cols.utcDate(col("ts")).as("day")),
-      "user_id", "day", SlidingWindowDays, "n_users_7d")
-      .orderBy("window_end")
-
-  // --- q97: item-item cosine similarity (normalized co-occurrence) --------------
-  // q92's support counts normalized to the bipartite-projection cosine
-  // n_ab / √(n_a·n_b) — the actual item-recommender score (raw support
-  // just ranks popular items). Same bounded join; the per-item frequency
-  // table joins in by hash. Deterministic: integer counts, one sqrt, one
-  // division, total tiebreak order.
-  val SimTopK = 100
-
-  def copurchaseSimilarity(spark: SparkSession, dir: String): DataFrame = {
-    val items = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("b"), col("l_partkey").as("i")).distinct()
-    val freq = items.groupBy("i").agg(count(lit(1)).as("n"))
-    copurchaseEdges(spark, dir)
-      .filter(col("n_baskets") >= CoMinSupport)
-      .join(freq.select(col("i").as("item_a"), col("n").as("na")), Seq("item_a"))
-      .join(freq.select(col("i").as("item_b"), col("n").as("nb")), Seq("item_b"))
-      .withColumn("cosine",
-        col("n_baskets").cast("double") /
-          sqrt((col("na") * col("nb")).cast("double")))
-      .select("item_a", "item_b", "n_baskets", "cosine")
-      .orderBy(col("cosine").desc, col("item_a"), col("item_b"))
-      .limit(SimTopK)
-  }
-
-  // --- q98: cross-source quality-distribution drift ------------------------------
-  // Has one source's quality distribution drifted from another's? The
-  // monitoring question behind every ingestion mix decision. Per-source
-  // decile histograms (one hash-agg), then pairwise chi-square distance
-  // Σ (p−q)²/(p+q) over the 10 bins — folded in FIXED bin order via an
-  // array fold (sort_array + aggregate), never a float SUM whose
-  // combination order floats with partitioning. Counts are integers,
-  // proportions one division each: bit-stable cross-engine.
-  def sourceDrift(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val binned = docs.select(col("source"),
-        least(floor(docQuality * lit(10.0)), lit(9.0)).cast("long").as("bin"))
-      .groupBy("source", "bin").agg(count(lit(1)).as("cnt"))
-    // densify to the full 0..9 bin domain BEFORE building the per-source
-    // arrays: zip_with aligns positionally, so a bin empty in one source
-    // but not the other would otherwise misalign every later bin
-    val grid = docs.select("source").distinct()
-      .crossJoin(spark.range(10).select(col("id").as("bin")))
-    val full = grid.join(binned, Seq("source", "bin"), "left")
-      .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
-    val withP = full
-      .withColumn("total", sum("cnt").over(
-        org.apache.spark.sql.expressions.Window.partitionBy("source")))
-      .withColumn("p", col("cnt").cast("double") / col("total").cast("double"))
-    val hist = withP.groupBy("source")
-      .agg(sort_array(collect_list(struct(col("bin"), col("p")))).as("h"))
-    val a = hist.select(col("source").as("source_a"), col("h").as("ha"))
-    val b = hist.select(col("source").as("source_b"), col("h").as("hb"))
-    a.join(b, col("source_a") < col("source_b"))
-      .withColumn("chi2", expr(
-        """aggregate(
-             zip_with(ha, hb, (x, y) ->
-               CASE WHEN x.p + y.p = 0.0D THEN 0.0D
-                    ELSE (x.p - y.p) * (x.p - y.p) / (x.p + y.p) END),
-             0.0D, (acc, v) -> acc + v)"""))
-      .select("source_a", "source_b", "chi2")
-      .orderBy("source_a", "source_b")
-  }
-
-  // --- q99: time-decayed customer value ------------------------------------------
-  // Recency-weighted lifetime value: Σ over the customer's order days of
-  // day_revenue · 2^−age. The decay weight is an EXACT power of two
-  // (1/(1<<age), ages capped at 50): multiplying by it only shifts the
-  // exponent — no rounding — so the only float rounding left is the
-  // per-day decimal→double conversion and the final fold, which runs in
-  // FIXED day order via sort_array+aggregate (both engines fold
-  // sequentially over the same sorted list). The per-customer list is
-  // bounded by the customer's distinct order days, never the corpus.
-  val DecayCapDays = 50
-
-  def decayedCustomerValue(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-    val daily = o.groupBy(col("o_custkey"),
-        col("o_orderdate").cast("date").as("day"))
-      .agg(sum(dec2(col("o_totalprice"))).as("rev_dec"))
-    val maxDay = daily.agg(max(col("day")).as("max_day"))
-    daily.crossJoin(broadcast(maxDay))
-      .withColumn("age",
-        least(datediff(col("max_day"), col("day")), lit(DecayCapDays)).cast("int"))
-      .withColumn("wv",
-        col("rev_dec").cast("double") / expr("cast(shiftleft(1L, age) as double)"))
-      .withColumn("day_num", datediff(col("day"), lit("1970-01-01").cast("date")))
-      .groupBy("o_custkey")
-      .agg(expr("""aggregate(
-             transform(sort_array(collect_list(struct(day_num, wv))), s -> s.wv),
-             0.0D, (acc, v) -> acc + v)""").as("decayed_value"),
-        count(lit(1)).as("n_days"))
-      .orderBy("o_custkey")
-  }
-
-  // --- q100: local-supplier-volume star (TPC-H Q5 shape) --------------------------
-  // The join-GRAPH query the plain star lacks: lineitem ⋈ orders ⋈
-  // customer ⋈ supplier with the cross-dimension equality
-  // c_nationkey = s_nationkey (revenue where the customer's nation
-  // supplied the part), closed through broadcast nation/region. Exercises
-  // a join cycle — the optimizer must place the nationkey filter after
-  // both dim joins — while revenue stays decimal-exact.
-  def localSupplierVolume(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val o = Tables.orders(spark, dir)
-    val c = Tables.customer(spark, dir)
-    val s = Tables.supplier(spark, dir)
-    val n = Tables.nation(spark, dir)
-    val r = Tables.region(spark, dir)
-    li.join(o, li("l_orderkey") === o("o_orderkey"))
-      .join(c, o("o_custkey") === c("c_custkey"))
-      .join(broadcast(s), li("l_suppkey") === s("s_suppkey"))
-      .filter(c("c_nationkey") === s("s_nationkey"))
-      .join(broadcast(n), s("s_nationkey") === n("n_nationkey"))
-      .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-      .groupBy(col("r_name").as("region"), col("n_name").as("nation"))
-      .agg(count(lit(1)).as("n_items"),
-        moneySum(discounted(col("l_extendedprice"), col("l_discount"))).as("revenue"))
-      .orderBy("region", "nation")
-  }
-
-  // --- q69: BM25 top-k retrieval over the corpus -------------------------------
-  // Broadcast-stats retrieval: ONE row of corpus statistics (N, Σdl, per-term
-  // df — all integer-exact) broadcast against one corpus scan computing the
-  // BM25 sum in a fixed literal term order, then a global top-k
-  // (TakeOrderedAndProject — never a full sort at scale). The idf uses the
-  // rational form (N - df + 0.5)/(df + 0.5) WITHOUT the textbook ln().
-  // This is a DELIBERATE scoring deviation, not an equivalence: ln is
-  // monotone per term, but the score SUMS terms, and a sum of idf·w is not
-  // order-equivalent to a sum of ln(idf)·w — multi-term rankings can
-  // differ from textbook BM25 (rare idfs weigh relatively heavier here).
-  // The rational form is chosen because neither the JVM's Math.log nor
-  // another engine's libm guarantees correctly-rounded results; keeping
-  // every arithmetic step IEEE-deterministic makes the score bit-comparable
-  // across engines, and the oracle computes the identical rational form.
-  val BmK1 = 1.2
-  val BmB = 0.75
-  val BmTerms: Seq[String] = Seq("vector", "stream", "window", "filter")
-  val BmTopK = 20
-
-  /** (doc_id, score) for every doc with a positive BM25 score — the shared
-    * retrieval core of q69 (text top-k) and q79 (hybrid rerank).
-    */
-  private def bm25Scores(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-      .select(col("doc_id"), TextAnalysis.words(col("text")).as("ws"))
-      .withColumn("dl", size(col("ws")))
-    val dfCols = BmTerms.zipWithIndex.map { case (t, i) =>
-      sum(when(array_contains(col("ws"), t), 1L).otherwise(0L)).as(s"df_$i")
-    }
-    val stats = d.agg(count(lit(1)).as("n_docs"),
-      (sum(col("dl").cast("long")).as("sum_dl") +: dfCols): _*)
-    val nD = col("n_docs").cast("double")
-    val avgdl = col("sum_dl").cast("double") / nD
-    val score = BmTerms.zipWithIndex.map { case (t, i) =>
-      val tf = size(filter(col("ws"), w => w === lit(t))).cast("double")
-      val idf = (nD - col(s"df_$i") + lit(0.5)) / (col(s"df_$i") + lit(0.5))
-      idf * (tf * lit(BmK1 + 1)) /
-        (tf + lit(BmK1) * (lit(1 - BmB) + lit(BmB) * col("dl").cast("double") / avgdl))
-    }.reduce(_ + _)
-    d.crossJoin(broadcast(stats))
-      .select(col("doc_id"), score.as("score"))
-      .filter(col("score") > 0)
-  }
-
-  def bm25Search(spark: SparkSession, dir: String): DataFrame =
-    bm25Scores(spark, dir)
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(BmTopK)
-
-  // --- q79: hybrid retrieval — BM25 recall stage + dense cosine rerank --------
-  // The two-stage retrieval every RAG corpus pipeline runs: a cheap
-  // lexical stage takes the corpus down to `BmCandidates` docs (top-k by
-  // BM25, deterministic tiebreak), then the dense stage reranks ONLY the
-  // candidates by cosine to a query embedding (doc 0's vector —
-  // deterministic, no free-text query infra needed). The candidate set is
-  // a TakeOrdered result broadcast into the embedding join, so the dense
-  // stage scans |candidates| vectors, never the corpus.
-  val BmCandidates = 50
-  val HybridK = 20
-
-  def hybridSearch(spark: SparkSession, dir: String): DataFrame = {
-    val cand = bm25Scores(spark, dir)
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(BmCandidates)
-    val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val qv = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").as("qe"))
-    cand.join(emb, cand("doc_id") === emb("vec_id"))
-      .crossJoin(broadcast(qv))
-      .select(col("doc_id"), col("score").as("bm25_score"),
-        graft.functions.Similarity.cosine(col("qe"), col("embedding")).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("doc_id"))
-      .limit(HybridK)
-  }
-
-  // --- q70: per-group z-score outliers ----------------------------------------
-  // Anomaly flagging with EXACT group moments: Σv and Σv² accumulate as
-  // decimals (partition-order independent, bit-identical in any engine),
-  // and only the final mean/variance/z arithmetic runs in doubles with a
-  // fixed operation order. One hash-agg over a tiny group dim, broadcast
-  // back over one fact scan.
-  def valueOutliers(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir).select("event_id", "event_type", "value")
-    val d = Cols.dec2(col("value"))
-    val stats = ev.groupBy("event_type").agg(
-      count(lit(1)).as("n"), sum(d).as("s"), sum(d * d).as("ss"))
-    val n = col("n").cast("double")
-    val s = col("s").cast("double")
-    val variance = (col("ss").cast("double") - s * s / n) / (n - lit(1.0))
-    val z = (col("value") - s / n) / sqrt(variance)
-    ev.join(broadcast(stats), "event_type")
-      .select(col("event_id"), col("event_type"), col("value"), z.as("z"))
-      .filter(abs(col("z")) > lit(3.0))
-      .orderBy("event_id")
-  }
-
-  // --- q80: corpus-health report — near-duplication rate by source -------------
-  // The dashboard number a dedup pipeline is judged by: per source, how
-  // much of the corpus sits in near-dup clusters. A pure rollup of the
-  // shared decision table (cluster_size and source are already columns):
-  // one hash-agg on source. dup_rate is an exact integer ratio emitted as
-  // double (single division — bit-stable cross-engine).
-  def dupRateBySource(spark: SparkSession, dir: String): DataFrame =
-    dupRateBySourceFrom(dedupDecisionTable(spark, dir))
-
-  // --- q81: parameterized star — the composer's WHERE slot --------------------
-  // The reference's most common star parameterization is a run-time date
-  // filter (`WHERE date >= '{{ parameters.start_date }}'` — reference:
-  // local_spotify_dab/Jinja/jinja_notebook.py:270). Both filter slots are
-  // exercised: the fact-level `where` (a one-year order window, applied
-  // before the joins so it reaches the scan) and a per-dim `filter` (one
-  // market segment, restricting the broadcast side). The oracle runs the
-  // SAME config through renderSql — the SQL text IS the oracle query.
-  val StarFilterFrom = "1996-01-01 00:00:00"
-  val StarFilterTo = "1997-01-01 00:00:00"
-  val StarFilterSegment = "BUILDING"
-
-  def starFiltered(spark: SparkSession, dir: String): DataFrame =
-    StarSchema.compose(
-        fact = Tables.orders(spark, dir),
-        factCols = Seq("o_orderkey", "o_totalprice", "o_orderdate"),
-        dims = Seq(StarSchema.Dim(Tables.customer(spark, dir), Seq("c_mktsegment"),
-          factKey = "o_custkey", dimKey = "c_custkey", broadcastHint = true,
-          filter = Some(col("c_mktsegment") === StarFilterSegment))),
-        where = Some(col("o_orderdate") >= Cols.ntzTs(StarFilterFrom) &&
-          col("o_orderdate") < Cols.ntzTs(StarFilterTo)))
-      .groupBy(trunc(col("o_orderdate").cast("date"), "month").as("month"))
-      .agg(count(lit(1)).as("n_orders"),
-        moneySum(dec2(col("o_totalprice"))).as("total_price"))
-      .orderBy("month")
-
-  // --- q82: per-document shared-span rate (memorization risk) -----------------
-  // For each document: what fraction of its distinct n-gram spans also
-  // appears in at least one OTHER document. The per-doc number a dedup
-  // pipeline uses to flag partially-duplicated text that whole-document
-  // near-dup misses (boilerplate headers, quoted passages, templated
-  // spans). No pair join anywhere: span df is one hash-agg over the
-  // exploded grams, the shared-span set (df >= 2) joins back by LEFT SEMI
-  // — cost is O(total grams), never O(doc pairs), and the heavy join key
-  // is the gram itself (uniformly distributed, no skew salt needed).
-  def spanDupRate(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val withSh = docs.select(col("doc_id"),
-      graft.plans.SignatureExprs.distinctNGrams(
-        TextAnalysis.words(col("text")), JaccardN).as("sh"))
-      .filter(size(col("sh")) > 0)
-    val ex = withSh.select(col("doc_id"), explode(col("sh")).as("s"))
-    val shared = ex.groupBy("s").agg(count(lit(1)).as("df"))
-      .filter(col("df") >= 2).select("s")
-    val cnt = ex.join(shared, Seq("s"), "left_semi")
-      .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
-    withSh.select(col("doc_id"), size(col("sh")).cast("long").as("n_grams"))
-      .join(cnt, Seq("doc_id"), "left")
-      .withColumn("n_shared", coalesce(col("n_shared"), lit(0L)))
-      .withColumn("shared_ratio", col("n_shared").cast("double") / col("n_grams"))
-      .orderBy("doc_id")
-  }
-
-  // --- q83: token-budget curriculum selection WITHOUT a global sort ------------
-  // "Take the highest-quality documents until the token budget is full" —
-  // the selection step between scoring and shard-writing in a training-
-  // data pipeline. The naive form is a global ORDER BY quality + running
-  // sum: one sort of the corpus ending in a single-task window. Here the
-  // global order (quality DESC, doc_id) is bucketed by quality millis
-  // (floor(q·1000), a pure function of the row), so PrefixSum computes
-  // the exact global running token count with per-bucket parallelism and
-  // one tiny bucket-prefix task — the q72 pattern applied to selection.
-  // A document is kept iff the budget was not yet exhausted BEFORE it
-  // (cum − tokens < budget), so the boundary document that crosses the
-  // budget line is included: the budget is a floor, not a cap, and the
-  // rule needs no second pass.
-  val TokenBudget = 10000L
-
-  def budgetSelect(spark: SparkSession, dir: String): DataFrame = {
-    val scored = Tables.documents(spark, dir).select(col("doc_id"),
-        size(TextAnalysis.words(col("text"))).cast("long").as("tokens"),
-        docQuality.as("quality_score"))
-      .filter(col("tokens") > 0)
-    // bucket must ascend along the global (quality DESC) order
-    val bucketed = scored.withColumn("qb",
-      -floor(col("quality_score") * 1000).cast("long"))
-    PrefixSum.runningSum(bucketed, "qb",
-        Seq(col("quality_score").desc, col("doc_id")), col("tokens"), "cum_tokens")
-      .filter(col("cum_tokens") - col("tokens") < TokenBudget)
-      .select(col("doc_id"), col("tokens"), col("quality_score"), col("cum_tokens"))
-      .orderBy("doc_id")
-  }
-
-  // --- q87: cross-source duplication leakage matrix ----------------------------
-  // WHERE the near-dups come from: verified pairs rolled up by unordered
-  // source pair — the diagonal is within-source boilerplate, off-diagonal
-  // is cross-source leakage (mirrored crawls, syndication). Rides the
-  // memoized pair list (shared with the decision table) and looks sources
-  // up in the cached decision table, so the marginal cost is two joins of
-  // the PAIR frame (small — near-dups only) and one hash-agg. max_jaccard
-  // (not mean) keeps the float aggregation partition-order independent.
-  def sourceLeakage(spark: SparkSession, dir: String): DataFrame = {
-    val src = dedupDecisionTable(spark, dir).select(col("doc_id"), col("source"))
-    verifiedPairs(spark, dir)
-      .join(src.select(col("doc_id").as("doc_a"), col("source").as("sa")), "doc_a")
-      .join(src.select(col("doc_id").as("doc_b"), col("source").as("sb")), "doc_b")
-      .select(least(col("sa"), col("sb")).as("source_a"),
-        greatest(col("sa"), col("sb")).as("source_b"), col("jaccard"))
-      .groupBy("source_a", "source_b")
-      .agg(count(lit(1)).as("n_pairs"), max(col("jaccard")).as("max_jaccard"))
-      .orderBy("source_a", "source_b")
-  }
-
-  // --- q89: quality-decile duplication calibration -----------------------------
-  // Does low quality predict duplication? The corpus-health cross every
-  // curation pipeline sanity-checks before filtering on either signal:
-  // decision-table rows bucketed by quality decile, each decile's dup
-  // rate and mean cluster size. A pure rollup of the cached decision
-  // table — one hash-agg on the decile. Ratios are single divisions of
-  // exact integer sums (bit-stable); the decile is floor(q·10) clamped
-  // to 9 so quality exactly 1.0 lands in the top decile.
-  def qualityDupCalibration(spark: SparkSession, dir: String): DataFrame =
-    dedupDecisionTable(spark, dir)
-      .select(least(floor(col("quality_score") * lit(10.0)), lit(9.0))
-        .cast("long").as("decile"),
-        col("cluster_size"))
-      .groupBy("decile")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("cluster_size") > 1, 1L).otherwise(0L)).as("n_dup"),
-        sum(col("cluster_size")).as("size_sum"))
-      .select(col("decile"), col("n_docs"),
-        (col("n_dup").cast("double") / col("n_docs")).as("dup_rate"),
-        (col("size_sum").cast("double") / col("n_docs")).as("mean_cluster_size"))
-      .orderBy("decile")
-
-  /** q80 as a pure consumer of an already-materialized decision table. */
-  def dupRateBySourceFrom(table: DataFrame): DataFrame =
-    table.groupBy("source")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("cluster_size") > 1, 1L).otherwise(0L)).as("n_dup"))
-      .withColumn("dup_rate", col("n_dup").cast("double") / col("n_docs"))
-      .orderBy("source")
-
-  // --- q33: IVF ANN — probe nprobe inverted lists, exact search within --------
-  // nprobe is corpus-tuned: the synthetic embeddings are ISOTROPIC (measured
-  // mean cosine ~0 and identical same-label/cross-label distributions), so
-  // any coarse quantizer gives recall ~= scan fraction and the spec'd
-  // recall@5 >= 0.8 needs 9 of 10 lists here. On real (clustered) corpora
-  // the same plan probes 2-3 of hundreds of k-means lists; the operator's
-  // value is its shape — one corpus scan, broadcast centroids, per-list
-  // exact search — not this corpus's recall curve.
-  val IvfNProbe = 9
-
-  def annIvf(spark: SparkSession, dir: String): DataFrame =
-    Ivf.annIvfTopK(Tables.embeddings(spark, dir), "vec_id", "embedding", "label",
-      AnnQueryMaxId, IvfNProbe, AnnK)
-      .orderBy("query_id", "rank")
-
-  // --- q59: IVF ANN over a TRAINED k-means quantizer --------------------------
-  // The full production path: deterministic Lloyd training (id-order seeds so
-  // the SQL oracle replays them verbatim — no xxhash64 in DuckDB), quantizer
-  // assignment, then q33's probe/search shape over the trained lists. The
-  // oracle gates the TRAINING arithmetic bit-exactly (decimal sums, sequential
-  // dot folds, first-wins argmax); recall is gated separately by the
-  // clustered-corpus spec — on this isotropic corpus recall is pinned to the
-  // scan fraction whatever the quantizer (see q33's note).
-  val IvfTrainLists = 10
-  val IvfTrainIters = 2
-
-  def annIvfTrained(spark: SparkSession, dir: String): DataFrame =
-    Ivf.annIvfTrainedTopK(Tables.embeddings(spark, dir), "vec_id", "embedding",
-      AnnQueryMaxId, IvfTrainLists, IvfTrainIters, IvfNProbe, AnnK,
-      sampleFraction = 1.0, seedByHash = false)
-      .orderBy("query_id", "rank")
-
-  // --- q61: LARGE-k quantizer assignment (broadcast-table path) ---------------
-  // 513 lists × dim 64 = 32832 coefficients — just past LiteralAssignLimit, so
-  // assignListsByJoin (broadcast centroid TABLE, struct-max argmax, O(1) plan
-  // size in k) is what feeds the oracle, not the plan-literal kernels. The
-  // centroid draw (first corpus vectors in id order) and the assigned subset
-  // are fixed so the DuckDB twin's cost stays bounded at any sf.
-  val BigKLists = 513
-  val BigKAssignMaxId = 1000L
-
-  def ivfAssignBigK(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val base = emb.filter(col("vec_id") >= AnnQueryMaxId)
-      .orderBy("vec_id").limit(BigKLists)
-      .select("v").collect().map(_.getSeq[Double](0).toSeq).toSeq
-    // cycle the draw up to k: a small-SF corpus can't supply 513 distinct
-    // vectors, and duplicate centroids are harmless — identical scores
-    // resolve by the shared first-wins (lowest list) tie rule
-    val cents = (0 until BigKLists).map(i => base(i % base.size))
-    require(cents.size.toLong * cents.head.size > Ivf.LiteralAssignLimit,
-      "fixture must exceed LiteralAssignLimit so the broadcast-join path runs")
-    Ivf.assignListsByJoin(emb.filter(col("vec_id") < BigKAssignMaxId),
-        "vec_id", "v", cents, "list")
-      .select(col("vec_id"), col("list"))
-      .orderBy("vec_id")
-  }
-
-  // --- q32: gap-based sessionization ------------------------------------------
-  val SessionGapMicros: Long = 6L * 3600 * 1000000 // 6 hours
-
-  def sessionize(spark: SparkSession, dir: String): DataFrame =
-    Sessionize.sessions(
-      Tables.events(spark, dir).select("user_id", "event_id", "ts", "value"),
-      "user_id", "ts", Seq("event_id"), "value", SessionGapMicros)
-      .orderBy("user_id", "session_seq")
-
-  // --- q64: range join — concurrent-activity count per session ----------------
-  // For every q32 session, count events from OTHER users inside
-  // [session_start, session_end]: an interval×point range join. A naive
-  // inequality join plans as BroadcastNestedLoop (or cartesian) — fine at
-  // 57k sessions, fatal at 100 TB; RangeJoin's bucketed equi-join keeps
-  // shuffle volume at |sessions|×(duration/6h + 1) + |events| and meets
-  // each qualifying pair in exactly one bucket. Sessions with zero
-  // concurrent activity survive via the join-back (left + coalesce 0).
-  def sessionConcurrency(spark: SparkSession, dir: String): DataFrame = {
-    val sess = Sessionize.sessions(
-        Tables.events(spark, dir).select("user_id", "event_id", "ts", "value"),
-        "user_id", "ts", Seq("event_id"), "value", SessionGapMicros)
-      .select(col("user_id"), col("session_seq"),
-        col("session_start"), col("session_end"))
-    val points = Tables.events(spark, dir)
-      .select(col("user_id").as("e_user"), col("ts").as("e_ts"))
-    val pairs = RangeJoin.intervalPointJoin(
-      sess, points, "session_start", "session_end", "e_ts",
-      bucketMicros = SessionGapMicros,
-      extraPred = col("e_user") =!= col("user_id"))
-    val counts = pairs.groupBy("user_id", "session_seq")
-      .agg(count(lit(1)).as("n_concurrent"))
-    sess.join(counts, Seq("user_id", "session_seq"), "left")
-      .select(col("user_id"), col("session_seq"), col("session_start"),
-        coalesce(col("n_concurrent"), lit(0L)).as("n_concurrent"))
-      .orderBy("user_id", "session_seq")
-  }
-
-  /** Duplicated-bigram count: total bigrams (size-1) minus DISTINCT
-    * bigrams via the codegen DistinctNGrams kernel — the duplicate COUNT
-    * never needs the non-distinct bigram array itself. (Building that
-    * array with a `transform` HOF re-inlines the upstream `split` into
-    * every lambda element after CollapseProject — measured 6.7s for 5k
-    * docs; the kernel form is one pass, ~0.2s.)
-    */
-  private def dupBigrams(ws: Column): Column =
-    size(ws) - 1 - size(graft.plans.SignatureExprs.distinctNGrams(ws, 2))
-
-  // --- q47: repetition signals (duplicated-bigram fraction per doc) -----------
-  // The Gopher-style repetition filter input: heavily self-repeating docs
-  // are low-quality training data. Zero shuffles — pure projection.
-  def textRepetition(spark: SparkSession, dir: String): DataFrame = {
-    val ws = TextAnalysis.words(col("text"))
-    Tables.documents(spark, dir)
-      .filter(size(ws) >= 2)
-      .select(col("doc_id"),
-        (size(ws) - 1).as("n_bigrams"),
-        dupBigrams(ws).as("n_dup_bigrams"))
-      .withColumn("rep_ratio",
-        col("n_dup_bigrams").cast("double") / col("n_bigrams"))
-      .orderBy("doc_id")
-  }
-
-  // --- q48: composite quality gate (the C4/Gopher filter pass) ----------------
-  val QfMinWords = 30
-  val QfMaxWords = 90
-  val QfMaxRep = 0.06
-  val QfMinStop = 0.01
-
-  def qualityFilter(spark: SparkSession, dir: String): DataFrame = {
-    val ws = TextAnalysis.words(col("text"))
-    val enStops = TextAnalysis.LangProfiles.head._2
-    Tables.documents(spark, dir)
-      .filter(size(ws) >= 2)
-      .select(col("doc_id"), size(ws).as("n_words"),
-        (dupBigrams(ws).cast("double") / (size(ws) - 1)).as("rep_ratio"),
-        (TextAnalysis.stopwordCount(ws, enStops).cast("double") / size(ws)).as("stop_ratio"))
-      .filter(col("n_words").between(QfMinWords, QfMaxWords) &&
-        col("rep_ratio") <= QfMaxRep && col("stop_ratio") >= QfMinStop)
-      .orderBy("doc_id")
-  }
-
-  // --- q49: corpus mixing report (token share per source × language) ----------
-  def sourceMix(spark: SparkSession, dir: String): DataFrame = {
-    val nTok = size(TextAnalysis.words(col("text")))
-    val per = Tables.documents(spark, dir)
-      .groupBy("source", "lang")
-      .agg(count(lit(1)).as("n_docs"), sum(nTok.cast("long")).as("total_tokens"))
-    // the global window runs over the aggregated frame (|sources|x|langs|
-    // rows), not the corpus — same shape as q36's share-of-total
-    per.withColumn("token_share",
-        col("total_tokens").cast("double") /
-          sum("total_tokens").over(org.apache.spark.sql.expressions.Window.partitionBy()))
-      .orderBy("source", "lang")
-  }
-
-  // --- q50: prefix-fingerprint dedup (leading-content duplicate groups) -------
-  // Templated/mirrored documents share openings long before they share
-  // full text; grouping on a fingerprint of the first k words is the
-  // cheap first-pass dedup of crawl pipelines (one hash-agg shuffle, no
-  // content comparison).
-  val PrefixWords = 10
-
-  def dedupPrefix(spark: SparkSession, dir: String): DataFrame = {
-    val ws = TextAnalysis.words(col("text"))
-    Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        TextAnalysis.rollingFingerprint(
-          array_join(slice(ws, 1, PrefixWords), " ")).as("prefix_fp"))
-      .groupBy("prefix_fp")
-      .agg(min("doc_id").as("doc_id"), count(lit(1)).as("dup_count"))
-      .select("doc_id", "prefix_fp", "dup_count")
-      .orderBy("doc_id")
-  }
-
-  // --- q52: token-budget shard packing (training-shard assignment) ------------
-  // Documents pack sequentially into ~ShardTokens shards WITHIN each
-  // source: shard = tokens-before-this-doc div budget. Per-source (not
-  // global) ordering keeps the cumulative window parallel across sources —
-  // a single global cumsum would serialize the corpus through one
-  // partition at 100 TB.
-  val ShardTokens = 500
-
-  def shardPack(spark: SparkSession, dir: String): DataFrame = {
-    val nTok = size(TextAnalysis.words(col("text"))).cast("long")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("source").orderBy("doc_id")
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), nTok.as("n_tokens"))
-      .withColumn("cum", sum("n_tokens").over(w))
-      // integer division on both engines (div / //): no float boundary
-      .withColumn("shard", expr(s"(cum - n_tokens) div $ShardTokens"))
-      .groupBy("source", "shard")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("shard_tokens"))
-      .orderBy("source", "shard")
-  }
-
-  // --- q53: corpus-wide top n-grams by document frequency ---------------------
-  // Boilerplate discovery: the n-grams the near-dup df cap would drop.
-  // Distinct-per-doc n-grams (codegen kernel) so the count IS document
-  // frequency; map-side partial agg absorbs hot n-grams.
-  val TopNgramsK = 20
-
-  def topNgrams(spark: SparkSession, dir: String): DataFrame = {
-    val ws = TextAnalysis.words(col("text"))
-    Tables.documents(spark, dir)
-      .select(explode(graft.plans.SignatureExprs.distinctNGrams(ws, 2)).as("ngram"))
-      .groupBy("ngram")
-      .agg(count(lit(1)).as("df"))
-      .orderBy(col("df").desc, col("ngram"))
-      .limit(TopNgramsK)
-  }
-
-  // --- q54: Unicode normalization layer (NFC + case fold + \p{L} tokens) ------
-  // The corpus is lowercase ASCII, so multilingual reality is injected as
-  // deterministic per-doc prefixes: mixed case, precomposed AND decomposed
-  // accents (Café = e + combining acute), Cyrillic, CJK, digits,
-  // punctuation. The normalize → tokenize pipeline is what q27/q29/q44/
-  // q46-class operators consume on real crawl text; the ASCII body rides
-  // the kernel's byte fast path. Only simple one-to-one case mappings are
-  // in the fixture (final sigma / dotted-I are full-vs-simple folding
-  // differences between engines — documented out of the contract).
-  val UnicodeSnippets: Seq[String] = Seq(
-    "Grüße aus MÜNCHEN im Frühjahr",
-    "École élémentaire: ça va très bien, Café ouvert",
-    "MAÑANA el niño COMERÁ paella",
-    "Привет МИР сказал Он",
-    "数据 管道 处理 文本 123 OK")
-
-  def textUnicode(spark: SparkSession, dir: String): DataFrame = {
-    val snippet = UnicodeSnippets.zipWithIndex.tail.foldLeft(
-      when(pmod(col("doc_id"), lit(5)) === 0, lit(UnicodeSnippets.head))) {
-      case (acc, (s, i)) => acc.when(pmod(col("doc_id"), lit(5)) === i, lit(s))
-    }
-    // tokens staged in their own projection: referenced twice below, and
-    // CollapseProject keeps a non-cheap expression with two references —
-    // the regex runs once per row, not per consumer
-    Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        TextAnalysis.normalized(concat(snippet, lit(" "), col("text"))).as("norm_text"))
-      .withColumn("toks", TextAnalysis.unicodeWords(col("norm_text")))
-      .select(col("doc_id"), col("norm_text"),
-        size(col("toks")).as("n_tokens"),
-        size(array_distinct(col("toks"))).as("n_distinct"))
-      .orderBy("doc_id")
-  }
-
-  // --- q55: PII detection + redaction (crawl-pipeline scrubbing pass) ---------
-  // The corpus carries no contact data, so PII is injected as deterministic
-  // per-doc suffixes; the regexes live in the POSIX-ish Java/RE2
-  // intersection so the DuckDB oracle applies the identical patterns.
-  // Reference analog: the silver layer's regex email validation UDF
-  // (reference: local_spotify_dab/utilities/utils.py `is_valid_email`) —
-  // generalized from validate-a-column to scrub-free-text.
-  // Case classes spelled out ([a-zA-Z]) rather than (?i): both engines
-  // accept the explicit classes, whereas inline flags differ by dialect.
-  val EmailRe = "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}"
-  // Optional +1 country code, optional (area) / area- prefix, then the
-  // 3-4 local number: covers 555-0192, (555) 123-4567, +1-844-555-2210.
-  val PhoneRe = "(\\+1[-. ]?)?(\\([0-9]{3}\\) ?|[0-9]{3}[-. ])?[0-9]{3}[-. ][0-9]{4}"
-  val PiiSnippets: Seq[String] = Seq(
-    " contact me at John.Doe@Example.COM or admin@site.org today",
-    " call (555) 123-4567 or 555-0192 now, fax +1-844-555-2210 later",
-    "")
-
-  def piiRedact(spark: SparkSession, dir: String): DataFrame = {
-    val snippet = when(pmod(col("doc_id"), lit(3)) === 0, lit(PiiSnippets(0)))
-      .when(pmod(col("doc_id"), lit(3)) === 1, lit(PiiSnippets(1)))
-      .otherwise(lit(PiiSnippets(2)))
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), concat(col("text"), snippet).as("utext"))
-      .select(col("doc_id"),
-        regexp_replace(regexp_replace(col("utext"), EmailRe, "<EMAIL>"),
-          PhoneRe, "<PHONE>").as("clean_text"),
-        regexp_count(col("utext"), lit(EmailRe)).as("n_emails"),
-        regexp_count(col("utext"), lit(PhoneRe)).as("n_phones"))
-      .orderBy("doc_id")
-  }
-
-  // --- q56: benchmark decontamination by n-gram collision ---------------------
-  // The GPT-3/Llama decontamination pass: flag training documents sharing
-  // any n-gram with a held-out evaluation set. Eval docs are drawn from
-  // the table itself (a leaked benchmark); eval n-grams are a broadcast
-  // semi-side, so the training corpus is scanned once and never shuffled.
-  // n = 4 because the synthetic docs are 10-99 words — production uses
-  // 13-grams, same plan shape.
-  val DecontamN = 4
-  val DecontamEvalIds: Seq[Long] = Seq(2L, 5L, 8L)
-
-  def decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val (grams, evalGrams) = decontamGramSides(spark, dir)
-    decontamReport(
-      grams.filter(!col("doc_id").isin(DecontamEvalIds: _*))
-        .join(broadcast(evalGrams), Seq("gram")))
-  }
-
-  /** (all doc n-grams, distinct eval-side n-grams) — shared by the exact
-    * broadcast path (q56) and the bloom-prefiltered path (q243).
-    */
-  private def decontamGramSides(spark: SparkSession,
-                                dir: String): (DataFrame, DataFrame) = {
-    val grams = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        explode(graft.plans.SignatureExprs.distinctNGrams(
-          TextAnalysis.words(col("text")), DecontamN)).as("gram"))
-    val evalGrams = grams.filter(col("doc_id").isin(DecontamEvalIds: _*))
-      .select(col("gram"), col("doc_id").as("eval_id")).distinct()
-    (grams, evalGrams)
-  }
-
-  private def decontamReport(hits: DataFrame): DataFrame =
-    hits.groupBy("eval_id")
-      .agg(count_distinct(col("doc_id")).as("n_flagged"),
-        count(lit(1)).as("n_contaminated_ngrams"))
-      .orderBy("eval_id")
-
-  // --- q57: temperature-based language mixing weights -------------------------
-  // The mT5/XLM-R multilingual sampling recipe: sample language l with
-  // probability ∝ (tokens_l)^α so low-resource languages are upweighted.
-  // α = 0.5 keeps every float op exactly rounded (sqrt + one division);
-  // the normalizer is a SEQUENTIAL fold over the per-language values in
-  // lang order — never a partition-order-dependent float SUM — so the
-  // weights are bit-identical on any cluster and in the oracle.
-  def langMixWeights(spark: SparkSession, dir: String): DataFrame = {
-    val nTok = size(TextAnalysis.words(col("text"))).cast("long")
-    val per = Tables.documents(spark, dir)
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"), sum(nTok).as("lang_tokens"))
-    val z = per.agg(
-      aggregate(
-        transform(
-          array_sort(collect_list(struct(col("lang"), col("lang_tokens")))),
-          x => sqrt(x.getField("lang_tokens").cast("double"))),
-        lit(0.0), (a, x) => a + x).as("z"))
-    per.crossJoin(broadcast(z))
-      .select(col("lang"), col("n_docs"), col("lang_tokens"),
-        (sqrt(col("lang_tokens").cast("double")) / col("z")).as("weight"))
-      .orderBy("lang")
-  }
-
-  // --- q86: epoch-mix materialization — weights APPLIED to the corpus ----------
-  // q57 computes the temperature weights; this turns them into an actual
-  // epoch sample: language l's acceptance rate is weight_l · E / tokens_l
-  // (capped at 1 — a filter cannot upsample), and a document is kept iff
-  // its q77-style hash-uniform u falls under its language's rate. No RNG,
-  // no shuffle for the sampling itself: the per-language rate table is a
-  // broadcast of a few rows, the keep decision is a scan-local predicate,
-  // and only the per-language rollup aggregates. The report compares the
-  // achieved token mass per language against the epoch target.
-  val EpochTokens = 10000L
-
-  def epochMix(spark: SparkSession, dir: String): DataFrame = {
-    val rates = langMixWeights(spark, dir).select(col("lang"),
-      least(lit(1.0), col("weight") * lit(EpochTokens.toDouble) /
-        col("lang_tokens").cast("double")).as("accept_rate"))
-    val u = (graft.plans.VectorExprs.polyFingerprint(col("doc_id").cast("string"))
-      % lit(SampleResolution)).cast("double") / lit(SampleResolution.toDouble)
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"),
-        size(TextAnalysis.words(col("text"))).cast("long").as("n_tokens"),
-        u.as("u"))
-      .join(broadcast(rates), "lang")
-      .filter(col("u") < col("accept_rate"))
-      .groupBy("lang", "accept_rate")
-      .agg(count(lit(1)).as("n_kept"), sum(col("n_tokens")).as("kept_tokens"))
-      .orderBy("lang")
-  }
-
-  // --- q58: per-shard document manifest with stream offsets -------------------
-  // The index file a sequence-packing job ships with each training shard:
-  // which documents it holds and at which token offset each begins in the
-  // source's concatenated stream. Same per-source window as q52 (never a
-  // global order); the manifest string is built from a SORTED struct list,
-  // so grouping-order nondeterminism cannot leak into the output.
-  def shardManifest(spark: SparkSession, dir: String): DataFrame = {
-    val nTok = size(TextAnalysis.words(col("text"))).cast("long")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("source").orderBy("doc_id")
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), nTok.as("n_tokens"))
-      .withColumn("off", sum("n_tokens").over(w) - col("n_tokens"))
-      .withColumn("shard", expr(s"off div $ShardTokens"))
-      .groupBy("source", "shard")
-      .agg(count(lit(1)).as("n_docs"),
-        array_join(
-          transform(array_sort(collect_list(struct(col("doc_id"), col("off")))),
-            x => concat(x.getField("doc_id").cast("string"), lit("@"),
-              x.getField("off").cast("string"))),
-          ";").as("manifest"))
-      .orderBy("source", "shard")
-  }
-
-  // --- q101: calendar densification + forward fill --------------------------------
-  // Daily revenue per market segment with EVERY day of the global span
-  // materialized and gap days carrying the segment's last observed value
-  // (Analytics.gapFillForward — the gap-and-island rewrite of
-  // last(ignoreNulls)). The fill runs on the exact DECIMAL column, so the
-  // carried value is bit-identical to the observed one; doubles appear
-  // only in the final projection.
-  def gapFillRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-    val c = Tables.customer(spark, dir)
-    val daily = o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-      .groupBy(col("c_mktsegment").as("segment"),
-        col("o_orderdate").cast("date").as("day"))
-      .agg(sum(dec2(col("o_totalprice"))).as("rev_dec"))
-    Analytics.gapFillForward(daily, "segment", "day", "rev_dec")
-      .select(col("segment"), col("day"),
-        col("rev_dec").cast("double").as("revenue"),
-        col("filled_rev_dec").cast("double").as("filled_revenue"),
-        col("is_gap"))
-      .orderBy("segment", "day")
-  }
-
-  // --- q102: per-supplier load islands (gaps-and-islands) --------------------------
-  // For each supplier, the maximal day spans where the count of
-  // concurrently OPEN order lines (interval = the order↔ship milestone
-  // span; this synthetic data draws the two dates independently, so the
-  // span is least..greatest) exceeds the supplier's own average
-  // concurrency. Intervals.thresholdIslands: boundary ±1 rows, per-key
-  // prefix-sum concurrency, integer threshold compare, adjacent
-  // qualifying segments merged — all windows hash-partitioned by
-  // supplier.
-  def supplierLoadIslands(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val o = Tables.orders(spark, dir)
-    val epoch = lit("1970-01-01").cast("date")
-    val od = datediff(col("o_orderdate").cast("date"), epoch)
-    val sd = datediff(col("l_shipdate").cast("date"), epoch)
-    val iv = li.join(o, li("l_orderkey") === o("o_orderkey"))
-      .select(col("l_suppkey").as("suppkey"),
-        least(od, sd).cast("long").as("st"),
-        greatest(od, sd).cast("long").as("en"))
-    Intervals.thresholdIslands(iv, "suppkey", "st", "en")
-      .select(col("suppkey"), col("island_seq"),
-        date_add(epoch, col("island_start").cast("int")).as("start_day"),
-        date_add(epoch, col("island_end").cast("int")).as("end_day"),
-        col("n_days"), col("peak_open"))
-      .orderBy("suppkey", "island_seq")
-  }
-
-  // --- q103: month-over-month revenue growth ---------------------------------------
-  // Period-over-period comparison on the aggregated monthly frame: exact
-  // decimal monthly sums per nation, a per-nation lag window (the frame is
-  // O(nations × months) — report-sized), absolute change in exact
-  // decimals, and pct change as ONE double division of two decimal-exact
-  // values. The lag is gated on CALENDAR adjacency: if a nation has no
-  // orders in the previous calendar month, prev/change/pct are null
-  // rather than silently comparing against a multi-month-older value.
-  def momGrowth(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-    val c = Tables.customer(spark, dir)
-    val n = Tables.nation(spark, dir)
-    val monthKey = (year(col("o_orderdate")) * lit(100) + month(col("o_orderdate")))
-      .cast("long")
-    val m = o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-      .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-      .groupBy(col("n_name").as("nation"), monthKey.as("month_key"))
-      .agg(sum(dec2(col("o_totalprice"))).as("rev"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("nation").orderBy("month_key")
-    // yyyymm arithmetic: January's calendar predecessor is December of the
-    // prior year (yyyymm - 89); any other month's is yyyymm - 1.
-    val adjacentPrevKey = when(col("month_key") % 100 === 1,
-      col("month_key") - 89).otherwise(col("month_key") - 1)
-    m.withColumn("__lag_key", lag(col("month_key"), 1).over(w))
-      .withColumn("__lag_rev", lag(col("rev"), 1).over(w))
-      .withColumn("prev",
-        when(col("__lag_key") === adjacentPrevKey, col("__lag_rev")))
-      .select(col("nation"), col("month_key"),
-        col("rev").cast("double").as("revenue"),
-        col("prev").cast("double").as("prev_revenue"),
-        (col("rev") - col("prev")).cast("double").as("change"),
-        when(col("prev").isNull, lit(null).cast("double"))
-          .otherwise((col("rev") - col("prev")).cast("double") /
-            col("prev").cast("double")).as("pct_change"))
-      .orderBy("nation", "month_key")
-  }
-
-  // --- q104: dormant high-value customers (TPC-H Q22 shape) ------------------------
-  // Above-average-balance customers with NO orders since the cutoff: a
-  // broadcast scalar threshold (exact decimal sum / count, one double
-  // division), then a LEFT ANTI join against the distinct custkeys of the
-  // recent order window — the NOT EXISTS plan shape. The anti join's
-  // build side is the distinct-key aggregate, not the raw fact table.
-  val DormantCutoff = "2000-06-01 00:00:00"
-
-  def dormantCustomers(spark: SparkSession, dir: String): DataFrame = {
-    val c = Tables.customer(spark, dir)
-    val o = Tables.orders(spark, dir)
-    val thr = c.filter(col("c_acctbal") > 0.0)
-      .agg((sum(dec2(col("c_acctbal"))).cast("double") / count(lit(1))).as("__t"))
-    val recent = o.filter(col("o_orderdate") >= ntzTs(DormantCutoff))
-      .select(col("o_custkey")).distinct()
-    c.crossJoin(broadcast(thr))
-      .filter(col("c_acctbal") > col("__t"))
-      .join(recent, c("c_custkey") === recent("o_custkey"), "left_anti")
-      .groupBy(col("c_mktsegment").as("segment"))
-      .agg(count(lit(1)).as("n_customers"),
-        sum(dec2(col("c_acctbal"))).cast("double").as("total_balance"))
-      .orderBy("segment")
-  }
-
-  // --- q105: fuzzy product-name linkage (blocking + edit distance) -----------------
-  // Duplicate-listing detection over the part catalog: dictionary of
-  // distinct names (64 strings for 20k parts at sf0.1), blocked on the
-  // LAST name token (edits in this class live in the qualifier token, so
-  // the block preserves recall), verified by levenshtein ≤ 2 — the
-  // quadratic work never touches the entity table.
-  val FuzzyMaxDist = 2
-
-  def fuzzyPartNames(spark: SparkSession, dir: String): DataFrame = {
-    val dict = Linkage.nameDictionary(Tables.part(spark, dir), "p_name")
-    Linkage.fuzzyPairs(dict, nm => element_at(split(nm, " "), -1), FuzzyMaxDist)
-      .select(col("name_a"), col("name_b"), col("edit_dist"),
-        col("n_rows_a").as("n_parts_a"), col("n_rows_b").as("n_parts_b"))
-      .orderBy("name_a", "name_b")
-  }
-
-  // --- q106: per-user modal event type ---------------------------------------------
-  // Mode per group with a deterministic tiebreak (highest count, then
-  // lexicographic min): one hash-agg to (user, type) counts, then a
-  // row_number window over the tiny per-user frame.
-  def topEventType(spark: SparkSession, dir: String): DataFrame = {
-    val counts = Tables.events(spark, dir)
-      .groupBy(col("user_id"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("cnt").desc, col("event_type"))
-    counts.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col("user_id"), col("event_type").as("top_event_type"),
-        col("cnt").as("n_events"))
-      .orderBy("user_id")
-  }
-
-  // --- q107: integer-quantized Pearson correlation ---------------------------------
-  // Correlation of quantity vs (kilodollar-quantized) price per return
-  // flag from EXACT integer moments: x, y, x², y², xy all sum in longs
-  // (ranges sized so every sum stays far below 2^63 at bench scales; at
-  // larger corpora quantize coarser or lift the sums to DECIMAL(38,0)),
-  // and doubles appear only in the final fixed-shape corr expression —
-  // long→double conversion is IEEE round-to-nearest in both engines, so
-  // the result is bit-stable. The built-in corr() is NOT used: its
-  // streaming-moment implementation is partitioning-order dependent.
-  def metricCorrelation(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val q = li.select(col("l_returnflag").as("returnflag"),
-      dec2(col("l_quantity")).cast("long").as("x"),
-      expr("cast(cast(l_extendedprice as decimal(18,2)) * 100 as bigint) div 100000")
-        .as("y"))
-    val s = q.groupBy("returnflag").agg(
-      count(lit(1)).as("n"),
-      sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-      sum(col("x") * col("x")).as("sxx"),
-      sum(col("y") * col("y")).as("syy"),
-      sum(col("x") * col("y")).as("sxy"))
-    val num = (col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
-    val denx = (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
-    val deny = (col("n") * col("syy") - col("sy") * col("sy")).cast("double")
-    s.select(col("returnflag"), col("n").as("n_rows"),
-        (num / (sqrt(denx) * sqrt(deny))).as("corr_qty_price"))
-      .orderBy("returnflag")
-  }
-
-  // --- q108: per-source token Gini concentration -----------------------------------
-  // Corpus-health inequality metric: is a source's token mass concentrated
-  // in a few giant documents? Rank docs within source by (tokens, doc_id)
-  // — a per-source window, parallel across sources; for a single enormous
-  // group the rank decomposes over PrefixSum value-buckets exactly as
-  // q72's global rank — then Gini from exact integer sums
-  // (2·Σi·xᵢ − (n+1)·Σx) / (n·Σx), one double division at the end.
-  def tokenGini(spark: SparkSession, dir: String): DataFrame = {
-    // Null text coalesces to 0 tokens (the doc still counts toward
-    // n_docs), and a source whose token mass is zero gets a null gini
-    // instead of a 0/0 NaN — both guards mirrored in the oracle.
-    val t = Tables.documents(spark, dir)
-      .select(col("source"), col("doc_id"),
-        coalesce(size(TextAnalysis.words(col("text"))).cast("long"), lit(0L))
-          .as("tok"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("source").orderBy(col("tok"), col("doc_id"))
-    val r = t.withColumn("__i", row_number().over(w).cast("long"))
-    r.groupBy("source").agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("tok")).as("total_tokens"),
-        sum(col("__i") * col("tok")).as("__si"))
-      .select(col("source"), col("n_docs"), col("total_tokens"),
-        when(col("total_tokens") > 0L,
-          (lit(2L) * col("__si") - (col("n_docs") + lit(1L)) * col("total_tokens"))
-            .cast("double") /
-            (col("n_docs") * col("total_tokens")).cast("double")).as("gini"))
-      .orderBy("source")
-  }
-
-  // --- q109: inter-arrival gap histogram -------------------------------------------
-  // Distribution of per-user inter-event gaps in fixed log-ish buckets:
-  // one per-user lag window in exact epoch micros, a CASE bucket, one
-  // hash-agg; the share division is the only double op (two exact longs).
-  def interarrivalHist(spark: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(unix_micros(col("ts")), col("event_id"))
-    val gap = unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(w)
-    val bucket = when(col("__gap") < 1000000L, "0_lt_1s")
-      .when(col("__gap") < 60000000L, "1_1s_1m")
-      .when(col("__gap") < 3600000000L, "2_1m_1h")
-      .when(col("__gap") < 86400000000L, "3_1h_1d")
-      .otherwise("4_ge_1d")
-    val counts = Tables.events(spark, dir)
-      .withColumn("__gap", gap)
-      .filter(col("__gap").isNotNull)
-      .select(bucket.as("gap_bucket"))
-      .groupBy("gap_bucket")
-      .agg(count(lit(1)).as("n_gaps"))
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy()  // ≤5 rows: the histogram frame, not the events
-    counts
-      .withColumn("share",
-        col("n_gaps").cast("double") / sum(col("n_gaps")).over(wAll).cast("double"))
-      .orderBy("gap_bucket")
-  }
-
-  // --- q110: referential-integrity audit (orphan foreign keys) ---------------------
-  // DQ over the star's join graph: for each FK relationship, total rows
-  // and rows whose key misses the dimension — ONE scan per fact side (a
-  // left join against the distinct-key aggregate, nulls counted), never a
-  // second anti-join pass. Zero orphans is the expected healthy answer;
-  // the query's value is that it PROVES it, per edge.
-  def fkAudit(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val o = Tables.orders(spark, dir)
-    def audit(name: String, fact: DataFrame, fk: String,
-              dim: DataFrame, pk: String): DataFrame = {
-      val keys = dim.select(col(pk)).distinct()
-      fact.select(col(fk)).join(keys, fact(fk) === keys(pk), "left")
-        .agg(count(lit(1)).as("n_rows"),
-          sum(when(col(pk).isNull, 1L).otherwise(0L)).as("n_orphans"))
-        .select(lit(name).as("relationship"), col("n_rows"), col("n_orphans"))
-    }
-    audit("lineitem_orders", li, "l_orderkey", o, "o_orderkey")
-      .unionByName(audit("lineitem_part", li, "l_partkey",
-        Tables.part(spark, dir), "p_partkey"))
-      .unionByName(audit("lineitem_supplier", li, "l_suppkey",
-        Tables.supplier(spark, dir), "s_suppkey"))
-      .unionByName(audit("orders_customer", o, "o_custkey",
-        Tables.customer(spark, dir), "c_custkey"))
-      .orderBy("relationship")
-  }
-
-  // --- q111: per-source document cap -----------------------------------------------
-  // The training-data per-domain cap: keep at most `SourceCap` documents
-  // per source, best-quality first (deterministic tiebreak on doc_id) —
-  // the standard guard against one crawl domain dominating the mix. The
-  // per-source window distributes across sources; a single enormous
-  // source caps via per-partition pre-truncation (each map partition can
-  // contribute at most `SourceCap` survivors, so a mapPartitions
-  // pre-filter bounds the windowed rows at partitions×cap) — noted, not
-  // needed at report scale.
-  val SourceCap = 15
-
-  def sourceDocCap(spark: SparkSession, dir: String): DataFrame = {
-    val scored = Tables.documents(spark, dir)
-      .select(col("source"), col("doc_id"), docQuality.as("quality_score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("source").orderBy(col("quality_score").desc, col("doc_id"))
-    scored.withColumn("rank_in_source", row_number().over(w).cast("long"))
-      .filter(col("rank_in_source") <= SourceCap)
-      .orderBy("source", "rank_in_source")
-  }
-
-  // --- q112: linear multi-touch attribution ----------------------------------------
-  // For each purchase, every click by the same user EARLIER in the
-  // (ts, event_id) order shares the conversion credit equally (1/n).
-  // One per-user window computes the strictly-preceding click count via
-  // a ROWS frame ending at -1 — no self-join, no per-pair blowup.
-  def multiTouchAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-      .filter(col("event_type").isin("click", "purchase"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(unix_micros(col("ts")), col("event_id"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    ev.withColumn("n_touches",
-        coalesce(sum(when(col("event_type") === "click", 1L).otherwise(0L))
-          .over(w), lit(0L)))
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_event_id"),
-        col("ts").as("purchase_ts"), col("n_touches"),
-        when(col("n_touches") > 0L,
-          lit(1.0) / col("n_touches").cast("double")).as("credit_per_touch"))
-      .orderBy("user_id", "purchase_event_id")
-  }
-
-  // --- q113: global decile assignment without a global sort ------------------------
-  // NTILE over the whole corpus (token-count deciles) from the q72
-  // PrefixSum rank: bucket by tok div 8 (monotone in the (tok, doc_id)
-  // order), two-level cumsum for the global rank, then the exact-integer
-  // ntile formula ((rank-1)·K) div n — all integer ops, bit-deterministic,
-  // and the only unpartitioned work is the O(buckets) prefix task.
-  val NtileK = 10
-
-  def tokenDeciles(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables.documents(spark, dir).select(col("doc_id"),
-      coalesce(size(TextAnalysis.words(col("text"))).cast("long"), lit(0L))
-        .as("tok"))
-    val bucketed = t.withColumn("bucket", (col("tok") / lit(8L)).cast("long"))
-    val ranked = PrefixSum.runningSum(bucketed, "bucket",
-      Seq(col("tok"), col("doc_id")), lit(1L), "rnk")
-    val n = t.agg(count(lit(1)).as("__n"))
-    ranked.crossJoin(broadcast(n))
-      // SQL `div` = exact integer division on longs (Column./ would go
-      // through doubles) — identical to DuckDB's `//` by construction
-      .withColumn("decile",
-        least(expr(s"((rnk - 1) * $NtileK) div __n"),
-          lit((NtileK - 1).toLong)).cast("long"))
-      .groupBy("decile")
-      .agg(count(lit(1)).as("n_docs"),
-        min(col("tok")).as("lo_tokens"), max(col("tok")).as("hi_tokens"),
-        sum(col("tok")).as("total_tokens"))
-      .orderBy("decile")
-  }
-
-  // --- q114: lag-k autocorrelation of daily revenue --------------------------------
-  // Time-series self-similarity at 1-day and 7-day lags, on the
-  // aggregated daily frame: kilodollar-quantized integer values (the
-  // q93/q107 quantize-then-moment recipe), pairs (x_t, x_{t−k}) via an
-  // equi-join of the O(days) frame against itself shifted k days
-  // (calendar shift, not row lag — a missing day contributes no pair),
-  // exact integer moments, one fixed-shape corr expression in doubles.
-  val AutocorrLags: Seq[Int] = Seq(1, 7)
-  val AutocorrUnit = 1000.0
-
-  def revenueAutocorr(spark: SparkSession, dir: String): DataFrame = {
-    val epoch = lit("1970-01-01").cast("date")
-    val daily = Tables.lineitem(spark, dir)
-      .groupBy(col("l_shipdate").cast("date").as("d"))
-      .agg(sum(discounted(col("l_extendedprice"), col("l_discount"))).as("rev_dec"))
-      .select(datediff(col("d"), epoch).cast("long").as("day_num"),
-        floor(col("rev_dec").cast("double") / lit(AutocorrUnit)).cast("long")
-          .as("v"))
-    val lagged = AutocorrLags.map { k =>
-      val a = daily.select(col("day_num"), col("v").as("x"))
-      val b = daily.select((col("day_num") + lit(k.toLong)).as("day_num"),
-        col("v").as("y"))
-      val s = a.join(b, "day_num").agg(
-        count(lit(1)).as("n"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"),
-        sum(col("x") * col("y")).as("sxy"))
-      val num = (col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
-      val denx = (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
-      val deny = (col("n") * col("syy") - col("sy") * col("sy")).cast("double")
-      s.select(lit(k.toLong).as("lag_days"), col("n").as("n_pairs"),
-        (num / (sqrt(denx) * sqrt(deny))).as("autocorr"))
-    }
-    lagged.reduce(_ unionByName _).orderBy("lag_days")
-  }
-
-  // --- q115: SCD2 validity audit ---------------------------------------------------
-  // DQ over the q03 SCD2 build: per key, version count, overlap count
-  // (previous effective_to AFTER this effective_from), gap count
-  // (previous effective_to BEFORE this effective_from — half-open
-  // intervals must chain exactly), and current-row count. The build is
-  // correct iff overlaps = gaps = 0 and exactly one current row per key —
-  // this PROVES it per key instead of assuming it.
-  def scd2Audit(spark: SparkSession, dir: String): DataFrame = {
-    val scd = scd2Build(spark, dir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("effective_from"), col("event_id"))
-    scd.withColumn("__prev_to", lag(col("effective_to"), 1).over(w))
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_versions"),
-        sum(when(col("__prev_to") > col("effective_from"), 1L).otherwise(0L))
-          .as("n_overlaps"),
-        sum(when(col("__prev_to") < col("effective_from"), 1L).otherwise(0L))
-          .as("n_gaps"),
-        sum(when(col("is_current"), 1L).otherwise(0L)).as("n_current"))
-      .orderBy("user_id")
-  }
-
-  // --- q116: event-transition probability matrix -----------------------------------
-  // The Markov-chain estimate over q75's transition counts: row-normalize
-  // by the from-state marginal (a keyed window over the tiny
-  // types×types frame) — exact long counts, one double division.
-  def transitionProbs(spark: SparkSession, dir: String): DataFrame = {
-    val counts = eventTransitions(spark, dir)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("from_type")
-    counts
-      .withColumn("n_from", sum(col("n_transitions")).over(w))
-      .select(col("from_type"), col("to_type"), col("n_transitions"),
-        (col("n_transitions").cast("double") / col("n_from").cast("double"))
-          .as("p"))
-      .orderBy("from_type", "to_type")
-  }
-
-  // --- q117: join-key skew diagnostic ----------------------------------------------
-  // The frequency-of-frequency histogram of a join key (l_partkey) — the
-  // report that decides salting/AQE-skew settings BEFORE a 100 TB join:
-  // per-key counts (one hash-agg), then the distribution of those counts
-  // (a second, tiny hash-agg), with each class's share of total rows.
-  def joinKeySkew(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val perKey = li.groupBy(col("l_partkey")).agg(count(lit(1)).as("key_rows"))
-    val total = li.agg(count(lit(1)).as("__total"))
-    perKey.groupBy(col("key_rows")).agg(count(lit(1)).as("n_keys"))
-      .withColumn("n_rows", col("key_rows") * col("n_keys"))
-      .crossJoin(broadcast(total))
-      .withColumn("row_share",
-        col("n_rows").cast("double") / col("__total").cast("double"))
-      .drop("__total")
-      .orderBy(col("key_rows").desc)
-  }
-
-  // --- q118: per-user behavioral diversity (Gini–Simpson) --------------------------
-  // Diversity of each user's event-type mix as 1 − Σ(c/n)² — chosen over
-  // Shannon entropy deliberately: the Simpson form needs only exact
-  // integer sums (Σc² in longs) and ONE double division, so it is
-  // bit-stable across engines and partitionings, where a float Σ p·log p
-  // would depend on libm rounding and fold order.
-  def userDiversity(spark: SparkSession, dir: String): DataFrame = {
-    Tables.events(spark, dir)
-      .groupBy(col("user_id"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy(col("user_id"))
-      .agg(sum(col("cnt")).as("n_events"),
-        count(lit(1)).as("n_types"),
-        sum(col("cnt") * col("cnt")).as("__ss"))
-      .select(col("user_id"), col("n_events"), col("n_types"),
-        (lit(1.0) - col("__ss").cast("double") /
-          (col("n_events") * col("n_events")).cast("double"))
-          .as("simpson_diversity"))
-      .orderBy("user_id")
-  }
-
-  // --- q119: dedup cluster-size histogram ------------------------------------------
-  // The dup-structure report every dedup pipeline publishes: how many
-  // clusters of each size, how many documents they hold, and their share
-  // of the corpus. Projects the memoized q34/q65/q80 decision table —
-  // zero new heavy work — then two tiny aggregates.
-  def clusterSizeHistogram(spark: SparkSession, dir: String): DataFrame = {
-    val clusters = dedupDecisionTable(spark, dir)
-      .select(col("cluster_id"), col("cluster_size")).distinct()
-    val w = org.apache.spark.sql.expressions.Window.partitionBy()
-    clusters.groupBy(col("cluster_size"))
-      .agg(count(lit(1)).as("n_clusters"))
-      .withColumn("n_docs", col("cluster_size") * col("n_clusters"))
-      .withColumn("doc_share",
-        col("n_docs").cast("double") /
-          sum(col("n_docs")).over(w).cast("double"))
-      .orderBy("cluster_size")
-  }
-
-  // --- q120: customer-segment activity conformance ---------------------------------
-  // Cross-domain join of the behavioral stream onto the customer
-  // dimension: per market segment, how many customers exist, how many
-  // are active in the events stream, and the engagement depth. The
-  // events side collapses to a per-user aggregate FIRST and broadcasts —
-  // the dimension is never shuffled, the fact is read once.
-  def segmentActivity(spark: SparkSession, dir: String): DataFrame = {
-    val perUser = Tables.events(spark, dir)
-      .groupBy(col("user_id")).agg(count(lit(1)).as("n_ev"))
-    val c = Tables.customer(spark, dir)
-    c.join(broadcast(perUser), c("c_custkey") === perUser("user_id"), "left")
-      .groupBy(col("c_mktsegment").as("segment"))
-      .agg(count(lit(1)).as("n_customers"),
-        sum(when(col("n_ev").isNotNull, 1L).otherwise(0L)).as("n_active"),
-        sum(coalesce(col("n_ev"), lit(0L))).as("n_events"))
-      .withColumn("activity_rate",
-        col("n_active").cast("double") / col("n_customers").cast("double"))
-      .withColumn("events_per_active",
-        when(col("n_active") > 0L,
-          col("n_events").cast("double") / col("n_active").cast("double")))
-      .orderBy("segment")
-  }
-
-  // --- q121: HyperLogLog distinct sketch -------------------------------------------
-  // The KMV estimator's classic sibling, with a different merge algebra:
-  // KMV merges by re-selecting k minima, HLL registers merge by per-index
-  // MAX — idempotent (re-delivered batches are absorbed), O(m) state.
-  // Portable-exact: register indices/rhos are pure integer ops on the
-  // shared affine hash, and the Σ2^−rho sum is a sum of exact powers of
-  // two (order-independent), so DuckDB reproduces the ESTIMATE bit-for-
-  // bit — an oracle-verified approximate sketch. Raw-regime estimator by
-  // design (n ≳ 2.5m); below that regime KMV (q38) is the right tool.
-  val HllM = 256
-
-  def hllDistinct(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val regs = graft.functions.Sketches.hllRegisters(li, col("l_orderkey"), HllM)
-    val est = graft.functions.Sketches.hllEstimate(regs, Nil, HllM, "est_distinct")
-    val exact = li.agg(countDistinct(col("l_orderkey")).as("exact_distinct"))
-    est.crossJoin(broadcast(exact))
-      .select(lit(HllM.toLong).as("m"), col("exact_distinct"),
-        col("est_distinct"),
-        (col("est_distinct") / col("exact_distinct").cast("double"))
-          .as("est_ratio"))
-  }
-
-  // --- q122: per-group HLL distinct ------------------------------------------------
-  // q90's grouped-KMV counterpart on the HLL algebra: per-(group,
-  // register) MAX, a groups×m dense grid, one estimate row per group.
-  val HllGroupM = 64
-
-  def groupedHllDistinct(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val regs = graft.functions.Sketches.groupedHllRegisters(ev, "event_type", col("event_id"),
-      HllGroupM)
-    val est = graft.functions.Sketches.hllEstimate(regs, Seq("event_type"), HllGroupM,
-      "est_distinct")
-    val exact = ev.groupBy(col("event_type"))
-      .agg(countDistinct(col("event_id")).as("exact_distinct"))
-    est.join(exact, "event_type")
-      .select(col("event_type"), lit(HllGroupM.toLong).as("m"),
-        col("exact_distinct"), col("est_distinct"),
-        (col("est_distinct") / col("exact_distinct").cast("double"))
-          .as("est_ratio"))
-      .orderBy("event_type")
-  }
-
-  // --- q123: per-source shingle novelty --------------------------------------------
-  // How much of each source's n-gram vocabulary is UNIQUE to it — the
-  // corpus-composition complement of q87's pairwise leakage: novelty ~1
-  // means the source adds genuinely new text, ~0 means it restates the
-  // rest of the corpus. The per-shingle source count rides a window
-  // partitioned by the shingle over the deduped (source, shingle) frame
-  // — ONE pass over the corpus (the explode+dedup is the heavy stage; a
-  // join-back formulation re-ran it per side, measured 2 scans with no
-  // exchange reuse), then narrow shuffles on already-deduped rows. Never
-  // a source×source comparison.
-  def sourceNovelty(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.documents(spark, dir)
-      .select(col("source"),
-        explode(graft.plans.SignatureExprs.distinctNGrams(
-          TextAnalysis.words(col("text")), JaccardN)).as("s"))
-      .distinct()
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("s")
-    pairs.withColumn("ns", count(lit(1)).over(w))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_shingles"),
-        sum(when(col("ns") === 1L, 1L).otherwise(0L)).as("n_unique"))
-      .withColumn("novelty_rate",
-        col("n_unique").cast("double") / col("n_shingles").cast("double"))
-      .orderBy("source")
-  }
-
-  // --- q124: embedding dimension health --------------------------------------------
-  // Per-dimension moment audit of the embedding corpus — the QA report
-  // that catches collapsed/dead/shifted dimensions before a similarity
-  // index is built on them. Values quantize by 2^20 (multiply by a power
-  // of two is EXACT on doubles, floor is exact → deterministic longs),
-  // moments sum exactly, and the fixed-shape mean/variance doubles are
-  // engine-identical (the q107 integer-moment recipe on floats).
-  val DimQuantScale = 1048576L // 2^20
-
-  def embeddingDimHealth(spark: SparkSession, dir: String): DataFrame = {
-    val scale2 = DimQuantScale.toDouble * DimQuantScale.toDouble
-    val x = Tables.embeddings(spark, dir)
-      .select(posexplode(col("embedding")).as(Seq("dim", "xf")))
-      .select(col("dim").cast("long").as("dim"),
-        col("xf").cast("double").as("v"))
-      .withColumn("qv", floor(col("v") * lit(DimQuantScale.toDouble)).cast("long"))
-    x.groupBy(col("dim"))
-      .agg(count(lit(1)).as("n_vecs"),
-        sum(col("qv")).as("__sq"),
-        sum(col("qv") * col("qv")).as("__sqq"),
-        min(col("v")).as("min_val"), max(col("v")).as("max_val"))
-      .select(col("dim"), col("n_vecs"),
-        (col("__sq").cast("double") /
-          (col("n_vecs") * lit(DimQuantScale)).cast("double")).as("mean_val"),
-        ((col("n_vecs") * col("__sqq") - col("__sq") * col("__sq")).cast("double")
-          / (col("n_vecs").cast("double") * (col("n_vecs") - lit(1L)).cast("double")
-             * lit(scale2))).as("var_val"),
-        col("min_val"), col("max_val"))
-      .orderBy("dim")
-  }
-
-  // --- q125: exact duplicated-span detection ---------------------------------------
-  // Exact duplicated token RUNS across documents (the Lee et al. 2021
-  // "Deduplicating Training Data" ExactSubstr family) — the complement of
-  // the MinHash/SimHash whole-doc similarity queries: a 50-token
-  // boilerplate shared by two otherwise-unrelated pages is invisible to
-  // doc-level Jaccard yet memorized verbatim. Shuffle-native shape (the
-  // single-node classic is a suffix array; that doesn't distribute):
-  // every K-token gram position keys ONE shuffle on the gram text; the
-  // per-gram distinct-doc count rides dense_rank + max windows on that
-  // one sorted partition (no join-back re-scan of the corpus); positions
-  // whose gram occurs in ≥2 docs then collapse into maximal spans with
-  // per-doc gaps-and-islands windows (running max of covered end,
-  // adjacent-or-overlapping coverage merges). Output is the span table —
-  // O(duplicated regions), not O(corpus). At 100 TB the gram shuffle key
-  // becomes xxhash64(gram) (8 bytes vs ~50 text; a 2^-64 collision merges
-  // two gram classes — fine for dedup, not for this oracle-exact form),
-  // and the per-doc island windows stay bounded by doc length.
-  val DupSpanK = 8
-
-  def dupSpans(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val k = DupSpanK
-    val grams = Tables.documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      // greatest(...,1) keeps `sequence` ascending on docs shorter than K
-      // (sequence(1, n) with n <= 0 DESCENDS in Spark); the filter then
-      // drops the out-of-range position those docs produce.
-      .select(col("doc_id"), explode(expr(
-        s"""filter(
-              transform(sequence(1, greatest(size(w) - ${k - 1}, 1)),
-                i -> struct(CAST(i AS BIGINT) AS i,
-                            array_join(slice(w, i, $k), ' ') AS gram)),
-              g -> g.i <= size(w) - ${k - 1})""")).as("g"))
-      .select(col("doc_id"), col("g.i").as("i"), col("g.gram").as("gram"))
-    // Distinct docs per gram WITHOUT a join-back: dense_rank over
-    // (gram, doc_id) then max over the gram partition — both windows share
-    // one exchange + sort on the gram key.
-    val wGo = Window.partitionBy("gram").orderBy("doc_id")
-    val wG  = Window.partitionBy("gram")
-    val hits = grams
-      .withColumn("__dr", dense_rank().over(wGo))
-      .withColumn("__nd", max(col("__dr")).over(wG))
-      .filter(col("__nd") >= 2)
-      .select(col("doc_id"), col("i"), (col("i") + lit(k - 1).cast("long")).as("e"))
-    // Gaps-and-islands on token coverage: a position starts a new span
-    // when it begins past the running max covered end + 1 (adjacent
-    // coverage merges — the union of covered tokens is contiguous).
-    val wDo = Window.partitionBy("doc_id").orderBy("i")
-    val prevEnd = max(col("e"))
-      .over(wDo.rowsBetween(Window.unboundedPreceding, -1))
-    hits
-      .withColumn("__new",
-        when(col("i") > coalesce(prevEnd, lit(-1L)) + 1, 1L).otherwise(0L))
-      .withColumn("__island", sum(col("__new")).over(wDo))
-      .groupBy(col("doc_id"), col("__island"))
-      .agg(min(col("i")).as("span_start"), max(col("e")).as("span_end"))
-      .select(col("doc_id"), col("span_start"), col("span_end"),
-        (col("span_end") - col("span_start") + 1).as("span_tokens"))
-      .orderBy("doc_id", "span_start")
-  }
-
-  // --- q126: tokenizer-faithful BPE token counts -----------------------------------
-  // q29's subword count is an estimate; shard packing (q52) and
-  // token-budget selection (q83) budget on it, and estimate drift
-  // compounds at corpus scale. This runs the REAL greedy byte-pair-merge
-  // procedure (Sennrich et al. 2016 — the algorithm behind GPT-2/LLaMA
-  // vocab files) per word in a codegen'd kernel (plans/BpeExprs.scala)
-  // against a fixed plan-embedded merge table, so the budget is exact for
-  // that vocabulary. The oracle twin executes the same merges via a
-  // recursive CTE whose per-pass rewrite is a delimiter-string replace —
-  // '|p1||p2|' → '|p1p2|' reproduces leftmost non-overlapping merge-all
-  // exactly. Scale shape: pure map-side per-row work, one scan, no
-  // shuffle before the per-doc projection; the Zipf word distribution
-  // makes the kernel's word memo absorb almost every call.
-  val BpeMerges: Seq[(String, String)] = Seq(
-    ("e", "r"), ("t", "h"), ("th", "e"), ("i", "n"), ("a", "n"), ("s", "t"),
-    ("o", "r"), ("or", "d"), ("f", "a"), ("fa", "st"), ("r", "o"), ("ro", "w"),
-    ("q", "u"), ("qu", "e"), ("que", "r"), ("quer", "y"), ("s", "c"),
-    ("sc", "an"), ("j", "o"), ("jo", "in"), ("t", "a"), ("ta", "b"),
-    ("l", "e"), ("tab", "le"), ("g", "r"), ("gr", "o"), ("u", "p"),
-    ("gro", "up"), ("h", "a"), ("s", "h"), ("ha", "sh"), ("d", "a"),
-    ("da", "ta"), ("k", "e"), ("ke", "y"), ("m", "e"), ("v", "a"),
-    ("va", "l"), ("u", "e"), ("val", "ue"))
-
-  def bpeTokenCounts(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_words"),
-        graft.plans.BpeExprs.bpeTokenCount(split(col("text"), " "), BpeMerges)
-          .as("bpe_tokens"))
-      .orderBy("doc_id")
-
-  // --- q282: BPE ENCODE with the TRAINED merges (q225 → corpus, the tokenize step) -----
-  // q126 counts tokens under a FIXED merge list (the codegen kernel);
-  // q225 TRAINS merges on the corpus but never applies them. This is
-  // the missing composition — the tokenizer loop closed: train on the
-  // corpus, encode the corpus, report per-doc token counts under the
-  // LEARNED vocabulary. The plan exploits BPE's defining factorization:
-  // encoding is a pure function of the WORD, so the merge replaces run
-  // over the DISTINCT-WORD table (vocabulary-sized — the same trick
-  // training uses), and the corpus is touched only by one explode + a
-  // broadcast join of the encoded vocabulary. The merge list itself is
-  // O(rounds) driver state (the q225 bounded-argmax contract). Replace
-  // semantics are training's exactly: left-to-right non-overlapping
-  // `replace` on the sentinel-padded symbol string, identical in both
-  // engines.
-  def bpeEncodeTrained(spark: SparkSession, dir: String): DataFrame =
-    bpeEncodeFrom(spark, Tables.documents(spark, dir), BpeMergeRounds)
-
-  /** Train-then-encode over any (doc_id, text) frame — factored so the
-    * spec can drive it with a hand-computable corpus.
-    */
-  private[graft] def bpeEncodeFrom(spark: SparkSession, docs: DataFrame,
-                                   rounds: Int): DataFrame = {
-    val merges = bpeMergesFrom(spark, docs, col("text"), rounds)
-      .collect().map(r => (r.getString(1), r.getString(2))) // O(rounds)
-    val vocab = docs.filter(col("text").isNotNull)
-      .select(explode(split(col("text"), " ")).as("w"))
-      .filter(length(col("w")) > 0)
-      .distinct()
-      .withColumn("s", concat(lit(" "),
-        expr("array_join(transform(sequence(1, length(w)), i -> substring(w, i, 1)), ' ')"),
-        lit(" ")))
-    val encoded = merges.foldLeft(vocab)((v, m) =>
-        v.withColumn("s", org.apache.spark.sql.functions.replace(col("s"),
-          lit(s" ${m._1} ${m._2} "), lit(s" ${m._1}${m._2} "))))
-      .select(col("w"),
-        size(split(trim(col("s")), " ")).cast("long").as("toks"))
-    docs.filter(col("text").isNotNull)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      .filter(length(col("w")) > 0)
-      .join(broadcast(encoded), "w")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_words"), sum("toks").as("bpe_tokens"))
-      .orderBy("doc_id")
-  }
-
-  // --- q283: exact-substring EXCISION (q273 → the cleaned corpus) -----------------------
-  // The consuming half of Lee et al.'s ExactSubstr dedup: q273 FINDS the
-  // repeated spans; this CUTS them — each document's kept text is the
-  // concatenation of the segments BETWEEN its merged spans (segments
-  // derived relationally: per span, the slice from the previous span's
-  // end+1 to its start−1 via one lag window; plus the tail after the
-  // last span — which also carries everything beyond the analyzed
-  // `SuffixMaxChars` prefix untouched). Docs with no spans pass through
-  // verbatim. One keyed window over the O(spans) frame + one hash-agg;
-  // the ordered reassembly is a deterministic sort_array fold, not a
-  // collect_list-order gamble.
-  def dedupExcise(spark: SparkSession, dir: String): DataFrame =
-    dedupExciseFrom(Tables.documents(spark, dir))
-
-  /** Excision over any (doc_id, text) frame — factored for the spec. */
-  private[graft] def dedupExciseFrom(docsIn: DataFrame): DataFrame = {
-    val docs = docsIn
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"), col("text"))
-    val spans = graft.operators.SuffixSpans.repeatedSpans(
-      docs, "doc_id", "text", SuffixWindow, SuffixMaxChars)
-    val wD = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("span_start")
-    val segs = spans.join(docs, "doc_id")
-      .withColumn("seg_from",
-        coalesce(lag(col("span_end"), 1).over(wD) + 1, lit(1L)))
-      .select(col("doc_id"), col("span_start"), col("span_end"),
-        // the between-spans segment (empty when spans touch)
-        col("text").substr(col("seg_from").cast("int"),
-          greatest(col("span_start") - col("seg_from"), lit(0L)).cast("int"))
-          .as("seg"),
-        // the after-last-span tail (non-empty only on the last span row)
-        when(lead(col("span_start"), 1).over(wD).isNull,
-          col("text").substr((col("span_end") + 1).cast("int"), lit(1 << 24)))
-          .otherwise(lit("")).as("tail_seg"))
-    val rebuilt = segs.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_spans"),
-        sum(col("span_end") - col("span_start") + 1).as("cut_chars"),
-        // deterministic ordered reassembly: sort by span_start, then fold
-        concat(
-          array_join(expr(
-            "transform(sort_array(collect_list(struct(span_start, seg))), x -> x.seg)"),
-            ""),
-          array_join(expr(
-            "transform(sort_array(collect_list(struct(span_start, tail_seg))), x -> x.tail_seg)"),
-            "")).as("kept_text"))
-    docs.join(rebuilt, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_spans"), lit(0L)).as("n_spans"),
-        coalesce(col("cut_chars"), lit(0L)).as("cut_chars"),
-        coalesce(col("kept_text"), col("text")).as("kept_text"))
-      .orderBy("doc_id")
-  }
-
-  // --- q127/q128: stateful streaming operators under the batch oracle gate ---------
-  // These two run the REAL Structured Streaming operators (not batch
-  // re-implementations) against the fixture events table via
-  // Tables.eventsStream + Trigger.AvailableNow, and return the stream's
-  // emissions as the query result — so the stateful fold logic itself is
-  // hash-compared against the DuckDB oracle, not just spec-asserted
-  // equivalent to a batch twin. A 10-year watermark delay keeps every
-  // event on-time (this gate isolates fold semantics; lateness eviction
-  // has its own churn specs in StreamingSpec). The fixture table is one
-  // parquet file, so AvailableNow folds it as one time-sorted batch;
-  // multi-batch convergence is spec-verified separately.
-
-  /** Stream-gate session: the shared context with state/shuffle
-    * partitioning sized for the bounded gate fixtures. A stateful
-    * micro-batch pays per-partition fixed costs EVERY batch — one state
-    * store instance, one delta file commit, one task — so running a
-    * ~10k-row fixture gate at the batch engine's core-count partitioning
-    * (32 here) multiplies pure overhead: the state rows would fit ONE
-    * partition. Results are partitioning-independent (keyed state,
-    * hash-verified by the oracle); production deployments size this to
-    * load, and the batch session is untouched. The caller session's conf
-    * is copied wholesale so gate semantics can't drift between sessions.
-    */
-  private val streamSessions = new SessionMemo[Unit, SparkSession]
-  private val StreamParts = 4
-
-  private def streamSpark(spark: SparkSession): SparkSession =
-    // ONE stream session per parent session, not one per gate
-    // invocation: a 5-run bench used to allocate dozens of throwaway
-    // sessions per suite, each holding its memory-sink temp tables until
-    // GC. evictMemos() stops the memoized sessions' strays and drops
-    // their graft_q* sink tables on every bench sweep.
-    streamSessions(spark, ()) {
-      val s = spark.newSession()
-      spark.conf.getAll.foreach { case (k, v) =>
-        try s.conf.set(k, v) catch { case _: Throwable => () }
-      }
-      s.conf.set("spark.sql.shuffle.partitions", StreamParts.toString)
-      s
-    }
-
-  private def runToTable(q: org.apache.spark.sql.streaming.DataStreamWriter[_],
-                         tag: String): String = {
-    val name = tag + java.lang.Long.toHexString(
-      java.util.concurrent.ThreadLocalRandom.current().nextLong())
-    val cp = Sessions.tempDir(tag)
-    q.queryName(name).format("memory")
-      .option("checkpointLocation", s"$cp/cp")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start().awaitTermination()
-    name
-  }
-
-  /** `runToTable` for PROCESSING-TIME-mode stateful operators, which
-    * never terminate under AvailableNow: a ProcessingTime-mode
-    * transformWithState always answers `shouldRunAnotherBatch` = true
-    * (wall time always advances — a timer/TTL could fire), so the
-    * engine constructs batch after EMPTY batch forever (observed:
-    * ~3000 commits and counting on the q276 fixture) — and because
-    * every trigger "has a batch", `noNewData` is never set, so
-    * processAllAvailable() never unblocks either. Bounded-run protocol
-    * instead: the fixture source is a single parquet file, so the
-    * FileStreamSource puts EVERY row in batch 0 (no maxFilesPerTrigger
-    * cap) and the sink holds the full emission set the moment batch 0
-    * commits; progress reaching batchId ≥ 1 proves exactly that (batch
-    * 1 cannot construct before batch 0 commits). Poll for it, then
-    * stop. On a real deployment this operator runs forever by design —
-    * termination is a fixture-gate concern only.
-    */
-  private def runToTableDrained(q: org.apache.spark.sql.streaming.DataStreamWriter[_],
-                                tag: String): String = {
-    val name = tag + java.lang.Long.toHexString(
-      java.util.concurrent.ThreadLocalRandom.current().nextLong())
-    val cp = Sessions.tempDir(tag)
-    val sq = q.queryName(name).format("memory")
-      .option("checkpointLocation", s"$cp/cp")
-      .start()
-    try {
-      val deadline = System.nanoTime + 600L * 1000 * 1000 * 1000
-      while ((sq.lastProgress == null || sq.lastProgress.batchId < 1) &&
-             sq.isActive && System.nanoTime < deadline)
-        Thread.sleep(50)
-      sq.exception.foreach(throw _)
-      require(sq.lastProgress != null && sq.lastProgress.batchId >= 1,
-        s"$name: batch 0 did not commit within the drain deadline")
-    } finally sq.stop()
-    name
-  }
-
-  /** Closed sessions as emitted by the streaming sessionizer — every
-    * session except each key's open tail (never flushed: the watermark
-    * stays 10 years behind, so no TTL fires).
-    */
-  def sessionizeStreamed(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSpark(spark0)
-    val enc = org.apache.spark.sql.Encoders
-      .product[graft.streaming.SessionizeStream.Ev]
-    val stream = Tables.eventsStream(spark, dir)
-      .select(col("user_id").as("key"),
-        unix_micros(col("ts")).as("tsMicros"),
-        // exact cents via decimal, not double round: both engines agree
-        (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .as(enc)
-    val name = runToTable(
-      graft.streaming.SessionizeStream
-        .sessionize(stream, SessionGapMicros, lateness = "3650 days")
-        .writeStream,
-      "graft_q127_")
-    spark.table(name).orderBy("key", "session_seq")
-  }
-
-  // --- q275/q276: the same stateful operators on transformWithState ----------------
-  // Spark 4's arbitrary-state API (named states, explicit timers, native
-  // TTL, RocksDB column families) replacing flatMapGroupsWithState. Twin
-  // discipline: q275 gates against q127's oracle VERBATIM, q276 against
-  // q137's — identical semantics, different state machinery, so any
-  // drift between the two APIs' late-row/state handling surfaces as a
-  // hash mismatch rather than going unnoticed.
-
-  /** Closed sessions as emitted by the transformWithState sessionizer —
-    * same emission contract as q127 (every session except each key's
-    * open tail; the 10-year watermark delay keeps the eviction timers
-    * from firing on the bounded fixture).
-    */
-  def sessionizeTws(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSpark(spark0)
-    val enc = org.apache.spark.sql.Encoders
-      .product[graft.streaming.SessionizeStream.Ev]
-    val stream = Tables.eventsStream(spark, dir)
-      .select(col("user_id").as("key"),
-        unix_micros(col("ts")).as("tsMicros"),
-        (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .as(enc)
-    val name = graft.streaming.SessionizeTws.withRocksDb(spark) {
-      runToTable(
-        graft.streaming.SessionizeTws
-          .sessionize(stream, SessionGapMicros, lateness = "3650 days")
-          .writeStream,
-        "graft_q275_")
-    }
-    spark.table(name).orderBy("key", "session_seq")
-  }
-
-  /** Distinct-key registry as emitted by the TTL-bounded
-    * transformWithState dedup — with the 10-hour TTL no entry can lapse
-    * inside a bounded run, so the emission set equals q137's batch
-    * DISTINCT (the TTL-expiry path is spec-exercised with a short TTL).
-    */
-  def dedupTwsRegistry(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSpark(spark0)
-    import graft.streaming.DedupTws
-    val enc = org.apache.spark.sql.Encoders.product[DedupTws.Key3]
-    val keys = Tables.eventsStream(spark, dir)
-      .select(col("user_id"), utcDate(col("ts")).as("day"), col("event_type"))
-      .as(enc)
-    val name = graft.streaming.SessionizeTws.withRocksDb(spark) {
-      runToTableDrained(
-        DedupTws.registry(keys, java.time.Duration.ofHours(10)).writeStream,
-        "graft_q276_")
-    }
-    spark.table(name).orderBy("user_id", "day", "event_type")
-  }
-
-  /** Final funnel stage per user as emitted by the streaming tracker.
-    * Update-mode emissions are one snapshot per updated user per batch;
-    * the per-column aggregate below reduces them to the final state (the
-    * chain timestamps only ever move earlier, the stage only advances) —
-    * with the fixture's single batch it is the identity.
-    */
-  def funnelStreamed(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSpark(spark0)
-    val enc = org.apache.spark.sql.Encoders
-      .product[graft.streaming.FunnelStream.FEv]
-    val stream = Tables.eventsStream(spark, dir)
-      .select(col("user_id").as("user"),
-        unix_micros(col("ts")).as("tsMicros"),
-        col("event_type").as("step"))
-      .as(enc)
-    val name = runToTable(
-      graft.streaming.FunnelStream
-        .track(stream, ttlMicros = Long.MaxValue, lateness = "3650 days")
-        .writeStream.outputMode("update"),
-      "graft_q128_")
-    spark.table(name)
-      .groupBy("user")
-      .agg(max(col("stage")).as("stage"),
-        min(col("view_micros")).as("view_micros"),
-        min(col("click_micros")).as("click_micros"),
-        min(col("purchase_micros")).as("purchase_micros"))
-      .orderBy("user")
-  }
-
-  // --- q129: bloom-filter semi-join reduction --------------------------------------
-  // The runtime-filter pattern (operators/BloomJoin.scala): high-value
-  // order keys fold into a 2^17-bit bloom bitmap (one bounded O(m)
-  // collect), whose membership test is pushed into the lineitem scan
-  // ahead of the exact semi-join — at 100 TB the filter kills non-matching
-  // rows before they reach the shuffle. Semantics-neutral by construction
-  // (the exact join removes false positives), so the oracle is the plain
-  // IN-subquery.
-  val BloomOrderThreshold = 450000.0
-  val BloomBits: Int = 1 << 17
-
-  def bloomSemiRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val hi = Tables.orders(spark, dir)
-      .filter(col("o_totalprice") > BloomOrderThreshold)
-      .select("o_orderkey")
-    BloomJoin.reducedSemiJoin(Tables.lineitem(spark, dir), "l_orderkey",
-        hi, "o_orderkey", BloomBits)
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(count(lit(1)).as("n_items"),
-        moneySum(discounted(col("l_extendedprice"), col("l_discount")))
-          .as("revenue"))
-      .orderBy("l_returnflag", "l_linestatus")
-  }
-
-  // --- q130: snapshot diff — CDC delta between two as-of states --------------------
-  // The inverse of the SCD merge family (operators/SnapshotDiff.scala):
-  // recover the insert/delete/update change set BETWEEN two point-in-time
-  // keyed snapshots (here: per-customer order count + revenue over a
-  // sliding 90-day window, at two as-of dates). One full-outer shuffle
-  // join on the key — the minimal movement for an arbitrary-key diff.
-  val SnapT1 = "1998-01-01"
-  val SnapT2 = "1998-04-01"
-  val SnapWindowDays = 90L
-
-  private def orderWindowSnapshot(spark: SparkSession, dir: String,
-                                  asOf: String): DataFrame = {
-    val hi = java.time.LocalDate.parse(asOf)
-    val lo = hi.minusDays(SnapWindowDays)
-    Tables.orders(spark, dir)
-      .filter(col("o_orderdate") >= ntzTs(s"$lo 00:00:00") &&
-        col("o_orderdate") < ntzTs(s"$asOf 00:00:00"))
-      .groupBy("o_custkey")
-      .agg(count(lit(1)).as("n_orders"),
-        sum(dec2(col("o_totalprice"))).as("rev_dec"))
-  }
-
-  def snapshotDelta(spark: SparkSession, dir: String): DataFrame =
-    SnapshotDiff.diff(
-        orderWindowSnapshot(spark, dir, SnapT1),
-        orderWindowSnapshot(spark, dir, SnapT2),
-        keys = Seq("o_custkey"), compareCols = Seq("n_orders", "rev_dec"))
-      .select(col("o_custkey"), col("old_n_orders"), col("new_n_orders"),
-        col("old_rev_dec").cast("double").as("old_revenue"),
-        col("new_rev_dec").cast("double").as("new_revenue"),
-        col("change_type"))
-      .orderBy("o_custkey")
-
-  // --- q131: weighted corpus sample (sequential Poisson / PPS) ---------------------
-  // Ohlsson's sequential Poisson sampling: priority = u/w with u a
-  // deterministic uniform from the portable affine key hash; the k
-  // smallest priorities are a probability-proportional-to-size sample
-  // (here ∝ token count — the standard way to downsample a corpus while
-  // preserving the token mass distribution). Priorities are map-side and
-  // the global k-smallest is a TakeOrdered (per-partition heaps + a
-  // k-sized driver merge) — no global sort, no shuffle of the corpus.
-  // The single IEEE division (exact-integer hash / exact-integer weight)
-  // is correctly rounded in both engines, so scores are bit-identical.
-  val PpsSampleK = 150
-
-  def weightedSample(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"),
-        size(TextAnalysis.words(col("text"))).cast("long").as("tokens"))
-      .filter(col("tokens") > 0)
-      .withColumn("priority",
-        graft.functions.Sketches.keyHash(col("doc_id")).cast("double")
-          / col("tokens").cast("double"))
-      .orderBy(col("priority"), col("doc_id")).limit(PpsSampleK)
-
-  // --- q132: token-window document chunking ----------------------------------------
-  // Fixed-size overlapping token windows (120 tokens, stride 90) — the
-  // standard pre-embedding / pre-training segmentation. Pure map-side
-  // explode: chunk starts come from `sequence`, the chunk text from
-  // `slice` + `array_join` on the already-split word array — one scan,
-  // no shuffle, output partitioned exactly like the input.
-  val ChunkTokens = 120
-  val ChunkStride = 90
-
-  def docChunks(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .select(col("doc_id"), col("w"),
-        explode(sequence(lit(0), size(col("w")) - 1, lit(ChunkStride))).as("s"))
-      .select(col("doc_id"),
-        (col("s") / lit(ChunkStride)).cast("long").as("chunk_idx"),
-        least(lit(ChunkTokens), size(col("w")) - col("s")).cast("long")
-          .as("chunk_tokens"),
-        array_join(slice(col("w"), col("s") + 1, lit(ChunkTokens)), " ")
-          .as("chunk_text"))
-      .orderBy("doc_id", "chunk_idx")
-
-  // --- q133: ABC / Pareto revenue classification -----------------------------------
-  // Parts classed A (first 80% of cumulative revenue), B (to 95%), C
-  // (tail) along the global revenue-descending order — the classic
-  // inventory-curation rollup. The global running sum rides PrefixSum
-  // (bucketed by a monotone revenue band — no global sort, no
-  // unpartitioned window over the parts), and class boundaries compare
-  // exact decimals via integer cross-multiplication (cum·5 ≤ total·4),
-  // so no float share ever exists to drift.
-  def abcClassification(spark: SparkSession, dir: String): DataFrame = {
-    val perPart = Tables.lineitem(spark, dir)
-      .groupBy("l_partkey")
-      .agg(sum(discounted(col("l_extendedprice"), col("l_discount")))
-        .as("rev_dec"))
-    // bucket ascends along the (rev desc, partkey) global order
-    val bucketed = perPart.withColumn("qb",
-      -floor(col("rev_dec") / lit(1000)).cast("long"))
-    val ranked = PrefixSum.runningSum(bucketed, "qb",
-      Seq(col("rev_dec").desc, col("l_partkey")), col("rev_dec"), "cum_dec")
-    val total = perPart.agg(sum(col("rev_dec")).as("__total"))
-    ranked.crossJoin(broadcast(total))
-      .withColumn("abc_class",
-        when(col("cum_dec") * 5 <= col("__total") * 4, "A")
-          .when(col("cum_dec") * 20 <= col("__total") * 19, "B")
-          .otherwise("C"))
-      .groupBy("abc_class")
-      .agg(count(lit(1)).as("n_parts"),
-        sum(col("rev_dec")).cast("double").as("revenue"))
-      .orderBy("abc_class")
-  }
-
-  // --- q134: Benford first-digit audit ---------------------------------------------
-  // First-significant-digit distribution of order totals vs Benford's
-  // law — the standard fraud/synthetic-data smell test. The digit comes
-  // from the DECIMAL(18,2) rendering (both engines format plain
-  // "1234.56", so the first character is engine-stable — no float log10
-  // in the digit path); expected shares are plan-embedded literals
-  // computed once in Scala, so both sides subtract the same doubles.
-  val BenfordExpected: Seq[Double] = (1 to 9).map(d => math.log10(1.0 + 1.0 / d))
-
-  def benfordDigits(spark: SparkSession, dir: String): DataFrame = {
-    val digits = Tables.orders(spark, dir)
-      .select(substring(dec2(col("o_totalprice")).cast("string"), 1, 1)
-        .cast("int").as("digit"))
-      .groupBy("digit").agg(count(lit(1)).as("n_orders"))
-    val total = digits.agg(sum(col("n_orders")).as("__total"))
-    digits.crossJoin(broadcast(total))
-      .withColumn("obs_share",
-        col("n_orders").cast("double") / col("__total").cast("double"))
-      .withColumn("expected_share",
-        element_at(lit(BenfordExpected.toArray), col("digit")))
-      .withColumn("delta", col("obs_share") - col("expected_share"))
-      .select("digit", "n_orders", "obs_share", "expected_share", "delta")
-      .orderBy("digit")
-  }
-
-  // --- q135: per-brand 2-D skyline (Pareto frontier) -------------------------------
-  // Parts on each brand's (minimize size, minimize price) frontier via
-  // the linear sweep in operators/Skyline.scala — the oracle runs the
-  // independent quadratic NOT EXISTS formulation, so the sweep's
-  // dominance algebra is checked against the definition, not against
-  // itself.
-  def partSkyline(spark: SparkSession, dir: String): DataFrame =
-    Skyline.pareto2d(
-        Tables.part(spark, dir).select("p_partkey", "p_brand", "p_size",
-          "p_retailprice"),
-        "p_size", "p_retailprice", partitionBy = Seq("p_brand"))
-      .select("p_partkey", "p_brand", "p_size", "p_retailprice")
-      .orderBy("p_brand", "p_size", "p_partkey")
-
-  // --- q136: bot-regularity detector (exact integer dispersion) --------------------
-  // Inhumanly regular event cadence per user: inter-arrival gaps in
-  // whole seconds (exact integer micros div), then the squared
-  // coefficient of variation compared via cross-multiplication —
-  // n·Σg² − (Σg)² against (Σg)²/100 — entirely in int64, so the flag is
-  // bit-deterministic (no float variance anywhere). One per-user window
-  // for the lag + one hash-agg.
-  val BotMinGaps = 20L
-
-  def botRegularity(spark: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("m"), col("event_id"))
-    val gaps = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("m"))
-      .withColumn("prev", lag(col("m"), 1).over(w))
-      .filter(col("prev").isNotNull)
-      .select(col("user_id"), expr("(m - prev) div 1000000").as("gap_s"))
-    gaps.groupBy("user_id")
-      .agg(count(lit(1)).as("n_gaps"),
-        sum(col("gap_s")).as("sum_gap_s"),
-        sum(col("gap_s") * col("gap_s")).as("__sumsq"))
-      .filter(col("n_gaps") >= BotMinGaps)
-      .withColumn("var_num",
-        col("n_gaps") * col("__sumsq") - col("sum_gap_s") * col("sum_gap_s"))
-      .withColumn("is_regular",
-        col("var_num") * 100 < col("sum_gap_s") * col("sum_gap_s"))
-      .select("user_id", "n_gaps", "sum_gap_s", "var_num", "is_regular")
-      .orderBy("user_id")
-  }
-
-  // --- q137: streaming distinct-key registry under the oracle gate -----------------
-  // The REAL watermark-bounded streaming dedup operator
-  // (StreamingDedup.withinWatermark — dropDuplicatesWithinWatermark, the
-  // only dedup shape that survives an unbounded stream) run against the
-  // fixture via Tables.eventsStream. The dedup key (user, UTC day, type)
-  // functionally determines every emitted column, so the emission SET is
-  // deterministic even though which duplicate row survives is not — and
-  // the oracle is a plain SELECT DISTINCT.
-  def streamedKeyRegistry(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSpark(spark0)
-    val stream = Tables.eventsStream(spark, dir)
-      .select(col("ts"), col("user_id"), utcDate(col("ts")).as("day"),
-        col("event_type"))
-    val name = runToTable(
-      graft.streaming.StreamingDedup
-        .withinWatermark(stream, "ts", "3650 days",
-          Seq("user_id", "day", "event_type"))
-        .select("user_id", "day", "event_type")
-        .writeStream,
-      "graft_q137_")
-    spark.table(name).orderBy("user_id", "day", "event_type")
-  }
-
-  // --- q138: streaming tumbling-window aggregation under the oracle gate -----------
-  // The REAL watermarked tumbling-window aggregate (WindowedAgg.tumbling,
-  // append mode): daily (event_type) counts + exact cents. With zero
-  // lateness delay the final watermark is max(ts), so exactly the windows
-  // whose end ≤ max(ts) flush — the oracle reproduces that emission rule
-  // with a scalar max. The last (incomplete) day stays in state, as it
-  // would on a live stream.
-  def streamedDailyAgg(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSpark(spark0)
-    val stream = Tables.eventsStream(spark, dir)
-      .select(col("ts"), col("event_type"),
-        (dec2(col("value")) * 100).cast("long").as("cents"))
-    val name = runToTable(
-      graft.streaming.WindowedAgg.tumbling(stream, "ts", "1 day", "0 seconds",
-          Seq("event_type"),
-          Seq(count(lit(1)).as("n_events"), sum(col("cents")).as("cents_sum")))
-        .writeStream,
-      "graft_q138_")
-    spark.table(name).orderBy("window_start", "event_type")
-  }
-
-  // --- q139: stream-stream interval join under the oracle gate ---------------------
-  // The third stateful-operator class (after dedup and windowed agg):
-  // StreamJoin.intervalJoin — the watermark-bounded event-time interval
-  // join, the only join shape whose state stays O(rate × lookback) on an
-  // unbounded stream pair. Purchases matched to the same user's clicks
-  // in the preceding hour; inner-join emissions are the exact match SET
-  // regardless of batch order, so the oracle is the batch interval join.
-  def streamedIntervalJoin(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSpark(spark0)
-    val purchases = Tables.eventsStream(spark, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"))
-    val clicks = Tables.eventsStream(spark, dir)
-      .filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"))
-    val name = runToTable(
-      graft.streaming.StreamJoin.intervalJoin(purchases, "purchase_ts",
-          clicks, "click_ts", keys = Seq("user_id"),
-          delay = "3650 days", lookback = "1 HOUR")
-        .writeStream,
-      "graft_q139_")
-    spark.table(name).orderBy("user_id", "purchase_id", "click_id")
-  }
-
-  // --- q140: cross-source quantile normalization -----------------------------------
-  // Score calibration across sources whose quality distributions differ
-  // (the standard fix before a global quality threshold): each doc's
-  // score maps to the GLOBAL score at its within-source quantile.
-  // Within-source ranks are partition-parallel windows; the global rank
-  // rides PrefixSum (no global sort); the quantile→position map is exact
-  // integer arithmetic; and the normalized value is a PICKED existing
-  // score (one equi-join on position), so no float interpolation exists
-  // to drift.
-  def quantileNormalize(spark: SparkSession, dir: String): DataFrame = {
-    val scored = Tables.documents(spark, dir)
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"), col("source"), docQuality.as("quality_score"))
-    val wSrc = org.apache.spark.sql.expressions.Window
-      .partitionBy("source").orderBy(col("quality_score"), col("doc_id"))
-    val ranked = scored.withColumn("rk", row_number().over(wSrc).cast("long"))
-    val nSrc = scored.groupBy("source").agg(count(lit(1)).as("n_src"))
-    val bucketed = scored.withColumn("gb",
-      floor(col("quality_score") * 1000).cast("long"))
-    val granked = PrefixSum.runningSum(bucketed, "gb",
-      Seq(col("quality_score"), col("doc_id")), lit(1L), "grank")
-    val total = scored.agg(count(lit(1)).as("n_all"))
-    val gvals = granked.select(col("grank").as("gpos"),
-      col("quality_score").as("norm_score"))
-    ranked.join(broadcast(nSrc), "source").crossJoin(broadcast(total))
-      .withColumn("gpos",
-        lit(1L) + expr("((rk - 1) * (n_all - 1)) div greatest(n_src - 1, 1)"))
-      .join(gvals, "gpos")
-      .select(col("doc_id"), col("source"), col("quality_score"),
-        col("norm_score"))
-      .orderBy("doc_id")
-  }
-
-  // --- q141: KMV set operations (union / intersection across event sets) ----------
-  // Theta-sketch-style set algebra on the portable KMV sketch: the k
-  // smallest distinct hashes of A ∪ B estimate the union cardinality,
-  // the fraction of them present in BOTH sides estimates Jaccard, and
-  // intersection = J × union (inclusion via two broadcast semi-joins of
-  // the k-row sketch — never a join of the full sets). Elements are
-  // (user, UTC day) activity keys; A = click-days, B = purchase-days.
-  // Exact counts ride along for calibration.
-  val SetOpK = 128
-
-  def kmvSetOps(spark: SparkSession, dir: String): DataFrame = {
-    val epoch = to_date(lit("1970-01-01"))
-    val keyed = Tables.events(spark, dir)
-      .filter(col("event_type").isin("click", "purchase"))
-      .select(col("event_type"),
-        (col("user_id") * 100000L +
-          datediff(utcDate(col("ts")), epoch)).as("k"))
-    // pre-reduce the composite key mod P so the affine hash's HA·k
-    // product stays inside int64 for ANY user-id magnitude (ANSI mode
-    // makes a long overflow a runtime error, not a wraparound)
-    def side(t: String) = keyed.filter(col("event_type") === t)
-      .select(graft.functions.Sketches.keyHash(
-        pmod(col("k"), lit(graft.functions.Sketches.P))).as("h")).distinct()
-    val a = side("click")
-    val b = side("purchase")
-    val kmin = a.union(b).distinct().orderBy("h").limit(SetOpK)
-    val both = kmin.join(a, "h", "leftsemi").join(b, "h", "leftsemi")
-      .agg(count(lit(1)).as("n_both"))
-    val kth = kmin.agg(max(col("h")).as("kth"))
-    val exact = keyed.select(col("event_type"), col("k")).distinct()
-      .groupBy("k").agg(count(lit(1)).as("sides"))
-      .agg(count(lit(1)).as("exact_union"),
-        sum(when(col("sides") === 2, 1L).otherwise(0L)).as("exact_inter"))
-    val p = graft.functions.Sketches.P.toDouble
-    kth.crossJoin(both).crossJoin(exact)
-      .select(lit(SetOpK.toLong).as("k"),
-        col("exact_union"), col("exact_inter"),
-        (lit((SetOpK - 1).toDouble) / (col("kth").cast("double") / lit(p)))
-          .as("est_union"),
-        (col("n_both").cast("double") / lit(SetOpK.toDouble))
-          .as("est_jaccard"),
-        ((col("n_both").cast("double") / lit(SetOpK.toDouble)) *
-          (lit((SetOpK - 1).toDouble) / (col("kth").cast("double") / lit(p))))
-          .as("est_intersection"))
-  }
-
-  // --- q142: inverted-index build ---------------------------------------------------
-  // The lexical-search build step (df / collection frequency / champion
-  // doc per term) as a pure two-level aggregation: (term, doc) term
-  // frequencies in one shuffle, per-term stats in a second — the
-  // champion (highest-tf, lowest-id) doc via a struct max, not a window,
-  // so map-side partial aggregation applies all the way up.
-  val IdxMinDf = 5
-
-  def invertedIndex(spark: SparkSession, dir: String): DataFrame = {
-    val tf = Tables.documents(spark, dir)
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-    tf.groupBy("term")
-      .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"),
-        max(struct(col("tf").as("tf"), (-col("doc_id")).as("negid")))
-          .as("__top"))
-      .filter(col("df") >= IdxMinDf)
-      .select(col("term"), col("df"), col("cf"),
-        (-col("__top.negid")).as("top_doc"), col("__top.tf").as("top_tf"))
-      .orderBy("term")
-  }
-
-  // --- q143: deterministic train/val/test split assignment --------------------------
-  // Hash-bucket split (80/10/10) on the portable key hash — the
-  // assignment is a pure function of doc_id, so it is stable across
-  // runs, engines, partitionings, and corpus growth (a doc never changes
-  // split when new data arrives — the property random assignment lacks).
-  // Reported as the per-(source, split) doc/token manifest.
-
-  /** The 80/10/10 split label as a pure function of a key column — the
-    * ONE definition behind q143 (assignment on doc_id), q250 (the
-    * leakage audit of that assignment) and q251 (the cluster-keyed
-    * fix). The audit's premise is that it measures EXACTLY the split
-    * the other two apply, so the hash family and thresholds must be a
-    * single point of change: three inline copies agreeing by
-    * coincidence is how a future threshold tweak silently invalidates
-    * the audit (VERDICT r15 item 6).
-    */
-  private[graft] def splitOf(key: Column): Column = {
-    val bucket = pmod(graft.functions.Sketches.keyHash(key), lit(100L))
-    when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
-  }
-
-  def splitAssign(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"), col("source"),
-        size(TextAnalysis.words(col("text"))).cast("long").as("tokens"),
-        splitOf(col("doc_id")).as("split"))
-      .groupBy("source", "split")
-      .agg(count(lit(1)).as("n_docs"), sum(col("tokens")).as("total_tokens"))
-      .orderBy("source", "split")
-
-  // --- q144-q146: the native as-of join exec under the oracle gate ----------------
-  // The q40/q84/q85 shapes re-planned through the whole-operator Catalyst
-  // extension (plans/AsOfJoinPlan.scala: logical node + strategy +
-  // streaming-merge exec) and hash-compared against the SAME oracle rows
-  // as their union+window counterparts — identical semantics, a
-  // different (narrower) physical plan: each side shuffles once at its
-  // own width and the merge keeps O(1) state instead of a window carry
-  // over the unioned frame.
-  private def asOfNativeSides(spark: SparkSession, dir: String) = {
-    val ev = Tables.events(spark, dir)
-      .select("user_id", "event_id", "event_type", "value", "ts")
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select("event_id", "user_id", "ts", "value")
-    val views = Dedup.latestByKey(
-      ev.filter(col("event_type") === "view")
-        .select("user_id", "ts", "event_id", "value"),
-      keys = Seq("user_id", "ts"), orderCols = Seq("event_id"))
-    (purchases, views)
-  }
-
-  def asOfNativeAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val (purchases, views) = asOfNativeSides(spark, dir)
-    AsOfNative.asOfJoin(purchases, views, Seq("user_id"), "ts",
-        Seq("value", "event_id"), "view_")
-      .orderBy("event_id")
-  }
-
-  def asOfNativeTolerance(spark: SparkSession, dir: String): DataFrame = {
-    val (purchases, views) = asOfNativeSides(spark, dir)
-    AsOfNative.asOfJoin(purchases, views, Seq("user_id"), "ts",
-        Seq("value", "event_id"), "view_",
-        toleranceMicros = Some(AsOfWindowMicros))
-      .orderBy("event_id")
-  }
-
-  def asOfNativeForward(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select("user_id", "event_id", "event_type", "ts")
-    val views = ev.filter(col("event_type") === "view")
-      .select("event_id", "user_id", "ts")
-    val purchases = Dedup.latestByKey(
-        ev.filter(col("event_type") === "purchase")
-          .select("user_id", "ts", "event_id"),
-        keys = Seq("user_id", "ts"), orderCols = Seq("event_id"))
-      .withColumn("purchase_ts", col("ts"))
-    AsOfNative.asOfJoin(views, purchases, Seq("user_id"), "ts",
-        Seq("event_id", "purchase_ts"), "next_",
-        toleranceMicros = Some(ConversionWindowMicros), forward = true)
-      .select(col("event_id"), col("user_id"), col("ts"),
-        col("next_event_id"),
-        (unix_micros(col("next_purchase_ts")) - unix_micros(col("ts")))
-          .as("lag_micros"))
-      .orderBy("event_id")
-  }
-
-  // --- q147: Z-order layout manifest ------------------------------------------
-  // Orders laid out on (customer, order-day): both dims quantized to an
-  // 8-bit grid from exact global bounds, Morton-interleaved (codegen
-  // kernel, plans/ZOrderExprs.scala), and published as the per-Z-block
-  // zone map. A Z-block is an aligned rectangle of the grid, so min/max
-  // are tight on BOTH dimensions at once — the write-side layout that
-  // makes either-dimension predicates prune files at 100 TB. One scalar
-  // agg (broadcast bounds) + map-side kernel + one hash-agg.
-  val ZQBits = 8
-  val ZBlockShift = 6
-
-  def zorderManifest(spark: SparkSession, dir: String): DataFrame =
-    ZOrder.layoutManifest(
-      Tables.orders(spark, dir),
-      col("o_custkey"),
-      datediff(to_date(col("o_orderdate")), to_date(lit("1970-01-01"))),
-      ZQBits, ZBlockShift)
-
-  // --- q148: frequent event-type trigrams ---------------------------------------
-  // Sequential-pattern mining at fixed length: per-user ordered walk
-  // (deterministic tie on event_id), two leads, one hash-agg over the
-  // ≤|event_types|³ trigram domain. Per-user windows partition freely;
-  // the aggregate is map-side combinable — nothing grows with the corpus
-  // except the linear scan.
-  def eventTrigrams(spark: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-      .withColumn("e2", lead(col("event_type"), 1).over(w))
-      .withColumn("e3", lead(col("event_type"), 2).over(w))
-      .filter(col("e3").isNotNull && col("e2").isNotNull)
-      .groupBy(col("event_type").as("e1"), col("e2"), col("e3"))
-      .agg(count(lit(1)).as("n_seq"))
-      .orderBy(col("n_seq").desc, col("e1"), col("e2"), col("e3"))
-  }
-
-  // --- q149: range-partition planner (sampled sort boundaries) ------------------
-  // How a 100 TB global sort/range-write is actually planned: a
-  // deterministic ~2% hash-sample is the ONLY thing sorted (Spark's own
-  // RangePartitioner samples to the driver for the same reason); k-1
-  // boundary values are read off the sorted sample at equidistant
-  // positions, broadcast, and every row is assigned its range by a
-  // 15-element array probe — the corpus itself is never shuffled. The
-  // output is the per-range manifest (row counts + value bounds) whose
-  // balance tells you the sort would have been even.
-  val RangeK = 16
-  val RangeSampleMod = 50L
-
-  def rangePlan(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Sketches
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_linenumber"),
-        col("l_extendedprice").as("price"))
-    // composite row key pre-reduced mod P before the affine hash (q141's
-    // overflow lesson: ANSI mode faults HA·k past int64)
-    val rk = pmod(col("l_orderkey") * lit(8L) + col("l_linenumber"),
-      lit(Sketches.P))
-    val samp = li.filter(pmod(Sketches.keyHash(rk), lit(RangeSampleMod)) === 0)
-    // global row_number over the SAMPLE only — O(sample) single-partition
-    // sort by construction, the planner's whole point
-    val sw = org.apache.spark.sql.expressions.Window
-      .orderBy(col("price"), col("l_orderkey"), col("l_linenumber"))
-    val ordered = samp.withColumn("rn", row_number().over(sw).cast("long"))
-    // greatest(…, 1): a sample smaller than RangeK would make the stride
-    // 0 and `rn % step` a DIVIDE_BY_ZERO under ANSI mode (DuckDB returns
-    // NULL — the engines would diverge); clamped, a tiny sample just
-    // yields fewer/degenerate boundaries instead of failing
-    val step = greatest(floor(col("cnt") / lit(RangeK)).cast("long"), lit(1L))
-    val bounds = ordered
-      .crossJoin(broadcast(samp.agg(count(lit(1)).as("cnt"))))
-      .filter(col("rn") % step === 0 &&
-        floor(col("rn") / step) <= lit(RangeK - 1))
-      .agg(sort_array(collect_list(col("price"))).as("bnds"))
-    li.crossJoin(broadcast(bounds))
-      .select(col("price"),
-        size(filter(col("bnds"), b => b < col("price"))).cast("long").as("bucket"))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n_rows"),
-        min("price").as("min_price"), max("price").as("max_price"))
-      .orderBy("bucket")
-  }
-
-  // --- q150: cross-source shingle similarity matrix ----------------------------
-  // Corpus-health view of near-dup pressure BETWEEN sources: exact
-  // Jaccard over each source's distinct word-trigram set. The gram-level
-  // join fans out per gram only to the sources sharing it (≤ |sources|,
-  // a fixed catalog — never corpus-sized), and the per-source set sizes
-  // are one hash-agg; at 100 TB this is two corpus scans and a
-  // sources²-bounded join, the same posture as decontamination (q56).
-  def sourceSimilarity(spark: SparkSession, dir: String): DataFrame = {
-    val g = Tables.documents(spark, dir)
-      .filter(col("text").isNotNull)
-      .select(col("source"),
-        explode(graft.plans.SignatureExprs.distinctNGrams(
-          TextAnalysis.words(col("text")), JaccardN)).as("s"))
-      .distinct()
-    val counts = g.groupBy("source").agg(count(lit(1)).as("n"))
-    val l = g.alias("l")
-    val r = g.alias("r")
-    val inter = l.join(r,
-        col("l.s") === col("r.s") && col("l.source") < col("r.source"))
-      .groupBy(col("l.source").as("src_a"), col("r.source").as("src_b"))
-      .agg(count(lit(1)).as("common"))
-    inter
-      .join(broadcast(counts.select(col("source").as("src_a"), col("n").as("na"))), "src_a")
-      .join(broadcast(counts.select(col("source").as("src_b"), col("n").as("nb"))), "src_b")
-      .select(col("src_a"), col("src_b"), col("common"),
-        (col("common").cast("double") / (col("na") + col("nb") - col("common")))
-          .as("jaccard"))
-      .orderBy("src_a", "src_b")
-  }
-
-  // --- q151: reciprocal-rank fusion (lexical ⊕ dense retrieval) -----------------
-  // The standard hybrid-retrieval combiner: BM25 rank and dense-cosine
-  // rank over the SAME candidate set, fused as Σ 1/(C + rank). Ranks are
-  // integers, so the two reciprocals and their sum are single fp ops —
-  // bit-identical across engines without rounding. Candidates come from
-  // a TakeOrdered top-k (never a corpus sort); both rank windows run
-  // over the 50-row candidate set only.
-  val RrfC = 60
-
-  def rrfFusion(spark: SparkSession, dir: String): DataFrame = {
-    val cand = bm25Scores(spark, dir)
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(BmCandidates)
-    val wLex = org.apache.spark.sql.expressions.Window
-      .orderBy(col("score").desc, col("doc_id"))
-    val lex = cand.withColumn("r_lex", row_number().over(wLex))
-    val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val qv = emb.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
-    val wDen = org.apache.spark.sql.expressions.Window
-      .orderBy(col("cos_sim").desc, col("doc_id"))
-    lex.join(emb, lex("doc_id") === emb("vec_id"))
-      .crossJoin(broadcast(qv))
-      .select(col("doc_id"), col("r_lex"),
-        graft.functions.Similarity.cosine(col("qe"), col("embedding")).as("cos_sim"))
-      .withColumn("r_dense", row_number().over(wDen))
-      .select(col("doc_id"), col("r_lex"), col("r_dense"),
-        (lit(1.0) / (lit(RrfC) + col("r_lex"))
-          + lit(1.0) / (lit(RrfC) + col("r_dense"))).as("rrf"))
-      .orderBy(col("rrf").desc, col("doc_id"))
-      .limit(HybridK)
-  }
-
-  // --- q152: functional-dependency profile --------------------------------------
-  // Data-profiling pass over declared candidate FDs: A → B holds iff
-  // |distinct A| = |distinct (A,B)|. Each candidate is two distinct-count
-  // aggregates in ONE scan of its table (struct-tuple distinct for the
-  // pair), unpivoted to a row per candidate — the warehouse-audit twin
-  // of the DQ expectation family (q06/q18/q110).
-  private def fdCandidate(df: DataFrame, table: String, lhs: String,
-                          rhs: String): DataFrame =
-    df.agg(countDistinct(col(lhs)).as("n_lhs"),
-        countDistinct(struct(col(lhs), col(rhs))).as("n_pairs"))
-      .select(lit(s"$table.$lhs").as("lhs"), lit(rhs).as("rhs"),
-        col("n_lhs"), col("n_pairs"),
-        when(col("n_lhs") === col("n_pairs"), 1L).otherwise(0L).as("fd_holds"))
-
-  def fdProfile(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-    val c = Tables.customer(spark, dir)
-    val n = Tables.nation(spark, dir)
-    val e = Tables.events(spark, dir)
-    fdCandidate(o, "orders", "o_orderkey", "o_custkey")
-      .unionAll(fdCandidate(o, "orders", "o_custkey", "o_orderpriority"))
-      .unionAll(fdCandidate(c, "customer", "c_custkey", "c_name"))
-      .unionAll(fdCandidate(n, "nation", "n_nationkey", "n_regionkey"))
-      .unionAll(fdCandidate(e, "events", "user_id", "event_type"))
-      .orderBy("lhs", "rhs")
-  }
-
-  // --- q153: entity-resolution clusters (fuzzy linkage → components) -----------
-  // The full ER pipeline q105 only started: fuzzy name pairs (dictionary
-  // blocking + edit-distance verification, Linkage.scala) become edges,
-  // pointer-jumping connected components (Components.scala — O(log d)
-  // rounds, shuffles O(|pairs|) not O(|corpus|)) merge them into
-  // entities, and the output is the entity roster: canonical id (min
-  // part key in the cluster), variant-name count, total rows absorbed.
-  // Same compute-once/many-readers posture as the q34/q65 dedup layer.
-  def entityClusters(spark: SparkSession, dir: String): DataFrame = {
-    // the dictionary is read THREE times (both fuzzy-join sides via the
-    // shared CTE, the id map, the final roster join) and each driver
-    // action inside the Components loop would otherwise re-run the
-    // part-table scan+agg — one eager lean checkpoint of the O(names)
-    // frame makes every re-read a stored-rows scan
-    val dict = org.apache.spark.sql.graft.LeanCheckpoint.localCheckpoint(
-      Tables.part(spark, dir)
-        .groupBy(col("p_name").as("name"))
-        .agg(count(lit(1)).as("n_rows"), min("p_partkey").as("id")))
-    val pairs = Linkage.fuzzyPairs(
-      dict.select("name", "n_rows"),
-      nm => element_at(split(nm, " "), -1), FuzzyMaxDist)
-    val ids = dict.select("name", "id")
-    val edges = pairs
-      .join(ids.select(col("name").as("name_a"), col("id").as("src")), "name_a")
-      .join(ids.select(col("name").as("name_b"), col("id").as("dst")), "name_b")
-      .select("src", "dst")
-    val labels = Components.connectedComponents(dict.select("id"), edges)
-    dict.join(labels, "id")
-      .groupBy(col("label").as("root_key"))
-      .agg(count(lit(1)).as("n_names"), sum("n_rows").as("n_parts"))
-      .orderBy("root_key")
-  }
-
-  // --- q154: pseudonymization consistency audit ---------------------------------
-  // Governance op: replace user ids with a keyed deterministic token and
-  // PROVE the vault is sound — no token collisions (injective on each id
-  // domain) and join-consistency (tokenized tables join exactly where the
-  // raw tables did). All counts are distinct-aggregations over id sets —
-  // tiny compared to the fact tables they come from.
-  val PseudoA = 2246822519L
-  val PseudoB = 3266489917L
-
-  private def pseudo(id: Column): Column =
-    pmod(lit(PseudoA) * pmod(id, lit(graft.functions.Sketches.P)) + lit(PseudoB),
-      lit(graft.functions.Sketches.P))
-
-  def pseudonymAudit(spark: SparkSession, dir: String): DataFrame = {
-    val users = Tables.events(spark, dir).select(col("user_id").as("id"))
-      .filter(col("id").isNotNull).distinct()
-    val custs = Tables.customer(spark, dir).select(col("c_custkey").as("id"))
-      .distinct()
-    val uTok = users.select(col("id"), pseudo(col("id")).as("tok"))
-    val cTok = custs.select(col("id"), pseudo(col("id")).as("tok"))
-    val joinedRaw = users.join(custs, "id").agg(count(lit(1)).as("joined_raw"))
-    val joinedTok = uTok.select("tok").join(cTok.select("tok"), "tok")
-      .agg(count(lit(1)).as("joined_tok"))
-    uTok.agg(count(lit(1)).as("n_users"),
-        countDistinct(col("tok")).as("n_user_tokens"))
-      .crossJoin(cTok.agg(count(lit(1)).as("n_custs"),
-        countDistinct(col("tok")).as("n_cust_tokens")))
-      .crossJoin(joinedRaw)
-      .crossJoin(joinedTok)
-      .select("n_users", "n_user_tokens", "n_custs", "n_cust_tokens",
-        "joined_raw", "joined_tok")
-  }
-
-  // --- q155/q186: PageRank over the co-purchase graph (exact-integer) -----------
-  // Iterative graph centrality as Spark actually runs it: edges persist
-  // across rounds, each round is one join (rank → out-edges) + one
-  // hash-agg (sum contributions per dst) — all keyed shuffles, nothing
-  // driver-side. Ranks live in scaled int64 (S=1e9) with floor division,
-  // so every round is bit-identical in any engine and the oracle can
-  // unroll them as CTEs; fp PageRank would drift by summation order.
-  val PrScale = 1000000000L
-  val PrRounds = 3
-  val PrRoundsDeep = 10
-
-  def pagerankCopurchase(spark: SparkSession, dir: String): DataFrame =
-    pagerankRounds(spark, dir, PrRounds)
-
-  def pagerankDeep(spark: SparkSession, dir: String): DataFrame =
-    pagerankRounds(spark, dir, PrRoundsDeep)
-
-  def pagerankRounds(spark: SparkSession, dir: String, rounds: Int): DataFrame = {
-    require(rounds >= 1, "pagerank needs at least one round")
-    val e0 = copurchaseEdges(spark, dir)
-      .select(col("item_a").as("src"), col("item_b").as("dst"))
-      .leanCheckpoint()
-    val edges = e0.unionByName(
-      e0.select(col("dst").as("src"), col("src").as("dst")))
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    // one cached frame reused by every round (edge ⋈ out-degree); the
-    // contribution agg's map-side partial reduces the O(edges) fan
-    // before its exchange
-    val withDeg = graft.operators.Fixpoint.cache(
-      edges.join(deg, "src"), "src", 2L * e0.count(), 32)
-    val base = lit(15L * PrScale / 100L)
-    // `div` (integer division on int64) — NOT `/`, which routes longs
-    // through double and can misround once 85·p crosses 2^53.
-    def round(rk: DataFrame): DataFrame = {
-      val co = withDeg.probe(rk, "i")
-      withDeg.df.join(co, withDeg.df("src") === co("i"))
-        .select(col("dst"), expr("(85 * p) div (100 * d)").as("contrib"))
-        .groupBy(col("dst").as("i"))
-        .agg((base + sum(col("contrib"))).as("p"))
-    }
-    val ranks = prFused(deg.select(col("src").as("i"), lit(PrScale).as("p")),
-      rounds, "pagerank")(round)
-    withDeg.unpersist()
-    ranks.select(col("i").as("item"), col("p").as("rank_score"))
-      .orderBy(col("rank_score").desc, col("item"))
-  }
-
-  /** `rounds` PageRank rounds, TWO per checkpoint job: the round body
-    * references the previous rank frame exactly once, so chaining a
-    * second round grows the per-job plan linearly with zero recompute —
-    * same exact integer results, half the sequential job latency.
-    */
-  private def prFused(init: DataFrame, rounds: Int, tag: String)(
-      round: DataFrame => DataFrame): DataFrame =
-    graft.operators.Fixpoint.rounds(init, (rounds + 1) / 2, tag) { (rk, i) =>
-      if (2 * i <= rounds) round(round(rk)) else round(rk)
-    }
-
-  // --- q156: GROUPING SETS report ------------------------------------------------
-  // The explicit grouping-sets lattice (detail, per-flag, grand total)
-  // with grouping_id disambiguating the null-vs-aggregated levels —
-  // one expand + one hash-agg, decimal-exact sums.
-  def groupingSetsReport(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupingSets(
-        Seq(Seq(col("l_returnflag"), col("l_linestatus")),
-          Seq(col("l_returnflag")), Seq()),
-        col("l_returnflag"), col("l_linestatus"))
-      .agg(grouping_id().as("gid"),
-        sum(Cols.dec2(col("l_quantity"))).cast("double").as("sum_qty"),
-        count(lit(1)).as("n_items"))
-      .select("l_returnflag", "l_linestatus", "gid", "sum_qty", "n_items")
-      .orderBy("gid", "l_returnflag", "l_linestatus")
-
-  // --- q157: market-basket association lift --------------------------------------
-  // Support / lift for co-purchased part pairs: lift = (n_ab · N) /
-  // (n_a · n_b) as ONE integer-product ratio (single fp division —
-  // bit-identical cross-engine). Pair generation reuses the
-  // basket-bounded co-occurrence join; item frequencies and the basket
-  // total are broadcast scalars/aggs.
-  val LiftTopK = 100
-
-  def basketLift(spark: SparkSession, dir: String): DataFrame = {
-    val baskets = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("b"), col("l_partkey").as("i")).distinct()
-    val nOrders = baskets.select("b").distinct().agg(count(lit(1)).as("n_orders"))
-    val freq = baskets.groupBy("i").agg(count(lit(1)).as("n"))
-    copurchaseEdges(spark, dir)
-      .filter(col("n_baskets") >= CoMinSupport)
-      .join(freq.select(col("i").as("item_a"), col("n").as("na")), Seq("item_a"))
-      .join(freq.select(col("i").as("item_b"), col("n").as("nb")), Seq("item_b"))
-      .crossJoin(broadcast(nOrders))
-      .select(col("item_a"), col("item_b"), col("n_baskets"),
-        ((col("n_baskets") * col("n_orders")).cast("double")
-          / (col("na") * col("nb")).cast("double")).as("lift"))
-      .orderBy(col("lift").desc, col("item_a"), col("item_b"))
-      .limit(LiftTopK)
-  }
-
-  // --- q158: embedding distance-distribution histogram ---------------------------
-  // Corpus-geometry diagnostic: squared L2 distances over hash-blocked
-  // vector pairs (deterministic ~1/8 vector sample, 64 hash blocks —
-  // pairs only ever form inside a block, so the join is bucketed, never
-  // all-pairs), binned into an integer histogram. d² = ‖a‖² + ‖b‖² −
-  // 2·a·b with the codegen VecDot kernel, fixed op order ⇒ identical
-  // doubles ⇒ identical floor bins in both engines. Block count is the
-  // pairs-per-vector budget knob (size B ∝ sample size to hold the
-  // per-block quadratic constant at scale).
-  val DistSampleMod = 8L
-  val DistBlocks = 64L
-  val DistBinWidth = 0.25
-
-  def distanceHistogram(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Sketches
-    import graft.plans.VectorExprs
-    // both hash inputs pre-reduced mod P before the affine hash — the
-    // q141 overflow lesson: ScaleGen's offset ids push HA·(31·id) past
-    // int64 and ANSI mode faults the whole query at the 30× drill
-    val v = Tables.embeddings(spark, dir)
-      .filter(pmod(Sketches.keyHash(pmod(col("vec_id"), lit(Sketches.P))),
-        lit(DistSampleMod)) === 0)
-      .select(col("vec_id"),
-        pmod(Sketches.keyHash(pmod(col("vec_id") * lit(31L), lit(Sketches.P))),
-          lit(DistBlocks)).as("blk"),
-        col("embedding"))
-    val a = v.select(col("blk"), col("vec_id").as("ida"), col("embedding").as("ea"))
-    val b = v.select(col("blk"), col("vec_id").as("idb"), col("embedding").as("eb"))
-    a.join(b, Seq("blk")).filter(col("ida") < col("idb"))
-      .select((VectorExprs.dot(col("ea"), col("ea"))
-        + VectorExprs.dot(col("eb"), col("eb"))
-        - lit(2.0) * VectorExprs.dot(col("ea"), col("eb"))).as("d2"))
-      .select(floor(col("d2") / lit(DistBinWidth)).cast("long").as("bin"))
-      .groupBy("bin").agg(count(lit(1)).as("n_pairs"))
-      .orderBy("bin")
-  }
-
-  // --- q159: zone-map pruning simulator -----------------------------------------
-  // The read-side payoff of q147's layout, measured: for a fixed probe
-  // set of (customer-stripe × day-band) predicates in grid coordinates,
-  // count the Z-blocks whose min/max rectangle intersects the probe —
-  // the files a scan would READ — and the rows behind them. The
-  // manifest is O(blocks); probes are a 6-row broadcast; at 100 TB this
-  // is the planner-side pruning estimate that decides whether a layout
-  // rewrite pays for itself.
-  val PruneProbes: Seq[(Int, Int, Int, Int, Int)] = Seq(
-    (1, 17, 17, 0, 255),     // one customer stripe, all days
-    (2, 0, 255, 200, 207),   // one-week day band, all customers
-    (3, 32, 63, 64, 95),     // mid-grid rectangle
-    (4, 0, 127, 0, 255),     // half-space on customer
-    (5, 100, 100, 100, 100), // single cell
-    (6, 0, 255, 0, 255))     // full scan (control row)
-
-  def pruningSimulator(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val man = ZOrder.layoutManifest(
-      Tables.orders(spark, dir), col("o_custkey"),
-      datediff(to_date(col("o_orderdate")), to_date(lit("1970-01-01"))),
-      ZQBits, ZBlockShift)
-    val probes = PruneProbes.toDF("probe_id", "xlo", "xhi", "ylo", "yhi")
-    val tot = man.agg(count(lit(1)).as("n_blocks_total"),
-      sum("n_rows").as("rows_total"))
-    probes.join(broadcast(man),
-        col("xlo") <= col("max_x") && col("min_x") <= col("xhi") &&
-          col("ylo") <= col("max_y") && col("min_y") <= col("yhi"), "left")
-      .groupBy("probe_id")
-      .agg(count(col("block")).as("n_blocks_read"),
-        coalesce(sum("n_rows"), lit(0L)).as("rows_read"))
-      .crossJoin(broadcast(tot))
-      .select("probe_id", "n_blocks_read", "rows_read",
-        "n_blocks_total", "rows_total")
-      .orderBy("probe_id")
-  }
-
-  // --- q160: EWMA daily revenue (exact-integer sequential fold) ------------------
-  // The sequential-state time-series op done without fp drift: per-
-  // priority daily cents fold through e_d = (v_d + e_{d-1}) div 2 —
-  // every step an int64 add + floor-halve, so the whole trajectory is
-  // bit-identical to the oracle's recursive CTE. The fold runs inside a
-  // higher-order aggregate over the per-group O(days) frame (the same
-  // bounded-frame posture as q93's trailing stats) — groups stay
-  // partition-parallel, no unpartitioned window, no UDF.
-  def ewmaRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(spark, dir)
-      .groupBy(col("o_orderpriority").as("priority"),
-        to_date(col("o_orderdate")).as("day"))
-      .agg((sum(Cols.dec2(col("o_totalprice"))) * 100).cast("long").as("cents"))
-    daily.groupBy("priority")
-      .agg(sort_array(collect_list(struct(col("day"), col("cents")))).as("vs"))
-      .select(col("priority"), explode(expr(
-        """aggregate(vs,
-             named_struct('prev', cast(-1 as bigint),
-                          'res', cast(array() as array<struct<day:date,ewma:bigint>>)),
-             (acc, x) -> named_struct(
-               'prev', if(acc.prev < 0, x.cents, (x.cents + acc.prev) div 2),
-               'res', array_append(acc.res,
-                 named_struct('day', x.day,
-                   'ewma', if(acc.prev < 0, x.cents,
-                              (x.cents + acc.prev) div 2)))),
-             acc -> acc.res)""")).as("r"))
-      .select(col("priority"), col("r.day").as("day"),
-        col("r.ewma").as("ewma_cents"))
-      .orderBy("priority", "day")
-  }
-
-  // --- q161: stream-static enrichment join under the oracle gate -----------------
-  // The remaining Structured Streaming join class: a REAL event stream
-  // inner-joined to a STATIC dimension (the silver-enrichment shape —
-  // Autoloader stream × customer dim). Stream-static inner joins append
-  // each matched batch with no state store and no watermark, so the
-  // emission set is exactly the batch join — which is the oracle.
-  def streamedStaticEnrich(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSpark(spark0)
-    val stream = Tables.eventsStream(spark, dir)
-      .select(col("event_id"), col("user_id"))
-    val dim = Tables.customer(spark, dir)
-      .select(col("c_custkey"), col("c_nationkey"))
-    val name = runToTable(
-      stream.join(dim, stream("user_id") === dim("c_custkey"))
-        .select(col("event_id"), col("user_id"), col("c_nationkey"))
-        .writeStream,
-      "graft_q161_")
-    spark.table(name).orderBy("event_id")
-  }
-
-  // --- q162: funnel conversion-lag percentiles -----------------------------------
-  // The question every funnel report ends with: HOW LONG does view →
-  // purchase take? Lags come off q66's single-scan chain (stage-3 users
-  // only); the percentile aggregate is one reduction — no global sort.
-  def funnelLagPercentiles(spark: SparkSession, dir: String): DataFrame =
-    funnel(spark, dir)
-      .filter(col("stage") === 3)
-      .select((unix_micros(col("purchase_ts")) - unix_micros(col("view_ts")))
-        .as("lag_us"))
-      .agg(count(lit(1)).as("n_converted"),
-        expr("percentile(lag_us, array(0.25D, 0.5D, 0.75D, 0.9D))").as("qs"))
-      .select(col("n_converted"),
-        element_at(col("qs"), 1).as("p25_us"),
-        element_at(col("qs"), 2).as("p50_us"),
-        element_at(col("qs"), 3).as("p75_us"),
-        element_at(col("qs"), 4).as("p90_us"))
-
-  // --- q163: salted join under the oracle gate ------------------------------------
-  // The skew-mitigation operator (Skew.saltedJoin — fact side sharded
-  // across 8 salt sub-keys, dim replicated once per salt) producing the
-  // SAME aggregate as the plain join: salting redistributes work, never
-  // results. The oracle is the unsalted SQL join — which is exactly the
-  // operator's correctness contract.
-  val JoinSalts = 8
-
-  def saltedJoinRevenue(spark: SparkSession, dir: String): DataFrame = {
-    // event_id is the per-row-distinguishing salt column: salting on it
-    // spreads a hot user's rows uniformly even if that user logged many
-    // bit-identical (user, value) pairs — the duplicate-heavy case where
-    // a full-row content hash would collapse the clones onto one shard
-    val fact = Tables.events(spark, dir)
-      .select(col("user_id").as("c_custkey"), dec2(col("value")).as("v"),
-        col("event_id"))
-    val dim = Tables.customer(spark, dir).select("c_custkey", "c_nationkey")
-    Skew.saltedJoin(fact, dim, "c_custkey", JoinSalts,
-        saltCols = Seq("event_id"))
-      .groupBy("c_nationkey")
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("v")).cast("double").as("value_sum"))
-      .orderBy("c_nationkey")
-  }
-
-  // --- q164: bucketed (exchange-free) join under the oracle gate -------------------
-  // The co-location story made concrete: both sides written bucketed on
-  // the join key (16 buckets, sorted), so the join plans WITHOUT a
-  // shuffle on either side — at 100 TB this is the difference between
-  // re-shuffling the fact table on every join and reading it joined.
-  // Table/path names are run-unique; the oracle is the plain SQL join.
-  def bucketedJoinRevenue(spark: SparkSession, dir: String): DataFrame = {
-    // Run-unique names keep concurrent invocations apart, so each new
-    // invocation first drops the PREVIOUS runs' tables — without this the
-    // catalog accrues two entries per bench iteration for the session's
-    // lifetime (their parquet dirs are reclaimed by the tempDir hook).
-    spark.catalog.listTables().collect()
-      .filter(_.name.startsWith("graft_bkt_"))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.name}"))
-    val id = java.lang.Long.toHexString(
-      java.util.concurrent.ThreadLocalRandom.current().nextLong())
-    val (tl, tr) = (s"graft_bkt_ord_$id", s"graft_bkt_cust_$id")
-    val base = Sessions.tempDir("graft_bkt_")
-    Bucketing.saveBucketed(
-      Tables.orders(spark, dir).groupBy("o_custkey")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(dec2(col("o_totalprice"))).as("rev")),
-      tl, s"$base/l", "o_custkey", 16)
-    Bucketing.saveBucketed(
-      Tables.customer(spark, dir)
-        .select(col("c_custkey").as("o_custkey"), col("c_nationkey")),
-      tr, s"$base/r", "o_custkey", 16)
-    Bucketing.colocatedJoin(spark, tl, tr, "o_custkey")
-      .groupBy("c_nationkey")
-      .agg(sum("n_orders").as("n_orders"),
-        sum("rev").cast("double").as("revenue"))
-      .orderBy("c_nationkey")
-  }
-
-  // --- q165: entity golden records -------------------------------------------------
-  // Survivorship on top of the q153 roster: per entity cluster, the
-  // canonical name is the most-frequent variant (ties → lexicographic
-  // min) — resolved window-free with a max-per-cluster aggregate and a
-  // tie-filtered min, so map-side partials survive and no per-cluster
-  // sort exists.
-  def goldenRecords(spark: SparkSession, dir: String): DataFrame = {
-    // q153's dictionary discipline (round 19): the dict is read FOUR
-    // times here (both fuzzy-join sides, the id map, the component
-    // roster, the golden-row pick) and each driver action inside the
-    // Components loop would otherwise re-run the part-table scan+agg —
-    // one eager lean checkpoint of the O(names) frame makes every
-    // re-read a stored-rows scan
-    val dict = org.apache.spark.sql.graft.LeanCheckpoint.localCheckpoint(
-      Tables.part(spark, dir)
-        .groupBy(col("p_name").as("name"))
-        .agg(count(lit(1)).as("n_rows"), min("p_partkey").as("id")))
-    val pairs = Linkage.fuzzyPairs(
-      dict.select("name", "n_rows"),
-      nm => element_at(split(nm, " "), -1), FuzzyMaxDist)
-    val ids = dict.select("name", "id")
-    val edges = pairs
-      .join(ids.select(col("name").as("name_a"), col("id").as("src")), "name_a")
-      .join(ids.select(col("name").as("name_b"), col("id").as("dst")), "name_b")
-      .select("src", "dst")
-    val labels = Components.connectedComponents(dict.select("id"), edges)
-    val g = dict.join(labels, "id")
-    val mx = g.groupBy("label").agg(max("n_rows").as("mx"),
-      count(lit(1)).as("n_names"), sum("n_rows").as("n_parts"))
-    g.join(mx, "label").filter(col("n_rows") === col("mx"))
-      .groupBy(col("label").as("root_key"), col("n_names"), col("n_parts"))
-      .agg(min("name").as("canon_name"))
-      .select("root_key", "canon_name", "n_names", "n_parts")
-      .orderBy("root_key")
-  }
-
-  // --- q166: CDC apply (MERGE-INTO roundtrip) --------------------------------------
-  // The consumer side of q130's change feed: applyDelta folds the diff
-  // back onto the T1 snapshot, and the oracle computes the T2 snapshot
-  // DIRECTLY — so the gate proves the roundtrip identity
-  // applyDelta(old, diff(old, new)) == new, which is the contract every
-  // incremental gold table built from CDC rests on.
-  def cdcApply(spark: SparkSession, dir: String): DataFrame = {
-    val t1 = orderWindowSnapshot(spark, dir, SnapT1)
-    val t2 = orderWindowSnapshot(spark, dir, SnapT2)
-    val delta = SnapshotDiff.diff(t1, t2,
-      keys = Seq("o_custkey"), compareCols = Seq("n_orders", "rev_dec"))
-    SnapshotDiff.applyDelta(t1, delta,
-        keys = Seq("o_custkey"), compareCols = Seq("n_orders", "rev_dec"))
-      .select(col("o_custkey"), col("n_orders"),
-        col("rev_dec").cast("double").as("revenue"))
-      .orderBy("o_custkey")
-  }
-
-  // --- q167: clipped inventory balance (non-associative scan) ----------------------
-  // Running balance with a floor — balance_d = max(0, balance_{d-1} +
-  // delta_d) — is NOT associative, so no partial-agg/window trick
-  // exists: it must fold sequentially per key. Same bounded-frame HOF
-  // template as q160 (per-part O(active-days) frames, partition-
-  // parallel across parts), all int64, oracle = recursive CTE.
-  def inventoryBalance(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.lineitem(spark, dir)
-      .select(col("l_partkey").as("part"), to_date(col("l_shipdate")).as("day"),
-        when(col("l_returnflag") === "R", -col("l_quantity"))
-          .otherwise(col("l_quantity")).cast("long").as("delta"))
-      .groupBy("part", "day").agg(sum("delta").as("d"))
-    daily.groupBy("part")
-      .agg(sort_array(collect_list(struct(col("day"), col("d")))).as("vs"))
-      .select(col("part"), explode(expr(
-        """aggregate(vs,
-             named_struct('prev', cast(0 as bigint),
-                          'res', cast(array() as array<struct<day:date,bal:bigint>>)),
-             (acc, x) -> named_struct(
-               'prev', greatest(cast(0 as bigint), acc.prev + x.d),
-               'res', array_append(acc.res,
-                 named_struct('day', x.day,
-                   'bal', greatest(cast(0 as bigint), acc.prev + x.d)))),
-             acc -> acc.res)""")).as("r"))
-      .select(col("part"), col("r.day").as("day"), col("r.bal").as("balance"))
-      .orderBy("part", "day")
-  }
-
-  // --- q168: percent-of-parent hierarchy shares ------------------------------------
-  // The hierarchical twin of q36's share-of-total: nation revenue as a
-  // share of its region, region as a share of the grand total. All
-  // sums decimal-exact; each share is ONE double division. One fact
-  // scan; customer/nation/region broadcast.
-  def shareOfParent(spark: SparkSession, dir: String): DataFrame = {
-    val rev = Tables.orders(spark, dir)
-      .join(broadcast(Tables.customer(spark, dir)
-        .select("c_custkey", "c_nationkey")),
-        col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(spark, dir)
-        .select("n_nationkey", "n_name", "n_regionkey")),
-        col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(spark, dir)
-        .select("r_regionkey", "r_name")),
-        col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("r_name").as("region"), col("n_name").as("nation"))
-      .agg(sum(dec2(col("o_totalprice"))).as("rev_dec"))
-    val regions = rev.groupBy("region").agg(sum("rev_dec").as("reg_dec"))
-    val total = rev.agg(sum("rev_dec").as("tot_dec"))
-    rev.join(broadcast(regions), "region")
-      .crossJoin(broadcast(total))
-      .select(col("region"), col("nation"),
-        col("rev_dec").cast("double").as("revenue"),
-        (col("rev_dec").cast("double") / col("reg_dec").cast("double"))
-          .as("share_in_region"),
-        (col("reg_dec").cast("double") / col("tot_dec").cast("double"))
-          .as("region_share"))
-      .orderBy("region", "nation")
-  }
-
-  // --- q169: audio feature extraction through the REAL codec, under the gate -----
-  // The multimodal decode path proven end-to-end: deterministic 16-bit
-  // PCM samples (s_i = ((id·31 + i·7) mod 2048) − 1024) are ENCODED into
-  // real RIFF/WAVE containers (Multimodal.encodeWav16), then the real
-  // byte-level container walk + PCM pass (audioFeaturesBatched) computes
-  // windowed RMS / peak / zero-crossings — and the oracle computes the
-  // SAME features from the closed-form samples, no codec involved. Every
-  // per-window Σs² is an exact integer < 2^53, so rms = sqrt(Σs²/n) is
-  // bit-identical. Payload bytes never leave the partition.
-  val AudioSamples = 1024
-  val AudioWindow = 256
-  val AudioDocMod = 5L
-
-  def audioRms(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ids = Tables.documents(spark, dir)
-      .filter(pmod(col("doc_id"), lit(AudioDocMod)) === 0)
-      .select(col("doc_id")).as[Long]
-    val media = ids.map { id =>
-      val s = Array.tabulate(AudioSamples) { i =>
-        (((id * 31 + i * 7) % 2048) - 1024).toShort
-      }
-      (id, Multimodal.encodeWav16(s))
-    }.toDF("doc_id", "payload")
-    Multimodal.audioFeaturesBatched(media, AudioWindow)
-      .toDF()
-      .select(col("doc_id"), col("window_idx"), col("n_samples"),
-        col("rms"), col("peak"), col("zero_crossings"))
-      .orderBy("doc_id", "window_idx")
-  }
-
-  // --- q170: column-profile drift between snapshot windows -------------------------
-  // The schema-health twin of q130's row-level diff: per declared
-  // column, compare T1-window vs T2-window profiles (rows, nulls,
-  // distinct count) — the drift report that catches an upstream feed
-  // going silently null or cardinality-shifting. One scan per window.
-  private def windowProfile(spark: SparkSession, dir: String, asOf: String,
-                            tag: String): DataFrame = {
-    val hi = java.time.LocalDate.parse(asOf)
-    val lo = hi.minusDays(SnapWindowDays)
-    val w = Tables.orders(spark, dir)
-      .filter(col("o_orderdate") >= ntzTs(s"$lo 00:00:00") &&
-        col("o_orderdate") < ntzTs(s"$asOf 00:00:00"))
-    w.agg(
-      count(lit(1)).as("a"),
-      sum(when(col("o_custkey").isNull, 1L).otherwise(0L)).as("b"),
-      countDistinct(col("o_custkey")).as("c"),
-      sum(when(col("o_orderpriority").isNull, 1L).otherwise(0L)).as("d"),
-      countDistinct(col("o_orderpriority")).as("e"))
-      .select(expr(
-        s"""stack(2,
-            'o_custkey', a, b, c,
-            'o_orderpriority', a, d, e)
-            AS (col_name, n_${tag}, nulls_${tag}, ndv_${tag})"""))
-  }
-
-  def profileDrift(spark: SparkSession, dir: String): DataFrame =
-    windowProfile(spark, dir, SnapT1, "t1")
-      .join(windowProfile(spark, dir, SnapT2, "t2"), "col_name")
-      .orderBy("col_name")
-
-  // --- q171: session entry/exit analysis -------------------------------------------
-  // Which event type opens and closes sessions: gap-based session
-  // assignment (one per-user window — the q32 machinery), then entry =
-  // min-struct / exit = max-struct over (ts, event_id) per session
-  // (window-free after the assignment, map-side partials survive), and
-  // a count per (entry_type, exit_type) pair.
-  def sessionEntryExit(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-      .withColumn("session_seq", Sessionize.sessionSeq("user_id", "ts",
-        Seq("event_id"), SessionGapMicros))
-      .groupBy("user_id", "session_seq")
-      .agg(
-        min(struct(unix_micros(col("ts")).as("us"), col("event_id"),
-          col("event_type"))).as("__first"),
-        max(struct(unix_micros(col("ts")).as("us"), col("event_id"),
-          col("event_type"))).as("__last"))
-      .groupBy(col("__first.event_type").as("entry_type"),
-        col("__last.event_type").as("exit_type"))
-      .agg(count(lit(1)).as("n_sessions"))
-      .orderBy("entry_type", "exit_type")
-
-  // --- q172: image decode through the REAL codec, under the gate ------------------
-  // q169's image twin: a deterministic grayscale raster (g(x,y) =
-  // (id·7 + 3x + 5y) mod 256) is PNG-encoded via javax.imageio, decoded
-  // back through the real container path (header-only dims + full
-  // raster pass), and the pixel-sum statistic is checked against the
-  // closed form 3·Σg — PNG is lossless, so the round-trip is exact.
-  // Format name and byte length are codec-internal (not projected).
-  val ImgW = 32
-  val ImgH = 16
-  val ImgDocMod = 7L
-
-  def imageDecode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ids = Tables.documents(spark, dir)
-      .filter(pmod(col("doc_id"), lit(ImgDocMod)) === 0)
-      .select(col("doc_id")).as[Long]
-    val media = ids.map { id =>
-      val img = new java.awt.image.BufferedImage(ImgW, ImgH,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var y = 0
-      while (y < ImgH) {
-        var x = 0
-        while (x < ImgW) {
-          val g = ((id * 7 + x * 3 + y * 5) % 256).toInt
-          img.setRGB(x, y, (g << 16) | (g << 8) | g)
-          x += 1
-        }
-        y += 1
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      (id, bos.toByteArray)
-    }.toDF("doc_id", "payload")
-    Multimodal.decodeImageBatched(media).toDF()
-      .select(col("doc_id"), col("width"), col("height"), col("px_sum"))
-      .orderBy("doc_id")
-  }
-
-  // --- q173: rescue-reader quarantine under the gate --------------------------------
-  // The Autoloader-rescue contract proven against the oracle: JSON lines
-  // are written with a deliberate poison pattern (every 7th event's
-  // numeric `value` field becomes the string "N/A" — schema-violating),
-  // read back through Sources.jsonWithRescue + splitRescued, and the
-  // clean/quarantined populations are summarized. The oracle knows the
-  // poison rule, so it derives both populations from `events` directly —
-  // the reader must neither drop nor mangle a single row.
-  def rescueAudit(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val tmp = Sessions.tempDir("graft_rescue_")
-    Tables.events(spark, dir)
-      .select(col("event_id"), dec2(col("value")).as("v"))
-      .as[(Long, java.math.BigDecimal)]
-      .map { case (id, v) =>
-        if (id % 7 == 0) s"""{"event_id":$id,"value":"N/A"}"""
-        else if (v == null) s"""{"event_id":$id,"value":null}"""
-        else s"""{"event_id":$id,"value":${v.toPlainString}}"""
-      }
-      .write.mode("overwrite").text(s"$tmp/events_json")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DataTypes.createDecimalType(18, 2))))
-    val (clean, rescued) = graft.sources.Sources.splitRescued(
-      graft.sources.Sources.jsonWithRescue(spark, s"$tmp/events_json", schema))
-    clean.agg(count(lit(1)).as("n_clean"),
-        sum(col("value")).cast("double").as("clean_value_sum"))
-      .crossJoin(rescued.agg(count(lit(1)).as("n_rescued"),
-        countDistinct(col("event_id")).as("rescued_ids")))
-      .select("n_clean", "clean_value_sum", "n_rescued", "rescued_ids")
-  }
-
-  // --- q174: snapshot time travel under the gate ------------------------------------
-  // Three successive Snapshots.commit publishes of a growing keyed state
-  // table (per-type event counts up to three watermarks), then each
-  // version read back via readAt — the commit/manifest/time-travel
-  // protocol itself on the DuckDB gate. The oracle recomputes every
-  // version's content from the base table with the same watermark
-  // literals. retainManifests keeps all three readable.
-  val TravelTs: Seq[String] = Seq(
-    "2024-01-10 00:00:00", "2024-01-20 00:00:00", "2024-02-01 00:00:00")
-
-  def timeTravel(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.Snapshots
-    val tmp = Sessions.tempDir("graft_travel_")
-    val target = s"$tmp/state"
-    TravelTs.foreach { hi =>
-      Snapshots.commit(
-        Tables.events(spark, dir)
-          .filter(col("ts") < utcTs(hi))
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n_events")),
-        target, retainManifests = 10)
-    }
-    val vs = Snapshots.versions(spark, target).sorted.takeRight(TravelTs.size)
-    vs.zipWithIndex.map { case (v, i) =>
-      Snapshots.readAt(spark, target, v)
-        .select(lit(i + 1).cast("int").as("version"), col("event_type"),
-          col("n_events"))
-    }.reduce(_ unionByName _)
-      .orderBy("version", "event_type")
-  }
-
-  // --- q175: the medallion pipeline itself, under the gate --------------------------
-  // TWO incremental Medallion runs (watermark advanced between them) of
-  // an SCD1 gold table over events — extraction slices, DQ enforcement,
-  // bucketed gold merges, watermark store — and the FINAL gold content
-  // is hash-compared against one declarative latest-per-key query. The
-  // gate therefore proves incremental merge ≡ full recompute across a
-  // watermark advance, which is the medallion architecture's core
-  // correctness claim.
-  private def tsFromUtc(s: String): java.sql.Timestamp =
-    java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
-      utcMicros(s) / 1000000L, (utcMicros(s) % 1000000L) * 1000L))
-
-  def medallionRun(spark: SparkSession, dir: String): DataFrame = {
-    import graft.pipeline.Medallion
-    val tmp = Sessions.tempDir("graft_med_")
-    val spec = Medallion.TableSpec("events_gold", Seq("user_id"), "ts",
-      tieCols = Seq("event_id"),
-      rules = Seq(Quality.Rule("user_id_present", col("user_id").isNull)))
-    val src = (_: String) => Tables.events(spark, dir)
-      .select("user_id", "event_id", "ts", "event_type")
-    Medallion.run(spark, Seq(spec), src, tmp, tsFromUtc(WmLow))
-    Medallion.run(spark, Seq(spec), src, tmp, tsFromUtc(WmHigh))
-    graft.sources.Snapshots.read(spark, s"$tmp/gold/events_gold")
-      .select("user_id", "ts", "event_id", "event_type")
-      .orderBy("user_id")
-  }
-
-  // --- q176: schema evolution across reader generations, under the gate -------------
-  // Two landing-file generations (the second adds a column), read with
-  // Sources.jsonEvolving + SchemaStore: the first call pins the v1
-  // schema, the second admits the new column and null-pads v1 rows.
-  // Money rides integer cents in the JSON so no float inference is
-  // involved. The oracle derives both generations from `events`.
-  def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val tmp = Sessions.tempDir("graft_evolve_")
-    val landing = s"$tmp/landing"
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), (dec2(col("value")) * 100).cast("long").as("cents"),
-        col("event_type"))
-    ev.filter(col("event_id") % 2 === 0)
-      .select(col("event_id"), col("cents")).as[(Long, Long)]
-      .map { case (id, c) => s"""{"event_id":$id,"cents":$c}""" }
-      .write.mode("overwrite").text(landing)
-    val store = new graft.sources.Sources.SchemaStore(spark, s"$tmp/_schema")
-    graft.sources.Sources.jsonEvolving(spark, landing, store).count() // pin v1
-    ev.filter(col("event_id") % 2 === 1)
-      .select(col("event_id"), col("cents"), col("event_type"))
-      .as[(Long, Long, String)]
-      .map { case (id, c, t) =>
-        s"""{"event_id":$id,"cents":$c,"event_type":"$t"}"""
-      }
-      .write.mode("append").text(landing)
-    graft.sources.Sources.jsonEvolving(spark, landing, store)
-      .agg(count(lit(1)).as("n_rows"),
-        sum(when(col("event_type").isNull, 1L).otherwise(0L)).as("n_padded"),
-        countDistinct(col("event_type")).as("n_types"),
-        sum(col("cents")).as("cents_sum"))
-      .select("n_rows", "n_padded", "n_types", "cents_sum")
-  }
-
-  // --- q177: streaming SCD1 sink (foreachBatch + bucketed commits), under the gate --
-  // The foreachBatch SCD1 upsert sink run as a REAL stream: micro-batches
-  // merge into a bucketed Snapshots store (latest row per user), and the
-  // final store content must equal the one-shot declarative latest-per-
-  // key query — the streaming/batch convergence contract of the
-  // reference's DLT SCD1 flow, on the hash gate.
-  def streamedScd1(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSpark(spark0)
-    val tmp = Sessions.tempDir("graft_scd1s_")
-    val q = Tables.eventsStream(spark, dir)
-      .select("user_id", "event_id", "ts", "event_type")
-      .writeStream
-      .foreachBatch(graft.streaming.ScdSinks.scd1(
-        s"$tmp/scd1", Seq("user_id"), Seq("ts", "event_id")) _)
-      .option("checkpointLocation", s"$tmp/cp")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.sources.Snapshots.read(spark, s"$tmp/scd1")
-      .select("user_id", "ts", "event_id", "event_type")
-      .orderBy("user_id")
-  }
-
-  // --- q178: hive-partitioned write + partition-pruned read, under the gate ---------
-  // Sources.writePartitioned lays events out by UTC day; the read-back
-  // carries a day-range predicate that must prune at the DIRECTORY level
-  // (PlanSpec pins non-empty PartitionFilters) — the layout/pruning
-  // contract that decides scan cost at 100 TB, content-checked against
-  // the oracle's unpartitioned filter.
-  def partitionedWrite(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = Sessions.tempDir("graft_partw_")
-    graft.sources.Sources.writePartitioned(
-      Tables.events(spark, dir)
-        .select(col("event_id"), col("user_id"), col("ts"),
-          dec2(col("value")).as("v"), utcDate(col("ts")).as("day")),
-      s"$tmp/events_by_day", Seq("day"), saveMode = "overwrite")
-    spark.read.parquet(s"$tmp/events_by_day")
-      .filter(col("day") >= to_date(lit("2024-01-10")) &&
-        col("day") < to_date(lit("2024-01-20")))
-      .groupBy("day")
-      .agg(count(lit(1)).as("n_events"),
-        countDistinct(col("user_id")).as("n_users"),
-        sum(col("v")).cast("double").as("value_sum"))
-      .orderBy("day")
-  }
-
-  // --- q179: the graft_* SQL function surface, under the gate -----------------------
-  // GraftFunctions registers the codegen kernels as SQL functions
-  // (SparkSessionExtensions path / imperative registration); this query
-  // exercises them the way a SQL-first user would — in `spark.sql`
-  // text — and the oracle recomputes every kernel in DuckDB SQL
-  // (fingerprint fold, NFC+casefold twin, shingle count, first MinHash
-  // position, 32-bit SimHash majority word).
-  def sqlFunctions(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
-    Tables.documents(spark, dir)
-      .filter(col("text").isNotNull &&
-        size(TextAnalysis.words(col("text"))) >= JaccardN)
-      .createOrReplaceTempView("graft_docs_q179")
-    spark.sql(
-      s"""SELECT doc_id,
-                 graft_fingerprint(text) AS fp,
-                 graft_fingerprint(graft_nfc_casefold(text)) AS fp_folded,
-                 size(graft_ngrams(split(text, ' '), $JaccardN)) AS n_shingles,
-                 element_at(graft_minhash(graft_ngrams(split(text, ' '),
-                   $JaccardN)), 1) AS mh1,
-                 graft_simhash(graft_ngrams(split(text, ' '), $JaccardN))
-                   AS simhash
-          FROM graft_docs_q179""")
-      .orderBy("doc_id")
-  }
-
-  // --- q180: late-arrival audit ------------------------------------------------------
-  // The watermark-safety report (Incremental.lateArrivalAudit): how many
-  // rows of a feed land AT OR BELOW an already-consumed watermark — the
-  // number that decides whether a CDC consumer needs reprocessing.
-  def lateArrivals(spark: SparkSession, dir: String): DataFrame =
-    Incremental.lateArrivalAudit(
-      Tables.events(spark, dir)
-        .filter(col("event_type") === "purchase").select("ts"),
-      "ts", utcTs(WmHigh))
-
-  // --- q181: DQ quarantine report -----------------------------------------------------
-  // Quality.split's quarantine side (rows + the failed_rules array that
-  // names every violated rule) summarized per violation signature — the
-  // DLT quarantine-table pattern. Rule order is part of the contract:
-  // failed_rules preserves declaration order, reproduced by the oracle.
-  def quarantineReport(spark: SparkSession, dir: String): DataFrame = {
-    val rules = Seq(
-      Quality.Rule("value_cap", col("value") >= 450.0),
-      Quality.Rule("user_mod97", pmod(col("user_id"), lit(97L)) === 0))
-    val (_, quarantined) = Quality.split(
-      Tables.events(spark, dir)
-        .select("event_id", "user_id", "event_type", "value"), rules)
-    quarantined
-      .groupBy(array_join(col("failed_rules"), ",").as("violations"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(dec2(col("value"))).cast("double").as("value_sum"))
-      .orderBy("violations")
-  }
-
-  // --- q182: config-rendered star SQL, executed ---------------------------------------
-  // StarSchema.renderSql turns the star CONFIG into ANSI SQL text (the
-  // reference's Jinja notebook renders its config the same way); here
-  // the rendered text itself runs through spark.sql and the aggregate
-  // over it is hash-compared — the generator, not just the DataFrame
-  // composer, is correctness-gated.
-  def renderedStar(spark: SparkSession, dir: String): DataFrame = {
-    Tables.lineitem(spark, dir).createOrReplaceTempView("li_q182")
-    Tables.orders(spark, dir).createOrReplaceTempView("ord_q182")
-    val sqlText = StarSchema.renderSql(
-      "li_q182", Seq("l_extendedprice", "l_discount"),
-      Seq(StarSchema.DimRef("ord_q182", Seq("o_orderpriority"),
-        "l_orderkey", "o_orderkey")),
-      where = Some("l_discount >= 0.05"))
-    spark.sql(sqlText)
-      .groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n_items"),
-        sum(Cols.dec2(col("l_extendedprice"))).cast("double").as("revenue"))
-      .orderBy("o_orderpriority")
-  }
-
-  // --- q183: bitmap-index membership intersection ------------------------------------
-  // The OLAP bitmap-join: per (event_type, 32-user word) — 32 user bits
-  // carried inside an int64 word, see the shift note below — a bitmap
-  // built with ONE bit_or hash-agg (idempotent — no distinct pass
-  // needed), then audience overlap between every type pair is a
-  // word-aligned AND + popcount, never a row-level join on users. At
-  // 100 TB the per-type bitmap is |user-domain|/32 words — membership
-  // set operations collapse to bitwise aggregates over co-partitioned
-  // words, the reason low-cardinality dimensions get bitmap indexes.
-  def bitmapOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val words = Tables.events(spark, dir)
-      .select(col("event_type"), expr("user_id div 32").as("w"),
-        // 32-bit words inside int64: bit 63 would overflow DuckDB's
-        // checked << (and flip the sign), 32 bits keep both engines exact
-        expr("shiftleft(1L, cast(pmod(user_id, 32) as int))").as("m"))
-      .groupBy("event_type", "w")
-      .agg(expr("bit_or(m)").as("bits"))
-    val totals = words.groupBy("event_type")
-      .agg(sum(expr("bit_count(bits)")).as("n_users"))
-    val a = words.alias("a")
-    val b = words.alias("b")
-    a.join(b, col("a.w") === col("b.w") &&
-        col("a.event_type") < col("b.event_type"))
-      .groupBy(col("a.event_type").as("type_a"),
-        col("b.event_type").as("type_b"))
-      .agg(sum(expr("bit_count(a.bits & b.bits)")).as("n_both"))
-      .join(broadcast(totals.select(col("event_type").as("type_a"),
-        col("n_users").as("n_a"))), "type_a")
-      .join(broadcast(totals.select(col("event_type").as("type_b"),
-        col("n_users").as("n_b"))), "type_b")
-      .select(col("type_a"), col("type_b"), col("n_a"), col("n_b"),
-        col("n_both"),
-        (col("n_both").cast("double") / (col("n_a") + col("n_b") - col("n_both")))
-          .as("jaccard"))
-      .orderBy("type_a", "type_b")
-  }
-
-  // --- q184: LSH candidate-quality evaluation harness --------------------------------
-  // Before trusting an LSH geometry at corpus scale you MEASURE it:
-  // candidate pairs from the banded MinHash path (q22) against exact
-  // ground truth (q21's df-capped Jaccard ≥ 0.8), reported as one
-  // precision/recall row. Both sides are the already-gated operators;
-  // the metrics are two integer-ratio divisions.
-  def lshEvaluation(spark: SparkSession, dir: String): DataFrame = {
-    val cands = dedupMinHashLsh(spark, dir).select("doc_a", "doc_b")
-    val truth = dedupNgramJaccard(spark, dir).select("doc_a", "doc_b")
-    val hits = cands.join(truth, Seq("doc_a", "doc_b"))
-      .agg(count(lit(1)).as("n_hits"))
-    cands.agg(count(lit(1)).as("n_candidates"))
-      .crossJoin(truth.agg(count(lit(1)).as("n_true")))
-      .crossJoin(hits)
-      .select(col("n_candidates"), col("n_true"), col("n_hits"),
-        (col("n_hits").cast("double") / col("n_candidates")).as("precision"),
-        (col("n_hits").cast("double") / col("n_true")).as("recall"))
-  }
-
-  // --- q185: SCD2 with partial history tracking ----------------------------------
-  // q03's build under DLT's track_history_column_list contract
-  // (DimArtist.py:87-103): only event_type is TRACKED — a change row
-  // whose event_type equals the current version's updates that version
-  // in place (latest event_id/value win, effective_from survives)
-  // instead of opening a new validity interval. The audit-column-churn
-  // case every real SCD2 consumer hits: untracked noise must not
-  // version the dimension.
-  def scd2Tracked(spark: SparkSession, dir: String): DataFrame =
-    Scd.scd2FromChangelogTracked(
-      Tables.events(spark, dir)
-        .select("user_id", "event_id", "event_type", "value", "ts"),
-      keys = Seq("user_id"), seqCol = "ts", tieCols = Seq("event_id"),
-      trackCols = Seq("event_type"))
-      .select("user_id", "event_id", "event_type", "value",
-        "effective_from", "effective_to", "is_current")
-
-  // --- q258: SCD2 with EXCEPT-form history tracking ---------------------------------
-  // DLT's `track_history_except_column_list` (DimDate.py:19 — the last
-  // unclaimed reference feature, VERDICT r15 item 4): q185 names the
-  // columns that DO version; this names the ones that DON'T — the right
-  // form when the untracked set (measures, audit churn) is the smaller
-  // list, and safer under schema growth (a new payload column is
-  // tracked by default instead of silently un-versioned). Here `value`
-  // (the churning measure) is excepted, so the tracked set derives to
-  // {event_type, day}: a new validity interval opens when the type OR
-  // the activity day changes, while value churn only updates the
-  // current version in place (latest value wins, effective_from
-  // survives). The except list is load-bearing — without it every
-  // value change would open an interval and the build degenerates to
-  // q03's full versioning. Same single-shuffle posture as q185.
-  def scd2TrackedExcept(spark: SparkSession, dir: String): DataFrame =
-    Scd.scd2FromChangelogTrackedExcept(
-      Tables.events(spark, dir)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), Cols.utcDate(col("ts")).as("day"), col("ts")),
-      keys = Seq("user_id"), seqCol = "ts", tieCols = Seq("event_id"),
-      exceptCols = Seq("value"))
-      .select("user_id", "event_id", "event_type", "value", "day",
-        "effective_from", "effective_to", "is_current")
-
-  // --- q187: triangle counting via degree orientation -----------------------------
-  // Graph-analytics breadth past PageRank/CC: triangles + the global
-  // clustering coefficient of the co-purchase graph. Degree orientation
-  // bounds wedge enumeration at O(m^1.5) whatever the degree
-  // distribution (see operators/Triangles) — the plan that survives a
-  // power-law co-purchase graph at 100 TB where naive wedge joins melt
-  // on the hottest item. Exact longs; one double division.
-  def triangleCount(spark: SparkSession, dir: String): DataFrame =
-    Triangles.triangleStats(
-      copurchaseEdges(spark, dir).select("item_a", "item_b"),
-      "item_a", "item_b")
-
-  // --- q188: prefix-filtered exact-Jaccard join ------------------------------------
-  // The LOSSLESS scale path for exact similarity join (PPJoin prefix
-  // principle): q21's df cap bounds fan-out by DROPPING boilerplate
-  // shingles (lossy), LSH (q22) recalls probabilistically — prefix
-  // filtering keeps EVERY qualifying pair while joining only each doc's
-  // |t|−⌈θ|t|⌉+1 rarest tokens (ascending-df global order puts the
-  // smallest-df² fan-out in the prefix). Threshold enters the prefix
-  // arithmetic as the rational 4/5 so the recall proof is integer-exact.
-  // Oracle = the UNBOUNDED exact-Jaccard join (no df cap) — the gate
-  // proves losslessness, not just agreement with another approximation.
-  val PrefixThrNum = 4L
-  val PrefixThrDen = 5L
-
-  def prefixJaccard(spark: SparkSession, dir: String): DataFrame =
-    NearDup.prefixJaccardPairs(Tables.documents(spark, dir), "doc_id", "text",
-        JaccardN, PrefixThrNum, PrefixThrDen)
-      .orderBy("doc_a", "doc_b")
-
-  // --- q189: native HLL sketch AGGREGATE -------------------------------------------
-  // q121's estimator as a TypedImperativeAggregate (plans/SketchAggs):
-  // the m-byte register buffer rides Spark's partial-aggregation
-  // machinery — map-side partials absorb rows locally, the shuffle
-  // moves ONE buffer per (partition × group), and the sketch composes
-  // with other aggregates in the same agg() — one scan, one shuffle,
-  // the shape the register-frame form can't express. Estimate
-  // arithmetic identical to q121 ⇒ oracle-exact per group.
-  def hllNativeAgg(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy("l_returnflag")
-      .agg(graft.plans.SketchAggs.hllEstimateAgg(col("l_orderkey"), HllM)
-          .as("est_distinct"),
-        countDistinct(col("l_orderkey")).as("exact_distinct"))
-      .select(col("l_returnflag"), col("exact_distinct"), col("est_distinct"),
-        (col("est_distinct") / col("exact_distinct").cast("double"))
-          .as("est_ratio"))
-      .orderBy("l_returnflag")
-
-  // --- q190: Misra–Gries heavy hitters (candidates → exact filter) ----------------
-  // The O(k)-state frequent-items path: the MG aggregate's candidate set
-  // is partition-order dependent (inherent), but its GUARANTEE — every
-  // item with frequency > N/(k+1) survives the merged summary — is not.
-  // So the deterministic pipeline is candidates → exact counts of
-  // candidates ONLY (the second scan's agg is candidate-bounded, not
-  // key-cardinality-bounded) → integer threshold filter. At 100 TB this
-  // replaces a billion-key hash-agg with a 64-counter buffer per
-  // partition plus a tiny candidate count. Oracle = plain GROUP BY
-  // HAVING — the gate fails if MG ever drops a true heavy hitter.
-  val MgK = 64
-  val MgHeavyDen = 8L
-
-  def mgHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select(col("event_type"), xxhash64(col("event_type")).as("k"))
-    val cands = ev
-      .agg(graft.plans.SketchAggs.misraGriesTopK(col("k"), MgK).as("cs"))
-      .select(explode(col("cs")).as("c"))
-      .select(col("c.item").as("k"))
-    val total = Tables.events(spark, dir).agg(count(lit(1)).as("total"))
-    ev.join(broadcast(cands), Seq("k"), "left_semi")
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_events"))
-      .crossJoin(broadcast(total))
-      .filter(col("n_events") * lit(MgHeavyDen) >= col("total"))
-      .select(col("event_type"), col("n_events"),
-        (col("n_events").cast("double") / col("total").cast("double"))
-          .as("share"))
-      .orderBy("event_type")
-  }
-
-  // --- q191: native KMV aggregate --------------------------------------------------
-  // q38's estimator as a TypedImperativeAggregate: the k-min distinct
-  // hash set is a pure SET function of the input (no insertion-order
-  // dependence, unlike MG), so per-group estimates are bit-deterministic
-  // and ORACLE-EXACT — the second member of the native mergeable-sketch
-  // family next to q189's HLL (max algebra vs k-min algebra).
-  def kmvNativeAgg(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy("l_returnflag")
-      .agg(graft.plans.SketchAggs.kmvEstimateAgg(col("l_orderkey"), KmvK)
-          .as("est_distinct"),
-        countDistinct(col("l_orderkey")).as("exact_distinct"))
-      // groups with fewer than k distinct keys estimate to null (exact
-      // counting is cheaper than any sketch there) — drop them, matching
-      // BOTH the oracle's inner join on the k-th hash (which has no row
-      // for a sub-k group) and groupedKmvDistinct's emit-no-row contract;
-      // without this a thin group would surface a null-estimate row the
-      // oracle doesn't have
-      .filter(col("est_distinct").isNotNull)
-      .select(col("l_returnflag"), col("exact_distinct"), col("est_distinct"),
-        (col("est_distinct") / col("exact_distinct").cast("double"))
-          .as("est_ratio"))
-      .orderBy("l_returnflag")
-
-  // --- q192: Cramér's V categorical association ------------------------------------
-  // Chi-square association strength between l_returnflag and
-  // l_linestatus over the DENSIFIED contingency grid (structural zeros
-  // contribute e each — see Analytics.cramersV, which carries the full
-  // determinism rationale).
-  def cramersV(spark: SparkSession, dir: String): DataFrame =
-    Analytics.cramersV(Tables.lineitem(spark, dir),
-      "l_returnflag", "l_linestatus")
-
-  // --- q193: Spark's NATIVE session_window aggregation -----------------------------
-  // The built-in session-window operator next to the hand-rolled
-  // machinery (q32's lag/cumsum windows, q127's flatMapGroupsWithState
-  // stream): `session_window(ts, gap)` plans through
-  // UpdatingSessionsIterator + a session-merging aggregate — Spark's own
-  // answer to gap sessionization, and the one that carries straight into
-  // Structured Streaming. Boundary semantics differ from q32 by one
-  // epsilon (a new session opens at gap ≥ 6h, vs q32's strict >;
-  // window end = last event + gap) — the oracle reproduces the
-  // session_window contract, not q32's. Decimal-exact value sums.
-  def sessionWindowAgg(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy(col("user_id"), session_window(col("ts"), "6 hours").as("w"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(dec2(col("value"))).cast("double").as("total_value"))
-      .select(col("user_id"), col("w.start").as("session_start"),
-        col("w.end").as("session_end"), col("n_events"), col("total_value"))
-
-  // --- q194: q94's CMS report through the NATIVE additive aggregate ----------------
-  // Fourth member of the native sketch-aggregate family (HLL max / KMV
-  // k-min / MG counters / CMS additive): the depth×width grid rides
-  // partial aggregation as ONE long[] buffer per partition — the explode
-  // ×depth + shuffle of the frame form collapses to a vector-add merge.
-  // Non-zero cells come back as exactly the cmsCounters frame, so the
-  // report (head words' exact counts vs CMS estimates) and its oracle
-  // are IDENTICAL to q94's — the gate proves the two construction paths
-  // agree cell-for-cell.
-  def cmsNativeAgg(spark: SparkSession, dir: String): DataFrame = {
-    val words = Tables.documents(spark, dir)
-      .select(explode(TextAnalysis.words(col("text"))).as("word"))
-    val fp = graft.plans.VectorExprs.polyFingerprint(col("word"))
-    val counters = words
-      .agg(graft.plans.SketchAggs.cmsCountersAgg(fp, CmsDepth, CmsWidth).as("cs"))
-      .select(explode(col("cs")).as("c"))
-      .select(col("c.d").as("d"), col("c.bucket").as("bucket"),
-        col("c.cnt").as("cnt"))
-    val top = words.groupBy("word").agg(count(lit(1)).as("exact_n"))
-      .orderBy(col("exact_n").desc, col("word")).limit(CmsTopK)
-    graft.functions.Sketches.cmsEstimates(top, fp, counters,
-        CmsDepth, CmsWidth, "cms_est")
-      .withColumn("overcount", col("cms_est") - col("exact_n"))
-      .orderBy(col("exact_n").desc, col("word"))
-  }
-
-  // --- q195: per-group OLS revenue trend (exact integer moments) -------------------
-  // Least-squares slope/intercept/R² of daily revenue against the day
-  // number, per return flag — the trend statistic a KPI dashboard fits.
-  // NOT Spark's regr_slope/corr (their double partial-sums are
-  // partition-order dependent): the five moments Σx, Σy, Σxy, Σx², Σy²
-  // accumulate as EXACT int64 over kilodollar-quantized daily revenue
-  // (the q93 quantize-then-moment recipe; every product and the n·Σ
-  // cross terms stay far below int64), and doubles appear only in the
-  // final fixed-shape slope/intercept/R² expressions — so both engines
-  // round the same int64 values through the same IEEE ops. Thin or
-  // variance-free groups yield nulls, not divide-by-zero.
-  def revenueTrend(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.lineitem(spark, dir)
-      .groupBy(col("l_returnflag"),
-        to_date(col("l_shipdate")).as("day"))
-      .agg(sum(discounted(col("l_extendedprice"), col("l_discount"))).as("rev_dec"))
-      .select(col("l_returnflag"),
-        datediff(col("day"), lit("1970-01-01").cast("date"))
-          .cast("long").as("x"),
-        floor(col("rev_dec").cast("double") / lit(AnomalyUnit))
-          .cast("long").as("y"))
-    val m = daily.groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n_days"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
-    val dXY = col("n_days") * col("sxy") - col("sx") * col("sy")
-    val dXX = col("n_days") * col("sxx") - col("sx") * col("sx")
-    val dYY = col("n_days") * col("syy") - col("sy") * col("sy")
-    val slope = dXY.cast("double") / dXX.cast("double")
-    m.select(col("l_returnflag"), col("n_days"),
-        when(col("n_days") >= 2 && dXX > 0, slope).as("slope_ku_per_day"),
-        when(col("n_days") >= 2 && dXX > 0,
-          (col("sy").cast("double") - slope * col("sx").cast("double"))
-            / col("n_days").cast("double")).as("intercept_ku"),
-        when(col("n_days") >= 2 && dXX > 0 && dYY > 0,
-          (dXY.cast("double") * dXY.cast("double"))
-            / (dXX.cast("double") * dYY.cast("double"))).as("r2"))
-      .orderBy("l_returnflag")
-  }
-
-  // --- q196: weighted median ------------------------------------------------------
-  // The quantity-WEIGHTED median price per return flag — the quantile
-  // primitive where each row counts `w` times (exact percentiles q68
-  // weight every row once; sketch quantiles q88 bin first). Definition:
-  // under the total order (value, keys), the first row whose running
-  // weight reaches half the total — integer cross-multiplication
-  // (2·cw ≥ tw, weights exact longs) so no 0.5-boundary float ever
-  // decides.
-  //
-  // Scale shape (the first draft's per-group window sorted ENTIRE
-  // groups — with 3 return flags that is three single-task sorts of
-  // n/3 rows each, measured near-linear 1.2→21 s at 30×): value-bucket
-  // decomposition instead. (1) per-(group, bucket) weight cells — one
-  // hash-agg, fully distributed; (2) per-group cumulative over the tiny
-  // O(buckets) frame finds the CROSSING BUCKET and the cumulative
-  // weight strictly below it; (3) only that bucket's rows (≈ rows ÷
-  // buckets) are sorted to locate the crossing row. Bucket = floor(v /
-  // 2^11): the divisor is a POWER OF TWO, so the decimal→double cast
-  // (≤15 significant digits, exact) followed by the division is exact
-  // and the floor is engine-portable; bucket count is the scale knob.
-  // Qualifying rows form a SUFFIX of the order (cw nondecreasing), so
-  // min(value) over them IS the crossing value — no second window. The
-  // oracle keeps the one-window definitional form; the gate proves the
-  // decomposition equals it.
-  val WmBucketWidth = 2048.0
-
-  def weightedMedian(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_returnflag").as("g"), dec2(col("l_extendedprice")).as("v"),
-        col("l_quantity").cast("long").as("w"),
-        col("l_orderkey"), col("l_linenumber"))
-      .withColumn("bucket",
-        floor(col("v").cast("double") / lit(WmBucketWidth)).cast("long"))
-    val cells = li.groupBy("g", "bucket").agg(sum("w").as("bw"))
-    val wB = Window.partitionBy("g").orderBy("bucket")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = cells.withColumn("cb", sum(col("bw")).over(wB))
-    val tot = cells.groupBy("g").agg(sum("bw").as("tw"))
-    val bstar = cum.join(tot, "g")
-      .filter(lit(2) * col("cb") >= col("tw"))
-      .groupBy("g", "tw").agg(min(col("bucket")).as("bstar"))
-    // the crossing bucket's own cumulative minus its weight = the exact
-    // running weight carried INTO the bucket (aliased: cum and bstar
-    // share the cells lineage, so bare columns would be ambiguous)
-    val c2 = cum.alias("c2")
-    val b2 = bstar.alias("b2")
-    val entry = c2.join(b2,
-        col("c2.g") === col("b2.g") && col("c2.bucket") === col("b2.bstar"))
-      .select(col("b2.g").as("g"), col("b2.tw").as("tw"),
-        col("b2.bstar").as("bstar"),
-        (col("c2.cb") - col("c2.bw")).as("below"))
-    val wIn = Window.partitionBy("g")
-      .orderBy(col("v"), col("l_orderkey"), col("l_linenumber"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    li.join(broadcast(entry), Seq("g"))
-      .filter(col("bucket") === col("bstar"))
-      .withColumn("cw", col("below") + sum(col("w")).over(wIn))
-      .filter(lit(2) * col("cw") >= col("tw"))
-      .groupBy(col("g").as("l_returnflag"), col("tw").as("total_weight"))
-      .agg(min(col("v")).cast("double").as("weighted_median"))
-      .orderBy("l_returnflag")
-  }
-
-  // --- q197: native grouped TOP-K aggregate ----------------------------------------
-  // q11's result through the heap aggregate instead of the window sort:
-  // `row_number().over(partitionBy(brand).orderBy(rev desc))` sorts every
-  // brand's FULL part set inside the shuffle partition just to keep 3
-  // rows; TopKPairsAgg carries a 3-entry buffer through partial
-  // aggregation (map-side locals, k entries per partition-group on the
-  // wire, no sort). Revenue rides as an exact scale-4 long (cents ×
-  // (1−disc) centi-units, every step integer) so the heap's total order
-  // equals the oracle's DECIMAL order bit-for-bit; the output double is
-  // the one correctly-rounded division v/10^4, which equals the oracle's
-  // decimal→double cast for |v| < 2^53 (at larger corpus scale widen the
-  // unit, same recipe as q93's kilodollar quantization). Shares q11's
-  // oracle verbatim — same rows, different physical plan, like the
-  // q144-146 as-of twins.
-  def topKNativeAgg(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val pc = (dec2(col("l_extendedprice")) * lit(100)).cast("long")
-    val fc = (dec2(lit(1.0) - col("l_discount")) * lit(100)).cast("long")
-    val rev = li.groupBy("l_partkey").agg(sum(pc * fc).as("v"))
-    val p = Tables.part(spark, dir).select("p_partkey", "p_brand")
-    rev.join(broadcast(p), rev("l_partkey") === p("p_partkey"))
-      .groupBy("p_brand")
-      .agg(graft.plans.TopKAgg.topKPairs(col("v"), col("p_partkey"), 3).as("tk"))
-      .select(col("p_brand"), posexplode(col("tk")))
-      .select(col("p_brand"), col("col.key").as("p_partkey"),
-        (col("col.value").cast("double") / lit(10000.0)).as("revenue"),
-        (col("pos") + 1).cast("int").as("rank"))
-      .orderBy("p_brand", "rank")
-  }
-
-  // --- q198: per-vertex triangles + local clustering coefficient -------------------
-  // The node-level refinement of q187: which items sit in CLOSED
-  // co-purchase neighborhoods (high lcc → cohesive accessory cluster)
-  // vs open hubs (high degree, low lcc). Same degree-oriented
-  // O(m^1.5) enumeration; the inner closing join keeps triangle TRIPLES
-  // so each corner is credited (operators/Triangles.localTriangleStats).
-  def localTriangles(spark: SparkSession, dir: String): DataFrame =
-    Triangles.localTriangleStats(
-      copurchaseEdges(spark, dir).select("item_a", "item_b"),
-      "item_a", "item_b")
-      .orderBy("node")
-
-  // --- q199: k-core of the co-purchase graph ---------------------------------------
-  // Density filtering by iterative peel (operators/KCore): the maximal
-  // subgraph where every item keeps >= k co-purchase partners — the
-  // pre-filter community/recommender pipelines run before anything
-  // quadratic. k must sit BELOW every fixture's collapse threshold —
-  // quasi-random graphs have a sharp core collapse, and the threshold
-  // tracks graph density, so the smallest fixture binds: at sf0.001
-  // (200 vertices, median degree 89) the cliff is between 68 and 70
-  // (k=68 → 176 survive after a 5-round cascade; k=70 → empty), while
-  // sf0.01/sf0.1 (median degree 115/119) collapse only near k=90.
-  // k=65 peels a real cascade at every SF (sf0.001: 6% stripped over 3
-  // rounds; sf0.01: 0.4%/2; sf0.1: 0.8%/3 — measured) and stays clear
-  // of all three cliffs. Rounds are capped at 10 and the oracle unrolls
-  // the same 10; the round-12 spec asserts the cap is not binding
-  // (round 10 ≡ round 9, i.e. the output IS the fixpoint k-core).
-  val KCoreK = 65
-  val KCoreRounds = 10
-
-  def kCoreCopurchase(spark: SparkSession, dir: String): DataFrame =
-    KCore.kCore(copurchaseEdges(spark, dir).select("item_a", "item_b"),
-        "item_a", "item_b", KCoreK, KCoreRounds)
-      .orderBy("node")
-
-  // --- q200: transposition-aware fuzzy linkage (Damerau–Levenshtein kernel) --------
-  // q105's blocked linkage upgraded with the TRUE Damerau–Levenshtein
-  // codegen kernel (plans/EditDistance): adjacent-key swaps — the most
-  // common human typo — cost 1 instead of levenshtein's 2, so a
-  // distance-budget verifier stops missing exactly the typos linkage
-  // exists for. Both distances emitted so the gap is auditable; the
-  // whole contract is integers (DuckDB ships damerau_levenshtein with
-  // the same unrestricted semantics — no float comparison anywhere).
-  def dlLinkage(spark: SparkSession, dir: String): DataFrame = {
-    val dict = Linkage.nameDictionary(Tables.part(spark, dir), "p_name")
-    val blk = (nm: Column) => element_at(split(nm, " "), -1)
-    val a = dict.select(col("name").as("name_a"), col("n_rows").as("n_parts_a"),
-      blk(col("name")).as("__blk"))
-    val b = dict.select(col("name").as("name_b"), col("n_rows").as("n_parts_b"),
-      blk(col("name")).as("__blk"))
-    a.join(b, Seq("__blk"))
-      .filter(col("name_a") < col("name_b"))
-      .withColumn("dl_dist",
-        graft.plans.EditDistance.damerauLevenshtein(col("name_a"), col("name_b"))
-          .cast("long"))
-      .filter(col("dl_dist") <= FuzzyMaxDist)
-      .withColumn("lev_dist",
-        levenshtein(col("name_a"), col("name_b")).cast("long"))
-      .select("name_a", "name_b", "dl_dist", "lev_dist",
-        "n_parts_a", "n_parts_b")
-      .orderBy("name_a", "name_b")
-  }
-
-  // --- q201: window funnel (each stage within Δt of the previous) ------------------
-  // q66's funnel with the windowFunnel attribution constraint: a click
-  // only converts if it lands within `FunnelWindowMicros` of the first
-  // view, a purchase within the window of that qualifying click — the
-  // session-attribution semantics analytics engines ship as
-  // windowFunnel(). Same single-scan two-running-mins plan as q66 (the
-  // window bound folds into the running-min predicates; both Window
-  // nodes still stack on one sort, no new exchange, constant-size rows).
-  val FunnelWindowMicros = 48L * 3600L * 1000000L
-
-  def windowFunnel(spark: SparkSession, dir: String): DataFrame =
-    windowFunnelFrom(Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        unix_micros(col("ts")).as("us")))
-
-  /** The windowed funnel over any (user_id, event_type, event_id, us)
-    * frame — factored out (like `funnelFrom`) so the spec can drive it
-    * with boundary-exact arrivals.
-    */
-  def windowFunnelFrom(ev: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("us"), col("event_id"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val qualClick = (rv: Column) =>
-      col("event_type") === "click" && rv < col("us") &&
-        col("us") <= rv + lit(FunnelWindowMicros)
-    val qualPurchase = (rc: Column) =>
-      col("event_type") === "purchase" && rc < col("us") &&
-        col("us") <= rc + lit(FunnelWindowMicros)
-    val chained = ev
-      .withColumn("rv",
-        min(when(col("event_type") === "view", col("us"))).over(w))
-      .withColumn("rc", min(when(qualClick(col("rv")), col("us"))).over(w))
-    chained.groupBy("user_id").agg(
-        min(when(col("event_type") === "view", col("us"))).as("t_view"),
-        min(when(qualClick(col("rv")), col("us"))).as("t_click"),
-        min(when(qualPurchase(col("rc")), col("us"))).as("t_purchase"))
-      .select(col("user_id"),
-        timestamp_micros(col("t_view")).as("view_ts"),
-        timestamp_micros(col("t_click")).as("click_ts"),
-        timestamp_micros(col("t_purchase")).as("purchase_ts"),
-        when(col("t_purchase").isNotNull, 3)
-          .when(col("t_click").isNotNull, 2)
-          .when(col("t_view").isNotNull, 1)
-          .otherwise(0).as("stage"))
-      .orderBy("user_id")
-  }
-
-  // --- q202: Kaplan–Meier life table of user lifetimes ------------------------------
-  // Survival analysis over the activity log: a user's lifetime is the
-  // span from first to last event; users still active near the
-  // observation horizon are CENSORED (their true lifetime is only
-  // known to exceed the observed one — dropping them would bias churn
-  // short, the classic survival-analysis mistake). The output is the
-  // exact life table (n at risk / deaths / censored per duration) —
-  // the integer input of the Kaplan–Meier product-limit estimator —
-  // with the per-duration hazard as the single double division. The
-  // distributed work is one per-user min/max agg; the cumulative
-  // n-at-risk runs on the O(distinct durations) frame.
-  val CensorWindowDays = 7L
-
-  def survivalLifeTable(spark: SparkSession, dir: String): DataFrame = {
-    val day = 86400000000L
-    val ev = Tables.events(spark, dir)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"))
-    val perUser = ev.groupBy("user_id")
-      .agg(min("us").as("first_us"), max("us").as("last_us"))
-    val horizon = ev.agg(max(col("us")).as("__h"))
-    val u = perUser.crossJoin(broadcast(horizon))
-      .select(expr(s"(last_us - first_us) div $day").as("duration_days"),
-        (col("__h") - col("last_us") < lit(CensorWindowDays * day)).as("cens"))
-    val byDur = u.groupBy("duration_days").agg(
-      count(lit(1)).as("n_ending"),
-      sum(when(!col("cens"), 1L).otherwise(0L)).as("n_deaths"),
-      sum(when(col("cens"), 1L).otherwise(0L)).as("n_censored"))
-    // global windows on the aggregated frame: O(distinct durations) rows.
-    // The total-users scalar is the FULL-FRAME sum of n_ending over the
-    // same tiny frame (same sort, second frame spec) — deriving it from
-    // the raw table cost a whole extra pass over events (plan-audited)
-    val W = org.apache.spark.sql.expressions.Window
-    val w = W.orderBy("duration_days").rowsBetween(W.unboundedPreceding, 0)
-    val wAll = W.orderBy("duration_days")
-      .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    byDur
-      .withColumn("__cum", sum(col("n_ending")).over(w))
-      .withColumn("__n", sum(col("n_ending")).over(wAll))
-      .withColumn("n_risk", col("__n") - col("__cum") + col("n_ending"))
-      .select(col("duration_days"), col("n_risk"),
-        col("n_deaths"), col("n_censored"),
-        (col("n_deaths").cast("double") / col("n_risk").cast("double"))
-          .as("hazard"))
-      .orderBy("duration_days")
-  }
-
-  // --- q203: bounded-depth BFS from the max-degree hub ------------------------------
-  // Single-source shortest hops over the co-purchase graph (operators/
-  // Bfs): synchronous frontier expansion, depth capped at 3 — on this
-  // small-world graph (diameter ~2-3) that reaches everything reachable.
-  // The source is DATA-DERIVED (max-degree vertex, min-id tiebreak) as a
-  // one-row frame, so nothing is collected driver-side.
-  val BfsMaxHops = 3
-
-  def bfsHops(spark: SparkSession, dir: String): DataFrame = {
-    val e = copurchaseEdges(spark, dir).select("item_a", "item_b")
-    Bfs.hops(e, "item_a", "item_b",
-        Bfs.maxDegreeHub(e, "item_a", "item_b"), BfsMaxHops)
-      .orderBy("node")
-  }
-
-  // --- q204: mean-shift changepoint via integer CUSUM -------------------------------
-  // Where did each event type's daily volume regime change? The CUSUM
-  // statistic against the per-type mean, kept EXACT by multiplying
-  // through by n (CUSUM_i = Σ_{j≤i}(n·c_j − S) = n·cum_i − i·S — all
-  // int64, no float drift to argmax over), then one struct-max picks
-  // the peak |CUSUM| with earliest-day tiebreak. The heavy work is the
-  // daily count agg; the windows run per-type on O(days) rows.
-  def cusumChangepoint(spark: SparkSession, dir: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("event_type"),
-        expr("unix_micros(ts) div 86400000000").as("epoch_day"))
-      .agg(count(lit(1)).as("c"))
-    val wOrd = W.partitionBy("event_type").orderBy("epoch_day")
-    val wAll = W.partitionBy("event_type")
-    daily
-      .withColumn("i", row_number().over(wOrd).cast("long"))
-      .withColumn("cum",
-        sum(col("c")).over(wOrd.rowsBetween(W.unboundedPreceding, 0)))
-      .withColumn("n", count(lit(1)).over(wAll))
-      .withColumn("s", sum(col("c")).over(wAll))
-      .withColumn("cusum", col("n") * col("cum") - col("i") * col("s"))
-      .groupBy("event_type")
-      .agg(max(struct(abs(col("cusum")).as("a"), (-col("epoch_day")).as("negd"),
-        col("cusum").as("c0"), col("n").as("n0"), col("s").as("s0"))).as("m"))
-      .select(col("event_type"), col("m.n0").as("n_days"),
-        date_add(to_date(lit("1970-01-01")), (-col("m.negd")).cast("int"))
-          .as("change_day"),
-        col("m.a").as("max_abs_cusum"),
-        signum(col("m.c0")).cast("int").as("shift_sign"),
-        // scale-free severity in [0, 1): one double division
-        (col("m.a").cast("double") / (col("m.n0") * col("m.s0")).cast("double"))
-          .as("shift_score"))
-      .orderBy("event_type")
-  }
-
-  // --- q205: top principal component via integer-Gram power iteration ---------------
-  // Distributed PCA done scale-right: the d×d Gram matrix is a BOUNDED
-  // DISTRIBUTIVE AGGREGATE (one pass, map-side partials into ≤d² cells
-  // — the only thing that touches the corpus), and power iteration then
-  // runs on the tiny d×d frame. Everything is exact int64: embeddings
-  // truncate to 2^14 units (the q42 idiom), the iterate renormalizes to
-  // max-|component| = 2^8 via floor division each round, so both
-  // engines walk bit-identical integer states — no float accumulation
-  // order anywhere. Doubles appear only in the final Rayleigh quotient
-  // (exact 128-bit/decimal sums → two casts + divisions in fixed
-  // order). Bounds at bench scale: |q|≤0.53·2^14, G ≤ n·q² ≈ 3.8e11 at
-  // n=5000, |w| ≤ 64·G·2^8 ≈ 6.2e15, w·2^8 ≈ 1.6e18 < 2^63; at larger
-  // corpora lift G to DECIMAL(38,0) (the q107 convention).
-  val PcQuant = 16384L
-  val PcScale = 256L
-  val PcRounds = 6
-
-  def principalComponent(spark: SparkSession, dir: String): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    // the Gram matrix is symmetric and every product is exact int64, so
-    // only the upper triangle (i ≤ j) is enumerated — HALF the explode
-    // fan-out of the full d² form — and the lower triangle is mirrored
-    // after the aggregation (bit-identical: x·y = y·x, same summands)
-    val gramHalf = Tables.embeddings(spark, dir)
-      .select(expr(s"transform(embedding, x -> cast(x * $PcQuant as bigint))")
-        .as("q"))
-      .select(explode(expr(
-        """flatten(transform(q, (x, i) ->
-           transform(slice(q, i + 1, size(q) - i),
-             (y, k) -> named_struct('i', i, 'j', i + k, 'p', x * y))))"""))
-        .as("cell"))
-      .groupBy(col("cell.i").as("i"), col("cell.j").as("j"))
-      .agg(sum(col("cell.p")).as("g"))
-      .leanCheckpoint() // materialize BEFORE the mirror references it twice
-    val gram = gramHalf
-      .unionByName(gramHalf.filter(col("i") < col("j"))
-        .select(col("j").as("i"), col("i").as("j"), col("g")))
-    var v = gram.select(col("i").as("pos")).distinct()
-      .withColumn("vq", lit(PcScale))
-      .leanCheckpoint()
-    for (_ <- 1 to PcRounds) {
-      val w = gram.join(v.withColumnRenamed("pos", "j"), Seq("j"))
-        .groupBy(col("i").as("pos"))
-        .agg(sum(col("g") * col("vq")).as("w"))
-      val m = w.agg(max(abs(col("w"))).as("__m"))
-      v = w.crossJoin(broadcast(m))
-        // floor((w·S)/m): subtract floorMod first so the `div` is exact
-        // (truncation == floor on an exactly-divisible dividend)
-        .select(col("pos"),
-          expr(s"(w * $PcScale - ((w * $PcScale) % __m + __m) % __m) div __m")
-            .as("vq"))
-        .leanCheckpoint()
-    }
-    val num = gram
-      .join(v.select(col("pos").as("i"), col("vq").as("vi")), Seq("i"))
-      .join(v.select(col("pos").as("j"), col("vq").as("vj")), Seq("j"))
-      .agg(sum(col("g").cast(dec) * col("vi").cast(dec) * col("vj").cast(dec))
-        .as("num"))
-    val den = v.agg(sum(col("vq") * col("vq")).as("den"))
-    v.crossJoin(broadcast(num)).crossJoin(broadcast(den))
-      .select(col("pos").cast("long").as("pos"), col("vq").as("pc_q"),
-        (col("num").cast("double") / col("den").cast("double")
-          / lit((PcQuant * PcQuant).toDouble)).as("lambda"))
-      .orderBy("pos")
-  }
-
-  // --- q206: label-propagation communities -------------------------------------------
-  // Synchronous LPA over the co-purchase graph (operators/LabelProp)
-  // with the deterministic min-label tiebreak; 4 bounded rounds (the
-  // cap IS the operator — synchronous LPA has no guaranteed fixpoint).
-  // Output is the community-size histogram.
-  val LpaRounds = 4
-
-  def labelCommunities(spark: SparkSession, dir: String): DataFrame =
-    LabelProp.communities(
-        copurchaseEdges(spark, dir).select("item_a", "item_b"),
-        "item_a", "item_b", LpaRounds)
-      .orderBy("community")
-
-  // --- q207: U-shaped (position-based) multi-touch attribution ----------------------
-  // q112's linear split upgraded to the industry 40/20/40 convention:
-  // first and last click before the purchase take 40% each, the middle
-  // touches share the remaining 20%. All allocation is EXACT integer
-  // cents (div/% with the remainder surfaced, not silently dropped),
-  // computed closed-form per purchase from the same single per-user
-  // window scan as q112 — no per-touch explosion, no self-join.
-  def ushapeAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    // `us` is projected ONCE so all three Window nodes order by the same
-    // attribute and stack on a single sort (the q66/q201 discipline —
-    // an inline unix_micros(ts) in each window spec re-derives a fresh
-    // attribute per window and costs three sorts, plan-audited)
-    val ev = Tables.events(spark, dir)
-      .filter(col("event_type").isin("click", "purchase"))
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"),
-        col("value"), unix_micros(col("ts")).as("us"))
-    val w = W.partitionBy("user_id")
-      .orderBy(col("us"), col("event_id"))
-      .rowsBetween(W.unboundedPreceding, -1)
-    val isClick = col("event_type") === "click"
-    val clickUs = when(isClick, col("us"))
-    ev.withColumn("n_touches",
-        coalesce(sum(when(isClick, 1L).otherwise(0L)).over(w), lit(0L)))
-      .withColumn("first_click_us", min(clickUs).over(w))
-      .withColumn("last_click_us", max(clickUs).over(w))
-      .filter(col("event_type") === "purchase")
-      .withColumn("cents",
-        expr("cast(cast(value as decimal(18,2)) * 100 as bigint)"))
-      .withColumn("first_credit_cents",
-        when(col("n_touches") === 0L, lit(null).cast("long"))
-          .when(col("n_touches") === 1L, col("cents"))
-          .when(col("n_touches") === 2L,
-            col("cents") - expr("cents div 2"))
-          .otherwise(expr("(cents * 2) div 5")))
-      .withColumn("last_credit_cents",
-        when(col("n_touches") === 0L, lit(null).cast("long"))
-          .when(col("n_touches") === 1L, lit(0L))
-          .when(col("n_touches") === 2L, expr("cents div 2"))
-          .otherwise(expr("(cents * 2) div 5")))
-      .withColumn("mid_credit_each_cents",
-        when(col("n_touches") <= 2L, lit(null).cast("long"))
-          .otherwise(expr(
-            "(cents - 2 * ((cents * 2) div 5)) div (n_touches - 2)")))
-      .withColumn("mid_remainder_cents",
-        when(col("n_touches") <= 2L, lit(null).cast("long"))
-          .otherwise(expr(
-            "(cents - 2 * ((cents * 2) div 5)) % (n_touches - 2)")))
-      .select(col("user_id"), col("event_id").as("purchase_event_id"),
-        col("ts").as("purchase_ts"), col("n_touches"),
-        timestamp_micros(col("first_click_us")).as("first_click_ts"),
-        timestamp_micros(col("last_click_us")).as("last_click_ts"),
-        col("cents"), col("first_credit_cents"), col("last_credit_cents"),
-        col("mid_credit_each_cents"), col("mid_remainder_cents"))
-      .orderBy("user_id", "purchase_event_id")
-  }
-
-  // --- q208: most weekday-anomalous day per event type --------------------------------
-  // q93's trailing z-score catches LEVEL breaks; this catches the day
-  // most abnormal FOR ITS WEEKDAY (the Sunday that behaved like a
-  // Wednesday) — the seasonality correction volume monitoring needs.
-  // Per (event_type, dow) profile moments (n, Σc, Σc²) stay exact
-  // int64; z = (n·c − s)/√(n·q − s²) is the one fixed-shape double —
-  // identical IEEE ops in both engines, so the |z| argmax (one
-  // struct-max per type, earliest-day tiebreak) selects identically.
-  // `is_extreme` (z² > 4) is decided by INTEGER cross-multiplication.
-  // dow convention: (epoch_day + 4) % 7, 0 = Sunday (1970-01-01 = Thu).
-  def seasonalAnomalies(spark: SparkSession, dir: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("event_type"),
-        expr("unix_micros(ts) div 86400000000").as("epoch_day"))
-      .agg(count(lit(1)).as("c"))
-      .withColumn("dow", expr("(epoch_day + 4) % 7"))
-    val prof = W.partitionBy("event_type", "dow")
-    daily
-      .withColumn("n", count(lit(1)).over(prof))
-      .withColumn("s", sum(col("c")).over(prof))
-      .withColumn("q", sum(col("c") * col("c")).over(prof))
-      .withColumn("d", col("n") * col("c") - col("s"))
-      .withColumn("var_num", col("n") * col("q") - col("s") * col("s"))
-      .filter(col("var_num") > 0L)
-      .withColumn("z",
-        col("d").cast("double") / sqrt(col("var_num").cast("double")))
-      .groupBy("event_type")
-      .agg(max(struct(abs(col("z")).as("az"), (-col("epoch_day")).as("negd"),
-        col("z").as("z0"), col("dow").as("dow0"), col("c").as("c0"),
-        col("d").as("d0"), col("var_num").as("v0"))).as("m"))
-      .select(col("event_type"),
-        date_add(to_date(lit("1970-01-01")), (-col("m.negd")).cast("int"))
-          .as("day"),
-        col("m.dow0").as("dow"), col("m.c0").as("n_events"),
-        col("m.d0").as("dev"), col("m.v0").as("var_num"),
-        col("m.z0").as("z"),
-        (col("m.d0") * col("m.d0") > lit(4L) * col("m.v0")).as("is_extreme"))
-      .orderBy("event_type")
-  }
-
-  // --- q209: rolling 28-day correlation between two event series ---------------------
-  // Co-movement monitoring (do purchases still track views?): both
-  // daily series come out of ONE conditional aggregation pass (no
-  // self-join), then a trailing RANGE window over epoch_day — gap-robust
-  // where a ROWS frame would silently stretch across missing days —
-  // accumulates the five exact integer moments, and q107's
-  // multiply-through Pearson form runs on them (doubles only in the
-  // final fixed-shape expression; thin/degenerate windows null out).
-  // The window is unpartitioned BUT runs on the O(days) aggregated
-  // frame — the q202/q114 discipline.
-  val RollCorrDays = 28
-  val RollCorrMinDays = 14
-
-  def rollingCorrelation(spark: SparkSession, dir: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val daily = Tables.events(spark, dir)
-      .filter(col("event_type").isin("view", "purchase"))
-      .groupBy(expr("unix_micros(ts) div 86400000000").as("epoch_day"))
-      .agg(sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("x"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("y"))
-    val w = W.orderBy("epoch_day").rangeBetween(-(RollCorrDays - 1L), 0L)
-    val m = daily
-      .withColumn("n", count(lit(1)).over(w))
-      .withColumn("sx", sum(col("x")).over(w))
-      .withColumn("sy", sum(col("y")).over(w))
-      .withColumn("sxx", sum(col("x") * col("x")).over(w))
-      .withColumn("syy", sum(col("y") * col("y")).over(w))
-      .withColumn("sxy", sum(col("x") * col("y")).over(w))
-    val num = (col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
-    val denx = col("n") * col("sxx") - col("sx") * col("sx")
-    val deny = col("n") * col("syy") - col("sy") * col("sy")
-    m.select(
-        date_add(to_date(lit("1970-01-01")), col("epoch_day").cast("int"))
-          .as("day"),
-        col("n").as("n_days"), col("x").as("n_views"),
-        col("y").as("n_purchases"),
-        when(col("n") >= RollCorrMinDays && denx > 0L && deny > 0L,
-          num / (sqrt(denx.cast("double")) * sqrt(deny.cast("double"))))
-          .as("corr_28d"))
-      .orderBy("day")
-  }
-
-  // --- q210: FIFO allocation via cumulative-interval overlap -------------------------
-  // Inventory-style first-in-first-out matching per part: fulfilled
-  // lineitems ('F') are the supply lots, open ones ('O') the demand,
-  // both in (shipdate, orderkey, linenumber) arrival order. The operator
-  // (operators/Fifo) replaces the sequential allocator with two
-  // prefix-sum windows + a bucketed interval-overlap join on the
-  // cumulative-quantity axis — fully distributed, each matched
-  // (lot, demand) pair exactly once with its matched quantity.
-  val FifoBucket = 64L
-
-  def fifoAllocation(spark: SparkSession, dir: String): DataFrame = {
-    // ord in whole epoch DAYS: shipdates are midnight-aligned NTZ
-    // timestamps (contract-checked), so day ordering ≡ time ordering and
-    // the age arithmetic needs no division or timezone anywhere
-    def side(status: String) = Tables.lineitem(spark, dir)
-      .filter(col("l_linestatus") === status)
-      .select(col("l_partkey").as("key"),
-        datediff(to_date(col("l_shipdate")), to_date(lit("1970-01-01")))
-          .cast("long").as("ord"),
-        (col("l_orderkey") * 100 + col("l_linenumber")).as("id"),
-        // decimal→long cast TRUNCATES toward zero in Spark; the oracle
-        // mirrors it with trunc() (DuckDB's bare CAST would round half
-        // away from zero — silent divergence on fractional quantities)
-        dec2(col("l_quantity")).cast("long").as("qty"))
-    Fifo.allocate(side("F"), side("O"), FifoBucket)
-      .select(col("key").as("part"),
-        col("s_id").as("supply_id"), col("d_id").as("demand_id"),
-        col("matched_qty"),
-        // allocation age: negative when an open demand predates its lot
-        (col("d_ord") - col("s_ord")).as("age_days"))
-      .orderBy("part", "supply_id", "demand_id")
-  }
-
-  // --- q211: degree assortativity of the co-purchase graph --------------------------
-  // Do hub items co-purchase with other hubs (assortative, r > 0) or
-  // with the long tail (disassortative, r < 0)? Newman's r is the
-  // Pearson correlation of endpoint degrees over DIRECTED edge pairs
-  // (each undirected edge contributes both orientations, so the two
-  // marginals coincide and one set of moments serves both axes):
-  // r = (M·Σxy − (Σx)²) / (M·Σx² − (Σx)²), all moments exact int64
-  // (the q107 multiply-through discipline), doubles only in the final
-  // division. One degree agg + two hash joins + one global agg — no
-  // window, no sort (operators/GraphStats).
-  def degreeAssortativity(spark: SparkSession, dir: String): DataFrame =
-    GraphStats.assortativity(
-      copurchaseEdges(spark, dir).select("item_a", "item_b"),
-      "item_a", "item_b")
-
-  // --- q212: reciprocal best-match pairs ---------------------------------------------
-  // Mutual nearest neighbors under the co-purchase cosine: a pair
-  // survives only if each item is the OTHER's single best partner — the
-  // high-precision matching rule (reciprocal-NN) dedup and entity-
-  // matching pipelines use to avoid hub items absorbing everything.
-  // Per-item argmax as one struct-max over (cosine, −partner): the
-  // cosine doubles are bit-identical in both engines (q97's precedent),
-  // so the argmax — and therefore the mutual set — is deterministic
-  // (operators/GraphStats.reciprocalBest).
-  def reciprocalBestMatch(spark: SparkSession, dir: String): DataFrame = {
-    val items = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("b"), col("l_partkey").as("i")).distinct()
-    val freq = items.groupBy("i").agg(count(lit(1)).as("n"))
-    val sim = copurchaseEdges(spark, dir)
-      .filter(col("n_baskets") >= CoMinSupport)
-      .join(freq.select(col("i").as("item_a"), col("n").as("na")), Seq("item_a"))
-      .join(freq.select(col("i").as("item_b"), col("n").as("nb")), Seq("item_b"))
-      .withColumn("cosine",
-        col("n_baskets").cast("double") /
-          sqrt((col("na") * col("nb")).cast("double")))
-    GraphStats.reciprocalBest(sim, "item_a", "item_b", "cosine")
-      .orderBy("item_a")
-  }
-
-  // --- q213: WEIGHTED PageRank over the co-purchase graph ---------------------------
-  // q155 treats a 100-basket co-purchase tie the same as a 1-basket
-  // fluke; the weighted walk distributes each node's rank mass
-  // proportionally to edge weight (n_baskets). Same exact-int64
-  // discipline: per-edge contribution w · ((85·p) div (100·W)) with
-  // W = Σ out-weights — the per-node quotient floors ONCE, then scales
-  // by the integer weight, so every term stays far from 2^63
-  // (85·p ≤ 85·total-mass ≈ 1.7e15 at sf0.1) and both engines walk
-  // bit-identical states; the oracle unrolls the same rounds.
-  val PrWRounds = 3
-
-  def pagerankWeighted(spark: SparkSession, dir: String): DataFrame =
-    weightedPagerankRounds(
-      copurchaseEdges(spark, dir)
-        .select(col("item_a").as("src"), col("item_b").as("dst"),
-          col("n_baskets").as("w")),
-      PrWRounds)
-
-  /** The weighted-PageRank round loop over any (src, dst, w) frame
-    * (each undirected pair once; both directions derived here) —
-    * factored out so the spec can drive it with hand-computable
-    * fixtures (the windowFunnelFrom pattern).
-    */
-  def weightedPagerankRounds(edgeFrame: DataFrame, rounds: Int): DataFrame = {
-    require(rounds >= 1, "pagerank needs at least one round")
-    val e0 = edgeFrame.leanCheckpoint()
-    val edges = e0.unionByName(
-      e0.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-    val wsum = edges.groupBy("src").agg(sum(col("w")).as("tw"))
-    val withW = graft.operators.Fixpoint.cache(
-      edges.join(wsum, "src"), "src", 2L * e0.count(), 40)
-    val base = lit(15L * PrScale / 100L)
-    def round(rk: DataFrame): DataFrame = {
-      val co = withW.probe(rk, "i")
-      withW.df.join(co, withW.df("src") === co("i"))
-        .select(col("dst"), expr("w * ((85 * p) div (100 * tw))").as("contrib"))
-        .groupBy(col("dst").as("i"))
-        .agg((base + sum(col("contrib"))).as("p"))
-    }
-    val ranks = prFused(wsum.select(col("src").as("i"), lit(PrScale).as("p")),
-      rounds, "pagerank_weighted")(round)
-    withW.unpersist()
-    ranks.select(col("i").as("item"), col("p").as("rank_score"))
-      .orderBy(col("rank_score").desc, col("item"))
-  }
-
-  // --- q214: round-12 kernels through the SQL-text surface --------------------------
-  // q179 gates the round-11 kernel set as `spark.sql` text; this is the
-  // same gate for the two kernels that landed after it: the native
-  // TOP-K aggregate (`graft_topk`, plans/TopKAgg) and the
-  // Damerau–Levenshtein codegen kernel (`graft_dleven`,
-  // plans/EditDistance). Per brand: top-3 parts by total quantity via
-  // the heap aggregate (quantity carried as exact centi-units — the
-  // DECIMAL(18,2)×100 product is integral for EVERY input, so the
-  // BIGINT cast is round-vs-truncate-proof), plus the brand label's DL
-  // distance to the family prototype string. The oracle recomputes the
-  // top-k as the window form (the q197 twin contract: same rows,
-  // different physical plan) and the distance via DuckDB's native
-  // `damerau_levenshtein` (same unrestricted Lowrance–Wagner semantics,
-  // probed in plans/EditDistance.scala).
-  def sqlKernels(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
-    Tables.lineitem(spark, dir).createOrReplaceTempView("li_q214")
-    Tables.part(spark, dir).createOrReplaceTempView("part_q214")
-    spark.sql(
-      """WITH qty AS (SELECT l_partkey AS pk,
-                             CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)) * 100)
-                               AS BIGINT) AS q
-                      FROM li_q214 GROUP BY l_partkey),
-          top AS (SELECT p.p_brand AS brand, graft_topk(q.q, q.pk, 3) AS tk
-                  FROM qty q JOIN part_q214 p ON p.p_partkey = q.pk
-                  GROUP BY p.p_brand)
-          SELECT brand,
-                 CAST(pos + 1 AS INT) AS rank,
-                 e.key AS partkey,
-                 e.value AS qty_centi,
-                 graft_dleven(brand, 'Brand#55') AS dl_proto
-          FROM top LATERAL VIEW posexplode(tk) x AS pos, e
-          ORDER BY brand, rank""")
-  }
-
-  // --- q215: PMI collocation mining --------------------------------------------------
-  // Adjacent word pairs occurring together far beyond what their
-  // marginal slot frequencies predict (operators/Collocations): one
-  // corpus pass (slice+zip+explode, no join), one bigram hash-agg;
-  // marginals and the grand total re-aggregated from that table. The
-  // gated value is the exact ratio INSIDE the PMI log (monotone in it):
-  // n_ab·N / (n_left·n_right), products in DECIMAL(38,0) — the q211
-  // overflow lesson applied up front — and one IEEE-exact division.
-  val PmiMinMarginal = 5L
-  val PmiMinPair     = 3L
-
-  def pmiCollocations(spark: SparkSession, dir: String): DataFrame =
-    Collocations.bigramPmi(Tables.documents(spark, dir), col("text"),
-        PmiMinMarginal, PmiMinPair)
-      .orderBy(col("pmi_lift").desc, col("word_a"), col("word_b"))
-
-  // --- q216: DIRECTED PageRank with dangling-mass redistribution --------------------
-  // The q155/q186/q213 walks run on the undirected co-purchase graph,
-  // where every node has out-mass by construction. A directed graph —
-  // here the sequential-basket graph, part at linenumber k → part at
-  // k+1 within an order — has DANGLING nodes (targets that never
-  // appear in source position), whose mass would silently leak out of
-  // the walk. The classic fix: each round, the danglers' pooled mass D
-  // is redistributed uniformly — every node receives (85·D) div
-  // (100·N) on top of its in-edge contributions. Same exact-int64
-  // discipline (all quantities non-negative, so Spark `div` ≡ DuckDB
-  // `//`; 85·D ≤ 85·N·scale ≈ 1.7e15 at sf0.1 — lift the share term to
-  // DECIMAL(38,0) past N ≈ 10^8 nodes, the q211 recipe); the oracle
-  // unrolls the same rounds with the same scalar dangling pool.
-  val PrDRounds = 3
-
-  def pagerankDirected(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-      .select("l_orderkey", "l_linenumber", "l_partkey")
-    val a = li.alias("a")
-    val b = li.alias("b")
-    val ed = a.join(b, col("a.l_orderkey") === col("b.l_orderkey") &&
-        col("b.l_linenumber") === col("a.l_linenumber") + 1)
-      .groupBy(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-      .agg(count(lit(1)).as("w"))
-    directedPagerankRounds(ed, PrDRounds)
-  }
-
-  /** The directed weighted-PageRank round loop over any (src, dst, w)
-    * frame (edges used AS GIVEN — no symmetrization), with uniform
-    * dangling-mass redistribution. Factored out so the spec can drive
-    * it with a hand-computable dangling fixture.
-    */
-  def directedPagerankRounds(edgeFrame: DataFrame, rounds: Int): DataFrame = {
-    require(rounds >= 1, "pagerank needs at least one round")
-    val ed = edgeFrame.leanCheckpoint()
-    val nodes = ed.select(col("src").as("i"))
-      .unionByName(ed.select(col("dst").as("i"))).distinct()
-      .leanCheckpoint()
-    val outw = ed.groupBy("src").agg(sum(col("w")).as("tw"))
-    val withW = graft.operators.Fixpoint.cache(
-      ed.join(outw, "src"), "src", ed.count(), 40)
-    // 1-row frames, broadcast — the q101 global-span pattern (never a
-    // driver collect in the loop)
-    val nn = nodes.agg(count(lit(1)).as("nn"))
-    val base = lit(15L * PrScale / 100L)
-    val init = nodes.select(col("i"), lit(PrScale).as("p"))
-    val ranks = graft.operators.Fixpoint.rounds(init, rounds,
-        "pagerank_directed") { (rk, _) =>
-      val dang = rk.join(outw, rk("i") === outw("src"), "left_anti")
-        .agg(coalesce(sum(col("p")), lit(0L)).as("d"))
-      val co = withW.probe(rk, "i")
-      val contrib = withW.df.join(co, withW.df("src") === co("i"))
-        .select(col("dst"), expr("w * ((85 * p) div (100 * tw))").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("cs"))
-      nodes
-        .join(contrib, nodes("i") === contrib("dst"), "left")
-        .crossJoin(broadcast(dang))
-        .crossJoin(broadcast(nn))
-        .select(col("i"),
-          (base + coalesce(col("cs"), lit(0L)) +
-            expr("(85 * d) div (100 * nn)")).as("p"))
-    }
-    withW.unpersist()
-    ranks.select(col("i").as("item"), col("p").as("rank_score"))
-      .orderBy(col("rank_score").desc, col("item"))
-  }
-
-  // --- q217: bitemporal composition (knowledge time × valid time) -------------------
-  // The classic audit query: "what did we believe on knowledge day X
-  // about validity at day Y". Both axes already exist separately —
-  // Snapshots versions are the KNOWLEDGE axis (q174), SCD2 validity
-  // intervals the VALID axis (q03/q15); this composes them: the SCD2
-  // history is rebuilt from the changelog as known at each of three
-  // successive knowledge watermarks and COMMITTED (three snapshot
-  // versions), then every version is read back via time travel and
-  // as-of-filtered at ONE fixed valid time. Belief genuinely moves
-  // between versions: a later-known event at ts > V re-CLOSES the
-  // interval that covers V (effective_to changes), and users whose
-  // first event lands between watermarks appear. The oracle recomputes
-  // each version's belief from the base table with the same watermark
-  // literals — both time axes from first principles.
-  val BtValidTs = "2024-01-15 00:00:00"
-
-  def bitemporal(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.Snapshots
-    val target = s"${Sessions.tempDir("graft_bitemporal_")}/scd2"
-    TravelTs.foreach { k =>
-      Snapshots.commit(
-        Scd.scd2FromChangelog(
-          Tables.events(spark, dir)
-            .filter(col("ts") < utcTs(k))
-            .select("user_id", "event_id", "event_type", "value", "ts"),
-          keys = Seq("user_id"), seqCol = "ts", tieCols = Seq("event_id"))
-          .select("user_id", "event_id", "event_type", "value",
-            "effective_from", "effective_to"),
-        target, retainManifests = 10)
-    }
-    val vs = Snapshots.versions(spark, target).sorted.takeRight(TravelTs.size)
-    vs.zipWithIndex.map { case (v, i) =>
-      Scd.asOfSnapshot(Snapshots.readAt(spark, target, v), utcTs(BtValidTs))
-        .select(lit(i + 1).cast("int").as("knowledge_version"),
-          col("user_id"), col("event_id"), col("event_type"), col("value"),
-          col("effective_from"), col("effective_to"))
-    }.reduce(_ unionByName _)
-      .orderBy("knowledge_version", "user_id")
-  }
-
-  // --- q218: streaming CUSUM drift detector under the gate --------------------------
-  // The REAL `CusumStream` stateful stream (flatMapGroupsWithState,
-  // update mode, O(1) state per key) run against the fixture via
-  // AvailableNow: per event type, daily counts fold into Page's
-  // clipped statistic s = max(0, s + (c − ref)) as days close, ref =
-  // the type's integer mean daily rate (floor division, computed from
-  // the batch table — a bounded per-type collect, the watermark-store
-  // pattern). The oracle never runs the sequential fold: it uses the
-  // prefix-min closed form s_i = cum_i − min(0, min_{j≤i} cum_j)
-  // (q167's decomposition family), so the state machine and the
-  // window algebra must agree bit-for-bit. The open tail day never
-  // closes — both sides exclude each type's last day.
-  def cusumStreamed(spark: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.CusumStream
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("event_type"),
-        expr("unix_micros(ts) div 86400000000").as("d"))
-      .agg(count(lit(1)).as("c"))
-    val refs = daily.groupBy("event_type")
-      .agg(expr("sum(c) div count(1)").as("ref"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val enc = org.apache.spark.sql.Encoders.product[CusumStream.CEv]
-    val stream = Tables.eventsStream(spark, dir)
-      .select(col("event_type").as("key"), unix_micros(col("ts")).as("tsMicros"))
-      .as(enc)
-    val name = runToTable(
-      CusumStream.detect(stream, refs).writeStream.outputMode("update"),
-      "graft_q218_")
-    // update-mode snapshots are monotone in n_days and fully determined
-    // by it (s only moves when a day closes) — max-struct is the final
-    spark.table(name)
-      .groupBy(col("key").as("event_type"))
-      .agg(max(struct(col("n_days"), col("final_cusum"), col("max_cusum"),
-        col("peak_day"))).as("m"))
-      .select(col("event_type"), col("m.n_days").as("n_days"),
-        col("m.final_cusum").as("final_cusum"),
-        col("m.max_cusum").as("max_cusum"), col("m.peak_day").as("peak_day"))
-      .orderBy("event_type")
-  }
-
-  // --- q219: streaming TOP-K leaderboard under the gate ------------------------------
-  // The REAL `TopKStream` stateful stream: per event type, the 5
-  // largest (cents, event_id) observations under the (value DESC, id
-  // ASC) total order, as bounded O(k) state — the stream form of the
-  // q197/q214 heap aggregate. The gated reduction re-ranks the DISTINCT
-  // union of all update-mode snapshots under the same order (sound
-  // because snapshots are prefix top-k sets and the final top-k is
-  // contained in the last one — see TopKStream scaladoc); the oracle is
-  // the batch window form.
-  val TopKStreamK = 5
-
-  def topKStreamed(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSpark(spark0)
-    import graft.streaming.TopKStream
-    val enc = org.apache.spark.sql.Encoders.product[TopKStream.TEv]
-    val stream = Tables.eventsStream(spark, dir)
-      .select(col("event_type").as("key"),
-        (col("value").cast("decimal(18,2)") * 100).cast("long").as("v"),
-        col("event_id").as("id"))
-      .as(enc)
-    val name = runToTable(
-      TopKStream.track(stream, TopKStreamK).writeStream.outputMode("update"),
-      "graft_q219_")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("key").orderBy(col("v").desc, col("id"))
-    spark.table(name).select("key", "v", "id").distinct()
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= TopKStreamK)
-      .select(col("key").as("event_type"), col("rank"),
-        col("id").as("event_id"), col("v").as("value_cents"))
-      .orderBy("event_type", "rank")
-  }
-
-  // --- q220: Theil–Sen robust trend ---------------------------------------------------
-  // q195's OLS slope is pulled arbitrarily far by ONE corrupted day
-  // (breakdown point 0); the Theil–Sen estimator — the median of all
-  // pairwise slopes (y_j−y_i)/(x_j−x_i) — survives ~29% contamination,
-  // the robust-statistics twin of q78's median/MAD vs q70's moments.
-  // Cost shape: the pair join runs on the O(days) DAILY frame, never
-  // the fact table, so its O(days²) is a CONSTANT in corpus size (days
-  // don't grow with volume at fixed history) — at sf0.1 ≈ 3M pairs per
-  // flag. Each pairwise slope is one IEEE division of exact int64s
-  // (the q195 kilodollar-quantized y), and the median is Spark's exact
-  // `percentile` ≡ DuckDB quantile_cont (the q68 bit-match precedent).
-  def theilSenTrend(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.lineitem(spark, dir)
-      .groupBy(col("l_returnflag"), to_date(col("l_shipdate")).as("day"))
-      .agg(sum(discounted(col("l_extendedprice"), col("l_discount"))).as("rev_dec"))
-      .select(col("l_returnflag"),
-        datediff(col("day"), lit("1970-01-01").cast("date"))
-          .cast("long").as("x"),
-        floor(col("rev_dec").cast("double") / lit(AnomalyUnit))
-          .cast("long").as("y"))
-    theilSenFromDaily(daily)
-  }
-
-  /** Theil–Sen slope over any (l_returnflag, x, y) daily frame —
-    * factored so the spec can drive it with a planted-outlier fixture.
-    * The median runs through `operators/Median.groupedExactMedian`
-    * (bucket decomposition), NOT Spark's exact `percentile`: the
-    * percentile aggregate materializes each group's full 3.1M-slope set
-    * in one buffer — measured 13.5 s with 4 s of GC at sf0.1 — where
-    * the decomposition's distributed hash-agg + target-bucket-only sort
-    * runs in a few seconds with bounded memory. Same bit-exact result
-    * (the oracle's quantile_cont proves it). The slope frame is
-    * localCheckpointed once so the pair join isn't recomputed per
-    * consumer.
-    */
-  def theilSenFromDaily(daily: DataFrame): DataFrame = {
-    val a = daily.alias("a")
-    val b = daily.alias("b")
-    // NOT checkpointed: the pair join re-derives from a tiny broadcast
-    // frame, so recomputing it per consumer is cheaper than
-    // materializing 9.4M rows into the block manager (measured).
-    // try_divide, not `/`: the equi-match set contains a.x = b.x
-    // self-pairs that the `<` condition rejects, but codegen may
-    // evaluate the projection's division before the condition prunes
-    // them (observed at sf0.1 under ANSI as DIVIDE_BY_ZERO) — on every
-    // SURVIVING row try_divide ≡ divide exactly
-    val slopes = a.join(b, col("a.l_returnflag") === col("b.l_returnflag") &&
-        col("a.x") < col("b.x"))
-      .select(col("a.l_returnflag").as("l_returnflag"),
-        expr("try_divide(cast(b.y - a.y as double), cast(b.x - a.x as double))")
-          .as("slope"))
-    Median.groupedExactMedian(slopes, "l_returnflag", "slope",
-        "theilsen_slope_ku_per_day")
-      .select(col("l_returnflag"), col("n_values").as("n_pairs"),
-        col("theilsen_slope_ku_per_day"))
-      .orderBy("l_returnflag")
-  }
-
-  // --- q221: Hilbert-curve layout manifest --------------------------------------------
-  // q147's zone-map planner on the HILBERT curve (the locality upgrade
-  // over Morton — see plans/HilbertExprs): same exact-integer
-  // quantization from broadcast global bounds, the xy2d bit walk as a
-  // codegen kernel, one hash-agg to the per-block zone map. The oracle
-  // unrolls the same qBits reflect/transpose rounds as CTEs, so the
-  // kernel's integer walk is reproduced round-for-round in SQL.
-  def hilbertManifest(spark: SparkSession, dir: String): DataFrame =
-    ZOrder.hilbertLayoutManifest(
-      Tables.orders(spark, dir),
-      col("o_custkey"),
-      datediff(to_date(col("o_orderdate")), to_date(lit("1970-01-01"))),
-      ZQBits, ZBlockShift)
-
-  // --- q222: item-based collaborative recommendations --------------------------------
-  // The recommender READ path over q97's item-item cosine: per customer,
-  // score every co-purchase neighbor of an owned item by Σ cosine over
-  // the owned items reaching it, drop already-owned candidates
-  // (left-anti), keep the top 3 by (score DESC, item ASC). Thirteenth
-  // consumer of the memoized co-purchase edge frame; candidate fan-out
-  // is bounded by the owned set × the support-filtered neighbor lists
-  // (never catalog × catalog). The float fold is ORDER-FIXED — per
-  // (customer, candidate) the (via, cosine) list is sorted and folded
-  // sequentially (the q98/q99 recipe) — so the score is bit-stable
-  // under any partitioning and the oracle's list_reduce replays it.
-  val RecTopK = 3
-
-  def recommendations(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val o = Tables.orders(spark, dir)
-    val owned = li.join(o, li("l_orderkey") === o("o_orderkey"))
-      .select(col("o_custkey").as("cust"), col("l_partkey").as("item"))
-      .distinct()
-    val items = li.select(col("l_orderkey").as("b"), col("l_partkey").as("i"))
-      .distinct()
-    val freq = items.groupBy("i").agg(count(lit(1)).as("n"))
-    val ef = copurchaseEdges(spark, dir)
-      .filter(col("n_baskets") >= CoMinSupport)
-    val ed = ef.select(col("item_a").as("ia"), col("item_b").as("ib"),
-        col("n_baskets"))
-      .unionByName(ef.select(col("item_b").as("ia"), col("item_a").as("ib"),
-        col("n_baskets")))
-    val sim = ed
-      .join(freq.select(col("i").as("ia"), col("n").as("na")), Seq("ia"))
-      .join(freq.select(col("i").as("ib"), col("n").as("nb")), Seq("ib"))
-      .select(col("ia"), col("ib"),
-        (col("n_baskets").cast("double") /
-          sqrt((col("na") * col("nb")).cast("double"))).as("cosine"))
-    val cand = owned.join(sim, owned("item") === sim("ia"))
-      .select(col("cust"), col("ib").as("rec"), col("item").as("via"),
-        col("cosine"))
-      .join(owned.select(col("cust"), col("item").as("rec")),
-        Seq("cust", "rec"), "left_anti")
-    val scored = cand.groupBy("cust", "rec")
-      .agg(expr("""aggregate(
-             transform(sort_array(collect_list(struct(via, cosine))),
-                       s -> s.cosine),
-             0.0D, (acc, v) -> acc + v)""").as("score"),
-        count(lit(1)).as("n_paths"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("cust").orderBy(col("score").desc, col("rec"))
-    scored.withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= RecTopK)
-      .select(col("cust").as("o_custkey"), col("rank"),
-        col("rec").as("item"), col("score"), col("n_paths"))
-      .orderBy("o_custkey", "rank")
-  }
-
-  // --- q223: product-quantization code assignment --------------------------------------
-  // The memory side of billion-scale ANN: a 64-dim float vector becomes
-  // PqSub=4 one-byte codes (PqCodes=16 sub-centroids per subspace) — a
-  // 64× compression the IVF family (q33/q59/q61) pairs with for
-  // in-memory re-ranking. Codebooks here are the q61 deterministic draw
-  // (first train vectors' slices in id order) so the oracle replays
-  // them verbatim; assignment is argmin L2 with lowest-code tiebreak as
-  // one struct-MIN hash agg (no window). dist² is a fixed-order fold of
-  // exact float→double subtractions — bit-stable cross-engine (the
-  // aggregate-from-0.0 vs list_reduce-from-first equivalence: 0.0 + t₁
-  // is exact).
-  val PqSub = 4
-  val PqCodes = 16
-
-  def pqCodes(spark: SparkSession, dir: String): DataFrame = {
-    val subDim = graft.functions.Lsh.Dim / PqSub
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    // bounded driver state: PqCodes seed vectors (the q59/q61 pattern)
-    val seeds = emb.filter(col("vec_id") >= AnnQueryMaxId)
-      .orderBy("vec_id").limit(PqCodes)
-      .select("v").collect().map(_.getSeq[Double](0))
-    val cents = for (s <- 0 until PqSub; c <- seeds.indices)
-      yield (s, c, seeds(c).slice(s * subDim, (s + 1) * subDim))
-    import spark.implicits._
-    val cdf = cents.toDF("subspace", "code", "cent")
-    val sub = emb.select(col("vec_id"),
-        explode(array((0 until PqSub).map(s =>
-          struct(lit(s).as("subspace"),
-            slice(col("v"), s * subDim + 1, subDim).as("sv"))): _*)).as("e"))
-      .select(col("vec_id"), col("e.subspace").as("subspace"), col("e.sv").as("sv"))
-    sub.join(broadcast(cdf), "subspace")
-      .withColumn("dist2", expr(
-        "aggregate(zip_with(sv, cent, (x, c) -> (x - c) * (x - c)), 0.0D, (a, b) -> a + b)"))
-      .groupBy("vec_id", "subspace")
-      .agg(min(struct(col("dist2"), col("code"))).as("m"))
-      .select(col("vec_id"), col("subspace"),
-        col("m.code").as("code"), col("m.dist2").as("dist2"))
-      .orderBy("vec_id", "subspace")
-  }
-
-  // --- q224: Kneser–Ney continuation-count table ---------------------------------------
-  // The LM-training count tables (operators/Collocations.kneserNeyCounts):
-  // per word, token count, distinct left contexts N1+(·w), distinct
-  // right continuations N1+(w·), and the continuation probability
-  // N1+(·w)/N1+(··) — the statistic KN smoothing replaces raw unigram
-  // frequency with ("Francisco" is frequent but only ever follows
-  // "San"). Exact integers from two hash-aggs over the distinct
-  // bigram-TYPE table (the q215 bigram walk shared), one division.
-  val KnMinTokens = 5L
-
-  def knCounts(spark: SparkSession, dir: String): DataFrame =
-    Collocations.kneserNeyCounts(Tables.documents(spark, dir), col("text"),
-        KnMinTokens)
-      .orderBy("word")
-
-  // --- q225: BPE merge training ---------------------------------------------------------
-  // The TRAINING side of q126's tokenizer: learn the first N byte-pair
-  // merges from the corpus. BPE training is inherently sequential (each
-  // merge changes the next round's pair counts), so the operator is N
-  // rounds of [weighted adjacent-pair count over the WORD-FREQUENCY
-  // table → argmax (count DESC, pair ASC) → apply the merge]. The
-  // distributed shape is right: the corpus is scanned ONCE into the
-  // word-frequency table (vocabulary-sized — the classic BPE trick);
-  // every round then runs on that tiny frame, and only the 1-row argmax
-  // ever reaches the driver (the watermark-store bound). Words are
-  // space-separated symbol strings padded with sentinel spaces; the
-  // merge is a plain substring replace of " a b " with " ab " —
-  // LEFT-TO-RIGHT non-overlapping in BOTH engines (java String.replace
-  // ≡ DuckDB replace), which is the tie-handling the oracle replays.
-  // Pair counts count adjacent POSITIONS (an "a a a" word yields two
-  // (a,a)); both sides count identically, so the gate pins the whole
-  // sequential procedure.
-  val BpeMergeRounds = 5
-
-  def bpeMerges(spark: SparkSession, dir: String): DataFrame =
-    bpeMergesFrom(spark, Tables.documents(spark, dir), col("text"),
-      BpeMergeRounds)
-
-  /** The merge loop over any (doc frame, text column) — factored so the
-    * spec can drive it with a hand-computable fixture. Stops early if
-    * the symbol inventory exhausts before `rounds` merges (every word
-    * fully merged) — the gated corpus never does.
-    */
-  def bpeMergesFrom(spark: SparkSession, docs: DataFrame, textCol: Column,
-                    rounds: Int): DataFrame = {
-    val words = docs
-      .filter(textCol.isNotNull)
-      .select(explode(split(textCol, " ")).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy("w").agg(count(lit(1)).as("n"))
-      .select(concat(lit(" "),
-        expr("array_join(transform(sequence(1, length(w)), i -> substring(w, i, 1)), ' ')"),
-        lit(" ")).as("s"), col("n"))
-    var cur = words.leanCheckpoint()
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    var exhausted = false
-    for (r <- 1 to rounds if !exhausted) {
-      val sy = expr("split(trim(s), ' ')")
-      val best = cur
-        .select(col("n"), explode(arrays_zip(
-          slice(sy, lit(1), size(sy) - 1).as("a"),
-          slice(sy, lit(2), size(sy) - 1).as("b"))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("n")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(1).collect() // bounded: at most ONE row per round
-      if (best.isEmpty) exhausted = true
-      else {
-        val (a, b, cnt) =
-          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges += ((r, a, b, cnt))
-        cur = cur.select(org.apache.spark.sql.functions.replace(col("s"),
-            lit(s" $a $b "), lit(s" $a$b ")).as("s"), col("n"))
-          .leanCheckpoint()
-      }
-    }
-    import spark.implicits._
-    merges.result()
-      .toDF("round", "sym_a", "sym_b", "pair_count")
-      .orderBy("round")
-  }
-
-  // --- q226: exact quantiles via the distributed decomposition ------------------------
-  // q68's report through `Median.groupedExactQuantiles` instead of the
-  // percentile aggregate — the q197↔q11 twin pattern: same rows, same
-  // oracle, different physical plan. The percentile aggregate
-  // materializes each group's full value set in one buffer (fine at
-  // q68's group sizes, the q220 GC storm at millions of values); the
-  // decomposition's state is per-(group, bucket) counts however large
-  // the groups grow — this gate proves the two plans bit-agree on all
-  // four interpolation fractions, not just the median.
-  def quantilesDecomposed(spark: SparkSession, dir: String): DataFrame = {
-    val rows = Median.groupedExactQuantiles(
-      Tables.lineitem(spark, dir)
-        .select(col("l_returnflag"),
-          col("l_extendedprice").cast("double").as("price")),
-      "l_returnflag", "price", SketchQs, bucketScale = 0.01)
-    rows.groupBy("l_returnflag")
-      .agg(min(when(col("q") === 0.25, col("quantile"))).as("p25"),
-        min(when(col("q") === 0.5, col("quantile"))).as("p50"),
-        min(when(col("q") === 0.75, col("quantile"))).as("p75"),
-        min(when(col("q") === 0.99, col("quantile"))).as("p99"))
-      .orderBy("l_returnflag")
-  }
-
-  // --- q227: Hilbert vs Morton pruning comparison --------------------------------------
-  // The question q221 exists to answer, measured: for q159's probe set,
-  // how many blocks (files) and rows must a scan touch under each
-  // curve's layout? Hilbert's unit-step locality makes every block a
-  // compact region, so its per-block min/max rectangles are uniformly
-  // tight where some Z-blocks straddle a bit-boundary jump — the
-  // comparison row per probe is the planner-side evidence for choosing
-  // the layout rewrite. Both manifests are O(blocks); probes are a
-  // 6-row broadcast; the oracle rebuilds both curves' manifests in SQL.
-  def hilbertPruningCompare(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val x = col("o_custkey")
-    val y = datediff(to_date(col("o_orderdate")), to_date(lit("1970-01-01")))
-    val orders = Tables.orders(spark, dir)
-    val mz = ZOrder.layoutManifest(orders, x, y, ZQBits, ZBlockShift)
-    val mh = ZOrder.hilbertLayoutManifest(orders, x, y, ZQBits, ZBlockShift)
-    val probes = PruneProbes.toDF("probe_id", "xlo", "xhi", "ylo", "yhi")
-    def touched(man: DataFrame, bc: String, rc: String) =
-      probes.join(broadcast(man),
-          col("xlo") <= col("max_x") && col("min_x") <= col("xhi") &&
-            col("ylo") <= col("max_y") && col("min_y") <= col("yhi"), "left")
-        .groupBy("probe_id")
-        .agg(count(col("block")).as(bc),
-          coalesce(sum("n_rows"), lit(0L)).as(rc))
-    touched(mz, "blocks_z", "rows_z")
-      .join(touched(mh, "blocks_h", "rows_h"), Seq("probe_id"))
-      .orderBy("probe_id")
-  }
-
-  // --- q277/q278: three-dimensional layout curves (VERDICT r16 item 6) -----------------
-  // The 2-D kernels interleave exactly two axes; real lakehouse OPTIMIZE
-  // Z-orders 3–4 columns (part × supplier × ship-day is the classic
-  // trio). q277 is the 3-D Morton zone map over lineitem — the d-dim
-  // interleave is a plain bit loop (ZOrderExprs.mortonN, codegen'd);
-  // q278 scores it against the 3-D Hilbert curve (Skilling transpose
-  // walk, HilbertExprs.hilbertN) on a fixed probe-box panel, extending
-  // the q227 comparison to d=3. qBits=6 per axis keeps the index at 18
-  // bits; the same exact-integer quantization as the 2-D family makes
-  // both engines' grids bit-identical.
-
-  val Z3QBits = 6
-  val Z3BlockShift = 6
-
-  /** 3-D probe boxes in quantized grid coordinates (0..63 per axis):
-    * single-dim stripes/planes/bands, a mid cube, a point, and the
-    * full-scan control row.
-    */
-  val PruneProbes3: Seq[(Int, Int, Int, Int, Int, Int, Int)] = Seq(
-    (1, 10, 10, 0, 63, 0, 63),   // one part stripe, everything else
-    (2, 0, 63, 6, 6, 0, 63),     // one supplier plane
-    (3, 0, 63, 0, 63, 20, 27),   // 8-bucket ship-day band
-    (4, 16, 31, 16, 31, 16, 31), // mid-grid cube
-    (5, 33, 33, 33, 33, 33, 33), // single cell
-    (6, 0, 63, 0, 63, 0, 63))    // full scan (control row)
-
-  private def lineitem3Dims(spark: SparkSession, dir: String) = {
-    val li = Tables.lineitem(spark, dir)
-    (li, col("l_partkey"), col("l_suppkey"),
-      datediff(col("l_shipdate").cast("date"), to_date(lit("1970-01-01"))))
-  }
-
-  def zorder3Manifest(spark: SparkSession, dir: String): DataFrame = {
-    val (li, x, y, z) = lineitem3Dims(spark, dir)
-    ZOrder.layoutManifest3(li, x, y, z, Z3QBits, Z3BlockShift)
-  }
-
-  def hilbert3PruningCompare(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val (li, x, y, z) = lineitem3Dims(spark, dir)
-    val mz = ZOrder.layoutManifest3(li, x, y, z, Z3QBits, Z3BlockShift)
-    val mh = ZOrder.hilbertManifest3(li, x, y, z, Z3QBits, Z3BlockShift)
-    val probes = PruneProbes3
-      .toDF("probe_id", "xlo", "xhi", "ylo", "yhi", "zlo", "zhi")
-    def touched(man: DataFrame, bc: String, rc: String) =
-      probes.join(broadcast(man),
-          col("xlo") <= col("max_x") && col("min_x") <= col("xhi") &&
-            col("ylo") <= col("max_y") && col("min_y") <= col("yhi") &&
-            col("zlo") <= col("max_z") && col("min_z") <= col("zhi"), "left")
-        .groupBy("probe_id")
-        .agg(count(col("block")).as(bc),
-          coalesce(sum("n_rows"), lit(0L)).as(rc))
-    touched(mz, "blocks_z", "rows_z")
-      .join(touched(mh, "blocks_h", "rows_h"), Seq("probe_id"))
-      .orderBy("probe_id")
-  }
-
-  // --- q238: two-level layout (time ranges → Hilbert within) vs the flat curve --------
-  // The partition-evolution shape (VERDICT r14 item 10): range-plan the
-  // OUTER dimension (order day) into 2^ObBits ingestion-aligned ranges
-  // FIRST, Hilbert-cluster WITHIN each range on per-range bounds — vs
-  // q230's flat global curve. Both zone maps carry RAW-coordinate
-  // min/max (parquet-footer semantics — the comparable unit when the
-  // grids differ), and the same raw rectangle probes score blocks/rows
-  // a scan must touch under each layout (the q227 evidence pattern).
-  // Beyond pruning, the two-level layout is what survives INGESTION:
-  // a new day extends the top range or opens a new one, while the flat
-  // global curve re-quantizes every historical block the moment the
-  // y-bounds move.
-  val ObBits = 3
-  val TwoLevelProbes: Seq[(Int, Long, Long, Long, Long)] = Seq(
-    (1, 0L, 119L, 9496L, 9861L),        // low-key band × one year
-    (2, 0L, 10000000L, 9496L, 9526L),   // all keys × one month (time band)
-    (3, 0L, 299L, 0L, 20000L),          // key band × all time
-    (4, 400L, 520L, 9131L, 9252L),      // small box in 1995
-    (5, 0L, 10000000L, 10300L, 20000L)) // the newest era only
-
-  def hilbertTwoLevelCompare(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val x = col("o_custkey")
-    val y = datediff(to_date(col("o_orderdate")), to_date(lit("1970-01-01")))
-    val orders = Tables.orders(spark, dir)
-    val flat = ZOrder.rawHilbertManifest(orders, x, y, ZQBits, ZBlockShift)
-    val two = ZOrder.twoLevelHilbertManifest(orders, x, y, ObBits, ZQBits,
-      ZBlockShift)
-    val probes = TwoLevelProbes.toDF("probe_id", "xlo", "xhi", "ylo", "yhi")
-    def touched(man: DataFrame, bc: String, rc: String) =
-      probes.join(broadcast(man),
-          col("xlo") <= col("max_x") && col("min_x") <= col("xhi") &&
-            col("ylo") <= col("max_y") && col("min_y") <= col("yhi"), "left")
-        .groupBy("probe_id")
-        .agg(count(col("block")).as(bc),
-          coalesce(sum("n_rows"), lit(0L)).as(rc))
-    touched(flat, "blocks_flat", "rows_flat")
-      .join(touched(two, "blocks_two", "rows_two"), Seq("probe_id"))
-      .orderBy("probe_id")
-  }
-
-  // --- q228: cohort conversion rate with Wilson confidence bounds ---------------------
-  // The A/B-dashboard statistic done right: per first-view-day cohort,
-  // the view→purchase conversion rate with the Wilson 95% interval —
-  // the bound that stays inside [0,1] and behaves at small n where the
-  // normal approximation lies. Exactness: k and n are exact integers
-  // from two hash-aggs; the Wilson terms are a FIXED-SHAPE double
-  // expression over them (one sqrt, correctly rounded in any IEEE
-  // engine), so both engines round identically — the q195 recipe
-  // applied to interval estimation.
-  val WilsonZ = 1.96
-
-  /** Wilson score interval bounds — the FIXED-SHAPE double expression
-    * q228 gates (one sqrt, every step correctly rounded identically in
-    * any IEEE engine). Factored as Columns so the randomized spec can
-    * drive the k = 0 / k = n / n = 1 corners directly against a
-    * driver-side replication of the same shape.
-    */
-  def wilsonBounds(p: Column, nD: Column, z: Column): (Column, Column) = {
-    val z2 = z * z
-    val rad = z * sqrt(p * (lit(1.0) - p) / nD + z2 / (lit(4.0) * nD * nD))
-    val lo = (p + z2 / (lit(2.0) * nD) - rad) / (lit(1.0) + z2 / nD)
-    val hi = (p + z2 / (lit(2.0) * nD) + rad) / (lit(1.0) + z2 / nD)
-    // clamp to the interval's true contract 0 ≤ lo ≤ p ≤ hi ≤ 1: at
-    // k = 0 the float lo reads ±2e-17 (either side of the exact 0) and
-    // at k = n the float hi reads 1 + ε (randomized-spec findings) —
-    // mathematically lo ≤ p ≤ hi always holds for z > 0, so clamping
-    // restores the exact contract and loses nothing; the oracle clamps
-    // the SAME unclamped bits to the SAME expressions, so the gate
-    // stays bit-exact
-    (least(p, greatest(lit(0.0), lo)), greatest(p, least(lit(1.0), hi)))
-  }
-
-  def conversionCi(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
-    val perUser = ev
-      .groupBy("user_id")
-      .agg(min(when(col("event_type") === "view", col("us"))).as("tv"))
-      .filter(col("tv").isNotNull)
-      .join(ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("us").as("tp")),
-        Seq("user_id"), "left")
-      .groupBy(col("user_id"), col("tv"))
-      .agg(max(col("tp").isNotNull && col("tp") > col("tv")).as("converted"))
-    val (lo, hi) = wilsonBounds(col("p"), col("nD"), lit(WilsonZ))
-    perUser
-      .groupBy(expr("tv div 86400000000").as("cohort_day"))
-      .agg(count(lit(1)).as("n_users"),
-        sum(when(col("converted"), 1L).otherwise(0L)).as("n_converted"))
-      .withColumn("p",
-        col("n_converted").cast("double") / col("n_users").cast("double"))
-      .withColumn("nD", col("n_users").cast("double"))
-      .select(col("cohort_day"), col("n_users"), col("n_converted"),
-        col("p").as("conversion_rate"),
-        lo.as("wilson_lo"), hi.as("wilson_hi"))
-      .orderBy("cohort_day")
-  }
-
-  // --- q229: bitemporal belief-revision report -----------------------------------------
-  // The correction audit on top of q217: between consecutive KNOWLEDGE
-  // versions, how did our belief about validity at day V change? A
-  // later watermark can ADD users first seen between the watermarks,
-  // REPLACE the covering row (a newly-known event with ts ≤ V becomes
-  // the new last-event-before-V), or REVISE it (same covering event,
-  // effective_to re-closed by a newly-known later event). Per
-  // consecutive version pair: n_added / n_replaced / n_revised /
-  // n_unchanged — the summary a data steward reads before trusting a
-  // backfilled report.
-  // Both belief sets recomputed per watermark literal (the q217
-  // machinery without the snapshot store: the diff is about the TIME
-  // AXES, and the store's fidelity is already gated by q174/q217).
-  def beliefRevisions(spark: SparkSession, dir: String): DataFrame = {
-    def beliefAt(k: String): DataFrame =
-      Scd.asOfSnapshot(
-        Scd.scd2FromChangelog(
-          Tables.events(spark, dir)
-            .filter(col("ts") < utcTs(k))
-            .select("user_id", "event_id", "event_type", "value", "ts"),
-          keys = Seq("user_id"), seqCol = "ts", tieCols = Seq("event_id")),
-        utcTs(BtValidTs))
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("effective_to")).as("eto"))
-    TravelTs.sliding(2).zipWithIndex.map { case (Seq(k1, k2), i) =>
-      val b1 = beliefAt(k1).select(col("user_id"), col("event_id").as("e1"),
-        col("eto").as("t1"))
-      val b2 = beliefAt(k2).select(col("user_id"), col("event_id").as("e2"),
-        col("eto").as("t2"))
-      b2.join(b1, Seq("user_id"), "left")
-        .agg(lit(i + 1).cast("int").as("transition"),
-          sum(when(col("e1").isNull, 1L).otherwise(0L)).as("n_added"),
-          sum(when(col("e1").isNotNull && col("e1") =!= col("e2"), 1L)
-            .otherwise(0L)).as("n_replaced"),
-          sum(when(col("e1") === col("e2") &&
-            !(col("t1") <=> col("t2")), 1L).otherwise(0L)).as("n_revised"),
-          sum(when(col("e1") === col("e2") &&
-            (col("t1") <=> col("t2")), 1L).otherwise(0L)).as("n_unchanged"))
-    }.reduce(_ unionByName _)
-      .orderBy("transition")
-  }
-
-  // --- q231: weighted median via the generalized Median operator ----------------------
-  // q196's report through `Median.groupedWeightedMedian` — the
-  // q197↔q11 / q226↔q68 twin pattern: same rows, same oracle,
-  // different physical plan. q196 hand-rolls the value-bucket
-  // decomposition inline; this routes it through the REUSABLE operator
-  // (which also serves unweighted medians/quantiles), proving the
-  // generalization subsumes the inline form bit-for-bit. The
-  // bucketScale 2^-11 reproduces q196's 2048-wide buckets: scaling by
-  // an exact power of two is an exact double operation, so bucket
-  // assignment is identical between the twins.
-  def weightedMedianDecomposed(spark: SparkSession, dir: String): DataFrame =
-    Median.groupedWeightedMedian(
-      Tables.lineitem(spark, dir)
-        .select(col("l_returnflag"),
-          dec2(col("l_extendedprice")).cast("double").as("price"),
-          col("l_quantity").cast("long").as("qty")),
-      "l_returnflag", "price", "qty", "weighted_median",
-      bucketScale = 1.0 / WmBucketWidth)
-      .orderBy("l_returnflag")
-
-  // --- q234: streaming PQ code assignment (stream-static enrich) ----------------------
-  // The ONLINE half of the ANN story (VERDICT r13 item 7): q223's
-  // product-quantization argmin as a REAL stream — new vectors arrive
-  // on a file stream and leave with their 4 sub-codes, the ingest-time
-  // encode step of a billion-scale vector store. Spark shape: the
-  // codebook is folded into a PqSub-row static frame whose 16
-  // candidates sit in ONE array column, broadcast into a stream-static
-  // inner join (q161's class: append mode, no state store, no
-  // watermark), and the argmin is a pure map-side projection —
-  // `array_min` over struct(dist2, code) ≡ q223's struct-MIN hash agg,
-  // so the emission set is exactly the batch assignment and the gate
-  // shares q223's oracle verbatim (the q144↔q40 twin discipline
-  // extended to streams).
-  def streamedPqAssign(spark: SparkSession, dir: String): DataFrame = {
-    val subDim = graft.functions.Lsh.Dim / PqSub
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    // bounded driver state: PqCodes seed vectors (the q59/q61/q223 draw)
-    val seeds = emb.filter(col("vec_id") >= AnnQueryMaxId)
-      .orderBy("vec_id").limit(PqCodes)
-      .select("v").collect().map(_.getSeq[Double](0))
-    import spark.implicits._
-    // seeds.indices, not 0 until PqCodes: the batch twin q223 iterates
-    // the ACTUAL seed count, so a short/filtered corpus (< PqCodes
-    // trainable vectors) degrades both twins identically instead of
-    // throwing IndexOutOfBounds on the stream side only.
-    val cands = (0 until PqSub).map { s =>
-      (s, seeds.indices.map(c =>
-        (c, seeds(c).slice(s * subDim, (s + 1) * subDim))))
-    }.toDF("subspace", "cands")
-    val stream = Tables.embeddingsStream(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .select(col("vec_id"), explode(array((0 until PqSub).map(s =>
-        struct(lit(s).as("subspace"),
-          slice(col("v"), s * subDim + 1, subDim).as("sv"))): _*)).as("e"))
-      .select(col("vec_id"), col("e.subspace").as("subspace"),
-        col("e.sv").as("sv"))
-    val assigned = stream.join(broadcast(cands), "subspace")
-      .withColumn("m", expr(
-        """array_min(transform(cands, c -> struct(
-             aggregate(zip_with(sv, c._2, (x, cc) -> (x - cc) * (x - cc)),
-                       0.0D, (a, b) -> a + b) AS dist2,
-             c._1 AS code)))"""))
-      .select(col("vec_id"), col("subspace"),
-        col("m.code").as("code"), col("m.dist2").as("dist2"))
-    val name = runToTable(assigned.writeStream, "graft_q234_")
-    spark.table(name).orderBy("vec_id", "subspace")
-  }
-
-  // --- q233: multi-word collocation spans ----------------------------------------------
-  // q225's merge machinery iterated over q215's bigram LIFTS (VERDICT
-  // r13 item 6): per round, the adjacent pair with the highest PMI
-  // lift over the CURRENT symbol sequences merges into one unit, so
-  // n-ary spans ("new york city") surface where the flat bigram table
-  // only ever shows their binary prefixes. Selection rides the
-  // quantized exact-integer lift key (DECIMAL(38,0) products, floor
-  // div by 2^-20 — deterministic total order, ties (a, b) lexic);
-  // the oracle unrolls the same rounds with HUGEINT arithmetic and
-  // DuckDB `replace` ≡ java String.replace left-to-right merging (the
-  // q225 contract).
-  val SpanRounds = 4
-
-  def collocationSpanMining(spark: SparkSession, dir: String): DataFrame =
-    Collocations.collocationSpans(spark, Tables.documents(spark, dir),
-      col("text"), SpanRounds, PmiMinMarginal, PmiMinPair)
-
-  // --- q232: strongly-connected components of the directed basket graph ---------------
-  // The directed-family completion (VERDICT r13 item 4): q216's
-  // sequential-basket graph has real one-way structure once sparsified
-  // — on every fifth order's chains the graph is the classic bow-tie
-  // (one giant SCC + a singleton periphery, measured at all three SFs)
-  // — and SCC is the operator that separates the recirculating core
-  // from the feed-in/feed-out tendrils (citation/changelog-graph
-  // analytics; PageRank's convergence structure). operators/Scc:
-  // forward min-label coloring + backward root-reach marking, peeled
-  // per outer round; caps are REQUIRED non-binding so a partial
-  // fixpoint can never ship as plausible labels. Oracle: DuckDB
-  // recursive-CTE mutual-reachability closure — a completely different
-  // algorithm (closure vs coloring) agreeing on every label.
-  val SccOrderMod = 5
-
-  /** The q232/q236 directed basket graph: consecutive line items of
-    * every SccOrderMod-th order, as (src, dst) part keys.
-    */
-  private[graft] def basketEdges(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-      .filter(pmod(col("l_orderkey"), lit(SccOrderMod.toLong)) === 0)
-      .select("l_orderkey", "l_linenumber", "l_partkey")
-    val a = li.alias("a")
-    val b = li.alias("b")
-    a.join(b, col("a.l_orderkey") === col("b.l_orderkey") &&
-        col("b.l_linenumber") === col("a.l_linenumber") + 1)
-      .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-  }
-
-  def sccBaskets(spark: SparkSession, dir: String): DataFrame = {
-    val comp = Scc.components(basketEdges(spark, dir))
-    val sizes = comp.groupBy("scc_id").agg(count(lit(1)).as("scc_size"))
-    comp.join(sizes, "scc_id")
-      .select(col("node").as("item"), col("scc_id"), col("scc_size"))
-      .orderBy("item")
-  }
-
-  // --- q236: condensation DAG of the basket SCCs — topological depth -------------------
-  // What SCC exists to ENABLE (VERDICT r14 item 5): contract the basket
-  // graph by scc_id and analyze the resulting DAG — here the
-  // longest-path layer (topological depth) of every SCC: dep(C) = max
-  // edges on any condensation path ending at C. This is the
-  // citation/changelog-graph analysis (how deep does recirculating
-  // structure feed into this component). Spark shape: one distinct
-  // hash-agg builds the condensation edges; depth is a max-plus label
-  // propagation over the SMALL condensation frame (rounds = DAG depth,
-  // sum-of-depths is a monotone INCREASING witness, cap REQUIRED
-  // non-binding — a cycle, impossible in a correct condensation, would
-  // bind the cap and fail fast instead of shipping depths). Oracle:
-  // DuckDB recursive walk over the closure-derived condensation —
-  // UNION-deduped (c, dep) pairs are finite exactly because the
-  // condensation is a DAG.
-  val CondMaxRounds = 30
-
-  def sccCondensation(spark: SparkSession, dir: String): DataFrame =
-    condensationDepths(basketEdges(spark, dir))
-      .orderBy("scc_id")
-
-  /** The SCC + condensation-depth pipeline over any (src, dst) edge
-    * frame — factored out so the spec can drive it with a planted
-    * hand-computable DAG (the weightedPagerankRounds pattern).
-    */
-  private[graft] def condensationDepths(edgeFrame: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graft.LeanCheckpoint
-    import LeanCheckpoint.Ops
-    val ed = edgeFrame.leanCheckpoint()
-    val comp = Scc.components(ed)
-    val cS = comp.select(col("node").as("src"), col("scc_id").as("cs"))
-    val cD = comp.select(col("node").as("dst"), col("scc_id").as("cd"))
-    val ce = ed.join(cS, "src").join(cD, "dst")
-      .filter(col("cs") =!= col("cd"))
-      .select(col("cs").as("s"), col("cd").as("d")).distinct()
-      .leanCheckpoint()
-    val init = comp.select(col("scc_id").as("c")).distinct()
-      .withColumn("dep", lit(0L))
-    val (depth, _) = graft.operators.Fixpoint.untilStable(init, "dep",
-        CondMaxRounds, "condensation depth (a cycle would mean the SCC " +
-          "contraction is wrong)", "condensation") { d =>
-      val upd = ce.join(d, ce("s") === d("c"))
-        .groupBy(ce("d").as("c2")).agg(max(col("dep") + 1).as("din"))
-      d.join(upd, d("c") === upd("c2"), "left")
-        .select(d("c"),
-          greatest(col("dep"), coalesce(col("din"), col("dep"))).as("dep"))
-    }
-    val sizes = comp.groupBy("scc_id").agg(count(lit(1)).as("scc_size"))
-    depth.join(sizes, depth("c") === sizes("scc_id"))
-      .select(col("scc_id"), col("scc_size"), col("dep").as("depth"))
-  }
-
-  // --- q235: weighted interpolated quantiles (the q226 ↔ q231 merge) -------------------
-  // `Median.groupedWeightedQuantiles`: quantile_cont semantics over the
-  // weight-EXPANDED multiset, computed without materializing the
-  // expansion (per-(group,bucket) weight sums + covering-rank
-  // extraction). The oracle literally expands the weights
-  // (unnest(generate_series(1, w))) and runs quantile_cont — the
-  // decomposition must match that bit-for-bit.
-  val WqQuantiles = Seq(0.25, 0.5, 0.75, 0.9)
-
-  def weightedQuantiles(spark: SparkSession, dir: String): DataFrame =
-    Median.groupedWeightedQuantiles(
-      Tables.lineitem(spark, dir)
-        .select(col("l_returnflag"),
-          dec2(col("l_extendedprice")).cast("double").as("price"),
-          col("l_quantity").cast("long").as("qty")),
-      "l_returnflag", "price", "qty", WqQuantiles,
-      bucketScale = 1.0 / WmBucketWidth)
-      .orderBy("l_returnflag", "q")
-
-  // --- q237: PQ asymmetric-distance top-k (the ADC read path) --------------------------
-  // q223/q234 ENCODE vectors; this SEARCHES with the codes (VERDICT r14
-  // item 6) — the billion-scale read path: a query vector never touches
-  // the corpus vectors, only their 4 one-byte codes. Per query the
-  // 4×16 lookup table of subspace distances is built ON THE DRIVER
-  // (bounded: AnnQueryMaxId queries × PqSub × PqCodes doubles) and
-  // broadcast; the scan is then 4 array lookups + 3 additions per
-  // corpus row (map-side, codegen) — no per-row vector arithmetic at
-  // all. Exactness: LUT entries are fixed-order folds from 0.0 (≡ the
-  // oracle's list_reduce); the 4-term ADC sum is one fixed
-  // left-associated expression; ties break on vec_id. The wide code
-  // row (one row per vector, 4 code columns) is the in-memory layout a
-  // real PQ index ships.
-  def pqAdcTopK(spark: SparkSession, dir: String): DataFrame = {
-    val scored = adcScores(spark, dir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("adc_dist2"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= AnnK)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("adc_dist2"))
-      .orderBy("query_id", "rank")
-  }
-
-  /** Every (query, corpus-vector) ADC distance — factored so the spec
-    * can check the seed-exactness property (a corpus vector that IS a
-    * codebook seed has ADC distance ≡ the per-subspace-fold exact
-    * squared L2 to the query) over the full score table, not only the
-    * surviving top-k.
-    */
-  private[graft] def adcScores(spark: SparkSession, dir: String): DataFrame =
-    pqWideCodes(spark, dir).crossJoin(broadcast(pqLutDf(spark, dir)))
-      .select(col("query_id"), col("vec_id"), adcDist2.as("adc_dist2"))
-
-  /** The 4-lookup fixed-order ADC sum over (c0..c3) × (t0..t3) rows. */
-  private def adcDist2 =
-    element_at(col("t0"), col("c0").cast("int") + 1) +
-      element_at(col("t1"), col("c1").cast("int") + 1) +
-      element_at(col("t2"), col("c2").cast("int") + 1) +
-      element_at(col("t3"), col("c3").cast("int") + 1)
-
-  /** Per-query LUT frame (query_id, t0..t3): lut(s)(c) = ‖q_s −
-    * cent_{s,c}‖², folded from 0.0 in index order — the exact shape the
-    * oracle's list_reduce yields. Bounded driver state (queries ×
-    * PqSub × PqCodes doubles); broadcast by the consumers.
-    */
-  private def pqLutDf(spark: SparkSession, dir: String): DataFrame = {
-    val subDim = graft.functions.Lsh.Dim / PqSub
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val seeds = emb.filter(col("vec_id") >= AnnQueryMaxId)
-      .orderBy("vec_id").limit(PqCodes)
-      .select("v").collect().map(_.getSeq[Double](0))
-    val qvs = emb.filter(col("vec_id") < AnnQueryMaxId)
-      .orderBy("vec_id")
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val luts = qvs.map { case (qid, qv) =>
-      val tabs = (0 until PqSub).map { sp =>
-        seeds.indices.map { c =>
-          var acc = 0.0
-          var i = 0
-          while (i < subDim) {
-            val dlt = qv(sp * subDim + i) - seeds(c)(sp * subDim + i)
-            acc += dlt * dlt
-            i += 1
-          }
-          acc
-        }
-      }
-      (qid, tabs(0), tabs(1), tabs(2), tabs(3))
-    }.toSeq
-    import spark.implicits._
-    luts.toDF("query_id", "t0", "t1", "t2", "t3")
-  }
-
-  /** Wide PQ code rows for the corpus (one row, PqSub code columns) —
-    * the in-memory layout a real PQ index ships.
-    */
-  private def pqWideCodes(spark: SparkSession, dir: String): DataFrame =
-    pqCodes(spark, dir)
-      .filter(col("vec_id") >= AnnQueryMaxId)
-      .groupBy("vec_id")
-      .agg(
-        min(when(col("subspace") === 0, col("code"))).as("c0"),
-        min(when(col("subspace") === 1, col("code"))).as("c1"),
-        min(when(col("subspace") === 2, col("code"))).as("c2"),
-        min(when(col("subspace") === 3, col("code"))).as("c3"))
-
-  // --- q239: IVF + PQ — the composed billion-scale ANN read path -----------------------
-  // The full story assembled from its gated parts: q33's coarse probe
-  // (exact-decimal sum centroids, top-nprobe lists per query by
-  // centroid cosine) restricts WHICH corpus rows are scored at all,
-  // and q237's ADC lookup tables score ONLY those candidates from
-  // their 4 one-byte codes — the corpus's float vectors are never
-  // touched after the offline encode. Spark shape: the probe set
-  // (queries × nprobe rows) and the LUTs broadcast; candidates =
-  // codes ⋈ labels ⋈ probe-set (two broadcast joins, map-side); ADC =
-  // 4 array lookups + fixed-order sum; TakeOrdered per query. At a
-  // billion vectors the scan reads |probed lists| code rows — the
-  // IVF-PQ cost model, expressed in three joins.
-  def ivfPqSearch(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val e = NearDup.withNorm(emb, "vec_id", "embedding")
-    val q = e.filter(col("vec_id") < AnnQueryMaxId)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"))
-    val cents = Ivf.centroids(
-      emb.filter(col("vec_id") >= AnnQueryMaxId), "embedding", "label")
-    val wProbe = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("ccos").desc, col("label"))
-    val probes = q.crossJoin(broadcast(cents))
-      .withColumn("ccos",
-        graft.functions.Similarity.dot(col("qe"), col("centroid")) /
-          (col("qn") * sqrt(graft.functions.Similarity
-            .dot(col("centroid"), col("centroid")))))
-      .withColumn("lr", row_number().over(wProbe))
-      .filter(col("lr") <= IvfNProbe)
-      .select("query_id", "label")
-    val cand = pqWideCodes(spark, dir)
-      .join(emb.select(col("vec_id"), col("label")), "vec_id")
-      .join(broadcast(probes), "label")
-    val scored = cand.join(broadcast(pqLutDf(spark, dir)), "query_id")
-      .select(col("query_id"), col("vec_id"), adcDist2.as("adc_dist2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("adc_dist2"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= AnnK)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("adc_dist2"))
-      .orderBy("query_id", "rank")
-  }
-
-  // --- q230: Hilbert-order write path + pruned read-back ------------------------------
-  // The layout loop CLOSED (VERDICT r13 item 1): q221 plans the Hilbert
-  // layout and q227 proves its manifests prune at least as well as
-  // Morton's — this query actually LAYS THE DATA OUT
-  // (ZOrder.writeHilbertLayout: repartitionByRange on the HilbertIndex
-  // kernel → hive-partitioned write by index block) and reads it back
-  // through the manifest: the original-coordinate rectangle probe is
-  // translated to quantized grid bounds, intersected with the per-block
-  // zone map (O(blocks) rows; the collected block list is bounded by
-  // 2^(2·qBits−blockShift) = 1024 ids), and the scan touches ONLY the
-  // qualifying hblock partition directories — static partition pruning
-  // the Round14 spec pins in the plan (PartitionFilters on hblock), the
-  // q178 contract generalized to the 2-D curve. The exact predicate is
-  // re-applied on the original columns, so the block list only has to
-  // be a superset — the manifest can never affect correctness, only
-  // bytes read. Oracle: the same rectangle filter on the UNPARTITIONED
-  // orders table.
-  val HilXLo = 0L
-  val HilXHi = 119L
-  val HilDayLo: Long = java.time.LocalDate.of(1996, 1, 1).toEpochDay
-  val HilDayHi: Long = java.time.LocalDate.of(1996, 12, 31).toEpochDay
-
-  def hilbertLayoutWrite(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"${Sessions.tempDir("graft_hilw_")}/orders_hilbert"
-    val orders = Tables.orders(spark, dir)
-      .withColumn("day",
-        datediff(to_date(col("o_orderdate")), to_date(lit("1970-01-01")))
-          .cast("long"))
-    ZOrder.writeHilbertLayout(orders, col("o_custkey"), col("day"), path,
-      ZQBits, ZBlockShift)
-    val man = spark.read.parquet(path + "_manifest")
-    val blocks = man
-      .filter(
-        ZOrder.quantize(lit(HilXLo), col("minx"), col("maxx"), ZQBits) <= col("max_x") &&
-          col("min_x") <= ZOrder.quantize(lit(HilXHi), col("minx"), col("maxx"), ZQBits) &&
-          ZOrder.quantize(lit(HilDayLo), col("miny"), col("maxy"), ZQBits) <= col("max_y") &&
-          col("min_y") <= ZOrder.quantize(lit(HilDayHi), col("miny"), col("maxy"), ZQBits))
-      .select(col("hblock").cast("long"))
-      .collect().map(_.getLong(0)) // bounded: ≤ 1024 block ids
-    spark.read.parquet(path)
-      .filter(col("hblock").isin(blocks: _*) &&
-        col("o_custkey").between(HilXLo, HilXHi) &&
-        col("day").between(HilDayLo, HilDayHi))
-      .groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n_orders"),
-        sum(dec2(col("o_totalprice"))).cast("double").as("revenue"))
-      .orderBy("o_orderpriority")
-  }
-
-  // --- q240: signed-delta incremental view maintenance --------------------------------
-  // q14 merges INSERT-only partials; this is the full z-set/DBSP change
-  // algebra: the delta carries retractions (sign −1) as well as inserts
-  // (+1), so late corrections — a GDPR delete, a reversed transaction, a
-  // re-stated fact — maintain the view WITHOUT rescanning the base data.
-  // The scenario folds two real change kinds at once: every base row
-  // with event_id ≡ 0 (mod 7) is retracted and the post-watermark slice
-  // is inserted; the maintained view must equal a full recompute over
-  // (base ∖ retracted) ∪ inserted — which IS the oracle. Groups whose
-  // count reaches zero vanish; a negative count fails fast
-  // (Incremental.applySignedDelta). Refresh cost: O(|delta| + touched
-  // keys) — at 100 TB the nightly correction feed maintains a view over
-  // years of facts with zero fact rescans.
-  val IvmDeleteMod = 7L
-
-  def ivmSigned(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val base = ev.filter(col("ts") <= utcTs(SplitTs))
-    val view = base.groupBy("user_id")
-      .agg(count(lit(1)).as("n_events"),
-        sum(dec2(col("value"))).as("total_value"))
-    val delta = base.filter(pmod(col("event_id"), lit(IvmDeleteMod)) === 0)
-      .withColumn("__sign", lit(-1))
-      .unionByName(ev.filter(col("ts") > utcTs(SplitTs))
-        .withColumn("__sign", lit(1)))
-    val dp = Incremental.signedPartial(delta, Seq("user_id"), col("__sign"),
-      "n_events", Seq("total_value" -> dec2(col("value"))))
-    Incremental.applySignedDelta(view, dp, Seq("user_id"),
-        "n_events", Seq("total_value"))
-      .select(col("user_id"), col("n_events"),
-        col("total_value").cast("double").as("total_value"))
-      .orderBy("user_id")
-  }
-
-  // --- q241: sketch-based join-cardinality estimation ----------------------------------
-  // The optimizer statistic that prices a join WITHOUT running it: the
-  // CMS inner product Σ_b a_d[b]·b_d[b] upper-bounds the true join size
-  // Σ_k f_A(k)·f_B(k) at every depth row, min over depths is the
-  // estimate (Alon–Matias–Szegedy / Cormode–Muthukrishnan). Each side
-  // is sketched in ONE pass into depth×width additive integer cells —
-  // at 100 TB the two scans are embarrassingly parallel, the estimate
-  // itself costs a join of two 2048-cell frames — and the report puts
-  // the estimate next to the exact size (per-key count join) so the
-  // bound's tightness is itself gated. Keys are fingerprinted by
-  // `k mod P` (exact, portable; the CMS row hashes re-mix per depth).
-  def joinSizeCms(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Sketches
-    val e = Tables.events(spark, dir)
-      .select(pmod(col("user_id"), lit(Sketches.P)).as("k"))
-    val o = Tables.orders(spark, dir)
-      .select(pmod(col("o_custkey"), lit(Sketches.P)).as("k"))
-    val dots = Sketches.cmsInnerProducts(
-      Sketches.cmsCounters(e, col("k"), CmsDepth, CmsWidth),
-      Sketches.cmsCounters(o, col("k"), CmsDepth, CmsWidth))
-    val est = dots.agg(min(col("dot")).as("est_join_size"))
-    val exact = e.groupBy("k").agg(count(lit(1)).as("na"))
-      .join(o.groupBy("k").agg(count(lit(1)).as("nb")), "k")
-      .agg(coalesce(sum(col("na") * col("nb")), lit(0L)).as("exact_join_size"))
-    dots.crossJoin(broadcast(est)).crossJoin(broadcast(exact))
-      .select(col("d"), col("dot"), col("est_join_size"), col("exact_join_size"))
-      .orderBy("d")
-  }
-
-  // --- q242: ORC sink + source with pushed predicates ----------------------------------
-  // The second columnar lake format, write → filtered read-back →
-  // aggregate, gated against the same rows read from parquet. The
-  // read-back enforces a 4-column schema (column pruning at the scan)
-  // and its range predicate reaches the ORC reader as PushedFilters
-  // (Round15Spec pins it in the plan) — backed by ORC's
-  // file/stripe/row-group statistics, a selective date filter skips
-  // whole stripes undecoded at 100 TB. Timestamps round-trip inside one
-  // session (write and read share the session timezone), matching the
-  // parquet oracle's instants.
-  val OrcShipLo = "1995-01-01 00:00:00"
-  val OrcShipHi = "1997-01-01 00:00:00"
-
-  def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    import graft.sources.Sources
-    val path = s"${Sessions.tempDir("graft_orc_")}/lineitem_orc"
-    val cols = Seq("l_returnflag", "l_shipdate", "l_extendedprice", "l_discount")
-    Sources.writeOrc(
-      Tables.lineitem(spark, dir).select(cols.map(col): _*), path)
-    val schema = StructType(Seq(
-      StructField("l_returnflag", StringType),
-      // lineitem ships l_shipdate as TIMESTAMP_NTZ (isAdjustedToUTC=
-      // false); ORC preserves the NTZ-ness and refuses an LTZ read
-      StructField("l_shipdate", TimestampNTZType),
-      StructField("l_extendedprice", DoubleType),
-      StructField("l_discount", DoubleType)))
-    Sources.orc(spark, path, schema)
-      .filter(col("l_shipdate") >= Cols.ntzTs(OrcShipLo) &&
-        col("l_shipdate") < Cols.ntzTs(OrcShipHi))
-      .groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n_items"),
-        moneySum(discounted(col("l_extendedprice"), col("l_discount")))
-          .as("revenue"))
-      .orderBy("l_returnflag")
-  }
-
-  // --- q243: bloom-prefiltered decontamination ------------------------------------------
-  // q56's scale path for when the eval-set n-gram table is itself too
-  // big to broadcast as DATA: the eval grams compress to a 2^17-bit
-  // bloom bitmap (16 KiB however many grams — the q129 runtime-filter
-  // machinery on a string key), the training scan keeps only bloom hits
-  // (map-side, codegen membership test), and the exact confirm join
-  // runs on the SURVIVORS only. False positives die in the confirm,
-  // false negatives are impossible — so the report is bit-identical to
-  // q56's, which is exactly what the shared oracle checks.
-  def decontaminateBloom(spark: SparkSession, dir: String): DataFrame = {
-    val (grams, evalGrams) = decontamGramSides(spark, dir)
-    val bitmap = BloomJoin.buildBitmap(evalGrams, "gram", BloomBits)
-    decontamReport(
-      grams.filter(!col("doc_id").isin(DecontamEvalIds: _*))
-        .filter(BloomJoin.mightContain(bitmap, col("gram")))
-        .join(broadcast(evalGrams), Seq("gram")))
-  }
-
-  // --- q246: residual IVF-PQ search (the true FAISS IVFPQ encode) -----------------------
-  // q223/q237/q239 quantize the raw vectors; production IVFPQ quantizes
-  // the RESIDUAL to the coarse centroid (v − mean_list) — residuals
-  // cluster near zero whatever the list's absolute position, so the 16
-  // codes spend their resolution on local structure instead of re-
-  // encoding the centroid every vector. Consequences wired through:
-  // the coarse quantizer is L2-to-MEAN (not cosine-to-sum — magnitude
-  // matters for residuals; Ivf.meanCentroids), and the ADC tables
-  // become per-(query, PROBED LIST) — lut_{l,s}(c) = ‖(q−mean_l)_s −
-  // cb_{c,s}‖² — still bounded driver state (queries × nprobe × 4×16
-  // doubles) broadcast to a codes-only candidate scan. One join carries
-  // everything: wide code rows ⋈ the (query, label)-keyed LUT frame on
-  // label restricts candidates to probed lists AND delivers the tables.
-  // Exactness: mean = exact-decimal sum → double ÷ count; every fold
-  // fixed-order from 0.0; argmins tie-break on code/label/vec_id.
-  // Recall: measured by q257 — at THIS untrained 16-code geometry the
-  // residual encode reads recall@5 0.08 vs the raw codebook's 0.16
-  // (probe ceiling 0.98, so the codebook is the limiter); the encode
-  // PIPELINE is what this query gates, the recall row prices it.
-  def ivfPqResidualSearch(spark: SparkSession, dir: String): DataFrame =
-    residualAdcSearch(spark, dir, trainIters = 0)
-
-  // --- q259: TRAINED residual codebook search (the q257 lever, built) -------------------
-  // q257's verdict: the residual encode loses to the raw codebook
-  // (0.08 vs 0.16) because its 16 codewords are arbitrary corpus
-  // residuals, not trained — so this trains them: ResTrainIters rounds
-  // of per-subspace Lloyd (assign → floor-grid exact mean → re-assign),
-  // seeded from q246's codebook, then the identical probed-ADC read
-  // path. The oracle replays TRAINING bit-for-bit (the q59 discipline:
-  // every mean on the 2^20 integer grid, every argmin tie-broken on
-  // code) — the gate proves the training arithmetic, q260 prices the
-  // result. At a billion vectors the train pass runs on a bounded
-  // deterministic sample exactly as Ivf.trainKMeans does; the per-round
-  // cost here is one broadcast-join scan of the subvector frame.
-  val ResTrainIters = 2
-
-  def pqTrainedSearch(spark: SparkSession, dir: String): DataFrame =
-    residualAdcSearch(spark, dir, trainIters = ResTrainIters)
-
-  // --- q260: the trained codebook's recall row ------------------------------------------
-  // The measurement that closes the q254→q257→q259 arc: same exact-L2
-  // ground truth, candidate set = q259's trained-ADC top-k. Measured
-  // (sf0.01): recall@5 0.12 at 2 rounds (0.14 at a 5-round probe) vs
-  // 0.08 untrained-residual and 0.16 raw — training recovers half the
-  // gap with clear diminishing returns, and the instrument family says
-  // why the ceiling sits at raw: this corpus is ISOTROPIC, so the
-  // coarse means are near zero and residual ≈ raw — the residual
-  // transform has nothing to add here by construction. On naturally
-  // clustered data (IVF-PQ's actual deployment regime) the residual is
-  // what pays; on this fixture the honest read is "train the codebook
-  // (always), and spend the next budget on codes-per-subspace, not on
-  // more Lloyd rounds". Note recall monotonicity under training is NOT
-  // a theorem (distortion ≠ recall: the 200-vector sf0.001 corpus
-  // reads 0.3 trained vs 0.4 untrained), so Round16Spec pins Lloyd's
-  // DISTORTION descent plus the instrument's own contract, and this
-  // row reports whatever the data says.
-  def trainedRecall(spark: SparkSession, dir: String): DataFrame =
-    recallAgainstExact(spark, dir,
-      pqTrainedSearch(spark, dir).select("query_id", "vec_id"))
-
-  /** The residual IVF-PQ read path, parameterized by Lloyd rounds on
-    * the subspace codebooks (0 = q246's untrained seeds).
-    */
-  private[graft] def residualAdcSearch(spark: SparkSession, dir: String,
-                                       trainIters: Int): DataFrame = {
-    val subDim = graft.functions.Lsh.Dim / PqSub
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
-        col("label"))
-    val corpus = emb.filter(col("vec_id") >= AnnQueryMaxId)
-    val means = Ivf.meanCentroids(corpus, "v", "label")
-    val (res, cb) = residualsAndCodebook(corpus, means)
-    val sub = subspaceFrame(res, subDim)
-    val seed = seedSubCodebook(cb, subDim)
-    val cbSub =
-      if (trainIters == 0) seed else trainSubCodebook(sub, seed, trainIters)
-    val codes = assignSubCodes(sub, subCodebookDf(spark, cbSub))
-    val wide = codes.groupBy("vec_id", "label")
-      .agg(
-        min(when(col("subspace") === 0, col("code"))).as("c0"),
-        min(when(col("subspace") === 1, col("code"))).as("c1"),
-        min(when(col("subspace") === 2, col("code"))).as("c2"),
-        min(when(col("subspace") === 3, col("code"))).as("c3"))
-    // bounded driver state: coarse means (lists × dim) + query vectors →
-    // probe sets and per-(query, list) ADC tables
-    import spark.implicits._
-    val meanArr = means.collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
-    val qvs = emb.filter(col("vec_id") < AnnQueryMaxId).orderBy("vec_id")
-      .select("vec_id", "v").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    def foldL2(a: Seq[Double], b: Seq[Double], from: Int, len: Int): Double = {
-      var acc = 0.0
-      var i = 0
-      while (i < len) {
-        val d = a(from + i) - b(from + i)
-        acc += d * d
-        i += 1
-      }
-      acc
-    }
-    // as foldL2 but the codebook side is a subDim-vector indexed from 0
-    // (identical arithmetic to the pre-training slice layout)
-    def foldL2Sub(a: Seq[Double], b: Seq[Double], from: Int): Double = {
-      var acc = 0.0
-      var i = 0
-      while (i < b.length) {
-        val d = a(from + i) - b(i)
-        acc += d * d
-        i += 1
-      }
-      acc
-    }
-    val luts = qvs.flatMap { case (qid, qv) =>
-      val probed = meanArr
-        .map { case (l, m) => (foldL2(qv, m, 0, qv.length), l) }
-        .sorted.take(IvfNProbe)
-      probed.map { case (_, l) =>
-        val m = meanArr.find(_._1 == l).get._2
-        val qr = qv.indices.map(i => qv(i) - m(i))
-        val tabs = (0 until PqSub).map { s =>
-          cbSub(s).indices.map(c => foldL2Sub(qr, cbSub(s)(c), s * subDim))
-        }
-        (qid, l, tabs(0), tabs(1), tabs(2), tabs(3))
-      }
-    }.toSeq.toDF("query_id", "label", "t0", "t1", "t2", "t3")
-    val scored = wide.join(broadcast(luts), Seq("label"))
-      .select(col("query_id"), col("vec_id"), adcDist2.as("adc_dist2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("adc_dist2"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= AnnK)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("adc_dist2"))
-      .orderBy("query_id", "rank")
-  }
-
-  // --- q247: signed-delta IVM over a JOIN-aggregate view --------------------------------
-  // The case that makes IVM pay at 100 TB: the maintained view is an
-  // aggregate over a star JOIN (q08's region/nation revenue), and the
-  // refresh joins ONLY THE DELTA against the (broadcast) dimension
-  // chain — Δview = agg(Δfact ⋈ dims) folded in with signs. The base
-  // fact is never rescanned AND never re-joined; a day's corrections
-  // against years of facts cost one delta-sized join plus a keyspace
-  // merge. Retractions: every base row with l_linenumber ≡ 0 (mod 5)
-  // is retracted (a re-stated shipment feed); inserts: the post-cut
-  // slice. Oracle = q08's SQL over the delta-modified fact set.
-  val IvmJoinCutTs = "1997-01-01 00:00:00"
-  val IvmJoinDeleteMod = 5L
-
-  def ivmJoinAgg(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    def joined(fact: DataFrame) = {
-      val o = Tables.orders(spark, dir).select("o_orderkey", "o_custkey")
-      val c = Tables.customer(spark, dir).select("c_custkey", "c_nationkey")
-      val n = Tables.nation(spark, dir)
-      val r = Tables.region(spark, dir)
-      fact.join(o, fact("l_orderkey") === o("o_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .select(col("r_name").as("region"), col("n_name").as("nation"),
-          discounted(col("l_extendedprice"), col("l_discount")).as("rev"),
-          col("__sign"))
-    }
-    val base = li.filter(col("l_shipdate") < Cols.ntzTs(IvmJoinCutTs))
-    val view = joined(base.withColumn("__sign", lit(1)))
-      .groupBy("region", "nation")
-      .agg(count(lit(1)).as("n_items"), sum(col("rev")).as("revenue"))
-    val delta = base
-      .filter(pmod(col("l_linenumber"), lit(IvmJoinDeleteMod)) === 0)
-      .withColumn("__sign", lit(-1))
-      .unionByName(li.filter(col("l_shipdate") >= Cols.ntzTs(IvmJoinCutTs))
-        .withColumn("__sign", lit(1)))
-    // the refresh path: ONLY the delta flows through the join
-    val dp = Incremental.signedPartial(joined(delta),
-      Seq("region", "nation"), col("__sign"), "n_items",
-      Seq("revenue" -> col("rev")))
-    Incremental.applySignedDelta(view, dp, Seq("region", "nation"),
-        "n_items", Seq("revenue"))
-      .select(col("region"), col("nation"), col("n_items"),
-        col("revenue").cast("double").as("revenue"))
-      .orderBy("region", "nation")
-  }
-
-  // --- q250: train/val/test split contamination ------------------------------------------
-  // The evaluation-integrity audit a random split CANNOT avoid: near-
-  // duplicate documents land on opposite sides of the q143 hash split,
-  // so "held-out" test examples have verbatim siblings in train (the
-  // benchmark-inflation mechanism decontamination papers measure). The
-  // memoized verified-pair table (LSH candidates + exact Jaccard — the
-  // q34/q87 upstream, computed once per session) joins each endpoint's
-  // split label; the report rolls up pairs per unordered split
-  // combination — off-diagonal rows ARE the leaks, and the fix is
-  // cluster-aware splitting (assign q34 components, not documents).
-  def splitLeakage(spark: SparkSession, dir: String): DataFrame = {
-    val split = Tables.documents(spark, dir)
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"), splitOf(col("doc_id")).as("split"))
-    verifiedPairs(spark, dir)
-      .join(split.select(col("doc_id").as("doc_a"), col("split").as("sa")),
-        "doc_a")
-      .join(split.select(col("doc_id").as("doc_b"), col("split").as("sb")),
-        "doc_b")
-      .select(least(col("sa"), col("sb")).as("split_a"),
-        greatest(col("sa"), col("sb")).as("split_b"), col("jaccard"))
-      .groupBy("split_a", "split_b")
-      .agg(count(lit(1)).as("n_pairs"), max(col("jaccard")).as("max_jaccard"))
-      .orderBy("split_a", "split_b")
-  }
-
-  // --- q256: rolling 28-day exact median -------------------------------------------------
-  // The robust rolling baseline: q93's trailing mean/z flags melt when
-  // the window itself contains the anomaly (one spike day inflates σ);
-  // the rolling MEDIAN has breakdown point 1/2 inside the window. The
-  // window rides the O(days) daily frame — a bounded 28-element sorted
-  // list per row (collect over a RANGE frame on the aggregated series,
-  // NEVER on raw events), exact integer cents, and the even-count
-  // midpoint is the one fixed (a+b)/2 double op. At 100 TB the daily
-  // frame is still O(days): the rolling structure costs nothing more
-  // after the one fact-scan aggregation.
-  val RollMedDays = 28L
-
-  def rollingMedian(spark: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy("epoch_day").rangeBetween(-(RollMedDays - 1L), 0L)
-    Tables.events(spark, dir)
-      .groupBy(expr("unix_micros(ts) div 86400000000").as("epoch_day"))
-      .agg(sum((dec2(col("value")) * 100).cast("long")).as("cents"))
-      .withColumn("vals", sort_array(collect_list(col("cents")).over(w)))
-      .withColumn("n", size(col("vals")).cast("long"))
-      .select(
-        date_add(to_date(lit("1970-01-01")), col("epoch_day").cast("int"))
-          .as("day"),
-        col("n").as("n_days"), col("cents").as("day_cents"),
-        expr("""CASE WHEN n % 2 = 1
-                     THEN CAST(element_at(vals, CAST((n + 1) div 2 AS INT))
-                               AS DOUBLE)
-                     ELSE (CAST(element_at(vals, CAST(n div 2 AS INT))
-                                AS DOUBLE) +
-                           CAST(element_at(vals, CAST(n div 2 + 1 AS INT))
-                                AS DOUBLE)) / 2.0 END""").as("median_cents_28d"))
-      .orderBy("day")
-  }
-
-  // --- q261: bucket compaction planner ----------------------------------------------------
-  // Lakehouse maintenance planned from METADATA only (the OPTIMIZE
-  // decision): the bucketed store's per-bucket row manifest is grouped
-  // into adjacent ~target-row compaction bins by the cumulative-offset
-  // rule (`sources/Compaction`) — small buckets coalesce, at-target
-  // buckets stand alone, the tail bin may honestly run under. The
-  // input is O(buckets) manifest rows whatever the data volume; the
-  // single cumsum window rides that bounded frame (the q256
-  // discipline). The data rewrite this plan feeds is exactly what a
-  // maintenance job then does SELECTIVELY — bins, not the table.
-  val CompactBuckets = 64L
-  val CompactTargetRows = 4000L
-
-  def compactionPlan(spark: SparkSession, dir: String): DataFrame = {
-    val manifest = Tables.lineitem(spark, dir)
-      .groupBy(pmod(graft.functions.Sketches.keyHash(col("l_orderkey")),
-        lit(CompactBuckets)).as("bucket"))
-      .agg(count(lit(1)).as("n_rows"))
-    graft.sources.Compaction.planBins(manifest, "bucket", "n_rows",
-      CompactTargetRows)
-  }
-
-  // --- q262: sliding 7-day HLL distinct (the q95 ↔ q121 compose) --------------------------
-  // q95's rolling reach with SKETCH state: per-(day, register) max-rho
-  // partials (one corpus scan, the q122 grouped-register build keyed by
-  // day), then the trailing window is a REGISTER-WISE max over the
-  // O(days × m) frame — HLL's max algebra makes the sliding combine
-  // free, where q95's exact decomposition explodes each row ×7. At
-  // 100 TB the day×register frame is still days × m; the estimate is
-  // the q121 engine-portable exact-arithmetic form (powers of two sum
-  // exactly), so even the APPROXIMATE column hash-matches the oracle.
-  // Exact counts ride along for calibration (the q95 decomposition).
-  // m=32 keeps the raw-regime estimator honest at sf0.01 window
-  // cardinalities (n/m ≈ 4.7 ≥ 2.5).
-  val HllSlideM = 32
-
-  def slidingHll(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Sketches
-    val ev = Tables.events(spark, dir)
-      .select(col("user_id"), Cols.utcDate(col("ts")).as("day"))
-    val daily = Sketches.groupedHllRegisters(ev, "day", col("user_id"),
-        HllSlideM)
-      .withColumn("day_num",
-        datediff(col("day"), lit("1970-01-01").cast("date")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("idx").orderBy("day_num")
-      .rangeBetween(-(SlidingWindowDays - 1L), 0L)
-    val slid = daily.withColumn("rho7", max(col("rho")).over(w))
-      .select(col("day").as("window_end"), col("idx"),
-        col("rho7").as("rho"))
-    val est = Sketches.hllEstimate(slid, Seq("window_end"), HllSlideM,
-      "est_users_7d")
-    val exact = Analytics.slidingDistinctCount(ev, "user_id", "day",
-      SlidingWindowDays, "exact_users_7d")
-    est.join(exact, "window_end")
-      .select(col("window_end"), lit(HllSlideM.toLong).as("m"),
-        col("exact_users_7d"), col("est_users_7d"),
-        (col("est_users_7d") / col("exact_users_7d").cast("double"))
-          .as("est_ratio"))
-      .orderBy("window_end")
-  }
-
-  // --- q263: stream-stream LEFT-OUTER interval join ---------------------------------------
-  // q139's inner join answers "which purchases had a preceding click";
-  // the LEFT-OUTER form answers the question attribution actually asks
-  // — "did each purchase have one?" — and is the semantically harder
-  // stream operator: a null-match verdict only becomes decidable when
-  // the WATERMARK closes the purchase's match window, so outer rows
-  // emit with watermark latency and a BOUNDED fixture needs the stream
-  // to advance the watermark past its last real row. The gate plants a
-  // non-joining sentinel pair beyond max(ts)+lookback+delay (filtered
-  // from the result); a production stream's next events do this for
-  // free. Delay is REAL here (10s, not q139's effectively-infinite
-  // 3650d) because outer semantics require the watermark to move.
-  // Oracle = the batch LEFT JOIN with the same interval condition.
-  val StreamOuterDelay = "10 seconds"
-  val StreamOuterLookback = "1 HOUR"
-
-  def streamedIntervalLeftJoin(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSpark(spark0)
-    val (purchases, clicks) = outerJoinStreamSides(spark, dir)
-    val name = runToTable(
-      graft.streaming.StreamJoin.intervalLeftJoin(purchases, "purchase_ts",
-          clicks, "click_ts", keys = Seq("user_id"),
-          delay = StreamOuterDelay, lookback = StreamOuterLookback)
-        .writeStream,
-      "graft_q263_")
-    spark.table(name).filter(col("user_id") >= 0)
-      .orderBy("user_id", "purchase_id", "click_id")
-  }
-
-  // --- q269: stream-stream FULL-OUTER interval join ---------------------------------------
-  // The correlation-completeness view (both directions of q263's
-  // question at once): matched pairs, click-less purchases AND
-  // purchase-less clicks in one stream — the report a pipeline-health
-  // dashboard wants ("what share of each feed correlates?"). The right
-  // side's null verdict needs the watermark past rightTs + lookback
-  // (a later purchase could still reach BACK an hour), so it emits
-  // with lookback+delay latency — strictly later than the left's. Same
-  // sentinel contract as q263; output key COALESCEd from whichever
-  // side exists.
-  def streamedIntervalFullJoin(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSpark(spark0)
-    val (purchases, clicks) = outerJoinStreamSides(spark, dir)
-    val name = runToTable(
-      graft.streaming.StreamJoin.intervalFullJoin(purchases, "purchase_ts",
-          clicks, "click_ts", keys = Seq("user_id"),
-          delay = StreamOuterDelay, lookback = StreamOuterLookback)
-        .writeStream,
-      "graft_q269_")
-    spark.table(name).filter(col("user_id") >= 0)
-      .orderBy("user_id", "purchase_id", "click_id")
-  }
-
-  /** The outer-join gates' shared stream fixture: purchases + clicks
-    * file streams over the events slice with a non-joining sentinel
-    * PAIR planted past max(ts) + lookback + delay, so the watermark
-    * closes every real row's match window before the stream ends.
-    */
-  private def outerJoinStreamSides(spark: SparkSession,
-                                   dir: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.types._
-    val ev = Tables.events(spark, dir)
-      .select("user_id", "event_id", "event_type", "ts")
-    val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-    // beyond lookback + delay + a margin, so every real row's window
-    // closes before the stream ends
-    val sentinelTs = new java.sql.Timestamp(maxTs.getTime + 2L * 3600 * 1000)
-    val fixture = Sessions.tempDir("graft_q263fx_")
-    val sentinels = Seq(
-      (-1L, -1L, "purchase", sentinelTs),
-      (-2L, -2L, "click", sentinelTs))
-    import spark.implicits._
-    // ONE file: the file-stream source orders batches by file, and a
-    // batch containing the sentinel would advance the watermark past
-    // every event in files processed after it — they'd all drop as
-    // late. A single file = a single batch at watermark 0 (nothing is
-    // late), then the no-data batch flushes the outer verdicts.
-    ev.unionByName(sentinels.toDF("user_id", "event_id", "event_type", "ts"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(fixture)
-    val schema = StructType(Seq(
-      StructField("user_id", LongType), StructField("event_id", LongType),
-      StructField("event_type", StringType),
-      StructField("ts", TimestampType)))
-    val stream = spark.readStream.schema(schema).parquet(fixture)
-    (stream.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts")),
-      stream.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"),
-          col("ts").as("click_ts")))
-  }
-
-  // --- q268: streaming SLIDING-window aggregation -----------------------------------------
-  // The overlapping-window twin of q138's tumbling gate (the streaming
-  // WAU curve): 7-day windows advancing daily, append mode — each
-  // event belongs to 7 window generations, each generation flushes
-  // exactly once when the watermark passes ITS end, so the emitted set
-  // is "every (window, type) cell whose end ≤ max(ts)" — the q138
-  // emission rule at slide granularity, reproduced by the oracle with
-  // a ×7 membership expansion (the batch shape of the same window
-  // algebra). Exact integer cents.
-  def streamedSlidingAgg(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSpark(spark0)
-    val stream = Tables.eventsStream(spark, dir)
-      .select(col("ts"), col("event_type"),
-        (dec2(col("value")) * 100).cast("long").as("cents"))
-    val name = runToTable(
-      graft.streaming.WindowedAgg.sliding(stream, "ts", "7 days", "1 day",
-          "0 seconds", Seq("event_type"),
-          Seq(count(lit(1)).as("n_events"), sum(col("cents")).as("cents_sum")))
-        .writeStream,
-      "graft_q268_")
-    spark.table(name).orderBy("window_start", "event_type")
-  }
-
-  // --- q264: max-min fair token-budget allocation (water-filling) -------------------------
-  // The corpus-mixing allocator the q57/q83/q111 family still lacked:
-  // given per-source token supplies and a total budget, give every
-  // source as EQUAL a share as possible without exceeding its supply —
-  // the water-filling / max-min fairness solution (small sources keep
-  // everything, big sources are capped at one common level). Exact
-  // integer closed form over the O(sources) frame: sort supplies asc,
-  // a source is FULL iff serving it whole and everyone after it at its
-  // level fits the budget (cum_j + s_j·(n−j) ≤ B — monotone, so the
-  // full set is a prefix); the rest split the remainder R = B − cum_c
-  // as level L = R div k with the first r = R mod k (asc order) taking
-  // L+1 — Σ allocations ≡ B exactly, no float ever. Budget = total
-  // div 2 so the operator exercises at every SF.
-  val WaterfillDen = 2L
-
-  def budgetWaterfill(spark: SparkSession, dir: String): DataFrame =
-    waterfillFrom(Tables.documents(spark, dir)
-      .filter(col("text").isNotNull)
-      .groupBy("source")
-      .agg(sum(size(TextAnalysis.words(col("text"))).cast("long"))
-        .as("supply_tokens")))
-
-  /** The water-fill closed form over any (source, supply_tokens) frame —
-    * factored so the spec can drive planted supplies and pin the
-    * Σ alloc ≡ budget and alloc ≤ supply invariants.
-    */
-  private[graft] def waterfillFrom(supply: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("supply_tokens"), col("source"))
-    val ranked = supply
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .withColumn("cum", sum(col("supply_tokens")).over(
-        w.rowsBetween(org.apache.spark.sql.expressions.Window
-          .unboundedPreceding, 0)))
-    val tot = ranked.agg(max(col("cum")).as("total"),
-      max(col("rk")).as("n"))
-    val staged = ranked.crossJoin(broadcast(tot))
-      .withColumn("budget", expr(s"total div ${WaterfillDen}L"))
-      .withColumn("full",
-        col("cum") + col("supply_tokens") * (col("n") - col("rk"))
-          <= col("budget"))
-    val cut = staged
-      .agg(sum(when(col("full"), 1L).otherwise(0L)).as("c"),
-        coalesce(max(when(col("full"), col("cum"))), lit(0L)).as("cum_c"))
-    staged.crossJoin(broadcast(cut))
-      // greatest(k,1): when every source is full (budget ≥ total) the
-      // level branch is dead but ANSI mode still evaluates the division
-      .withColumn("k", greatest(col("n") - col("c"), lit(1L)))
-      .withColumn("lvl", expr("(budget - cum_c) div k"))
-      .withColumn("rem", expr("(budget - cum_c) % k"))
-      .withColumn("allocated_tokens",
-        when(col("full"), col("supply_tokens"))
-          .otherwise(col("lvl") +
-            when(col("rk") - col("c") <= col("rem"), 1L).otherwise(0L)))
-      .select(col("source"), col("supply_tokens"), col("allocated_tokens"),
-        (!col("full")).as("is_capped"))
-      .orderBy("source")
-  }
-
-  // --- q265: time-in-state report over the SCD2 history -----------------------------------
-  // The metric an SCD2 history exists to answer and nothing yet asked:
-  // how long does the tracked attribute HOLD each value ("time in
-  // state")? Σ(effective_to − effective_from) per state over q03's
-  // versions, open versions closed at the corpus horizon max(ts) — the
-  // duration a point-in-time snapshot (q15) cannot see and an event
-  // count (q106) actively distorts (many short visits ≠ long
-  // residence). Exact integer micros; share per state from the tiny
-  // per-state frame. One keyed window (the q03 build) + one hash-agg.
-  def timeInState(spark: SparkSession, dir: String): DataFrame = {
-    val close = Tables.events(spark, dir).agg(max(col("ts")).as("close_ts"))
-    val agged = scd2Build(spark, dir).crossJoin(broadcast(close))
-      .withColumn("dur_us",
-        unix_micros(coalesce(col("effective_to"), col("close_ts"))) -
-          unix_micros(col("effective_from")))
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_versions"),
-        sum(col("dur_us")).as("micros_in_state"))
-    val tot = agged.agg(sum(col("micros_in_state")).as("__tot"))
-    agged.crossJoin(broadcast(tot))
-      .select(col("event_type"), col("n_versions"), col("micros_in_state"),
-        (col("micros_in_state").cast("double") / col("__tot").cast("double"))
-          .as("share"))
-      .orderBy("event_type")
-  }
-
-  // --- q266: Neyman allocation for stratified sampling ------------------------------------
-  // The sampling DESIGN step q39/q131 execute but never chose: split a
-  // labeling/eval budget across strata ∝ N_h·σ_h (Neyman's
-  // variance-minimizing allocation — big AND internally-diverse strata
-  // earn more samples than big-but-uniform ones). Exactness recipe:
-  // quality quantized to integer milli-units (the q70 moment recipe) so
-  // n·Σv²−(Σv)² is exact int64 (< 2^53, so the one double division and
-  // IEEE-exact sqrt agree in every engine); the integer budget lands by
-  // largest-remainder rounding (floor + the top fractional ranks take
-  // +1), so Σ allocations ≡ the budget exactly. O(sources) frame
-  // throughout; one corpus scan for the moments.
-  val NeymanBudget = 1000L
-
-  def neymanAllocation(spark: SparkSession, dir: String): DataFrame = {
-    val q = Tables.documents(spark, dir).filter(col("text").isNotNull)
-      .select(col("source"),
-        floor(docQuality * lit(1000.0)).cast("long").as("v"))
-    val st = q.groupBy("source")
-      .agg(count(lit(1)).as("n_docs"), sum(col("v")).as("s1"),
-        sum(col("v") * col("v")).as("s2"))
-      .withColumn("sd_milli", sqrt(
-        (col("n_docs") * col("s2") - col("s1") * col("s1")).cast("double") /
-          (col("n_docs") * col("n_docs")).cast("double")))
-      .withColumn("w", col("n_docs").cast("double") * col("sd_milli"))
-    // Σw in CANONICAL (source-sorted) order, not a partial-agg double
-    // sum: w is a double, float addition is order-dependent, and Spark's
-    // partial-agg fold order differs from DuckDB's row order — a
-    // last-ulp difference near a largest-remainder tie could flip a ±1
-    // allocation between engines. The O(sources) frame makes the
-    // sorted-list fold free (the q99 fixed-fold recipe).
-    val tot = st.agg(expr("""aggregate(
-        transform(sort_array(collect_list(struct(source, w))), s -> s.w),
-        0.0D, (acc, v) -> acc + v)""").as("__wsum"))
-    val staged = st.crossJoin(broadcast(tot))
-      .withColumn("exact_share",
-        lit(NeymanBudget.toDouble) * col("w") / col("__wsum"))
-      .withColumn("base", floor(col("exact_share")).cast("long"))
-      .withColumn("frac", col("exact_share") - floor(col("exact_share")))
-    val left = staged.agg((lit(NeymanBudget) - sum(col("base"))).as("__left"))
-    val wr = org.apache.spark.sql.expressions.Window
-      .orderBy(col("frac").desc, col("source"))
-    staged.crossJoin(broadcast(left))
-      .withColumn("rk", row_number().over(wr).cast("long"))
-      .select(col("source"), col("n_docs"), col("sd_milli"),
-        (col("base") + when(col("rk") <= col("__left"), 1L).otherwise(0L))
-          .as("allocated"))
-      .orderBy("source")
-  }
-
-  // --- q267: sample-ratio-mismatch (SRM) check --------------------------------------------
-  // The A/B-test validity gate q228 assumed and never checked: under
-  // the deterministic 50/50 user-hash split (the q143 hash family), do
-  // the arms actually receive equal traffic per event type? For a
-  // two-cell equal split the chi-square statistic collapses to the
-  // exact integer form (a−b)²/(a+b) — one division, compared against
-  // the df=1 p=0.05 critical value. An SRM flag means the assignment
-  // or logging pipeline is biased and every downstream lift number is
-  // suspect — the first dashboard any experimentation platform ships.
-  val SrmCritical = 3.841
-
-  def srmCheck(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .select(col("event_type"),
-        (pmod(graft.functions.Sketches.keyHash(col("user_id")), lit(2L)) === 0)
-          .as("in_a"))
-      .groupBy("event_type")
-      .agg(sum(when(col("in_a"), 1L).otherwise(0L)).as("n_a"),
-        sum(when(!col("in_a"), 1L).otherwise(0L)).as("n_b"))
-      .withColumn("chi2",
-        ((col("n_a") - col("n_b")) * (col("n_a") - col("n_b"))).cast("double")
-          / (col("n_a") + col("n_b")).cast("double"))
-      .withColumn("srm_detected", col("chi2") > SrmCritical)
-      .orderBy("event_type")
-
-  // --- q255: CSV round-trip through the rescue reader -------------------------------------
-  // The text-format landing path under the gate (q173 gates JSON
-  // rescue; this gates CSV, the other reference landing format): a
-  // clean CSV export re-read through `Sources.csvWithRescue` —
-  // PERMISSIVE mode, corrupt-record column — must parse every row with
-  // ZERO rescued rows (enforced in-plan: a raise_error projection on
-  // the rescue column, so silent type coercion cannot fake a pass),
-  // then aggregate bit-identically to the parquet oracle. Doubles
-  // survive because Spark's CSV writer emits the shortest round-trip
-  // decimal form; no timestamps in the slice (CSV timestamp formats
-  // are a config contract, exercised by the rescue machinery in q173).
-  def csvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    import graft.sources.Sources
-    val path = s"${Sessions.tempDir("graft_csv_")}/lineitem_csv"
-    Tables.lineitem(spark, dir)
-      .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
-      .write.option("header", "true").csv(path)
-    val schema = StructType(Seq(
-      StructField("l_orderkey", LongType),
-      StructField("l_returnflag", StringType),
-      StructField("l_quantity", DoubleType),
-      StructField("l_extendedprice", DoubleType)))
-    val back = Sources.csvWithRescue(spark, path, schema)
-    back
-      // the guard must ride a column the AGGREGATE consumes — attached to
-      // an unreferenced column (the first cut wrapped l_orderkey, which
-      // the groupBy/agg below never reads) Catalyst column pruning
-      // deletes the raise_error with the column and the "enforced
-      // in-plan" claim is silently false; Round16Spec pins raise_error
-      // present in the executed plan
-      .withColumn("l_quantity",
-        when(col(Sources.RescueCol).isNull, col("l_quantity"))
-          .otherwise(raise_error(concat(
-            lit("CSV round-trip rescued a row: "), col(Sources.RescueCol)))))
-      .groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n_items"),
-        moneySum(dec2(col("l_quantity"))).as("sum_qty"),
-        moneySum(dec2(col("l_extendedprice"))).as("sum_price"))
-      .orderBy("l_returnflag")
-  }
-
-  // --- q254: PQ recall harness -----------------------------------------------------------
-  // The ANN quality MEASUREMENT (q184's candidate-quality harness for
-  // the vector side): exact L2 top-k per query (fixed-fold distance,
-  // vec_id tiebreak — the ground truth a 4×16 quantizer is judged
-  // against) left-joined to q237's ADC top-k; per-query hit count and
-  // recall@k. The exact side broadcasts the bounded query set over one
-  // corpus scan (the q25 shape); at a billion vectors the ground truth
-  // comes from a sampled query panel — the harness shape is unchanged.
-  def pqRecall(spark: SparkSession, dir: String): DataFrame =
-    recallAgainstExact(spark, dir,
-      pqAdcTopK(spark, dir).select("query_id", "vec_id"))
-
-  // --- q257: residual-PQ recall (the q246 claim, measured) ------------------------------
-  // q254 reads recall 0.16 for the RAW 4×16 codebook and q246's whole
-  // reason to exist is "residual encoding spends the codes on local
-  // structure instead of re-encoding the centroid" — a claim that was
-  // never measured (VERDICT r15 item 3). Same harness, same exact-L2
-  // ground truth, same recall@k schema as q254; the candidate set is
-  // q246's probed residual-ADC top-k. Measured (sf0.01): recall@5
-  // 0.08 vs the raw codebook's 0.16 — the claim is REFUTED at this
-  // geometry, and the instrument says why: the coarse-probe ceiling
-  // (share of exact neighbors inside probed lists) reads 0.98, so
-  // nprobe is not the limiter — the 16-entry codebook is. q246 seeds
-  // its codebook with arbitrary corpus residuals (lowest vec_ids, not
-  // k-means over residuals), and 16 untrained codewords cover the
-  // near-isotropic residual cloud worse than they cover the raw
-  // vectors' global structure. The tuning lever this points at is a
-  // TRAINED residual codebook (the q59 k-means machinery) and/or a
-  // larger code budget — exactly the decision a recall instrument
-  // exists to price.
-  def residualRecall(spark: SparkSession, dir: String): DataFrame =
-    recallAgainstExact(spark, dir,
-      ivfPqResidualSearch(spark, dir).select("query_id", "vec_id"))
-
-  /** Exact L2 top-k per query — the ANN ground truth. */
-  private[graft] def exactL2TopK(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val q = emb.filter(col("vec_id") < AnnQueryMaxId)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("d2"), col("vec_id"))
-    emb.filter(col("vec_id") >= AnnQueryMaxId)
-      .crossJoin(broadcast(q))
-      .withColumn("d2",
-        graft.plans.VectorExprs.l2dist2(col("qv"), col("v")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= AnnK)
-      .select("query_id", "vec_id")
-  }
-
-  /** Recall@AnnK of `preds` (query_id, vec_id) against the exact top-k —
-    * factored so the spec can run the instrument on the ground truth
-    * itself (which must read exactly 1.0).
-    */
-  private[graft] def recallAgainstExact(spark: SparkSession, dir: String,
-                                        preds: DataFrame): DataFrame =
-    exactL2TopK(spark, dir)
-      .join(preds.withColumn("__hit", lit(1)),
-        Seq("query_id", "vec_id"), "left")
-      .groupBy("query_id")
-      .agg(coalesce(sum(col("__hit")), lit(0)).cast("long").as("n_hits"))
-      .withColumn("recall", col("n_hits").cast("double") / lit(AnnK))
-      .orderBy("query_id")
-
-  // --- q253: common-neighbor link prediction ---------------------------------------------
-  // Graph-completion over the co-purchase graph (the recommender-cold-
-  // start primitive): for item pairs NOT yet co-purchased, the
-  // common-neighbor count predicts the missing edge, with preferential
-  // attachment deg(a)·deg(b) as the integer-exact secondary signal
-  // (Adamic–Adar needs ln() — engine lottery — and CN/PA are its
-  // standard log-free neighbors in the link-prediction literature).
-  // Candidates come from wedges only (two edges sharing a middle
-  // vertex) — never an all-pairs cross; existing edges anti-join out.
-  // The memoized support-≥2 edge frame (q92's graph) is the input.
-  // Hub safety is ENFORCED, not argued (VERDICT r15 item 1): a middle
-  // vertex of degree d lands d² candidate rows on ONE wedge-join key,
-  // so middle vertices above LinkMaxMiddleDeg are quarantined whole —
-  // q92's maxBasketSize discipline, same rationale: a 10⁴-degree hub
-  // would put 10⁸ rows in one straggler task, and "everything
-  // co-occurs with a hub" is popularity noise, not link evidence (the
-  // literature down-weights hub-mediated wedges — Adamic–Adar's 1/log
-  // deg — this drops them at an explicit bound). Per-join-key work is
-  // ≤ LinkMaxMiddleDeg² by construction; hub degrees still count for
-  // pref_attach (degree itself is one cheap hash-agg). The cap is far
-  // above the fixture's max middle degree (13 at sf0.01, 6 at sf0.1)
-  // AND mirrored in the oracle SQL, so semantics agree at every SF by
-  // construction, binding or not. Output: deterministic top-K by
-  // (cn, pref_attach, item_a, item_b).
-  val LinkTopK = 50
-  val LinkMaxMiddleDeg = 256L
-
-  def linkPrediction(spark: SparkSession, dir: String): DataFrame =
-    linkPredictionFrom(
-      copurchaseEdges(spark, dir)
-        .filter(col("n_baskets") >= CoMinSupport)
-        .select(col("item_a").as("a"), col("item_b").as("b")),
-      LinkTopK, LinkMaxMiddleDeg)
-
-  /** The wedge-candidate link scorer over any undirected (a < b) edge
-    * frame — factored so the spec can drive it with planted graphs
-    * (incl. a planted hub asserting the quarantine bound).
-    */
-  private[graft] def linkPredictionFrom(e: DataFrame, topK: Int,
-                                        maxMiddleDeg: Long): DataFrame = {
-    val und = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
-    val deg = und.groupBy("a").agg(count(lit(1)).as("deg"))
-    // quarantine by ANTI-joining the (tiny, usually empty) hub list,
-    // broadcast — a semi-join against the full ≤-cap vertex list costs
-    // real shuffle/probe work even when NO vertex is capped (measured:
-    // 2.5× the r15 pin); the hub list has ≤ 2m/cap vertices by the
-    // degree-sum bound, so it always broadcasts
-    val mid = und.join(
-      broadcast(deg.filter(col("deg") > maxMiddleDeg).select("a")),
-      Seq("a"), "left_anti")
-    // wedges by ADJACENCY-LIST expansion, not a self-join: the cap is
-    // what makes this legal — each middle's neighbor array is ≤ cap
-    // elements (collect_list state bounded BY CONSTRUCTION after the
-    // quarantine), and the in-task pair fan-out ≤ cap². One exchange
-    // (group by middle) replaces the self-join's two sorted shuffle
-    // sides — measured 3.0 → 2.6s at sf0.1 (the graded scale; the
-    // self-join reads ~17% better on the 100× DENSE replica where
-    // struct-explode garbage dominates — sparse real graphs are this
-    // plan's regime) — and the sorted array gives x < y for free. This
-    // is q92's per-basket expansion shape with the middle vertex as
-    // the basket.
-    val cand = mid.groupBy(col("a").as("m"))
-      .agg(sort_array(collect_list(col("b"))).as("ns"))
-      .select(explode(expr(
-        """flatten(transform(ns, (x, i) ->
-             transform(slice(ns, i + 2, size(ns)),
-               y -> struct(x AS x, y AS y))))""")).as("p"))
-      .groupBy(col("p.x").as("x"), col("p.y").as("y"))
-      .agg(count(lit(1)).as("common_neighbors"))
-    val nonEdges = cand
-      .join(e, cand("x") === e("a") && cand("y") === e("b"), "left_anti")
-    nonEdges
-      .join(deg.select(col("a").as("x"), col("deg").as("dx")), "x")
-      .join(deg.select(col("a").as("y"), col("deg").as("dy")), "y")
-      .withColumn("pref_attach", col("dx") * col("dy"))
-      .orderBy(col("common_neighbors").desc, col("pref_attach").desc,
-        col("x"), col("y"))
-      .limit(topK)
-      .select(col("x").as("item_a"), col("y").as("item_b"),
-        col("common_neighbors"), col("pref_attach"))
-  }
-
-  // --- q252: linear-interpolation gap fill -----------------------------------------------
-  // q101's calendar densification with the OTHER fill rule: forward
-  // fill answers "what was the last known state" (as-of semantics);
-  // linear interpolation answers "what was the level mid-gap" — the
-  // resampling rule for series where a gap means not-measured, not
-  // zero. Each gap day gets prev + (next − prev)·(d−dp)/(dn−dp) from
-  // the SURROUNDING observations; leading/trailing gaps stay null
-  // (extrapolation is a modeling decision, not a fill). Same daily
-  // frame as q101, four running windows, one fixed-shape expression.
-  def interpGapFill(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-    val c = Tables.customer(spark, dir)
-    val daily = o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-      .groupBy(col("c_mktsegment").as("segment"),
-        col("o_orderdate").cast("date").as("day"))
-      .agg(sum(dec2(col("o_totalprice"))).as("rev_dec"))
-    Analytics.gapFillLinear(daily, "segment", "day", "rev_dec")
-      .select(col("segment"), col("day"),
-        col("rev_dec").cast("double").as("revenue"),
-        col("interp_rev_dec").as("interp_revenue"),
-        col("is_gap"))
-      .orderBy("segment", "day")
-  }
-
-  // --- q251: cluster-aware split assignment (the q250 fix) -------------------------------
-  // The leak-free split: hash the near-dup COMPONENT label (q34's
-  // cluster_id, memoized) instead of the document id, so every verified
-  // near-dup pair lands on ONE side by construction — the spec proves
-  // zero cross-split pairs where q250 measures nonzero. Same 80/10/10
-  // thresholds and hash family as q143 (stable under corpus growth:
-  // new members of an existing cluster follow their cluster). One
-  // rollup of the cached decision table; the report carries docs and
-  // clusters per split.
-  def clusterSplit(spark: SparkSession, dir: String): DataFrame =
-    clusterSplitAssign(spark, dir)
-      .groupBy("split")
-      .agg(count(lit(1)).as("n_docs"),
-        count_distinct(col("cluster_id")).as("n_clusters"))
-      .orderBy("split")
-
-  /** Per-document cluster-hash split labels — shared by the gate rollup
-    * and the zero-leak spec.
-    */
-  private[graft] def clusterSplitAssign(spark: SparkSession,
-                                        dir: String): DataFrame =
-    dedupDecisionTable(spark, dir)
-      .select(col("doc_id"), col("cluster_id"),
-        splitOf(col("cluster_id")).as("split"))
-
-  // --- q249: IVM under a DIMENSION change ------------------------------------------------
-  // The other half of join-view maintenance (q247 handles fact deltas):
-  // a dimension UPDATE — customers moving nation, the SCD1 overwrite —
-  // re-attributes every fact row of the touched keys. Δview =
-  // agg(fact ⋈ Δdim_old, sign −1) ∪ agg(fact ⋈ Δdim_new, sign +1): the
-  // changed-customer table (tiny) broadcasts into the fact chain twice
-  // by SIGN, so the refresh reads facts only through a broadcast-hash
-  // restriction on the touched keys (at 100 TB the same shape ships a
-  // bloom/runtime filter into the fact scan — the q129/q243 machinery)
-  // and the view merge is keyspace-sized. Cells whose count reaches
-  // zero vanish; oracle = the star SQL over the UPDATED dimension.
-  val DimChangeMod = 50L
-  val DimChangeShift = 7
-
-  def ivmDimChange(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-      .select("l_orderkey", "l_extendedprice", "l_discount")
-    val o = Tables.orders(spark, dir).select("o_orderkey", "o_custkey")
-    val c = Tables.customer(spark, dir).select("c_custkey", "c_nationkey")
-    val n = Tables.nation(spark, dir)
-    val r = Tables.region(spark, dir)
-    def report(cust: DataFrame) =
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(cust, o("o_custkey") === cust("c_custkey"))
-        .join(broadcast(n), cust("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .select(col("r_name").as("region"), col("n_name").as("nation"),
-          discounted(col("l_extendedprice"), col("l_discount")).as("rev"),
-          col("__sign"))
-    val view = report(c.withColumn("__sign", lit(1)))
-      .groupBy("region", "nation")
-      .agg(count(lit(1)).as("n_items"), sum(col("rev")).as("revenue"))
-    val changed = c.filter(pmod(col("c_custkey"), lit(DimChangeMod)) === 0)
-    val cdelta = changed.withColumn("__sign", lit(-1))
-      .unionByName(changed
-        .withColumn("c_nationkey",
-          pmod(col("c_nationkey") + DimChangeShift, lit(25)))
-        .withColumn("__sign", lit(1)))
-    val dp = Incremental.signedPartial(report(cdelta),
-      Seq("region", "nation"), col("__sign"), "n_items",
-      Seq("revenue" -> col("rev")))
-    Incremental.applySignedDelta(view, dp, Seq("region", "nation"),
-        "n_items", Seq("revenue"))
-      .select(col("region"), col("nation"), col("n_items"),
-        col("revenue").cast("double").as("revenue"))
-      .orderBy("region", "nation")
-  }
-
-  // --- q248: event-sequence pattern matching (MATCH_RECOGNIZE-lite) ---------------------
-  // The SQL-2016 row-pattern primitive, distributed: each user's event
-  // stream becomes an ordered type string (one char per event — the
-  // five fixture types have distinct initials), and a regex finds
-  // non-overlapping journey runs: `v[vc]*p` = a view, any uninterrupted
-  // browse run (views/clicks only — an error or signup breaks it),
-  // ending in a purchase. Greedy leftmost non-overlapping semantics are
-  // identical in Java regex and RE2 for this backreference-free class.
-  // One keyed shuffle builds the per-user string; per-user state is
-  // BOUNDED by an enforced cap (VERDICT r15 item 2), not by the
-  // sequence-budget argument alone: users with more than
-  // JourneyMaxEvents events are quarantined WHOLE before the string
-  // build — one 10⁷-event bot would otherwise concentrate a 10 MB
-  // string + regex scan in a single task (q92's maxBasketSize failure
-  // mode), and a bot's "journeys" are crawler noise, not funnels. The
-  // cap rides a window count on the SAME user_id hash-partitioning the
-  // sequence agg needs (no extra exchange, counting is streaming — the
-  // bot's rows never materialize as an array), it is far above any
-  // organic fixture user (max 99 events at sf0.1), and the oracle
-  // enforces the SAME rule, so semantics agree at every SF whether or
-  // not it binds. The match is map-side. Report: matches, matched
-  // length, longest run per user.
-  val JourneyRe = "v[vc]*p"
-  val JourneyMaxEvents = 8192L
-
-  def patternMatch(spark: SparkSession, dir: String): DataFrame =
-    journeyReport(Tables.events(spark, dir)).orderBy("user_id")
-
-  /** The pattern-match core over any (user_id, ts, event_id, event_type)
-    * frame — factored so the spec can drive it with planted sequences
-    * (incl. a planted over-cap bot asserting whole-user quarantine).
-    */
-  private[graft] def journeyReport(events: DataFrame,
-                                   maxEvents: Long = JourneyMaxEvents): DataFrame = {
-    val lens = "transform(m, x -> cast(length(x) as bigint))"
-    events
-      .withColumn("__n", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))))
-      .filter(col("__n") <= maxEvents)
-      .drop("__n")
-      .groupBy("user_id")
-      .agg(array_join(transform(
-        array_sort(collect_list(struct(col("ts"), col("event_id"),
-          substring(col("event_type"), 1, 1).as("ch")))),
-        x => x.getField("ch")), "").as("s"))
-      .withColumn("m", expr(s"regexp_extract_all(s, '$JourneyRe', 0)"))
-      .select(col("user_id"),
-        size(col("m")).cast("long").as("n_matches"),
-        expr(s"aggregate($lens, 0L, (a, b) -> a + b)").as("matched_len"),
-        coalesce(expr(s"array_max($lens)"), lit(0L)).as("max_run"))
-  }
-
-  /** Residual frame (vec_id, label, r = v − mean_label) and the residual
-    * codebook (the PqCodes lowest corpus ids' residuals, bounded collect).
-    */
-  private[graft] def residualsAndCodebook(
-      corpus: DataFrame, means: DataFrame): (DataFrame, Array[Seq[Double]]) = {
-    val res = corpus.join(broadcast(means), "label")
-      .select(col("vec_id"), col("label"),
-        zip_with(col("v"), col("centroid"), (x, c) => x - c).as("r"))
-    val cb = res.orderBy("vec_id").limit(PqCodes)
-      .select("r").collect().map(_.getSeq[Double](0))
-    (res, cb)
-  }
-
-  /** Per-(vec, subspace) residual code assignment WITH its distance —
-    * factored so the spec can pin the seed-exactness property (a vector
-    * whose residual IS a codebook entry must code to it at distance
-    * exactly 0.0 in every subspace).
-    */
-  private[graft] def residualCodesFrame(res: DataFrame, cb: Array[Seq[Double]],
-                                        subDim: Int): DataFrame =
-    assignSubCodes(subspaceFrame(res, subDim),
-      subCodebookDf(res.sparkSession, seedSubCodebook(cb, subDim)))
-
-  /** The seed per-subspace codebook [subspace][code]: the whole-vector
-    * seed residuals sliced — q246's untrained geometry, and Lloyd's
-    * round-0 state for q259. `nSub` defaults to the q246 geometry; the
-    * q270 clustered-fixture arc passes its own.
-    */
-  private[graft] def seedSubCodebook(cb: Array[Seq[Double]], subDim: Int,
-                                     nSub: Int = PqSub)
-      : IndexedSeq[IndexedSeq[Seq[Double]]] =
-    (0 until nSub).map(s => cb.indices.map(c =>
-      cb(c).slice(s * subDim, (s + 1) * subDim)).toIndexedSeq).toIndexedSeq
-
-  private[graft] def subCodebookDf(spark: SparkSession,
-      cbSub: IndexedSeq[IndexedSeq[Seq[Double]]]): DataFrame = {
-    import spark.implicits._
-    (for (s <- cbSub.indices; c <- cbSub(s).indices)
-      yield (s, c, cbSub(s)(c))).toDF("subspace", "code", "cent")
-  }
-
-  /** (vec_id, label, subspace, sv): each residual split into its `nSub`
-    * subvectors — the training AND encoding domain.
-    */
-  private[graft] def subspaceFrame(res: DataFrame, subDim: Int,
-                                   nSub: Int = PqSub): DataFrame =
-    res.select(col("vec_id"), col("label"),
-        explode(array((0 until nSub).map(s =>
-          struct(lit(s).as("subspace"),
-            slice(col("r"), s * subDim + 1, subDim).as("sv"))): _*)).as("e"))
-      .select(col("vec_id"), col("label"),
-        col("e.subspace").as("subspace"), col("e.sv").as("sv"))
-
-  /** Argmin code per (vec, subspace) against a (subspace, code, cent)
-    * codebook table — fixed-order L2 distance, ties to the LOWEST code
-    * (≡ the oracle's row_number ORDER BY d2, code).
-    *
-    * The search runs inside ONE codegen'd kernel per subvector
-    * (plans/VectorExprs.argminL2 over the subspace's code-major flat
-    * codebook) instead of a (subvector × code) join + min-struct agg:
-    * the join form materialized |subvectors| × codes rows — 33M
-    * interpreted-lambda evaluations per training pass at the q271
-    * sf0.1 geometry (measured: minutes per pass) — where the kernel
-    * touches each subvector once with a tight primitive loop. The
-    * kernel folds each distance left-assoc from 0.0 and breaks ties to
-    * the lowest code, so every gated result is bit-unchanged.
-    */
-  private[graft] def assignSubCodes(sub: DataFrame, cdf: DataFrame): DataFrame = {
-    val flat = cdf.groupBy("subspace")
-      .agg(flatten(transform(
-        array_sort(collect_list(struct(col("code"), col("cent")))),
-        x => x.getField("cent"))).as("cb"))
-    sub.join(broadcast(flat), "subspace")
-      .withColumn("m", graft.plans.VectorExprs.argminL2(col("sv"), col("cb")))
-      .select(col("vec_id"), col("label"), col("subspace"),
-        col("m.code").as("code"), col("m.dist2").as("dist2"))
-  }
-
-  /** Lloyd training of the per-subspace residual codebooks (the q257
-    * verdict's lever): each round assigns every residual subvector to
-    * its nearest code, then re-centers each code on its members' MEAN
-    * — computed on the floor-onto-2^20-grid (the q246/meanCentroids
-    * exactness recipe: integer sums are exact, the one division lands
-    * on the same nearest double in every engine, floor is tie-free),
-    * so the DuckDB oracle replays training bit-for-bit. Codes that
-    * attract no members keep their previous centroid (the standard
-    * empty-cluster rule, and the one that keeps the round count a pure
-    * function of the data). Driver state: PqSub × PqCodes × subDim
-    * doubles per round — bounded whatever the corpus size; each round
-    * is one broadcast-join pass over the subvector frame, the same
-    * shape Ivf.trainKMeans runs for the coarse quantizer.
-    */
-  private[graft] def trainSubCodebook(sub: DataFrame,
-      cbSub0: IndexedSeq[IndexedSeq[Seq[Double]]], iters: Int)
-      : IndexedSeq[IndexedSeq[Seq[Double]]] = {
-    val spark = sub.sparkSession
-    val S = operators.Ivf.MeanQuantScale
-    var cbSub = cbSub0
-    for (_ <- 1 to iters) {
-      val refined = assignSubCodes(sub, subCodebookDf(spark, cbSub))
-        .select("vec_id", "subspace", "code")
-        .join(sub.select("vec_id", "subspace", "sv"), Seq("vec_id", "subspace"))
-        .select(col("subspace"), col("code"),
-          posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy("subspace", "code", "pos")
-        .agg(sum(floor(col("x") * S).cast("long")).as("s"),
-          count(lit(1)).as("n"))
-        .groupBy("subspace", "code")
-        .agg(transform(array_sort(collect_list(struct(col("pos"),
-            (col("s").cast("double") / (col("n") * S).cast("double"))
-              .as("m")))),
-          x => x.getField("m")).as("cent"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toSeq)
-        .toMap
-    cbSub = cbSub.indices.map(s => cbSub(s).indices.map(c =>
-        refined.getOrElse((s, c), cbSub(s)(c))).toIndexedSeq).toIndexedSeq
-    }
-    cbSub
-  }
-
-  // --- q270/q271/q272: the clustered-corpus ANN operating point (VERDICT r16 item 1) ----
-  // The q254→q260 arc ended with an honest open question: every recall
-  // number was read on the driver's ISOTROPIC embeddings, where coarse
-  // means sit near zero and residual ≈ raw by construction — IVF-PQ's
-  // deployment regime (naturally clustered corpora) was never
-  // measured. This closes it: a deterministic PLANTED-MIXTURE corpus —
-  // cluster g = vec_id mod CfxClusters; v[i] = center(g,i) + noise(v,i)
-  // with centers on the exact {0,4,…,60} grid (LCG-hashed, spread ≫
-  // noise) and noise on the exact k/128 grid, k ∈ [−64,64] — built
-  // from the SAME integer-hash arithmetic in both engines, so the
-  // fixture itself is bit-identical and ScaleGen-compatible (ids come
-  // from the embeddings table; everything else is a pure function of
-  // vec_id). On it, the REALISTIC geometry the verdict asked to price:
-  // 8 subspaces × 256 codes, 2 Lloyd rounds, nprobe 2 ≪ 16 lists, with
-  // the encode the ONLY difference between the two gated recall rows —
-  // q271 codes the residual to the list mean, q272 codes the raw
-  // vector, equal code budget, equal training. Measured (sf0.01):
-  // q271 trained-residual recall@5 = 1.00, q272 trained-raw = 0.62 —
-  // the residual transform pays exactly where the theory says it
-  // should, and the q260 isotropic read (residual ≈ raw) stands as the
-  // complementary regime. Scale shape: codebooks/LUTs are bounded
-  // driver state (lists×dim + sub×codes×subDim + queries×nprobe
-  // tables), the corpus-side work is one broadcast-join encode scan
-  // per Lloyd round and a codes-only ADC scan — the q246/q259
-  // machinery unchanged, just parameterized.
-  val CfxClusters = 64
-  val CfxSub = 8
-  val CfxCodes = 256
-  val CfxNProbe = 2
-  val CfxTrainIters = 2
-  private[graft] val cfxCodebookMemo =
-    new SessionMemo[(String, Boolean), IndexedSeq[IndexedSeq[Seq[Double]]]]
-  // corpus expansion: each embeddings id spawns CfxExpand synthetic ids
-  // (sid = vec_id·CfxExpand + j) — ~60 members per cluster at sf0.01,
-  // so top-5 ranking inside a probed list requires real ADC precision
-  // (at ~8 members per cluster the pool is so small both encodes read
-  // ≥0.96 and the comparison is vacuous — measured before expanding)
-  val CfxExpand = 8
-
-  /** Deterministic planted-mixture corpus (vec_id, label, v); vec_id
-    * here is the SYNTHETIC id (a pure function of which everything
-    * else is derived).
-    */
-  private[graft] def clusteredEmbeddings(spark: SparkSession,
-                                         dir: String): DataFrame = {
-    import graft.functions.{Lsh, Sketches}
-    Tables.embeddings(spark, dir).select("vec_id")
-      .select(explode(sequence(col("vec_id") * CfxExpand,
-        col("vec_id") * CfxExpand + (CfxExpand - 1))).as("vec_id"))
-      .withColumn("label",
-        pmod(col("vec_id"), lit(CfxClusters.toLong)).cast("int"))
-      .withColumn("v", expr(
-        s"""transform(sequence(1, ${Lsh.Dim}), i ->
-              cast(pmod(${Lsh.A(0)}L * (vec_id % ${CfxClusters} + 1)
-                        + ${Lsh.B(0)}L * i, ${Sketches.P}L) % 16 as double)
-                * 4.0D
-              + (cast(pmod(${Lsh.A(1)}L * (vec_id + 1)
-                           + ${Lsh.B(1)}L * i, ${Sketches.P}L) % 129
-                      as double) - 64.0D) / 128.0D)"""))
-  }
-
-  /** The shared 8×256 trained-ADC read path over the planted corpus.
-    * `encodeRaw = false` codes the residual to the list mean (true
-    * IVF-PQ); `encodeRaw = true` codes the raw vector against the same
-    * code budget and training — list PROBING uses the real means in
-    * both modes, so the encode is the only experimental variable.
-    */
-  private[graft] def cfxAdcSearch(spark: SparkSession, dir: String,
-                                  encodeRaw: Boolean): DataFrame = {
-    import spark.implicits._
-    val subDim = graft.functions.Lsh.Dim / CfxSub
-    val emb = clusteredEmbeddings(spark, dir)
-    val corpus = emb.filter(col("vec_id") >= AnnQueryMaxId)
-    val means = Ivf.meanCentroids(corpus, "v", "label")
-    val res =
-      if (encodeRaw)
-        corpus.select(col("vec_id"), col("label"), col("v").as("r"))
-      else corpus.join(broadcast(means), "label")
-        .select(col("vec_id"), col("label"),
-          zip_with(col("v"), col("centroid"), (x, c) => x - c).as("r"))
-    val sub = subspaceFrame(res, subDim, CfxSub)
-    // train ONCE per (session, dir, encode): a quantizer's codebook is
-    // index BUILD state, not per-search work — a production IVF-PQ
-    // trains at ingest and serves many queries. The memo is bounded
-    // driver state (8 × 256 × 8 doubles); Bench's untimed first run
-    // pays the training, the same footing the dedup decision-table
-    // family gets from its pairsMemo.
-    val cbSub = cfxCodebookMemo(spark, (dir, encodeRaw)) {
-      val cb = res.orderBy("vec_id").limit(CfxCodes)
-        .select("r").collect().map(_.getSeq[Double](0))
-      trainSubCodebook(sub, seedSubCodebook(cb, subDim, CfxSub),
-        CfxTrainIters)
-    }
-    val codes = assignSubCodes(sub, subCodebookDf(spark, cbSub))
-    val pivots = (0 until CfxSub).map(s =>
-      min(when(col("subspace") === s, col("code"))).as(s"c$s"))
-    val wide = codes.groupBy("vec_id", "label")
-      .agg(pivots.head, pivots.tail: _*)
-    // bounded driver state: 16 means × 64 dims + 10 query vectors →
-    // probe sets and per-(query, list) 8×256 ADC tables
-    val meanArr = means.collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
-    val qvs = emb.filter(col("vec_id") < AnnQueryMaxId).orderBy("vec_id")
-      .select("vec_id", "v").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    def foldL2(a: Seq[Double], b: Seq[Double]): Double = {
-      var acc = 0.0
-      var i = 0
-      while (i < a.length) { val d = a(i) - b(i); acc += d * d; i += 1 }
-      acc
-    }
-    def foldL2Sub(a: Seq[Double], b: Seq[Double], from: Int): Double = {
-      var acc = 0.0
-      var i = 0
-      while (i < b.length) { val d = a(from + i) - b(i); acc += d * d; i += 1 }
-      acc
-    }
-    val luts = qvs.flatMap { case (qid, qv) =>
-      val probed = meanArr
-        .map { case (l, m) => (foldL2(qv, m), l) }
-        .sorted.take(CfxNProbe)
-      probed.map { case (_, l) =>
-        val m = meanArr.find(_._1 == l).get._2
-        val enc = if (encodeRaw) qv else qv.indices.map(i => qv(i) - m(i))
-        val tabs = (0 until CfxSub).map(s =>
-          cbSub(s).map(c => foldL2Sub(enc, c, s * subDim)))
-        (qid, l, tabs)
-      }
-    }.toSeq.toDF("query_id", "label", "tabs")
-    // fixed-order 8-term lookup sum (arr[i] is 0-based in Spark SQL) —
-    // the oracle's pivoted MIN-CASE sum folds in the same order
-    val adc = (0 until CfxSub)
-      .map(s => expr(s"tabs[$s][c$s]")).reduce(_ + _)
-    val scored = wide.join(broadcast(luts), Seq("label"))
-      .select(col("query_id"), col("vec_id"), adc.as("adc_dist2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("adc_dist2"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= AnnK)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("adc_dist2"))
-      .orderBy("query_id", "rank")
-  }
-
-  /** Exact L2 top-k ground truth over any (vec_id, v) frame. */
-  private[graft] def exactL2TopKFrom(emb: DataFrame): DataFrame = {
-    val q = emb.filter(col("vec_id") < AnnQueryMaxId)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("d2"), col("vec_id"))
-    emb.filter(col("vec_id") >= AnnQueryMaxId)
-      .crossJoin(broadcast(q))
-      .withColumn("d2",
-        graft.plans.VectorExprs.l2dist2(col("qv"), col("v")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= AnnK)
-      .select("query_id", "vec_id")
-  }
-
-  private[graft] def recallOf(truth: DataFrame, preds: DataFrame): DataFrame =
-    truth
-      .join(preds.withColumn("__hit", lit(1)),
-        Seq("query_id", "vec_id"), "left")
-      .groupBy("query_id")
-      .agg(coalesce(sum(col("__hit")), lit(0)).cast("long").as("n_hits"))
-      .withColumn("recall", col("n_hits").cast("double") / lit(AnnK))
-      .orderBy("query_id")
-
-  /** q270: the fixture's own quality report — is it actually clustered?
-    * Per list: size, truncation-quantized mean within-cluster d² to the
-    * list mean, and the min inter-mean d² — the clustered-regime claim
-    * (separation ≫ spread) as numbers the oracle re-derives.
-    */
-  def cfxFixtureReport(spark: SparkSession, dir: String): DataFrame = {
-    val emb = clusteredEmbeddings(spark, dir)
-    val corpus = emb.filter(col("vec_id") >= AnnQueryMaxId)
-    val means = Ivf.meanCentroids(corpus, "v", "label")
-    val S = operators.Ivf.MeanQuantScale
-    val within = corpus.join(broadcast(means), "label")
-      .withColumn("d2",
-        graft.plans.VectorExprs.l2dist2(col("v"), col("centroid")))
-      .groupBy("label")
-      .agg(count(lit(1)).as("n_vecs"),
-        sum(floor(col("d2") * S).cast("long")).as("qsum"))
-      .withColumn("avg_within_d2",
-        col("qsum").cast("double") / (col("n_vecs") * S).cast("double"))
-      .drop("qsum")
-    val m2 = means.select(col("label").as("label2"),
-      col("centroid").as("centroid2"))
-    val inter = means.crossJoin(broadcast(m2))
-      .filter(col("label") =!= col("label2"))
-      .withColumn("d2",
-        graft.plans.VectorExprs.l2dist2(col("centroid"), col("centroid2")))
-      .groupBy("label").agg(min(col("d2")).as("min_inter_d2"))
-    within.join(inter, "label")
-      .select(col("label").cast("long").as("label"), col("n_vecs"),
-        col("avg_within_d2"), col("min_inter_d2"))
-      .orderBy("label")
-  }
-
-  def cfxTrainedRecall(spark: SparkSession, dir: String): DataFrame =
-    recallOf(exactL2TopKFrom(clusteredEmbeddings(spark, dir)),
-      cfxAdcSearch(spark, dir, encodeRaw = false)
-        .select("query_id", "vec_id"))
-
-  def cfxRawRecall(spark: SparkSession, dir: String): DataFrame =
-    recallOf(exactL2TopKFrom(clusteredEmbeddings(spark, dir)),
-      cfxAdcSearch(spark, dir, encodeRaw = true)
-        .select("query_id", "vec_id"))
-
-  // --- q273: exact substring dedup via prefix-doubling suffix ranking ---------------------
-  // The true Lee et al. ExactSubstr operator (VERDICT r16 item 2):
-  // q125's word-8-gram span merge quantizes to word boundaries and
-  // gram length — a verbatim repeat shorter than 8 words, or one that
-  // starts mid-word, is invisible to it. operators/SuffixSpans finds
-  // ALL length-≥16-char repeated windows by equality-only prefix
-  // doubling (4 integer-rank shuffle rounds; no substring ever crosses
-  // an exchange, no global sort), then merges coverage into maximal
-  // per-doc spans — q125's report shape at character granularity. The
-  // oracle is the deliberately naive witness: materialize every 16-char
-  // window, GROUP BY the text itself.
-  val SuffixWindow = 16
-  val SuffixMaxChars = 512
-
-  def suffixSpans(spark: SparkSession, dir: String): DataFrame =
-    operators.SuffixSpans.repeatedSpans(
-      Tables.documents(spark, dir).filter(col("text").isNotNull),
-      "doc_id", "text", SuffixWindow, SuffixMaxChars)
-
-  // --- q274: Kneser–Ney perplexity quality filter (the CCNet pass) -------------------------
-  // The LM half of the filtering stack (VERDICT r16 item 3): q28/q48
-  // are the heuristic (C4/Gopher) half; CCNet's is a per-language LM
-  // scoring each document's cross-entropy, bucketed head/middle/tail.
-  // Model: interpolated Kneser–Ney bigrams with D = 3/4 —
-  //   P(w|v) = max(c(vw)−D, 0)/c(v) + D·N1+(v·)/c(v) · N1+(·w)/NB
-  // — built PER LANGUAGE from the corpus itself (q224's continuation
-  // counts and q215's bigram walk, composed), all counts exact int64
-  // over one common denominator 4·c(v)·NB.
-  //
-  // The log() engine-lottery is dodged entirely (the known hazard —
-  // VERDICT prescribed the recipe): the per-token score is the EXACT
-  // integer floor of −log2 P = floor(log2(den/num)), computed with no
-  // floating point at all as length(bin(den div num)) − 1 — for any
-  // real x ≥ 1, floor(log2 x) = bitlen(floor x) − 1, since
-  // x ∈ [2^k, 2^{k+1}) ⟺ floor(x) ∈ [2^k, 2^{k+1}). Σ bits over the
-  // doc is an exact integer cross-entropy (in whole bits/token — 1-bit
-  // granularity is far below the fluent-vs-gibberish gap the filter
-  // discriminates, and the planted spec pins that); bits_per_token is
-  // one int/int double division, identical in every engine. Buckets:
-  // ntile(3) per language over (bits_per_token, doc_id) — CCNet's
-  // head/middle/tail by perplexity rank. Docs with < 2 words have no
-  // transitions and are unscored, as in CCNet.
-  //
-  // Scale shape: one corpus scan → transition frame; model = three
-  // hash-aggs over it (vocabulary-sized); scoring = equi-joins of the
-  // transition frame against the (broadcastable per-lang totals +
-  // vocabulary-keyed) model tables; one window per language for the
-  // buckets. At 100 TB the model tables are the small side (vocabulary
-  // ≪ corpus) and the integer products stay < 2^63 up to ~10^7 tokens
-  // per language per shard — past that, the documented move is
-  // DECIMAL(38) for num/den (the q211 overflow lesson).
-  def knPerplexity(spark: SparkSession, dir: String): DataFrame =
-    knPerplexityFrom(Tables.documents(spark, dir))
-
-  /** The CCNet scorer over any (doc_id, lang, text) frame — factored so
-    * the spec can plant a gibberish-vs-fluent corpus.
-    */
-  private[graft] def knPerplexityFrom(docs: DataFrame): DataFrame = {
-    val ws = split(col("text"), " ")
-    val trans = docs
-      .filter(col("text").isNotNull && col("lang").isNotNull &&
-        size(ws) >= 2)
-      .select(col("doc_id"), col("lang"), explode(arrays_zip(
-        slice(ws, lit(1), size(ws) - 1).as("a"),
-        slice(ws, lit(2), size(ws) - 1).as("b"))).as("p"))
-      .select(col("doc_id"), col("lang"),
-        col("p.a").as("v"), col("p.b").as("w"))
-    val cvw = trans.groupBy("lang", "v", "w")
-      .agg(count(lit(1)).as("n_vw"))
-    val cv = cvw.groupBy("lang", "v")
-      .agg(sum("n_vw").as("n_v"), count(lit(1)).as("n1_right"))
-    val n1l = cvw.groupBy("lang", "w").agg(count(lit(1)).as("n1_left"))
-    val nb = cvw.groupBy("lang").agg(count(lit(1)).as("nb"))
-    val scored = trans
-      .join(cvw, Seq("lang", "v", "w"))
-      .join(cv, Seq("lang", "v"))
-      .join(n1l, Seq("lang", "w"))
-      .join(broadcast(nb), "lang")
-      .withColumn("num",
-        greatest(lit(4L) * col("n_vw") - 3L, lit(0L)) * col("nb") +
-          lit(3L) * col("n1_right") * col("n1_left"))
-      .withColumn("den", lit(4L) * col("n_v") * col("nb"))
-      // exact floor(−log2 P): no floating point, no log()
-      .withColumn("bits",
-        (length(bin(expr("den div num"))) - 1).cast("long"))
-    val perDoc = scored.groupBy("doc_id", "lang")
-      .agg(count(lit(1)).as("n_transitions"),
-        sum(col("bits")).as("total_bits"))
-      .withColumn("bits_per_token",
-        col("total_bits").cast("double") /
-          col("n_transitions").cast("double"))
-    val wL = org.apache.spark.sql.expressions.Window
-      .partitionBy("lang").orderBy(col("bits_per_token"), col("doc_id"))
-    perDoc
-      .withColumn("ppl_bucket", ntile(3).over(wL).cast("long"))
-      .select(col("doc_id"), col("lang"), col("n_transitions"),
-        col("total_bits"), col("bits_per_token"), col("ppl_bucket"))
-      .orderBy("doc_id")
-  }
-
-  // --- q279/q280: DSIR hashed-bigram importance weighting + selection -------------------
-  // Data Selection via Importance Resampling (Xie et al., NeurIPS 2023):
-  // score every raw-corpus document by how much better a TARGET
-  // bag-of-hashed-ngrams model explains it than the RAW-corpus model,
-  // then select top importance under a token budget. Features are word
-  // BIGRAMS hashed by the engine-portable polynomial fold into
-  // `DsirBuckets` buckets (DSIR's hashed feature space — collisions are
-  // part of the estimator, identical in both engines). Target = the
-  // lang='en' slice (the trusted-seed stand-in); raw = the whole corpus;
-  // both models add-one smoothed over the full bucket domain.
-  //
-  // The log-likelihood ratio is the log() engine lottery — dodged with
-  // the q274 recipe: per-bucket model cost in EXACT integer bits,
-  // bits(model, b) = floor(log2(TOTAL / count_b)) = bitlen(TOTAL div
-  // count_b) − 1 (valid since count_b ≤ TOTAL ⟹ the ratio ≥ 1, no
-  // negative branch needed), and the per-doc importance is
-  // Σ c_b · (bitsRAW_b − bitsTARGET_b) — "whole bits saved when the
-  // target model codes this doc instead of the raw model" (positive =
-  // target-like). 1-bit-per-bucket granularity is the same quantization
-  // q274 accepted per transition; the planted spec pins that the
-  // target-vs-junk gap dwarfs it.
-  //
-  // Scale shape: one corpus scan → exploded hashed-bigram frame
-  // (map-side codegen fingerprint); doc×bucket counts = one hash-agg;
-  // both models are ≤DsirBuckets-row frames (broadcast); scoring is one
-  // broadcast join + one hash-agg. q280's budget selection rides
-  // PrefixSum (no single-task global window), ordered by importance.
-  val DsirBuckets = 256L
-  val DsirTokenBudget = 15000L
-
-  def dsirWeights(spark: SparkSession, dir: String): DataFrame =
-    dsirWeightsFrom(Tables.documents(spark, dir)).orderBy("doc_id")
-
-  /** Per-(doc, lang, bucket) hashed-bigram occurrence counts. */
-  private def dsirBucketCounts(docs: DataFrame): DataFrame = {
-    val ws = split(col("text"), " ")
-    docs
-      .filter(col("text").isNotNull && col("lang").isNotNull &&
-        size(ws) >= 2)
-      .select(col("doc_id"), col("lang"), explode(arrays_zip(
-        slice(ws, lit(1), size(ws) - 1).as("a"),
-        slice(ws, lit(2), size(ws) - 1).as("b"))).as("p"))
-      .select(col("doc_id"), col("lang"),
-        pmod(TextAnalysis.rollingFingerprint(
-          concat(col("p.a"), lit(" "), col("p.b"))), lit(DsirBuckets))
-          .as("bucket"))
-      .groupBy("doc_id", "lang", "bucket").agg(count(lit(1)).as("c"))
-  }
-
-  /** The trained bucket model: per bucket, the exact-integer bit cost
-    * under the raw and target distributions (≤DsirBuckets rows).
-    */
-  private def dsirModel(dc: DataFrame): DataFrame = {
-    // raw model over every doc, target model over the seed slice; every
-    // bucket in dc appears in rawB by construction, targets may miss
-    val rawB = dc.groupBy("bucket").agg(sum("c").as("cq"))
-    val tgtB = dc.filter(col("lang") === "en")
-      .groupBy("bucket").agg(sum("c").as("cp"))
-    val tot = rawB.agg(sum("cq").as("sq")).crossJoin(
-        tgtB.agg(coalesce(sum("cp"), lit(0L)).as("sp")))
-      .select((col("sq") + DsirBuckets).as("tq"),
-        (col("sp") + DsirBuckets).as("tp"))
-    rawB.join(tgtB, Seq("bucket"), "left")
-      .crossJoin(broadcast(tot))
-      .select(col("bucket"),
-        // exact integer bits, no log(): bitlen(total div count) − 1
-        (length(bin(expr("tq div (cq + 1)"))) - 1).cast("long").as("bits_q"),
-        (length(bin(expr("tp div (coalesce(cp, 0L) + 1)"))) - 1)
-          .cast("long").as("bits_p"))
-  }
-
-  /** The DSIR scorer over any (doc_id, lang, text) frame — factored so
-    * the spec can plant a target-like-vs-junk corpus.
-    */
-  private[graft] def dsirWeightsFrom(docs: DataFrame): DataFrame = {
-    val dc = dsirBucketCounts(docs)
-    dc.join(broadcast(dsirModel(dc)), "bucket")
-      .groupBy("doc_id", "lang")
-      .agg(sum("c").as("n_bigrams"),
-        sum(col("c") * (col("bits_q") - col("bits_p"))).as("bits_saved"))
-      .withColumn("target_like", col("bits_saved") > 0)
-  }
-
-  // --- q281: ONLINE DSIR scoring (stream-static broadcast, the q234 shape) ---------------
-  // The online-curation deployment of q279: the bucket model is TRAINED
-  // on the frozen batch corpus, then incoming documents stream through a
-  // STATELESS scoring pass — explode hashed bigrams map-side (the same
-  // codegen fingerprint, on columns, never in a lambda), broadcast-join
-  // the ≤DsirBuckets-row model, fold per doc INSIDE each micro-batch via
-  // a foreachBatch sink (the IvmSink shape). No watermark, no stream-agg
-  // state: a document is complete in its one input row, so all its
-  // occurrence rows share a micro-batch and the BATCH-LOCAL fold is
-  // exact — and the sink carries O(docs) rows, not O(bigram
-  // occurrences). (First cut emitted per-occurrence rows into a memory
-  // sink; the 100× drill killed it on driver maxResultSize — 1.1 GB of
-  // occurrence rows collected — which is the honest argument for
-  // folding before the sink on any real deployment too.) Gated against
-  // q279's oracle VERBATIM — the online path must score a document
-  // identically to the batch path.
-  def streamedDsir(spark: SparkSession, dir: String): DataFrame = {
-    val model = dsirModel(dsirBucketCounts(Tables.documents(spark, dir)))
-    val ws = split(col("text"), " ")
-    val scored = Tables.documentsStream(spark, dir)
-      .filter(col("text").isNotNull && col("lang").isNotNull &&
-        size(ws) >= 2)
-      .select(col("doc_id"), col("lang"), explode(arrays_zip(
-        slice(ws, lit(1), size(ws) - 1).as("a"),
-        slice(ws, lit(2), size(ws) - 1).as("b"))).as("p"))
-      .select(col("doc_id"), col("lang"),
-        pmod(TextAnalysis.rollingFingerprint(
-          concat(col("p.a"), lit(" "), col("p.b"))), lit(DsirBuckets))
-          .as("bucket"))
-      .join(broadcast(model), "bucket")
-      .select(col("doc_id"), col("lang"),
-        (col("bits_q") - col("bits_p")).as("delta_bits"))
-    val tmp = Sessions.tempDir("graft_q281_")
-    // idempotent under foreachBatch's at-least-once contract (ADVICE r17
-    // item 3): each micro-batch owns its OWN partition directory and
-    // overwrites it wholesale, so a retried batch rewrites identical
-    // rows instead of appending duplicates. Round 19: the directory is
-    // addressed DIRECTLY (write.parquet("<out>/__batch=<id>")) instead
-    // of via dynamic-partition-overwrite — same ownership, same
-    // idempotence (a retry overwrites exactly its own directory), but
-    // without the dynamic mode's staging-and-swap commit layer, which
-    // was the measured 39% cost of the r18 hardening (VERDICT r18
-    // item 8/What's-wrong 5). The hive-style dir name keeps the
-    // read-back's partition discovery identical.
-    val q = scored.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.groupBy("doc_id", "lang")
-          .agg(count(lit(1)).as("n_bigrams"),
-            sum("delta_bits").as("bits_saved"))
-          .write.mode("overwrite").parquet(s"$tmp/out/__batch=$batchId")
-      }
-      .option("checkpointLocation", s"$tmp/cp")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$tmp/out").drop("__batch")
-      .withColumn("target_like", col("bits_saved") > 0)
-      .orderBy("doc_id")
-  }
-
-  /** Importance-ranked token-budget selection (DSIR's resampling step as
-    * a deterministic curriculum cut): docs in (bits_saved DESC, doc_id)
-    * order until the budget fills — q83's PrefixSum running-cumsum shape
-    * with importance as the rank key, so no single-task global window.
-    */
-  def dsirSelect(spark: SparkSession, dir: String): DataFrame = {
-    val scored = dsirWeightsFrom(Tables.documents(spark, dir))
-      .withColumn("tokens", col("n_bigrams") + 1)
-    val bucketed = scored.withColumn("qb", -col("bits_saved"))
-    PrefixSum.runningSum(bucketed, "qb",
-        Seq(col("bits_saved").desc, col("doc_id")), col("tokens"), "cum_tokens")
-      .filter(col("cum_tokens") - col("tokens") < DsirTokenBudget)
-      .select(col("doc_id"), col("bits_saved"), col("tokens"), col("cum_tokens"))
-      .orderBy("doc_id")
-  }
-
-  // --- q245: streaming signed-delta IVM (foreachBatch + bucketed commits) ---------------
-  // q240 as a REAL change stream: every event row lands as an insert
-  // (+1), and the retracted slice (pre-watermark, event_id ≡ 0 mod 7)
-  // ALSO emits a −1 row — one explode over a CASE array, no self-union.
-  // The foreachBatch sink (streaming/IvmSink) folds each micro-batch's
-  // signed partial into a bucketed Snapshots view; signed addition is
-  // NOT idempotent, so the sink commits a batch high-water marker
-  // ATOMICALLY with the data (a reserved-key row of the view itself —
-  // the Delta txnVersion pattern) and replayed batches rewrite the
-  // touched buckets unchanged. Final view ≡ q240 ≡ the full recompute,
-  // so the gate shares q240's oracle verbatim.
-  def streamedIvm(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSpark(spark0)
-    val tmp = Sessions.tempDir("graft_ivms_")
-    val retracted = col("ts") <= utcTs(SplitTs) &&
-      pmod(col("event_id"), lit(IvmDeleteMod)) === 0
-    val signed = Tables.eventsStream(spark, dir)
-      .select(col("user_id"), col("value"),
-        explode(when(retracted, array(lit(1), lit(-1)))
-          .otherwise(array(lit(1)))).as("__sign"))
-    val q = signed.writeStream
-      .foreachBatch(graft.streaming.IvmSink.signedView(
-        s"$tmp/view", "user_id", "__sign", "n_events",
-        Seq("total_value" -> dec2(col("value")))) _)
-      .option("checkpointLocation", s"$tmp/cp")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.streaming.IvmSink.readView(spark, s"$tmp/view", "user_id")
-      .select(col("user_id"), col("n_events"),
-        col("total_value").cast("double").as("total_value"))
-      .orderBy("user_id")
-  }
-
-  // --- q244: temporal alignment of two SCD2 histories -----------------------------------
-  // The temporal-join primitive (the alignment step of every
-  // bitemporal/temporal-DB engine): two independently-evolving
-  // histories of the same entity — here the even- and odd-event_id
-  // changelog slices, which change at DIFFERENT times — are aligned
-  // into elementary validity segments on which exactly one version of
-  // each side holds, both attributes carried, [greatest(from),
-  // least(to)) per overlapping version pair, null effective_to = +∞.
-  // One equi-join on the entity key with an overlap residual: per-key
-  // fan-out is bounded by history lengths, never a range/cross join.
-  def temporalAlign(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select("user_id", "event_id", "event_type", "ts")
-    def history(side: DataFrame, attr: String) =
-      Scd.scd2FromChangelog(side, Seq("user_id"), "ts", Seq("event_id"))
-        .select(col("user_id"), col("event_type").as(attr),
-          col("effective_from"), col("effective_to"))
-    val a = history(ev.filter(pmod(col("event_id"), lit(2)) === 0), "a_type")
-    val b = history(ev.filter(pmod(col("event_id"), lit(2)) === 1), "b_type")
-    Scd.alignHistories(a, b, Seq("user_id"), Seq("a_type"), Seq("b_type"))
-      .orderBy("user_id", "valid_from", "a_type", "b_type")
-  }
-}
-
-/** DuckDB-equivalent SQL for every SQL-expressible query. Aliases match the
-  * Spark output column names exactly (driver hashes columns by name).
-  */
-object Oracles {
-  private val moneyQty   = "CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)"
-  /** `string_split` ≡ Spark `split(text, " ")`. */
-  private val ws         = "string_split(text, ' ')"
-  private def inList(s: Seq[String]) = s.map(w => s"'$w'").mkString("(", ",", ")")
-  /** Per-profile stopword frequency — ≡ TextAnalysis.stopwordCount. */
-  private def stopCount(prof: Seq[String]) =
-    s"len(list_filter($ws, w -> w IN ${inList(prof)}))"
-  /** Sequential-fold dot product — ≡ Similarity.dot (bit-identical). */
-  private def dotSql(a: String, b: String): String =
-    s"""list_reduce(list_transform(generate_series(1, len($a)),
-       i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x,y) -> x+y)"""
-  /** ≡ Similarity.l2Norm of the `embedding` column. */
-  private val nrmSql: String = s"sqrt(${dotSql("embedding", "embedding")})"
-
-  /** Polynomial fingerprint of string expr `x` — ≡ rollingFingerprint. */
-  private def fpSql(x: String): String =
-    s"""list_reduce(list_transform(string_split_regex($x, ''),
-       c -> CAST(ascii(c) AS BIGINT)), (a,b) -> (a*31+b) % ${graft.functions.Lsh.P})"""
-
-  /** Distinct word-trigram shingles — ≡ NearDup.shingleSets. */
-  private val shinglesSql: String =
-    s"""list_distinct(list_transform(generate_series(1, len($ws) - 2),
-       i -> $ws[i] || ' ' || $ws[i+1] || ' ' || $ws[i+2]))"""
-
-  private def sqlArr(xs: Seq[Long]): String = xs.mkString("[", ",", "]")
-
-  /** Shared CTE chain for near-dup connected components (q34, q65):
-    * MinHash-LSH banding candidates (same CTEs as q22, legacy Mh16
-    * geometry) verified by exact Jaccard on the candidate set only, then
-    * transitive closure `reach(id, r)` over the verified edges —
-    * ≡ Components.connectedComponents over lshVerifiedJaccardPairs.
-    */
-  private val componentCtes: String = {
-    import graft.functions.Lsh._
-    s"""WITH RECURSIVE
-        d AS (SELECT doc_id, $shinglesSql AS sh FROM documents
-                   WHERE len($ws) >= ${Queries.JaccardN}),
-        f AS (SELECT doc_id, list_transform(sh, s -> ${fpSql("s")}) AS fps FROM d),
-        sigs AS (SELECT doc_id,
-                        list_transform(generate_series(1, $K), i ->
-                          list_aggregate(list_transform(fps,
-                            v -> (${sqlArr(A)}[i]*v + ${sqlArr(B)}[i]) % $P), 'min')) AS sig
-                 FROM f),
-        bands AS (SELECT doc_id, t,
-                         list_reduce(sig[t*$RowsPerBand+1 : t*$RowsPerBand+$RowsPerBand],
-                           (x,y) -> x*31+y) AS key
-                  FROM sigs, (SELECT unnest(generate_series(0, ${Bands - 1})) AS t) bt),
-        cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                 FROM bands a JOIN bands b
-                   ON a.t = b.t AND a.key = b.key AND a.doc_id < b.doc_id),
-        pairs AS (SELECT doc_a, doc_b, jaccard FROM (
-              SELECT doc_a, doc_b,
-                     CAST(len(list_intersect(da.sh, db.sh)) AS DOUBLE)
-                       / (len(da.sh) + len(db.sh) - len(list_intersect(da.sh, db.sh)))
-                       AS jaccard
-              FROM cand JOIN d da ON doc_a = da.doc_id
-                        JOIN d db ON doc_b = db.doc_id)
-            WHERE jaccard >= ${Queries.JaccardThreshold}),
-        edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-                  UNION ALL SELECT doc_b, doc_a FROM pairs),
-        reach(id, r) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src)"""
-  }
-
-  /** Geometry-parameterized MinHash-LSH twin — ≡ NearDup.minHashLshPairs
-    * under the same Lsh.MinHashGeometry (constants interpolated from the
-    * geometry object the Spark path runs with). The band fold reduces mod
-    * P each step, exactly as Lsh.bandKeys does.
-    */
-  private def minHashSql(geom: graft.functions.Lsh.MinHashGeometry): String = {
-    import graft.functions.Lsh.P
-    val aArr = sqlArr(geom.a)
-    val bArr = sqlArr(geom.b)
-    val r = geom.rowsPerBand
-    s"""WITH d AS (SELECT doc_id, $shinglesSql AS sh FROM documents
-                   WHERE len($ws) >= ${Queries.JaccardN}),
-        f AS (SELECT doc_id, list_transform(sh, s -> ${fpSql("s")}) AS fps FROM d),
-        sigs AS (SELECT doc_id,
-                        list_transform(generate_series(1, ${geom.k}), i ->
-                          list_aggregate(list_transform(fps,
-                            v -> ($aArr[i]*v + $bArr[i]) % $P), 'min')) AS sig
-                 FROM f),
-        bands AS (SELECT doc_id, t,
-                         list_reduce(sig[t*$r+1 : t*$r+$r],
-                           (x,y) -> (x*31+y) % $P) AS key
-                  FROM sigs,
-                       (SELECT unnest(generate_series(0, ${geom.bands - 1})) AS t) bt),
-        cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                 FROM bands a JOIN bands b
-                   ON a.t = b.t AND a.key = b.key AND a.doc_id < b.doc_id)
-        SELECT doc_a, doc_b,
-               CAST(len(list_filter(generate_series(1, ${geom.k}), i -> sa.sig[i] = sb.sig[i]))
-                    AS DOUBLE) / ${geom.k}.0 AS est_jaccard
-        FROM cand JOIN sigs sa ON doc_a = sa.doc_id JOIN sigs sb ON doc_b = sb.doc_id"""
-  }
-
-  /** Geometry-parameterized SimHash twin — ≡ NearDup.simHashPairs under the
-    * same Lsh.SimGeometry (single source of truth: every constant below is
-    * interpolated from the geometry object the Spark path runs with).
-    * Fingerprints are lists of 32-bit words, exactly as on the Spark side,
-    * so all arithmetic stays in the double-exact range on both engines.
-    */
-  private def simHashSql(geom: graft.functions.Lsh.SimGeometry, maxHamming: Int): String = {
-    import graft.functions.Lsh.TwoPow32
-    val w32 = sqlArr((0 until 32).map(j => 1L << j))
-    val gas = sqlArr(geom.gas)
-    val gbs = sqlArr(geom.gbs)
-    val divs = sqlArr((0 until geom.bands).map(t =>
-      1L << ((t % geom.bandsPerWord) * geom.width)))
-    val mask = 1L << geom.width
-    s"""WITH d AS (SELECT doc_id, $shinglesSql AS sh FROM documents
-                   WHERE len($ws) >= ${Queries.JaccardN}),
-        f AS (SELECT doc_id, list_transform(sh, s -> ${fpSql("s")}) AS fps FROM d),
-        g AS (SELECT doc_id,
-                     list_transform(generate_series(1, ${geom.words}), w ->
-                       list_transform(fps, v -> ($gas[w]*v + $gbs[w]) % $TwoPow32)) AS gs
-              FROM f),
-        sims AS (SELECT doc_id,
-                        list_transform(generate_series(1, ${geom.words}), w ->
-                          list_reduce(list_transform(generate_series(0, 31), j ->
-                            CASE WHEN 2*len(list_filter(gs[w],
-                                   v -> CAST(floor(v / ($w32[j+1])) AS BIGINT) % 2 = 1))
-                                 >= len(gs[w])
-                                 THEN $w32[j+1] ELSE CAST(0 AS BIGINT) END),
-                            (a,b) -> a+b)) AS sim
-                 FROM g),
-        bands AS (SELECT doc_id, t,
-                         CAST(floor(sim[(t // ${geom.bandsPerWord}) + 1] / ($divs[t+1]))
-                              AS BIGINT) % $mask AS key
-                  FROM sims,
-                       (SELECT unnest(generate_series(0, ${geom.bands - 1})) AS t) bt),
-        cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                 FROM bands a JOIN bands b
-                   ON a.t = b.t AND a.key = b.key AND a.doc_id < b.doc_id)
-        SELECT doc_a, doc_b, hamming FROM (
-          SELECT doc_a, doc_b,
-                 CAST(list_reduce(list_transform(generate_series(1, ${geom.words}), w ->
-                        CAST(bit_count(xor(sa.sim[w], sb.sim[w])) AS BIGINT)),
-                      (a,b) -> a+b) AS INT) AS hamming
-          FROM cand JOIN sims sa ON doc_a = sa.doc_id JOIN sims sb ON doc_b = sb.doc_id)
-        WHERE hamming <= $maxHamming"""
-  }
-
-  /** argmax CASE cascade — ≡ TextAnalysis.langPredict (first-wins ties). */
-  private val langCase: String = {
-    val ps = graft.functions.TextAnalysis.LangProfiles.map(_._1)
-    val cases = ps.zipWithIndex.dropRight(1).map { case (l, i) =>
-      val conds = ps.drop(i + 1).map(o => s"s_$l >= s_$o").mkString(" AND ")
-      s"WHEN $conds THEN '$l'"
-    }
-    s"CASE ${cases.mkString(" ")} ELSE '${ps.last}' END"
-  }
-  private val discTerm   =
-    "CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1.0 - l_discount AS DECIMAL(18,2))"
-
-  /** q223's PQ assignment oracle — shared by the batch gate and the
-    * q234 stream-static twin (same rows, stream emission ≡ batch).
-    */
-  private lazy val pqCodesSql: String =
-    s"""WITH $pqCtes
-        SELECT vec_id, subspace, code, dist2 FROM codes"""
-
-  /** The q232/q236 shared closure CTE chain: basket edges → full
-    * reachability closure → mutual-reachability SCCs → sizes.
-    */
-  private lazy val sccClosureCtes: String =
-    s"""li AS (SELECT l_orderkey AS ok, l_linenumber AS ln,
-                          l_partkey AS pk
-                   FROM lineitem
-                   WHERE l_orderkey % ${Queries.SccOrderMod} = 0),
-            e AS (SELECT DISTINCT a.pk AS s, b.pk AS d
-                  FROM li a JOIN li b ON a.ok = b.ok AND b.ln = a.ln + 1),
-            n AS (SELECT s AS v FROM e UNION SELECT d FROM e),
-            reach(s, d) AS (
-              SELECT v, v FROM n
-              UNION
-              SELECT r.s, e.d FROM reach r JOIN e ON e.s = r.d),
-            scc AS (SELECT a.s AS node, MIN(a.d) AS scc_id
-                    FROM reach a JOIN reach b ON a.s = b.d AND a.d = b.s
-                    GROUP BY 1),
-            sz AS (SELECT scc_id, COUNT(*) AS scc_size FROM scc GROUP BY 1)"""
-
-  /** The shared PQ CTE chain (emb → seeds → cents → sub → scored →
-    * codes), used by q223/q234 (assignment) and q237 (ADC search).
-    */
-  private lazy val pqCtes: String = {
-      val subDim = graft.functions.Lsh.Dim / Queries.PqSub
-      val (nSub, nCodes) = (Queries.PqSub, Queries.PqCodes)
-      // list_slice for the computed subspace bounds; dist² fold from the
-      // first element ≡ Spark's aggregate from 0.0
-      s"""emb AS (SELECT vec_id,
-                              list_transform(embedding,
-                                x -> CAST(x AS DOUBLE)) AS v
-                       FROM embeddings),
-          seeds AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT)
-                             - 1 AS code, v
-                    FROM (SELECT vec_id, v FROM emb
-                          WHERE vec_id >= ${Queries.AnnQueryMaxId}
-                          ORDER BY vec_id LIMIT $nCodes)),
-          sp AS (SELECT CAST(unnest(generate_series(0, ${nSub - 1})) AS INT)
-                   AS subspace),
-          cents AS (SELECT sp.subspace, seeds.code,
-                           list_slice(v, sp.subspace * $subDim + 1,
-                                      (sp.subspace + 1) * $subDim) AS cent
-                    FROM seeds, sp),
-          sub AS (SELECT vec_id, sp.subspace,
-                         list_slice(v, sp.subspace * $subDim + 1,
-                                    (sp.subspace + 1) * $subDim) AS sv
-                  FROM emb, sp),
-          scored AS (SELECT vec_id, sub.subspace, code,
-                            list_reduce(list_transform(
-                              generate_series(1, $subDim),
-                              i -> (sv[i] - cent[i]) * (sv[i] - cent[i])),
-                              (a, b) -> a + b) AS dist2
-                     FROM sub JOIN cents ON sub.subspace = cents.subspace),
-          codes AS (SELECT vec_id, subspace, code, dist2 FROM (
-            SELECT *, row_number() OVER (PARTITION BY vec_id, subspace
-                        ORDER BY dist2, code) AS rn
-            FROM scored)
-          WHERE rn = 1)"""
-  }
-
-  val sql: Map[String, String] = sqlBase ++ Map(
-    // the native-exec as-of twins (q144-q146) must match the SAME oracle
-    // rows as their union+window counterparts — semantics identical, only
-    // the physical plan differs
-    "q144_asof_native"           -> sqlBase("q40_asof_join"),
-    "q145_asof_native_tolerance" -> sqlBase("q84_asof_tolerance"),
-    "q146_asof_native_forward"   -> sqlBase("q85_next_conversion"),
-    // the transformWithState twins (q275/q276) must match the SAME
-    // oracle rows as their flatMapGroupsWithState / withinWatermark
-    // counterparts — semantics identical, only the state API differs
-    "q275_sessionize_tws" -> sqlBase("q127_sessionize_stream"),
-    "q276_dedup_tws_ttl"  -> sqlBase("q137_stream_key_registry"),
-    // the ONLINE DSIR scoring path must score a doc identically to the
-    // batch path — q279's oracle verbatim
-    "q281_stream_dsir" -> dsirWeightsSql,
-    // 3-D layout curves: the Morton zone map and the Hilbert-vs-Morton
-    // probe-panel comparison (q227's shape at d=3)
-    "q277_zorder3_manifest" -> zorder3ManifestSql,
-    "q278_hilbert3_vs_morton3" -> {
-      val probes = Queries.PruneProbes3
-        .map { case (i, xl, xh, yl, yh, zl, zh) =>
-          s"($i, $xl, $xh, $yl, $yh, $zl, $zh)" }
-        .mkString(",\n              ")
-      def touched(man: String, bc: String, rc: String) =
-        s"""SELECT probe_id, CAST(COUNT(block) AS BIGINT) AS $bc,
-                   CAST(COALESCE(SUM(n_rows), 0) AS BIGINT) AS $rc
-            FROM probes LEFT JOIN $man
-              ON xlo <= max_x AND min_x <= xhi
-             AND ylo <= max_y AND min_y <= yhi
-             AND zlo <= max_z AND min_z <= zhi
-            GROUP BY 1"""
-      s"""WITH mz3 AS ($zorder3ManifestSql),
-          mh3 AS ($hilbert3ManifestSql),
-          probes(probe_id, xlo, xhi, ylo, yhi, zlo, zhi) AS (VALUES
-              $probes),
-          tz AS (${touched("mz3", "blocks_z", "rows_z")}),
-          th AS (${touched("mh3", "blocks_h", "rows_h")})
-          SELECT probe_id, blocks_z, rows_z, blocks_h, rows_h
-          FROM tz JOIN th USING (probe_id)"""
-    },
-    // DSIR importance weights + the budget selection over them (the
-    // selection window replays Spark's PrefixSum order exactly)
-    "q279_dsir_weights" -> dsirWeightsSql,
-    "q280_dsir_select" ->
-      s"""WITH w AS ($dsirWeightsSql),
-          sel AS (SELECT doc_id, bits_saved, n_bigrams + 1 AS tokens,
-                         SUM(n_bigrams + 1) OVER (
-                           ORDER BY bits_saved DESC, doc_id
-                           ROWS UNBOUNDED PRECEDING) AS cum_tokens
-                  FROM w)
-          SELECT doc_id, CAST(bits_saved AS BIGINT) AS bits_saved,
-                 CAST(tokens AS BIGINT) AS tokens,
-                 CAST(cum_tokens AS BIGINT) AS cum_tokens
-          FROM sel WHERE cum_tokens - tokens < ${Queries.DsirTokenBudget}""",
-
-    // BPE encode under the TRAINED merges: q225's unrolled training CTEs
-    // carrying `w` through every round, the encoded vocabulary joined
-    // back to the corpus (the same vocabulary-factorized plan)
-    "q282_bpe_encode" -> {
-      val rounds = (1 to Queries.BpeMergeRounds).map { r =>
-        s"""p$r AS (SELECT a, b, CAST(SUM(n) AS BIGINT) AS cnt FROM (
-               SELECT unnest(sy[1:len(sy)-1]) AS a,
-                      unnest(sy[2:len(sy)]) AS b, n
-               FROM (SELECT string_split(trim(s), ' ') AS sy, n FROM s${r - 1})
-               WHERE len(sy) >= 2)
-             GROUP BY 1, 2),
-          b$r AS (SELECT a, b FROM p$r ORDER BY cnt DESC, a, b LIMIT 1),
-          s$r AS MATERIALIZED (SELECT w, replace(s,
-                    ' ' || (SELECT a FROM b$r) || ' '
-                        || (SELECT b FROM b$r) || ' ',
-                    ' ' || (SELECT a FROM b$r)
-                        || (SELECT b FROM b$r) || ' ') AS s, n
-                  FROM s${r - 1})"""
-      }.mkString(",\n          ")
-      s"""WITH w0 AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS n FROM (
-              SELECT unnest(string_split(text, ' ')) AS w
-              FROM documents WHERE text IS NOT NULL)
-            WHERE len(w) > 0 GROUP BY 1),
-          s0 AS (SELECT w, ' ' || array_to_string(
-                   list_transform(generate_series(1, length(w)), i -> w[i]),
-                   ' ') || ' ' AS s, n
-                 FROM w0),
-          $rounds,
-          enc AS (SELECT w, CAST(len(string_split(trim(s), ' ')) AS BIGINT)
-                         AS toks
-                  FROM s${Queries.BpeMergeRounds}),
-          dw AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-                 FROM documents WHERE text IS NOT NULL)
-          SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-                 CAST(SUM(toks) AS BIGINT) AS bpe_tokens
-          FROM dw JOIN enc USING (w) WHERE len(w) > 0 GROUP BY 1"""
-    },
-
-    // span EXCISION over the naive-witness spans (q273's independent
-    // oracle form) — segments between spans via one lag window, ordered
-    // string_agg reassembly, tail past the last span carried verbatim
-    "q283_dedup_excise" -> {
-      val L = Queries.SuffixWindow
-      val mc = Queries.SuffixMaxChars
-      s"""WITH d AS (SELECT doc_id, substr(text, 1, $mc) AS t
-                     FROM documents
-                     WHERE text IS NOT NULL
-                       AND length(substr(text, 1, $mc)) >= $L),
-          w AS (SELECT doc_id, CAST(i AS BIGINT) AS i,
-                       substr(t, CAST(i AS INT), $L) AS win
-                FROM d, LATERAL (SELECT unnest(generate_series(1,
-                       length(t) - ${L - 1})) AS i) g),
-          rep AS (SELECT win FROM w GROUP BY win HAVING COUNT(*) >= 2),
-          hits AS (SELECT doc_id, i, i + ${L - 1} AS e
-                   FROM w JOIN rep USING (win)),
-          isl AS (SELECT doc_id, i, e,
-                         CASE WHEN i > COALESCE(MAX(e) OVER (
-                                PARTITION BY doc_id ORDER BY i
-                                ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING), -1) + 1
-                              THEN 1 ELSE 0 END AS nw
-                  FROM hits),
-          spn AS (SELECT doc_id, i, e,
-                        SUM(nw) OVER (PARTITION BY doc_id ORDER BY i
-                          ROWS UNBOUNDED PRECEDING) AS island
-                 FROM isl),
-          spans AS (SELECT doc_id, MIN(i) AS span_start, MAX(e) AS span_end
-                    FROM spn GROUP BY doc_id, island),
-          docs AS (SELECT doc_id, text FROM documents WHERE text IS NOT NULL),
-          segs AS (SELECT s.doc_id, span_start, span_end, text,
-                        COALESCE(LAG(span_end) OVER (PARTITION BY s.doc_id
-                          ORDER BY span_start), 0) + 1 AS seg_from,
-                        LEAD(span_start) OVER (PARTITION BY s.doc_id
-                          ORDER BY span_start) AS nxt
-                   FROM spans s JOIN docs USING (doc_id)),
-          built AS (SELECT doc_id,
-                        CAST(COUNT(*) AS BIGINT) AS n_spans,
-                        CAST(SUM(span_end - span_start + 1) AS BIGINT)
-                          AS cut_chars,
-                        string_agg(
-                          substr(text, CAST(seg_from AS INT),
-                            CAST(GREATEST(span_start - seg_from, 0) AS INT))
-                          || CASE WHEN nxt IS NULL
-                               THEN substr(text, CAST(span_end + 1 AS INT))
-                               ELSE '' END,
-                          '' ORDER BY span_start) AS kept_text
-                    FROM segs GROUP BY doc_id)
-          SELECT d.doc_id, COALESCE(n_spans, 0) AS n_spans,
-                 COALESCE(cut_chars, 0) AS cut_chars,
-                 COALESCE(kept_text, d.text) AS kept_text
-          FROM docs d LEFT JOIN built USING (doc_id)"""
-    },
-    // conversion lags read off the SAME funnel chain q66 gates
-    "q162_funnel_lag_percentiles" ->
-      s"""WITH f AS (${sqlBase("q66_funnel")})
-          SELECT COUNT(*) AS n_converted,
-                 quantile_cont(lag_us, 0.25) AS p25_us,
-                 quantile_cont(lag_us, 0.5)  AS p50_us,
-                 quantile_cont(lag_us, 0.75) AS p75_us,
-                 quantile_cont(lag_us, 0.9)  AS p90_us
-          FROM (SELECT epoch_us(purchase_ts) - epoch_us(view_ts) AS lag_us
-                FROM f WHERE stage = 3)""",
-
-    // q197 = q11 through the heap aggregate: same rows, different
-    // physical plan (the q144-146 twin pattern)
-    "q197_topk_native_agg" -> sqlBase("q11_top_n_per_group"),
-
-    // q226 = q68 through the distributed quantile decomposition: same
-    // rows, same oracle, bounded per-(group,bucket) state
-    "q226_quantiles_decomposed" -> sqlBase("q68_percentile_report"),
-
-    // q231 = q196 through the generalized Median operator (weighted
-    // lower median): same rows, same oracle, reusable decomposition
-    "q231_weighted_median_decomposed" -> sqlBase("q196_weighted_median"),
-
-    "q198_local_triangles" ->
-      // canonical-edge triple join: triangle a<b<c appears exactly once
-      // as edges (a,b)+(a,c)+(b,c); each corner credited via UNION ALL
-      """WITH items AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i
-                        FROM lineitem),
-          e AS (SELECT a.i AS x, b2.i AS y
-                FROM items a JOIN items b2 ON a.b = b2.b AND a.i < b2.i
-                GROUP BY 1, 2),
-          d AS (SELECT n, COUNT(*) AS deg
-                FROM (SELECT x AS n FROM e UNION ALL SELECT y AS n FROM e)
-                GROUP BY 1),
-          tri AS (SELECT e1.x AS a, e1.y AS b, e2.y AS c
-                  FROM e e1
-                  JOIN e e2 ON e2.x = e1.x AND e2.y > e1.y
-                  JOIN e e3 ON e3.x = e1.y AND e3.y = e2.y),
-          pv AS (SELECT n, COUNT(*) AS n_triangles FROM (
-                   SELECT a AS n FROM tri
-                   UNION ALL SELECT b AS n FROM tri
-                   UNION ALL SELECT c AS n FROM tri)
-                 GROUP BY 1)
-          SELECT d.n AS node, d.deg,
-                 COALESCE(pv.n_triangles, 0) AS n_triangles,
-                 2.0 * CAST(COALESCE(pv.n_triangles, 0) AS DOUBLE)
-                   / CAST(d.deg * (d.deg - 1) AS DOUBLE) AS lcc
-          FROM d LEFT JOIN pv ON pv.n = d.n
-          WHERE d.deg >= 2""",
-
-    "q199_kcore" -> kCoreSql(Queries.KCoreK, Queries.KCoreRounds),
-
-    "q200_dl_linkage" -> {
-      val d = Queries.FuzzyMaxDist
-      s"""WITH dict AS (SELECT p_name AS name, COUNT(*) AS n_rows
-                        FROM part GROUP BY 1),
-          b AS (SELECT name, n_rows,
-                       list_extract(string_split(name, ' '), -1) AS blk
-                FROM dict)
-          SELECT a.name AS name_a, b2.name AS name_b,
-                 CAST(damerau_levenshtein(a.name, b2.name) AS BIGINT) AS dl_dist,
-                 CAST(levenshtein(a.name, b2.name) AS BIGINT) AS lev_dist,
-                 a.n_rows AS n_parts_a, b2.n_rows AS n_parts_b
-          FROM b a JOIN b b2 ON a.blk = b2.blk AND a.name < b2.name
-          WHERE damerau_levenshtein(a.name, b2.name) <= $d"""
-    },
-
-    "q201_window_funnel" -> {
-      val w = Queries.FunnelWindowMicros
-      // q66's list-filter chain with the windowFunnel attribution bound:
-      // stage n only counts within w micros of the qualifying stage n−1
-      s"""WITH b AS (
-           SELECT user_id,
-                  min(CASE WHEN event_type = 'view' THEN epoch_us(ts) END) AS t_view,
-                  list(epoch_us(ts)) FILTER (WHERE event_type = 'click') AS clicks,
-                  list(epoch_us(ts)) FILTER (WHERE event_type = 'purchase') AS purchases
-           FROM events GROUP BY 1),
-          c AS (SELECT user_id, t_view, purchases,
-                       list_min(list_filter(clicks,
-                         c -> c > t_view AND c <= t_view + $w)) AS t_click
-                FROM b),
-          d AS (SELECT user_id, t_view, t_click,
-                       list_min(list_filter(purchases,
-                         p -> p > t_click AND p <= t_click + $w)) AS t_purchase
-                FROM c)
-          SELECT user_id,
-                 make_timestamp(t_view) AS view_ts,
-                 make_timestamp(t_click) AS click_ts,
-                 make_timestamp(t_purchase) AS purchase_ts,
-                 CAST(CASE WHEN t_purchase IS NOT NULL THEN 3
-                           WHEN t_click IS NOT NULL THEN 2
-                           WHEN t_view IS NOT NULL THEN 1
-                           ELSE 0 END AS INT) AS stage
-          FROM d"""
-    },
-
-    "q202_survival_table" -> {
-      val win = Queries.CensorWindowDays * 86400000000L
-      s"""WITH u AS (SELECT user_id, min(epoch_us(ts)) AS f,
-                            max(epoch_us(ts)) AS l
-                     FROM events GROUP BY 1),
-          h AS (SELECT max(epoch_us(ts)) AS h FROM events),
-          d AS (SELECT (l - f) // 86400000000 AS duration_days,
-                       CASE WHEN h - l < $win THEN 1 ELSE 0 END AS cens
-                FROM u, h),
-          g AS (SELECT duration_days, CAST(COUNT(*) AS BIGINT) AS n_ending,
-                       CAST(SUM(1 - cens) AS BIGINT) AS n_deaths,
-                       CAST(SUM(cens) AS BIGINT) AS n_censored
-                FROM d GROUP BY 1),
-          r AS (SELECT duration_days, n_deaths, n_censored,
-                       CAST(SUM(n_ending) OVER ()
-                            - SUM(n_ending) OVER (ORDER BY duration_days
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                            + n_ending AS BIGINT) AS n_risk
-                FROM g)
-          SELECT duration_days, n_risk, n_deaths, n_censored,
-                 CAST(n_deaths AS DOUBLE) / CAST(n_risk AS DOUBLE) AS hazard
-          FROM r"""
-    },
-
-    "q203_bfs_hops" -> bfsSql(Queries.BfsMaxHops),
-
-    "q204_cusum_changepoint" ->
-      """WITH daily AS (SELECT event_type,
-                               epoch_us(ts) // 86400000000 AS epoch_day,
-                               CAST(COUNT(*) AS BIGINT) AS c
-                        FROM events GROUP BY 1, 2),
-          sc AS (SELECT event_type, epoch_day,
-                        CAST(ROW_NUMBER() OVER w AS BIGINT) AS i,
-                        CAST(SUM(c) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
-                                          AND CURRENT ROW) AS BIGINT) AS cum,
-                        CAST(COUNT(*) OVER (PARTITION BY event_type) AS BIGINT) AS n,
-                        CAST(SUM(c) OVER (PARTITION BY event_type) AS BIGINT) AS s
-                 FROM daily
-                 WINDOW w AS (PARTITION BY event_type ORDER BY epoch_day)),
-          cu AS (SELECT *, n * cum - i * s AS cusum FROM sc)
-          SELECT event_type, n AS n_days,
-                 DATE '1970-01-01' + CAST(epoch_day AS INT) AS change_day,
-                 ABS(cusum) AS max_abs_cusum,
-                 CAST(sign(cusum) AS INT) AS shift_sign,
-                 CAST(ABS(cusum) AS DOUBLE) / CAST(n * s AS DOUBLE) AS shift_score
-          FROM cu
-          QUALIFY ROW_NUMBER() OVER (PARTITION BY event_type
-                    ORDER BY ABS(cusum) DESC, epoch_day ASC) = 1""",
-
-    "q205_principal_component" -> {
-      val Q = Queries.PcQuant
-      val S = Queries.PcScale
-      val R = Queries.PcRounds
-      val rounds = (1 to R).map { r =>
-        s"""w$r AS MATERIALIZED (SELECT g.i AS pos,
-                  CAST(SUM(g.g * v.vq) AS BIGINT) AS w
-                FROM g JOIN v${r - 1} v ON g.j = v.pos GROUP BY 1),
-            m$r AS (SELECT MAX(ABS(w)) AS m FROM w$r),
-            v$r AS MATERIALIZED (SELECT pos,
-                  (w * $S - ((w * $S) % m + m) % m) // m AS vq
-                FROM w$r, m$r)"""
-      }.mkString(",\n          ")
-      s"""WITH e1 AS MATERIALIZED (
-            SELECT vec_id,
-                   CAST(trunc(CAST(unnest(embedding) AS DOUBLE) * $Q) AS BIGINT)
-                     AS qv,
-                   unnest(generate_series(1, len(embedding))) AS idx
-            FROM embeddings),
-          g AS MATERIALIZED (
-            SELECT a.idx - 1 AS i, b.idx - 1 AS j,
-                   CAST(SUM(a.qv * b.qv) AS BIGINT) AS g
-            FROM e1 a JOIN e1 b USING (vec_id) GROUP BY 1, 2),
-          v0 AS (SELECT DISTINCT i AS pos, CAST($S AS BIGINT) AS vq FROM g),
-          $rounds,
-          num AS (SELECT SUM(CAST(g.g AS HUGEINT) * vi.vq * vj.vq) AS num
-                  FROM g JOIN v$R vi ON g.i = vi.pos
-                         JOIN v$R vj ON g.j = vj.pos),
-          den AS (SELECT CAST(SUM(vq * vq) AS BIGINT) AS den FROM v$R)
-          SELECT CAST(pos AS BIGINT) AS pos, vq AS pc_q,
-                 CAST(num AS DOUBLE) / CAST(den AS DOUBLE)
-                   / ${(Q * Q).toDouble} AS lambda
-          FROM v$R, num, den"""
-    },
-
-    "q206_label_communities" -> lpaSql(Queries.LpaRounds),
-
-    "q207_ushape_attribution" ->
-      """WITH ev AS (SELECT user_id, event_id, ts, event_type, value
-                     FROM events WHERE event_type IN ('click', 'purchase')),
-          x AS (SELECT user_id, event_id, ts, event_type, value,
-                   CAST(COALESCE(SUM(CASE WHEN event_type = 'click' THEN 1
-                                          ELSE 0 END) OVER w, 0) AS BIGINT)
-                     AS n_touches,
-                   MIN(CASE WHEN event_type = 'click' THEN epoch_us(ts) END)
-                     OVER w AS f_us,
-                   MAX(CASE WHEN event_type = 'click' THEN epoch_us(ts) END)
-                     OVER w AS l_us
-                FROM ev
-                WINDOW w AS (PARTITION BY user_id
-                             ORDER BY epoch_us(ts), event_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-          p AS (SELECT *, CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
-                            AS cents
-                FROM x WHERE event_type = 'purchase')
-          SELECT user_id, event_id AS purchase_event_id, ts AS purchase_ts,
-                 n_touches,
-                 make_timestamp(f_us) AS first_click_ts,
-                 make_timestamp(l_us) AS last_click_ts,
-                 cents,
-                 CAST(CASE WHEN n_touches = 0 THEN NULL
-                           WHEN n_touches = 1 THEN cents
-                           WHEN n_touches = 2 THEN cents - cents // 2
-                           ELSE (cents * 2) // 5 END AS BIGINT)
-                   AS first_credit_cents,
-                 CAST(CASE WHEN n_touches = 0 THEN NULL
-                           WHEN n_touches = 1 THEN 0
-                           WHEN n_touches = 2 THEN cents // 2
-                           ELSE (cents * 2) // 5 END AS BIGINT)
-                   AS last_credit_cents,
-                 CAST(CASE WHEN n_touches <= 2 THEN NULL
-                           ELSE (cents - 2 * ((cents * 2) // 5))
-                                // (n_touches - 2) END AS BIGINT)
-                   AS mid_credit_each_cents,
-                 CAST(CASE WHEN n_touches <= 2 THEN NULL
-                           ELSE (cents - 2 * ((cents * 2) // 5))
-                                % (n_touches - 2) END AS BIGINT)
-                   AS mid_remainder_cents
-          FROM p""",
-
-    "q208_seasonal_anomalies" ->
-      """WITH daily AS (SELECT event_type,
-                               epoch_us(ts) // 86400000000 AS epoch_day,
-                               CAST(COUNT(*) AS BIGINT) AS c
-                        FROM events GROUP BY 1, 2),
-          p AS (SELECT event_type, epoch_day, c,
-                       (epoch_day + 4) % 7 AS dow,
-                       CAST(COUNT(*) OVER w AS BIGINT) AS n,
-                       CAST(SUM(c) OVER w AS BIGINT) AS s,
-                       CAST(SUM(c * c) OVER w AS BIGINT) AS q
-                FROM daily
-                WINDOW w AS (PARTITION BY event_type, (epoch_day + 4) % 7)),
-          z AS (SELECT *, n * c - s AS d, n * q - s * s AS var_num FROM p),
-          zz AS (SELECT *, CAST(d AS DOUBLE) / sqrt(CAST(var_num AS DOUBLE))
-                             AS z
-                 FROM z WHERE var_num > 0)
-          SELECT event_type,
-                 DATE '1970-01-01' + CAST(epoch_day AS INT) AS day,
-                 dow, c AS n_events, d AS dev, var_num, z,
-                 d * d > 4 * var_num AS is_extreme
-          FROM zz
-          QUALIFY ROW_NUMBER() OVER (PARTITION BY event_type
-                    ORDER BY ABS(z) DESC, epoch_day ASC) = 1""",
-
-    "q209_rolling_correlation" -> {
-      val k = Queries.RollCorrDays - 1
-      val minD = Queries.RollCorrMinDays
-      s"""WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS epoch_day,
-                  CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS x,
-                  CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS y
-           FROM events WHERE event_type IN ('view', 'purchase') GROUP BY 1),
-          m AS (SELECT epoch_day, x, y,
-                       CAST(COUNT(*) OVER w AS BIGINT) AS n,
-                       CAST(SUM(x) OVER w AS BIGINT) AS sx,
-                       CAST(SUM(y) OVER w AS BIGINT) AS sy,
-                       CAST(SUM(x * x) OVER w AS BIGINT) AS sxx,
-                       CAST(SUM(y * y) OVER w AS BIGINT) AS syy,
-                       CAST(SUM(x * y) OVER w AS BIGINT) AS sxy
-                FROM daily
-                WINDOW w AS (ORDER BY epoch_day
-                             RANGE BETWEEN $k PRECEDING AND CURRENT ROW))
-          SELECT DATE '1970-01-01' + CAST(epoch_day AS INT) AS day,
-                 n AS n_days, x AS n_views, y AS n_purchases,
-                 CASE WHEN n >= $minD AND n * sxx - sx * sx > 0
-                           AND n * syy - sy * sy > 0
-                      THEN CAST(n * sxy - sx * sy AS DOUBLE)
-                           / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-                              * sqrt(CAST(n * syy - sy * sy AS DOUBLE)))
-                 END AS corr_28d
-          FROM m"""
-    },
-
-    // q256 — the same daily-cents frame, a list() window over the RANGE
-    // frame, list_sort, and the identical parity CASE; integral cents
-    // make DuckDB's rounding decimal→int cast ≡ Spark's truncation.
-    "q256_rolling_median" -> {
-      val k = Queries.RollMedDays - 1
-      s"""WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS epoch_day,
-                  CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
-                    AS BIGINT) AS cents
-           FROM events GROUP BY 1),
-          m AS (SELECT epoch_day, cents,
-                       CAST(COUNT(*) OVER w AS BIGINT) AS n,
-                       list_sort(list(cents) OVER w) AS vals
-                FROM daily
-                WINDOW w AS (ORDER BY epoch_day
-                             RANGE BETWEEN $k PRECEDING AND CURRENT ROW))
-          SELECT DATE '1970-01-01' + CAST(epoch_day AS INT) AS day,
-                 n AS n_days, cents AS day_cents,
-                 CASE WHEN n % 2 = 1
-                      THEN CAST(vals[CAST((n + 1) // 2 AS INT)] AS DOUBLE)
-                      ELSE (CAST(vals[CAST(n // 2 AS INT)] AS DOUBLE) +
-                            CAST(vals[CAST(n // 2 + 1 AS INT)] AS DOUBLE))
-                           / 2.0 END AS median_cents_28d
-          FROM m"""
-    },
-
-    "q210_fifo_allocation" -> {
-      """WITH li AS (SELECT l_partkey AS key, l_linestatus AS st,
-                            CAST(CAST(l_shipdate AS DATE)
-                                 - DATE '1970-01-01' AS BIGINT) AS ord,
-                            l_orderkey * 100 + l_linenumber AS id,
-                            -- trunc ≡ Spark's decimal→long cast (toward
-                            -- zero); bare CAST rounds in DuckDB
-                            CAST(trunc(CAST(l_quantity AS DECIMAL(18,2)))
-                              AS BIGINT) AS qty
-                     FROM lineitem
-                     WHERE l_linestatus IN ('F', 'O')),
-          c AS (SELECT *,
-                       CAST(SUM(qty) OVER (PARTITION BY key, st
-                              ORDER BY ord, id
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                         AS BIGINT) AS e
-                FROM li),
-          s AS (SELECT key, ord AS s_ord, id AS s_id,
-                       e - qty AS s_start, e AS s_end FROM c WHERE st = 'F'),
-          d AS (SELECT key, ord AS d_ord, id AS d_id,
-                       e - qty AS d_start, e AS d_end FROM c WHERE st = 'O')
-          SELECT s.key AS part, s_id AS supply_id, d_id AS demand_id,
-                 least(s_end, d_end) - greatest(s_start, d_start)
-                   AS matched_qty,
-                 d_ord - s_ord AS age_days
-          FROM s JOIN d ON s.key = d.key
-                       AND s_start < d_end AND d_start < s_end"""
-    },
-
-    "q211_degree_assortativity" ->
-      """WITH items AS MATERIALIZED (SELECT DISTINCT l_orderkey AS b,
-                                            l_partkey AS i
-                        FROM lineitem),
-          e AS MATERIALIZED (SELECT a.i AS x, b2.i AS y
-                FROM items a JOIN items b2 ON a.b = b2.b AND a.i < b2.i
-                GROUP BY 1, 2),
-          deg AS (SELECT n, CAST(COUNT(*) AS BIGINT) AS deg
-                  FROM (SELECT x AS n FROM e UNION ALL SELECT y FROM e)
-                  GROUP BY 1),
-          dd AS (SELECT dx.deg AS dx, dy.deg AS dy
-                 FROM (SELECT x AS a, y AS b FROM e
-                       UNION ALL SELECT y, x FROM e) d
-                 JOIN deg dx ON dx.n = d.a
-                 JOIN deg dy ON dy.n = d.b),
-          m AS (SELECT CAST(COUNT(*) AS BIGINT) AS mm,
-                       CAST(SUM(dx) AS BIGINT) AS sx,
-                       CAST(SUM(dx * dx) AS BIGINT) AS sxx,
-                       CAST(SUM(dx * dy) AS BIGINT) AS sxy
-                FROM dd),
-          nv AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes FROM deg)
-          SELECT n_nodes, mm // 2 AS n_edges,
-                 CAST(mm AS DOUBLE) / CAST(n_nodes AS DOUBLE) AS mean_degree,
-                 CASE WHEN CAST(mm AS HUGEINT) * sxx
-                           - CAST(sx AS HUGEINT) * sx > 0
-                      THEN CAST(CAST(mm AS HUGEINT) * sxy
-                                - CAST(sx AS HUGEINT) * sx AS DOUBLE)
-                           / CAST(CAST(mm AS HUGEINT) * sxx
-                                  - CAST(sx AS HUGEINT) * sx AS DOUBLE)
-                 END AS assortativity
-          FROM m, nv""",
-
-    "q212_reciprocal_best_match" -> {
-      val minSup = Queries.CoMinSupport
-      s"""WITH items AS MATERIALIZED (SELECT DISTINCT l_orderkey AS b,
-                                             l_partkey AS i
-                         FROM lineitem),
-          e AS MATERIALIZED (SELECT a.i AS x, b2.i AS y,
-                       CAST(COUNT(*) AS BIGINT) AS nb
-                FROM items a JOIN items b2 ON a.b = b2.b AND a.i < b2.i
-                GROUP BY 1, 2),
-          freq AS (SELECT i, CAST(COUNT(*) AS BIGINT) AS n
-                   FROM items GROUP BY 1),
-          sim AS (SELECT e.x, e.y,
-                         CAST(e.nb AS DOUBLE)
-                           / sqrt(CAST(fa.n * fb.n AS DOUBLE)) AS cosine
-                  FROM e JOIN freq fa ON fa.i = e.x
-                         JOIN freq fb ON fb.i = e.y
-                  WHERE e.nb >= $minSup),
-          d AS (SELECT x AS me, y AS other, cosine FROM sim
-                UNION ALL SELECT y, x, cosine FROM sim),
-          best AS (SELECT me, other AS best, cosine FROM d
-                   QUALIFY ROW_NUMBER() OVER (PARTITION BY me
-                             ORDER BY cosine DESC, other ASC) = 1)
-          SELECT l.item_a, l.item_b, l.cosine
-          FROM (SELECT me AS item_a, best AS item_b, cosine FROM best) l
-          JOIN (SELECT me AS item_b, best AS item_a FROM best) r
-            USING (item_a, item_b)
-          WHERE item_a < item_b"""
-    },
-
-    "q213_pagerank_weighted" -> {
-      val s = Queries.PrScale
-      val base = 15L * s / 100L
-      // q155's unrolled integer rounds with the weighted mass split:
-      // per-node quotient floors once, then scales by the edge weight
-      def round(prev: String, out: String) =
-        s"""$out AS (SELECT ed.dst AS i,
-                    $base + SUM(ed.w * ((85 * p.p) // (100 * t.tw))) AS p
-             FROM ed JOIN $prev p ON ed.src = p.i
-                     JOIN tww t ON ed.src = t.src
-             GROUP BY 1)"""
-      val rounds = (1 to Queries.PrWRounds)
-        .map(r => round(s"p${r - 1}", s"p$r")).mkString(",\n          ")
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i
-                         FROM lineitem),
-          e0 AS (SELECT a.i AS src, b2.i AS dst, COUNT(*) AS w
-                 FROM items a JOIN items b2 ON a.b = b2.b AND a.i < b2.i
-                 GROUP BY 1, 2),
-          ed AS (SELECT src, dst, w FROM e0
-                 UNION ALL SELECT dst, src, w FROM e0),
-          tww AS (SELECT src, CAST(SUM(w) AS BIGINT) AS tw
-                  FROM ed GROUP BY 1),
-          p0 AS (SELECT src AS i, CAST($s AS BIGINT) AS p FROM tww),
-          $rounds
-          SELECT i AS item, CAST(p AS BIGINT) AS rank_score
-          FROM p${Queries.PrWRounds}"""
-    },
-
-    "q214_sql_kernels" ->
-      // window form of the heap top-k (the q197 twin contract) + native
-      // damerau_levenshtein (same unrestricted semantics as graft_dleven)
-      """WITH qty AS (SELECT l_partkey AS pk,
-                             CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)) * 100)
-                               AS BIGINT) AS q
-                      FROM lineitem GROUP BY 1),
-          r AS (SELECT p.p_brand AS brand, q.pk, q.q,
-                       row_number() OVER (PARTITION BY p.p_brand
-                                          ORDER BY q.q DESC, q.pk) AS rk
-                FROM qty q JOIN part p ON p.p_partkey = q.pk)
-          SELECT brand, CAST(rk AS INT) AS rank,
-                 CAST(pk AS BIGINT) AS partkey,
-                 q AS qty_centi,
-                 CAST(damerau_levenshtein(brand, 'Brand#55') AS INT)
-                   AS dl_proto
-          FROM r WHERE rk <= 3""",
-
-    "q215_pmi_collocations" -> {
-      val (m, p) = (Queries.PmiMinMarginal, Queries.PmiMinPair)
-      // zipped parallel unnests over the two length-(n-1) slices ≡ the
-      // Spark slice+arrays_zip bigram walk; HUGEINT products ≡ the
-      // DECIMAL(38,0) multiply-through
-      s"""WITH toks AS (SELECT string_split(text, ' ') AS ws FROM documents
-                        WHERE text IS NOT NULL
-                          AND len(string_split(text, ' ')) >= 2),
-          bg AS (SELECT unnest(ws[1:len(ws)-1]) AS word_a,
-                        unnest(ws[2:len(ws)])   AS word_b FROM toks),
-          c AS (SELECT word_a, word_b, CAST(COUNT(*) AS BIGINT) AS n_ab
-                FROM bg GROUP BY 1, 2),
-          la AS (SELECT word_a, CAST(SUM(n_ab) AS BIGINT) AS n_left
-                 FROM c GROUP BY 1),
-          rb AS (SELECT word_b, CAST(SUM(n_ab) AS BIGINT) AS n_right
-                 FROM c GROUP BY 1),
-          nn AS (SELECT CAST(SUM(n_ab) AS BIGINT) AS n_total FROM c)
-          SELECT word_a, word_b, n_ab, n_left, n_right,
-                 CAST(CAST(n_ab AS HUGEINT) * n_total AS DOUBLE)
-                   / CAST(CAST(n_left AS HUGEINT) * n_right AS DOUBLE)
-                   AS pmi_lift
-          FROM c JOIN la USING (word_a) JOIN rb USING (word_b)
-          CROSS JOIN nn
-          WHERE n_left >= $m AND n_right >= $m AND n_ab >= $p"""
-    },
-
-    "q216_pagerank_directed" -> {
-      val s = Queries.PrScale
-      val base = 15L * s / 100L
-      // q213's unrolled integer rounds on the DIRECTED sequential-basket
-      // graph, plus the per-round scalar dangling pool redistributed
-      // uniformly; all quantities non-negative so // ≡ Spark div
-      def round(prev: String, r: Int) =
-        s"""dg$r AS (SELECT COALESCE(SUM(p), 0) AS d
-              FROM $prev a LEFT JOIN tw ON a.i = tw.src
-              WHERE tw.src IS NULL),
-          c$r AS (SELECT ed.dst AS i,
-                         SUM(ed.w * ((85 * p.p) // (100 * t.tw))) AS cs
-                  FROM ed JOIN $prev p ON ed.src = p.i
-                          JOIN tw t ON ed.src = t.src
-                  GROUP BY 1),
-          p$r AS (SELECT n.i,
-                         $base + COALESCE(c.cs, 0)
-                           + (85 * (SELECT d FROM dg$r))
-                             // (100 * (SELECT nn FROM nv)) AS p
-                  FROM nodes n LEFT JOIN c$r c ON c.i = n.i)"""
-      val rounds = (1 to Queries.PrDRounds)
-        .map(r => round(s"p${r - 1}", r)).mkString(",\n          ")
-      s"""WITH ed AS (SELECT a.l_partkey AS src, b.l_partkey AS dst,
-                             CAST(COUNT(*) AS BIGINT) AS w
-                      FROM lineitem a
-                      JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-                                     AND b.l_linenumber = a.l_linenumber + 1
-                      GROUP BY 1, 2),
-          nodes AS (SELECT DISTINCT i FROM
-                      (SELECT src AS i FROM ed UNION ALL SELECT dst FROM ed)),
-          nv AS (SELECT CAST(COUNT(*) AS BIGINT) AS nn FROM nodes),
-          tw AS (SELECT src, CAST(SUM(w) AS BIGINT) AS tw FROM ed GROUP BY 1),
-          p0 AS (SELECT i, CAST($s AS BIGINT) AS p FROM nodes),
-          $rounds
-          SELECT i AS item, CAST(p AS BIGINT) AS rank_score
-          FROM p${Queries.PrDRounds}"""
-    },
-
-    "q217_bitemporal" -> {
-      val v = Queries.BtValidTs
-      // each knowledge version's belief recomputed from the base table
-      // with the same watermark literal, then as-of-filtered at V
-      Queries.TravelTs.zipWithIndex.map { case (k, i) =>
-        s"""SELECT CAST(${i + 1} AS INT) AS knowledge_version,
-                   user_id, event_id, event_type, value,
-                   effective_from, effective_to
-            FROM (SELECT user_id, event_id, event_type, value,
-                         ts AS effective_from,
-                         lead(ts) OVER (PARTITION BY user_id
-                                        ORDER BY ts, event_id) AS effective_to
-                  FROM events WHERE ts < TIMESTAMP '$k')
-            WHERE effective_from <= TIMESTAMP '$v'
-              AND (effective_to IS NULL OR effective_to > TIMESTAMP '$v')"""
-      }.mkString("\nUNION ALL\n")
-    },
-
-    "q218_stream_cusum" ->
-      // the stream's sequential clipped fold via the prefix-min closed
-      // form: s_i = cum_i − min(0, min_{j≤i} cum_j); last (open) day
-      // excluded per type, ref = floor-mean daily count over ALL days
-      """WITH daily AS (SELECT event_type,
-                               epoch_us(ts) // 86400000000 AS day,
-                               CAST(COUNT(*) AS BIGINT) AS c
-                        FROM events GROUP BY 1, 2),
-          ref AS (SELECT event_type,
-                         CAST(CAST(SUM(c) AS BIGINT)
-                              // CAST(COUNT(*) AS BIGINT) AS BIGINT) AS rf
-                  FROM daily GROUP BY 1),
-          lastd AS (SELECT event_type, MAX(day) AS last_day
-                    FROM daily GROUP BY 1),
-          closed AS (SELECT d.event_type, d.day, d.c - r.rf AS dd
-                     FROM daily d
-                     JOIN ref r USING (event_type)
-                     JOIN lastd l USING (event_type)
-                     WHERE d.day < l.last_day),
-          c1 AS (SELECT event_type, day,
-                        CAST(SUM(dd) OVER (PARTITION BY event_type
-                                           ORDER BY day) AS BIGINT) AS cum
-                 FROM closed),
-          c2 AS (SELECT event_type, day,
-                        cum - LEAST(CAST(0 AS BIGINT),
-                          CAST(MIN(cum) OVER (PARTITION BY event_type
-                                              ORDER BY day) AS BIGINT)) AS s
-                 FROM c1),
-          fin AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_days,
-                         CAST(arg_max(s, day) AS BIGINT) AS final_cusum,
-                         CAST(MAX(s) AS BIGINT) AS max_cusum
-                  FROM c2 GROUP BY 1),
-          pk AS (SELECT c2.event_type, CAST(MIN(c2.day) AS BIGINT) AS peak_day
-                 FROM c2 JOIN fin ON c2.event_type = fin.event_type
-                                 AND c2.s = fin.max_cusum
-                 GROUP BY 1)
-          SELECT f.event_type, f.n_days, f.final_cusum, f.max_cusum,
-                 p.peak_day
-          FROM fin f JOIN pk p USING (event_type)""",
-
-    "q219_stream_topk" ->
-      s"""SELECT event_type, CAST(rn AS INT) AS rank, event_id,
-                 cents AS value_cents FROM (
-            SELECT event_type, event_id,
-                   CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
-                   row_number() OVER (PARTITION BY event_type
-                     ORDER BY CAST(CAST(value AS DECIMAL(18,2)) * 100
-                                   AS BIGINT) DESC, event_id) AS rn
-            FROM events)
-          WHERE rn <= ${Queries.TopKStreamK}""",
-
-    "q220_theilsen_trend" ->
-      // pairwise-slope median on the q195 daily frame; quantile_cont ≡
-      // Spark's exact percentile (the q68 bit-match precedent)
-      s"""WITH daily AS (
-            SELECT l_returnflag,
-                   date_diff('day', DATE '1970-01-01',
-                             CAST(l_shipdate AS DATE)) AS x,
-                   CAST(floor(CAST(SUM($discTerm) AS DOUBLE)
-                              / ${Queries.AnomalyUnit}) AS BIGINT) AS y
-            FROM lineitem GROUP BY 1, 2),
-          slopes AS (
-            SELECT a.l_returnflag,
-                   CAST(b.y - a.y AS DOUBLE) / CAST(b.x - a.x AS DOUBLE)
-                     AS slope
-            FROM daily a JOIN daily b
-              ON a.l_returnflag = b.l_returnflag AND a.x < b.x)
-          SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-                 quantile_cont(slope, 0.5) AS theilsen_slope_ku_per_day
-          FROM slopes GROUP BY 1""",
-
-    "q221_hilbert_manifest" -> hilbertManifestSql,
-
-    "q227_hilbert_vs_morton" -> {
-      val probes = Queries.PruneProbes
-        .map { case (i, xl, xh, yl, yh) => s"($i, $xl, $xh, $yl, $yh)" }
-        .mkString(",\n              ")
-      def touched(man: String, bc: String, rc: String) =
-        s"""SELECT probe_id, CAST(COUNT(block) AS BIGINT) AS $bc,
-                   CAST(COALESCE(SUM(n_rows), 0) AS BIGINT) AS $rc
-            FROM probes LEFT JOIN $man
-              ON xlo <= max_x AND min_x <= xhi
-             AND ylo <= max_y AND min_y <= yhi
-            GROUP BY 1"""
-      s"""WITH mz AS ($zorderManifestSql),
-          mh AS ($hilbertManifestSql),
-          probes(probe_id, xlo, xhi, ylo, yhi) AS (VALUES
-              $probes),
-          tz AS (${touched("mz", "blocks_z", "rows_z")}),
-          th AS (${touched("mh", "blocks_h", "rows_h")})
-          SELECT probe_id, blocks_z, rows_z, blocks_h, rows_h
-          FROM tz JOIN th USING (probe_id)"""
-    },
-
-    "q228_conversion_ci" -> {
-      // DuckDB parses bare 1.96 as DECIMAL: z*z would be the EXACT
-      // 3.8416 where Spark's double product is 3.8415999999999997 —
-      // force the double domain so both engines round identically
-      val z = s"CAST(${Queries.WilsonZ} AS DOUBLE)"
-      // fixed-shape Wilson terms over exact integer (k, n); first-view
-      // per user via a conditional min, conversion = any purchase after
-      s"""WITH pu AS (
-            SELECT user_id,
-                   MIN(CASE WHEN event_type = 'view' THEN epoch_us(ts) END)
-                     AS tv
-            FROM events GROUP BY 1),
-          conv AS (
-            SELECT pu.user_id, pu.tv,
-                   MAX(CASE WHEN e.event_type = 'purchase'
-                             AND epoch_us(e.ts) > pu.tv
-                            THEN 1 ELSE 0 END) AS converted
-            FROM pu LEFT JOIN events e ON e.user_id = pu.user_id
-            WHERE pu.tv IS NOT NULL
-            GROUP BY 1, 2),
-          c AS (SELECT tv // 86400000000 AS cohort_day,
-                       CAST(COUNT(*) AS BIGINT) AS n_users,
-                       CAST(SUM(converted) AS BIGINT) AS n_converted
-                FROM conv GROUP BY 1),
-          w AS (SELECT cohort_day, n_users, n_converted,
-                       CAST(n_converted AS DOUBLE) / CAST(n_users AS DOUBLE)
-                         AS p,
-                       CAST(n_users AS DOUBLE) AS nd
-                FROM c)
-          SELECT cohort_day, n_users, n_converted, p AS conversion_rate,
-                 LEAST(p, GREATEST(CAST(0 AS DOUBLE),
-                   (p + $z * $z / (2.0 * nd)
-                      - $z * sqrt(p * (1.0 - p) / nd
-                                  + $z * $z / (4.0 * nd * nd)))
-                     / (1.0 + $z * $z / nd))) AS wilson_lo,
-                 GREATEST(p, LEAST(CAST(1 AS DOUBLE),
-                   (p + $z * $z / (2.0 * nd)
-                      + $z * sqrt(p * (1.0 - p) / nd
-                                  + $z * $z / (4.0 * nd * nd)))
-                     / (1.0 + $z * $z / nd))) AS wilson_hi
-          FROM w"""
-    },
-
-    "q229_belief_revisions" -> {
-      val v = Queries.BtValidTs
-      def belief(k: String, alias: String) =
-        s"""$alias AS (
-            SELECT user_id, event_id, epoch_us(effective_to) AS eto
-            FROM (SELECT user_id, event_id, ts AS effective_from,
-                         lead(ts) OVER (PARTITION BY user_id
-                                        ORDER BY ts, event_id) AS effective_to
-                  FROM events WHERE ts < TIMESTAMP '$k')
-            WHERE effective_from <= TIMESTAMP '$v'
-              AND (effective_to IS NULL OR effective_to > TIMESTAMP '$v'))"""
-      Queries.TravelTs.sliding(2).zipWithIndex.map { case (Seq(k1, k2), i) =>
-        s"""SELECT CAST(${i + 1} AS INT) AS transition,
-                   CAST(SUM(CASE WHEN e1 IS NULL THEN 1 ELSE 0 END)
-                     AS BIGINT) AS n_added,
-                   CAST(SUM(CASE WHEN e1 IS NOT NULL AND e1 <> e2
-                            THEN 1 ELSE 0 END) AS BIGINT) AS n_replaced,
-                   CAST(SUM(CASE WHEN e1 = e2
-                             AND t1 IS DISTINCT FROM t2
-                            THEN 1 ELSE 0 END) AS BIGINT) AS n_revised,
-                   CAST(SUM(CASE WHEN e1 = e2
-                             AND t1 IS NOT DISTINCT FROM t2
-                            THEN 1 ELSE 0 END) AS BIGINT) AS n_unchanged
-            FROM (WITH ${belief(k1, "b1")},
-                       ${belief(k2, "b2")}
-                  SELECT b2.user_id, b1.event_id AS e1, b1.eto AS t1,
-                         b2.event_id AS e2, b2.eto AS t2
-                  FROM b2 LEFT JOIN b1 USING (user_id))"""
-      }.mkString("\nUNION ALL\n")
-    },
-
-    "q222_recommendations" -> {
-      val (ms, k) = (Queries.CoMinSupport, Queries.RecTopK)
-      // list_sort + list_reduce ≡ the Spark sort_array + aggregate fold
-      // (left fold from 0.0 — +0.0 on the first element is exact)
-      s"""WITH owned AS (SELECT DISTINCT o_custkey AS cust, l_partkey AS item
-                         FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-          items AS MATERIALIZED (SELECT DISTINCT l_orderkey AS b,
-                                        l_partkey AS i FROM lineitem),
-          freq AS (SELECT i, CAST(COUNT(*) AS BIGINT) AS n
-                   FROM items GROUP BY 1),
-          e0 AS (SELECT a.i AS ia, b2.i AS ib, CAST(COUNT(*) AS BIGINT) AS nab
-                 FROM items a JOIN items b2 ON a.b = b2.b AND a.i < b2.i
-                 GROUP BY 1, 2),
-          ef AS (SELECT ia, ib, nab FROM e0 WHERE nab >= $ms),
-          ed AS (SELECT ia, ib, nab FROM ef
-                 UNION ALL SELECT ib, ia, nab FROM ef),
-          sim AS (SELECT ed.ia, ed.ib,
-                         CAST(nab AS DOUBLE)
-                           / sqrt(CAST(fa.n * fb.n AS DOUBLE)) AS cosine
-                  FROM ed JOIN freq fa ON fa.i = ed.ia
-                          JOIN freq fb ON fb.i = ed.ib),
-          cand AS (SELECT o.cust, s.ib AS rec, o.item AS via, s.cosine
-                   FROM owned o JOIN sim s ON s.ia = o.item
-                   WHERE NOT EXISTS (SELECT 1 FROM owned o2
-                                     WHERE o2.cust = o.cust
-                                       AND o2.item = s.ib)),
-          scored AS (SELECT cust, rec,
-                            list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                              list_transform(
-                                list_sort(list(struct_pack(via := via,
-                                                           cosine := cosine))),
-                                r -> r.cosine)),
-                              (a, b) -> a + b) AS score,
-                            CAST(COUNT(*) AS BIGINT) AS n_paths
-                     FROM cand GROUP BY 1, 2)
-          SELECT cust AS o_custkey, CAST(rn AS INT) AS rank, rec AS item,
-                 score, n_paths FROM (
-            SELECT *, row_number() OVER (PARTITION BY cust
-                        ORDER BY score DESC, rec) AS rn
-            FROM scored)
-          WHERE rn <= $k"""
-    },
-
-    "q223_pq_codes" -> pqCodesSql,
-
-    // q234 = q223 as a stream-static enrich: append-mode emission set
-    // IS the batch assignment, so the oracle is shared verbatim
-    "q234_stream_pq_assign" -> pqCodesSql,
-
-    // q235 — the decomposition must equal quantile_cont over the
-    // LITERALLY weight-expanded multiset (unnest(generate_series)).
-    // quantile params are forced DOUBLE so pos = q·(n−1) is the same
-    // double product the Spark side computes.
-    "q235_weighted_quantiles" -> {
-      val qs = Queries.WqQuantiles.map(q =>
-        s"SELECT g, CAST($q AS DOUBLE) AS q, " +
-          s"quantile_cont(v, CAST($q AS DOUBLE)) AS quantile FROM ex GROUP BY g")
-        .mkString(" UNION ALL ")
-      s"""WITH x AS (SELECT l_returnflag AS g,
-                      CAST(CAST(l_extendedprice AS DECIMAL(18,2)) AS DOUBLE) AS v,
-                      CAST(l_quantity AS BIGINT) AS w
-               FROM lineitem WHERE l_quantity > 0),
-          ex AS (SELECT g, v FROM
-                   (SELECT g, v, unnest(generate_series(1, w)) FROM x)),
-          tw AS (SELECT g, CAST(SUM(w) AS BIGINT) AS total_weight
-                 FROM x GROUP BY 1),
-          qs AS ($qs)
-          SELECT qs.g AS l_returnflag, qs.q, tw.total_weight, qs.quantile
-          FROM qs JOIN tw USING (g)"""
-    },
-
-    // q238 — both zone maps rebuilt in SQL: the flat walk on global
-    // bounds and the per-range walk on per-range bounds (the SAME
-    // reusable CTE chain, different grids), raw-coordinate bounds, the
-    // probe intersection counts joined per probe. SUMs are cast back
-    // from HUGEINT.
-    "q238_hilbert_two_level" -> {
-      val q = 1L << Queries.ZQBits
-      val blk = 1L << Queries.ZBlockShift
-      val onb = 1L << Queries.ObBits
-      val last = Queries.ZQBits
-      val probeRows = Queries.TwoLevelProbes.map { case (i, xlo, xhi, ylo, yhi) =>
-        s"($i, CAST($xlo AS BIGINT), CAST($xhi AS BIGINT), CAST($ylo AS BIGINT), CAST($yhi AS BIGINT))"
-      }.mkString(", ")
-      s"""WITH b AS (SELECT o_custkey AS rx,
-                date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS ry
-              FROM orders
-              WHERE o_custkey IS NOT NULL AND o_orderdate IS NOT NULL),
-          s AS (SELECT MIN(rx) AS minx, MAX(rx) AS maxx,
-                       MIN(ry) AS miny, MAX(ry) AS maxy FROM b),
-          h0 AS (SELECT rx, ry, bx, by, bx AS x, by AS y,
-                        CAST(0 AS BIGINT) AS d FROM
-                  (SELECT rx, ry,
-                          ((rx - minx) * $q) // (maxx - minx + 1) AS bx,
-                          ((ry - miny) * $q) // (maxy - miny + 1) AS by
-                   FROM b, s)),
-          ${hilbertWalkCtes("h", "rx, ry,")},
-          mflat AS (SELECT d // $blk AS block, COUNT(*) AS n_rows,
-                           MIN(rx) AS min_x, MAX(rx) AS max_x,
-                           MIN(ry) AS min_y, MAX(ry) AS max_y
-                    FROM h$last GROUP BY 1),
-          gs AS (SELECT MIN(ry) AS gminy, MAX(ry) AS gmaxy FROM b),
-          ob0 AS (SELECT rx, ry,
-                         ((ry - gminy) * $onb) // (gmaxy - gminy + 1) AS ob
-                  FROM b, gs),
-          pb AS (SELECT ob, MIN(rx) AS pminx, MAX(rx) AS pmaxx,
-                        MIN(ry) AS pminy, MAX(ry) AS pmaxy
-                 FROM ob0 GROUP BY 1),
-          t0 AS (SELECT ob, rx, ry, bx, by, bx AS x, by AS y,
-                        CAST(0 AS BIGINT) AS d FROM
-                  (SELECT ob0.ob, rx, ry,
-                          ((rx - pminx) * $q) // (pmaxx - pminx + 1) AS bx,
-                          ((ry - pminy) * $q) // (pmaxy - pminy + 1) AS by
-                   FROM ob0 JOIN pb USING (ob))),
-          ${hilbertWalkCtes("t", "ob, rx, ry,")},
-          mtwo AS (SELECT ob, d // $blk AS block, COUNT(*) AS n_rows,
-                          MIN(rx) AS min_x, MAX(rx) AS max_x,
-                          MIN(ry) AS min_y, MAX(ry) AS max_y
-                   FROM t$last GROUP BY 1, 2),
-          probes(probe_id, xlo, xhi, ylo, yhi) AS
-            (SELECT * FROM (VALUES $probeRows)),
-          tf AS (SELECT probe_id, COUNT(m.block) AS blocks_flat,
-                        CAST(COALESCE(SUM(m.n_rows), 0) AS BIGINT) AS rows_flat
-                 FROM probes p LEFT JOIN mflat m
-                   ON p.xlo <= m.max_x AND m.min_x <= p.xhi
-                  AND p.ylo <= m.max_y AND m.min_y <= p.yhi
-                 GROUP BY 1),
-          tt AS (SELECT probe_id, COUNT(m.block) AS blocks_two,
-                        CAST(COALESCE(SUM(m.n_rows), 0) AS BIGINT) AS rows_two
-                 FROM probes p LEFT JOIN mtwo m
-                   ON p.xlo <= m.max_x AND m.min_x <= p.xhi
-                  AND p.ylo <= m.max_y AND m.min_y <= p.yhi
-                 GROUP BY 1)
-          SELECT probe_id, blocks_flat, rows_flat, blocks_two, rows_two
-          FROM tf JOIN tt USING (probe_id)"""
-    },
-
-    // q239 — the q33 probe CTEs (centroid cosine, top-nprobe lists per
-    // query) restrict the q237 ADC scoring to probed-list members; the
-    // same per-subspace MIN-CASE pivots fix the 4-term addition order.
-    "q239_ivf_pq_search" -> {
-      import graft.functions.Lsh.Dim
-      val subDim = Dim / Queries.PqSub
-      val adcSum = (0 until Queries.PqSub).map(i =>
-        s"MIN(CASE WHEN subspace = $i THEN d2 END)").mkString(" + ")
-      s"""WITH $pqCtes,
-          en AS (SELECT vec_id, label,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-                        $nrmSql AS nrm
-                 FROM embeddings),
-          q AS (SELECT vec_id AS query_id, v AS qe, nrm AS qn
-                FROM en WHERE vec_id < ${Queries.AnnQueryMaxId}),
-          cent AS (
-            SELECT label, array_agg(CAST(s AS DOUBLE) ORDER BY i) AS centroid
-            FROM (SELECT label, i,
-                         SUM(CAST(v[i] AS DECIMAL(20,10))) AS s
-                  FROM en, (SELECT unnest(generate_series(1, $Dim)) AS i) g
-                  WHERE vec_id >= ${Queries.AnnQueryMaxId}
-                  GROUP BY 1, 2)
-            GROUP BY label),
-          pr AS (
-            SELECT query_id, label FROM (
-              SELECT query_id, label,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY ccos DESC, label) AS lr
-              FROM (SELECT q.query_id, cent.label,
-                           ${dotSql("qe", "centroid")}
-                             / (q.qn * sqrt(${dotSql("centroid", "centroid")})) AS ccos
-                    FROM q, cent))
-            WHERE lr <= ${Queries.IvfNProbe}),
-          qq AS (SELECT vec_id AS query_id, v FROM emb
-                 WHERE vec_id < ${Queries.AnnQueryMaxId}),
-          qsub AS (SELECT query_id, sp.subspace,
-                          list_slice(v, sp.subspace * $subDim + 1,
-                                     (sp.subspace + 1) * $subDim) AS qsv
-                   FROM qq, sp),
-          lut AS (SELECT query_id, qsub.subspace, code,
-                         list_reduce(list_transform(
-                           generate_series(1, $subDim),
-                           i -> (qsv[i] - cent[i]) * (qsv[i] - cent[i])),
-                           (a, b) -> a + b) AS d2
-                  FROM qsub JOIN cents ON qsub.subspace = cents.subspace),
-          cand AS (SELECT pr.query_id, en2.vec_id
-                   FROM pr JOIN (SELECT vec_id, label FROM en
-                                 WHERE vec_id >= ${Queries.AnnQueryMaxId}) en2
-                     USING (label)),
-          corp AS (SELECT vec_id, subspace, code FROM codes
-                   WHERE vec_id >= ${Queries.AnnQueryMaxId}),
-          j AS (SELECT cand.query_id, cand.vec_id, corp.subspace, d2
-                FROM cand JOIN corp ON corp.vec_id = cand.vec_id
-                          JOIN lut ON lut.query_id = cand.query_id
-                                  AND lut.subspace = corp.subspace
-                                  AND lut.code = corp.code),
-          sq AS (SELECT query_id, vec_id,
-                        $adcSum AS adc_dist2
-                 FROM j GROUP BY 1, 2)
-          SELECT query_id, rank, vec_id, adc_dist2 FROM (
-            SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-                        ORDER BY adc_dist2, vec_id) AS BIGINT) AS rank
-            FROM sq)
-          WHERE rank <= ${Queries.AnnK}"""
-    },
-
-    // q240 — the maintained view must equal the full recompute over
-    // (base ∖ retracted) ∪ inserted: kept rows are exactly those NOT
-    // (pre-watermark AND retraction-tagged).
-    "q240_ivm_signed" -> ivmSql,
-
-    // q245 — the streaming sink's final view must equal the batch IVM
-    // result, which equals the full recompute: one oracle gates both.
-    "q245_stream_ivm" -> ivmSql,
-
-    // q241 — both CMS counter sets rebuilt cell-for-cell (the q94 bucket
-    // algebra on `k mod P` fingerprints), per-depth inner products, min
-    // bound, and the exact join size from per-key count products.
-    "q241_join_size_cms" -> {
-      import graft.functions.{Lsh, Sketches}
-      val d = Queries.CmsDepth
-      val wdt = Queries.CmsWidth
-      def counters(src: String, name: String) = {
-        val buckets = (0 until d).map(i =>
-          s"((${Lsh.A(i)} * f + ${Lsh.B(i)}) % ${Sketches.P}) % $wdt AS b$i")
-          .mkString(", ")
-        s"""${name}0 AS (SELECT $buckets
-                         FROM (SELECT k % ${Sketches.P} AS f FROM $src)),
-            $name AS (SELECT d, bucket, COUNT(*) AS cnt FROM (
-                ${(0 until d).map(i =>
-                  s"SELECT $i AS d, b$i AS bucket FROM ${name}0")
-                  .mkString(" UNION ALL ")})
-              GROUP BY 1, 2)"""
-      }
-      s"""WITH ea AS (SELECT user_id AS k FROM events),
-          ob AS (SELECT o_custkey AS k FROM orders),
-          ${counters("ea", "ca")},
-          ${counters("ob", "cb")},
-          dots AS (SELECT ca.d, CAST(SUM(ca.cnt * cb.cnt) AS BIGINT) AS dot
-                   FROM ca JOIN cb ON ca.d = cb.d AND ca.bucket = cb.bucket
-                   GROUP BY 1),
-          est AS (SELECT MIN(dot) AS est_join_size FROM dots),
-          ex AS (SELECT CAST(COALESCE(SUM(na * nb), 0) AS BIGINT)
-                          AS exact_join_size
-                 FROM (SELECT k, COUNT(*) AS na FROM ea GROUP BY 1) a
-                 JOIN (SELECT k, COUNT(*) AS nb FROM ob GROUP BY 1) b
-                   USING (k))
-          SELECT d, dot, est_join_size, exact_join_size FROM dots, est, ex"""
-    },
-
-    // q242 — the ORC write/read round-trips the same rows the oracle
-    // reads from parquet; the gate proves format fidelity (timestamps,
-    // doubles, strings) plus the filtered aggregate.
-    "q242_orc_roundtrip" ->
-      s"""SELECT l_returnflag, COUNT(*) AS n_items,
-                 CAST(SUM($discTerm) AS DOUBLE) AS revenue
-          FROM lineitem
-          WHERE l_shipdate >= TIMESTAMP '${Queries.OrcShipLo}'
-            AND l_shipdate < TIMESTAMP '${Queries.OrcShipHi}'
-          GROUP BY 1""",
-
-    // q244 — both SCD2 histories as lead-window CTEs (the q03/q16
-    // contract), joined on the entity with the null-aware overlap
-    // residual; segment bounds via greatest / null-as-infinity least.
-    "q244_temporal_align" -> {
-      def hist(par: Int, attr: String, f: String, t: String) =
-        s"""SELECT user_id, event_type AS $attr, ts AS $f,
-                   lead(ts) OVER (PARTITION BY user_id
-                                  ORDER BY ts, event_id) AS $t
-            FROM events WHERE event_id % 2 = $par"""
-      s"""WITH a AS (${hist(0, "a_type", "af", "a_to")}),
-          b AS (${hist(1, "b_type", "bf", "b_to")})
-          SELECT a.user_id, a_type, b_type,
-                 greatest(af, bf) AS valid_from,
-                 CASE WHEN a_to IS NULL THEN b_to
-                      WHEN b_to IS NULL THEN a_to
-                      ELSE least(a_to, b_to) END AS valid_to
-          FROM a JOIN b ON a.user_id = b.user_id
-          WHERE (b_to IS NULL OR af < b_to)
-            AND (a_to IS NULL OR bf < a_to)"""
-    },
-
-    // q247 — the maintained join-agg view must equal q08's report over
-    // the delta-modified fact set: kept lineitems are NOT (pre-cut AND
-    // retraction-tagged).
-    "q247_ivm_join_agg" ->
-      s"""SELECT r_name AS region, n_name AS nation,
-                 COUNT(*) AS n_items,
-                 CAST(SUM($discTerm) AS DOUBLE) AS revenue
-          FROM lineitem
-          JOIN orders   ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN nation   ON c_nationkey = n_nationkey
-          JOIN region   ON n_regionkey = r_regionkey
-          WHERE l_shipdate >= TIMESTAMP '${Queries.IvmJoinCutTs}'
-             OR l_linenumber % ${Queries.IvmJoinDeleteMod} <> 0
-          GROUP BY 1, 2""",
-
-    // q255 — the CSV round-trip must reproduce the same rows the oracle
-    // reads from parquet (shortest-round-trip doubles survive the text
-    // format; zero rescued rows enforced in-plan on the Spark side).
-    "q255_csv_roundtrip" ->
-      """SELECT l_returnflag, COUNT(*) AS n_items,
-                CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-                CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-                  AS sum_price
-         FROM lineitem GROUP BY 1""",
-
-    // q249 — the maintained view must equal the star report over the
-    // UPDATED dimension (moved customers re-attributed to their new
-    // nation's row; DuckDB % on positive ints ≡ Spark pmod here).
-    "q249_ivm_dim_change" ->
-      s"""SELECT r_name AS region, n_name AS nation,
-                 COUNT(*) AS n_items,
-                 CAST(SUM($discTerm) AS DOUBLE) AS revenue
-          FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN (SELECT c_custkey,
-                       CASE WHEN c_custkey % ${Queries.DimChangeMod} = 0
-                            THEN (c_nationkey + ${Queries.DimChangeShift}) % 25
-                            ELSE c_nationkey END AS c_nationkey
-                FROM customer) c ON o_custkey = c_custkey
-          JOIN nation ON c_nationkey = n_nationkey
-          JOIN region ON n_regionkey = r_regionkey
-          GROUP BY 1, 2""",
-
-    // q248 — the same ordered type string (string_agg ORDER BY ts,
-    // event_id ≡ the array_sort struct walk), the same enforced
-    // per-user event cap (whole-user quarantine — semantics agree at
-    // every SF whether or not it binds) and the same RE2/Java-agreeing
-    // greedy non-overlapping extraction.
-    "q248_pattern_match" -> {
-      val lens = "list_transform(ms, x -> CAST(len(x) AS BIGINT))"
-      s"""WITH s AS (SELECT user_id,
-                 string_agg(substring(event_type, 1, 1), ''
-                            ORDER BY ts, event_id) AS s
-               FROM events GROUP BY 1
-               HAVING COUNT(*) <= ${Queries.JourneyMaxEvents}),
-          m AS (SELECT user_id,
-                       regexp_extract_all(s, '${Queries.JourneyRe}') AS ms
-                FROM s)
-          SELECT user_id, CAST(len(ms) AS BIGINT) AS n_matches,
-                 CAST(CASE WHEN len(ms) = 0 THEN 0 ELSE
-                   list_reduce($lens, (a, b) -> a + b) END
-                   AS BIGINT) AS matched_len,
-                 CAST(CASE WHEN len(ms) = 0 THEN 0 ELSE
-                   list_reduce($lens, (a, b) -> greatest(a, b)) END
-                   AS BIGINT) AS max_run
-          FROM m"""
-    },
-
-    // q246 — the full residual chain replayed: exact-decimal means,
-    // residual transform, residual codebook + codes (row_number argmin
-    // tie-broken on code), L2-to-mean probe (tie on label), per-(query,
-    // probed-list) LUTs, per-subspace MIN-CASE pivot fixing the 4-term
-    // addition order, vec_id tiebreak on the final rank.
-    "q246_ivf_pq_residual" ->
-      s"""WITH ${resAdcRankedCtes(0)}
-          SELECT query_id, rank, vec_id, adc_dist2 FROM radck
-          WHERE rank <= ${Queries.AnnK}""",
-
-    // q259 — the TRAINED chain: the identical final SELECT over the
-    // CTE list with ResTrainIters Lloyd rounds spliced between the
-    // seed codebook and the encode.
-    "q259_pq_trained" ->
-      s"""WITH ${resAdcRankedCtes(Queries.ResTrainIters)}
-          SELECT query_id, rank, vec_id, adc_dist2 FROM radck
-          WHERE rank <= ${Queries.AnnK}""",
-
-    // q257 — the residual chain's OWN recall row (q254 measures the raw
-    // codebook; this measures what q246 claims to fix): the shared
-    // residual-ADC ranked CTE against the same exact-L2 ground truth.
-    "q257_residual_recall" -> residualRecallSql(0),
-
-    // q260 — the recall row of the TRAINED chain (the q254→q257→q259
-    // arc's measurement): same ground truth, q259's candidates.
-    "q260_trained_recall" -> residualRecallSql(Queries.ResTrainIters),
-
-    // q270 — the planted-mixture fixture's own clustered-regime
-    // evidence: per-list size, quantized mean within-d², min inter-mean
-    // d² (separation ≫ spread is what makes q271/q272 meaningful)
-    "q270_cfx_fixture" -> {
-      import graft.functions.Lsh.Dim
-      val S = operators.Ivf.MeanQuantScale
-      s"""WITH $cfxEmbCte,
-          ccorp AS (SELECT vec_id, label, v FROM cemb
-                    WHERE vec_id >= ${Queries.AnnQueryMaxId}),
-          cmean AS (SELECT label, array_agg(m ORDER BY i) AS centroid FROM (
-                      SELECT label, i,
-                             CAST(SUM(CAST(floor(v[i] * $S) AS BIGINT))
-                               AS DOUBLE)
-                               / CAST(COUNT(*) * $S AS DOUBLE) AS m
-                      FROM ccorp,
-                           (SELECT unnest(generate_series(1, $Dim)) AS i) g
-                      GROUP BY 1, 2)
-                    GROUP BY label),
-          wd AS (SELECT ccorp.label,
-                        list_reduce(list_transform(
-                          generate_series(1, $Dim),
-                          i -> (v[i] - centroid[i]) * (v[i] - centroid[i])),
-                          (x, y) -> x + y) AS d2
-                 FROM ccorp JOIN cmean USING (label)),
-          w AS (SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vecs,
-                       CAST(SUM(CAST(floor(d2 * $S) AS BIGINT)) AS DOUBLE)
-                         / CAST(COUNT(*) * $S AS DOUBLE) AS avg_within_d2
-                FROM wd GROUP BY 1),
-          inter AS (SELECT a.label,
-                           MIN(list_reduce(list_transform(
-                             generate_series(1, $Dim),
-                             i -> (a.centroid[i] - b.centroid[i]) *
-                                  (a.centroid[i] - b.centroid[i])),
-                             (x, y) -> x + y)) AS min_inter_d2
-                    FROM cmean a JOIN cmean b ON a.label <> b.label
-                    GROUP BY 1)
-          SELECT CAST(w.label AS BIGINT) AS label, n_vecs,
-                 avg_within_d2, min_inter_d2
-          FROM w JOIN inter ON w.label = inter.label"""
-    },
-
-    // q271/q272 — the operating-point pair: identical fixture, budget,
-    // training and probing; the encode (residual vs raw) is the only
-    // difference, so the recall gap IS the residual transform's value
-    // on clustered data
-    "q271_cfx_trained_recall" -> cfxRecallSql(encodeRaw = false),
-    "q272_cfx_raw_recall" -> cfxRecallSql(encodeRaw = true),
-
-    // q273 — the naive witness: every 16-char window materialized and
-    // grouped by its TEXT (the 16× key blow-up the prefix-doubling
-    // plan exists to avoid), then q125's island merge on coverage
-    "q273_suffix_spans" -> {
-      val L = Queries.SuffixWindow
-      val mc = Queries.SuffixMaxChars
-      s"""WITH d AS (SELECT doc_id, substr(text, 1, $mc) AS t
-                     FROM documents
-                     WHERE text IS NOT NULL
-                       AND length(substr(text, 1, $mc)) >= $L),
-          w AS (SELECT doc_id, CAST(i AS BIGINT) AS i,
-                       substr(t, CAST(i AS INT), $L) AS win
-                FROM d, LATERAL (SELECT unnest(generate_series(1,
-                       length(t) - ${L - 1})) AS i) g),
-          rep AS (SELECT win FROM w GROUP BY win HAVING COUNT(*) >= 2),
-          hits AS (SELECT doc_id, i, i + ${L - 1} AS e
-                   FROM w JOIN rep USING (win)),
-          isl AS (SELECT doc_id, i, e,
-                         CASE WHEN i > COALESCE(MAX(e) OVER (
-                                PARTITION BY doc_id ORDER BY i
-                                ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING), -1) + 1
-                              THEN 1 ELSE 0 END AS nw
-                  FROM hits),
-          sp AS (SELECT doc_id, i, e,
-                        SUM(nw) OVER (PARTITION BY doc_id ORDER BY i
-                          ROWS UNBOUNDED PRECEDING) AS island
-                 FROM isl)
-          SELECT doc_id, MIN(i) AS span_start, MAX(e) AS span_end,
-                 MAX(e) - MIN(i) + 1 AS span_chars
-          FROM sp GROUP BY doc_id, island"""
-    },
-
-    // q274 — the same per-language interpolated-KN model, the same
-    // log-free integer floor of −log2 P (bitlen(den // num) − 1 — no
-    // floating point until the final int/int division), same ntile
-    "q274_kn_perplexity" ->
-      s"""WITH d AS (SELECT doc_id, lang, $ws AS w
-                     FROM documents
-                     WHERE text IS NOT NULL AND lang IS NOT NULL
-                       AND len($ws) >= 2),
-          tr AS (SELECT doc_id, lang, w[i] AS v, w[i+1] AS wd
-                 FROM d, LATERAL (SELECT unnest(generate_series(1,
-                        len(w) - 1)) AS i) g),
-          cvw AS (SELECT lang, v, wd, CAST(COUNT(*) AS BIGINT) AS n_vw
-                  FROM tr GROUP BY 1, 2, 3),
-          cv AS (SELECT lang, v, CAST(SUM(n_vw) AS BIGINT) AS n_v,
-                        CAST(COUNT(*) AS BIGINT) AS n1_right
-                 FROM cvw GROUP BY 1, 2),
-          n1l AS (SELECT lang, wd, CAST(COUNT(*) AS BIGINT) AS n1_left
-                  FROM cvw GROUP BY 1, 2),
-          nb AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS nb
-                 FROM cvw GROUP BY 1),
-          sc AS (SELECT tr.doc_id, tr.lang,
-                        GREATEST(4 * n_vw - 3, 0) * nb.nb
-                          + 3 * n1_right * n1_left AS num,
-                        4 * n_v * nb.nb AS den
-                 FROM tr JOIN cvw USING (lang, v, wd)
-                         JOIN cv USING (lang, v)
-                         JOIN n1l USING (lang, wd)
-                         JOIN nb USING (lang)),
-          pd AS (SELECT doc_id, lang,
-                        CAST(COUNT(*) AS BIGINT) AS n_transitions,
-                        CAST(SUM(length(bin(den // num)) - 1) AS BIGINT)
-                          AS total_bits
-                 FROM sc GROUP BY 1, 2),
-          bk AS (SELECT *, CAST(total_bits AS DOUBLE)
-                             / CAST(n_transitions AS DOUBLE)
-                             AS bits_per_token FROM pd)
-          SELECT doc_id, lang, n_transitions, total_bits, bits_per_token,
-                 CAST(ntile(3) OVER (PARTITION BY lang
-                        ORDER BY bits_per_token, doc_id) AS BIGINT)
-                   AS ppl_bucket
-          FROM bk""",
-
-
-    // q237 — ADC replay: the same codes CTE as q223, a per-query LUT of
-    // subspace distances (list_reduce fold ≡ the driver's fold from
-    // 0.0), the 4-term sum pivoted per subspace so the addition order
-    // is FIXED (a hash-agg SUM over subspaces would be order-unstable
-    // in the last ulp), row_number tiebreak on vec_id.
-    "q237_pq_adc_topk" ->
-      s"""WITH $pqAdcRankedCtes
-          SELECT query_id, rank, vec_id, adc_dist2 FROM adck
-          WHERE rank <= ${Queries.AnnK}""",
-
-    // q254 — exact L2 top-k (the same fixed-fold distance, vec_id
-    // tiebreak) left-joined against the q237 ADC top-k from the SHARED
-    // ranked CTE chain; per-query hit counts and recall@k.
-    "q254_pq_recall" -> {
-      import graft.functions.Lsh.Dim
-      s"""WITH $pqAdcRankedCtes,
-          corpv AS (SELECT vec_id, v FROM emb
-                    WHERE vec_id >= ${Queries.AnnQueryMaxId}),
-          exact AS (SELECT query_id, corpv.vec_id,
-                           list_reduce(list_transform(
-                             generate_series(1, $Dim),
-                             i -> (qq.v[i] - corpv.v[i]) *
-                                  (qq.v[i] - corpv.v[i])),
-                             (a, b) -> a + b) AS d2
-                    FROM qq, corpv),
-          ext AS (SELECT query_id, vec_id FROM (
-                    SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY d2, vec_id) AS rk
-                    FROM exact)
-                  WHERE rk <= ${Queries.AnnK}),
-          hits AS (SELECT e.query_id,
-                          CAST(SUM(CASE WHEN a.vec_id IS NOT NULL
-                                        THEN 1 ELSE 0 END) AS BIGINT)
-                            AS n_hits
-                   FROM ext e LEFT JOIN (SELECT query_id, vec_id FROM adck
-                                         WHERE rank <= ${Queries.AnnK}) a
-                     ON e.query_id = a.query_id AND e.vec_id = a.vec_id
-                   GROUP BY 1)
-          SELECT query_id, n_hits,
-                 CAST(n_hits AS DOUBLE) / ${Queries.AnnK} AS recall
-          FROM hits"""
-    },
-
-
-    "q224_kn_counts" ->
-      // distinct bigram TYPES from the zipped-slice walk; continuation
-      // counts are two hash-aggs over that table
-      s"""WITH toks AS (SELECT string_split(text, ' ') AS ws FROM documents
-                        WHERE text IS NOT NULL),
-          uni AS (SELECT unnest(ws) AS word FROM toks),
-          uc AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS n_tokens
-                 FROM uni GROUP BY 1),
-          bg AS (SELECT DISTINCT unnest(ws[1:len(ws)-1]) AS word_a,
-                                 unnest(ws[2:len(ws)])   AS word_b
-                 FROM toks WHERE len(ws) >= 2),
-          lt AS (SELECT word_b AS word, CAST(COUNT(*) AS BIGINT)
-                   AS n_left_types FROM bg GROUP BY 1),
-          rt AS (SELECT word_a AS word, CAST(COUNT(*) AS BIGINT)
-                   AS n_right_types FROM bg GROUP BY 1),
-          tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_bigram_types FROM bg)
-          SELECT uc.word, uc.n_tokens,
-                 COALESCE(lt.n_left_types, 0) AS n_left_types,
-                 COALESCE(rt.n_right_types, 0) AS n_right_types,
-                 CAST(COALESCE(lt.n_left_types, 0) AS DOUBLE)
-                   / CAST(tot.n_bigram_types AS DOUBLE) AS p_continuation
-          FROM uc LEFT JOIN lt ON uc.word = lt.word
-                  LEFT JOIN rt ON uc.word = rt.word
-          CROSS JOIN tot
-          WHERE uc.n_tokens >= ${Queries.KnMinTokens}""",
-
-    "q225_bpe_merges" -> {
-      // the sequential merge procedure unrolled: per round, weighted
-      // adjacent-pair counts (zipped parallel unnests) → 1-row argmax →
-      // left-to-right substring replace (≡ java String.replace)
-      val rounds = (1 to Queries.BpeMergeRounds).map { r =>
-        s"""p$r AS (SELECT a, b, CAST(SUM(n) AS BIGINT) AS cnt FROM (
-               SELECT unnest(sy[1:len(sy)-1]) AS a,
-                      unnest(sy[2:len(sy)]) AS b, n
-               FROM (SELECT string_split(trim(s), ' ') AS sy, n FROM s${r - 1})
-               WHERE len(sy) >= 2)
-             GROUP BY 1, 2),
-          b$r AS (SELECT a, b, cnt FROM p$r
-                  ORDER BY cnt DESC, a, b LIMIT 1),
-          s$r AS MATERIALIZED (SELECT replace(s,
-                    ' ' || (SELECT a FROM b$r) || ' '
-                        || (SELECT b FROM b$r) || ' ',
-                    ' ' || (SELECT a FROM b$r)
-                        || (SELECT b FROM b$r) || ' ') AS s, n
-                  FROM s${r - 1})"""
-      }.mkString(",\n          ")
-      val out = (1 to Queries.BpeMergeRounds).map { r =>
-        s"SELECT CAST($r AS INT) AS round, a AS sym_a, b AS sym_b, cnt AS pair_count FROM b$r"
-      }.mkString("\nUNION ALL ")
-      s"""WITH w0 AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS n FROM (
-              SELECT unnest(string_split(text, ' ')) AS w
-              FROM documents WHERE text IS NOT NULL)
-            WHERE len(w) > 0 GROUP BY 1),
-          s0 AS (SELECT ' ' || array_to_string(
-                   list_transform(generate_series(1, length(w)), i -> w[i]),
-                   ' ') || ' ' AS s, n
-                 FROM w0),
-          $rounds
-          $out"""
-    },
-
-    "q233_colloc_spans" -> {
-      val (m, p) = (Queries.PmiMinMarginal, Queries.PmiMinPair)
-      // the lift-driven merge procedure unrolled (q225's shape with
-      // q215's statistics): per round, adjacent-pair lift over the
-      // current symbol strings → 1-row argmax on the quantized integer
-      // key → left-to-right replace; HUGEINT ≡ DECIMAL(38,0)
-      val rounds = (1 to Queries.SpanRounds).map { r =>
-        s"""p$r AS MATERIALIZED (SELECT a, b, CAST(COUNT(*) AS BIGINT) AS n_ab FROM (
-               SELECT unnest(sy[1:len(sy)-1]) AS a,
-                      unnest(sy[2:len(sy)]) AS b
-               FROM (SELECT string_split(trim(s), ' ') AS sy FROM s${r - 1})
-               WHERE len(sy) >= 2)
-             GROUP BY 1, 2),
-          l$r AS (SELECT a, CAST(SUM(n_ab) AS BIGINT) AS nl FROM p$r GROUP BY 1),
-          r$r AS (SELECT b, CAST(SUM(n_ab) AS BIGINT) AS nr FROM p$r GROUP BY 1),
-          t$r AS (SELECT CAST(SUM(n_ab) AS BIGINT) AS nt FROM p$r),
-          b$r AS MATERIALIZED (SELECT a, b, n_ab,
-                         CAST(CAST(n_ab AS HUGEINT) * nt AS DOUBLE)
-                           / CAST(CAST(nl AS HUGEINT) * nr AS DOUBLE) AS lift
-                  FROM p$r JOIN l$r USING (a) JOIN r$r USING (b)
-                  CROSS JOIN t$r
-                  WHERE n_ab >= $p AND nl >= $m AND nr >= $m
-                  ORDER BY (CAST(n_ab AS HUGEINT) * nt * 1048576)
-                             // (CAST(nl AS HUGEINT) * nr) DESC, a, b
-                  LIMIT 1),
-          s$r AS MATERIALIZED (SELECT replace(s,
-                    ' ' || (SELECT a FROM b$r) || ' '
-                        || (SELECT b FROM b$r) || ' ',
-                    ' ' || (SELECT a FROM b$r) || chr(1)
-                        || (SELECT b FROM b$r) || ' ') AS s
-                  FROM s${r - 1})"""
-      }.mkString(",\n          ")
-      val out = (1 to Queries.SpanRounds).map { r =>
-        s"""SELECT CAST($r AS INT) AS round,
-                   replace(a, chr(1), ' ') AS span_a,
-                   replace(b, chr(1), ' ') AS span_b, n_ab, lift FROM b$r"""
-      }.mkString("\nUNION ALL ")
-      s"""WITH s0 AS MATERIALIZED (SELECT ' ' || text || ' ' AS s
-                      FROM documents
-                      WHERE text IS NOT NULL),
-          $rounds
-          $out"""
-    },
-
-    "q232_scc" ->
-      // mutual-reachability closure: node u and v share an SCC iff each
-      // reaches the other; scc_id = MIN over the mutual set (includes
-      // self) — a different algorithm than the operator's coloring,
-      // agreeing label-for-label
-      s"""WITH RECURSIVE $sccClosureCtes
-          SELECT scc.node AS item, scc.scc_id, sz.scc_size
-          FROM scc JOIN sz USING (scc_id)""",
-
-    "q236_scc_condensation" ->
-      // condensation edges off the same closure; depth = longest path
-      // in the contracted DAG via a UNION-deduped recursive walk —
-      // finite exactly because the condensation is acyclic
-      s"""WITH RECURSIVE $sccClosureCtes,
-            ce AS (SELECT DISTINCT s1.scc_id AS s, s2.scc_id AS d
-                   FROM e JOIN scc s1 ON e.s = s1.node
-                          JOIN scc s2 ON e.d = s2.node
-                   WHERE s1.scc_id <> s2.scc_id),
-            walk(c, dep) AS (
-              SELECT scc_id, CAST(0 AS BIGINT) FROM sz
-              UNION
-              SELECT ce.d, walk.dep + 1 FROM walk JOIN ce ON ce.s = walk.c),
-            dp AS (SELECT c AS scc_id, MAX(dep) AS depth FROM walk GROUP BY 1)
-          SELECT dp.scc_id, sz.scc_size, dp.depth
-          FROM dp JOIN sz USING (scc_id)""",
-
-    "q230_hilbert_layout" ->
-      // the pruned read-back vs the UNPARTITIONED table: the block list
-      // is a superset access path (exact predicate re-applied), so the
-      // oracle is just the rectangle filter on raw orders
-      """SELECT o_orderpriority, COUNT(*) AS n_orders,
-                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                  AS revenue
-         FROM orders
-         WHERE o_custkey BETWEEN 0 AND 119
-           AND CAST(o_orderdate AS DATE)
-               BETWEEN DATE '1996-01-01' AND DATE '1996-12-31'
-         GROUP BY 1""")
-
-  /** The `maxHops`-round unrolled BFS frontier expansion (mirrors
-    * Bfs.hops: round r reveals neighbors of hop-(r−1) vertices at hop r,
-    * a per-vertex MIN absorbs re-discoveries; the source is the
-    * (max-degree, min-id) hub — mirrors Bfs.maxDegreeHub).
-    */
-  private def bfsSql(maxHops: Int): String = {
-    val steps = (1 to maxHops).map { r =>
-      s"""d$r AS MATERIALIZED (SELECT n, MIN(hop) AS hop FROM (
-              SELECT n, hop FROM d${r - 1}
-              UNION ALL
-              SELECT und.v AS n, $r AS hop
-              FROM d${r - 1} f JOIN und ON und.u = f.n
-              WHERE f.hop = ${r - 1})
-            GROUP BY 1)"""
-    }.mkString(",\n          ")
-    s"""WITH items AS MATERIALIZED (SELECT DISTINCT l_orderkey AS b,
-                                           l_partkey AS i
-                       FROM lineitem),
-         e0 AS MATERIALIZED (SELECT a.i AS x, b2.i AS y
-               FROM items a JOIN items b2 ON a.b = b2.b AND a.i < b2.i
-               GROUP BY 1, 2),
-         und AS MATERIALIZED (SELECT x AS u, y AS v FROM e0
-               UNION ALL SELECT y, x FROM e0),
-         deg AS (SELECT n, COUNT(*) AS deg
-                 FROM (SELECT x AS n FROM e0 UNION ALL SELECT y FROM e0)
-                 GROUP BY 1),
-         hub AS (SELECT n FROM deg ORDER BY deg DESC, n ASC LIMIT 1),
-         d0 AS (SELECT n, 0 AS hop FROM hub),
-         $steps
-         SELECT n AS node, CAST(hop AS BIGINT) AS hop FROM d$maxHops"""
-  }
-
-  /** The `rounds`-round unrolled synchronous label propagation (mirrors
-    * LabelProp.propagate: per round each vertex adopts its neighbors'
-    * modal label, ties to the SMALLEST label).
-    */
-  private def lpaSql(rounds: Int): String = {
-    val steps = (1 to rounds).map { r =>
-      s"""l$r AS MATERIALIZED (SELECT n, lbl FROM (
-              SELECT u.u AS n, l.lbl, COUNT(*) AS cnt,
-                     ROW_NUMBER() OVER (PARTITION BY u.u
-                       ORDER BY COUNT(*) DESC, l.lbl ASC) AS rn
-              FROM und u JOIN l${r - 1} l ON l.n = u.v
-              GROUP BY 1, 2) WHERE rn = 1)"""
-    }.mkString(",\n          ")
-    s"""WITH items AS MATERIALIZED (SELECT DISTINCT l_orderkey AS b,
-                                           l_partkey AS i
-                       FROM lineitem),
-         e0 AS MATERIALIZED (SELECT a.i AS x, b2.i AS y
-               FROM items a JOIN items b2 ON a.b = b2.b AND a.i < b2.i
-               GROUP BY 1, 2),
-         und AS MATERIALIZED (SELECT x AS u, y AS v FROM e0
-               UNION ALL SELECT y, x FROM e0),
-         l0 AS (SELECT DISTINCT u AS n, u AS lbl FROM und),
-         $steps
-         SELECT lbl AS community, CAST(COUNT(*) AS BIGINT) AS n_members
-         FROM l$rounds GROUP BY 1"""
-  }
-
-  /** The `rounds`-round unrolled k-core peel (mirrors KCore.kCore: per
-    * round, survivors = vertices with degree >= k over the CURRENT edge
-    * set; edges keep only survivor-survivor pairs).
-    */
-  private def kCoreSql(k: Int, rounds: Int): String = {
-    // MATERIALIZED is load-bearing: each round references the previous
-    // edge CTE three times, so DuckDB's default CTE INLINING re-evaluates
-    // e0 3^rounds times (measured: fd exhaustion on the parquet scan at
-    // 10 rounds); materializing pins each round to one evaluation —
-    // exactly the localCheckpoint discipline the Spark side applies
-    val base = """e0 AS MATERIALIZED (SELECT a.i AS x, b2.i AS y
-                FROM items a JOIN items b2 ON a.b = b2.b AND a.i < b2.i
-                GROUP BY 1, 2)"""
-    val steps = (1 to rounds).map { r =>
-      s"""v$r AS MATERIALIZED (SELECT n
-                FROM (SELECT x AS n FROM e${r - 1}
-                      UNION ALL SELECT y AS n FROM e${r - 1})
-                GROUP BY n HAVING COUNT(*) >= $k),
-          e$r AS MATERIALIZED (SELECT x, y FROM e${r - 1}
-                WHERE x IN (SELECT n FROM v$r)
-                  AND y IN (SELECT n FROM v$r))"""
-    }.mkString(",\n          ")
-    s"""WITH items AS MATERIALIZED (SELECT DISTINCT l_orderkey AS b,
-                                           l_partkey AS i
-                       FROM lineitem),
-         $base,
-         $steps
-         SELECT n AS node, CAST(COUNT(*) AS BIGINT) AS core_deg
-         FROM (SELECT x AS n FROM e$rounds
-               UNION ALL SELECT y AS n FROM e$rounds)
-         GROUP BY 1"""
-  }
-
-  private lazy val sqlBase: Map[String, String] = Map(
-    "q01_incremental_extract" ->
-      s"""SELECT event_id, ts, user_id, event_type, value, props FROM events
-          WHERE ts > TIMESTAMP '${Queries.WmLow}' AND ts <= TIMESTAMP '${Queries.WmHigh}'""",
-
-    "q02_dedup_latest" ->
-      """SELECT user_id, event_type, event_id, ts, value FROM (
-           SELECT user_id, event_type, event_id, ts, value,
-                  row_number() OVER (PARTITION BY user_id, event_type
-                                     ORDER BY ts DESC, event_id DESC) AS rn
-           FROM events) WHERE rn = 1""",
-
-    "q03_scd2_build" ->
-      """SELECT user_id, event_id, event_type, value,
-                ts AS effective_from,
-                lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS effective_to,
-                (lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL) AS is_current
-         FROM events""",
-
-    "q04_scd1_latest" ->
-      """SELECT user_id, event_id, event_type, value, ts FROM (
-           SELECT user_id, event_id, event_type, value, ts,
-                  row_number() OVER (PARTITION BY user_id
-                                     ORDER BY ts DESC, event_id DESC) AS rn
-           FROM events) WHERE rn = 1""",
-
-    "q05_bucket_enrich" ->
-      s"""SELECT CASE WHEN l_quantity < 25 THEN 'low'
-                      WHEN l_quantity < 40 THEN 'medium'
-                      ELSE 'high' END AS qty_bucket,
-                 COUNT(*) AS n_items,
-                 $moneyQty AS sum_qty,
-                 CAST(SUM($discTerm) AS DOUBLE) AS revenue
-          FROM lineitem GROUP BY 1""",
-
-    "q06_dq_validate" ->
-      """WITH m AS (
-           SELECT COUNT(*) FILTER (WHERE c_custkey IS NULL) AS v1,
-                  COUNT(*) FILTER (WHERE NOT regexp_matches(c_name, '^Customer#[0-9]{9}$')) AS v2,
-                  COUNT(*) FILTER (WHERE c_acctbal < 0.0) AS v3,
-                  COUNT(*) FILTER (WHERE c_nationkey NOT BETWEEN 0 AND 24) AS v4,
-                  COUNT(*) AS total
-           FROM customer)
-         SELECT 'custkey_not_null' AS rule, v1 AS violations, total FROM m
-         UNION ALL SELECT 'name_format', v2, total FROM m
-         UNION ALL SELECT 'acctbal_non_negative', v3, total FROM m
-         UNION ALL SELECT 'nationkey_in_range', v4, total FROM m""",
-
-    "q07_dim_date" ->
-      """SELECT CAST(year(d)*10000 + month(d)*100 + day(d) AS INT) AS date_key,
-                d AS date,
-                CAST(day(d) AS INT) AS day, CAST(month(d) AS INT) AS month,
-                CAST(year(d) AS INT) AS year, dayname(d) AS weekday
-         FROM (SELECT DISTINCT CAST(o_orderdate AS DATE) AS d FROM orders)""",
-
-    "q08_star_revenue" ->
-      s"""SELECT r_name AS region, n_name AS nation,
-                 CAST(SUM($discTerm) AS DOUBLE) AS revenue,
-                 COUNT(*) AS n_items
-          FROM lineitem
-          JOIN orders   ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN nation   ON c_nationkey = n_nationkey
-          JOIN region   ON n_regionkey = r_regionkey
-          GROUP BY 1, 2""",
-
-    "q09_star_compose" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice, p_name, p_brand, s_name
-         FROM lineitem
-         JOIN part     ON l_partkey = p_partkey
-         JOIN supplier ON l_suppkey = s_suppkey""",
-
-    "q10_agg_report" ->
-      s"""SELECT l_returnflag, l_linestatus,
-                 $moneyQty AS sum_qty,
-                 CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-                 CAST(SUM($discTerm) AS DOUBLE) AS sum_disc_price,
-                 CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
-                          CAST((1.0 - l_discount) * (1.0 + l_tax) AS DECIMAL(18,4))) AS DOUBLE)
-                   AS sum_charge,
-                 $moneyQty / COUNT(*) AS avg_qty,
-                 COUNT(*) AS count_order
-          FROM lineitem
-          WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
-          GROUP BY 1, 2""",
-
-    "q11_top_n_per_group" ->
-      s"""SELECT p_brand, p_partkey, CAST(rev_exact AS DOUBLE) AS revenue, rank FROM (
-            SELECT p_brand, p_partkey, rev_exact,
-                   CAST(row_number() OVER (PARTITION BY p_brand
-                                           ORDER BY rev_exact DESC, p_partkey) AS INT) AS rank
-            FROM (SELECT l_partkey, SUM($discTerm) AS rev_exact
-                  FROM lineitem GROUP BY 1)
-            JOIN part ON l_partkey = p_partkey)
-          WHERE rank <= 3""",
-
-    "q12_json_extract" ->
-      """SELECT event_type, COUNT(*) AS n_events,
-                CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
-         FROM events GROUP BY 1""",
-
-    "q13_rollup_report" ->
-      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
-                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-         FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)""",
-
-    "q14_agg_merge" ->
-      """SELECT user_id, COUNT(*) AS n_events,
-                CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-         FROM events GROUP BY 1""",
-
-    "q15_validity_asof" ->
-      s"""SELECT user_id, event_id, event_type, value, effective_from, effective_to FROM (
-            SELECT user_id, event_id, event_type, value,
-                   ts AS effective_from,
-                   lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS effective_to
-            FROM events)
-          WHERE effective_from <= TIMESTAMP '${Queries.AsOfTs}'
-            AND (effective_to IS NULL OR effective_to > TIMESTAMP '${Queries.AsOfTs}')""",
-
-    "q16_scd2_merge" ->
-      // The merge must equal the from-scratch SCD2 rebuild over the full
-      // changelog — the oracle IS that rebuild.
-      """SELECT user_id, event_id, event_type, value,
-                ts AS effective_from,
-                lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS effective_to,
-                (lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL) AS is_current
-         FROM events""",
-
-    "q17_next_watermark" ->
-      s"""SELECT MAX(ts) AS watermark FROM events
-          WHERE ts > TIMESTAMP '${Queries.WmLow}' AND ts <= TIMESTAMP '${Queries.WmHigh}'""",
-
-    "q18_dq_enforce" ->
-      """SELECT c_custkey, c_name, c_nationkey, c_acctbal FROM customer
-         WHERE NOT COALESCE(c_custkey IS NULL, false)
-           AND NOT COALESCE(NOT regexp_matches(c_name, '^Customer#[0-9]{9}$'), false)
-           AND NOT COALESCE(c_acctbal < 0.0, false)
-           AND NOT COALESCE(c_nationkey NOT BETWEEN 0 AND 24, false)""",
-
-    "q19_star_date" ->
-      s"""WITH o AS (SELECT o_orderkey,
-                 CAST(year(CAST(o_orderdate AS DATE))*10000
-                    + month(CAST(o_orderdate AS DATE))*100
-                    + day(CAST(o_orderdate AS DATE)) AS INT) AS date_key
-           FROM orders),
-          dim AS (SELECT CAST(year(d)*10000 + month(d)*100 + day(d) AS INT) AS date_key,
-                         CAST(year(d) AS INT) AS year, CAST(month(d) AS INT) AS month
-                  FROM (SELECT DISTINCT CAST(o_orderdate AS DATE) AS d FROM orders))
-          SELECT year, month,
-                 CAST(SUM($discTerm) AS DOUBLE) AS revenue,
-                 COUNT(*) AS n_items
-          FROM lineitem JOIN o ON l_orderkey = o_orderkey
-                        JOIN dim USING (date_key)
-          GROUP BY 1, 2""",
-
-    "q20_dedup_exact" ->
-      """SELECT MIN(doc_id) AS doc_id, COUNT(*) AS dup_count
-         FROM documents GROUP BY text""",
-
-    // Jaccard over the df-capped shingle domain — identical cap and
-    // post-cap set sizes to NearDup.ngramJaccardPairs. (Shared with the
-    // q184 evaluation harness as its ground-truth CTE.)
-    "q21_dedup_ngram_jaccard" -> exactJaccardSql,
-
-    "q96_containment_pairs" ->
-      // same df-capped posting domain as q21; only the normalization
-      // (per-side set size instead of union size) differs
-      s"""WITH d AS (SELECT doc_id,
-                  list_distinct(list_transform(
-                    generate_series(1, len($ws) - ${Queries.JaccardN - 1}),
-                    i -> $ws[i] || ' ' || $ws[i+1] || ' ' || $ws[i+2])) AS sh
-           FROM documents),
-          ex0 AS (SELECT doc_id, unnest(sh) AS s FROM d),
-          ok AS (SELECT s FROM ex0 GROUP BY s
-                 HAVING COUNT(*) <= ${Queries.JaccardMaxPostings}),
-          ex AS (SELECT doc_id, COUNT(*) OVER (PARTITION BY doc_id) AS n, s
-                 FROM (SELECT doc_id, s FROM ex0 JOIN ok USING (s))),
-          p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                       a.n AS na, b.n AS nb, COUNT(*) AS common
-                FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2, 3, 4)
-         SELECT doc_a, doc_b, common, cont_a_in_b, cont_b_in_a, jaccard FROM (
-           SELECT doc_a, doc_b, common,
-                  CAST(common AS DOUBLE) / na AS cont_a_in_b,
-                  CAST(common AS DOUBLE) / nb AS cont_b_in_a,
-                  CAST(common AS DOUBLE) / (na + nb - common) AS jaccard FROM p)
-         WHERE greatest(cont_a_in_b, cont_b_in_a) >= ${Queries.ContainmentThreshold}""",
-
-    "q22_dedup_minhash_lsh" ->
-      minHashSql(graft.functions.Lsh.Mh16),
-
-    "q63_dedup_minhash_wide" ->
-      minHashSql(graft.functions.Lsh.Mh64),
-
-    "q23_dedup_simhash" ->
-      simHashSql(graft.functions.Lsh.Sim32, Queries.SimHammingMax),
-
-    "q62_dedup_simhash_wide" ->
-      simHashSql(graft.functions.Lsh.Sim64, Queries.SimHammingMax),
-
-    "q26_ann_lsh" -> {
-      import graft.functions.Lsh._
-      s"""WITH e AS (SELECT vec_id, embedding, $nrmSql AS nrm FROM embeddings),
-          bits AS (SELECT vec_id,
-                          list_transform(generate_series(0, ${Planes - 1}), p ->
-                            CASE WHEN list_reduce(list_transform(generate_series(1, $Dim), i ->
-                                   (CAST(((p*$Dim+i) * 2654435761) % $TwoPow32 AS DOUBLE)
-                                      / 4294967296.0 - 0.5)
-                                   * CAST(embedding[i] AS DOUBLE)), (x,y) -> x+y) >= 0
-                                 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS bits
-                   FROM e),
-          bands AS (SELECT vec_id, t,
-                           list_reduce(bits[t*$RowsRp+1 : t*$RowsRp+$RowsRp],
-                             (x,y) -> x*2+y) AS key
-                    FROM bits, (SELECT unnest(generate_series(0, ${BandsRp - 1})) AS t) bt),
-          qb AS (SELECT vec_id, t, xor(key, m) AS key
-                 FROM bands,
-                      (SELECT unnest(${sqlArr(0L +: (0 until RowsRp).map(j => 1L << j))}) AS m) pm
-                 WHERE vec_id < ${Queries.AnnQueryMaxId}),
-          cand AS (SELECT DISTINCT qb.vec_id AS query_id, c.vec_id AS neighbor_id
-                   FROM qb JOIN bands c ON qb.t = c.t AND qb.key = c.key
-                   WHERE c.vec_id >= ${Queries.AnnQueryMaxId}),
-          scored AS (SELECT query_id, neighbor_id,
-                            ${dotSql("eq.embedding", "ec.embedding")} / (eq.nrm * ec.nrm) AS cos
-                     FROM cand JOIN e eq ON query_id = eq.vec_id
-                               JOIN e ec ON neighbor_id = ec.vec_id)
-          SELECT query_id, neighbor_id, cos, rank FROM (
-            SELECT query_id, neighbor_id, cos,
-                   CAST(row_number() OVER (PARTITION BY query_id
-                                           ORDER BY cos DESC, neighbor_id) AS INT) AS rank
-            FROM scored)
-          WHERE rank <= ${Queries.AnnK}"""
-    },
-
-    "q24_dedup_embedding" ->
-      s"""WITH e AS (SELECT vec_id, embedding, $nrmSql AS nrm FROM embeddings)
-          SELECT vec_a, vec_b, cos FROM (
-            SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                   ${dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm) AS cos
-            FROM e a JOIN e b ON a.vec_id < b.vec_id)
-          WHERE cos >= ${Queries.CosineThreshold}""",
-
-    "q51_dedup_embedding_lsh" -> {
-      import graft.functions.Lsh._
-      s"""WITH e AS (SELECT vec_id, embedding, $nrmSql AS nrm FROM embeddings),
-          bits AS (SELECT vec_id,
-                          list_transform(generate_series(0, ${Planes - 1}), p ->
-                            CASE WHEN list_reduce(list_transform(generate_series(1, $Dim), i ->
-                                   (CAST(((p*$Dim+i) * 2654435761) % $TwoPow32 AS DOUBLE)
-                                      / 4294967296.0 - 0.5)
-                                   * CAST(embedding[i] AS DOUBLE)), (x,y) -> x+y) >= 0
-                                 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS bits
-                   FROM e),
-          bands AS (SELECT vec_id, t,
-                           list_reduce(bits[t*$RowsRp+1 : t*$RowsRp+$RowsRp],
-                             (x,y) -> x*2+y) AS key
-                    FROM bits, (SELECT unnest(generate_series(0, ${BandsRp - 1})) AS t) bt),
-          cand AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-                   FROM bands a JOIN bands b
-                     ON a.t = b.t AND a.key = b.key AND a.vec_id < b.vec_id)
-          SELECT vec_a, vec_b, cos FROM (
-            SELECT vec_a, vec_b,
-                   ${dotSql("ea.embedding", "eb.embedding")} / (ea.nrm * eb.nrm) AS cos
-            FROM cand JOIN e ea ON vec_a = ea.vec_id
-                      JOIN e eb ON vec_b = eb.vec_id)
-          WHERE cos >= ${Queries.CosineThreshold}"""
-    },
-
-    "q25_ann_bruteforce" ->
-      s"""WITH e AS (SELECT vec_id, embedding, $nrmSql AS nrm FROM embeddings),
-          q AS (SELECT vec_id AS query_id, embedding AS qe, nrm AS qn
-                FROM e WHERE vec_id < ${Queries.AnnQueryMaxId}),
-          c AS (SELECT vec_id AS neighbor_id, embedding AS ce, nrm AS cn
-                FROM e WHERE vec_id >= ${Queries.AnnQueryMaxId}),
-          s AS (SELECT query_id, neighbor_id,
-                       ${dotSql("qe", "ce")} / (qn * cn) AS cos
-                FROM c, q)
-          SELECT query_id, neighbor_id, cos, rank FROM (
-            SELECT query_id, neighbor_id, cos,
-                   CAST(row_number() OVER (PARTITION BY query_id
-                                           ORDER BY cos DESC, neighbor_id) AS INT) AS rank
-            FROM s)
-          WHERE rank <= ${Queries.AnnK}""",
-
-    "q27_text_langid" -> {
-      val scores = graft.functions.TextAnalysis.LangProfiles
-        .map { case (l, prof) => s"${stopCount(prof)} AS s_$l" }.mkString(",\n                  ")
-      s"""WITH s AS (SELECT lang,
-                  $scores
-           FROM documents)
-         SELECT lang, $langCase AS pred_lang, COUNT(*) AS n_docs
-         FROM s GROUP BY 1, 2"""
-    },
-
-    "q28_text_quality" -> {
-      val enStops = inList(graft.functions.TextAnalysis.LangProfiles.head._2)
-      s"""SELECT doc_id,
-                 CAST(len($ws) AS INT) AS n_words,
-                 CAST(list_reduce(list_transform($ws, w -> CAST(length(w) AS BIGINT)),
-                      (a,b) -> a+b) AS DOUBLE) / len($ws) AS avg_word_len,
-                 CAST(len(list_filter($ws, w -> w IN $enStops)) AS DOUBLE)
-                   / len($ws) AS stop_ratio,
-                 CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS DOUBLE)
-                   / length(text) AS punct_ratio,
-                 0.5 * (CAST(len(list_filter($ws, w -> w IN $enStops)) AS DOUBLE) / len($ws))
-                   + 0.5 * least(1.0, CAST(len($ws) AS DOUBLE) / 200.0) AS quality_score
-          FROM documents"""
-    },
-
-    "q29_text_tokens" ->
-      s"""SELECT doc_id,
-                 CAST(len($ws) AS INT) AS n_ws_tokens,
-                 CAST(len(regexp_extract_all(text, '${Queries.TokenPattern}')) AS INT)
-                   AS n_re_tokens,
-                 list_reduce(list_transform($ws,
-                      w -> CAST(floor((length(w)+3)/4.0) AS BIGINT)),
-                      (a,b) -> a+b) AS n_subwords
-          FROM documents""",
-
-    "q30_text_fingerprint" ->
-      """SELECT doc_id,
-                list_reduce(list_transform(string_split_regex(text, ''),
-                     c -> CAST(ascii(c) AS BIGINT)),
-                     (a,b) -> (a*31+b) % 1000000007) AS fp
-         FROM documents""",
-
-    "q45_multimodal_frames" ->
-      s"""SELECT doc_id,
-                 CAST(m AS INT) AS frame_idx,
-                 CAST(floor(octet_length(encode(text)) * m
-                            / ${Queries.FramesPerVideo}.0) AS BIGINT) AS byte_offset
-          FROM documents,
-               (SELECT unnest(generate_series(0, ${Queries.FramesPerVideo - 1})) AS m) g
-          WHERE doc_id % 3 = 2""",
-
-    "q46_token_histogram" ->
-      s"""SELECT CAST(floor(len($ws) / ${Queries.TokenBucketWidth}.0) AS BIGINT) AS bucket,
-                 COUNT(*) AS n_docs,
-                 CAST(SUM(CAST(len($ws) AS BIGINT)) AS BIGINT) AS total_tokens
-          FROM documents GROUP BY 1""",
-
-    "q43_cube_report" ->
-      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
-                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-         FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""",
-
-    "q44_text_normalize" -> {
-      val stops = inList(graft.functions.TextAnalysis.LangProfiles.head._2)
-      s"""SELECT doc_id,
-                 array_to_string(list_filter($ws, w -> w NOT IN $stops), ' ')
-                   AS clean_text,
-                 CAST(len($ws) - len(list_filter($ws, w -> w NOT IN $stops)) AS INT)
-                   AS n_removed
-          FROM documents"""
-    },
-
-    "q41_tfidf_terms" ->
-      s"""WITH w AS (SELECT doc_id, unnest($ws) AS term FROM documents),
-          tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM w GROUP BY 1, 2),
-          df AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM w GROUP BY 1),
-          nn AS (SELECT COUNT(*) AS n FROM documents)
-          SELECT doc_id, term, tf, score, rank FROM (
-            SELECT doc_id, term, tf,
-                   CAST(tf AS DOUBLE) * (CAST(n AS DOUBLE) / CAST(df AS DOUBLE)) AS score,
-                   CAST(row_number() OVER (PARTITION BY doc_id ORDER BY
-                     CAST(tf AS DOUBLE) * (CAST(n AS DOUBLE) / CAST(df AS DOUBLE)) DESC,
-                     term) AS INT) AS rank
-            FROM tf JOIN df USING (term), nn)
-          WHERE rank <= ${Queries.TfIdfTopK}""",
-
-    "q42_embed_stats" ->
-      """SELECT pos, n,
-                CAST(s AS DOUBLE) / n / 1.0e10 AS mean,
-                sqrt(CAST(CAST(sq AS DECIMAL(30,0)) * CAST(n AS DECIMAL(8,0))
-                          - CAST(s AS DECIMAL(19,0)) * CAST(s AS DECIMAL(18,0))
-                          AS DOUBLE)) / n / 1.0e10 AS std
-         FROM (SELECT CAST(i - 1 AS INT) AS pos, COUNT(*) AS n,
-                      SUM(q) AS s, SUM(CAST(q AS DECIMAL(25,0)) * q) AS sq
-               FROM (SELECT i,
-                            CAST(CAST(trunc(CAST(embedding[i] AS DOUBLE) * 1.0e10)
-                                      AS BIGINT) AS DECIMAL(12,0)) AS q
-                     FROM embeddings,
-                          (SELECT unnest(generate_series(1, 64)) AS i) g)
-               GROUP BY 1)""",
-
-    "q40_asof_join" ->
-      """WITH p AS (SELECT event_id, user_id, ts, value FROM events
-                    WHERE event_type = 'purchase'),
-          v AS (SELECT user_id, ts, event_id, value FROM (
-                  SELECT user_id, ts, event_id, value,
-                         row_number() OVER (PARTITION BY user_id, ts
-                                            ORDER BY event_id DESC) AS rn
-                  FROM events WHERE event_type = 'view') WHERE rn = 1)
-          SELECT p.event_id, p.user_id, p.ts, p.value,
-                 v.value AS view_value, v.event_id AS view_event_id
-          FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts >= v.ts""",
-
-    "q84_asof_tolerance" ->
-      """WITH p AS (SELECT event_id, user_id, ts, value FROM events
-                    WHERE event_type = 'purchase'),
-          v AS (SELECT user_id, ts, event_id, value FROM (
-                  SELECT user_id, ts, event_id, value,
-                         row_number() OVER (PARTITION BY user_id, ts
-                                            ORDER BY event_id DESC) AS rn
-                  FROM events WHERE event_type = 'view') WHERE rn = 1),
-          j AS (SELECT p.event_id, p.user_id, p.ts, p.value,
-                       v.value AS view_value, v.event_id AS view_event_id,
-                       row_number() OVER (PARTITION BY p.event_id
-                                          ORDER BY v.ts DESC) AS rn
-                FROM p LEFT JOIN v ON p.user_id = v.user_id
-                      AND v.ts <= p.ts
-                      AND v.ts >= p.ts - INTERVAL 3 DAY)
-          SELECT event_id, user_id, ts, value, view_value, view_event_id
-          FROM j WHERE rn = 1""",
-
-    "q85_next_conversion" ->
-      """WITH v AS (SELECT event_id, user_id, ts FROM events
-                    WHERE event_type = 'view'),
-          p AS (SELECT user_id, ts, event_id FROM (
-                  SELECT user_id, ts, event_id,
-                         row_number() OVER (PARTITION BY user_id, ts
-                                            ORDER BY event_id DESC) AS rn
-                  FROM events WHERE event_type = 'purchase') WHERE rn = 1),
-          j AS (SELECT v.event_id, v.user_id, v.ts,
-                       p.event_id AS next_event_id,
-                       date_diff('microseconds', v.ts, p.ts) AS lag_micros,
-                       row_number() OVER (PARTITION BY v.event_id
-                                          ORDER BY p.ts ASC) AS rn
-                FROM v LEFT JOIN p ON v.user_id = p.user_id
-                      AND p.ts >= v.ts
-                      AND p.ts <= v.ts + INTERVAL 7 DAY)
-          SELECT event_id, user_id, ts, next_event_id, lag_micros
-          FROM j WHERE rn = 1""",
-
-    "q91_semantic_dedup" ->
-      s"""WITH base AS (
-            SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) - 1 AS list,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cent
-            FROM (SELECT vec_id, embedding FROM embeddings
-                  ORDER BY vec_id LIMIT ${Queries.SemLists})),
-          u AS (SELECT list, CASE WHEN nrm = 0 THEN cent
-                                  ELSE list_transform(cent, x -> x / nrm) END AS ucent
-                FROM (SELECT list, cent,
-                             sqrt(list_reduce(list_transform(cent, x -> x*x),
-                                              (a,b) -> a+b)) AS nrm
-                      FROM base)),
-          v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-                       $nrmSql AS nrm
-                FROM embeddings),
-          asn AS (SELECT vec_id, list FROM (
-                    SELECT v.vec_id, u.list,
-                           row_number() OVER (PARTITION BY v.vec_id
-                                              ORDER BY ${dotSql("u.ucent", "v.v")} DESC,
-                                                       u.list) AS rn
-                    FROM v, u)
-                  WHERE rn = 1)
-          SELECT list, vec_a, vec_b, cos FROM (
-            SELECT aa.list, a.vec_id AS vec_a, b.vec_id AS vec_b,
-                   ${dotSql("a.v", "b.v")} / (a.nrm * b.nrm) AS cos
-            FROM v a, asn aa, v b, asn bb
-            WHERE a.vec_id = aa.vec_id AND b.vec_id = bb.vec_id
-              AND aa.list = bb.list AND a.vec_id < b.vec_id)
-          WHERE cos >= ${Queries.CosineThreshold}""",
-
-    // q194 runs the SAME report with counters built by the native
-    // additive aggregate — identical cells, identical oracle
-    "q94_cms_heavy_hitters" -> cmsHeavySql,
-
-    "q97_copurchase_similarity" ->
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem),
-          freq AS (SELECT i, COUNT(*) AS n FROM items GROUP BY 1),
-          pairs AS (
-            SELECT a.i AS item_a, b.i AS item_b, COUNT(*) AS n_baskets
-            FROM items a JOIN items b ON a.b = b.b AND a.i < b.i
-            GROUP BY 1, 2
-            HAVING COUNT(*) >= ${Queries.CoMinSupport})
-          SELECT item_a, item_b, n_baskets,
-                 CAST(n_baskets AS DOUBLE)
-                   / sqrt(CAST(fa.n * fb.n AS DOUBLE)) AS cosine
-          FROM pairs JOIN freq fa ON item_a = fa.i
-                     JOIN freq fb ON item_b = fb.i
-          ORDER BY cosine DESC, item_a, item_b
-          LIMIT ${Queries.SimTopK}""",
-
-    "q98_source_drift" -> {
-      val enStops = inList(graft.functions.TextAnalysis.LangProfiles.head._2)
-      s"""WITH q AS (SELECT source,
-                       least(floor((0.5 * (CAST(len(list_filter($ws, w -> w IN $enStops))
-                                           AS DOUBLE) / len($ws))
-                              + 0.5 * least(1.0, CAST(len($ws) AS DOUBLE) / 200.0))
-                             * 10.0), 9.0) AS bin
-                FROM documents),
-          binned AS (SELECT source, CAST(bin AS BIGINT) AS bin, COUNT(*) AS cnt
-                     FROM q GROUP BY 1, 2),
-          grid AS (SELECT s.source, g.bin
-                   FROM (SELECT DISTINCT source FROM documents) s,
-                        (SELECT unnest(generate_series(0, 9)) AS bin) g),
-          full_h AS (SELECT grid.source, grid.bin,
-                            COALESCE(binned.cnt, 0) AS cnt
-                     FROM grid LEFT JOIN binned
-                       ON grid.source = binned.source AND grid.bin = binned.bin),
-          p AS (SELECT source, bin,
-                       CAST(cnt AS DOUBLE)
-                         / CAST(SUM(cnt) OVER (PARTITION BY source) AS DOUBLE) AS p
-                FROM full_h),
-          hist AS (SELECT source,
-                          list_transform(
-                            list_sort(list({'bin': bin, 'p': p})),
-                            s -> s.p) AS h
-                   FROM p GROUP BY 1)
-          SELECT a.source AS source_a, b.source AS source_b,
-                 list_reduce(
-                   list_transform(generate_series(1, 10), i ->
-                     CASE WHEN a.h[i] + b.h[i] = 0.0 THEN 0.0
-                          ELSE (a.h[i] - b.h[i]) * (a.h[i] - b.h[i])
-                               / (a.h[i] + b.h[i]) END),
-                   (x, y) -> x + y) AS chi2
-          FROM hist a JOIN hist b ON a.source < b.source"""
-    },
-
-    "q99_decayed_value" ->
-      s"""WITH daily AS (
-            SELECT o_custkey, CAST(o_orderdate AS DATE) AS day,
-                   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev,
-                   date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
-                     AS day_num
-            FROM orders GROUP BY 1, 2, 4),
-          mx AS (SELECT MAX(day) AS max_day FROM daily),
-          wv AS (SELECT o_custkey, day_num,
-                        rev / CAST(1::BIGINT << least(
-                                date_diff('day', day, max_day),
-                                ${Queries.DecayCapDays}) AS DOUBLE) AS wv
-                 FROM daily, mx)
-          SELECT o_custkey,
-                 list_reduce(
-                   list_transform(list_sort(list({'d': day_num, 'w': wv})),
-                                  s -> s.w),
-                   (x, y) -> x + y) AS decayed_value,
-                 COUNT(*) AS n_days
-          FROM wv GROUP BY 1""",
-
-    "q100_local_supplier_volume" ->
-      s"""SELECT r_name AS region, n_name AS nation, COUNT(*) AS n_items,
-                 CAST(SUM($discTerm) AS DOUBLE) AS revenue
-          FROM lineitem
-          JOIN orders   ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN supplier ON l_suppkey = s_suppkey
-          JOIN nation   ON s_nationkey = n_nationkey
-          JOIN region   ON n_regionkey = r_regionkey
-          WHERE c_nationkey = s_nationkey
-          GROUP BY 1, 2""",
-
-    "q92_copurchase_pairs" ->
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem)
-          SELECT a.i AS item_a, b.i AS item_b, COUNT(*) AS n_baskets
-          FROM items a JOIN items b ON a.b = b.b AND a.i < b.i
-          GROUP BY 1, 2
-          HAVING COUNT(*) >= ${Queries.CoMinSupport}
-          ORDER BY n_baskets DESC, item_a, item_b
-          LIMIT ${Queries.CoTopK}""",
-
-    // q253 — the same support-≥2 edge set (CoMaxBasket is non-binding on
-    // the fixture, as for every co-purchase oracle), wedges through a
-    // shared middle vertex with the SAME enforced middle-degree
-    // quarantine as the engine (LinkMaxMiddleDeg — semantics agree at
-    // every SF whether or not the cap binds), existing edges removed,
-    // the deterministic four-key ordering.
-    "q253_link_prediction" ->
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS bkt, l_partkey AS i
-                         FROM lineitem),
-          e AS (SELECT a.i AS a, b.i AS b
-                FROM items a JOIN items b ON a.bkt = b.bkt AND a.i < b.i
-                GROUP BY 1, 2 HAVING COUNT(*) >= ${Queries.CoMinSupport}),
-          und AS (SELECT a, b FROM e UNION ALL SELECT b, a FROM e),
-          deg AS (SELECT a, COUNT(*) AS deg FROM und GROUP BY 1),
-          mid AS (SELECT und.a, und.b FROM und JOIN deg ON und.a = deg.a
-                  WHERE deg.deg <= ${Queries.LinkMaxMiddleDeg}),
-          cand AS (SELECT u1.b AS x, u2.b AS y, COUNT(*) AS common_neighbors
-                   FROM mid u1 JOIN mid u2 ON u1.a = u2.a AND u1.b < u2.b
-                   GROUP BY 1, 2),
-          ne AS (SELECT cand.x, cand.y, cand.common_neighbors
-                 FROM cand LEFT JOIN e ON cand.x = e.a AND cand.y = e.b
-                 WHERE e.a IS NULL)
-          SELECT ne.x AS item_a, ne.y AS item_b, common_neighbors,
-                 dx.deg * dy.deg AS pref_attach
-          FROM ne JOIN deg dx ON ne.x = dx.a JOIN deg dy ON ne.y = dy.a
-          ORDER BY common_neighbors DESC, pref_attach DESC, item_a, item_b
-          LIMIT ${Queries.LinkTopK}""",
-
-    "q93_revenue_anomaly" -> {
-      val wd = Queries.AnomalyWindowDays
-      s"""WITH daily AS (
-            SELECT CAST(l_shipdate AS DATE) AS ship_day,
-                   SUM($discTerm) AS rev_dec,
-                   date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE)) AS day_num
-            FROM lineitem GROUP BY 1, 3),
-          ku AS (
-            SELECT ship_day, rev_dec, day_num,
-                   CAST(floor(CAST(rev_dec AS DOUBLE) / ${Queries.AnomalyUnit})
-                        AS BIGINT) AS rev_ku
-            FROM daily),
-          st AS (
-            SELECT ship_day, rev_dec, rev_ku,
-                   COUNT(*) OVER tw AS n_prior,
-                   SUM(rev_ku) OVER tw AS s,
-                   SUM(rev_ku * rev_ku) OVER tw AS ss
-            FROM ku
-            WINDOW tw AS (ORDER BY day_num RANGE BETWEEN $wd PRECEDING AND 1 PRECEDING)),
-          z AS (
-            SELECT ship_day, CAST(rev_dec AS DOUBLE) AS daily_revenue, n_prior,
-                   CASE WHEN n_prior >= ${Queries.AnomalyMinPrior}
-                        THEN CAST(s AS DOUBLE) / n_prior END AS trailing_mean,
-                   CASE WHEN n_prior >= ${Queries.AnomalyMinPrior}
-                         AND (CAST(ss AS DOUBLE)
-                              - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n_prior)
-                             / (n_prior - 1.0) > 0.0
-                        THEN (CAST(rev_ku AS DOUBLE) - CAST(s AS DOUBLE) / n_prior)
-                             / sqrt((CAST(ss AS DOUBLE)
-                                     - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n_prior)
-                                    / (n_prior - 1.0)) END AS z_score
-            FROM st)
-          SELECT ship_day, daily_revenue, n_prior, trailing_mean, z_score,
-                 (abs(z_score) > ${Queries.AnomalyZ}) AS is_anomaly
-          FROM z"""
-    },
-
-    "q95_sliding_active_users" -> {
-      val w = Queries.SlidingWindowDays - 1
-      s"""WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
-          days AS (SELECT DISTINCT d AS window_end FROM ud)
-          SELECT w.window_end, COUNT(DISTINCT u.user_id) AS n_users_7d
-          FROM days w JOIN ud u
-            ON u.d <= w.window_end AND u.d >= w.window_end - $w
-          GROUP BY 1"""
-    },
-
-    "q90_grouped_distinct_sketch" -> {
-      import graft.functions.Sketches._
-      val k = Queries.GroupKmvK
-      s"""WITH h AS (SELECT DISTINCT event_type,
-                       ($HA * event_id + $HB) % $P AS h FROM events),
-          kth AS (SELECT event_type, h AS kth FROM (
-                    SELECT event_type, h,
-                           row_number() OVER (PARTITION BY event_type
-                                              ORDER BY h) AS rn
-                    FROM h) WHERE rn = $k),
-          ex AS (SELECT event_type, COUNT(DISTINCT event_id) AS exact_distinct
-                 FROM events GROUP BY 1)
-          SELECT event_type, $k AS k, exact_distinct,
-                 ${(k - 1).toDouble} / (CAST(kth AS DOUBLE) / ${P.toDouble})
-                   AS est_distinct,
-                 (${(k - 1).toDouble} / (CAST(kth AS DOUBLE) / ${P.toDouble}))
-                   / CAST(exact_distinct AS DOUBLE) AS est_ratio
-          FROM kth JOIN ex USING (event_type)"""
-    },
-
-    "q38_distinct_sketch" -> {
-      import graft.functions.Sketches._
-      s"""WITH kmv AS (
-            SELECT MAX(h) AS kth FROM (
-              SELECT DISTINCT ($HA * l_orderkey + $HB) % $P AS h
-              FROM lineitem ORDER BY h LIMIT ${Queries.KmvK})),
-          ex AS (SELECT COUNT(DISTINCT l_orderkey) AS exact_distinct FROM lineitem)
-          SELECT ${Queries.KmvK} AS k, exact_distinct,
-                 ${(Queries.KmvK - 1).toDouble} / (CAST(kth AS DOUBLE) / ${P.toDouble})
-                   AS est_distinct,
-                 (${(Queries.KmvK - 1).toDouble} / (CAST(kth AS DOUBLE) / ${P.toDouble}))
-                   / CAST(exact_distinct AS DOUBLE) AS est_ratio
-          FROM kmv, ex"""
-    },
-
-    "q39_stratified_sample" -> {
-      import graft.functions.Sketches._
-      val rateCase = Queries.SampleRates
-        .map { case (l, r) => s"WHEN lang = '$l' THEN $r" }.mkString(" ")
-      s"""SELECT doc_id, lang FROM documents
-          WHERE CAST(($HA * doc_id + $HB) % $P AS DOUBLE) / ${P.toDouble}
-                < (CASE $rateCase ELSE 0.0 END)"""
-    },
-
-    "q35_pivot_report" ->
-      """SELECT o_orderpriority,
-                COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_f,
-                COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS n_o,
-                COUNT(*) FILTER (WHERE o_orderstatus = 'P') AS n_p
-         FROM orders GROUP BY 1""",
-
-    "q36_revenue_share" ->
-      s"""WITH byn AS (
-            SELECT r_name AS region, n_name AS nation,
-                   SUM($discTerm) AS rev_dec
-            FROM lineitem
-            JOIN orders   ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation   ON c_nationkey = n_nationkey
-            JOIN region   ON n_regionkey = r_regionkey
-            GROUP BY 1, 2)
-          SELECT region, nation, CAST(rev_dec AS DOUBLE) AS revenue,
-                 CAST(rev_dec AS DOUBLE) /
-                   CAST(SUM(rev_dec) OVER (PARTITION BY region) AS DOUBLE) AS share
-          FROM byn""",
-
-    "q37_rolling_revenue" ->
-      s"""WITH daily AS (
-            SELECT CAST(l_shipdate AS DATE) AS ship_day,
-                   SUM($discTerm) AS rev_dec,
-                   date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE)) AS day_num
-            FROM lineitem GROUP BY 1, 3)
-          SELECT ship_day, CAST(rev_dec AS DOUBLE) AS daily_revenue,
-                 CAST(SUM(rev_dec) OVER (ORDER BY day_num
-                        RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE)
-                   AS rolling_7d_revenue
-          FROM daily""",
-
-    "q34_dedup_clusters" ->
-      s"""$componentCtes
-          SELECT id AS doc_id, canonical_id, (id = canonical_id) AS is_canonical
-          FROM (SELECT id, MIN(r) AS canonical_id FROM reach GROUP BY id)""",
-
-    "q80_dup_rate_by_source" ->
-      s"""$componentCtes,
-          comp AS (SELECT id, MIN(r) AS label FROM reach GROUP BY id),
-          sizes AS (SELECT label, COUNT(*) AS cluster_size FROM comp GROUP BY 1)
-          SELECT source, COUNT(*) AS n_docs,
-                 CAST(SUM(CASE WHEN cluster_size > 1 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_dup,
-                 CAST(SUM(CASE WHEN cluster_size > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                   / COUNT(*) AS dup_rate
-          FROM comp JOIN sizes USING (label)
-                    JOIN documents ON comp.id = documents.doc_id
-          GROUP BY 1""",
-
-    "q81_star_filtered" -> {
-      // The oracle RUNS the composer's rendered SQL: the same config that
-      // drives the DataFrame path renders the filtered-star text, and the
-      // rollup wraps it — so the WHERE slot is verified end-to-end, not
-      // hand-transcribed.
-      val inner = StarSchema.renderSql(
-        "orders", Seq("o_orderkey", "o_totalprice", "o_orderdate"),
-        Seq(StarSchema.DimRef("customer", Seq("c_mktsegment"),
-          factKey = "o_custkey", dimKey = "c_custkey",
-          filter = Some(s"c_mktsegment = '${Queries.StarFilterSegment}'"))),
-        where = Some(
-          s"o_orderdate >= TIMESTAMP '${Queries.StarFilterFrom}' AND " +
-            s"o_orderdate < TIMESTAMP '${Queries.StarFilterTo}'"))
-      s"""SELECT date_trunc('month', CAST(o_orderdate AS DATE)) AS month,
-                 COUNT(*) AS n_orders,
-                 CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                   AS total_price
-          FROM ($inner)
-          GROUP BY 1"""
-    },
-
-    "q87_source_leakage" ->
-      s"""$componentCtes,
-          sp AS (SELECT least(a.source, b.source) AS source_a,
-                        greatest(a.source, b.source) AS source_b, jaccard
-                 FROM pairs JOIN documents a ON pairs.doc_a = a.doc_id
-                            JOIN documents b ON pairs.doc_b = b.doc_id)
-          SELECT source_a, source_b, COUNT(*) AS n_pairs,
-                 MAX(jaccard) AS max_jaccard
-          FROM sp GROUP BY 1, 2""",
-
-    // q250 — the q87 rollup shape over q143's split labels: the same
-    // memoized verified-pair CTE, endpoints joined to the hash-split
-    // CASE, unordered split combination per row.
-    "q250_split_leakage" -> {
-      import graft.functions.Sketches.{HA, HB, P}
-      s"""$componentCtes,
-          sd AS (SELECT doc_id,
-                   CASE WHEN (($HA * doc_id + $HB) % $P) % 100 < 80 THEN 'train'
-                        WHEN (($HA * doc_id + $HB) % $P) % 100 < 90 THEN 'val'
-                        ELSE 'test' END AS split
-                 FROM documents WHERE text IS NOT NULL),
-          sp AS (SELECT least(a.split, b.split) AS split_a,
-                        greatest(a.split, b.split) AS split_b, jaccard
-                 FROM pairs JOIN sd a ON pairs.doc_a = a.doc_id
-                            JOIN sd b ON pairs.doc_b = b.doc_id)
-          SELECT split_a, split_b, COUNT(*) AS n_pairs,
-                 MAX(jaccard) AS max_jaccard
-          FROM sp GROUP BY 1, 2"""
-    },
-
-    // q251 — split on the COMPONENT hash: comp labels from the same
-    // recursive closure (MIN over reach ≡ the Spark min-label pointer
-    // jump), the q143 CASE applied to the cluster id.
-    "q251_cluster_split" -> {
-      import graft.functions.Sketches.{HA, HB, P}
-      s"""$componentCtes,
-          comp AS (SELECT id, MIN(r) AS cluster FROM reach GROUP BY id),
-          sd AS (SELECT id, cluster,
-                   CASE WHEN (($HA * cluster + $HB) % $P) % 100 < 80 THEN 'train'
-                        WHEN (($HA * cluster + $HB) % $P) % 100 < 90 THEN 'val'
-                        ELSE 'test' END AS split
-                 FROM comp)
-          SELECT split, COUNT(*) AS n_docs,
-                 CAST(COUNT(DISTINCT cluster) AS BIGINT) AS n_clusters
-          FROM sd GROUP BY 1"""
-    },
-
-    "q89_quality_dup_calibration" -> {
-      val enStops = inList(graft.functions.TextAnalysis.LangProfiles.head._2)
-      s"""$componentCtes,
-          comp AS (SELECT id, MIN(r) AS label FROM reach GROUP BY id),
-          sizes AS (SELECT label, COUNT(*) AS cluster_size FROM comp GROUP BY 1),
-          q AS (SELECT doc_id,
-                       0.5 * (CAST(len(list_filter($ws, w -> w IN $enStops)) AS DOUBLE)
-                              / len($ws))
-                         + 0.5 * least(1.0, CAST(len($ws) AS DOUBLE) / 200.0)
-                         AS quality_score
-                FROM documents),
-          dd AS (SELECT CAST(least(floor(quality_score * 10.0), 9) AS BIGINT)
-                          AS decile,
-                        cluster_size
-                 FROM comp JOIN sizes USING (label)
-                           JOIN q ON comp.id = q.doc_id)
-          SELECT decile, COUNT(*) AS n_docs,
-                 CAST(SUM(CASE WHEN cluster_size > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                   / COUNT(*) AS dup_rate,
-                 CAST(SUM(cluster_size) AS DOUBLE) / COUNT(*)
-                   AS mean_cluster_size
-          FROM dd GROUP BY 1"""
-    },
-
-    "q82_span_dup_rate" ->
-      s"""WITH d AS (SELECT doc_id,
-                  list_distinct(list_transform(
-                    generate_series(1, len($ws) - ${Queries.JaccardN - 1}),
-                    i -> $ws[i] || ' ' || $ws[i+1] || ' ' || $ws[i+2])) AS sh
-           FROM documents),
-          ex AS (SELECT doc_id, unnest(sh) AS s FROM d WHERE len(sh) > 0),
-          shared AS (SELECT s FROM ex GROUP BY s HAVING COUNT(*) >= 2),
-          cnt AS (SELECT doc_id, COUNT(*) AS n_shared
-                  FROM ex JOIN shared USING (s) GROUP BY doc_id)
-          SELECT d.doc_id, len(d.sh) AS n_grams,
-                 COALESCE(cnt.n_shared, 0) AS n_shared,
-                 CAST(COALESCE(cnt.n_shared, 0) AS DOUBLE) / len(d.sh)
-                   AS shared_ratio
-          FROM d LEFT JOIN cnt USING (doc_id)
-          WHERE len(d.sh) > 0""",
-
-    "q83_budget_select" -> {
-      val enStops = inList(graft.functions.TextAnalysis.LangProfiles.head._2)
-      s"""WITH q AS (SELECT doc_id, len($ws) AS tokens,
-                 0.5 * (CAST(len(list_filter($ws, w -> w IN $enStops)) AS DOUBLE)
-                        / len($ws))
-                   + 0.5 * least(1.0, CAST(len($ws) AS DOUBLE) / 200.0)
-                   AS quality_score
-               FROM documents
-               WHERE len($ws) > 0),
-          c AS (SELECT *, CAST(SUM(tokens) OVER (ORDER BY quality_score DESC,
-                                                 doc_id) AS BIGINT)
-                       AS cum_tokens
-                FROM q)
-          SELECT doc_id, tokens, quality_score, cum_tokens
-          FROM c WHERE cum_tokens - tokens < ${Queries.TokenBudget}"""
-    },
-
-    "q65_cluster_canonical" -> {
-      val enStops = inList(graft.functions.TextAnalysis.LangProfiles.head._2)
-      s"""$componentCtes,
-          comp AS (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
-          q AS (SELECT doc_id,
-                       0.5 * (CAST(len(list_filter($ws, w -> w IN $enStops)) AS DOUBLE)
-                              / len($ws))
-                         + 0.5 * least(1.0, CAST(len($ws) AS DOUBLE) / 200.0)
-                         AS quality_score
-                FROM documents),
-          ranked AS (SELECT c.id, c.cluster_id,
-                            row_number() OVER (PARTITION BY c.cluster_id
-                                               ORDER BY q.quality_score DESC, c.id) AS rn
-                     FROM comp c JOIN q ON c.id = q.doc_id),
-          reps AS (SELECT cluster_id, id AS canonical_doc FROM ranked WHERE rn = 1)
-          SELECT r.id AS doc_id, r.cluster_id, reps.canonical_doc,
-                 (r.id = reps.canonical_doc) AS keep
-          FROM ranked r JOIN reps USING (cluster_id)"""
-    },
-
-    "q66_funnel" ->
-      """WITH b AS (
-           SELECT user_id,
-                  min(CASE WHEN event_type = 'view' THEN epoch_us(ts) END) AS t_view,
-                  list(epoch_us(ts)) FILTER (WHERE event_type = 'click') AS clicks,
-                  list(epoch_us(ts)) FILTER (WHERE event_type = 'purchase') AS purchases
-           FROM events GROUP BY 1),
-          c AS (SELECT user_id, t_view, purchases,
-                       list_min(list_filter(clicks, c -> c > t_view)) AS t_click
-                FROM b),
-          d AS (SELECT user_id, t_view, t_click,
-                       list_min(list_filter(purchases, p -> p > t_click)) AS t_purchase
-                FROM c)
-          SELECT user_id,
-                 make_timestamp(t_view) AS view_ts,
-                 make_timestamp(t_click) AS click_ts,
-                 make_timestamp(t_purchase) AS purchase_ts,
-                 CAST(CASE WHEN t_purchase IS NOT NULL THEN 3
-                           WHEN t_click IS NOT NULL THEN 2
-                           WHEN t_view IS NOT NULL THEN 1
-                           ELSE 0 END AS INT) AS stage
-          FROM d""",
-
-    "q67_retention" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS day FROM events),
-          f AS (SELECT user_id, MIN(day) AS cohort_day FROM e GROUP BY 1)
-          SELECT cohort_day,
-                 CAST(date_diff('day', cohort_day, day) AS INT) AS day_offset,
-                 COUNT(DISTINCT e.user_id) AS n_users
-          FROM e JOIN f USING (user_id)
-          GROUP BY 1, 2""",
-
-    "q88_sketch_percentiles" -> {
-      val w = Queries.SketchBinWidth
-      val cap = Queries.SketchBins - 1
-      val qList = Queries.SketchQs
-        .map(q => s"CAST($q AS DOUBLE)").mkString("[", ", ", "]")
-      val qCols = Queries.SketchQs.map { q =>
-        s"MAX(CASE WHEN q = $q THEN est END) AS est_${q.toString.replace('.', '_')}"
-      }.mkString(",\n                 ")
-      s"""WITH b AS (SELECT l_returnflag AS g,
-                  CAST(least(greatest(floor(l_extendedprice / $w), 0), $cap)
-                       AS BIGINT) AS bin
-           FROM lineitem),
-          c AS (SELECT g, bin, COUNT(*) AS cnt FROM b GROUP BY 1, 2),
-          cc AS (SELECT g, bin, cnt,
-                   CAST(SUM(cnt) OVER (PARTITION BY g ORDER BY bin
-                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-                   CAST(SUM(cnt) OVER (PARTITION BY g) AS BIGINT) AS n
-                 FROM c),
-          qq AS (SELECT unnest($qList) AS q),
-          sel AS (SELECT g, q,
-                    $w * (CAST(bin AS DOUBLE) + (q * n - (cum - cnt)) / cnt)
-                      AS est
-                  FROM cc, qq
-                  WHERE cum >= q * n AND cum - cnt < q * n)
-          SELECT g AS l_returnflag,
-                 $qCols
-          FROM sel GROUP BY 1"""
-    },
-
-    "q68_percentile_report" ->
-      """SELECT l_returnflag,
-                quantile_cont(l_extendedprice, 0.25) AS p25,
-                quantile_cont(l_extendedprice, 0.5)  AS p50,
-                quantile_cont(l_extendedprice, 0.75) AS p75,
-                quantile_cont(l_extendedprice, 0.99) AS p99
-         FROM lineitem GROUP BY 1""",
-
-    "q69_bm25_search" ->
-      s"""$bm25ScoredSql
-          ORDER BY score DESC, doc_id LIMIT ${Queries.BmTopK}""",
-
-    "q79_hybrid_search" ->
-      s"""WITH cand AS (
-            $bm25ScoredSql
-            ORDER BY score DESC, doc_id LIMIT ${Queries.BmCandidates}),
-          q AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qe
-                FROM embeddings WHERE vec_id = 0),
-          e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS de
-                FROM embeddings)
-          SELECT doc_id, bm25_score, cos_sim FROM (
-            SELECT cand.doc_id, cand.score AS bm25_score,
-                   ${dotSql("qe", "de")}
-                     / (sqrt(${dotSql("qe", "qe")}) * sqrt(${dotSql("de", "de")}))
-                     AS cos_sim
-            FROM cand JOIN e ON cand.doc_id = e.vec_id, q)
-          ORDER BY cos_sim DESC, doc_id LIMIT ${Queries.HybridK}""",
-
-    "q70_value_outliers" ->
-      """WITH s AS (SELECT event_type, COUNT(*) AS n,
-                           SUM(CAST(value AS DECIMAL(18,2))) AS sv,
-                           SUM(CAST(value AS DECIMAL(18,2))
-                               * CAST(value AS DECIMAL(18,2))) AS ss
-                    FROM events GROUP BY 1)
-          SELECT event_id, event_type, value, z FROM (
-            SELECT event_id, e.event_type, value,
-                   (value - CAST(sv AS DOUBLE) / CAST(n AS DOUBLE))
-                     / sqrt((CAST(ss AS DOUBLE)
-                             - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE) / CAST(n AS DOUBLE))
-                            / (CAST(n AS DOUBLE) - 1.0)) AS z
-            FROM events e JOIN s ON e.event_type = s.event_type)
-          WHERE abs(z) > 3.0""",
-
-    "q33_ann_ivf" -> {
-      import graft.functions.Lsh.Dim
-      s"""WITH e AS (SELECT vec_id, embedding, label, $nrmSql AS nrm FROM embeddings),
-          q AS (SELECT vec_id AS query_id, embedding AS qe, nrm AS qn
-                FROM e WHERE vec_id < ${Queries.AnnQueryMaxId}),
-          c AS (SELECT vec_id AS neighbor_id, label, embedding AS ce, nrm AS cn
-                FROM e WHERE vec_id >= ${Queries.AnnQueryMaxId}),
-          cent AS (
-            SELECT label, array_agg(CAST(s AS DOUBLE) ORDER BY i) AS centroid
-            FROM (SELECT label, i,
-                         SUM(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(20,10))) AS s
-                  FROM e, (SELECT unnest(generate_series(1, $Dim)) AS i) g
-                  WHERE vec_id >= ${Queries.AnnQueryMaxId}
-                  GROUP BY 1, 2)
-            GROUP BY label),
-          pr AS (
-            SELECT query_id, qe, qn, label FROM (
-              SELECT query_id, qe, qn, label,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY ccos DESC, label) AS lr
-              FROM (SELECT q.query_id, q.qe, q.qn, cent.label,
-                           ${dotSql("qe", "centroid")}
-                             / (q.qn * sqrt(${dotSql("centroid", "centroid")})) AS ccos
-                    FROM q, cent))
-            WHERE lr <= ${Queries.IvfNProbe}),
-          scored AS (
-            SELECT query_id, neighbor_id, ${dotSql("qe", "ce")} / (qn * cn) AS cos
-            FROM pr JOIN c USING (label))
-          SELECT query_id, neighbor_id, cos, rank FROM (
-            SELECT query_id, neighbor_id, cos,
-                   CAST(row_number() OVER (PARTITION BY query_id
-                                           ORDER BY cos DESC, neighbor_id) AS INT) AS rank
-            FROM scored)
-          WHERE rank <= ${Queries.AnnK}"""
-    },
-
-    "q59_ann_ivf_trained" -> {
-      import graft.functions.Lsh.Dim
-      val L = Queries.IvfTrainLists
-      // unit-normalize a centroid table (list, cent) — Scala-driver op order:
-      // left-fold sum of squares, sqrt, per-element divide; zero-norm keeps c
-      def unit(t: String) =
-        s"""SELECT list, CASE WHEN nrm = 0 THEN cent
-                              ELSE list_transform(cent, x -> x / nrm) END AS ucent
-            FROM (SELECT list, cent,
-                         sqrt(list_reduce(list_transform(cent, x -> x*x),
-                                          (a,b) -> a+b)) AS nrm
-                  FROM $t)"""
-      // argmax-cosine list per vector, ties to the LOWEST list id — ≡ Ivf
-      // .assignList's array_position(scores, array_max(scores)) first-wins
-      def assign(src: String, u: String) =
-        s"""SELECT vec_id, v, list FROM (
-              SELECT vec_id, v, list,
-                     row_number() OVER (PARTITION BY vec_id
-                                        ORDER BY sc DESC, list) AS rn
-              FROM (SELECT s.vec_id, s.v, u.list,
-                           ${dotSql("u.ucent", "s.v")} AS sc
-                    FROM $src s, $u u))
-            WHERE rn = 1"""
-      // exact-decimal per-position sums; a list that loses all members keeps
-      // its previous centroid — ≡ Ivf.trainKMeans's refined.getOrElse
-      def refine(a: String, prev: String) =
-        s"""SELECT p.list, COALESCE(r.cent, p.cent) AS cent
-            FROM $prev p LEFT JOIN (
-              SELECT list, array_agg(CAST(s AS DOUBLE) ORDER BY i) AS cent
-              FROM (SELECT list, i, SUM(CAST(v[i] AS DECIMAL(20,10))) AS s
-                    FROM $a, (SELECT unnest(generate_series(1, $Dim)) AS i) g
-                    GROUP BY 1, 2)
-              GROUP BY list) r ON p.list = r.list"""
-      s"""WITH train AS (
-            SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings WHERE vec_id >= ${Queries.AnnQueryMaxId}),
-          c0 AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) - 1 AS list,
-                        v AS cent
-                 FROM (SELECT vec_id, v FROM train ORDER BY vec_id LIMIT $L)),
-          u0 AS (${unit("c0")}),
-          a1 AS (${assign("train", "u0")}),
-          c1 AS (${refine("a1", "c0")}),
-          u1 AS (${unit("c1")}),
-          a2 AS (${assign("train", "u1")}),
-          c2 AS (${refine("a2", "c1")}),
-          u2 AS (${unit("c2")}),
-          allv AS (SELECT vec_id, embedding,
-                          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                   FROM embeddings),
-          lab AS (${assign("allv", "u2")}),
-          e AS (SELECT a.vec_id, a.embedding, lab.list AS label, $nrmSql AS nrm
-                FROM allv a JOIN lab ON a.vec_id = lab.vec_id),
-          q AS (SELECT vec_id AS query_id, embedding AS qe, nrm AS qn
-                FROM e WHERE vec_id < ${Queries.AnnQueryMaxId}),
-          c AS (SELECT vec_id AS neighbor_id, label, embedding AS ce, nrm AS cn
-                FROM e WHERE vec_id >= ${Queries.AnnQueryMaxId}),
-          cent AS (
-            SELECT label, array_agg(CAST(s AS DOUBLE) ORDER BY i) AS centroid
-            FROM (SELECT label, i,
-                         SUM(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(20,10))) AS s
-                  FROM e, (SELECT unnest(generate_series(1, $Dim)) AS i) g
-                  WHERE vec_id >= ${Queries.AnnQueryMaxId}
-                  GROUP BY 1, 2)
-            GROUP BY label),
-          pr AS (
-            SELECT query_id, qe, qn, label FROM (
-              SELECT query_id, qe, qn, label,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY ccos DESC, label) AS lr
-              FROM (SELECT q.query_id, q.qe, q.qn, cent.label,
-                           ${dotSql("qe", "centroid")}
-                             / (q.qn * sqrt(${dotSql("centroid", "centroid")})) AS ccos
-                    FROM q, cent))
-            WHERE lr <= ${Queries.IvfNProbe}),
-          scored AS (
-            SELECT query_id, neighbor_id, ${dotSql("qe", "ce")} / (qn * cn) AS cos
-            FROM pr JOIN c USING (label))
-          SELECT query_id, neighbor_id, cos, rank FROM (
-            SELECT query_id, neighbor_id, cos,
-                   CAST(row_number() OVER (PARTITION BY query_id
-                                           ORDER BY cos DESC, neighbor_id) AS INT) AS rank
-            FROM scored)
-          WHERE rank <= ${Queries.AnnK}"""
-    },
-
-    "q32_sessionize" ->
-      s"""WITH e AS (SELECT user_id, event_id, ts, value,
-                  epoch_us(ts) - lag(epoch_us(ts))
-                    OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-           FROM events),
-          s AS (SELECT user_id, ts, value,
-                  CAST(SUM(CASE WHEN gap > ${Queries.SessionGapMicros} THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) + 1 AS BIGINT) AS session_seq
-                FROM e)
-          SELECT user_id, session_seq,
-                 MIN(ts) AS session_start, MAX(ts) AS session_end,
-                 COUNT(*) AS n_events,
-                 CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-          FROM s GROUP BY 1, 2""",
-
-    "q47_text_repetition" ->
-      s"""SELECT doc_id,
-                 CAST(len(ws) - 1 AS INT) AS n_bigrams,
-                 CAST(len(ws) - 1 - len(list_distinct(bg)) AS INT) AS n_dup_bigrams,
-                 CAST(len(ws) - 1 - len(list_distinct(bg)) AS DOUBLE) / (len(ws) - 1)
-                   AS rep_ratio
-          FROM (SELECT doc_id, ws,
-                       list_transform(generate_series(1, len(ws) - 1),
-                         i -> ws[i] || ' ' || ws[i+1]) AS bg
-                FROM (SELECT doc_id, $ws AS ws FROM documents))
-          WHERE len(ws) >= 2""",
-
-    "q48_quality_filter" -> {
-      val enStops = inList(graft.functions.TextAnalysis.LangProfiles.head._2)
-      s"""SELECT doc_id, n_words, rep_ratio, stop_ratio FROM (
-            SELECT doc_id,
-                   CAST(len(ws) AS INT) AS n_words,
-                   CAST(len(ws) - 1 - len(list_distinct(bg)) AS DOUBLE) / (len(ws) - 1)
-                     AS rep_ratio,
-                   CAST(len(list_filter(ws, w -> w IN $enStops)) AS DOUBLE) / len(ws)
-                     AS stop_ratio
-            FROM (SELECT doc_id, ws,
-                         list_transform(generate_series(1, len(ws) - 1),
-                           i -> ws[i] || ' ' || ws[i+1]) AS bg
-                  FROM (SELECT doc_id, $ws AS ws FROM documents))
-            WHERE len(ws) >= 2)
-          WHERE n_words BETWEEN ${Queries.QfMinWords} AND ${Queries.QfMaxWords}
-            AND rep_ratio <= ${Queries.QfMaxRep}
-            AND stop_ratio >= ${Queries.QfMinStop}"""
-    },
-
-    "q49_source_mix" ->
-      s"""WITH per AS (
-            SELECT source, lang, COUNT(*) AS n_docs,
-                   CAST(SUM(CAST(len($ws) AS BIGINT)) AS BIGINT) AS total_tokens
-            FROM documents GROUP BY 1, 2)
-          SELECT source, lang, n_docs, total_tokens,
-                 CAST(total_tokens AS DOUBLE) /
-                   CAST(SUM(total_tokens) OVER () AS DOUBLE) AS token_share
-          FROM per""",
-
-    "q50_dedup_prefix" ->
-      s"""SELECT MIN(doc_id) AS doc_id, prefix_fp, COUNT(*) AS dup_count
-          FROM (SELECT doc_id,
-                       ${fpSql(s"array_to_string(($ws)[1:${Queries.PrefixWords}], ' ')")}
-                         AS prefix_fp
-                FROM documents)
-          GROUP BY prefix_fp""",
-
-    "q52_shard_pack" ->
-      s"""WITH t AS (SELECT doc_id, source, CAST(len($ws) AS BIGINT) AS n_tokens
-                     FROM documents),
-          c AS (SELECT doc_id, source, n_tokens,
-                       SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                                           ROWS UNBOUNDED PRECEDING) AS cum
-                FROM t)
-          SELECT source, (CAST(cum AS BIGINT) - n_tokens) // ${Queries.ShardTokens} AS shard,
-                 COUNT(*) AS n_docs,
-                 CAST(SUM(n_tokens) AS BIGINT) AS shard_tokens
-          FROM c GROUP BY 1, 2""",
-
-    "q53_top_ngrams" ->
-      s"""SELECT ngram, COUNT(*) AS df
-          FROM (SELECT unnest(list_distinct(list_transform(
-                         generate_series(1, len($ws) - 1),
-                         i -> ($ws)[i] || ' ' || ($ws)[i+1]))) AS ngram
-                FROM documents)
-          GROUP BY ngram
-          ORDER BY df DESC, ngram
-          LIMIT ${Queries.TopNgramsK}""",
-
-    "q54_text_unicode" -> {
-      val cases = Queries.UnicodeSnippets.zipWithIndex
-        .map { case (s, i) => s"WHEN $i THEN '$s'" }.mkString(" ")
-      s"""WITH u AS (SELECT doc_id,
-                  (CASE doc_id % 5 $cases END) || ' ' || text AS utext
-           FROM documents),
-          n AS (SELECT doc_id, nfc_normalize(lower(utext)) AS norm_text FROM u)
-          SELECT doc_id, norm_text,
-                 CAST(len(regexp_extract_all(norm_text, '[\\pL\\pN]+')) AS INT)
-                   AS n_tokens,
-                 CAST(len(list_distinct(regexp_extract_all(norm_text, '[\\pL\\pN]+'))) AS INT)
-                   AS n_distinct
-          FROM n"""
-    },
-
-    "q55_pii_redact" -> {
-      // DuckDB regular string literals keep backslashes, so the Java-side
-      // pattern interpolates verbatim
-      val em = Queries.EmailRe
-      s"""WITH u AS (SELECT doc_id,
-                  text || (CASE doc_id % 3 WHEN 0 THEN '${Queries.PiiSnippets(0)}'
-                                           WHEN 1 THEN '${Queries.PiiSnippets(1)}'
-                                           ELSE '' END) AS utext
-           FROM documents)
-          SELECT doc_id,
-                 regexp_replace(regexp_replace(utext, '$em', '<EMAIL>', 'g'),
-                                '${Queries.PhoneRe}', '<PHONE>', 'g') AS clean_text,
-                 CAST(len(regexp_extract_all(utext, '$em')) AS INT) AS n_emails,
-                 CAST(len(regexp_extract_all(utext, '${Queries.PhoneRe}')) AS INT)
-                   AS n_phones
-          FROM u"""
-    },
-
-    "q56_decontaminate" -> decontamSql,
-
-    // q243 — the bloom prefilter is semantics-neutral (false positives
-    // die in the exact confirm join, false negatives are impossible), so
-    // the bloom path shares q56's oracle verbatim.
-    "q243_bloom_decontaminate" -> decontamSql,
-
-    "q57_lang_mix_weights" ->
-      s"""WITH per AS (
-            SELECT lang, COUNT(*) AS n_docs,
-                   CAST(SUM(CAST(len($ws) AS BIGINT)) AS BIGINT) AS lang_tokens
-            FROM documents GROUP BY 1),
-          z AS (SELECT list_reduce(
-                  list_transform(list(lang_tokens ORDER BY lang),
-                    t -> sqrt(CAST(t AS DOUBLE))),
-                  (a, b) -> a + b) AS z
-                FROM per)
-          SELECT lang, n_docs, lang_tokens,
-                 sqrt(CAST(lang_tokens AS DOUBLE)) / z AS weight
-          FROM per, z""",
-
-    "q86_epoch_mix" -> {
-      val r = Queries.SampleResolution
-      s"""WITH per AS (
-            SELECT lang, CAST(SUM(CAST(len($ws) AS BIGINT)) AS BIGINT)
-                     AS lang_tokens
-            FROM documents GROUP BY 1),
-          z AS (SELECT list_reduce(
-                  list_transform(list(lang_tokens ORDER BY lang),
-                    t -> sqrt(CAST(t AS DOUBLE))),
-                  (a, b) -> a + b) AS z
-                FROM per),
-          wt AS (SELECT lang,
-                        least(1.0, sqrt(CAST(lang_tokens AS DOUBLE)) / z
-                                     * ${Queries.EpochTokens}.0
-                                     / CAST(lang_tokens AS DOUBLE))
-                          AS accept_rate
-                 FROM per, z),
-          d AS (SELECT doc_id, lang, CAST(len($ws) AS BIGINT) AS n_tokens,
-                       CAST(${fpSql("CAST(doc_id AS VARCHAR)")} % $r AS DOUBLE)
-                         / $r.0 AS u
-                FROM documents)
-          SELECT lang, accept_rate, COUNT(*) AS n_kept,
-                 CAST(SUM(n_tokens) AS BIGINT) AS kept_tokens
-          FROM d JOIN wt USING (lang)
-          WHERE u < accept_rate
-          GROUP BY 1, 2"""
-    },
-
-    "q58_shard_manifest" ->
-      s"""WITH t AS (SELECT doc_id, source, CAST(len($ws) AS BIGINT) AS n_tokens
-                     FROM documents),
-          c AS (SELECT doc_id, source, n_tokens,
-                       CAST(SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                            ROWS UNBOUNDED PRECEDING) AS BIGINT) - n_tokens AS off
-                FROM t)
-          SELECT source, off // ${Queries.ShardTokens} AS shard,
-                 COUNT(*) AS n_docs,
-                 string_agg(CAST(doc_id AS VARCHAR) || '@' || CAST(off AS VARCHAR),
-                            ';' ORDER BY doc_id) AS manifest
-          FROM c GROUP BY 1, 2""",
-
-    "q31_multimodal_meta" ->
-      s"""SELECT doc_id,
-                 CASE WHEN doc_id % 3 = 0 THEN 'image/png'
-                      WHEN doc_id % 3 = 1 THEN 'audio/wav'
-                      ELSE 'video/mp4' END AS media_type,
-                 CAST(octet_length(encode(text)) AS INT) AS byte_len,
-                 substr(hex(encode(text)), 1, 16) AS head_hex,
-                 ${fpSql("text")} AS checksum,
-                 CAST(64 + octet_length(encode(text)) % 193 AS INT) AS width,
-                 CAST(64 + (octet_length(encode(text)) * 31) % 193 AS INT) AS height
-          FROM documents""",
-
-    "q60_star_left" ->
-      """SELECT COALESCE(c_mktsegment, 'UNMATCHED') AS segment,
-                COUNT(*) AS n_orders,
-                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-         FROM orders
-         LEFT JOIN (SELECT * FROM customer WHERE c_custkey % 3 = 0) c
-           ON o_custkey = c_custkey
-         GROUP BY 1""",
-
-    "q61_ivf_assign_bigk" ->
-      s"""WITH base AS (
-            SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) - 1 AS rn,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cent
-            FROM (SELECT vec_id, embedding FROM embeddings
-                  WHERE vec_id >= ${Queries.AnnQueryMaxId}
-                  ORDER BY vec_id LIMIT ${Queries.BigKLists})),
-          cents AS (
-            SELECT g.i AS list, b.cent
-            FROM (SELECT unnest(generate_series(0, ${Queries.BigKLists - 1})) AS i) g
-            JOIN base b ON b.rn = g.i % (SELECT count(*) FROM base)),
-          u AS (SELECT list, CASE WHEN nrm = 0 THEN cent
-                                  ELSE list_transform(cent, x -> x / nrm) END AS ucent
-                FROM (SELECT list, cent,
-                             sqrt(list_reduce(list_transform(cent, x -> x*x),
-                                              (a,b) -> a+b)) AS nrm
-                      FROM cents)),
-          v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                FROM embeddings WHERE vec_id < ${Queries.BigKAssignMaxId})
-          SELECT vec_id, list FROM (
-            SELECT v.vec_id, u.list,
-                   row_number() OVER (PARTITION BY v.vec_id
-                                      ORDER BY ${dotSql("u.ucent", "v.v")} DESC,
-                                               u.list) AS rn
-            FROM v, u)
-          WHERE rn = 1""",
-
-    "q64_session_concurrency" -> sessionConcurrencySql,
-
-    // q71 computes the same answer by global prefix-sum instead of a pair
-    // join — one oracle, two physical strategies (see PLANS.md crossover)
-    "q71_session_concurrency_fast" -> sessionConcurrencySql,
-
-    "q72_global_rank" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice,
-                row_number() OVER (ORDER BY l_extendedprice DESC,
-                                            l_orderkey DESC,
-                                            l_linenumber DESC) AS revenue_rank
-         FROM lineitem""",
-
-    "q73_session_overlap" -> sessionOverlapSql,
-
-    // q76 computes q73's answer with two global running counts instead of
-    // materializing overlap pairs — one oracle, two physical strategies
-    "q76_session_overlap_fast" -> sessionOverlapSql,
-
-    "q74_cumulative_users" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS day FROM events),
-          daily AS (SELECT day, COUNT(DISTINCT user_id) AS n_active
-                    FROM e GROUP BY 1),
-          firsts AS (SELECT day, COUNT(*) AS n_new
-                     FROM (SELECT user_id, MIN(day) AS day FROM e GROUP BY 1)
-                     GROUP BY 1)
-          SELECT day, n_active, COALESCE(n_new, 0) AS n_new,
-                 CAST(SUM(COALESCE(n_new, 0))
-                      OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS BIGINT)
-                   AS cum_users
-          FROM daily LEFT JOIN firsts USING (day)""",
-
-    "q75_event_transitions" ->
-      """SELECT from_type, event_type AS to_type, COUNT(*) AS n_transitions
-         FROM (SELECT event_type,
-                      lag(event_type) OVER (PARTITION BY user_id
-                                            ORDER BY ts, event_id) AS from_type
-               FROM events)
-         WHERE from_type IS NOT NULL
-         GROUP BY 1, 2""",
-
-    "q77_quality_sample" -> {
-      val enStops = inList(graft.functions.TextAnalysis.LangProfiles.head._2)
-      val r = Queries.SampleResolution
-      s"""SELECT doc_id, quality_score FROM (
-            SELECT doc_id,
-                   0.5 * (CAST(len(list_filter($ws, w -> w IN $enStops)) AS DOUBLE)
-                          / len($ws))
-                     + 0.5 * least(1.0, CAST(len($ws) AS DOUBLE) / 200.0)
-                     AS quality_score,
-                   CAST(${fpSql("CAST(doc_id AS VARCHAR)")} % $r AS DOUBLE) / $r.0 AS u
-            FROM documents)
-          WHERE u < quality_score"""
-    },
-
-    "q78_robust_outliers" ->
-      """WITH med AS (SELECT event_type, quantile_cont(value, 0.5) AS med
-                      FROM events GROUP BY 1),
-          d AS (SELECT event_id, e.event_type, value, med,
-                       abs(value - med) AS dev
-                FROM events e JOIN med USING (event_type)),
-          mad AS (SELECT event_type, quantile_cont(dev, 0.5) AS mad
-                  FROM d GROUP BY 1)
-          SELECT event_id, d.event_type, value, med, mad
-          FROM d JOIN mad USING (event_type)
-          WHERE dev > 3.0 * mad""",
-
-    "q101_gap_fill_revenue" ->
-      """WITH daily AS (
-           SELECT c_mktsegment AS segment, CAST(o_orderdate AS DATE) AS day,
-                  SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev_dec
-           FROM orders JOIN customer ON o_custkey = c_custkey
-           GROUP BY 1, 2),
-          span AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM daily),
-          grid AS (
-            SELECT s.segment, CAST(g.d AS DATE) AS day
-            FROM (SELECT DISTINCT segment FROM daily) s
-            CROSS JOIN (SELECT unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS d
-                        FROM span) g),
-          j AS (
-            SELECT g.segment, g.day, d.rev_dec,
-                   COUNT(d.rev_dec) OVER (PARTITION BY g.segment ORDER BY g.day
-                                          ROWS UNBOUNDED PRECEDING) AS island
-            FROM grid g LEFT JOIN daily d
-              ON d.segment = g.segment AND d.day = g.day)
-          SELECT segment, day,
-                 CAST(rev_dec AS DOUBLE) AS revenue,
-                 CAST(MAX(rev_dec) OVER (PARTITION BY segment, island)
-                      AS DOUBLE) AS filled_revenue,
-                 (rev_dec IS NULL) AS is_gap
-          FROM j""",
-
-    // q252 — the same grid as q101 with IGNORE NULLS windows for the
-    // surrounding observations and the single fixed-shape
-    // a + (b−a)·t interpolation expression; DATE−DATE is integer days
-    // in both engines.
-    "q252_interp_gap_fill" ->
-      """WITH daily AS (
-           SELECT c_mktsegment AS segment, CAST(o_orderdate AS DATE) AS day,
-                  SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev_dec
-           FROM orders JOIN customer ON o_custkey = c_custkey
-           GROUP BY 1, 2),
-          span AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM daily),
-          grid AS (
-            SELECT s.segment, CAST(g.d AS DATE) AS day
-            FROM (SELECT DISTINCT segment FROM daily) s
-            CROSS JOIN (SELECT unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS d
-                        FROM span) g),
-          j AS (SELECT g.segment, g.day, d.rev_dec
-                FROM grid g LEFT JOIN daily d USING (segment, day)),
-          w AS (SELECT segment, day, rev_dec,
-                  last_value(rev_dec IGNORE NULLS) OVER
-                    (PARTITION BY segment ORDER BY day
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
-                  last_value(CASE WHEN rev_dec IS NOT NULL THEN day END
-                             IGNORE NULLS) OVER
-                    (PARTITION BY segment ORDER BY day
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pd,
-                  last_value(rev_dec IGNORE NULLS) OVER
-                    (PARTITION BY segment ORDER BY day DESC
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS nv,
-                  last_value(CASE WHEN rev_dec IS NOT NULL THEN day END
-                             IGNORE NULLS) OVER
-                    (PARTITION BY segment ORDER BY day DESC
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS nd
-                FROM j)
-          SELECT segment, day, CAST(rev_dec AS DOUBLE) AS revenue,
-                 CASE WHEN rev_dec IS NOT NULL THEN CAST(rev_dec AS DOUBLE)
-                      WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
-                        CAST(pv AS DOUBLE) +
-                        (CAST(nv AS DOUBLE) - CAST(pv AS DOUBLE)) *
-                        (CAST(day - pd AS DOUBLE) / CAST(nd - pd AS DOUBLE))
-                      ELSE NULL END AS interp_revenue,
-                 (rev_dec IS NULL) AS is_gap
-          FROM w""",
-
-    "q102_supplier_load_islands" ->
-      """WITH iv AS (
-           SELECT l_suppkey AS suppkey,
-                  LEAST(date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)),
-                        date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE)))
-                    AS st,
-                  GREATEST(date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)),
-                           date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE)))
-                    AS en
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-          tot AS (SELECT suppkey, SUM(en - st + 1) AS dur,
-                         MIN(st) AS lo, MAX(en) AS hi
-                  FROM iv GROUP BY 1),
-          bounds AS (
-            SELECT suppkey, st AS ts, 1 AS delta FROM iv
-            UNION ALL
-            SELECT suppkey, en + 1 AS ts, -1 AS delta FROM iv),
-          run AS (
-            SELECT suppkey, ts, delta,
-                   SUM(delta) OVER (PARTITION BY suppkey ORDER BY ts, delta
-                                    ROWS UNBOUNDED PRECEDING) AS cnt,
-                   LEAD(ts) OVER (PARTITION BY suppkey ORDER BY ts, delta) AS nxt
-            FROM bounds),
-          seg AS (
-            SELECT r.suppkey, r.ts, r.nxt, r.cnt
-            FROM run r JOIN tot t ON r.suppkey = t.suppkey
-            WHERE r.nxt IS NOT NULL AND r.nxt > r.ts
-              AND r.cnt * (t.hi - t.lo + 1) > t.dur),
-          isl AS (
-            SELECT *, CASE WHEN LAG(nxt) OVER (PARTITION BY suppkey ORDER BY ts)
-                                = ts THEN 0 ELSE 1 END AS f
-            FROM seg),
-          isl2 AS (
-            SELECT *, CAST(SUM(f) OVER (PARTITION BY suppkey ORDER BY ts
-                                        ROWS UNBOUNDED PRECEDING) AS BIGINT)
-                        AS island_seq
-            FROM isl)
-          SELECT suppkey, island_seq,
-                 DATE '1970-01-01' + CAST(MIN(ts) AS INT) AS start_day,
-                 DATE '1970-01-01' + CAST(MAX(nxt) - 1 AS INT) AS end_day,
-                 CAST(MAX(nxt) - MIN(ts) AS BIGINT) AS n_days,
-                 CAST(MAX(cnt) AS BIGINT) AS peak_open
-          FROM isl2 GROUP BY 1, 2""",
-
-    "q103_mom_growth" ->
-      """WITH m AS (
-           SELECT n_name AS nation,
-                  CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT)
-                    AS month_key,
-                  SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-           FROM orders JOIN customer ON o_custkey = c_custkey
-                       JOIN nation ON c_nationkey = n_nationkey
-           GROUP BY 1, 2),
-          l AS (
-            SELECT nation, month_key, rev,
-                   LAG(month_key) OVER w AS lag_key,
-                   LAG(rev) OVER w AS lag_rev
-            FROM m WINDOW w AS (PARTITION BY nation ORDER BY month_key)),
-          g AS (
-            SELECT nation, month_key, rev,
-                   CASE WHEN lag_key = CASE WHEN month_key % 100 = 1
-                                            THEN month_key - 89
-                                            ELSE month_key - 1 END
-                        THEN lag_rev END AS prev
-            FROM l)
-          SELECT nation, month_key,
-                 CAST(rev AS DOUBLE) AS revenue,
-                 CAST(prev AS DOUBLE) AS prev_revenue,
-                 CAST(rev - prev AS DOUBLE) AS change,
-                 CASE WHEN prev IS NOT NULL
-                      THEN CAST(rev - prev AS DOUBLE) / CAST(prev AS DOUBLE)
-                 END AS pct_change
-          FROM g""",
-
-    "q104_dormant_customers" -> {
-      s"""WITH thr AS (
-            SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
-                     / COUNT(*) AS t
-            FROM customer WHERE c_acctbal > 0.0),
-          recent AS (
-            SELECT DISTINCT o_custkey FROM orders
-            WHERE o_orderdate >= TIMESTAMP '${Queries.DormantCutoff}')
-          SELECT c_mktsegment AS segment, COUNT(*) AS n_customers,
-                 CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
-                   AS total_balance
-          FROM customer CROSS JOIN thr
-          WHERE c_acctbal > t
-            AND NOT EXISTS (SELECT 1 FROM recent
-                            WHERE recent.o_custkey = customer.c_custkey)
-          GROUP BY 1"""
-    },
-
-    "q105_fuzzy_part_names" -> {
-      val d = Queries.FuzzyMaxDist
-      s"""WITH dict AS (SELECT p_name AS name, COUNT(*) AS n_rows
-                        FROM part GROUP BY 1),
-          b AS (SELECT name, n_rows,
-                       list_extract(string_split(name, ' '), -1) AS blk
-                FROM dict)
-          SELECT a.name AS name_a, b2.name AS name_b,
-                 CAST(levenshtein(a.name, b2.name) AS BIGINT) AS edit_dist,
-                 a.n_rows AS n_parts_a, b2.n_rows AS n_parts_b
-          FROM b a JOIN b b2 ON a.blk = b2.blk AND a.name < b2.name
-          WHERE levenshtein(a.name, b2.name) <= $d"""
-    },
-
-    "q106_top_event_type" ->
-      """WITH c AS (SELECT user_id, event_type, COUNT(*) AS cnt
-                    FROM events GROUP BY 1, 2),
-          r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-                          ORDER BY cnt DESC, event_type) AS rn
-                FROM c)
-          SELECT user_id, event_type AS top_event_type, cnt AS n_events
-          FROM r WHERE rn = 1""",
-
-    "q107_metric_correlation" ->
-      """WITH q AS (
-           SELECT l_returnflag AS returnflag,
-                  CAST(trunc(CAST(l_quantity AS DECIMAL(18,2))) AS BIGINT) AS x,
-                  CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-                    // 100000 AS y
-           FROM lineitem),
-          s AS (SELECT returnflag, COUNT(*) AS n,
-                       CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-                       CAST(SUM(x*x) AS BIGINT) AS sxx,
-                       CAST(SUM(y*y) AS BIGINT) AS syy,
-                       CAST(SUM(x*y) AS BIGINT) AS sxy
-                FROM q GROUP BY 1)
-          SELECT returnflag, n AS n_rows,
-                 CAST(n*sxy - sx*sy AS DOUBLE) /
-                   (sqrt(CAST(n*sxx - sx*sx AS DOUBLE))
-                    * sqrt(CAST(n*syy - sy*sy AS DOUBLE))) AS corr_qty_price
-          FROM s""",
-
-    "q108_token_gini" ->
-      s"""WITH t AS (
-            SELECT source, doc_id,
-                   COALESCE(CAST(len($ws) AS BIGINT), 0) AS tok
-            FROM documents),
-          r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY source
-                               ORDER BY tok, doc_id) AS BIGINT) AS i
-                FROM t),
-          g AS (SELECT source, COUNT(*) AS n_docs,
-                       CAST(SUM(tok) AS BIGINT) AS total_tokens,
-                       CAST(SUM(i * tok) AS BIGINT) AS si
-                FROM r GROUP BY 1)
-          SELECT source, n_docs, total_tokens,
-                 CASE WHEN total_tokens > 0 THEN
-                   CAST(2*si - (n_docs + 1)*total_tokens AS DOUBLE)
-                     / CAST(n_docs * total_tokens AS DOUBLE)
-                 END AS gini
-          FROM g""",
-
-    "q109_interarrival_hist" ->
-      """WITH g AS (
-           SELECT epoch_us(ts) - LAG(epoch_us(ts))
-                    OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-                  AS gap
-           FROM events),
-          b AS (SELECT CASE WHEN gap < 1000000 THEN '0_lt_1s'
-                            WHEN gap < 60000000 THEN '1_1s_1m'
-                            WHEN gap < 3600000000 THEN '2_1m_1h'
-                            WHEN gap < 86400000000 THEN '3_1h_1d'
-                            ELSE '4_ge_1d' END AS gap_bucket
-                FROM g WHERE gap IS NOT NULL),
-          c AS (SELECT gap_bucket, COUNT(*) AS n_gaps FROM b GROUP BY 1)
-          SELECT gap_bucket, n_gaps,
-                 CAST(n_gaps AS DOUBLE)
-                   / CAST(SUM(n_gaps) OVER () AS DOUBLE) AS share
-          FROM c""",
-
-    "q110_fk_audit" ->
-      """WITH a1 AS (
-           SELECT 'lineitem_orders' AS relationship, COUNT(*) AS n_rows,
-                  CAST(SUM(CASE WHEN k.o_orderkey IS NULL THEN 1 ELSE 0 END)
-                       AS BIGINT) AS n_orphans
-           FROM lineitem l LEFT JOIN (SELECT DISTINCT o_orderkey FROM orders) k
-             ON l.l_orderkey = k.o_orderkey),
-          a2 AS (
-           SELECT 'lineitem_part' AS relationship, COUNT(*) AS n_rows,
-                  CAST(SUM(CASE WHEN k.p_partkey IS NULL THEN 1 ELSE 0 END)
-                       AS BIGINT) AS n_orphans
-           FROM lineitem l LEFT JOIN (SELECT DISTINCT p_partkey FROM part) k
-             ON l.l_partkey = k.p_partkey),
-          a3 AS (
-           SELECT 'lineitem_supplier' AS relationship, COUNT(*) AS n_rows,
-                  CAST(SUM(CASE WHEN k.s_suppkey IS NULL THEN 1 ELSE 0 END)
-                       AS BIGINT) AS n_orphans
-           FROM lineitem l LEFT JOIN (SELECT DISTINCT s_suppkey FROM supplier) k
-             ON l.l_suppkey = k.s_suppkey),
-          a4 AS (
-           SELECT 'orders_customer' AS relationship, COUNT(*) AS n_rows,
-                  CAST(SUM(CASE WHEN k.c_custkey IS NULL THEN 1 ELSE 0 END)
-                       AS BIGINT) AS n_orphans
-           FROM orders o LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) k
-             ON o.o_custkey = k.c_custkey)
-          SELECT * FROM a1 UNION ALL SELECT * FROM a2
-          UNION ALL SELECT * FROM a3 UNION ALL SELECT * FROM a4""",
-
-    "q111_source_doc_cap" -> {
-      val enStops = inList(graft.functions.TextAnalysis.LangProfiles.head._2)
-      s"""WITH q AS (
-            SELECT source, doc_id,
-                   0.5 * (CAST(len(list_filter($ws, w -> w IN $enStops)) AS DOUBLE)
-                          / len($ws))
-                     + 0.5 * least(1.0, CAST(len($ws) AS DOUBLE) / 200.0)
-                     AS quality_score
-            FROM documents),
-          r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY source
-                               ORDER BY quality_score DESC, doc_id) AS BIGINT)
-                            AS rank_in_source
-                FROM q)
-          SELECT source, doc_id, quality_score, rank_in_source
-          FROM r WHERE rank_in_source <= ${Queries.SourceCap}"""
-    },
-
-    "q112_multi_touch" ->
-      """WITH ev AS (
-           SELECT user_id, event_id, ts, event_type FROM events
-           WHERE event_type IN ('click', 'purchase')),
-          n AS (
-           SELECT *, COALESCE(SUM(CASE WHEN event_type = 'click' THEN 1
-                                       ELSE 0 END)
-                       OVER (PARTITION BY user_id
-                             ORDER BY epoch_us(ts), event_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                      0) AS n_touches
-           FROM ev)
-          SELECT user_id, event_id AS purchase_event_id, ts AS purchase_ts,
-                 CAST(n_touches AS BIGINT) AS n_touches,
-                 CASE WHEN n_touches > 0
-                      THEN 1.0 / CAST(n_touches AS DOUBLE) END
-                   AS credit_per_touch
-          FROM n WHERE event_type = 'purchase'""",
-
-    "q113_token_deciles" -> {
-      val k = Queries.NtileK
-      s"""WITH t AS (
-            SELECT doc_id,
-                   COALESCE(CAST(len($ws) AS BIGINT), 0) AS tok
-            FROM documents),
-          r AS (SELECT tok,
-                       CAST(ROW_NUMBER() OVER (ORDER BY tok, doc_id) AS BIGINT)
-                         AS rnk,
-                       CAST(COUNT(*) OVER () AS BIGINT) AS n
-                FROM t)
-          SELECT CAST(least(((rnk - 1) * $k) // n, ${k - 1}) AS BIGINT)
-                   AS decile,
-                 COUNT(*) AS n_docs,
-                 MIN(tok) AS lo_tokens, MAX(tok) AS hi_tokens,
-                 CAST(SUM(tok) AS BIGINT) AS total_tokens
-          FROM r GROUP BY 1"""
-    },
-
-    "q114_revenue_autocorr" -> {
-      val u = Queries.AutocorrUnit
-      def one(k: Int) =
-        s"""SELECT CAST($k AS BIGINT) AS lag_days, n AS n_pairs,
-                   CAST(n*sxy - sx*sy AS DOUBLE) /
-                     (sqrt(CAST(n*sxx - sx*sx AS DOUBLE))
-                      * sqrt(CAST(n*syy - sy*sy AS DOUBLE))) AS autocorr
-            FROM (SELECT COUNT(*) AS n,
-                         CAST(SUM(a.v) AS BIGINT) AS sx,
-                         CAST(SUM(b.v) AS BIGINT) AS sy,
-                         CAST(SUM(a.v*a.v) AS BIGINT) AS sxx,
-                         CAST(SUM(b.v*b.v) AS BIGINT) AS syy,
-                         CAST(SUM(a.v*b.v) AS BIGINT) AS sxy
-                  FROM daily a JOIN daily b ON a.day_num = b.day_num + $k)"""
-      s"""WITH daily AS (
-            SELECT date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE))
-                     AS day_num,
-                   CAST(floor(CAST(SUM($discTerm) AS DOUBLE) / $u) AS BIGINT)
-                     AS v
-            FROM lineitem GROUP BY 1)
-          ${Queries.AutocorrLags.map(one).mkString("\n UNION ALL \n")}"""
-    },
-
-    "q115_scd2_audit" ->
-      """WITH scd AS (
-           SELECT user_id, event_id, ts AS effective_from,
-                  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                    AS effective_to
-           FROM events),
-          l AS (
-           SELECT user_id, effective_from, effective_to,
-                  (effective_to IS NULL) AS is_current,
-                  LAG(effective_to) OVER (PARTITION BY user_id
-                                          ORDER BY effective_from, event_id)
-                    AS prev_to
-           FROM scd)
-          SELECT user_id, COUNT(*) AS n_versions,
-                 CAST(SUM(CASE WHEN prev_to > effective_from THEN 1 ELSE 0 END)
-                      AS BIGINT) AS n_overlaps,
-                 CAST(SUM(CASE WHEN prev_to < effective_from THEN 1 ELSE 0 END)
-                      AS BIGINT) AS n_gaps,
-                 CAST(SUM(CASE WHEN is_current THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_current
-          FROM l GROUP BY 1""",
-
-    "q116_transition_probs" ->
-      """WITH c AS (
-           SELECT from_type, event_type AS to_type, COUNT(*) AS n_transitions
-           FROM (SELECT event_type,
-                        lag(event_type) OVER (PARTITION BY user_id
-                                              ORDER BY ts, event_id) AS from_type
-                 FROM events)
-           WHERE from_type IS NOT NULL
-           GROUP BY 1, 2)
-          SELECT from_type, to_type, n_transitions,
-                 CAST(n_transitions AS DOUBLE) /
-                   CAST(SUM(n_transitions) OVER (PARTITION BY from_type)
-                        AS DOUBLE) AS p
-          FROM c""",
-
-    "q117_join_key_skew" ->
-      """WITH pk AS (SELECT l_partkey, COUNT(*) AS key_rows
-                     FROM lineitem GROUP BY 1),
-          t AS (SELECT COUNT(*) AS total FROM lineitem)
-          SELECT key_rows, COUNT(*) AS n_keys,
-                 CAST(key_rows * COUNT(*) AS BIGINT) AS n_rows,
-                 CAST(key_rows * COUNT(*) AS DOUBLE) / CAST(total AS DOUBLE)
-                   AS row_share
-          FROM pk CROSS JOIN t
-          GROUP BY key_rows, total""",
-
-    "q118_user_diversity" ->
-      """WITH c AS (SELECT user_id, event_type, COUNT(*) AS cnt
-                    FROM events GROUP BY 1, 2)
-          SELECT user_id,
-                 CAST(SUM(cnt) AS BIGINT) AS n_events,
-                 COUNT(*) AS n_types,
-                 1.0 - CAST(SUM(cnt*cnt) AS DOUBLE)
-                         / CAST(SUM(cnt) * SUM(cnt) AS DOUBLE)
-                   AS simpson_diversity
-          FROM c GROUP BY 1""",
-
-    "q119_cluster_histogram" ->
-      s"""$componentCtes,
-          comp AS (SELECT id, MIN(r) AS label FROM reach GROUP BY id),
-          sizes AS (SELECT label, CAST(COUNT(*) AS BIGINT) AS cluster_size
-                    FROM comp GROUP BY 1),
-          h AS (SELECT cluster_size, COUNT(*) AS n_clusters,
-                       CAST(cluster_size * COUNT(*) AS BIGINT) AS n_docs
-                FROM sizes GROUP BY 1)
-          SELECT cluster_size, n_clusters, n_docs,
-                 CAST(n_docs AS DOUBLE)
-                   / CAST(SUM(n_docs) OVER () AS DOUBLE) AS doc_share
-          FROM h""",
-
-    "q120_segment_activity" ->
-      """WITH pu AS (SELECT user_id, COUNT(*) AS n_ev FROM events GROUP BY 1),
-          s AS (
-           SELECT c_mktsegment AS segment, COUNT(*) AS n_customers,
-                  CAST(SUM(CASE WHEN pu.user_id IS NOT NULL THEN 1 ELSE 0 END)
-                       AS BIGINT) AS n_active,
-                  CAST(SUM(COALESCE(pu.n_ev, 0)) AS BIGINT) AS n_events
-           FROM customer LEFT JOIN pu ON c_custkey = pu.user_id
-           GROUP BY 1)
-          SELECT segment, n_customers, n_active, n_events,
-                 CAST(n_active AS DOUBLE) / CAST(n_customers AS DOUBLE)
-                   AS activity_rate,
-                 CASE WHEN n_active > 0
-                      THEN CAST(n_events AS DOUBLE) / CAST(n_active AS DOUBLE)
-                 END AS events_per_active
-          FROM s""",
-
-    "q121_hll_distinct" -> {
-      import graft.functions.Sketches._
-      val m = Queries.HllM
-      val p = java.lang.Integer.numberOfTrailingZeros(m)
-      val w = hllRestBits(m)
-      val amm = hllNumerator(m)
-      s"""WITH h0 AS (SELECT ($HA * l_orderkey + $HB) % $P AS h FROM lineitem),
-          h AS (SELECT (((h*h) % $P) * h) % $P AS h FROM h0),
-          s AS (SELECT h % $m AS idx, ${hllRhoSql(s"h // ${1L << p}", w)} AS rho
-                FROM h),
-          r AS (SELECT idx, MAX(rho) AS rho FROM s GROUP BY 1),
-          g AS (SELECT unnest(generate_series(0, ${m - 1})) AS idx),
-          d AS (SELECT g.idx, COALESCE(r.rho, 0) AS rho
-                FROM g LEFT JOIN r USING (idx)),
-          z AS (SELECT SUM(CAST(1.0 AS DOUBLE) / CAST((1::BIGINT << rho) AS DOUBLE)) AS z
-                FROM d),
-          ex AS (SELECT COUNT(DISTINCT l_orderkey) AS exact_distinct
-                 FROM lineitem)
-          SELECT CAST($m AS BIGINT) AS m, exact_distinct,
-                 CAST($amm AS DOUBLE) / z AS est_distinct,
-                 (CAST($amm AS DOUBLE) / z)
-                   / CAST(exact_distinct AS DOUBLE) AS est_ratio
-          FROM z, ex"""
-    },
-
-    "q122_hll_grouped" -> {
-      import graft.functions.Sketches._
-      val m = Queries.HllGroupM
-      val p = java.lang.Integer.numberOfTrailingZeros(m)
-      val w = hllRestBits(m)
-      val amm = hllNumerator(m)
-      s"""WITH h0 AS (SELECT event_type, ($HA * event_id + $HB) % $P AS h
-                      FROM events),
-          h AS (SELECT event_type, (((h*h) % $P) * h) % $P AS h FROM h0),
-          s AS (SELECT event_type, h % $m AS idx,
-                       ${hllRhoSql(s"h // ${1L << p}", w)} AS rho
-                FROM h),
-          r AS (SELECT event_type, idx, MAX(rho) AS rho FROM s GROUP BY 1, 2),
-          g AS (SELECT et.event_type, gs.idx
-                FROM (SELECT DISTINCT event_type FROM events) et
-                CROSS JOIN (SELECT unnest(generate_series(0, ${m - 1})) AS idx) gs),
-          d AS (SELECT g.event_type, g.idx, COALESCE(r.rho, 0) AS rho
-                FROM g LEFT JOIN r USING (event_type, idx)),
-          z AS (SELECT event_type,
-                       SUM(CAST(1.0 AS DOUBLE) / CAST((1::BIGINT << rho) AS DOUBLE)) AS z
-                FROM d GROUP BY 1),
-          ex AS (SELECT event_type, COUNT(DISTINCT event_id) AS exact_distinct
-                 FROM events GROUP BY 1)
-          SELECT event_type, CAST($m AS BIGINT) AS m, exact_distinct,
-                 CAST($amm AS DOUBLE) / z AS est_distinct,
-                 (CAST($amm AS DOUBLE) / z)
-                   / CAST(exact_distinct AS DOUBLE) AS est_ratio
-          FROM z JOIN ex USING (event_type)"""
-    },
-
-    "q123_source_novelty" ->
-      s"""WITH d AS (SELECT source, $shinglesSql AS sh FROM documents),
-          ex AS (SELECT DISTINCT source, unnest(sh) AS s FROM d
-                 WHERE len(sh) > 0),
-          ps AS (SELECT s, COUNT(*) AS ns FROM ex GROUP BY 1)
-          SELECT source, COUNT(*) AS n_shingles,
-                 CAST(SUM(CASE WHEN ns = 1 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_unique,
-                 CAST(SUM(CASE WHEN ns = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                   / COUNT(*) AS novelty_rate
-          FROM ex JOIN ps USING (s)
-          GROUP BY 1""",
-
-    "q124_embedding_dim_health" -> {
-      val sc = Queries.DimQuantScale
-      val sc2 = sc.toDouble * sc.toDouble
-      s"""WITH x AS (
-            SELECT unnest(generate_series(1, len(embedding))) AS i, embedding
-            FROM embeddings),
-          q AS (SELECT CAST(i - 1 AS BIGINT) AS dim,
-                       CAST(embedding[i] AS DOUBLE) AS v,
-                       CAST(floor(CAST(embedding[i] AS DOUBLE) * $sc) AS BIGINT)
-                         AS qv
-                FROM x),
-          s AS (SELECT dim, COUNT(*) AS n_vecs,
-                       CAST(SUM(qv) AS BIGINT) AS sq,
-                       CAST(SUM(qv*qv) AS BIGINT) AS sqq,
-                       MIN(v) AS min_val, MAX(v) AS max_val
-                FROM q GROUP BY 1)
-          SELECT dim, n_vecs,
-                 CAST(sq AS DOUBLE) / CAST(n_vecs * $sc AS BIGINT) AS mean_val,
-                 CAST(n_vecs*sqq - sq*sq AS DOUBLE)
-                   / (CAST(n_vecs AS DOUBLE) * CAST(n_vecs - 1 AS DOUBLE)
-                      * $sc2) AS var_val,
-                 min_val, max_val
-          FROM s"""
-    },
-
-    "q125_dup_spans" -> {
-      val k = Queries.DupSpanK
-      s"""WITH d AS (SELECT doc_id, $ws AS w FROM documents),
-          g AS (SELECT doc_id, CAST(i AS BIGINT) AS i,
-                       array_to_string(list_slice(w, i, i + ${k - 1}), ' ') AS gram
-                FROM d, UNNEST(generate_series(1, len(w) - ${k - 1})) t(i)
-                WHERE len(w) >= $k),
-          dup AS (SELECT gram FROM g GROUP BY gram
-                  HAVING COUNT(DISTINCT doc_id) >= 2),
-          h AS (SELECT g.doc_id, g.i, g.i + ${k - 1} AS e
-                FROM g JOIN dup USING (gram)),
-          fl AS (SELECT doc_id, i, e,
-                   CASE WHEN i > COALESCE(MAX(e) OVER (
-                          PARTITION BY doc_id ORDER BY i
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                        -1) + 1
-                        THEN 1 ELSE 0 END AS f
-                 FROM h),
-          sp AS (SELECT doc_id, i, e,
-                   SUM(f) OVER (PARTITION BY doc_id ORDER BY i
-                                ROWS UNBOUNDED PRECEDING) AS island
-                 FROM fl)
-          SELECT doc_id, MIN(i) AS span_start, MAX(e) AS span_end,
-                 CAST(MAX(e) - MIN(i) + 1 AS BIGINT) AS span_tokens
-          FROM sp GROUP BY doc_id, island"""
-    },
-
-    // The recursive-CTE BPE twin: one merge pass is a delimiter-string
-    // replace ('|p1||p2|' → '|p1p2|'), which IS leftmost non-overlapping
-    // merge-all; iteration stops when no ranked pair remains; final token
-    // count = half the '|' count. Semantics cross-checked against an
-    // independent reference implementation of the greedy merge loop.
-    "q126_bpe_tokens" -> {
-      val ms = Queries.BpeMerges
-      val rankCase = "CASE " + ms.zipWithIndex.map { case ((a, b), r) =>
-        s"WHEN syms[i]='$a' AND syms[i+1]='$b' THEN $r" }.mkString(" ") + " END"
-      val bp1Case = "CASE best " + ms.zipWithIndex.map { case ((a, _), r) =>
-        s"WHEN $r THEN '$a'" }.mkString(" ") + " END"
-      val bp2Case = "CASE best " + ms.zipWithIndex.map { case ((_, b), r) =>
-        s"WHEN $r THEN '$b'" }.mkString(" ") + " END"
-      s"""WITH RECURSIVE
-          w AS (SELECT DISTINCT unnest($ws) AS word
-                FROM documents WHERE text IS NOT NULL),
-          bpe(word, s, step) AS (
-            SELECT word,
-                   '|' || array_to_string(list_transform(
-                     generate_series(1, length(word)), i -> word[i]), '||') || '|',
-                   0
-            FROM w
-            UNION ALL
-            SELECT word,
-                   replace(s, '|' || bp1 || '||' || bp2 || '|',
-                              '|' || bp1 || bp2 || '|'),
-                   step + 1
-            FROM (
-              SELECT word, s, step, $bp1Case AS bp1, $bp2Case AS bp2
-              FROM (
-                SELECT word, s, step,
-                       list_min(list_filter(list_transform(
-                         generate_series(1, len(syms)-1), i -> $rankCase),
-                         x -> x IS NOT NULL)) AS best
-                FROM (SELECT word, s, step,
-                             string_split(substr(s, 2, length(s)-2), '||') AS syms
-                      FROM bpe) a) b
-              WHERE best IS NOT NULL) c
-          ),
-          counts AS (
-            SELECT word,
-                   CAST((length(s) - length(replace(s,'|','')))/2 AS BIGINT) AS toks
-            FROM (SELECT word, s,
-                         row_number() OVER (PARTITION BY word ORDER BY step DESC) AS rn
-                  FROM bpe) z
-            WHERE rn = 1
-          ),
-          docw AS (SELECT doc_id, len($ws) AS n_words, unnest($ws) AS word
-                   FROM documents WHERE text IS NOT NULL)
-          SELECT doc_id, CAST(ANY_VALUE(n_words) AS BIGINT) AS n_words,
-                 CAST(SUM(toks) AS BIGINT) AS bpe_tokens
-          FROM docw JOIN counts USING (word)
-          GROUP BY doc_id"""
-    },
-
-    // Streaming sessionizer's emission contract in batch SQL: q32's
-    // sessions minus each key's open tail, cents via exact decimal.
-    "q127_sessionize_stream" ->
-      s"""WITH e AS (SELECT user_id, event_id, ts, value,
-                  epoch_us(ts) - lag(epoch_us(ts))
-                    OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-           FROM events),
-          s AS (SELECT user_id, ts, value,
-                  CAST(SUM(CASE WHEN gap > ${Queries.SessionGapMicros} THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) + 1 AS BIGINT) AS session_seq
-                FROM e),
-          sess AS (SELECT user_id AS key, session_seq,
-                          epoch_us(MIN(ts)) AS start_micros,
-                          epoch_us(MAX(ts)) AS end_micros,
-                          COUNT(*) AS n_events,
-                          CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100
-                            AS BIGINT)) AS BIGINT) AS total_cents
-                   FROM s GROUP BY 1, 2)
-          SELECT key, session_seq, start_micros, end_micros,
-                 n_events, total_cents
-          FROM (SELECT sess.*,
-                       MAX(session_seq) OVER (PARTITION BY key) AS last_seq
-                FROM sess)
-          WHERE session_seq < last_seq""",
-
-    // Streaming funnel tracker's final state ≡ the q66 chain per user.
-    "q128_funnel_stream" ->
-      """WITH b AS (
-           SELECT user_id,
-                  min(CASE WHEN event_type = 'view' THEN epoch_us(ts) END) AS t_view,
-                  list(epoch_us(ts)) FILTER (WHERE event_type = 'click') AS clicks,
-                  list(epoch_us(ts)) FILTER (WHERE event_type = 'purchase') AS purchases
-           FROM events GROUP BY 1),
-          c AS (SELECT user_id, t_view, purchases,
-                       list_min(list_filter(clicks, c -> c > t_view)) AS t_click
-                FROM b),
-          d AS (SELECT user_id, t_view, t_click,
-                       list_min(list_filter(purchases, p -> p > t_click)) AS t_purchase
-                FROM c)
-          SELECT user_id AS "user",
-                 CAST(CASE WHEN t_purchase IS NOT NULL THEN 3
-                           WHEN t_click IS NOT NULL THEN 2
-                           WHEN t_view IS NOT NULL THEN 1
-                           ELSE 0 END AS INT) AS stage,
-                 t_view AS view_micros,
-                 t_click AS click_micros,
-                 t_purchase AS purchase_micros
-          FROM d""",
-
-    // The bloom pre-filter is semantics-neutral (exact semi-join removes
-    // false positives), so the oracle is the plain IN-subquery the
-    // pattern optimizes.
-    "q129_bloom_semi_join" ->
-      s"""SELECT l_returnflag, l_linestatus, COUNT(*) AS n_items,
-                 CAST(SUM($discTerm) AS DOUBLE) AS revenue
-          FROM lineitem
-          WHERE l_orderkey IN (SELECT o_orderkey FROM orders
-                               WHERE o_totalprice > ${Queries.BloomOrderThreshold})
-          GROUP BY 1, 2""",
-
-    "q130_snapshot_diff" -> {
-      def snap(asOf: String) = {
-        val lo = java.time.LocalDate.parse(asOf)
-          .minusDays(Queries.SnapWindowDays)
-        s"""SELECT o_custkey, COUNT(*) AS n,
-                   SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-            FROM orders
-            WHERE o_orderdate >= TIMESTAMP '$lo 00:00:00'
-              AND o_orderdate <  TIMESTAMP '$asOf 00:00:00'
-            GROUP BY 1"""
-      }
-      s"""WITH oldw AS (${snap(Queries.SnapT1)}),
-              neww AS (${snap(Queries.SnapT2)}),
-          j AS (
-            SELECT COALESCE(oldw.o_custkey, neww.o_custkey) AS o_custkey,
-                   oldw.n AS old_n_orders, neww.n AS new_n_orders,
-                   CAST(oldw.rev AS DOUBLE) AS old_revenue,
-                   CAST(neww.rev AS DOUBLE) AS new_revenue,
-                   CASE WHEN oldw.o_custkey IS NULL THEN 'insert'
-                        WHEN neww.o_custkey IS NULL THEN 'delete'
-                        WHEN oldw.n <> neww.n OR oldw.rev <> neww.rev
-                          THEN 'update' END AS change_type
-            FROM oldw FULL OUTER JOIN neww ON oldw.o_custkey = neww.o_custkey)
-          SELECT * FROM j WHERE change_type IS NOT NULL"""
-    },
-
-    // Priority = portable-affine-hash uniform / token weight; one IEEE
-    // division — bit-identical across engines.
-    "q131_weighted_sample" -> {
-      import graft.functions.Sketches.{HA, HB, P}
-      s"""SELECT doc_id, tokens,
-                 CAST(($HA * doc_id + $HB) % $P AS DOUBLE)
-                   / CAST(tokens AS DOUBLE) AS priority
-          FROM (SELECT doc_id, CAST(len($ws) AS BIGINT) AS tokens
-                FROM documents WHERE text IS NOT NULL)
-          WHERE tokens > 0
-          ORDER BY priority, doc_id LIMIT ${Queries.PpsSampleK}"""
-    },
-
-    "q132_doc_chunks" -> {
-      val (c, st) = (Queries.ChunkTokens, Queries.ChunkStride)
-      s"""WITH d AS (SELECT doc_id, $ws AS w FROM documents
-                     WHERE text IS NOT NULL),
-          s AS (SELECT doc_id, w,
-                       unnest(generate_series(0, len(w) - 1, $st)) AS s
-                FROM d)
-          SELECT doc_id, CAST(s // $st AS BIGINT) AS chunk_idx,
-                 CAST(least($c, len(w) - s) AS BIGINT) AS chunk_tokens,
-                 array_to_string(w[s+1 : s+$c], ' ') AS chunk_text
-          FROM s"""
-    },
-
-    // Class boundaries via integer cross-multiplication on exact
-    // decimals — no float shares on either side.
-    "q133_abc_classification" ->
-      s"""WITH pp AS (SELECT l_partkey, SUM($discTerm) AS rev
-                      FROM lineitem GROUP BY 1),
-          r AS (SELECT rev,
-                       SUM(rev) OVER (ORDER BY rev DESC, l_partkey
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                         AS cum,
-                       SUM(rev) OVER () AS total
-                FROM pp)
-          SELECT CASE WHEN cum * 5 <= total * 4 THEN 'A'
-                      WHEN cum * 20 <= total * 19 THEN 'B'
-                      ELSE 'C' END AS abc_class,
-                 COUNT(*) AS n_parts, CAST(SUM(rev) AS DOUBLE) AS revenue
-          FROM r GROUP BY 1""",
-
-    // Expected shares are the SAME Scala-computed literals the Spark plan
-    // embeds. E-notation forces DuckDB to parse them as DOUBLE (a plain
-    // decimal literal would go through DECIMAL and land one ulp off);
-    // %.17e round-trips every double exactly.
-    "q134_benford_digits" -> {
-      val arr = Queries.BenfordExpected
-        .map(d => String.format("%.17e", Double.box(d)))
-        .mkString("[", ",", "]")
-      s"""WITH d AS (SELECT CAST(substr(CAST(CAST(o_totalprice AS DECIMAL(18,2))
-                                   AS VARCHAR), 1, 1) AS INT) AS digit
-                     FROM orders),
-          g AS (SELECT digit, COUNT(*) AS n_orders FROM d GROUP BY 1),
-          t AS (SELECT SUM(n_orders) AS tot FROM g)
-          SELECT digit, n_orders,
-                 CAST(n_orders AS DOUBLE) / CAST(tot AS DOUBLE) AS obs_share,
-                 ($arr)[digit] AS expected_share,
-                 CAST(n_orders AS DOUBLE) / CAST(tot AS DOUBLE)
-                   - ($arr)[digit] AS delta
-          FROM g, t"""
-    },
-
-    // Independent quadratic NOT-EXISTS dominance formulation — checks the
-    // sweep against the skyline definition, not against itself.
-    "q135_part_skyline" ->
-      """SELECT p_partkey, p_brand, p_size, p_retailprice FROM part p
-         WHERE NOT EXISTS (
-           SELECT 1 FROM part q
-           WHERE q.p_brand = p.p_brand
-             AND q.p_size <= p.p_size
-             AND q.p_retailprice <= p.p_retailprice
-             AND (q.p_size < p.p_size OR q.p_retailprice < p.p_retailprice))""",
-
-    "q136_bot_regularity" ->
-      s"""WITH g AS (
-            SELECT user_id,
-                   epoch_us(ts) - lag(epoch_us(ts)) OVER (
-                     PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-                     AS dm
-            FROM events),
-          s AS (SELECT user_id, CAST(dm // 1000000 AS BIGINT) AS gap_s
-                FROM g WHERE dm IS NOT NULL),
-          a AS (SELECT user_id, COUNT(*) AS n_gaps,
-                       CAST(SUM(gap_s) AS BIGINT) AS sum_gap_s,
-                       CAST(SUM(gap_s * gap_s) AS BIGINT) AS ssq
-                FROM s GROUP BY 1)
-          SELECT user_id, n_gaps, sum_gap_s,
-                 n_gaps * ssq - sum_gap_s * sum_gap_s AS var_num,
-                 (n_gaps * ssq - sum_gap_s * sum_gap_s) * 100
-                   < sum_gap_s * sum_gap_s AS is_regular
-          FROM a WHERE n_gaps >= ${Queries.BotMinGaps}""",
-
-    // The dedup key functionally determines every emitted column, so the
-    // streaming emission set equals the batch DISTINCT.
-    "q137_stream_key_registry" ->
-      """SELECT DISTINCT user_id, CAST(ts AS DATE) AS day, event_type
-         FROM events""",
-
-    // Append-mode emission rule: a window flushes iff window_end ≤ final
-    // watermark = max(ts) − 0s delay; the incomplete last day stays open.
-    "q138_stream_daily_agg" ->
-      """WITH mx AS (SELECT MAX(ts) AS mt FROM events),
-          w AS (SELECT date_trunc('day', ts) AS window_start,
-                       date_trunc('day', ts) + INTERVAL 1 DAY AS window_end,
-                       event_type, COUNT(*) AS n_events,
-                       CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100
-                                AS BIGINT)) AS BIGINT) AS cents_sum
-                FROM events GROUP BY 1, 2, 3)
-          SELECT window_start, window_end, event_type, n_events, cents_sum
-          FROM w, mx WHERE window_end <= mt""",
-
-    // Stream-stream inner-join emissions are the exact match set, so the
-    // oracle is the batch interval join.
-    "q139_stream_interval_join" ->
-      """SELECT p.user_id, p.event_id AS purchase_id, p.ts AS purchase_ts,
-                c.event_id AS click_id, c.ts AS click_ts
-         FROM events p JOIN events c ON c.user_id = p.user_id
-           AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts
-         WHERE p.event_type = 'purchase' AND c.event_type = 'click'""",
-
-    // q268 — the ×7 membership expansion of the same window algebra:
-    // each event explodes to its 7 daily-aligned window starts, the
-    // q138 emission rule (end ≤ max ts) filters the open generations
-    "q268_stream_sliding_agg" ->
-      """WITH mx AS (SELECT MAX(ts) AS mt FROM events),
-          g AS (SELECT unnest(generate_series(0, 6)) AS k),
-          w AS (SELECT date_trunc('day', ts) - k * INTERVAL 1 DAY
-                         AS window_start,
-                       date_trunc('day', ts) + (7 - k) * INTERVAL 1 DAY
-                         AS window_end,
-                       event_type, value
-                FROM events, g),
-          a AS (SELECT window_start, window_end, event_type,
-                       COUNT(*) AS n_events,
-                       CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100
-                                AS BIGINT)) AS BIGINT) AS cents_sum
-                FROM w GROUP BY 1, 2, 3)
-          SELECT window_start, window_end, event_type, n_events, cents_sum
-          FROM a, mx WHERE window_end <= mt""",
-
-    // q269 — the batch FULL JOIN twin: unmatched rows from EITHER feed
-    // carry nulls for the other side, key coalesced
-    "q269_stream_interval_full" ->
-      """SELECT COALESCE(p.user_id, c.user_id) AS user_id,
-                p.event_id AS purchase_id, p.ts AS purchase_ts,
-                c.event_id AS click_id, c.ts AS click_ts
-         FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-         FULL JOIN (SELECT * FROM events WHERE event_type = 'click') c
-           ON c.user_id = p.user_id
-           AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts""",
-
-    // q263 — the batch LEFT JOIN twin: unmatched purchases carry null
-    // click columns (the rows the stream emits on watermark close)
-    "q263_stream_interval_left" ->
-      """SELECT p.user_id, p.event_id AS purchase_id, p.ts AS purchase_ts,
-                c.event_id AS click_id, c.ts AS click_ts
-         FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-         LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-           ON c.user_id = p.user_id
-           AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts""",
-
-    // q265 — q03's validity windows, open versions closed at the
-    // corpus horizon, exact integer micro durations
-    "q265_time_in_state" ->
-      """WITH v AS (SELECT event_type, ts AS ef,
-                           lead(ts) OVER (PARTITION BY user_id
-                                          ORDER BY ts, event_id) AS et
-                    FROM events),
-          mx AS (SELECT MAX(ts) AS close_ts FROM events),
-          d AS (SELECT event_type,
-                       epoch_us(COALESCE(et, close_ts)) - epoch_us(ef) AS dur
-                FROM v, mx),
-          a AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_versions,
-                       CAST(SUM(dur) AS BIGINT) AS micros_in_state
-                FROM d GROUP BY 1)
-          SELECT event_type, n_versions, micros_in_state,
-                 CAST(micros_in_state AS DOUBLE)
-                   / CAST(SUM(micros_in_state) OVER () AS DOUBLE) AS share
-          FROM a""",
-
-    // q266 — the same integer milli-unit moments, IEEE-exact sqrt,
-    // largest-remainder rounding replayed step for step
-    "q266_neyman_allocation" -> {
-      val enStops = inList(graft.functions.TextAnalysis.LangProfiles.head._2)
-      val quality =
-        s"""0.5 * (CAST(len(list_filter($ws, w -> w IN $enStops)) AS DOUBLE)
-               / len($ws))
-            + 0.5 * least(1.0, CAST(len($ws) AS DOUBLE) / 200.0)"""
-      val b = Queries.NeymanBudget
-      s"""WITH q AS (SELECT source,
-                       CAST(floor(($quality) * 1000.0) AS BIGINT) AS v
-                     FROM documents WHERE text IS NOT NULL),
-          st AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-                        CAST(SUM(v) AS BIGINT) AS s1,
-                        CAST(SUM(v * v) AS BIGINT) AS s2
-                 FROM q GROUP BY 1),
-          d AS (SELECT source, n_docs,
-                       sqrt(CAST(n_docs * s2 - s1 * s1 AS DOUBLE)
-                            / CAST(n_docs * n_docs AS DOUBLE)) AS sd_milli
-                FROM st),
-          w AS (SELECT *, CAST(n_docs AS DOUBLE) * sd_milli AS w FROM d),
-          tot AS (SELECT list_reduce(
-                    list_transform(list_sort(list({'s': source, 'w': w})),
-                                   s -> s.w),
-                    (x, y) -> x + y) AS wsum FROM w),
-          e AS (SELECT w.*, CAST($b AS DOUBLE) * w.w / tot.wsum
-                            AS exact_share FROM w, tot),
-          bs AS (SELECT *, CAST(floor(exact_share) AS BIGINT) AS base,
-                        exact_share - floor(exact_share) AS frac FROM e),
-          l AS (SELECT $b - CAST(SUM(base) AS BIGINT) AS leftover FROM bs),
-          r AS (SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY frac DESC, source)
-                          AS BIGINT) AS rk FROM bs)
-          SELECT source, n_docs, sd_milli,
-                 base + (CASE WHEN rk <= leftover THEN 1 ELSE 0 END)
-                   AS allocated
-          FROM r, l"""
-    },
-
-    // q267 — the two-cell chi-square collapses to (a−b)²/(a+b) exactly
-    "q267_srm_check" -> {
-      import graft.functions.Sketches.{HA, HB, P}
-      s"""WITH arms AS (SELECT event_type,
-                    (($HA * user_id + $HB) % $P) % 2 = 0 AS in_a
-               FROM events),
-          c AS (SELECT event_type,
-                       CAST(SUM(CASE WHEN in_a THEN 1 ELSE 0 END) AS BIGINT)
-                         AS n_a,
-                       CAST(SUM(CASE WHEN in_a THEN 0 ELSE 1 END) AS BIGINT)
-                         AS n_b
-                FROM arms GROUP BY 1)
-          SELECT event_type, n_a, n_b,
-                 CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE)
-                   / CAST(n_a + n_b AS DOUBLE) AS chi2,
-                 CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE)
-                   / CAST(n_a + n_b AS DOUBLE) > ${Queries.SrmCritical}
-                   AS srm_detected
-          FROM c"""
-    },
-
-    // q261 — the cumulative-offset bin rule replayed over the same
-    // hash-bucket manifest
-    "q261_compaction_plan" -> {
-      import graft.functions.Sketches.{HA, HB, P}
-      val t = Queries.CompactTargetRows
-      s"""WITH m AS (SELECT (($HA * l_orderkey + $HB) % $P)
-                            % ${Queries.CompactBuckets} AS bucket,
-                            CAST(COUNT(*) AS BIGINT) AS n_rows
-                     FROM lineitem GROUP BY 1),
-          a AS (SELECT bucket, n_rows,
-                       CAST(SUM(n_rows) OVER (ORDER BY bucket
-                              ROWS UNBOUNDED PRECEDING) - n_rows AS BIGINT)
-                         AS bin_start
-                FROM m),
-          b AS (SELECT *, bin_start // $t AS bin FROM a)
-          SELECT bin, CAST(COUNT(*) AS BIGINT) AS n_buckets,
-                 CAST(SUM(n_rows) AS BIGINT) AS bin_rows,
-                 MIN(bucket) AS first_bucket, MAX(bucket) AS last_bucket,
-                 SUM(n_rows) < $t AS under_target
-          FROM b GROUP BY 1"""
-    },
-
-    // q262 — the q122 grouped-register chain keyed by day, a
-    // register-wise trailing-window max, the q121 exact-arithmetic
-    // estimate, and q95's exact decomposition riding along
-    "q262_sliding_hll" -> {
-      import graft.functions.Sketches._
-      val m = Queries.HllSlideM
-      val p = java.lang.Integer.numberOfTrailingZeros(m)
-      val wbits = hllRestBits(m)
-      val amm = hllNumerator(m)
-      val wd = Queries.SlidingWindowDays - 1
-      s"""WITH h0 AS (SELECT CAST(ts AS DATE) AS day,
-                             ($HA * user_id + $HB) % $P AS h FROM events),
-          h AS (SELECT day, (((h*h) % $P) * h) % $P AS h FROM h0),
-          s AS (SELECT day, h % $m AS idx,
-                       ${hllRhoSql(s"h // ${1L << p}", wbits)} AS rho
-                FROM h),
-          r AS (SELECT day, idx, MAX(rho) AS rho FROM s GROUP BY 1, 2),
-          g AS (SELECT d.day, gs.idx
-                FROM (SELECT DISTINCT day FROM h0) d
-                CROSS JOIN (SELECT unnest(generate_series(0, ${m - 1}))
-                            AS idx) gs),
-          dns AS (SELECT g.day, g.idx, COALESCE(r.rho, 0) AS rho
-                  FROM g LEFT JOIN r USING (day, idx)),
-          sl AS (SELECT day AS window_end, idx,
-                        MAX(rho) OVER (PARTITION BY idx ORDER BY day
-                          RANGE BETWEEN INTERVAL $wd DAY PRECEDING
-                            AND CURRENT ROW) AS rho
-                 FROM dns),
-          z AS (SELECT window_end,
-                       SUM(CAST(1.0 AS DOUBLE)
-                           / CAST((1::BIGINT << rho) AS DOUBLE)) AS z
-                FROM sl GROUP BY 1),
-          ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
-          days AS (SELECT DISTINCT d AS window_end FROM ud),
-          ex AS (SELECT w.window_end,
-                        COUNT(DISTINCT u.user_id) AS exact_users_7d
-                 FROM days w JOIN ud u
-                   ON u.d <= w.window_end AND u.d >= w.window_end - $wd
-                 GROUP BY 1)
-          SELECT z.window_end, CAST($m AS BIGINT) AS m, exact_users_7d,
-                 CAST($amm AS DOUBLE) / z AS est_users_7d,
-                 (CAST($amm AS DOUBLE) / z)
-                   / CAST(exact_users_7d AS DOUBLE) AS est_ratio
-          FROM z JOIN ex USING (window_end)"""
-    },
-
-    // q264 — the integer water-fill closed form: asc sort, prefix-full
-    // test, remainder split L/L+1 by rank
-    "q264_budget_waterfill" -> {
-      s"""WITH sup AS (SELECT source,
-                         CAST(SUM(len($ws)) AS BIGINT) AS supply_tokens
-                       FROM documents WHERE text IS NOT NULL GROUP BY 1),
-          rk AS (SELECT source, supply_tokens,
-                        CAST(ROW_NUMBER() OVER (ORDER BY supply_tokens,
-                          source) AS BIGINT) AS rk,
-                        CAST(SUM(supply_tokens) OVER (ORDER BY supply_tokens,
-                          source ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-                        CAST(SUM(supply_tokens) OVER () AS BIGINT) AS total,
-                        CAST(COUNT(*) OVER () AS BIGINT) AS n
-                 FROM sup),
-          st AS (SELECT *, total // ${Queries.WaterfillDen} AS budget,
-                        cum + supply_tokens * (n - rk) <= total
-                          // ${Queries.WaterfillDen} AS is_full
-                 FROM rk),
-          ct AS (SELECT CAST(SUM(CASE WHEN is_full THEN 1 ELSE 0 END)
-                          AS BIGINT) AS c,
-                        CAST(COALESCE(MAX(CASE WHEN is_full THEN cum END), 0)
-                          AS BIGINT) AS cum_c
-                 FROM st)
-          SELECT source, supply_tokens,
-                 CASE WHEN is_full THEN supply_tokens
-                      ELSE (budget - cum_c) // greatest(n - c, 1)
-                           + (CASE WHEN rk - c <=
-                                (budget - cum_c) % greatest(n - c, 1)
-                              THEN 1 ELSE 0 END) END AS allocated_tokens,
-                 NOT is_full AS is_capped
-          FROM st, ct"""
-    },
-
-    "q140_quantile_normalize" -> {
-      val enStops = inList(graft.functions.TextAnalysis.LangProfiles.head._2)
-      val quality =
-        s"""0.5 * (CAST(len(list_filter($ws, w -> w IN $enStops)) AS DOUBLE)
-               / len($ws))
-            + 0.5 * least(1.0, CAST(len($ws) AS DOUBLE) / 200.0)"""
-      s"""WITH q AS (SELECT doc_id, source, $quality AS quality_score
-                     FROM documents WHERE text IS NOT NULL),
-          r AS (SELECT doc_id, source, quality_score,
-                       CAST(ROW_NUMBER() OVER (PARTITION BY source
-                              ORDER BY quality_score, doc_id) AS BIGINT) AS rk,
-                       CAST(COUNT(*) OVER (PARTITION BY source) AS BIGINT)
-                         AS n_src,
-                       CAST(COUNT(*) OVER () AS BIGINT) AS n_all
-                FROM q),
-          g AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY quality_score, doc_id)
-                         AS BIGINT) AS grank,
-                       quality_score AS norm_score FROM q)
-          SELECT r.doc_id, r.source, r.quality_score, g.norm_score
-          FROM r JOIN g
-            ON g.grank = 1 + ((r.rk - 1) * (r.n_all - 1))
-                               // greatest(r.n_src - 1, 1)"""
-    },
-
-    // Identical KMV algebra on both sides: union k-min, kth-normalized
-    // union estimate, membership-fraction Jaccard, product intersection.
-    "q141_kmv_set_ops" -> {
-      import graft.functions.Sketches.{HA, HB, P}
-      val k = Queries.SetOpK
-      val pd = P.toDouble
-      val estU = s"${(k - 1).toDouble} / (CAST(kth AS DOUBLE) / $pd)"
-      val estJ = s"CAST(n_both AS DOUBLE) / ${k.toDouble}"
-      s"""WITH keyed AS (
-            SELECT event_type,
-                   user_id * 100000
-                     + date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-                     AS k
-            FROM events WHERE event_type IN ('click', 'purchase')),
-          a AS (SELECT DISTINCT ($HA * (k % $P) + $HB) % $P AS h FROM keyed
-                WHERE event_type = 'click'),
-          b AS (SELECT DISTINCT ($HA * (k % $P) + $HB) % $P AS h FROM keyed
-                WHERE event_type = 'purchase'),
-          kmin AS (SELECT h FROM (SELECT DISTINCT h FROM
-                     (SELECT h FROM a UNION ALL SELECT h FROM b))
-                   ORDER BY h LIMIT $k),
-          kth AS (SELECT MAX(h) AS kth FROM kmin),
-          nboth AS (SELECT COUNT(*) AS n_both FROM kmin
-                    WHERE h IN (SELECT h FROM a)
-                      AND h IN (SELECT h FROM b)),
-          ex AS (SELECT COUNT(*) AS exact_union,
-                        CAST(SUM(CASE WHEN sides = 2 THEN 1 ELSE 0 END)
-                          AS BIGINT) AS exact_inter
-                 FROM (SELECT k, COUNT(*) AS sides
-                       FROM (SELECT DISTINCT event_type, k FROM keyed)
-                       GROUP BY 1))
-          SELECT CAST($k AS BIGINT) AS k, exact_union, exact_inter,
-                 $estU AS est_union,
-                 $estJ AS est_jaccard,
-                 ($estJ) * ($estU) AS est_intersection
-          FROM kth, nboth, ex"""
-    },
-
-    "q142_inverted_index" ->
-      s"""WITH tf AS (
-            SELECT term, doc_id, COUNT(*) AS tf
-            FROM (SELECT doc_id, unnest($ws) AS term FROM documents
-                  WHERE text IS NOT NULL)
-            GROUP BY 1, 2),
-          top AS (SELECT term, doc_id, tf,
-                         ROW_NUMBER() OVER (PARTITION BY term
-                           ORDER BY tf DESC, doc_id) AS rn
-                  FROM tf),
-          agg AS (SELECT term, COUNT(*) AS df, CAST(SUM(tf) AS BIGINT) AS cf
-                  FROM tf GROUP BY 1)
-          SELECT a.term, a.df, a.cf, t.doc_id AS top_doc, t.tf AS top_tf
-          FROM agg a JOIN top t ON a.term = t.term AND t.rn = 1
-          WHERE a.df >= ${Queries.IdxMinDf}""",
-
-    "q143_split_assign" -> {
-      import graft.functions.Sketches.{HA, HB, P}
-      s"""WITH d AS (SELECT doc_id, source, CAST(len($ws) AS BIGINT) AS tokens,
-                            (($HA * doc_id + $HB) % $P) % 100 AS bucket
-                     FROM documents WHERE text IS NOT NULL)
-          SELECT source,
-                 CASE WHEN bucket < 80 THEN 'train'
-                      WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split,
-                 COUNT(*) AS n_docs, CAST(SUM(tokens) AS BIGINT) AS total_tokens
-          FROM d GROUP BY 1, 2"""
-    },
-
-    "q147_zorder_manifest" -> zorderManifestSql,
-
-    "q148_event_trigrams" ->
-      """SELECT e1, e2, e3, COUNT(*) AS n_seq FROM (
-           SELECT event_type AS e1,
-                  lead(event_type, 1) OVER (PARTITION BY user_id
-                                            ORDER BY ts, event_id) AS e2,
-                  lead(event_type, 2) OVER (PARTITION BY user_id
-                                            ORDER BY ts, event_id) AS e3
-           FROM events)
-         WHERE e2 IS NOT NULL AND e3 IS NOT NULL
-         GROUP BY 1, 2, 3""",
-
-    "q149_range_plan" -> {
-      import graft.functions.Sketches.{HA, HB, P}
-      s"""WITH li AS (SELECT l_orderkey, l_linenumber,
-                             l_extendedprice AS price FROM lineitem),
-          sa AS (SELECT *, row_number() OVER (ORDER BY price, l_orderkey,
-                                              l_linenumber) AS rn
-                 FROM li
-                 WHERE (($HA * ((l_orderkey * 8 + l_linenumber) % $P) + $HB)
-                        % $P) % ${Queries.RangeSampleMod} = 0),
-          nn AS (SELECT COUNT(*) AS cnt FROM sa),
-          bd AS (SELECT price FROM sa, nn
-                 WHERE rn % greatest(cnt // ${Queries.RangeK}, 1) = 0
-                   AND rn // greatest(cnt // ${Queries.RangeK}, 1)
-                       <= ${Queries.RangeK - 1}),
-          a AS (SELECT price,
-                       (SELECT COUNT(*) FROM bd WHERE bd.price < li.price)
-                         AS bucket
-                FROM li)
-          SELECT bucket, COUNT(*) AS n_rows,
-                 MIN(price) AS min_price, MAX(price) AS max_price
-          FROM a GROUP BY 1"""
-    },
-
-    "q150_source_similarity" ->
-      s"""WITH g AS (SELECT DISTINCT source, s FROM (
-                 SELECT source, unnest($shinglesSql) AS s
-                 FROM documents WHERE text IS NOT NULL)),
-          c AS (SELECT source, COUNT(*) AS n FROM g GROUP BY 1),
-          p AS (SELECT a.source AS src_a, b.source AS src_b,
-                       COUNT(*) AS common
-                FROM g a JOIN g b ON a.s = b.s AND a.source < b.source
-                GROUP BY 1, 2)
-          SELECT src_a, src_b, common,
-                 CAST(common AS DOUBLE) / (ca.n + cb.n - common) AS jaccard
-          FROM p JOIN c ca ON ca.source = p.src_a
-                 JOIN c cb ON cb.source = p.src_b""",
-
-    "q151_rrf_fusion" ->
-      s"""WITH cand AS (
-            $bm25ScoredSql
-            ORDER BY score DESC, doc_id LIMIT ${Queries.BmCandidates}),
-          lx AS (SELECT doc_id,
-                        CAST(row_number() OVER (ORDER BY score DESC, doc_id)
-                          AS INT) AS r_lex
-                 FROM cand),
-          qq AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qe
-                 FROM embeddings WHERE vec_id = 0),
-          dd AS (SELECT lx.doc_id, r_lex,
-                        ${dotSql("qe", "de")}
-                          / (sqrt(${dotSql("qe", "qe")}) * sqrt(${dotSql("de", "de")}))
-                          AS cos_sim
-                 FROM lx JOIN (SELECT vec_id,
-                                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS de
-                               FROM embeddings) e
-                   ON lx.doc_id = e.vec_id, qq),
-          rr AS (SELECT doc_id, r_lex,
-                        CAST(row_number() OVER (ORDER BY cos_sim DESC, doc_id)
-                          AS INT) AS r_dense
-                 FROM dd)
-          SELECT doc_id, r_lex, r_dense,
-                 CAST(1.0 AS DOUBLE) / (${Queries.RrfC} + r_lex)
-                   + CAST(1.0 AS DOUBLE) / (${Queries.RrfC} + r_dense) AS rrf
-          FROM rr ORDER BY rrf DESC, doc_id LIMIT ${Queries.HybridK}""",
-
-    "q152_fd_profile" ->
-      """WITH c AS (
-           SELECT 'orders.o_orderkey' AS lhs, 'o_custkey' AS rhs,
-                  (SELECT COUNT(DISTINCT o_orderkey) FROM orders) AS n_lhs,
-                  (SELECT COUNT(*) FROM (SELECT DISTINCT o_orderkey, o_custkey
-                                         FROM orders)) AS n_pairs
-           UNION ALL
-           SELECT 'orders.o_custkey', 'o_orderpriority',
-                  (SELECT COUNT(DISTINCT o_custkey) FROM orders),
-                  (SELECT COUNT(*) FROM (SELECT DISTINCT o_custkey, o_orderpriority
-                                         FROM orders))
-           UNION ALL
-           SELECT 'customer.c_custkey', 'c_name',
-                  (SELECT COUNT(DISTINCT c_custkey) FROM customer),
-                  (SELECT COUNT(*) FROM (SELECT DISTINCT c_custkey, c_name
-                                         FROM customer))
-           UNION ALL
-           SELECT 'nation.n_nationkey', 'n_regionkey',
-                  (SELECT COUNT(DISTINCT n_nationkey) FROM nation),
-                  (SELECT COUNT(*) FROM (SELECT DISTINCT n_nationkey, n_regionkey
-                                         FROM nation))
-           UNION ALL
-           SELECT 'events.user_id', 'event_type',
-                  (SELECT COUNT(DISTINCT user_id) FROM events),
-                  (SELECT COUNT(*) FROM (SELECT DISTINCT user_id, event_type
-                                         FROM events)))
-         SELECT lhs, rhs, n_lhs, n_pairs,
-                CAST(CASE WHEN n_lhs = n_pairs THEN 1 ELSE 0 END AS BIGINT)
-                  AS fd_holds
-         FROM c""",
-
-    "q153_entity_clusters" ->
-      // fuzzy edges ≡ q105 (same blocking + edit distance), closure via
-      // the recursive-CTE pattern of componentCtes, roster grouped by the
-      // component's min part key
-      s"""$entityLabCtes
-          SELECT root_key, COUNT(*) AS n_names,
-                 CAST(SUM(d3.n_rows) AS BIGINT) AS n_parts
-          FROM lab JOIN dict d3 ON lab.name = d3.name GROUP BY 1""",
-
-    "q154_pseudonym_audit" -> {
-      import graft.functions.Sketches.P
-      val (a, b) = (Queries.PseudoA, Queries.PseudoB)
-      s"""WITH u AS (SELECT DISTINCT user_id AS id FROM events
-                     WHERE user_id IS NOT NULL),
-          c AS (SELECT DISTINCT c_custkey AS id FROM customer),
-          ut AS (SELECT id, ($a * (id % $P) + $b) % $P AS tok FROM u),
-          ct AS (SELECT id, ($a * (id % $P) + $b) % $P AS tok FROM c)
-          SELECT (SELECT COUNT(*) FROM ut) AS n_users,
-                 (SELECT COUNT(DISTINCT tok) FROM ut) AS n_user_tokens,
-                 (SELECT COUNT(*) FROM ct) AS n_custs,
-                 (SELECT COUNT(DISTINCT tok) FROM ct) AS n_cust_tokens,
-                 (SELECT COUNT(*) FROM u JOIN c USING (id)) AS joined_raw,
-                 (SELECT COUNT(*) FROM (SELECT tok FROM ut) uu
-                    JOIN (SELECT tok FROM ct) cc USING (tok)) AS joined_tok"""
-    },
-
-    "q155_pagerank_copurchase" -> {
-      val s = Queries.PrScale
-      val base = 15L * s / 100L
-      // three unrolled integer-PageRank rounds, `//` ≡ Spark's `div`
-      def round(prev: String, out: String) =
-        s"""$out AS (SELECT ed.dst AS i,
-                    $base + SUM((85 * p.p) // (100 * deg.d)) AS p
-             FROM ed JOIN $prev p ON ed.src = p.i
-                     JOIN deg ON ed.src = deg.src
-             GROUP BY 1)"""
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i
-                         FROM lineitem),
-          e0 AS (SELECT a.i AS src, b2.i AS dst
-                 FROM items a JOIN items b2 ON a.b = b2.b AND a.i < b2.i
-                 GROUP BY 1, 2),
-          ed AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-          deg AS (SELECT src, COUNT(*) AS d FROM ed GROUP BY 1),
-          p0 AS (SELECT src AS i, CAST($s AS BIGINT) AS p FROM deg),
-          ${round("p0", "p1")},
-          ${round("p1", "p2")},
-          ${round("p2", "p3")}
-          SELECT i AS item, CAST(p AS BIGINT) AS rank_score FROM p3"""
-    },
-
-    "q156_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-                CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-                CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-                COUNT(*) AS n_items
-         FROM lineitem
-         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-                                 (l_returnflag), ())""",
-
-    "q157_basket_lift" ->
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i
-                         FROM lineitem),
-          no AS (SELECT COUNT(DISTINCT b) AS n_orders FROM items),
-          f AS (SELECT i, COUNT(*) AS n FROM items GROUP BY 1),
-          p AS (SELECT a.i AS item_a, b2.i AS item_b, COUNT(*) AS n_baskets
-                FROM items a JOIN items b2 ON a.b = b2.b AND a.i < b2.i
-                GROUP BY 1, 2
-                HAVING COUNT(*) >= ${Queries.CoMinSupport})
-          SELECT item_a, item_b, n_baskets,
-                 CAST(n_baskets * n_orders AS DOUBLE)
-                   / CAST(fa.n * fb.n AS DOUBLE) AS lift
-          FROM p JOIN f fa ON fa.i = p.item_a
-                 JOIN f fb ON fb.i = p.item_b, no
-          ORDER BY lift DESC, item_a, item_b LIMIT ${Queries.LiftTopK}""",
-
-    "q158_distance_histogram" -> {
-      import graft.functions.Sketches.{HA, HB, P}
-      val dot = (x: String, y: String) => dotSql(x, y)
-      s"""WITH v AS (SELECT vec_id,
-                  (($HA * ((vec_id * 31) % $P) + $HB) % $P) % ${Queries.DistBlocks} AS blk,
-                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-               FROM embeddings
-               WHERE (($HA * (vec_id % $P) + $HB) % $P) % ${Queries.DistSampleMod} = 0),
-          d AS (SELECT ${dot("a.e", "a.e")} + ${dot("b2.e", "b2.e")}
-                       - 2.0 * ${dot("a.e", "b2.e")} AS d2
-                FROM v a JOIN v b2
-                  ON a.blk = b2.blk AND a.vec_id < b2.vec_id)
-          SELECT CAST(floor(d2 / ${Queries.DistBinWidth}) AS BIGINT) AS bin,
-                 COUNT(*) AS n_pairs
-          FROM d GROUP BY 1"""
-    },
-
-    "q159_pruning_simulator" -> {
-      val probes = Queries.PruneProbes
-        .map { case (id, xl, xh, yl, yh) => s"($id, $xl, $xh, $yl, $yh)" }
-        .mkString(", ")
-      s"""WITH man AS ($zorderManifestSql),
-          probes AS (SELECT * FROM (VALUES $probes)
-                     AS t(probe_id, xlo, xhi, ylo, yhi)),
-          tot AS (SELECT COUNT(*) AS n_blocks_total,
-                         CAST(SUM(n_rows) AS BIGINT) AS rows_total FROM man)
-          SELECT probe_id, COUNT(man.block) AS n_blocks_read,
-                 CAST(COALESCE(SUM(man.n_rows), 0) AS BIGINT) AS rows_read,
-                 n_blocks_total, rows_total
-          FROM probes
-          LEFT JOIN man ON xlo <= max_x AND min_x <= xhi
-                       AND ylo <= max_y AND min_y <= yhi, tot
-          GROUP BY probe_id, n_blocks_total, rows_total"""
-    },
-
-    "q160_ewma_revenue" ->
-      """WITH RECURSIVE
-         daily AS (SELECT o_orderpriority AS priority,
-                          CAST(o_orderdate AS DATE) AS day,
-                          CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100
-                            AS BIGINT) AS cents
-                   FROM orders GROUP BY 1, 2),
-         r AS (SELECT *, row_number() OVER (PARTITION BY priority
-                                            ORDER BY day) AS rn FROM daily),
-         rec AS (SELECT priority, rn, day, cents AS ewma FROM r WHERE rn = 1
-                 UNION ALL
-                 SELECT r.priority, r.rn, r.day, (r.cents + rec.ewma) // 2
-                 FROM r JOIN rec ON r.priority = rec.priority
-                                AND r.rn = rec.rn + 1)
-         SELECT priority, day, ewma AS ewma_cents FROM rec""",
-
-    "q161_stream_static_enrich" ->
-      """SELECT event_id, user_id, c_nationkey
-         FROM events JOIN customer ON user_id = c_custkey""",
-
-    "q163_salted_join" ->
-      // the UNSALTED join — salting must never change results
-      """SELECT c_nationkey, COUNT(*) AS n_events,
-                CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-         FROM events JOIN customer ON user_id = c_custkey
-         GROUP BY 1""",
-
-    "q164_bucketed_join" ->
-      // the plain join — bucketing changes the plan, never the answer
-      """SELECT c_nationkey, COUNT(*) AS n_orders,
-                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                  AS revenue
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY 1""",
-
-    "q165_golden_records" ->
-      s"""$entityLabCtes,
-          g AS (SELECT lab.root_key, d3.name, d3.n_rows
-                FROM lab JOIN dict d3 ON lab.name = d3.name),
-          mx AS (SELECT root_key, MAX(n_rows) AS mxn, COUNT(*) AS n_names,
-                        CAST(SUM(n_rows) AS BIGINT) AS n_parts
-                 FROM g GROUP BY 1)
-          SELECT g.root_key, MIN(g.name) AS canon_name, n_names, n_parts
-          FROM g JOIN mx ON g.root_key = mx.root_key AND g.n_rows = mx.mxn
-          GROUP BY 1, 3, 4""",
-
-    "q166_cdc_apply" -> {
-      // the T2 snapshot computed DIRECTLY — the roundtrip identity
-      // applyDelta(t1, diff(t1, t2)) == t2 is what the gate proves
-      val lo = java.time.LocalDate.parse(Queries.SnapT2)
-        .minusDays(Queries.SnapWindowDays)
-      s"""SELECT o_custkey, COUNT(*) AS n_orders,
-                 CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                   AS revenue
-          FROM orders
-          WHERE o_orderdate >= TIMESTAMP '$lo 00:00:00'
-            AND o_orderdate <  TIMESTAMP '${Queries.SnapT2} 00:00:00'
-          GROUP BY 1"""
-    },
-
-    "q167_inventory_balance" ->
-      """WITH RECURSIVE
-         daily AS (SELECT l_partkey AS part, CAST(l_shipdate AS DATE) AS day,
-                          CAST(SUM(CASE WHEN l_returnflag = 'R'
-                                        THEN -l_quantity ELSE l_quantity END)
-                            AS BIGINT) AS d
-                   FROM lineitem GROUP BY 1, 2),
-         r AS (SELECT *, row_number() OVER (PARTITION BY part
-                                            ORDER BY day) AS rn FROM daily),
-         rec AS (SELECT part, rn, day, GREATEST(0, d) AS bal
-                 FROM r WHERE rn = 1
-                 UNION ALL
-                 SELECT r.part, r.rn, r.day, GREATEST(0, rec.bal + r.d)
-                 FROM r JOIN rec ON r.part = rec.part AND r.rn = rec.rn + 1)
-         SELECT part, day, CAST(bal AS BIGINT) AS balance FROM rec""",
-
-    "q168_share_of_parent" ->
-      """WITH rev AS (SELECT r_name AS region, n_name AS nation,
-                             SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rd
-                      FROM orders
-                        JOIN customer ON o_custkey = c_custkey
-                        JOIN nation ON c_nationkey = n_nationkey
-                        JOIN region ON n_regionkey = r_regionkey
-                      GROUP BY 1, 2),
-          reg AS (SELECT region, SUM(rd) AS gd FROM rev GROUP BY 1),
-          tot AS (SELECT SUM(rd) AS td FROM rev)
-          SELECT region, nation, CAST(rd AS DOUBLE) AS revenue,
-                 CAST(rd AS DOUBLE) / CAST(gd AS DOUBLE) AS share_in_region,
-                 CAST(gd AS DOUBLE) / CAST(td AS DOUBLE) AS region_share
-          FROM rev JOIN reg USING (region), tot""",
-
-    "q169_audio_rms" -> {
-      // the closed-form twin of the codec path: same samples, no codec.
-      // Per-window Σv² is an exact integer, so sqrt(Σv²/n) matches the
-      // decoder's fold bit-for-bit; zero-crossings skip zeros and don't
-      // count the first nonzero sample (lag IS NULL ⇒ 0), exactly as the
-      // decoder's prevSign loop does.
-      val (ns, w, m) = (Queries.AudioSamples, Queries.AudioWindow,
-        Queries.AudioDocMod)
-      s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id % $m = 0),
-          s AS (SELECT doc_id, i,
-                       ((doc_id * 31 + i * 7) % 2048) - 1024 AS v
-                FROM ids, (SELECT unnest(generate_series(0, ${ns - 1})) AS i)),
-          wn AS (SELECT doc_id, CAST(i // $w AS INT) AS window_idx, i, v FROM s),
-          agg AS (SELECT doc_id, window_idx,
-                         CAST(COUNT(*) AS INT) AS n_samples,
-                         sqrt(CAST(SUM(v * v) AS DOUBLE) / COUNT(*)) AS rms,
-                         CAST(MAX(ABS(v)) AS INT) AS peak
-                  FROM wn GROUP BY 1, 2),
-          x AS (SELECT doc_id, window_idx, i, sign(v) AS sg
-                FROM wn WHERE v <> 0),
-          c0 AS (SELECT doc_id, window_idx,
-                        CASE WHEN sg <> lag(sg) OVER (PARTITION BY doc_id,
-                               window_idx ORDER BY i)
-                             THEN 1 ELSE 0 END AS chg
-                 FROM x),
-          c AS (SELECT doc_id, window_idx,
-                       CAST(COALESCE(SUM(chg), 0) AS BIGINT) AS zc
-                FROM c0 GROUP BY 1, 2)
-          SELECT agg.doc_id, agg.window_idx, agg.n_samples, agg.rms,
-                 agg.peak, COALESCE(c.zc, 0) AS zero_crossings
-          FROM agg LEFT JOIN c USING (doc_id, window_idx)"""
-    },
-
-    "q170_profile_drift" -> {
-      def win(asOf: String) = {
-        val lo = java.time.LocalDate.parse(asOf)
-          .minusDays(Queries.SnapWindowDays)
-        s"""SELECT * FROM orders
-            WHERE o_orderdate >= TIMESTAMP '$lo 00:00:00'
-              AND o_orderdate <  TIMESTAMP '$asOf 00:00:00'"""
-      }
-      def prof(src: String) =
-        s"""SELECT COUNT(*) AS a,
-                   SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS b,
-                   COUNT(DISTINCT o_custkey) AS c,
-                   SUM(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS d,
-                   COUNT(DISTINCT o_orderpriority) AS e
-            FROM $src"""
-      s"""WITH w1 AS (${win(Queries.SnapT1)}), w2 AS (${win(Queries.SnapT2)}),
-          p1 AS (${prof("w1")}), p2 AS (${prof("w2")})
-          SELECT 'o_custkey' AS col_name,
-                 CAST(p1.a AS BIGINT) AS n_t1, CAST(p1.b AS BIGINT) AS nulls_t1,
-                 CAST(p1.c AS BIGINT) AS ndv_t1,
-                 CAST(p2.a AS BIGINT) AS n_t2, CAST(p2.b AS BIGINT) AS nulls_t2,
-                 CAST(p2.c AS BIGINT) AS ndv_t2
-          FROM p1, p2
-          UNION ALL
-          SELECT 'o_orderpriority',
-                 CAST(p1.a AS BIGINT), CAST(p1.d AS BIGINT),
-                 CAST(p1.e AS BIGINT),
-                 CAST(p2.a AS BIGINT), CAST(p2.d AS BIGINT),
-                 CAST(p2.e AS BIGINT)
-          FROM p1, p2"""
-    },
-
-    "q171_session_entry_exit" ->
-      s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us, event_type,
-                  epoch_us(ts) - lag(epoch_us(ts))
-                    OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-           FROM events),
-          s AS (SELECT *,
-                  CAST(SUM(CASE WHEN gap > ${Queries.SessionGapMicros}
-                                THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY user_id ORDER BY us, event_id
-                          ROWS UNBOUNDED PRECEDING) + 1 AS BIGINT)
-                    AS session_seq
-                FROM e),
-          r AS (SELECT user_id, session_seq, event_type,
-                       row_number() OVER (PARTITION BY user_id, session_seq
-                                          ORDER BY us, event_id) AS rf,
-                       row_number() OVER (PARTITION BY user_id, session_seq
-                                          ORDER BY us DESC, event_id DESC)
-                         AS rl
-                FROM s)
-          SELECT fe.event_type AS entry_type, le.event_type AS exit_type,
-                 COUNT(*) AS n_sessions
-          FROM (SELECT user_id, session_seq, event_type FROM r WHERE rf = 1) fe
-          JOIN (SELECT user_id, session_seq, event_type FROM r WHERE rl = 1) le
-            USING (user_id, session_seq)
-          GROUP BY 1, 2""",
-
-    "q172_image_decode" -> {
-      val (w, h, m) = (Queries.ImgW, Queries.ImgH, Queries.ImgDocMod)
-      // PNG is lossless: decoded pixel sum = 3·Σ g(x,y) exactly
-      s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id % $m = 0),
-          g AS (SELECT doc_id, ((doc_id * 7 + x * 3 + y * 5) % 256) AS gv
-                FROM ids,
-                     (SELECT unnest(generate_series(0, ${w - 1})) AS x),
-                     (SELECT unnest(generate_series(0, ${h - 1})) AS y))
-          SELECT doc_id, CAST($w AS INT) AS width, CAST($h AS INT) AS height,
-                 CAST(3 * SUM(gv) AS BIGINT) AS px_sum
-          FROM g GROUP BY 1"""
-    },
-
-    "q173_rescue_audit" ->
-      // the oracle knows the poison rule (every 7th event_id): the
-      // rescue reader must neither drop nor mangle a single row
-      """WITH c AS (SELECT event_id, CAST(value AS DECIMAL(18,2)) AS v
-                    FROM events WHERE event_id % 7 <> 0),
-          r AS (SELECT event_id FROM events WHERE event_id % 7 = 0)
-          SELECT (SELECT COUNT(*) FROM c) AS n_clean,
-                 (SELECT CAST(SUM(v) AS DOUBLE) FROM c) AS clean_value_sum,
-                 (SELECT COUNT(*) FROM r) AS n_rescued,
-                 (SELECT COUNT(DISTINCT event_id) FROM r) AS rescued_ids""",
-
-    "q174_time_travel" -> {
-      def ver(i: Int, hi: String) =
-        s"""SELECT CAST($i AS INT) AS version, event_type,
-                   COUNT(*) AS n_events
-            FROM events WHERE ts < TIMESTAMP '$hi' GROUP BY 2"""
-      Queries.TravelTs.zipWithIndex
-        .map { case (hi, i) => ver(i + 1, hi) }
-        .mkString("\n UNION ALL \n")
-    },
-
-    "q175_medallion_run" ->
-      // incremental merge ≡ full recompute: latest valid row per user
-      // up to the final watermark
-      s"""SELECT user_id, ts, event_id, event_type FROM (
-            SELECT user_id, ts, event_id, event_type,
-                   row_number() OVER (PARTITION BY user_id
-                                      ORDER BY ts DESC, event_id DESC) AS rn
-            FROM events
-            WHERE user_id IS NOT NULL
-              AND ts <= TIMESTAMP '${Queries.WmHigh}')
-          WHERE rn = 1""",
-
-    "q176_schema_evolution" ->
-      """WITH ev AS (SELECT event_id,
-                  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
-                  event_type
-           FROM events)
-         SELECT COUNT(*) AS n_rows,
-                CAST(SUM(CASE WHEN event_id % 2 = 0 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_padded,
-                COUNT(DISTINCT CASE WHEN event_id % 2 = 1
-                                    THEN event_type END) AS n_types,
-                CAST(SUM(cents) AS BIGINT) AS cents_sum
-         FROM ev""",
-
-    "q177_streamed_scd1" ->
-      """SELECT user_id, ts, event_id, event_type FROM (
-           SELECT user_id, ts, event_id, event_type,
-                  row_number() OVER (PARTITION BY user_id
-                                     ORDER BY ts DESC, event_id DESC) AS rn
-           FROM events)
-         WHERE rn = 1""",
-
-    "q178_partitioned_write" ->
-      """SELECT CAST(ts AS DATE) AS day, COUNT(*) AS n_events,
-                COUNT(DISTINCT user_id) AS n_users,
-                CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-         FROM events
-         WHERE CAST(ts AS DATE) >= DATE '2024-01-10'
-           AND CAST(ts AS DATE) <  DATE '2024-01-20'
-         GROUP BY 1""",
-
-    "q179_sql_functions" -> {
-      import graft.functions.Lsh.{A, B, P, GA, GB, TwoPow32}
-      val w32 = sqlArr((0 until 32).map(j => 1L << j))
-      s"""WITH d AS (SELECT doc_id, text, $shinglesSql AS sh FROM documents
-                     WHERE text IS NOT NULL
-                       AND len($ws) >= ${Queries.JaccardN}),
-          f AS (SELECT doc_id, text, sh,
-                       list_transform(sh, s -> ${fpSql("s")}) AS fps FROM d)
-          SELECT doc_id,
-                 ${fpSql("text")} AS fp,
-                 ${fpSql("nfc_normalize(lower(text))")} AS fp_folded,
-                 CAST(len(sh) AS INT) AS n_shingles,
-                 list_aggregate(list_transform(fps,
-                   v -> (${A.head} * v + ${B.head}) % $P), 'min') AS mh1,
-                 list_reduce(list_transform(generate_series(0, 31), j ->
-                   CASE WHEN 2 * len(list_filter(
-                          list_transform(fps, v -> ($GA * v + $GB) % $TwoPow32),
-                          v -> CAST(floor(v / ($w32[j+1])) AS BIGINT) % 2 = 1))
-                        >= len(fps)
-                        THEN $w32[j+1] ELSE CAST(0 AS BIGINT) END),
-                   (a, b) -> a + b) AS simhash
-          FROM f"""
-    },
-
-    "q180_late_arrivals" ->
-      s"""SELECT COUNT(*) AS n_late, MIN(ts) AS earliest_late,
-                 MAX(ts) AS latest_late
-          FROM events
-          WHERE event_type = 'purchase'
-            AND ts <= TIMESTAMP '${Queries.WmHigh}'""",
-
-    "q181_quarantine_report" ->
-      // rule DECLARATION order is the contract: value_cap then user_mod97
-      """WITH q AS (
-           SELECT event_id, value,
-                  array_to_string(list_filter(
-                    [CASE WHEN value >= 450.0 THEN 'value_cap' END,
-                     CASE WHEN user_id % 97 = 0 THEN 'user_mod97' END],
-                    x -> x IS NOT NULL), ',') AS violations
-           FROM events)
-         SELECT violations, COUNT(*) AS n_rows,
-                CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-         FROM q WHERE violations <> '' GROUP BY 1""",
-
-    "q182_rendered_star" ->
-      """SELECT o_orderpriority, COUNT(*) AS n_items,
-                CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-                  AS revenue
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         WHERE l_discount >= 0.05
-         GROUP BY 1""",
-
-    "q183_bitmap_overlap" ->
-      """WITH wd AS (SELECT event_type, user_id // 32 AS w,
-                            bit_or(CAST(1 AS BIGINT)
-                                   << CAST(user_id % 32 AS INT)) AS bits
-                     FROM events GROUP BY 1, 2),
-          tot AS (SELECT event_type,
-                         CAST(SUM(bit_count(bits)) AS BIGINT) AS n_users
-                  FROM wd GROUP BY 1),
-          p AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-                       CAST(SUM(bit_count(a.bits & b.bits)) AS BIGINT)
-                         AS n_both
-                FROM wd a JOIN wd b
-                  ON a.w = b.w AND a.event_type < b.event_type
-                GROUP BY 1, 2)
-          SELECT type_a, type_b, ta.n_users AS n_a, tb.n_users AS n_b,
-                 n_both,
-                 CAST(n_both AS DOUBLE) / (ta.n_users + tb.n_users - n_both)
-                   AS jaccard
-          FROM p JOIN tot ta ON ta.event_type = p.type_a
-                 JOIN tot tb ON tb.event_type = p.type_b""",
-
-    "q184_lsh_evaluation" -> {
-      import graft.functions.Lsh.Mh16
-      s"""WITH cands AS (${minHashSql(Mh16)}),
-          truth AS ($exactJaccardSql),
-          m AS (SELECT
-                  (SELECT COUNT(*) FROM cands) AS n_candidates,
-                  (SELECT COUNT(*) FROM truth) AS n_true,
-                  (SELECT COUNT(*) FROM cands JOIN truth
-                     USING (doc_a, doc_b)) AS n_hits)
-          SELECT n_candidates, n_true, n_hits,
-                 CAST(n_hits AS DOUBLE) / n_candidates AS precision,
-                 CAST(n_hits AS DOUBLE) / n_true AS recall
-          FROM m"""
-    },
-
-    "q185_scd2_tracked" ->
-      // IS NOT DISTINCT FROM ≡ Spark's null-safe <=>; runs collapse to
-      // one row via constant window values + DISTINCT
-      """WITH c AS (
-           SELECT user_id, event_id, event_type, value, ts,
-                  CASE WHEN event_type IS NOT DISTINCT FROM
-                            lag(event_type) OVER (PARTITION BY user_id
-                                                  ORDER BY ts, event_id)
-                       THEN 0 ELSE 1 END AS opens
-           FROM events),
-          r AS (
-           SELECT *, SUM(opens) OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id
-                                      ROWS UNBOUNDED PRECEDING) AS run
-           FROM c),
-          v AS (
-           SELECT DISTINCT user_id, run,
-                  MIN(ts) OVER w AS effective_from,
-                  last_value(event_id) OVER w AS event_id,
-                  last_value(event_type) OVER w AS event_type,
-                  last_value(value) OVER w AS value
-           FROM r
-           WINDOW w AS (PARTITION BY user_id, run ORDER BY ts, event_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND UNBOUNDED FOLLOWING))
-          SELECT user_id, event_id, event_type, value, effective_from,
-                 lead(effective_from) OVER (PARTITION BY user_id
-                                            ORDER BY effective_from)
-                   AS effective_to,
-                 (lead(effective_from) OVER (PARTITION BY user_id
-                                             ORDER BY effective_from) IS NULL)
-                   AS is_current
-          FROM v""",
-
-    // q258 — q185's collapse with the COMPLEMENT tracked set {event_type,
-    // day}: a run opens when either tracked column differs null-safely
-    // from the previous row's; the excepted `value` only rides last_value
-    "q258_scd2_tracked_except" ->
-      """WITH c AS (
-           SELECT user_id, event_id, event_type, value,
-                  CAST(ts AS DATE) AS day, ts,
-                  CASE WHEN event_type IS NOT DISTINCT FROM
-                            lag(event_type) OVER (PARTITION BY user_id
-                                                  ORDER BY ts, event_id)
-                        AND CAST(ts AS DATE) IS NOT DISTINCT FROM
-                            lag(CAST(ts AS DATE)) OVER (PARTITION BY user_id
-                                                        ORDER BY ts, event_id)
-                       THEN 0 ELSE 1 END AS opens
-           FROM events),
-          r AS (
-           SELECT *, SUM(opens) OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id
-                                      ROWS UNBOUNDED PRECEDING) AS run
-           FROM c),
-          v AS (
-           SELECT DISTINCT user_id, run,
-                  MIN(ts) OVER w AS effective_from,
-                  last_value(event_id) OVER w AS event_id,
-                  last_value(event_type) OVER w AS event_type,
-                  last_value(value) OVER w AS value,
-                  last_value(day) OVER w AS day
-           FROM r
-           WINDOW w AS (PARTITION BY user_id, run ORDER BY ts, event_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND UNBOUNDED FOLLOWING))
-          SELECT user_id, event_id, event_type, value, day, effective_from,
-                 lead(effective_from) OVER (PARTITION BY user_id
-                                            ORDER BY effective_from)
-                   AS effective_to,
-                 (lead(effective_from) OVER (PARTITION BY user_id
-                                             ORDER BY effective_from) IS NULL)
-                   AS is_current
-          FROM v""",
-
-    "q186_pagerank_deep" -> {
-      val s = Queries.PrScale
-      val base = 15L * s / 100L
-      def round(prev: String, out: String) =
-        s"""$out AS (SELECT ed.dst AS i,
-                    $base + SUM((85 * p.p) // (100 * deg.d)) AS p
-             FROM ed JOIN $prev p ON ed.src = p.i
-                     JOIN deg ON ed.src = deg.src
-             GROUP BY 1)"""
-      val rounds = (1 to Queries.PrRoundsDeep)
-        .map(r => round(s"p${r - 1}", s"p$r")).mkString(",\n          ")
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i
-                         FROM lineitem),
-          e0 AS (SELECT a.i AS src, b2.i AS dst
-                 FROM items a JOIN items b2 ON a.b = b2.b AND a.i < b2.i
-                 GROUP BY 1, 2),
-          ed AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-          deg AS (SELECT src, COUNT(*) AS d FROM ed GROUP BY 1),
-          p0 AS (SELECT src AS i, CAST($s AS BIGINT) AS p FROM deg),
-          $rounds
-          SELECT i AS item, CAST(p AS BIGINT) AS rank_score
-          FROM p${Queries.PrRoundsDeep}"""
-    },
-
-    "q187_triangle_count" ->
-      // degree orientation ≡ Triangles.triangleStats: row-value
-      // comparison (deg, id) < (deg, id) is the same lexicographic order
-      // as Spark's struct comparison
-      """WITH items AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i
-                        FROM lineitem),
-          e AS (SELECT a.i AS x, b2.i AS y
-                FROM items a JOIN items b2 ON a.b = b2.b AND a.i < b2.i
-                GROUP BY 1, 2),
-          d AS (SELECT n, COUNT(*) AS deg
-                FROM (SELECT x AS n FROM e UNION ALL SELECT y AS n FROM e)
-                GROUP BY 1),
-          o AS (SELECT CASE WHEN (dx.deg, e.x) < (dy.deg, e.y)
-                            THEN e.x ELSE e.y END AS u,
-                       CASE WHEN (dx.deg, e.x) < (dy.deg, e.y)
-                            THEN e.y ELSE e.x END AS v
-                FROM e JOIN d dx ON dx.n = e.x JOIN d dy ON dy.n = e.y),
-          wg AS (SELECT e1.v AS p, e2.v AS q
-                 FROM o e1 JOIN o e2 ON e1.u = e2.u AND e1.v < e2.v),
-          t AS (SELECT COUNT(*) AS n_triangles
-                FROM wg JOIN e ON e.x = wg.p AND e.y = wg.q),
-          wt AS (SELECT CAST(SUM((deg * (deg - 1)) // 2) AS BIGINT)
-                          AS n_wedges,
-                        COUNT(*) AS n_nodes
-                 FROM d),
-          et AS (SELECT COUNT(*) AS n_edges FROM e)
-          SELECT n_nodes, n_edges, n_wedges, n_triangles,
-                 CASE WHEN n_wedges > 0
-                      THEN 3.0 * CAST(n_triangles AS DOUBLE)
-                           / CAST(n_wedges AS DOUBLE)
-                 END AS clustering_coeff
-          FROM wt, et, t""",
-
-    "q188_prefix_jaccard" ->
-      // the UNBOUNDED exact-Jaccard join — no df cap: the gate proves
-      // prefix filtering is lossless, not merely consistent with
-      // another bounded approximation
-      s"""WITH d AS (SELECT doc_id,
-                list_distinct(list_transform(
-                  generate_series(1, len($ws) - ${Queries.JaccardN - 1}),
-                  i -> $ws[i] || ' ' || $ws[i+1] || ' ' || $ws[i+2])) AS sh
-           FROM documents),
-          ex0 AS (SELECT doc_id, unnest(sh) AS s FROM d),
-          ex AS (SELECT doc_id, COUNT(*) OVER (PARTITION BY doc_id) AS n, s
-                 FROM ex0),
-          p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                       a.n AS na, b.n AS nb, COUNT(*) AS common
-                FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2, 3, 4)
-          SELECT doc_a, doc_b, common, jaccard FROM (
-            SELECT doc_a, doc_b, common,
-                   CAST(common AS DOUBLE) / (na + nb - common) AS jaccard
-            FROM p)
-          WHERE jaccard >= ${Queries.PrefixThrNum.toDouble / Queries.PrefixThrDen}""",
-
-    "q189_hll_native_agg" -> {
-      import graft.functions.Sketches._
-      val m = Queries.HllM
-      val p = java.lang.Integer.numberOfTrailingZeros(m)
-      val w = hllRestBits(m)
-      val amm = hllNumerator(m)
-      s"""WITH h0 AS (SELECT l_returnflag AS g,
-                             ($HA * l_orderkey + $HB) % $P AS h
-                      FROM lineitem),
-          h AS (SELECT g, (((h*h) % $P) * h) % $P AS h FROM h0),
-          s AS (SELECT g, h % $m AS idx,
-                       ${hllRhoSql(s"h // ${1L << p}", w)} AS rho
-                FROM h),
-          r AS (SELECT g, idx, MAX(rho) AS rho FROM s GROUP BY 1, 2),
-          z AS (SELECT g,
-                       SUM(CAST(1.0 AS DOUBLE)
-                           / CAST((1::BIGINT << rho) AS DOUBLE))
-                       + ($m - COUNT(*)) * CAST(1.0 AS DOUBLE) AS z
-                FROM r GROUP BY 1),
-          ex AS (SELECT l_returnflag AS g,
-                        COUNT(DISTINCT l_orderkey) AS exact_distinct
-                 FROM lineitem GROUP BY 1)
-          SELECT g AS l_returnflag, exact_distinct,
-                 CAST($amm AS DOUBLE) / z AS est_distinct,
-                 (CAST($amm AS DOUBLE) / z) / CAST(exact_distinct AS DOUBLE)
-                   AS est_ratio
-          FROM z JOIN ex USING (g)"""
-    },
-
-    "q190_mg_heavy_hitters" ->
-      // the MG candidate pass is semantics-neutral (guarantee: no true
-      // heavy hitter dropped), so the oracle is the plain HAVING query
-      s"""WITH t AS (SELECT COUNT(*) AS total FROM events),
-          c AS (SELECT event_type, COUNT(*) AS n_events
-                FROM events GROUP BY 1)
-          SELECT event_type, n_events,
-                 CAST(n_events AS DOUBLE) / CAST(total AS DOUBLE) AS share
-          FROM c, t
-          WHERE n_events * ${Queries.MgHeavyDen} >= total""",
-
-    "q191_kmv_native_agg" -> {
-      import graft.functions.Sketches.{HA, HB, P}
-      val k = Queries.KmvK
-      s"""WITH h AS (SELECT DISTINCT l_returnflag AS g,
-                            ($HA * l_orderkey + $HB) % $P AS h
-                     FROM lineitem),
-          r AS (SELECT g, h,
-                       row_number() OVER (PARTITION BY g ORDER BY h) AS rn
-                FROM h),
-          kth AS (SELECT g, h AS kth FROM r WHERE rn = $k),
-          ex AS (SELECT l_returnflag AS g,
-                        COUNT(DISTINCT l_orderkey) AS exact_distinct
-                 FROM lineitem GROUP BY 1)
-          SELECT g AS l_returnflag, exact_distinct,
-                 CAST(${k - 1} AS DOUBLE)
-                   / (CAST(kth AS DOUBLE) / CAST($P AS DOUBLE))
-                   AS est_distinct,
-                 (CAST(${k - 1} AS DOUBLE)
-                   / (CAST(kth AS DOUBLE) / CAST($P AS DOUBLE)))
-                   / CAST(exact_distinct AS DOUBLE) AS est_ratio
-          FROM kth JOIN ex USING (g)"""
-    },
-
-    "q192_cramers_v" ->
-      // densified grid (structural zeros contribute e each);
-      // list_reduce folds left in list order; Spark's aggregate() starts
-      // at 0.0 — adding zero is exact, so the partial-sum sequences match
-      """WITH c AS (SELECT l_returnflag AS a, l_linestatus AS b,
-                           COUNT(*) AS o
-                    FROM lineitem GROUP BY 1, 2),
-          dense AS (SELECT ga.a, gb.b, COALESCE(c.o, 0) AS o
-                    FROM (SELECT DISTINCT a FROM c) ga
-                    CROSS JOIN (SELECT DISTINCT b FROM c) gb
-                    LEFT JOIN c ON c.a = ga.a AND c.b = gb.b),
-          ra AS (SELECT a, CAST(SUM(o) AS BIGINT) AS ra FROM c GROUP BY 1),
-          cb AS (SELECT b, CAST(SUM(o) AS BIGINT) AS cb FROM c GROUP BY 1),
-          nn AS (SELECT CAST(SUM(o) AS BIGINT) AS n,
-                        COUNT(DISTINCT a) AS nr,
-                        COUNT(DISTINCT b) AS nc
-                 FROM c),
-          t AS (SELECT d.a, d.b, n, nr, nc,
-                       (CAST(d.o AS DOUBLE)
-                        - CAST(ra.ra * cb.cb AS DOUBLE) / CAST(n AS DOUBLE))
-                       * (CAST(d.o AS DOUBLE)
-                          - CAST(ra.ra * cb.cb AS DOUBLE) / CAST(n AS DOUBLE))
-                       / (CAST(ra.ra * cb.cb AS DOUBLE) / CAST(n AS DOUBLE))
-                         AS term
-                FROM dense d JOIN ra USING (a) JOIN cb USING (b), nn),
-          f AS (SELECT n AS n_rows, nr, nc,
-                       list_reduce(list(term ORDER BY a, b),
-                                   (x, y) -> x + y) AS chi2
-                FROM t GROUP BY 1, 2, 3)
-          SELECT n_rows, nr, nc, chi2,
-                 sqrt(chi2 / (CAST(n_rows AS DOUBLE)
-                              * CAST(least(nr - 1, nc - 1) AS DOUBLE)))
-                   AS cramers_v
-          FROM f""",
-
-    "q193_session_window" ->
-      // session_window's contract: a new session opens when the gap
-      // REACHES the duration (>=, unlike q32's strict >); window end =
-      // last event + gap
-      s"""WITH e AS (SELECT user_id, event_id, ts, value,
-                  epoch_us(ts) - lag(epoch_us(ts))
-                    OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-           FROM events),
-          s AS (SELECT user_id, ts, value,
-                  SUM(CASE WHEN gap >= ${Queries.SessionGapMicros}
-                           THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) AS seq
-                FROM e)
-          SELECT user_id, MIN(ts) AS session_start,
-                 MAX(ts) + INTERVAL 6 HOUR AS session_end,
-                 COUNT(*) AS n_events,
-                 CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
-                   AS total_value
-          FROM s GROUP BY user_id, seq""",
-
-    "q194_cms_native_agg" -> cmsHeavySql,
-
-    "q195_revenue_trend" ->
-      // moments as exact BIGINTs; doubles only in the final fixed-shape
-      // slope/intercept/R² (identical int64→double roundings)
-      s"""WITH daily AS (
-            SELECT l_returnflag,
-                   date_diff('day', DATE '1970-01-01',
-                             CAST(l_shipdate AS DATE)) AS x,
-                   CAST(floor(CAST(SUM($discTerm) AS DOUBLE)
-                              / ${Queries.AnomalyUnit}) AS BIGINT) AS y
-            FROM lineitem GROUP BY 1, 2),
-          m AS (
-            SELECT l_returnflag, COUNT(*) AS n_days,
-                   CAST(SUM(x) AS BIGINT) AS sx,
-                   CAST(SUM(y) AS BIGINT) AS sy,
-                   CAST(SUM(x * y) AS BIGINT) AS sxy,
-                   CAST(SUM(x * x) AS BIGINT) AS sxx,
-                   CAST(SUM(y * y) AS BIGINT) AS syy
-            FROM daily GROUP BY 1),
-          d AS (
-            SELECT l_returnflag, n_days,
-                   n_days * sxy - sx * sy AS dxy,
-                   n_days * sxx - sx * sx AS dxx,
-                   n_days * syy - sy * sy AS dyy,
-                   sx, sy
-            FROM m)
-          SELECT l_returnflag, n_days,
-                 CASE WHEN n_days >= 2 AND dxx > 0
-                      THEN CAST(dxy AS DOUBLE) / CAST(dxx AS DOUBLE)
-                 END AS slope_ku_per_day,
-                 CASE WHEN n_days >= 2 AND dxx > 0
-                      THEN (CAST(sy AS DOUBLE)
-                            - (CAST(dxy AS DOUBLE) / CAST(dxx AS DOUBLE))
-                              * CAST(sx AS DOUBLE))
-                           / CAST(n_days AS DOUBLE)
-                 END AS intercept_ku,
-                 CASE WHEN n_days >= 2 AND dxx > 0 AND dyy > 0
-                      THEN (CAST(dxy AS DOUBLE) * CAST(dxy AS DOUBLE))
-                           / (CAST(dxx AS DOUBLE) * CAST(dyy AS DOUBLE))
-                 END AS r2
-          FROM d""",
-
-    "q196_weighted_median" ->
-      // qualifying rows are a suffix of the (v, keys) order, so MIN(v)
-      // over them is the crossing value; 2·cw ≥ tw keeps the half-weight
-      // test in exact integers
-      """WITH li AS (SELECT l_returnflag AS g,
-                            CAST(l_extendedprice AS DECIMAL(18,2)) AS v,
-                            CAST(l_quantity AS BIGINT) AS w,
-                            l_orderkey AS ok, l_linenumber AS ln
-                     FROM lineitem),
-          c AS (SELECT g, v,
-                       SUM(w) OVER (PARTITION BY g ORDER BY v, ok, ln
-                                    ROWS UNBOUNDED PRECEDING) AS cw
-                FROM li),
-          t AS (SELECT g, CAST(SUM(w) AS BIGINT) AS tw FROM li GROUP BY 1)
-          SELECT c.g AS l_returnflag, t.tw AS total_weight,
-                 CAST(MIN(v) AS DOUBLE) AS weighted_median
-          FROM c JOIN t ON c.g = t.g
-          WHERE 2 * cw >= tw
-          GROUP BY 1, 2""",
-  )
-
-  /** The maintained-view recompute (shared by q240's batch IVM and
-    * q245's streaming sink — final view ≡ full recompute over
-    * (base ∖ retracted) ∪ inserted in both).
-    */
-  private lazy val ivmSql: String =
-    s"""SELECT user_id, COUNT(*) AS n_events,
-               CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        FROM events
-        WHERE ts > TIMESTAMP '${Queries.SplitTs}'
-           OR event_id % ${Queries.IvmDeleteMod} <> 0
-        GROUP BY 1"""
-
-  /** The q237 ADC chain up to the RANKED score table `adck` (query_id,
-    * vec_id, adc_dist2, rank) — shared by the q237 gate and q254's
-    * recall harness, which compares it against the exact top-k.
-    */
-  /** The residual IVF-PQ chain as a shared ranked CTE list (ending in
-    * `radck`, the per-query ADC ranking), parameterized by Lloyd
-    * training rounds on the subspace codebooks (0 = q246/q257's
-    * untrained seeds; ResTrainIters = q259/q260) — each gate and its
-    * recall instrument must score the SAME chain, so it is one
-    * definition, the pqAdcRankedCtes pattern. Training rounds replay
-    * trainSubCodebook verbatim: argmin assignment tie-broken on code,
-    * floor-onto-2^20-grid exact means, empty codes carry the previous
-    * centroid via COALESCE.
-    */
-  /** recall@k of the iters-round residual chain vs the exact-L2 ground
-    * truth — q257 (iters=0) and q260 (trained) share this text.
-    */
-  /** The planted-mixture corpus as SQL — the same integer-hash grid
-    * arithmetic as Queries.clusteredEmbeddings, so the fixture is
-    * bit-identical across engines by construction (exact {0,4,…,60}
-    * centers + exact k/128 noise; every term a small-integer ratio).
-    */
-  private lazy val cfxEmbCte: String = {
-    import graft.functions.{Lsh, Sketches}
-    s"""cids AS (SELECT vec_id * ${Queries.CfxExpand} + j AS vec_id
-                 FROM embeddings,
-                      (SELECT unnest(generate_series(0,
-                         ${Queries.CfxExpand - 1})) AS j) e),
-        cemb AS (SELECT vec_id,
-                   CAST(vec_id % ${Queries.CfxClusters} AS INT) AS label,
-                   list_transform(generate_series(1, ${Lsh.Dim}), i ->
-                     CAST((${Lsh.A(0)} * (vec_id % ${Queries.CfxClusters} + 1)
-                           + ${Lsh.B(0)} * i) % ${Sketches.P} % 16 AS DOUBLE)
-                       * 4.0
-                     + (CAST((${Lsh.A(1)} * (vec_id + 1)
-                              + ${Lsh.B(1)} * i) % ${Sketches.P} % 129
-                         AS DOUBLE) - 64.0) / 128.0) AS v
-                 FROM cids)"""
-  }
-
-  /** The 8×256 trained-ADC chain over the planted corpus (the q259
-    * Lloyd-replay CTEs, parameterized to the cfx geometry and to the
-    * encode mode — `encodeRaw` switches r = v vs r = v − mean, the only
-    * difference between the q271 and q272 oracles).
-    */
-  private def cfxAdcRankedCtes(encodeRaw: Boolean): String = {
-    import graft.functions.Lsh.Dim
-    val nSub = Queries.CfxSub
-    val nCodes = Queries.CfxCodes
-    val iters = Queries.CfxTrainIters
-    val subDim = Dim / nSub
-    val S = operators.Ivf.MeanQuantScale
-    val adcSum = (0 until nSub).map(i =>
-      s"MIN(CASE WHEN subspace = $i THEN d2 END)").mkString(" + ")
-    val resDef =
-      if (encodeRaw)
-        s"""res AS (SELECT vec_id, label, v AS r FROM ccorp)"""
-      else
-        s"""res AS (SELECT vec_id, ccorp.label,
-                         list_transform(generate_series(1, $Dim),
-                           i -> v[i] - centroid[i]) AS r
-                  FROM ccorp JOIN cmean USING (label))"""
-    val rounds = (1 to iters).map { r =>
-      s"""sc$r AS (SELECT vec_id, sub.subspace, code,
-                      list_reduce(list_transform(
-                        generate_series(1, $subDim),
-                        i -> (sv[i] - cent[i]) * (sv[i] - cent[i])),
-                        (x, y) -> x + y) AS d2
-               FROM sub JOIN cents${r - 1} cc
-                 ON sub.subspace = cc.subspace),
-        asg$r AS (SELECT vec_id, subspace, code FROM (
-                    SELECT *, row_number() OVER (
-                      PARTITION BY vec_id, subspace
-                      ORDER BY d2, code) AS rn FROM sc$r)
-                  WHERE rn = 1),
-        mm$r AS (SELECT a.subspace, a.code, i,
-                        CAST(SUM(CAST(floor(sv[i] * $S) AS BIGINT))
-                             AS DOUBLE)
-                          / CAST(COUNT(*) * $S AS DOUBLE) AS m
-                 FROM asg$r a JOIN sub ON a.vec_id = sub.vec_id
-                                      AND a.subspace = sub.subspace,
-                      (SELECT unnest(generate_series(1, $subDim)) AS i) g
-                 GROUP BY 1, 2, 3),
-        cn$r AS (SELECT subspace, code, array_agg(m ORDER BY i) AS cent
-                 FROM mm$r GROUP BY 1, 2),
-        cents$r AS (SELECT p.subspace, p.code,
-                           COALESCE(n.cent, p.cent) AS cent
-                    FROM cents${r - 1} p LEFT JOIN cn$r n
-                      ON p.subspace = n.subspace AND p.code = n.code)"""
-    }.map(",\n        " + _).mkString
-    s"""$cfxEmbCte,
-        ccorp AS (SELECT vec_id, label, v FROM cemb
-                  WHERE vec_id >= ${Queries.AnnQueryMaxId}),
-        cmean AS (SELECT label, array_agg(m ORDER BY i) AS centroid FROM (
-                    SELECT label, i,
-                           CAST(SUM(CAST(floor(v[i] * $S) AS BIGINT))
-                             AS DOUBLE)
-                             / CAST(COUNT(*) * $S AS DOUBLE) AS m
-                    FROM ccorp,
-                         (SELECT unnest(generate_series(1, $Dim)) AS i) g
-                    GROUP BY 1, 2)
-                  GROUP BY label),
-        $resDef,
-        cb AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT)
-                        - 1 AS code, r
-               FROM (SELECT vec_id, r FROM res
-                     ORDER BY vec_id LIMIT $nCodes)),
-        sp AS (SELECT CAST(unnest(generate_series(0, ${nSub - 1}))
-                 AS INT) AS subspace),
-        cents0 AS (SELECT sp.subspace, cb.code,
-                          list_slice(r, sp.subspace * $subDim + 1,
-                                     (sp.subspace + 1) * $subDim) AS cent
-                   FROM cb, sp),
-        sub AS (SELECT vec_id, label, sp.subspace,
-                       list_slice(r, sp.subspace * $subDim + 1,
-                                  (sp.subspace + 1) * $subDim) AS sv
-                FROM res, sp)$rounds,
-        cents AS (SELECT subspace, code, cent FROM cents$iters),
-        scoredc AS (SELECT vec_id, label, sub.subspace, code,
-                           list_reduce(list_transform(
-                             generate_series(1, $subDim),
-                             i -> (sv[i] - cent[i]) * (sv[i] - cent[i])),
-                             (x, y) -> x + y) AS d2
-                    FROM sub JOIN cents ON sub.subspace = cents.subspace),
-        codes AS (SELECT vec_id, label, subspace, code FROM (
-                    SELECT *, row_number() OVER (PARTITION BY vec_id, subspace
-                               ORDER BY d2, code) AS rn
-                    FROM scoredc)
-                  WHERE rn = 1),
-        q AS (SELECT vec_id AS query_id, v FROM cemb
-              WHERE vec_id < ${Queries.AnnQueryMaxId}),
-        qd AS (SELECT query_id, label,
-                      list_reduce(list_transform(generate_series(1, $Dim),
-                        i -> (v[i] - centroid[i]) * (v[i] - centroid[i])),
-                        (x, y) -> x + y) AS cd2,
-                      ${if (encodeRaw) "v AS qr"
-                        else s"""list_transform(generate_series(1, $Dim),
-                        i -> v[i] - centroid[i]) AS qr"""}
-               FROM q, cmean),
-        pr AS (SELECT query_id, label, qr FROM (
-                 SELECT *, row_number() OVER (PARTITION BY query_id
-                            ORDER BY cd2, label) AS lr
-                 FROM qd)
-               WHERE lr <= ${Queries.CfxNProbe}),
-        qsub AS (SELECT query_id, label, sp.subspace,
-                        list_slice(qr, sp.subspace * $subDim + 1,
-                                   (sp.subspace + 1) * $subDim) AS qsv
-                 FROM pr, sp),
-        lut AS (SELECT query_id, label, qsub.subspace, code,
-                       list_reduce(list_transform(
-                         generate_series(1, $subDim),
-                         i -> (qsv[i] - cent[i]) * (qsv[i] - cent[i])),
-                         (x, y) -> x + y) AS d2
-                FROM qsub JOIN cents ON qsub.subspace = cents.subspace),
-        j AS (SELECT lut.query_id, codes.vec_id, codes.subspace, d2
-              FROM codes JOIN lut ON lut.label = codes.label
-                                 AND lut.subspace = codes.subspace
-                                 AND lut.code = codes.code),
-        sq AS (SELECT query_id, vec_id, $adcSum AS adc_dist2
-               FROM j GROUP BY 1, 2),
-        radck AS (SELECT query_id, vec_id, adc_dist2,
-                         CAST(row_number() OVER (PARTITION BY query_id
-                           ORDER BY adc_dist2, vec_id) AS BIGINT) AS rank
-                  FROM sq)"""
-  }
-
-  private def cfxRecallSql(encodeRaw: Boolean): String = {
-    import graft.functions.Lsh.Dim
-    s"""WITH ${cfxAdcRankedCtes(encodeRaw)},
-        corpv AS (SELECT vec_id, v FROM cemb
-                  WHERE vec_id >= ${Queries.AnnQueryMaxId}),
-        exact AS (SELECT q.query_id, corpv.vec_id,
-                         list_reduce(list_transform(
-                           generate_series(1, $Dim),
-                           i -> (q.v[i] - corpv.v[i]) *
-                                (q.v[i] - corpv.v[i])),
-                           (x, y) -> x + y) AS d2
-                  FROM q, corpv),
-        ext AS (SELECT query_id, vec_id FROM (
-                  SELECT *, row_number() OVER (PARTITION BY query_id
-                             ORDER BY d2, vec_id) AS rk
-                  FROM exact)
-                WHERE rk <= ${Queries.AnnK}),
-        hits AS (SELECT e.query_id,
-                        CAST(SUM(CASE WHEN a.vec_id IS NOT NULL
-                                      THEN 1 ELSE 0 END) AS BIGINT)
-                          AS n_hits
-                 FROM ext e LEFT JOIN (SELECT query_id, vec_id FROM radck
-                                       WHERE rank <= ${Queries.AnnK}) a
-                   ON e.query_id = a.query_id AND e.vec_id = a.vec_id
-                 GROUP BY 1)
-        SELECT query_id, n_hits,
-               CAST(n_hits AS DOUBLE) / ${Queries.AnnK} AS recall
-        FROM hits"""
-  }
-
-  private def residualRecallSql(iters: Int): String = {
-    import graft.functions.Lsh.Dim
-    s"""WITH ${resAdcRankedCtes(iters)},
-        corpv AS (SELECT vec_id, v FROM emb
-                  WHERE vec_id >= ${Queries.AnnQueryMaxId}),
-        exact AS (SELECT q.query_id, corpv.vec_id,
-                         list_reduce(list_transform(
-                           generate_series(1, $Dim),
-                           i -> (q.v[i] - corpv.v[i]) *
-                                (q.v[i] - corpv.v[i])),
-                           (a, b) -> a + b) AS d2
-                  FROM q, corpv),
-        ext AS (SELECT query_id, vec_id FROM (
-                  SELECT *, row_number() OVER (PARTITION BY query_id
-                             ORDER BY d2, vec_id) AS rk
-                  FROM exact)
-                WHERE rk <= ${Queries.AnnK}),
-        hits AS (SELECT e.query_id,
-                        CAST(SUM(CASE WHEN a.vec_id IS NOT NULL
-                                      THEN 1 ELSE 0 END) AS BIGINT)
-                          AS n_hits
-                 FROM ext e LEFT JOIN (SELECT query_id, vec_id FROM radck
-                                       WHERE rank <= ${Queries.AnnK}) a
-                   ON e.query_id = a.query_id AND e.vec_id = a.vec_id
-                 GROUP BY 1)
-        SELECT query_id, n_hits,
-               CAST(n_hits AS DOUBLE) / ${Queries.AnnK} AS recall
-        FROM hits"""
-  }
-
-  private def resAdcRankedCtes(iters: Int): String = {
-      import graft.functions.Lsh.Dim
-      val subDim = Dim / Queries.PqSub
-      val S = operators.Ivf.MeanQuantScale
-      val adcSum = (0 until Queries.PqSub).map(i =>
-        s"MIN(CASE WHEN subspace = $i THEN d2 END)").mkString(" + ")
-      val rounds = (1 to iters).map { r =>
-        s"""sc$r AS (SELECT vec_id, sub.subspace, code,
-                        list_reduce(list_transform(
-                          generate_series(1, $subDim),
-                          i -> (sv[i] - cent[i]) * (sv[i] - cent[i])),
-                          (a, b) -> a + b) AS d2
-                 FROM sub JOIN cents${r - 1} cc
-                   ON sub.subspace = cc.subspace),
-          asg$r AS (SELECT vec_id, subspace, code FROM (
-                      SELECT *, row_number() OVER (
-                        PARTITION BY vec_id, subspace
-                        ORDER BY d2, code) AS rn FROM sc$r)
-                    WHERE rn = 1),
-          mm$r AS (SELECT a.subspace, a.code, i,
-                          CAST(SUM(CAST(floor(sv[i] * $S) AS BIGINT))
-                               AS DOUBLE)
-                            / CAST(COUNT(*) * $S AS DOUBLE) AS m
-                   FROM asg$r a JOIN sub ON a.vec_id = sub.vec_id
-                                        AND a.subspace = sub.subspace,
-                        (SELECT unnest(generate_series(1, $subDim)) AS i) g
-                   GROUP BY 1, 2, 3),
-          cn$r AS (SELECT subspace, code, array_agg(m ORDER BY i) AS cent
-                   FROM mm$r GROUP BY 1, 2),
-          cents$r AS (SELECT p.subspace, p.code,
-                             COALESCE(n.cent, p.cent) AS cent
-                      FROM cents${r - 1} p LEFT JOIN cn$r n
-                        ON p.subspace = n.subspace AND p.code = n.code)"""
-      }.map(",\n          " + _).mkString
-      s"""emb AS (SELECT vec_id, label,
-                              list_transform(embedding,
-                                x -> CAST(x AS DOUBLE)) AS v
-                       FROM embeddings),
-          corp AS (SELECT vec_id, label, v FROM emb
-                   WHERE vec_id >= ${Queries.AnnQueryMaxId}),
-          mean AS (SELECT label, array_agg(m ORDER BY i) AS centroid FROM (
-                     SELECT label, i,
-                            CAST(SUM(CAST(floor(v[i] *
-                                ${operators.Ivf.MeanQuantScale}) AS BIGINT))
-                              AS DOUBLE)
-                              / CAST(COUNT(*) *
-                                  ${operators.Ivf.MeanQuantScale} AS DOUBLE)
-                              AS m
-                     FROM corp, (SELECT unnest(generate_series(1, $Dim)) AS i) g
-                     GROUP BY 1, 2)
-                   GROUP BY label),
-          res AS (SELECT vec_id, corp.label,
-                         list_transform(generate_series(1, $Dim),
-                           i -> v[i] - centroid[i]) AS r
-                  FROM corp JOIN mean USING (label)),
-          cb AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT)
-                          - 1 AS code, r
-                 FROM (SELECT vec_id, r FROM res
-                       ORDER BY vec_id LIMIT ${Queries.PqCodes})),
-          sp AS (SELECT CAST(unnest(generate_series(0, ${Queries.PqSub - 1}))
-                   AS INT) AS subspace),
-          cents0 AS (SELECT sp.subspace, cb.code,
-                            list_slice(r, sp.subspace * $subDim + 1,
-                                       (sp.subspace + 1) * $subDim) AS cent
-                     FROM cb, sp),
-          sub AS (SELECT vec_id, label, sp.subspace,
-                         list_slice(r, sp.subspace * $subDim + 1,
-                                    (sp.subspace + 1) * $subDim) AS sv
-                  FROM res, sp)$rounds,
-          cents AS (SELECT subspace, code, cent FROM cents$iters),
-          scoredc AS (SELECT vec_id, label, sub.subspace, code,
-                             list_reduce(list_transform(
-                               generate_series(1, $subDim),
-                               i -> (sv[i] - cent[i]) * (sv[i] - cent[i])),
-                               (a, b) -> a + b) AS d2
-                      FROM sub JOIN cents ON sub.subspace = cents.subspace),
-          codes AS (SELECT vec_id, label, subspace, code FROM (
-                      SELECT *, row_number() OVER (PARTITION BY vec_id, subspace
-                                 ORDER BY d2, code) AS rn
-                      FROM scoredc)
-                    WHERE rn = 1),
-          q AS (SELECT vec_id AS query_id, v FROM emb
-                WHERE vec_id < ${Queries.AnnQueryMaxId}),
-          qd AS (SELECT query_id, label,
-                        list_reduce(list_transform(generate_series(1, $Dim),
-                          i -> (v[i] - centroid[i]) * (v[i] - centroid[i])),
-                          (a, b) -> a + b) AS cd2,
-                        list_transform(generate_series(1, $Dim),
-                          i -> v[i] - centroid[i]) AS qr
-                 FROM q, mean),
-          pr AS (SELECT query_id, label, qr FROM (
-                   SELECT *, row_number() OVER (PARTITION BY query_id
-                              ORDER BY cd2, label) AS lr
-                   FROM qd)
-                 WHERE lr <= ${Queries.IvfNProbe}),
-          qsub AS (SELECT query_id, label, sp.subspace,
-                          list_slice(qr, sp.subspace * $subDim + 1,
-                                     (sp.subspace + 1) * $subDim) AS qsv
-                   FROM pr, sp),
-          lut AS (SELECT query_id, label, qsub.subspace, code,
-                         list_reduce(list_transform(
-                           generate_series(1, $subDim),
-                           i -> (qsv[i] - cent[i]) * (qsv[i] - cent[i])),
-                           (a, b) -> a + b) AS d2
-                  FROM qsub JOIN cents ON qsub.subspace = cents.subspace),
-          j AS (SELECT lut.query_id, codes.vec_id, codes.subspace, d2
-                FROM codes JOIN lut ON lut.label = codes.label
-                                   AND lut.subspace = codes.subspace
-                                   AND lut.code = codes.code),
-          sq AS (SELECT query_id, vec_id, $adcSum AS adc_dist2
-                 FROM j GROUP BY 1, 2),
-          radck AS (SELECT query_id, vec_id, adc_dist2,
-                           CAST(row_number() OVER (PARTITION BY query_id
-                             ORDER BY adc_dist2, vec_id) AS BIGINT) AS rank
-                    FROM sq)"""
-    }
-
-  private lazy val pqAdcRankedCtes: String = {
-    val subDim = graft.functions.Lsh.Dim / Queries.PqSub
-    val adcSum = (0 until Queries.PqSub).map(i =>
-      s"MIN(CASE WHEN subspace = $i THEN d2 END)").mkString(" + ")
-    s"""$pqCtes,
-        qq AS (SELECT vec_id AS query_id, v FROM emb
-               WHERE vec_id < ${Queries.AnnQueryMaxId}),
-        qsub AS (SELECT query_id, sp.subspace,
-                        list_slice(v, sp.subspace * $subDim + 1,
-                                   (sp.subspace + 1) * $subDim) AS qsv
-                 FROM qq, sp),
-        lut AS (SELECT query_id, qsub.subspace, code,
-                       list_reduce(list_transform(
-                         generate_series(1, $subDim),
-                         i -> (qsv[i] - cent[i]) * (qsv[i] - cent[i])),
-                         (a, b) -> a + b) AS d2
-                FROM qsub JOIN cents ON qsub.subspace = cents.subspace),
-        corp AS (SELECT vec_id, subspace, code FROM codes
-                 WHERE vec_id >= ${Queries.AnnQueryMaxId}),
-        j AS (SELECT query_id, vec_id, corp.subspace, d2
-              FROM corp JOIN lut ON corp.subspace = lut.subspace
-                                AND corp.code = lut.code),
-        sq AS (SELECT query_id, vec_id,
-                      $adcSum AS adc_dist2
-               FROM j GROUP BY 1, 2),
-        adck AS (SELECT query_id, vec_id, adc_dist2,
-                        CAST(row_number() OVER (PARTITION BY query_id
-                          ORDER BY adc_dist2, vec_id) AS BIGINT) AS rank
-                 FROM sq)"""
-  }
-
-  /** The decontamination report (shared by q56's exact broadcast path
-    * and q243's bloom-prefiltered path — the bloom pass cannot change
-    * the result set, only the bytes that reach the confirm join).
-    */
-  private lazy val decontamSql: String = {
-    val ids = Queries.DecontamEvalIds.mkString("(", ",", ")")
-    val n = Queries.DecontamN
-    val gram = (0 until n).map(k => s"ws[i+$k]").mkString(" || ' ' || ")
-    s"""WITH w AS (SELECT doc_id, $ws AS ws FROM documents),
-        g AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                generate_series(1, len(ws) - ${n - 1}), i -> $gram))) AS gram
-              FROM w WHERE len(ws) >= $n),
-        ev AS (SELECT DISTINCT gram, doc_id AS eval_id FROM g
-               WHERE doc_id IN $ids),
-        hits AS (SELECT eval_id, g.doc_id FROM ev JOIN g USING (gram)
-                 WHERE g.doc_id NOT IN $ids)
-        SELECT eval_id, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_flagged,
-               count(*) AS n_contaminated_ngrams
-        FROM hits GROUP BY 1"""
-  }
-
-  /** The CMS heavy-hitter report (shared by q94's frame path and q194's
-    * native-aggregate path — the counter cells are identical by the
-    * additive algebra, so one oracle gates both construction paths).
-    */
-  private lazy val cmsHeavySql: String = {
-    import graft.functions.{Lsh, Sketches}
-    val d = Queries.CmsDepth
-    val wdt = Queries.CmsWidth
-    val buckets = (0 until d).map(i =>
-      s"((${Lsh.A(i)} * f + ${Lsh.B(i)}) % ${Sketches.P}) % $wdt AS b$i").mkString(", ")
-    s"""WITH w AS (SELECT unnest($ws) AS word FROM documents),
-        fp AS (SELECT word, ${fpSql("word")} AS f FROM w),
-        cells AS (SELECT word, $buckets FROM fp),
-        counters AS (
-          SELECT d, bucket, COUNT(*) AS cnt FROM (
-            ${(0 until d).map(i => s"SELECT $i AS d, b$i AS bucket FROM cells")
-              .mkString(" UNION ALL ")})
-          GROUP BY 1, 2),
-        top AS (SELECT word, COUNT(*) AS exact_n FROM w GROUP BY 1
-                ORDER BY exact_n DESC, word LIMIT ${Queries.CmsTopK}),
-        est AS (SELECT t.word, t.exact_n, MIN(c.cnt) AS cms_est
-                FROM top t
-                JOIN (SELECT DISTINCT word, ${(0 until d).map(i => s"b$i")
-                        .mkString(", ")} FROM cells) x ON t.word = x.word
-                JOIN counters c ON (
-                  ${(0 until d).map(i => s"(c.d = $i AND c.bucket = x.b$i)")
-                    .mkString(" OR ")})
-                GROUP BY 1, 2)
-        SELECT word, exact_n, cms_est, cms_est - exact_n AS overcount
-        FROM est"""
-  }
-
-  private lazy val sessionOverlapSql: String =
-      s"""WITH e AS (SELECT user_id, event_id, ts,
-                  epoch_us(ts) - lag(epoch_us(ts))
-                    OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-           FROM events),
-          s AS (SELECT user_id, ts,
-                  CAST(SUM(CASE WHEN gap > ${Queries.SessionGapMicros} THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) + 1 AS BIGINT) AS session_seq
-                FROM e),
-          sess AS (SELECT user_id, session_seq,
-                          MIN(ts) AS session_start, MAX(ts) AS session_end
-                   FROM s GROUP BY 1, 2)
-          SELECT a.user_id, a.session_seq, a.session_start,
-                 COUNT(b.user_id) AS n_overlapping
-          FROM sess a LEFT JOIN sess b
-            ON epoch_us(a.session_start) <= epoch_us(b.session_end)
-           AND epoch_us(b.session_start) <= epoch_us(a.session_end)
-           AND b.user_id != a.user_id
-          GROUP BY 1, 2, 3"""
-
-  /** Exact n-gram-Jaccard pairs over the df-capped shingle domain —
-    * ≡ NearDup.ngramJaccardPairs (q21; ground truth for q184's eval).
-    */
-  private lazy val exactJaccardSql: String =
-    s"""WITH d AS (SELECT doc_id,
-                list_distinct(list_transform(
-                  generate_series(1, len($ws) - ${Queries.JaccardN - 1}),
-                  i -> $ws[i] || ' ' || $ws[i+1] || ' ' || $ws[i+2])) AS sh
-         FROM documents),
-        ex0 AS (SELECT doc_id, unnest(sh) AS s FROM d),
-        ok AS (SELECT s FROM ex0 GROUP BY s
-               HAVING COUNT(*) <= ${Queries.JaccardMaxPostings}),
-        ex AS (SELECT doc_id, COUNT(*) OVER (PARTITION BY doc_id) AS n, s
-               FROM (SELECT doc_id, s FROM ex0 JOIN ok USING (s))),
-        p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     a.n AS na, b.n AS nb, COUNT(*) AS common
-              FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY 1, 2, 3, 4)
-       SELECT doc_a, doc_b, common, jaccard FROM (
-         SELECT doc_a, doc_b, common,
-                CAST(common AS DOUBLE) / (na + nb - common) AS jaccard FROM p)
-       WHERE jaccard >= ${Queries.JaccardThreshold}"""
-
-  /** Shared entity-resolution CTE chain (q153/q165): dictionary, fuzzy
-    * edges (≡ q105 blocking + edit distance), recursive closure, and
-    * `lab(name, root_key)` — the per-name component assignment.
-    */
-  private lazy val entityLabCtes: String = {
-    val d = Queries.FuzzyMaxDist
-    s"""WITH RECURSIVE
-        dict AS (SELECT p_name AS name, COUNT(*) AS n_rows,
-                        MIN(p_partkey) AS id
-                 FROM part GROUP BY 1),
-        blk AS (SELECT name,
-                       list_extract(string_split(name, ' '), -1) AS blk
-                FROM dict),
-        pr AS (SELECT a.name AS na, b2.name AS nb
-               FROM blk a JOIN blk b2 ON a.blk = b2.blk AND a.name < b2.name
-               WHERE levenshtein(a.name, b2.name) <= $d),
-        ed AS (SELECT na AS src, nb AS dst FROM pr
-               UNION ALL SELECT nb, na FROM pr),
-        reach(id, r) AS (
-          SELECT name, name FROM dict
-          UNION
-          SELECT reach.id, ed.dst FROM reach JOIN ed ON reach.r = ed.src),
-        lab AS (SELECT reach.id AS name, MIN(d2.id) AS root_key
-                FROM reach JOIN dict d2 ON reach.r = d2.name GROUP BY 1)"""
-  }
-
-  /** ≡ ZOrder.layoutManifest over orders (q147; reused as a CTE by the
-    * q159 pruning simulator): exact-integer quantization, then the same
-    * four shift-mask spread rounds as MortonInterleave16, one CTE per
-    * round (masks 0x00FF00FF/0x0F0F0F0F/0x33333333/0x55555555 in
-    * decimal).
-    */
-  private lazy val zorderManifestSql: String = {
-    val q = 1L << Queries.ZQBits
-    val blk = 1L << Queries.ZBlockShift
-    s"""WITH b AS (SELECT o_custkey AS x,
-                date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS y
-                FROM orders
-                WHERE o_custkey IS NOT NULL AND o_orderdate IS NOT NULL),
-        s AS (SELECT MIN(x) AS minx, MAX(x) AS maxx,
-                     MIN(y) AS miny, MAX(y) AS maxy FROM b),
-        g AS (SELECT ((x - minx) * $q) // (maxx - minx + 1) AS bx,
-                     ((y - miny) * $q) // (maxy - miny + 1) AS by FROM b, s),
-        m1 AS (SELECT bx, by, (bx | (bx << 8)) & 16711935 AS sx,
-                             (by | (by << 8)) & 16711935 AS sy FROM g),
-        m2 AS (SELECT bx, by, (sx | (sx << 4)) & 252645135 AS sx,
-                             (sy | (sy << 4)) & 252645135 AS sy FROM m1),
-        m3 AS (SELECT bx, by, (sx | (sx << 2)) & 858993459 AS sx,
-                             (sy | (sy << 2)) & 858993459 AS sy FROM m2),
-        m4 AS (SELECT bx, by, (sx | (sx << 1)) & 1431655765 AS sx,
-                             (sy | (sy << 1)) & 1431655765 AS sy FROM m3)
-        SELECT (sx | (sy << 1)) // $blk AS block, COUNT(*) AS n_rows,
-               MIN(bx) AS min_x, MAX(bx) AS max_x,
-               MIN(by) AS min_y, MAX(by) AS max_y
-        FROM m4 GROUP BY 1"""
-  }
-
-  /** The Hilbert xy2d walk as a reusable CTE chain: one CTE per bit
-    * level, operating on (x, y, d) with `carry` columns passed through
-    * untouched and `prefix` naming the chain (so two walks can coexist
-    * in one statement — q238 runs the flat and the per-range walk side
-    * by side).
-    */
-  private def hilbertWalkCtes(prefix: String, carry: String): String = {
-    val svals = (Queries.ZQBits - 1 to 0 by -1).map(1L << _)
-    svals.zipWithIndex.map { case (sv, i) =>
-      s"""$prefix${i + 1} AS (SELECT $carry bx, by, nx AS x, ny AS y, d FROM (
-             SELECT $carry bx, by,
-                    CASE WHEN (y & $sv) > 0 THEN x
-                         WHEN (x & $sv) > 0 THEN $sv - 1 - y
-                         ELSE y END AS nx,
-                    CASE WHEN (y & $sv) > 0 THEN y
-                         WHEN (x & $sv) > 0 THEN $sv - 1 - x
-                         ELSE x END AS ny,
-                    d + $sv * $sv *
-                      xor(3 * (CASE WHEN (x & $sv) > 0 THEN 1 ELSE 0 END),
-                          CASE WHEN (y & $sv) > 0 THEN 1 ELSE 0 END) AS d
-             FROM $prefix$i))"""
-    }.mkString(",\n        ")
-  }
-
-  private lazy val hilbertWalkLast = Queries.ZQBits
-
-  /** q221's oracle: the Hilbert xy2d walk unrolled — one CTE per bit
-    * level s = 2^(qBits−1) … 1, each applying the quadrant-digit add
-    * and the reflect/transpose rotation to (x, y, d). The rotation is
-    * computed in an INNER select with fresh aliases (nx/ny) so no
-    * expression can accidentally resolve a lateral alias instead of the
-    * input column.
-    */
-  private lazy val hilbertManifestSql: String = {
-    val q = 1L << Queries.ZQBits
-    val blk = 1L << Queries.ZBlockShift
-    val svals = (Queries.ZQBits - 1 to 0 by -1).map(1L << _)
-    val rounds = svals.zipWithIndex.map { case (s, i) =>
-      s"""h${i + 1} AS (SELECT bx, by, nx AS x, ny AS y, d FROM (
-             SELECT bx, by,
-                    CASE WHEN (y & $s) > 0 THEN x
-                         WHEN (x & $s) > 0 THEN $s - 1 - y
-                         ELSE y END AS nx,
-                    CASE WHEN (y & $s) > 0 THEN y
-                         WHEN (x & $s) > 0 THEN $s - 1 - x
-                         ELSE x END AS ny,
-                    d + $s * $s *
-                      xor(3 * (CASE WHEN (x & $s) > 0 THEN 1 ELSE 0 END),
-                          CASE WHEN (y & $s) > 0 THEN 1 ELSE 0 END) AS d
-             FROM h$i))"""
-    }.mkString(",\n        ")
-    s"""WITH b AS (SELECT o_custkey AS x,
-              date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS y
-              FROM orders
-              WHERE o_custkey IS NOT NULL AND o_orderdate IS NOT NULL),
-        s AS (SELECT MIN(x) AS minx, MAX(x) AS maxx,
-                     MIN(y) AS miny, MAX(y) AS maxy FROM b),
-        g AS (SELECT ((x - minx) * $q) // (maxx - minx + 1) AS bx,
-                     ((y - miny) * $q) // (maxy - miny + 1) AS by FROM b, s),
-        h0 AS (SELECT bx, by, bx AS x, by AS y, CAST(0 AS BIGINT) AS d FROM g),
-        $rounds
-        SELECT CAST(d // $blk AS BIGINT) AS block,
-               COUNT(*) AS n_rows,
-               MIN(bx) AS min_x, MAX(bx) AS max_x,
-               MIN(by) AS min_y, MAX(by) AS max_y
-        FROM h${svals.length} GROUP BY 1"""
-  }
-
-  /** Shared 3-D quantized-grid CTEs over lineitem (q277/q278): exact
-    * integer quantization of (l_partkey, l_suppkey, ship-day) onto the
-    * 2^Z3QBits grid — bit-identical to ZOrder.manifest3's quantize.
-    */
-  private lazy val grid3Ctes: String = {
-    val q = 1L << Queries.Z3QBits
-    s"""b3 AS (SELECT l_partkey AS x, l_suppkey AS y,
-                date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE)) AS z
-           FROM lineitem
-           WHERE l_partkey IS NOT NULL AND l_suppkey IS NOT NULL
-             AND l_shipdate IS NOT NULL),
-        s3 AS (SELECT MIN(x) AS minx, MAX(x) AS maxx,
-                      MIN(y) AS miny, MAX(y) AS maxy,
-                      MIN(z) AS minz, MAX(z) AS maxz FROM b3),
-        g3 AS (SELECT ((x - minx) * $q) // (maxx - minx + 1) AS bx,
-                      ((y - miny) * $q) // (maxy - miny + 1) AS by,
-                      ((z - minz) * $q) // (maxz - minz + 1) AS bz FROM b3, s3)"""
-  }
-
-  /** 3-D Morton index of (bx,by,bz) as plain arithmetic: bit k of axis
-    * j lands at output position 3k+j — the layout
-    * ZOrderExprs.interleaveN computes.
-    */
-  private lazy val morton3Expr: String =
-    (0 until Queries.Z3QBits).flatMap { k =>
-      Seq(s"((bx >> $k) & 1) * ${1L << (3 * k)}",
-        s"((by >> $k) & 1) * ${1L << (3 * k + 1)}",
-        s"((bz >> $k) & 1) * ${1L << (3 * k + 2)}")
-    }.mkString(" + ")
-
-  /** q277's oracle: the 3-D Morton zone map. */
-  private lazy val zorder3ManifestSql: String = {
-    val blk = 1L << Queries.Z3BlockShift
-    s"""WITH $grid3Ctes
-        SELECT ($morton3Expr) // $blk AS block, COUNT(*) AS n_rows,
-               MIN(bx) AS min_x, MAX(bx) AS max_x,
-               MIN(by) AS min_y, MAX(by) AS max_y,
-               MIN(bz) AS min_z, MAX(bz) AS max_z
-        FROM g3 GROUP BY 1"""
-  }
-
-  /** Skilling AxesToTranspose for d=3 as a CTE chain (≡
-    * HilbertExprs.hilbertNJava round for round): per bit level Q =
-    * 2^(qBits−1)…2, three sequential reflect/exchange steps — axis 0
-    * is both the accumulator and an axis, so its own step reduces to a
-    * conditional XOR — then the Gray encode across axes and the
-    * trailing-axis correction term.
-    */
-  private lazy val hilbert3Ctes: String = {
-    val qvals = (Queries.Z3QBits - 1 to 1 by -1).map(1L << _)
-    val rounds = qvals.zipWithIndex.map { case (qv, r) =>
-      val p = qv - 1
-      val prev = if (r == 0) "h3_0" else s"h3_${r}c"
-      s"""h3_${r + 1}a AS (SELECT bx, by, bz,
-             CASE WHEN (x0 & $qv) > 0 THEN xor(x0, $p) ELSE x0 END AS x0,
-             x1, x2 FROM $prev),
-          h3_${r + 1}bt AS (SELECT bx, by, bz, x0, x1, x2,
-             CASE WHEN (x1 & $qv) > 0 THEN 0 ELSE xor(x0, x1) & $p END AS t
-             FROM h3_${r + 1}a),
-          h3_${r + 1}b AS (SELECT bx, by, bz,
-             CASE WHEN (x1 & $qv) > 0 THEN xor(x0, $p) ELSE xor(x0, t) END AS x0,
-             xor(x1, t) AS x1, x2 FROM h3_${r + 1}bt),
-          h3_${r + 1}ct AS (SELECT bx, by, bz, x0, x1, x2,
-             CASE WHEN (x2 & $qv) > 0 THEN 0 ELSE xor(x0, x2) & $p END AS t
-             FROM h3_${r + 1}b),
-          h3_${r + 1}c AS (SELECT bx, by, bz,
-             CASE WHEN (x2 & $qv) > 0 THEN xor(x0, $p) ELSE xor(x0, t) END AS x0,
-             x1, xor(x2, t) AS x2 FROM h3_${r + 1}ct)"""
-    }.mkString(",\n        ")
-    val last = qvals.length
-    val tFold = qvals
-      .map(qv => s"CASE WHEN (x2 & $qv) > 0 THEN ${qv - 1} ELSE 0 END")
-      .reduce((a, b) => s"xor($a, $b)")
-    s"""$rounds,
-        h3_g AS (SELECT bx, by, bz, x0, xor(x1, x0) AS x1,
-                        xor(x2, xor(x1, x0)) AS x2 FROM h3_${last}c),
-        h3_t AS (SELECT bx, by, bz, x0, x1, x2, $tFold AS tt FROM h3_g),
-        h3_f AS (SELECT bx, by, bz, xor(x0, tt) AS x0, xor(x1, tt) AS x1,
-                        xor(x2, tt) AS x2 FROM h3_t)"""
-  }
-
-  /** Interleave of the TRANSPOSED axes: per bit level k, axis 0's bit
-    * is the most significant of the level's three (3k+2, 3k+1, 3k).
-    */
-  private lazy val hilbert3IndexExpr: String =
-    (0 until Queries.Z3QBits).flatMap { k =>
-      Seq(s"((x0 >> $k) & 1) * ${1L << (3 * k + 2)}",
-        s"((x1 >> $k) & 1) * ${1L << (3 * k + 1)}",
-        s"((x2 >> $k) & 1) * ${1L << (3 * k)}")
-    }.mkString(" + ")
-
-  /** q278's Hilbert half: the 3-D Hilbert zone map. */
-  private lazy val hilbert3ManifestSql: String = {
-    val blk = 1L << Queries.Z3BlockShift
-    s"""WITH $grid3Ctes,
-        h3_0 AS (SELECT bx, by, bz, bx AS x0, by AS x1, bz AS x2 FROM g3),
-        $hilbert3Ctes
-        SELECT ($hilbert3IndexExpr) // $blk AS block, COUNT(*) AS n_rows,
-               MIN(bx) AS min_x, MAX(bx) AS max_x,
-               MIN(by) AS min_y, MAX(by) AS max_y,
-               MIN(bz) AS min_z, MAX(bz) AS max_z
-        FROM h3_f GROUP BY 1"""
-  }
-
-  /** q279's oracle (shared by q280): the DSIR hashed-bigram importance
-    * score replayed with the identical integer arithmetic — the same
-    * per-char polynomial fold as q30, the same add-one smoothing, the
-    * same bitlen identity for the per-bucket model cost.
-    */
-  private lazy val dsirWeightsSql: String = {
-    val b = Queries.DsirBuckets
-    s"""WITH d AS (SELECT doc_id, lang, $ws AS w
-                   FROM documents
-                   WHERE text IS NOT NULL AND lang IS NOT NULL
-                     AND len($ws) >= 2),
-        bgr AS (SELECT doc_id, lang,
-                  list_reduce(list_transform(
-                      string_split_regex(w[i] || ' ' || w[i+1], ''),
-                      c -> CAST(ascii(c) AS BIGINT)),
-                    (a, x) -> (a * 31 + x) % 1000000007) % $b AS bucket
-                FROM d, LATERAL (SELECT unnest(generate_series(1,
-                       len(w) - 1)) AS i) g),
-        dc AS (SELECT doc_id, lang, bucket, CAST(COUNT(*) AS BIGINT) AS c
-               FROM bgr GROUP BY 1, 2, 3),
-        rawb AS (SELECT bucket, CAST(SUM(c) AS BIGINT) AS cq
-                 FROM dc GROUP BY 1),
-        tgtb AS (SELECT bucket, CAST(SUM(c) AS BIGINT) AS cp
-                 FROM dc WHERE lang = 'en' GROUP BY 1),
-        tot AS (SELECT (SELECT SUM(cq) FROM rawb) + $b AS tq,
-                       (SELECT COALESCE(SUM(cp), 0) FROM tgtb) + $b AS tp),
-        model AS (SELECT rawb.bucket,
-                         length(bin(tq // (cq + 1))) - 1 AS bits_q,
-                         length(bin(tp // (COALESCE(cp, 0) + 1))) - 1 AS bits_p
-                  FROM rawb LEFT JOIN tgtb USING (bucket), tot)
-        SELECT dc.doc_id, dc.lang,
-               CAST(SUM(c) AS BIGINT) AS n_bigrams,
-               CAST(SUM(c * (bits_q - bits_p)) AS BIGINT) AS bits_saved,
-               CAST(SUM(c * (bits_q - bits_p)) AS BIGINT) > 0 AS target_like
-        FROM dc JOIN model USING (bucket)
-        GROUP BY 1, 2"""
-  }
-
-  /** BM25 scored-docs SQL shared by q69/q79 — ≡ Queries.bm25Scores (same
-    * literal term order, same rational idf, same fixed fold order).
-    */
-  private lazy val bm25ScoredSql: String = {
-    val terms = Queries.BmTerms
-    val dfSel = terms.zipWithIndex.map { case (t, i) =>
-      s"SUM(CASE WHEN list_contains(ws, '$t') THEN 1 ELSE 0 END) AS df_$i"
-    }.mkString(",\n                  ")
-    val scoreTerms = terms.zipWithIndex.map { case (t, i) =>
-      s"""(CAST(n_docs AS DOUBLE) - df_$i + 0.5) / (df_$i + 0.5)
-          * (CAST(len(list_filter(ws, w -> w = '$t')) AS DOUBLE) * ${Queries.BmK1 + 1})
-          / (CAST(len(list_filter(ws, w -> w = '$t')) AS DOUBLE)
-             + ${Queries.BmK1} * (${1 - Queries.BmB} + ${Queries.BmB}
-                 * CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE))))"""
-    }.mkString("\n          + ")
-    s"""WITH d AS (SELECT doc_id, $ws AS ws, len($ws) AS dl FROM documents),
-        s AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS sum_dl,
-                $dfSel
-              FROM d)
-        SELECT doc_id, score FROM (
-          SELECT doc_id,
-                 $scoreTerms
-                 AS score
-          FROM d, s)
-        WHERE score > 0"""
-  }
-
-  private lazy val sessionConcurrencySql: String =
-      s"""WITH e AS (SELECT user_id, event_id, ts,
-                  epoch_us(ts) - lag(epoch_us(ts))
-                    OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-           FROM events),
-          s AS (SELECT user_id, ts,
-                  CAST(SUM(CASE WHEN gap > ${Queries.SessionGapMicros} THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) + 1 AS BIGINT) AS session_seq
-                FROM e),
-          sess AS (SELECT user_id, session_seq,
-                          MIN(ts) AS session_start, MAX(ts) AS session_end
-                   FROM s GROUP BY 1, 2)
-          SELECT sess.user_id, sess.session_seq, sess.session_start,
-                 COUNT(ev.user_id) AS n_concurrent
-          FROM sess LEFT JOIN events ev
-            ON epoch_us(ev.ts) >= epoch_us(sess.session_start)
-           AND epoch_us(ev.ts) <= epoch_us(sess.session_end)
-           AND ev.user_id != sess.user_id
-          GROUP BY 1, 2, 3"""
+  def oracleSql: Map[String, String] = specs.map(s => s.name -> s.oracle).toMap
 }

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.col
-import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy}
+import graft.plans.AsOfJoinPlan
 
 /** DataFrame front-end for the native as-of join operator
   * (plans/AsOfJoinPlan.scala) — same signature and semantics as
@@ -15,20 +15,12 @@ import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy}
   */
 object AsOfNative {
 
-  /** Idempotently register the planner strategy on a live session (the
-    * imperative twin of `GraftExtensions`' injection).
-    */
-  def ensureStrategy(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-
   def asOfJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
                tsCol: String, rightCols: Seq[String], prefix: String = "r_",
                toleranceMicros: Option[Long] = None,
                forward: Boolean = false): DataFrame = {
     val spark = left.sparkSession
-    ensureStrategy(spark)
+    graft.GraftFunctions.install(spark)
     // Alias EVERY right column: fresh exprIds make the two sides disjoint
     // even when both derive from the same source relation (self as-of),
     // which a hand-built binary node must guarantee itself — the analyzer

@@ -87,13 +87,13 @@ object ZOrder {
     * Scale shape: bounds are one scalar aggregate collected to the
     * driver (one row of four longs); the index is map-side codegen;
     * the range shuffle is the one exchange a clustering write always
-    * pays. The manifest is aggregated FROM THE WRITTEN FILES — a
-    * column-pruned read-back of (hblock, bx, by) over what the data
-    * write just committed — so the zone map describes exactly the
-    * bytes on disk: a non-deterministic or mutated input source can
-    * skew WHAT was written, but never make the manifest disagree with
-    * it (the pruning contract is manifest ⊇ file contents, and a
-    * single evaluation underlies both artifacts). Rows with a NULL
+    * pays. The coded frame is persisted for the length of the call,
+    * and both the data write and the manifest aggregate read that one
+    * cached evaluation, so the zone map describes exactly the rows
+    * written: a non-deterministic or mutated input source can skew
+    * WHAT was written, but never make the manifest disagree with it
+    * (the pruning contract is manifest ⊇ file contents). Nothing is
+    * read back from the written directories. Rows with a NULL
     * layout dimension are excluded (a production writer would route
     * them to a dedicated overflow partition).
     */
@@ -111,27 +111,25 @@ object ZOrder {
       .withColumn("by", quantize(yCol.cast("long"), lit(miny), lit(maxy), qBits))
       .withColumn("h", graft.plans.HilbertExprs.hilbert(col("bx"), col("by"), qBits))
       .withColumn("hblock", shiftright(col("h"), blockShift))
-    coded
-      .repartitionByRange(col("h"))
-      .write.mode("overwrite").partitionBy("hblock").parquet(path)
-    // Zone map from the SAME `coded` frame the write materialized (its
-    // rows ARE the written rows — mode("overwrite") + the write
-    // completing means file content ≡ coded), instead of reading the
-    // freshly written table back: the read-back paid a 2^(2qBits −
-    // blockShift)-directory listing + partition-schema inference + a
-    // tiny-file scan per block dir (guide §6 small-files tax, measured
-    // the dominant non-commit cost of q230) to recompute aggregates of
-    // rows we already hold the plan for. One more pass over the input
-    // scan is strictly cheaper than a thousand-directory read-back.
-    coded
-      .groupBy(col("hblock"))
-      .agg(count(lit(1)).as("n_rows"),
-        min("bx").as("min_x"), max("bx").as("max_x"),
-        min("by").as("min_y"), max("by").as("max_y"))
-      .withColumn("minx", lit(minx)).withColumn("maxx", lit(maxx))
-      .withColumn("miny", lit(miny)).withColumn("maxy", lit(maxy))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(path + "_manifest")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      coded
+        .repartitionByRange(col("h"))
+        .write.mode("overwrite").partitionBy("hblock").parquet(path)
+      // Zone map from the cached rows the write just stored: reading
+      // the written table back would pay a 2^(2qBits − blockShift)-
+      // directory listing, partition-schema inference and a tiny-file
+      // scan per block dir (the dominant non-commit cost of q230).
+      coded
+        .groupBy(col("hblock"))
+        .agg(count(lit(1)).as("n_rows"),
+          min("bx").as("min_x"), max("bx").as("max_x"),
+          min("by").as("min_y"), max("by").as("max_y"))
+        .withColumn("minx", lit(minx)).withColumn("maxx", lit(maxx))
+        .withColumn("miny", lit(miny)).withColumn("maxy", lit(maxy))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(path + "_manifest")
+    } finally coded.unpersist()
   }
 
   /** `hilbertLayoutManifest` with the zone map in ORIGINAL coordinates

@@ -50,7 +50,7 @@ case class AsOfJoinPlan(
 }
 
 /** Plans [[AsOfJoinPlan]] to [[AsOfJoinExec]]; injected via
-  * `GraftExtensions` or `AsOfNative.ensureStrategy`.
+  * `GraftExtensions` or `GraftFunctions.install`.
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

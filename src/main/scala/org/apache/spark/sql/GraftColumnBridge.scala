@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into Spark's package-private Column↔Expression converters, so
@@ -11,14 +12,17 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Register a function builder on a live session's registry (the
-    * imperative twin of SparkSessionExtensions.injectFunction, for
-    * sessions that already exist).
+  /** Register a function builder on a live session's registry unless a
+    * function of that name is already registered there (the imperative
+    * twin of SparkSessionExtensions.injectFunction, for sessions that
+    * already exist).
     */
   def registerFunction(spark: SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
+                       builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, builder, "built-in")
+  }
 
   /** Materialize a DataFrame over a (resolved) custom logical plan —
     * `Dataset.ofRows` is private[sql], so whole-operator extensions

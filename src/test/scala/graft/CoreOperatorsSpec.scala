@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.{AnalyticsQueries, EtlQueries, SketchQueries}
 
 object TestSession {
   lazy val spark: SparkSession = Sessions.local(4)
@@ -34,7 +35,7 @@ class CoreOperatorsSpec extends AnyFunSuite {
   }
 
   test("dedup_latest yields one row per key and keeps the max sequence") {
-    val out = Queries.dedupLatest(spark, sf)
+    val out = EtlQueries.dedupLatest(spark, sf)
     assert(out.groupBy("user_id", "event_type").count().filter(col("count") > 1).count() == 0)
     // kept ts must equal the max ts per key
     val ev = Tables.events(spark, sf)
@@ -45,7 +46,7 @@ class CoreOperatorsSpec extends AnyFunSuite {
   }
 
   test("scd2 intervals: exactly one current row per key, from < to") {
-    val scd2 = Queries.scd2Build(spark, sf)
+    val scd2 = EtlQueries.scd2Build(spark, sf)
     val perKeyCurrent = scd2.filter(col("is_current"))
       .groupBy("user_id").count().filter(col("count") =!= 1).count()
     assert(perKeyCurrent == 0)
@@ -54,7 +55,7 @@ class CoreOperatorsSpec extends AnyFunSuite {
   }
 
   test("as-of snapshot has at most one row per key and brackets the timestamp") {
-    val snap = Queries.validityAsOf(spark, sf)
+    val snap = EtlQueries.validityAsOf(spark, sf)
     assert(snap.groupBy("user_id").count().filter(col("count") > 1).count() == 0)
   }
 
@@ -76,10 +77,10 @@ class CoreOperatorsSpec extends AnyFunSuite {
   }
 
   test("sketch percentiles land within one bin width of the exact answer") {
-    val exact = Queries.percentileReport(spark, sf).collect()
+    val exact = AnalyticsQueries.percentileReport(spark, sf).collect()
       .map(r => r.getString(0) -> Seq(r.getDouble(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4))).toMap
-    val sketch = Queries.sketchPercentiles(spark, sf).collect()
+    val sketch = SketchQueries.sketchPercentiles(spark, sf).collect()
       .map(r => r.getString(0) -> Seq(r.getDouble(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4))).toMap
     assert(sketch.keySet == exact.keySet)
@@ -87,7 +88,7 @@ class CoreOperatorsSpec extends AnyFunSuite {
     // must sit within one bin width of the true percentile
     sketch.foreach { case (flag, ests) =>
       ests.zip(exact(flag)).zipWithIndex.foreach { case ((est, ex), i) =>
-        assert(math.abs(est - ex) <= Queries.SketchBinWidth,
+        assert(math.abs(est - ex) <= SketchQueries.SketchBinWidth,
           f"flag $flag q#$i: sketch $est%.2f vs exact $ex%.2f")
       }
     }
@@ -96,13 +97,13 @@ class CoreOperatorsSpec extends AnyFunSuite {
     // union of halves (bin counting is a plain sum, so union ≡ vector add)
     val li = Tables.lineitem(spark, sf).select("l_returnflag", "l_extendedprice")
     val whole = graft.functions.Sketches.histogramQuantiles(li,
-      "l_returnflag", "l_extendedprice", Queries.SketchBinWidth,
-      Queries.SketchBins, Queries.SketchQs)
+      "l_returnflag", "l_extendedprice", SketchQueries.SketchBinWidth,
+      SketchQueries.SketchBins, SketchQueries.SketchQs)
     val halves = graft.functions.Sketches.histogramQuantiles(
       li.filter(col("l_extendedprice") < 50000)
         .unionByName(li.filter(col("l_extendedprice") >= 50000)),
-      "l_returnflag", "l_extendedprice", Queries.SketchBinWidth,
-      Queries.SketchBins, Queries.SketchQs)
+      "l_returnflag", "l_extendedprice", SketchQueries.SketchBinWidth,
+      SketchQueries.SketchBins, SketchQueries.SketchQs)
     assert(whole.except(halves).count() == 0 && halves.except(whole).count() == 0,
       "merge (union of disjoint halves) must reproduce the whole-table sketch")
   }
@@ -190,14 +191,14 @@ class CoreOperatorsSpec extends AnyFunSuite {
   }
 
   test("incremental window extraction is bounded by the watermarks") {
-    val out = Queries.incrementalExtract(spark, sf)
-    val viol = out.filter(col("ts") <= lit(Queries.WmLow).cast("timestamp") ||
-      col("ts") > lit(Queries.WmHigh).cast("timestamp")).count()
+    val out = EtlQueries.incrementalExtract(spark, sf)
+    val viol = out.filter(col("ts") <= lit(EtlQueries.WmLow).cast("timestamp") ||
+      col("ts") > lit(EtlQueries.WmHigh).cast("timestamp")).count()
     assert(viol == 0)
   }
 
   test("incremental agg merge equals full recompute") {
-    val merged = Queries.aggMerge(spark, sf)
+    val merged = EtlQueries.aggMerge(spark, sf)
     val full = Tables.events(spark, sf).groupBy("user_id")
       .agg(count(lit(1)).as("n_events"),
         sum(Cols.dec2(col("value"))).cast("double").as("total_value"))
@@ -205,7 +206,7 @@ class CoreOperatorsSpec extends AnyFunSuite {
   }
 
   test("dq report counts violations in a single pass") {
-    val rep = Queries.dqValidate(spark, sf).collect()
+    val rep = EtlQueries.dqValidate(spark, sf).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(rep("custkey_not_null") == 0)
     assert(rep("name_format") == 0)
@@ -219,7 +220,7 @@ class CoreOperatorsSpec extends AnyFunSuite {
   }
 
   test("dim_date keys are consistent with their date") {
-    val dd = Queries.dimDate(spark, sf)
+    val dd = EtlQueries.dimDate(spark, sf)
     val bad = dd.filter(col("date_key") =!=
       (col("year") * 10000 + col("month") * 100 + col("day"))).count()
     assert(bad == 0)

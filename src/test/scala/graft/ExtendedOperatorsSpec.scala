@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Ivf, Multimodal, NearDup}
+import graft.queries._
 
 /** LLM-data operators checked against engine-independent ground truth. */
 class ExtendedOperatorsSpec extends AnyFunSuite {
@@ -10,10 +11,10 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
 
   test("minhash LSH candidates achieve full recall of exact-jaccard pairs") {
     val exact = NearDup.ngramJaccardPairs(Tables.documents(spark, sf),
-      "doc_id", "text", Queries.JaccardN, Queries.JaccardThreshold)
+      "doc_id", "text", DedupQueries.JaccardN, DedupQueries.JaccardThreshold)
       .select("doc_a", "doc_b")
     val cand = NearDup.minHashLshPairs(Tables.documents(spark, sf),
-      "doc_id", "text", Queries.JaccardN)
+      "doc_id", "text", DedupQueries.JaccardN)
       .select("doc_a", "doc_b")
     assert(exact.count() > 0, "corpus should contain planted near-dups")
     assert(exact.except(cand).count() == 0, "LSH missed an exact near-dup pair")
@@ -24,10 +25,10 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
     // docs (measured: 1 in ~125k pairs on this corpus), so the contract is
     // precision/recall, not zero false positives.
     val sim = NearDup.simHashPairs(Tables.documents(spark, sf),
-      "doc_id", "text", Queries.JaccardN, Queries.SimHammingMax)
+      "doc_id", "text", DedupQueries.JaccardN, DedupQueries.SimHammingMax)
       .select("doc_a", "doc_b")
     val exact = NearDup.ngramJaccardPairs(Tables.documents(spark, sf),
-      "doc_id", "text", Queries.JaccardN, 0.5)
+      "doc_id", "text", DedupQueries.JaccardN, 0.5)
       .select("doc_a", "doc_b")
     val nSim = sim.count()
     val truePos = nSim - sim.except(exact).count()
@@ -40,11 +41,11 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
   test("wide minhash geometry (Mh64) keeps planted-pair recall and sharpens the estimate") {
     import graft.functions.Lsh
     val exact = NearDup.ngramJaccardPairs(Tables.documents(spark, sf),
-      "doc_id", "text", Queries.JaccardN, Queries.JaccardThreshold)
+      "doc_id", "text", DedupQueries.JaccardN, DedupQueries.JaccardThreshold)
     val c16 = NearDup.minHashLshPairs(Tables.documents(spark, sf),
-      "doc_id", "text", Queries.JaccardN, Lsh.Mh16)
+      "doc_id", "text", DedupQueries.JaccardN, Lsh.Mh16)
     val c64 = NearDup.minHashLshPairs(Tables.documents(spark, sf),
-      "doc_id", "text", Queries.JaccardN, Lsh.Mh64)
+      "doc_id", "text", DedupQueries.JaccardN, Lsh.Mh64)
     assert(exact.count() > 0)
     assert(exact.select("doc_a", "doc_b")
       .except(c64.select("doc_a", "doc_b")).count() == 0,
@@ -65,7 +66,7 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
     val sh = Tables.documents(spark, sf).limit(500)
       .select(col("doc_id"),
         graft.plans.SignatureExprs.distinctNGrams(
-          split(col("text"), " "), Queries.JaccardN).as("sh"))
+          split(col("text"), " "), DedupQueries.JaccardN).as("sh"))
       .filter(size(col("sh")) > 0)
     val both = sh.select(
       graft.plans.SignatureExprs.simHash(col("sh"),
@@ -82,7 +83,7 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
     // maxHamming = bands loses completeness: a pair can differ in every band.
     intercept[IllegalArgumentException] {
       NearDup.simHashPairs(Tables.documents(spark, sf), "doc_id", "text",
-        Queries.JaccardN, Lsh.Sim32.bands, Lsh.Sim32)
+        DedupQueries.JaccardN, Lsh.Sim32.bands, Lsh.Sim32)
     }
     // Geometry shape: bands must divide bits; words need a mixer pair each;
     // bands may not straddle 32-bit words; mixers must be odd.
@@ -101,10 +102,10 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
   test("radius-lever geometry (Sim64Radius, hamming<=7) keeps planted-pair recall") {
     import graft.functions.Lsh
     val wide = NearDup.simHashPairs(Tables.documents(spark, sf),
-      "doc_id", "text", Queries.JaccardN, 7, Lsh.Sim64Radius)
+      "doc_id", "text", DedupQueries.JaccardN, 7, Lsh.Sim64Radius)
       .select("doc_a", "doc_b")
     val exact = NearDup.ngramJaccardPairs(Tables.documents(spark, sf),
-      "doc_id", "text", Queries.JaccardN, 0.5)
+      "doc_id", "text", DedupQueries.JaccardN, 0.5)
       .select("doc_a", "doc_b")
     val nWide = wide.count()
     val truePos = nWide - wide.except(exact).count()
@@ -123,8 +124,8 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
     // hamming32 <= 3, and both blockings are pigeonhole-complete at this
     // radius: q62's pairs must be a subset of q23's, found with 2^-16
     // per-band collision mass instead of 2^-8.
-    val wide = Queries.dedupSimHashWide(spark, sf).select("doc_a", "doc_b")
-    val narrow = Queries.dedupSimHash(spark, sf).select("doc_a", "doc_b")
+    val wide = DedupQueries.dedupSimHashWide(spark, sf).select("doc_a", "doc_b")
+    val narrow = DedupQueries.dedupSimHash(spark, sf).select("doc_a", "doc_b")
     assert(wide.count() > 0)
     assert(wide.except(narrow).count() == 0,
       "a 64-bit hamming<=3 pair escaped the 32-bit hamming<=3 set")
@@ -152,17 +153,17 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
     // LSH candidate recall is full here (previous test) and verification is
     // exact Jaccard, so the scale path must reproduce the exact pairs.
     val exact = NearDup.ngramJaccardPairs(Tables.documents(spark, sf),
-      "doc_id", "text", Queries.JaccardN, Queries.JaccardThreshold)
+      "doc_id", "text", DedupQueries.JaccardN, DedupQueries.JaccardThreshold)
       .select("doc_a", "doc_b")
     val verified = NearDup.lshVerifiedJaccardPairs(Tables.documents(spark, sf),
-      "doc_id", "text", Queries.JaccardN, Queries.JaccardThreshold)
+      "doc_id", "text", DedupQueries.JaccardN, DedupQueries.JaccardThreshold)
       .select("doc_a", "doc_b")
     assert(exact.except(verified).count() == 0, "scale path missed an exact pair")
     assert(verified.except(exact).count() == 0, "scale path emitted a false pair")
   }
 
   test("ANN recall@5 vs brute force: LSH and IVF both >= 0.8") {
-    val bf = Queries.annBruteForce(spark, sf).select("query_id", "neighbor_id")
+    val bf = AnnQueries.annBruteForce(spark, sf).select("query_id", "neighbor_id")
     val total = bf.count().toDouble
     def recall(q: String): Double = {
       val got = SparkEntry.queries(q)(spark, sf).select("query_id", "neighbor_id")
@@ -222,7 +223,7 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
   }
 
   test("shard packing covers every document with contiguous bounded shards") {
-    val shards = Queries.shardPack(spark, sf).collect()
+    val shards = CurationQueries.shardPack(spark, sf).collect()
     val docs = Tables.documents(spark, sf)
     assert(shards.map(_.getLong(2)).sum == docs.count(), "every doc lands in a shard")
     val maxDocTokens = docs
@@ -232,14 +233,14 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
       assert(ids.toSeq == (0L until ids.length), s"$src shards not contiguous: ${ids.toSeq}")
       // start-offset packing can overrun the budget by at most one document
       rows.foreach { r =>
-        assert(r.getLong(3) < Queries.ShardTokens + maxDocTokens,
+        assert(r.getLong(3) < CurationQueries.ShardTokens + maxDocTokens,
           s"$src shard ${r.getLong(1)} too large: ${r.getLong(3)}")
       }
     }
   }
 
   test("ann lsh returns a subset of each query's candidates, ranked correctly") {
-    val out = Queries.annLsh(spark, sf).collect()
+    val out = AnnQueries.annLsh(spark, sf).collect()
     assert(out.nonEmpty)
     out.groupBy(_.getLong(0)).foreach { case (_, rows) =>
       val sorted = rows.sortBy(_.getInt(3))
@@ -597,16 +598,16 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
   }
 
   test("q71 (prefix-sum) computes exactly q64's (pair-join) answer") {
-    val a = Queries.sessionConcurrency(spark, sf).collect().map(_.toSeq).toSet
-    val b = Queries.sessionConcurrencyFast(spark, sf).collect().map(_.toSeq).toSet
+    val a = TemporalQueries.sessionConcurrency(spark, sf).collect().map(_.toSeq).toSet
+    val b = AnalyticsQueries.sessionConcurrencyFast(spark, sf).collect().map(_.toSeq).toSet
     assert(a == b)
   }
 
   test("scd2Merge rebuilds only touched keys and matches a full rebuild") {
     val ev = Tables.events(spark, sf)
       .select("user_id", "event_id", "event_type", "value", "ts")
-    val h1 = ev.filter(col("ts") <= Cols.utcTs(Queries.SplitTs))
-    val h2 = ev.filter(col("ts") > Cols.utcTs(Queries.SplitTs))
+    val h1 = ev.filter(col("ts") <= Cols.utcTs(EtlQueries.SplitTs))
+    val h2 = ev.filter(col("ts") > Cols.utcTs(EtlQueries.SplitTs))
     val merged = operators.Scd.scd2Merge(
       operators.Scd.scd2FromChangelog(h1, Seq("user_id"), "ts", Seq("event_id")),
       h2, Seq("user_id"), "ts", Seq("event_id"))
@@ -617,18 +618,18 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
   test("cluster-pruned cosine pairs = brute-force pairs restricted to shared clusters") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sf)
-    val cents = emb.orderBy("vec_id").limit(Queries.SemLists)
+    val cents = emb.orderBy("vec_id").limit(DedupQueries.SemLists)
       .select(col("embedding").cast("array<double>"))
       .collect().map(_.getSeq[Double](0).toSeq).toSeq
     val pruned = NearDup.clusterCosinePairs(emb, "vec_id", "embedding",
-      cents, Queries.CosineThreshold)
+      cents, DedupQueries.CosineThreshold)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
     val asn = Ivf.assignListsByJoin(
       emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
       "vec_id", "v", cents, "list")
       .select("vec_id", "list").as[(Long, Int)].collect().toMap
     val brute = NearDup.embeddingCosinePairs(emb, "vec_id", "embedding",
-      Queries.CosineThreshold)
+      DedupQueries.CosineThreshold)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
     val expected = brute.filter { case (a, b) => asn(a) == asn(b) }
     assert(pruned == expected,
@@ -707,13 +708,13 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
     val other = (0 until 200).map(i => s"x$i").mkString(" ")
     val docs = Seq((1L, page), (2L, excerpt), (3L, other)).toDF("doc_id", "text")
     val cont = NearDup.ngramContainmentPairs(docs, "doc_id", "text",
-      Queries.JaccardN, Queries.ContainmentThreshold)
+      DedupQueries.JaccardN, DedupQueries.ContainmentThreshold)
       .select("doc_a", "doc_b", "cont_a_in_b", "cont_b_in_a")
       .as[(Long, Long, Double, Double)].collect()
     assert(cont.toSeq == Seq((1L, 2L, 58.0 / 198.0, 1.0)),
       s"expected the excerpt fully contained: ${cont.toSeq}")
     val jac = NearDup.ngramJaccardPairs(docs, "doc_id", "text",
-      Queries.JaccardN, Queries.JaccardThreshold)
+      DedupQueries.JaccardN, DedupQueries.JaccardThreshold)
     assert(jac.count() == 0, "Jaccard at the dedup threshold must miss the excerpt pair")
   }
 
@@ -729,12 +730,12 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
       val v = rows.sortBy(_._2.toLocalDate.toEpochDay).map { case (_, d, rev) =>
         val age = math.min(
           java.time.temporal.ChronoUnit.DAYS.between(d.toLocalDate, maxDay),
-          Queries.DecayCapDays.toLong).toInt
+          AnalyticsQueries.DecayCapDays.toLong).toInt
         rev / (1L << age).toDouble
       }.foldLeft(0.0)(_ + _)
       ck -> ((v, rows.size.toLong))
     }
-    val got = Queries.decayedCustomerValue(spark, sf)
+    val got = AnalyticsQueries.decayedCustomerValue(spark, sf)
       .as[(Long, Double, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     assert(got == expected, "fixed-order fold must be bit-identical to the reference")
@@ -742,7 +743,7 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
 
   test("source drift: full pair coverage, chi-square within [0, 2]") {
     import spark.implicits._
-    val drift = Queries.sourceDrift(spark, sf)
+    val drift = AnalyticsQueries.sourceDrift(spark, sf)
       .as[(String, String, Double)].collect()
     val nSources = Tables.documents(spark, sf)
       .select("source").distinct().count().toInt
@@ -754,10 +755,10 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
 
   test("co-purchase cosine normalizes support by item popularity") {
     import spark.implicits._
-    val sim = Queries.copurchaseSimilarity(spark, sf)
+    val sim = AnalyticsQueries.copurchaseSimilarity(spark, sf)
       .as[(Long, Long, Long, Double)].collect()
     assert(sim.nonEmpty && sim.forall { case (_, _, n, c) =>
-      n >= Queries.CoMinSupport && c > 0.0 && c <= 1.0 })
+      n >= AnalyticsQueries.CoMinSupport && c > 0.0 && c <= 1.0 })
     // cosine must equal support / sqrt(na·nb) for a sampled pair
     val items = Tables.lineitem(spark, sf)
       .select(col("l_orderkey"), col("l_partkey")).distinct()
@@ -773,17 +774,17 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf)
     val words = docs.select(explode(graft.functions.TextAnalysis.words(col("text"))).as("word"))
     val fp = graft.plans.VectorExprs.polyFingerprint(col("word"))
-    val whole = Sketches.cmsCounters(words, fp, Queries.CmsDepth, Queries.CmsWidth)
+    val whole = Sketches.cmsCounters(words, fp, SketchQueries.CmsDepth, SketchQueries.CmsWidth)
     val exact = words.groupBy("word").agg(count(lit(1)).as("exact_n"))
     val est = Sketches.cmsEstimates(exact, fp, whole,
-      Queries.CmsDepth, Queries.CmsWidth, "est")
+      SketchQueries.CmsDepth, SketchQueries.CmsWidth, "est")
     // the one-sided CMS guarantee holds for EVERY key, not just the head
     assert(est.filter(col("est") < col("exact_n")).count() == 0)
     // additivity: per-half counters vector-added == whole-corpus counters
     val h1 = Sketches.cmsCounters(words.filter(fp % 2 === 0), fp,
-      Queries.CmsDepth, Queries.CmsWidth)
+      SketchQueries.CmsDepth, SketchQueries.CmsWidth)
     val h2 = Sketches.cmsCounters(words.filter(fp % 2 === 1), fp,
-      Queries.CmsDepth, Queries.CmsWidth)
+      SketchQueries.CmsDepth, SketchQueries.CmsWidth)
     val merged = h1.unionByName(h2).groupBy("d", "bucket")
       .agg(sum("cnt").as("cnt"))
     assert(merged.except(whole).count() == 0 && whole.except(merged).count() == 0)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Bfs, Components, LabelProp, Scc}
+import graft.queries.GraphQueries
 
 /** Contracts of the shared iteration code (`operators.Fixpoint`) and
   * the loops built on it.
@@ -20,10 +21,10 @@ class FixpointSpec extends AnyFunSuite {
     (5L, 6L), (6L, 7L), (7L, 5L), (7L, 7L), (6L, 7L), (10L, 11L))
 
   private val loops: Seq[(String, () => DataFrame)] = Seq(
-    "pagerank" -> (() => Queries.pagerankRounds(spark, sf, 3)),
-    "pagerank_weighted" -> (() => Queries.weightedPagerankRounds(
+    "pagerank" -> (() => GraphQueries.pagerankRounds(spark, sf, 3)),
+    "pagerank_weighted" -> (() => GraphQueries.weightedPagerankRounds(
       graph.map { case (a, b) => (a, b, a + b) }.toDF("src", "dst", "w"), 3)),
-    "pagerank_directed" -> (() => Queries.directedPagerankRounds(
+    "pagerank_directed" -> (() => GraphQueries.directedPagerankRounds(
       graph.map { case (a, b) => (a, b, 1L) }.toDF("src", "dst", "w"), 3)),
     "labelprop" -> (() => LabelProp.propagate(graph.toDF("a", "b"), "a", "b", 3)),
     "bfs" -> (() => Bfs.hops(graph.toDF("a", "b"), "a", "b",

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Skew
 import graft.sources.Sources
+import graft.queries.EtlQueries
 
 /** Sources, SQL function registration, and skew utilities. */
 class InfraSpec extends AnyFunSuite {
@@ -79,7 +80,11 @@ class InfraSpec extends AnyFunSuite {
   }
 
   test("graft kernels are callable from SQL after registration") {
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
+    GraftFunctions.install(spark)
+    assert(spark.experimental.extraStrategies
+      .count(_ == graft.plans.AsOfJoinStrategy) == 1,
+      "install must append the as-of strategy once, however often it runs")
     Tables.documents(spark, sf).createOrReplaceTempView("docs_v")
     Tables.embeddings(spark, sf).createOrReplaceTempView("emb_v")
     // fingerprint parity with the Column API
@@ -118,7 +123,7 @@ class InfraSpec extends AnyFunSuite {
         StarSchema.DimRef("supplier_v", Seq("s_name"),
           factKey = "l_suppkey", dimKey = "s_suppkey")))
     val viaSql = spark.sql(sql)
-    val viaDf = Queries.starCompose(spark, sf)
+    val viaDf = EtlQueries.starCompose(spark, sf)
     assert(viaSql.columns.toSeq == viaDf.columns.toSeq)
     assert(viaSql.except(viaDf).count() == 0 && viaDf.except(viaSql).count() == 0)
   }
@@ -256,7 +261,7 @@ class InfraSpec extends AnyFunSuite {
       assert(!plan.contains("SortMergeJoin") ||
         !"Exchange hashpartitioning\\(l_orderkey".r.findFirstIn(plan).isDefined,
         s"fact-fact edge re-shuffled:\n$plan")
-      val expected = Queries.starRevenue(spark, sf)
+      val expected = EtlQueries.starRevenue(spark, sf)
       val got = star.orderBy("region", "nation")
       assert(got.except(expected).count() == 0 && expected.except(got).count() == 0,
         "bucketed star must reproduce q08's oracle-gated rows")

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.Medallion
 import graft.pipeline.Medallion.TableSpec
 import graft.sources.Snapshots
+import graft.queries.{DedupQueries, EtlQueries}
 
 /** The config-driven medallion runner: watermark-bounded extraction,
   * silver cleaning, gold SCD merges — across two incremental runs.
@@ -26,7 +27,7 @@ class PipelineSpec extends AnyFunSuite {
     val source = (_: String) => ev
 
     val mid = new java.sql.Timestamp(
-      java.time.LocalDateTime.parse(Queries.SplitTs.replace(' ', 'T'))
+      java.time.LocalDateTime.parse(EtlQueries.SplitTs.replace(' ', 'T'))
         .toInstant(java.time.ZoneOffset.UTC).toEpochMilli)
     val end = new java.sql.Timestamp(4102444800000L) // 2100-01-01: beyond all data
 
@@ -42,14 +43,14 @@ class PipelineSpec extends AnyFunSuite {
     // gold converges to the direct batch operators over the full changelog
     val scd1 = Snapshots.read(spark, s"$state/gold/events_scd1")
       .select(eventCols.map(col): _*)
-    val expScd1 = Queries.scd1Latest(spark, sf).select(eventCols.map(col): _*)
+    val expScd1 = EtlQueries.scd1Latest(spark, sf).select(eventCols.map(col): _*)
     assert(scd1.except(expScd1).count() == 0 && expScd1.except(scd1).count() == 0)
 
     val scd2Cols = Seq("user_id", "event_id", "event_type", "value",
       "effective_from", "effective_to", "is_current")
     val scd2 = Snapshots.read(spark, s"$state/gold/events_scd2")
       .select(scd2Cols.map(col): _*)
-    val expScd2 = Queries.scd2Build(spark, sf).select(scd2Cols.map(col): _*)
+    val expScd2 = EtlQueries.scd2Build(spark, sf).select(scd2Cols.map(col): _*)
     assert(scd2.except(expScd2).count() == 0 && expScd2.except(scd2).count() == 0)
 
     // a third run with the same high watermark is a no-op extraction
@@ -111,7 +112,7 @@ class PipelineSpec extends AnyFunSuite {
     val spec = TableSpec("ev", keys = Seq("user_id"), seqCol = "ts",
       tieCols = Seq("event_id"), scdType = 2, buckets = 8)
     val mid = new java.sql.Timestamp(
-      java.time.LocalDateTime.parse(Queries.SplitTs.replace(' ', 'T'))
+      java.time.LocalDateTime.parse(EtlQueries.SplitTs.replace(' ', 'T'))
         .toInstant(java.time.ZoneOffset.UTC).toEpochMilli)
     val end = new java.sql.Timestamp(4102444800000L)
     val goldPath = s"$state/gold/ev"
@@ -475,7 +476,7 @@ class PipelineSpec extends AnyFunSuite {
 
     val ev = Tables.events(spark, sf).select(eventCols.map(col): _*)
     val mid = new java.sql.Timestamp(
-      java.time.LocalDateTime.parse(Queries.SplitTs.replace(' ', 'T'))
+      java.time.LocalDateTime.parse(EtlQueries.SplitTs.replace(' ', 'T'))
         .toInstant(java.time.ZoneOffset.UTC).toEpochMilli)
     val end = new java.sql.Timestamp(4102444800000L)
     val rules = Seq(Quality.Rule("no_error_events", col("event_type") === "error"))
@@ -539,14 +540,14 @@ class PipelineSpec extends AnyFunSuite {
     // The pipeline run: compute the component table ONCE, commit it.
     val table = operators.NearDup.componentTable(
       Tables.documents(spark, sf), "doc_id", "text",
-      Queries.JaccardN, Queries.JaccardThreshold, Queries.docQuality,
+      DedupQueries.JaccardN, DedupQueries.JaccardThreshold, Queries.docQuality,
       carryCols = Seq("source"))
     Snapshots.commit(table, target)
     // The reports: pure consumers of the COMMITTED table — no LSH, no
     // component rounds, just a projection and a rollup over the snapshot.
     val committed = Snapshots.read(spark, target)
-    val keep = Queries.clusterCanonicalFrom(committed)
-    val health = Queries.dupRateBySourceFrom(committed)
+    val keep = DedupQueries.clusterCanonicalFrom(committed)
+    val health = DedupQueries.dupRateBySourceFrom(committed)
     // Both equal their oracle-gated registry forms (which share the same
     // in-session decision table via dedupDecisionTable's memo).
     val expKeep = SparkEntry.queries("q65_cluster_canonical")(spark, sf)

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.DedupQueries
 
 /** Physical-plan regression guards: the scale properties PLANS.md claims
   * are asserted here, so a refactor that silently reintroduces a shuffle,
@@ -65,7 +66,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("q21: shingle posting lists are df-capped before the self-join") {
     val p = plan("q21_dedup_ngram_jaccard")
-    assert(p.contains(s"<= ${Queries.JaccardMaxPostings}"),
+    assert(p.contains(s"<= ${DedupQueries.JaccardMaxPostings}"),
       "df cap filter missing from the pair pipeline")
     assert(p.contains("LeftSemi"), "cap should apply via a semi-join on shingles")
   }

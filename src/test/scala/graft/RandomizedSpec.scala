@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.Lsh
 import graft.operators.{Components, Dedup, Scd}
+import graft.queries.AnalyticsQueries
 
 /** Randomized property checks with a fixed seed: custom kernels are
   * compared bit-exactly against plain-Scala reference folds (covering
@@ -271,7 +272,7 @@ class RandomizedSpec extends AnyFunSuite {
       (rnd.nextInt(120).toLong, types(rnd.nextInt(types.size)), i.toLong,
         (1000 + rnd.nextInt(40)).toLong)
     }
-    val got = Queries.funnelFrom(rows.toDF("user_id", "event_type", "event_id", "us"))
+    val got = AnalyticsQueries.funnelFrom(rows.toDF("user_id", "event_type", "event_id", "us"))
       .select("user_id", "stage", "view_ts", "click_ts", "purchase_ts")
       .collect()
       .map(r => r.getLong(0) -> (r.getInt(1),
@@ -447,12 +448,12 @@ class RandomizedSpec extends AnyFunSuite {
     val df = cases.toDF("k", "n")
       .withColumn("p", col("k").cast("double") / col("n").cast("double"))
       .withColumn("nD", col("n").cast("double"))
-    val (lo, hi) = Queries.wilsonBounds(col("p"), col("nD"), lit(Queries.WilsonZ))
+    val (lo, hi) = AnalyticsQueries.wilsonBounds(col("p"), col("nD"), lit(AnalyticsQueries.WilsonZ))
     val got = df.select(col("k"), col("n"), lo.as("lo"), hi.as("hi")).collect()
     got.foreach { r =>
       val (k, n) = (r.getLong(0), r.getLong(1))
       // driver replication of the EXACT expression shape
-      val z = Queries.WilsonZ
+      val z = AnalyticsQueries.WilsonZ
       val (p, nD) = (k.toDouble / n.toDouble, n.toDouble)
       val z2 = z * z
       val rad = z * math.sqrt(p * (1.0 - p) / nD + z2 / (4.0 * nD * nD))
@@ -581,7 +582,7 @@ class RandomizedSpec extends AnyFunSuite {
     val days = (0 until 120).filter(_ => rnd.nextBoolean())
     val series = days.map(d => (d.toLong, (rnd.nextInt(7) * 25).toLong))
     val w = org.apache.spark.sql.expressions.Window
-      .orderBy("d").rangeBetween(-(Queries.RollMedDays - 1L), 0L)
+      .orderBy("d").rangeBetween(-(AnalyticsQueries.RollMedDays - 1L), 0L)
     val got = series.toDF("d", "c")
       .withColumn("vals", sort_array(collect_list(col("c")).over(w)))
       .withColumn("n", size(col("vals")).cast("long"))
@@ -593,7 +594,7 @@ class RandomizedSpec extends AnyFunSuite {
                      / 2.0 END"""))
       .select("d", "med").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     series.foreach { case (d, _) =>
-      val win = series.filter(p => p._1 >= d - (Queries.RollMedDays - 1) && p._1 <= d)
+      val win = series.filter(p => p._1 >= d - (AnalyticsQueries.RollMedDays - 1) && p._1 <= d)
         .map(_._2).sorted
       val ref =
         if (win.size % 2 == 1) win((win.size - 1) / 2).toDouble

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Analytics, Intervals, Linkage}
+import graft.queries.{AnalyticsQueries, SketchQueries, TextQueries}
 
 /** Targeted behavior specs for the q101–q110 family (registered this
   * round): gaps-and-islands, calendar densification, fuzzy linkage, and
@@ -96,7 +97,7 @@ class RegisteredThirdDecadeSpec extends AnyFunSuite {
   // --- report-query invariants over the fixtures ---------------------------
 
   test("q103: prev_revenue is set iff the nation has the adjacent calendar month") {
-    val rows = Queries.momGrowth(spark, sf)
+    val rows = AnalyticsQueries.momGrowth(spark, sf)
       .select("nation", "month_key", "prev_revenue")
       .as[(String, Long, Option[Double])].collect()
     val present = rows.map(r => (r._1, r._2)).toSet
@@ -108,7 +109,7 @@ class RegisteredThirdDecadeSpec extends AnyFunSuite {
   }
 
   test("q108: gini is defined and in [0,1) for every non-empty source") {
-    val rows = Queries.tokenGini(spark, sf)
+    val rows = TextQueries.tokenGini(spark, sf)
       .select("total_tokens", "gini").as[(Long, Option[Double])].collect()
     rows.foreach { case (tok, gini) =>
       if (tok > 0) {
@@ -119,7 +120,7 @@ class RegisteredThirdDecadeSpec extends AnyFunSuite {
   }
 
   test("q109: histogram shares sum to 1 and buckets partition the gaps") {
-    val rows = Queries.interarrivalHist(spark, sf)
+    val rows = AnalyticsQueries.interarrivalHist(spark, sf)
       .select("n_gaps", "share").as[(Long, Double)].collect()
     assert(math.abs(rows.map(_._2).sum - 1.0) < 1e-9)
     // gap count = events - distinct users (one lag-null per user)
@@ -129,7 +130,7 @@ class RegisteredThirdDecadeSpec extends AnyFunSuite {
   }
 
   test("q110: the fixture star has zero orphan foreign keys, with full row counts") {
-    val byRel = Queries.fkAudit(spark, sf)
+    val byRel = AnalyticsQueries.fkAudit(spark, sf)
       .select("relationship", "n_rows", "n_orphans")
       .as[(String, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
     assert(byRel.values.forall(_._2 == 0L), s"orphans found: $byRel")
@@ -138,14 +139,14 @@ class RegisteredThirdDecadeSpec extends AnyFunSuite {
   }
 
   test("q107: correlation lands in [-1, 1] and n_rows covers the table") {
-    val rows = Queries.metricCorrelation(spark, sf)
+    val rows = AnalyticsQueries.metricCorrelation(spark, sf)
       .select("n_rows", "corr_qty_price").as[(Long, Double)].collect()
     assert(rows.map(_._1).sum === Tables.lineitem(spark, sf).count())
     rows.foreach { case (_, c) => assert(c >= -1.0 && c <= 1.0, s"corr $c") }
   }
 
   test("q106: exactly one modal event type per active user") {
-    val out = Queries.topEventType(spark, sf)
+    val out = AnalyticsQueries.topEventType(spark, sf)
     assert(out.count() ===
       Tables.events(spark, sf).select("user_id").distinct().count())
     assert(out.groupBy("user_id").count().filter($"count" > 1).count() === 0)
@@ -154,7 +155,7 @@ class RegisteredThirdDecadeSpec extends AnyFunSuite {
   // --- HLL sketch (q121/q122) ------------------------------------------------
 
   test("q121: HLL estimate lands within the sketch's error regime") {
-    val row = Queries.hllDistinct(spark, sf).head()
+    val row = SketchQueries.hllDistinct(spark, sf).head()
     val ratio = row.getAs[Double]("est_ratio")
     // m=256 → σ ≈ 1.04/√256 = 6.5%; 3σ bound with margin
     assert(ratio > 0.8 && ratio < 1.2, s"est_ratio $ratio outside [0.8, 1.2]")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{BloomJoin, Skyline, SnapshotDiff}
+import graft.queries._
 
 /** Round-10 operators: bloom semi-join reduction, snapshot diff, skyline,
   * PPS sampling, chunking, ABC classes — property checks against
@@ -15,9 +16,9 @@ class Round10Spec extends AnyFunSuite {
 
   test("bloom filter has zero false negatives and a bounded false-positive rate") {
     val keys = Tables.orders(spark, sf)
-      .filter(col("o_totalprice") > Queries.BloomOrderThreshold)
+      .filter(col("o_totalprice") > RuntimeQueries.BloomOrderThreshold)
       .select("o_orderkey")
-    val bitmap = BloomJoin.buildBitmap(keys, "o_orderkey", Queries.BloomBits)
+    val bitmap = BloomJoin.buildBitmap(keys, "o_orderkey", RuntimeQueries.BloomBits)
     // no false negatives: every inserted key must test positive
     val misses = keys
       .filter(!BloomJoin.mightContain(bitmap, col("o_orderkey"))).count()
@@ -32,10 +33,10 @@ class Round10Spec extends AnyFunSuite {
   test("bloom-reduced semi-join equals the plain semi-join") {
     val li = Tables.lineitem(spark, sf)
     val hi = Tables.orders(spark, sf)
-      .filter(col("o_totalprice") > Queries.BloomOrderThreshold)
+      .filter(col("o_totalprice") > RuntimeQueries.BloomOrderThreshold)
       .select("o_orderkey")
     val reduced = BloomJoin.reducedSemiJoin(li, "l_orderkey", hi, "o_orderkey",
-      Queries.BloomBits)
+      RuntimeQueries.BloomBits)
     val plain = li.join(hi, li("l_orderkey") === hi("o_orderkey"), "leftsemi")
     assert(reduced.count() == plain.count())
     assert(reduced.exceptAll(plain).count() == 0)
@@ -97,10 +98,10 @@ class Round10Spec extends AnyFunSuite {
         graft.functions.Sketches.keyHash(col("doc_id")).cast("double")
           / col("tokens").cast("double"))
     val expect = all.orderBy(col("priority"), col("doc_id"))
-      .limit(Queries.PpsSampleK).select("doc_id").as[Long].collect().toSet
-    val got = Queries.weightedSample(spark, sf).select("doc_id")
+      .limit(CurationQueries.PpsSampleK).select("doc_id").as[Long].collect().toSet
+    val got = CurationQueries.weightedSample(spark, sf).select("doc_id")
       .as[Long].collect().toSet
-    assert(got == expect && got.size == Queries.PpsSampleK)
+    assert(got == expect && got.size == CurationQueries.PpsSampleK)
   }
 
   test("chunking covers every token exactly once outside overlaps and reconstructs text") {
@@ -117,7 +118,7 @@ class Round10Spec extends AnyFunSuite {
       val n = text.split(" ").length
       val rows =
         if (id >= 0)
-          Queries.docChunks(spark, sf)
+          TextQueries.docChunks(spark, sf)
             .filter(col("doc_id") === id).orderBy("chunk_idx").collect()
         else {
           // run the same chunking expressions on the synthetic doc
@@ -125,28 +126,28 @@ class Round10Spec extends AnyFunSuite {
             .select(col("doc_id"), split(col("text"), " ").as("w"))
             .select(col("doc_id"), col("w"),
               explode(sequence(lit(0), size(col("w")) - 1,
-                lit(Queries.ChunkStride))).as("s"))
+                lit(TextQueries.ChunkStride))).as("s"))
             .select(col("doc_id"),
-              (col("s") / lit(Queries.ChunkStride)).cast("long").as("chunk_idx"),
-              least(lit(Queries.ChunkTokens), size(col("w")) - col("s"))
+              (col("s") / lit(TextQueries.ChunkStride)).cast("long").as("chunk_idx"),
+              least(lit(TextQueries.ChunkTokens), size(col("w")) - col("s"))
                 .cast("long").as("chunk_tokens"),
               array_join(slice(col("w"), col("s") + 1,
-                lit(Queries.ChunkTokens)), " ").as("chunk_text"))
+                lit(TextQueries.ChunkTokens)), " ").as("chunk_text"))
             .orderBy("chunk_idx").collect()
         }
-      assert(rows.length == (n + Queries.ChunkStride - 1) / Queries.ChunkStride)
+      assert(rows.length == (n + TextQueries.ChunkStride - 1) / TextQueries.ChunkStride)
       // stitching rule: every chunk contributes its first `stride` tokens
       // (the rest is overlap), the last chunk contributes everything — the
       // concatenation must rebuild the document
       val rebuilt = (rows.dropRight(1).flatMap { r =>
-        r.getAs[String]("chunk_text").split(" ").take(Queries.ChunkStride)
+        r.getAs[String]("chunk_text").split(" ").take(TextQueries.ChunkStride)
       } ++ rows.last.getAs[String]("chunk_text").split(" ")).mkString(" ")
       assert(rebuilt == text, s"doc $id failed to reconstruct")
     }
   }
 
   test("ABC classes partition the parts and respect the cumulative boundaries") {
-    val out = Queries.abcClassification(spark, sf).collect()
+    val out = AnalyticsQueries.abcClassification(spark, sf).collect()
     val classes = out.map(_.getString(0)).toSeq
     assert(classes == Seq("A", "B", "C"))
     val nParts = out.map(_.getLong(1)).sum
@@ -161,11 +162,11 @@ class Round10Spec extends AnyFunSuite {
   }
 
   test("benford digit shares sum to one and digits span 1-9") {
-    val out = Queries.benfordDigits(spark, sf).collect()
+    val out = AnalyticsQueries.benfordDigits(spark, sf).collect()
     assert(out.map(_.getInt(0)).toSet.subsetOf((1 to 9).toSet))
     val shareSum = out.map(_.getDouble(2)).sum
     assert(math.abs(shareSum - 1.0) < 1e-9)
-    val expSum = Queries.BenfordExpected.sum
+    val expSum = AnalyticsQueries.BenfordExpected.sum
     assert(math.abs(expSum - 1.0) < 1e-12, "Benford expectations must sum to 1")
   }
 

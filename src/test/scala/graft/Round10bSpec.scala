@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.ZOrderExprs
+import graft.queries._
 
 /** Property specs for the q147–q152 batch (Z-order layout, sequence
   * mining, range planning, cross-source similarity, RRF, FD profiling).
@@ -34,7 +35,7 @@ class Round10bSpec extends AnyFunSuite {
     // of the 256×256 grid: per-block min/max must sit inside one tile.
     val rows = SparkEntry.queries("q147_zorder_manifest")(spark, sf).collect()
     assert(rows.nonEmpty)
-    val tile = 1 << (Queries.ZBlockShift / 2)
+    val tile = 1 << (RuntimeQueries.ZBlockShift / 2)
     rows.foreach { r =>
       val (minX, maxX) = (r.getAs[Long]("min_x"), r.getAs[Long]("max_x"))
       val (minY, maxY) = (r.getAs[Long]("min_y"), r.getAs[Long]("max_y"))
@@ -64,7 +65,7 @@ class Round10bSpec extends AnyFunSuite {
   test("q149: buckets cover all rows and are value-monotone") {
     val rows = SparkEntry.queries("q149_range_plan")(spark, sf)
       .orderBy("bucket").collect()
-    assert(rows.map(_.getAs[Long]("bucket")).forall(b => b >= 0 && b < Queries.RangeK))
+    assert(rows.map(_.getAs[Long]("bucket")).forall(b => b >= 0 && b < RuntimeQueries.RangeK))
     val total = rows.map(_.getAs[Long]("n_rows")).sum
     assert(total == Tables.lineitem(spark, sf).count())
     // assignment is monotone in the value ⇒ bucket ranges don't overlap
@@ -93,10 +94,10 @@ class Round10bSpec extends AnyFunSuite {
 
   test("q151: fused ranks are permutations and rrf is the stated formula") {
     val rows = SparkEntry.queries("q151_rrf_fusion")(spark, sf).collect()
-    assert(rows.length == Queries.HybridK)
+    assert(rows.length == AnnQueries.HybridK)
     rows.foreach { r =>
-      val exp = 1.0 / (Queries.RrfC + r.getAs[Int]("r_lex")) +
-        1.0 / (Queries.RrfC + r.getAs[Int]("r_dense"))
+      val exp = 1.0 / (AnnQueries.RrfC + r.getAs[Int]("r_lex")) +
+        1.0 / (AnnQueries.RrfC + r.getAs[Int]("r_dense"))
       assert(r.getAs[Double]("rrf") == exp)
     }
     // descending by rrf with doc_id tiebreak
@@ -149,7 +150,7 @@ class Round10bSpec extends AnyFunSuite {
 
   test("q155: ranks cover all incident items and respect the damping floor") {
     val rows = SparkEntry.queries("q155_pagerank_copurchase")(spark, sf).collect()
-    val floor = 15L * Queries.PrScale / 100L
+    val floor = 15L * GraphQueries.PrScale / 100L
     assert(rows.forall(_.getAs[Long]("rank_score") >= floor))
     // node set = items appearing in at least one co-purchase pair
     val items = Tables.lineitem(spark, sf)
@@ -180,7 +181,7 @@ class Round10bSpec extends AnyFunSuite {
 
   test("q157: lift is positive, pairs oriented, descending order") {
     val rows = SparkEntry.queries("q157_basket_lift")(spark, sf).collect()
-    assert(rows.length == Queries.LiftTopK)
+    assert(rows.length == AnalyticsQueries.LiftTopK)
     rows.foreach { r =>
       assert(r.getAs[Long]("item_a") < r.getAs[Long]("item_b"))
       assert(r.getAs[Double]("lift") > 0.0)
@@ -314,7 +315,7 @@ class Round10bSpec extends AnyFunSuite {
     import graft.operators.SnapshotDiff
     val mk = (asOf: String) => {
       val hi = java.time.LocalDate.parse(asOf)
-      val lo = hi.minusDays(Queries.SnapWindowDays)
+      val lo = hi.minusDays(RuntimeQueries.SnapWindowDays)
       Tables.orders(spark, sf)
         .filter(col("o_orderdate") >= Cols.ntzTs(s"$lo 00:00:00") &&
           col("o_orderdate") < Cols.ntzTs(s"$asOf 00:00:00"))
@@ -322,7 +323,7 @@ class Round10bSpec extends AnyFunSuite {
         .agg(count(lit(1)).as("n_orders"),
           sum(Cols.dec2(col("o_totalprice"))).as("rev_dec"))
     }
-    val (t1, t2) = (mk(Queries.SnapT1), mk(Queries.SnapT2))
+    val (t1, t2) = (mk(RuntimeQueries.SnapT1), mk(RuntimeQueries.SnapT2))
     val applied = SnapshotDiff.applyDelta(t1,
       SnapshotDiff.diff(t1, t2, Seq("o_custkey"), Seq("n_orders", "rev_dec")),
       Seq("o_custkey"), Seq("n_orders", "rev_dec"))
@@ -375,15 +376,15 @@ class Round10bSpec extends AnyFunSuite {
     import graft.operators.Multimodal
     // one doc computed by hand, bypassing the engine entirely
     val id = 0L
-    val samples = Array.tabulate(Queries.AudioSamples) { i =>
+    val samples = Array.tabulate(CurationQueries.AudioSamples) { i =>
       (((id * 31 + i * 7) % 2048) - 1024).toShort
     }
     val viaCodec = Multimodal.audioFeatures(id,
-      Multimodal.encodeWav16(samples), Queries.AudioWindow)
-    assert(viaCodec.length == Queries.AudioSamples / Queries.AudioWindow)
+      Multimodal.encodeWav16(samples), CurationQueries.AudioWindow)
+    assert(viaCodec.length == CurationQueries.AudioSamples / CurationQueries.AudioWindow)
     viaCodec.foreach { w =>
-      val lo = w.window_idx * Queries.AudioWindow
-      val win = samples.slice(lo, lo + Queries.AudioWindow).map(_.toInt)
+      val lo = w.window_idx * CurationQueries.AudioWindow
+      val win = samples.slice(lo, lo + CurationQueries.AudioWindow).map(_.toInt)
       val rms = math.sqrt(win.map(s => s.toDouble * s).sum / win.length)
       assert(w.rms == rms, s"window ${w.window_idx}")
       assert(w.peak == win.map(math.abs).max)
@@ -391,8 +392,8 @@ class Round10bSpec extends AnyFunSuite {
     // and the registered query emits one row per (doc, window)
     val n = SparkEntry.queries("q169_audio_rms")(spark, sf).count()
     val docs = Tables.documents(spark, sf)
-      .filter(pmod(col("doc_id"), lit(Queries.AudioDocMod)) === 0).count()
-    assert(n == docs * (Queries.AudioSamples / Queries.AudioWindow))
+      .filter(pmod(col("doc_id"), lit(CurationQueries.AudioDocMod)) === 0).count()
+    assert(n == docs * (CurationQueries.AudioSamples / CurationQueries.AudioWindow))
   }
 
   // --- q170: profile drift -----------------------------------------------------
@@ -416,7 +417,7 @@ class Round10bSpec extends AnyFunSuite {
       .agg(sum("n_sessions")).collect()(0).getLong(0)
     val sessions = graft.operators.Sessionize.sessions(
       Tables.events(spark, sf), "user_id", "ts", Seq("event_id"),
-      "value", Queries.SessionGapMicros).count()
+      "value", AnalyticsQueries.SessionGapMicros).count()
     assert(total == sessions)
   }
 
@@ -424,10 +425,10 @@ class Round10bSpec extends AnyFunSuite {
 
   test("q172: PNG round-trip preserves the raster exactly") {
     import graft.operators.Multimodal
-    val img = new java.awt.image.BufferedImage(Queries.ImgW, Queries.ImgH,
+    val img = new java.awt.image.BufferedImage(CurationQueries.ImgW, CurationQueries.ImgH,
       java.awt.image.BufferedImage.TYPE_INT_RGB)
     var expected = 0L
-    for (y <- 0 until Queries.ImgH; x <- 0 until Queries.ImgW) {
+    for (y <- 0 until CurationQueries.ImgH; x <- 0 until CurationQueries.ImgW) {
       val g = ((3L * 7 + x * 3 + y * 5) % 256).toInt
       img.setRGB(x, y, (g << 16) | (g << 8) | g)
       expected += 3L * g
@@ -435,7 +436,7 @@ class Round10bSpec extends AnyFunSuite {
     val bos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", bos)
     val meta = Multimodal.decodeImage(3L, bos.toByteArray)
-    assert(meta.width == Queries.ImgW && meta.height == Queries.ImgH)
+    assert(meta.width == CurationQueries.ImgW && meta.height == CurationQueries.ImgH)
     assert(meta.px_sum == expected, "PNG must be lossless for this raster")
   }
 
@@ -460,7 +461,7 @@ class Round10bSpec extends AnyFunSuite {
     assert(byVer(1) <= byVer(2) && byVer(2) <= byVer(3),
       "each snapshot extends the last")
     val live = Tables.events(spark, sf)
-      .filter(col("ts") < Cols.utcTs(Queries.TravelTs.last)).count()
+      .filter(col("ts") < Cols.utcTs(RuntimeQueries.TravelTs.last)).count()
     assert(byVer(3) == live)
   }
 
@@ -473,7 +474,7 @@ class Round10bSpec extends AnyFunSuite {
     val oneShot = Tables.events(spark, sf)
       .select("user_id", "ts", "event_id", "event_type")
       .filter(col("user_id").isNotNull &&
-        col("ts") <= Cols.utcTs(Queries.WmHigh))
+        col("ts") <= Cols.utcTs(EtlQueries.WmHigh))
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
     assert(gold.exceptAll(oneShot).isEmpty && oneShot.exceptAll(gold).isEmpty)
   }
@@ -519,7 +520,7 @@ class Round10bSpec extends AnyFunSuite {
     val viaSql = SparkEntry.queries("q179_sql_functions")(spark, sf)
     val viaApi = Tables.documents(spark, sf)
       .filter(col("text").isNotNull &&
-        size(graft.functions.TextAnalysis.words(col("text"))) >= Queries.JaccardN)
+        size(graft.functions.TextAnalysis.words(col("text"))) >= DedupQueries.JaccardN)
       .select(col("doc_id"),
         graft.plans.VectorExprs.polyFingerprint(col("text")).as("fp"))
     val joined = viaSql.select("doc_id", "fp")
@@ -533,7 +534,7 @@ class Round10bSpec extends AnyFunSuite {
   test("q180: late-arrival audit bounds sit inside the watermark") {
     val r = SparkEntry.queries("q180_late_arrivals")(spark, sf).collect()(0)
     assert(r.getAs[Long]("n_late") > 0)
-    val wm = java.time.LocalDateTime.parse(Queries.WmHigh.replace(' ', 'T'))
+    val wm = java.time.LocalDateTime.parse(EtlQueries.WmHigh.replace(' ', 'T'))
       .toInstant(java.time.ZoneOffset.UTC)
     assert(!r.getAs[java.sql.Timestamp]("latest_late").toInstant.isAfter(wm))
   }
@@ -598,9 +599,9 @@ class Round10bSpec extends AnyFunSuite {
       .agg(sum("n_pairs")).collect()(0).getLong(0)
     val blockSizes = Tables.embeddings(spark, sf)
       .filter(pmod(Sketches.keyHash(pmod(col("vec_id"), lit(Sketches.P))),
-        lit(Queries.DistSampleMod)) === 0)
+        lit(AnnQueries.DistSampleMod)) === 0)
       .groupBy(pmod(Sketches.keyHash(pmod(col("vec_id") * lit(31L),
-        lit(Sketches.P))), lit(Queries.DistBlocks)))
+        lit(Sketches.P))), lit(AnnQueries.DistBlocks)))
       .agg(count(lit(1)).as("n")).collect().map(_.getAs[Long]("n"))
     val expected = blockSizes.map(n => n * (n - 1) / 2).sum
     assert(total == expected)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Analytics, Scd, Skew}
+import graft.queries._
 
 /** Round-11 contracts: the enforced basket bound, deterministic salting,
   * tracked-history SCD2, flat-plan iterative PageRank, and the AQE
@@ -38,9 +39,9 @@ class Round11Spec extends AnyFunSuite {
   test("basket bound leaves clean fixture results unchanged (TPC-H baskets are tiny)") {
     val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_partkey")
     val bounded = Analytics.coOccurrencePairs(li, "l_orderkey", "l_partkey",
-      Queries.CoMinSupport, maxBasketSize = Queries.CoMaxBasket)
+      AnalyticsQueries.CoMinSupport, maxBasketSize = AnalyticsQueries.CoMaxBasket)
     val unbounded = Analytics.coOccurrencePairs(li, "l_orderkey", "l_partkey",
-      Queries.CoMinSupport, maxBasketSize = Long.MaxValue)
+      AnalyticsQueries.CoMinSupport, maxBasketSize = Long.MaxValue)
     assert(bounded.exceptAll(unbounded).count() == 0 &&
       unbounded.exceptAll(bounded).count() == 0)
   }
@@ -50,9 +51,9 @@ class Round11Spec extends AnyFunSuite {
   test("salt assignment is content-derived: identical across re-partitionings, and spread") {
     val fact = Tables.events(spark, sf)
       .select("event_id", "user_id", "event_type", "value")
-    val s1 = fact.withColumn("salt", Skew.saltExpr(fact, Queries.JoinSalts))
+    val s1 = fact.withColumn("salt", Skew.saltExpr(fact, RuntimeQueries.JoinSalts))
     val re = fact.repartition(7, col("user_id"))
-    val s2 = re.withColumn("salt", Skew.saltExpr(re, Queries.JoinSalts))
+    val s2 = re.withColumn("salt", Skew.saltExpr(re, RuntimeQueries.JoinSalts))
     // recompute-determinism: the salt is a pure function of row content,
     // so a different physical partitioning (≈ a retried/speculated task
     // seeing rows in another order) assigns the SAME salt to every row —
@@ -60,7 +61,7 @@ class Round11Spec extends AnyFunSuite {
     assert(s1.exceptAll(s2).count() == 0 && s2.exceptAll(s1).count() == 0)
     // uniformity: every shard gets real work (the point of salting)
     val perSalt = s1.groupBy("salt").count().as[(Long, Long)].collect().toMap
-    assert(perSalt.keySet == (0L until Queries.JoinSalts.toLong).toSet,
+    assert(perSalt.keySet == (0L until RuntimeQueries.JoinSalts.toLong).toSet,
       s"empty salt shards: $perSalt")
     val (mn, mx) = (perSalt.values.min, perSalt.values.max)
     assert(mx <= 2 * mn, s"salt shards badly skewed: $perSalt")
@@ -94,7 +95,7 @@ class Round11Spec extends AnyFunSuite {
     val ev = Tables.events(spark, sf)
       .select(col("user_id").as("k"), col("event_id").as("id"),
         col("event_type").as("typ"), col("value").as("v"), col("ts"))
-    val split = Cols.utcTs(Queries.SplitTs)
+    val split = Cols.utcTs(EtlQueries.SplitTs)
     val full = Scd.scd2FromChangelogTracked(ev, Seq("k"), "ts",
       Seq("id"), Seq("typ"))
     val h1 = Scd.scd2FromChangelogTracked(ev.filter(col("ts") <= split),
@@ -114,7 +115,7 @@ class Round11Spec extends AnyFunSuite {
   }
 
   test("q185 output passes the SCD2 validity audit (no overlaps/gaps, one current per key)") {
-    val v = Queries.scd2Tracked(spark, sf)
+    val v = AnalyticsQueries.scd2Tracked(spark, sf)
     // exactly one open (current) version per key
     val badCurrent = v.groupBy("user_id")
       .agg(sum(when(col("is_current"), 1L).otherwise(0L)).as("n_open"))
@@ -138,7 +139,7 @@ class Round11Spec extends AnyFunSuite {
   // lingering in the ACTIVE test frame's stack slots otherwise keep the
   // final checkpoint chain alive through every System.gc() below
   private def pagerankPlan(rounds: Int): String =
-    Queries.pagerankRounds(spark, sf, rounds)
+    GraphQueries.pagerankRounds(spark, sf, rounds)
       .queryExecution.optimizedPlan.toString
 
   test("pagerank plan size is O(1) in rounds and leaves nothing persisted behind") {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming._
+import graft.queries.{DedupQueries, EtlQueries}
 
 /** Continuous-trigger soak for the stateful sinks: every other streaming
   * spec drives `availableNow` bounded runs (the reference's
@@ -48,7 +49,7 @@ class Round11StreamSpec extends AnyFunSuite {
     } finally q.stop()
     val got = graft.sources.Snapshots.read(spark, target)
       .select(eventCols.map(col): _*)
-    val exp = Queries.scd1Latest(spark, sf).select(eventCols.map(col): _*)
+    val exp = EtlQueries.scd1Latest(spark, sf).select(eventCols.map(col): _*)
     assert(got.count() > 0)
     assert(got.except(exp).count() == 0 && exp.except(got).count() == 0,
       "live-trigger SCD1 state diverged from the batch latest-wins snapshot")
@@ -60,12 +61,12 @@ class Round11StreamSpec extends AnyFunSuite {
     val (idxPath, corpusPath) = (s"$dir/index", s"$dir/corpus")
     val docs = Tables.documents(spark, sf)
     val mid = 250L
-    val t = Queries.JaccardThreshold
+    val t = DedupQueries.JaccardThreshold
     docs.filter(col("doc_id") < mid).coalesce(1).write.mode("append").parquet(src)
     val q = IngestPipeline.boundedFileStream(spark, src, docs.schema)
       .writeStream
       .foreachBatch(StreamingNearDup.dedupSink(idxPath, corpusPath,
-        "doc_id", "text", Queries.JaccardN, t) _)
+        "doc_id", "text", DedupQueries.JaccardN, t) _)
       .option("checkpointLocation", cp)
       .trigger(Trigger.ProcessingTime("100 milliseconds"))
       .start()
@@ -78,7 +79,7 @@ class Round11StreamSpec extends AnyFunSuite {
     // Expected = the sink's documented drop rule replayed with the batch
     // operators over the same two-wave arrival order (the availableNow
     // spec in StreamingSpec pins the same rule for bounded runs)
-    val pairs = operators.NearDup.minHashLshPairs(docs, "doc_id", "text", Queries.JaccardN)
+    val pairs = operators.NearDup.minHashLshPairs(docs, "doc_id", "text", DedupQueries.JaccardN)
       .filter(col("est_jaccard") >= t)
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))

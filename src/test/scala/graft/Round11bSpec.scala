@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{NearDup, Triangles}
+import graft.queries.{DedupQueries, GraphQueries, SketchQueries}
 
 /** Round-11 second batch: triangle counting, prefix-filtered exact
   * Jaccard, and the native HLL aggregate — each pinned against an
@@ -40,7 +41,7 @@ class Round11bSpec extends AnyFunSuite {
   }
 
   test("q187 plan: wedge enumeration is hash equi-joins, never a cartesian product") {
-    val p = Queries.triangleCount(spark, sf)
+    val p = GraphQueries.triangleCount(spark, sf)
       .queryExecution.executedPlan.toString
     // the three single-row summary frames combine via broadcast-NLJ by
     // design; the node-keyed joins must never degenerate to a cartesian
@@ -55,11 +56,11 @@ class Round11bSpec extends AnyFunSuite {
   test("prefix join equals driver-side brute-force Jaccard on the fixture corpus") {
     val sets = Tables.documents(spark, sf)
       .select(col("doc_id"), graft.plans.SignatureExprs.distinctNGrams(
-        graft.functions.TextAnalysis.words(col("text")), Queries.JaccardN).as("sh"))
+        graft.functions.TextAnalysis.words(col("text")), DedupQueries.JaccardN).as("sh"))
       .filter(size(col("sh")) > 0)
       .as[(Long, Seq[String])].collect()
       .map { case (id, sh) => id -> sh.toSet }
-    val thr = Queries.PrefixThrNum.toDouble / Queries.PrefixThrDen
+    val thr = DedupQueries.PrefixThrNum.toDouble / DedupQueries.PrefixThrDen
     val expected = (for {
       i <- sets.indices; j <- (i + 1) until sets.length
       (ida, sa) = sets(i); (idb, sb) = sets(j)
@@ -68,8 +69,8 @@ class Round11bSpec extends AnyFunSuite {
       if jac >= thr
     } yield (math.min(ida, idb), math.max(ida, idb), common.toLong)).toSet
     val got = NearDup.prefixJaccardPairs(Tables.documents(spark, sf),
-        "doc_id", "text", Queries.JaccardN,
-        Queries.PrefixThrNum, Queries.PrefixThrDen)
+        "doc_id", "text", DedupQueries.JaccardN,
+        DedupQueries.PrefixThrNum, DedupQueries.PrefixThrDen)
       .select("doc_a", "doc_b", "common")
       .as[(Long, Long, Long)].collect().toSet
     assert(got == expected,
@@ -88,20 +89,20 @@ class Round11bSpec extends AnyFunSuite {
     // df-capped exact join: every boilerplate shingle has df = 22 > 3,
     // so the 100/101 duplicate pair evaporates with the capped domain
     val capped = NearDup.ngramJaccardPairs(docs, "doc_id", "text",
-      Queries.JaccardN, 0.8, maxPostings = 3)
+      DedupQueries.JaccardN, 0.8, maxPostings = 3)
     assert(capped.filter(col("doc_a") === 100 && col("doc_b") === 101).count() == 0,
       "df cap should have dropped the boilerplate-only pair (that's its documented loss)")
     // prefix filtering keeps it: the pair's rare trailing shingles (df=2)
     // sit in the ascending-df prefix
     val prefix = NearDup.prefixJaccardPairs(docs, "doc_id", "text",
-      Queries.JaccardN, Queries.PrefixThrNum, Queries.PrefixThrDen)
+      DedupQueries.JaccardN, DedupQueries.PrefixThrNum, DedupQueries.PrefixThrDen)
     val hit = prefix.filter(col("doc_a") === 100 && col("doc_b") === 101)
       .select("jaccard").as[Double].collect()
     assert(hit.toSeq == Seq(1.0), s"lossless path missed the duplicate: got ${hit.toSeq}")
   }
 
   test("q188 plan: prefix join is an equi-join on tokens, never a cartesian") {
-    val p = Queries.prefixJaccard(spark, sf)
+    val p = DedupQueries.prefixJaccard(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"prefix join degenerated:\n$p")
@@ -112,30 +113,30 @@ class Round11bSpec extends AnyFunSuite {
   test("native HLL aggregate is bit-identical to the register-frame estimator") {
     val li = Tables.lineitem(spark, sf)
     val viaFrame = graft.functions.Sketches.hllEstimate(
-        graft.functions.Sketches.hllRegisters(li, col("l_orderkey"), Queries.HllM),
-        Nil, Queries.HllM, "est")
+        graft.functions.Sketches.hllRegisters(li, col("l_orderkey"), SketchQueries.HllM),
+        Nil, SketchQueries.HllM, "est")
       .as[Double].head()
     val viaAgg = li.agg(graft.plans.SketchAggs
-        .hllEstimateAgg(col("l_orderkey"), Queries.HllM).as("est"))
+        .hllEstimateAgg(col("l_orderkey"), SketchQueries.HllM).as("est"))
       .as[Double].head()
     assert(viaAgg == viaFrame, s"agg $viaAgg != frame $viaFrame")
   }
 
   test("graft_hll works from SQL text and equals the DataFrame aggregate") {
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     Tables.lineitem(spark, sf).createOrReplaceTempView("li_hll_spec")
     val viaSql = spark.sql(
-      s"SELECT graft_hll(l_orderkey, ${Queries.HllM}) AS est FROM li_hll_spec")
+      s"SELECT graft_hll(l_orderkey, ${SketchQueries.HllM}) AS est FROM li_hll_spec")
       .as[Double].head()
     val viaAgg = Tables.lineitem(spark, sf)
       .agg(graft.plans.SketchAggs
-        .hllEstimateAgg(col("l_orderkey"), Queries.HllM).as("est"))
+        .hllEstimateAgg(col("l_orderkey"), SketchQueries.HllM).as("est"))
       .as[Double].head()
     assert(viaSql == viaAgg)
   }
 
   test("q189 plan: the sketch aggregate runs with map-side partials (ObjectHashAggregate)") {
-    val df = Queries.hllNativeAgg(spark, sf)
+    val df = SketchQueries.hllNativeAgg(spark, sf)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("ObjectHashAggregate"),
@@ -145,7 +146,7 @@ class Round11bSpec extends AnyFunSuite {
   }
 
   test("native HLL per-group estimates stay within the raw-regime error envelope") {
-    val got = Queries.hllNativeAgg(spark, sf)
+    val got = SketchQueries.hllNativeAgg(spark, sf)
       .select("est_ratio").as[Double].collect()
     assert(got.nonEmpty)
     got.foreach(r => assert(r > 0.85 && r < 1.15, s"est_ratio $r outside ±15%"))

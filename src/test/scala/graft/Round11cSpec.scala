@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.SketchAggs
+import graft.queries.SketchQueries
 
 /** Round-11 third batch: the Misra–Gries and KMV native aggregates and
   * Cramér's V — guarantee/determinism properties the oracle gate can't
@@ -35,37 +36,37 @@ class Round11cSpec extends AnyFunSuite {
   test("KMV native aggregate is bit-identical to the frame estimator, globally and per group") {
     val li = Tables.lineitem(spark, sf)
     val globalFrame = graft.functions.Sketches
-      .kmvDistinctEstimate(li, "l_orderkey", Queries.KmvK)
+      .kmvDistinctEstimate(li, "l_orderkey", SketchQueries.KmvK)
       .select("est_distinct").as[Double].head()
     val globalAgg = li.agg(SketchAggs
-        .kmvEstimateAgg(col("l_orderkey"), Queries.KmvK).as("e"))
+        .kmvEstimateAgg(col("l_orderkey"), SketchQueries.KmvK).as("e"))
       .as[Double].head()
     assert(globalAgg == globalFrame)
     val perGroupFrame = graft.functions.Sketches
-      .groupedKmvDistinct(li, "l_returnflag", "l_orderkey", Queries.KmvK)
+      .groupedKmvDistinct(li, "l_returnflag", "l_orderkey", SketchQueries.KmvK)
       .select(col("l_returnflag"), col("est_distinct"))
       .as[(String, Double)].collect().toMap
     val perGroupAgg = li.groupBy("l_returnflag")
-      .agg(SketchAggs.kmvEstimateAgg(col("l_orderkey"), Queries.KmvK).as("e"))
+      .agg(SketchAggs.kmvEstimateAgg(col("l_orderkey"), SketchQueries.KmvK).as("e"))
       .as[(String, Double)].collect().toMap
     assert(perGroupAgg == perGroupFrame)
   }
 
   test("KMV aggregate returns null below k distinct keys (the exact-count regime)") {
     val tiny = (1L to 10L).toDF("k")
-    val got = tiny.agg(SketchAggs.kmvEstimateAgg(col("k"), Queries.KmvK).as("e"))
+    val got = tiny.agg(SketchAggs.kmvEstimateAgg(col("k"), SketchQueries.KmvK).as("e"))
       .select(col("e").isNull).as[Boolean].head()
     assert(got, "sub-k group must yield null, not a garbage estimate")
   }
 
   test("graft_kmv and graft_mg are callable from SQL text") {
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     Tables.lineitem(spark, sf).createOrReplaceTempView("li_kmv_spec")
     val viaSql = spark.sql(
-      s"SELECT graft_kmv(l_orderkey, ${Queries.KmvK}) AS e FROM li_kmv_spec")
+      s"SELECT graft_kmv(l_orderkey, ${SketchQueries.KmvK}) AS e FROM li_kmv_spec")
       .as[Double].head()
     val viaAgg = Tables.lineitem(spark, sf)
-      .agg(SketchAggs.kmvEstimateAgg(col("l_orderkey"), Queries.KmvK).as("e"))
+      .agg(SketchAggs.kmvEstimateAgg(col("l_orderkey"), SketchQueries.KmvK).as("e"))
       .as[Double].head()
     assert(viaSql == viaAgg)
     val mg = spark.sql(
@@ -94,10 +95,10 @@ class Round11cSpec extends AnyFunSuite {
       .select(explode(graft.functions.TextAnalysis.words(col("text"))).as("word"))
     val fp = graft.plans.VectorExprs.polyFingerprint(col("word"))
     val viaFrame = graft.functions.Sketches
-      .cmsCounters(words, fp, Queries.CmsDepth, Queries.CmsWidth)
+      .cmsCounters(words, fp, SketchQueries.CmsDepth, SketchQueries.CmsWidth)
       .as[(Int, Long, Long)].collect().toSet
     val viaAgg = words
-      .agg(SketchAggs.cmsCountersAgg(fp, Queries.CmsDepth, Queries.CmsWidth).as("cs"))
+      .agg(SketchAggs.cmsCountersAgg(fp, SketchQueries.CmsDepth, SketchQueries.CmsWidth).as("cs"))
       .select(explode(col("cs")).as("c"))
       .select(col("c.d"), col("c.bucket"), col("c.cnt"))
       .as[(Int, Long, Long)].collect().toSet
@@ -105,7 +106,7 @@ class Round11cSpec extends AnyFunSuite {
       s"extra=${viaAgg -- viaFrame}, missing=${viaFrame -- viaAgg}")
     // additive determinism: a different partitioning sums to the same grid
     val viaAgg2 = words.repartition(7)
-      .agg(SketchAggs.cmsCountersAgg(fp, Queries.CmsDepth, Queries.CmsWidth).as("cs"))
+      .agg(SketchAggs.cmsCountersAgg(fp, SketchQueries.CmsDepth, SketchQueries.CmsWidth).as("cs"))
       .select(explode(col("cs")).as("c"))
       .select(col("c.d"), col("c.bucket"), col("c.cnt"))
       .as[(Int, Long, Long)].collect().toSet
@@ -113,15 +114,15 @@ class Round11cSpec extends AnyFunSuite {
   }
 
   test("graft_cms is callable from SQL text") {
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     Tables.lineitem(spark, sf).createOrReplaceTempView("li_cms_spec")
     val cells = spark.sql(
-      s"SELECT graft_cms(l_orderkey, ${Queries.CmsDepth}, ${Queries.CmsWidth}) AS cs FROM li_cms_spec")
+      s"SELECT graft_cms(l_orderkey, ${SketchQueries.CmsDepth}, ${SketchQueries.CmsWidth}) AS cs FROM li_cms_spec")
       .select(explode(col("cs")).as("c"))
     assert(cells.count() > 0)
     // every row lands in exactly depth cells: total mass = depth x rows
     val mass = cells.select(sum(col("c.cnt"))).as[Long].head()
-    assert(mass == Queries.CmsDepth * Tables.lineitem(spark, sf).count())
+    assert(mass == SketchQueries.CmsDepth * Tables.lineitem(spark, sf).count())
   }
 
   test("every registered query has a DuckDB oracle (full-strength gate, no silent rows-only fallback)") {
@@ -129,15 +130,21 @@ class Round11cSpec extends AnyFunSuite {
     val o = SparkEntry.oracleSql.keySet
     assert((q -- o).isEmpty, s"queries without an oracle: ${q -- o}")
     assert((o -- q).isEmpty, s"oracles without a query: ${o -- q}")
+    // the maps are built by toMap, which keeps the last of two equal
+    // names silently: the declared list itself must be duplicate-free
+    val names = SparkEntry.specs.map(_.name)
+    assert(names.diff(names.distinct).isEmpty,
+      s"query names declared twice: ${names.diff(names.distinct)}")
+    assert(names.size == 283, s"${names.size} declared queries, expected 283")
   }
 
   test("q190 output equals the plain exact heavy-hitter query") {
-    val got = Queries.mgHeavyHitters(spark, sf)
+    val got = SketchQueries.mgHeavyHitters(spark, sf)
       .select("event_type", "n_events").as[(String, Long)].collect().toSet
     val ev = Tables.events(spark, sf)
     val total = ev.count()
     val exp = ev.groupBy("event_type").agg(count(lit(1)).as("n"))
-      .filter(col("n") * Queries.MgHeavyDen >= total)
+      .filter(col("n") * SketchQueries.MgHeavyDen >= total)
       .as[(String, Long)].collect().toSet
     assert(got == exp)
     assert(got.nonEmpty)

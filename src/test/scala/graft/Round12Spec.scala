@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.Sketches
 import graft.operators.{Analytics, Skew, Triangles}
 import graft.plans.SketchAggs
+import graft.queries.AnalyticsQueries
 
 /** Round-12 contracts: hash totality of the native sketch aggregates
   * (negative / overflow-wrapping keys must degrade gracefully, never
@@ -181,15 +182,15 @@ class Round12Spec extends AnyFunSuite {
     val direct = Analytics.coOccurrencePairs(
       Tables.lineitem(spark, sf).select("l_orderkey", "l_partkey"),
       "l_orderkey", "l_partkey", minSupport = 1L,
-      maxBasketSize = Queries.CoMaxBasket)
+      maxBasketSize = AnalyticsQueries.CoMaxBasket)
     assert(m1.exceptAll(direct).count() == 0 &&
       direct.exceptAll(m1).count() == 0)
     // the minSupport≥2 consumers are a pure filter of the shared frame
-    val filtered = m1.filter(col("n_baskets") >= Queries.CoMinSupport)
+    val filtered = m1.filter(col("n_baskets") >= AnalyticsQueries.CoMinSupport)
     val directMs2 = Analytics.coOccurrencePairs(
       Tables.lineitem(spark, sf).select("l_orderkey", "l_partkey"),
-      "l_orderkey", "l_partkey", Queries.CoMinSupport,
-      maxBasketSize = Queries.CoMaxBasket)
+      "l_orderkey", "l_partkey", AnalyticsQueries.CoMinSupport,
+      maxBasketSize = AnalyticsQueries.CoMaxBasket)
     assert(filtered.exceptAll(directMs2).count() == 0 &&
       directMs2.exceptAll(filtered).count() == 0)
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming._
+import graft.queries.EtlQueries
 
 /** Round-12 soak (VERDICT r11 item 6): the SCD2 sink under a live
   * `Trigger.ProcessingTime` query — scd1 and the near-dup sink got this
@@ -51,7 +52,7 @@ class Round12StreamSpec extends AnyFunSuite {
     } finally q.stop()
     val got = graft.sources.Snapshots.read(spark, target)
       .select(outCols.map(col): _*)
-    val exp = Queries.scd2Build(spark, sf).select(outCols.map(col): _*)
+    val exp = EtlQueries.scd2Build(spark, sf).select(outCols.map(col): _*)
     assert(got.count() > 0)
     assert(got.except(exp).count() == 0 && exp.except(got).count() == 0,
       "live-trigger SCD2 history diverged from the batch-rebuilt table")

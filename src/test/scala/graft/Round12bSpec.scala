@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{KCore, Triangles}
 import graft.plans.{EditDistance, TopKAgg}
+import graft.queries.{AnalyticsQueries, GraphQueries}
 
 /** Round-12 new-operator contracts: the native TOP-K heap aggregate
   * (order-statistic determinism + window-form equivalence), the true
@@ -46,7 +47,7 @@ class Round12bSpec extends AnyFunSuite {
   }
 
   test("topk SQL surface (graft_topk) works and bounds state at k entries") {
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     (1L to 1000L).map(i => (i % 7, i)).toDF("v", "id")
       .createOrReplaceTempView("tk_v")
     val out = spark.sql(
@@ -76,7 +77,7 @@ class Round12bSpec extends AnyFunSuite {
         s"($a, $b): got ${got((a, b))}, want ($dl, $lev)")
     }
     // and via SQL
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     assert(spark.sql("SELECT graft_dleven('micheal', 'michael') AS d")
       .as[Int].head() == 1, "adjacent swap must cost 1")
   }
@@ -118,9 +119,9 @@ class Round12bSpec extends AnyFunSuite {
     // fixpoint k-core
     val e = Queries.copurchaseEdges(spark, sf).select("item_a", "item_b")
     val atCap = KCore.kCore(e, "item_a", "item_b",
-      Queries.KCoreK, Queries.KCoreRounds)
+      GraphQueries.KCoreK, GraphQueries.KCoreRounds)
     val beyond = KCore.kCore(e, "item_a", "item_b",
-      Queries.KCoreK, Queries.KCoreRounds + 1)
+      GraphQueries.KCoreK, GraphQueries.KCoreRounds + 1)
     assert(atCap.exceptAll(beyond).count() == 0 &&
       beyond.exceptAll(atCap).count() == 0,
       "round cap was binding on the fixture — raise KCoreRounds")
@@ -129,7 +130,7 @@ class Round12bSpec extends AnyFunSuite {
   // --- window funnel boundary arithmetic -----------------------------------------
 
   test("window funnel: in-window converts, boundary-exact converts, one-past does not") {
-    val W = Queries.FunnelWindowMicros
+    val W = AnalyticsQueries.FunnelWindowMicros
     val rows = Seq(
       // u1: click exactly AT the window edge (inclusive), purchase inside
       (1L, "view", 1L, 1000L), (1L, "click", 2L, 1000L + W),
@@ -145,7 +146,7 @@ class Round12bSpec extends AnyFunSuite {
       (4L, "view", 10L, 1000L), (4L, "purchase", 11L, 1500L),
       (4L, "click", 12L, 2000L))
       .toDF("user_id", "event_type", "event_id", "us")
-    val got = Queries.windowFunnelFrom(rows)
+    val got = AnalyticsQueries.windowFunnelFrom(rows)
       .select("user_id", "stage").as[(Long, Int)].collect().toMap
     assert(got == Map(1L -> 3, 2L -> 1, 3L -> 2, 4L -> 2), got.toString)
   }

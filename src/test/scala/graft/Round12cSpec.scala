@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Bfs, LabelProp}
+import graft.queries.AnalyticsQueries
 
 /** Round-12 widening: BFS hops, label-propagation communities, the
   * Kaplan–Meier life table, integer-CUSUM changepoints, the
@@ -54,7 +55,7 @@ class Round12cSpec extends AnyFunSuite {
   // --- q202 life table -----------------------------------------------------------
 
   test("q202: life-table accounting — risk set telescopes, hazard bounded") {
-    val lt = Queries.survivalLifeTable(spark, sf).collect()
+    val lt = AnalyticsQueries.survivalLifeTable(spark, sf).collect()
     assert(lt.nonEmpty)
     val total = lt.map(r => r.getLong(r.fieldIndex("n_deaths"))
       + r.getLong(r.fieldIndex("n_censored"))).sum
@@ -76,7 +77,7 @@ class Round12cSpec extends AnyFunSuite {
   // --- q204 CUSUM ----------------------------------------------------------------
 
   test("q204: one changepoint per event type, score in [0,1), sign consistent") {
-    val cp = Queries.cusumChangepoint(spark, sf).collect()
+    val cp = AnalyticsQueries.cusumChangepoint(spark, sf).collect()
     assert(cp.map(_.getString(0)).toSeq.distinct.size == cp.length)
     cp.foreach { r =>
       val score = r.getDouble(r.fieldIndex("shift_score"))
@@ -107,7 +108,7 @@ class Round12cSpec extends AnyFunSuite {
         "orders", "lineitem", "documents", "embeddings"))
       spark.read.parquet(s"$sf/$t.parquet")
         .write.mode("overwrite").parquet(s"$dir/$t.parquet")
-    val row = Queries.cusumChangepoint(spark, dir)
+    val row = AnalyticsQueries.cusumChangepoint(spark, dir)
       .filter(col("event_type") === "shift").collect().head
     assert(row.getDate(row.fieldIndex("change_day")).toLocalDate
       == java.time.LocalDate.ofEpochDay(9L))
@@ -118,10 +119,10 @@ class Round12cSpec extends AnyFunSuite {
   // --- q205 principal component ---------------------------------------------------
 
   test("q205: iterate is max-normalized, lambda positive, one row per dim") {
-    val pc = Queries.principalComponent(spark, sf).collect()
+    val pc = AnalyticsQueries.principalComponent(spark, sf).collect()
     assert(pc.length == 64)
     val comps = pc.map(r => r.getLong(r.fieldIndex("pc_q")))
-    assert(comps.map(math.abs).max == Queries.PcScale)
+    assert(comps.map(math.abs).max == AnalyticsQueries.PcScale)
     // Gram is PSD and v0 = all-ones is not orthogonal to the top space
     assert(pc.head.getDouble(pc.head.fieldIndex("lambda")) > 0.0)
   }
@@ -139,10 +140,10 @@ class Round12cSpec extends AnyFunSuite {
         "orders", "lineitem", "events", "documents"))
       spark.read.parquet(s"$sf/$t.parquet")
         .write.mode("overwrite").parquet(s"$dir/$t.parquet")
-    val pc = Queries.principalComponent(spark, dir).collect()
+    val pc = AnalyticsQueries.principalComponent(spark, dir).collect()
     val byPos = pc.map(r => r.getLong(r.fieldIndex("pos"))
       -> r.getLong(r.fieldIndex("pc_q"))).toMap
-    assert(math.abs(byPos(0L)) == Queries.PcScale,
+    assert(math.abs(byPos(0L)) == AnalyticsQueries.PcScale,
       s"dominant direction should be dim 0, got $byPos")
     assert(math.abs(byPos(1L)) < 16 && byPos(2L) == 0L && byPos(3L) == 0L)
   }
@@ -150,7 +151,7 @@ class Round12cSpec extends AnyFunSuite {
   // --- q207 U-shaped attribution ---------------------------------------------------
 
   test("q207: credits conserve the purchase cents exactly at every touch count") {
-    val rows = Queries.ushapeAttribution(spark, sf).collect()
+    val rows = AnalyticsQueries.ushapeAttribution(spark, sf).collect()
     assert(rows.nonEmpty)
     var sawMulti = false
     rows.foreach { r =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.Cols.dec2
 import graft.operators.Fifo
+import graft.queries.AnalyticsQueries
 
 /** Round-12 second widening: FIFO allocation, seasonal anomalies,
   * rolling correlation. Known-answer FIFO fixture (multi-lot spans,
@@ -30,7 +31,7 @@ class Round12dSpec extends AnyFunSuite {
   }
 
   test("fifo: allocation is conservation-exact at sf0.001 (lots never over-consumed)") {
-    val rows = Queries.fifoAllocation(spark, sf)
+    val rows = AnalyticsQueries.fifoAllocation(spark, sf)
     // per-lot matched total never exceeds the lot quantity. NB: join on
     // (part, supply_id) — the synthetic lineitem reuses (orderkey,
     // linenumber) across parts, so the id is only unique per key (which
@@ -60,7 +61,7 @@ class Round12dSpec extends AnyFunSuite {
   }
 
   test("q208: one row per event type; extreme flag agrees with the integer test") {
-    val rows = Queries.seasonalAnomalies(spark, sf).collect()
+    val rows = AnalyticsQueries.seasonalAnomalies(spark, sf).collect()
     assert(rows.map(_.getString(0)).distinct.length == rows.length
       && rows.nonEmpty)
     rows.foreach { r =>
@@ -76,13 +77,13 @@ class Round12dSpec extends AnyFunSuite {
   }
 
   test("q209: correlation bounded, window never exceeds 28 days, thin head nulls") {
-    val rows = Queries.rollingCorrelation(spark, sf).collect()
+    val rows = AnalyticsQueries.rollingCorrelation(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val n = r.getLong(r.fieldIndex("n_days"))
-      assert(n >= 1 && n <= Queries.RollCorrDays)
+      assert(n >= 1 && n <= AnalyticsQueries.RollCorrDays)
       if (!r.isNullAt(r.fieldIndex("corr_28d"))) {
-        assert(n >= Queries.RollCorrMinDays)
+        assert(n >= AnalyticsQueries.RollCorrMinDays)
         val c = r.getDouble(r.fieldIndex("corr_28d"))
         assert(c >= -1.0000001 && c <= 1.0000001)
       }

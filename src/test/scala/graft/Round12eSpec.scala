@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.GraphStats
+import graft.queries.GraphQueries
 
 /** Round-12 third widening: graph-health stats and reciprocal matching.
   * Known-answer fixtures — a star is exactly r = −1, a cycle is
@@ -54,7 +55,7 @@ class Round12eSpec extends AnyFunSuite {
     // p1(b) = 0.15e9 + 1·850e6 + 3·283,333,333 = 1,849,999,999
     // p1(c) = 0.15e9 + 3·212,500,000           = 787,500,000
     val e = Seq((1L, 2L, 1L), (2L, 3L, 3L)).toDF("src", "dst", "w")
-    val got = Queries.weightedPagerankRounds(e, 1)
+    val got = GraphQueries.weightedPagerankRounds(e, 1)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 362500000L, 2L -> 1849999999L,
       3L -> 787500000L))
@@ -64,17 +65,17 @@ class Round12eSpec extends AnyFunSuite {
     // same topology, weights skewed: the hub's mass splits 1:3, so the
     // heavy neighbor must strictly out-rank the light one after a round
     val e = Seq((10L, 1L, 1L), (10L, 2L, 3L)).toDF("src", "dst", "w")
-    val got = Queries.weightedPagerankRounds(e, 2)
+    val got = GraphQueries.weightedPagerankRounds(e, 2)
       .as[(Long, Long)].collect().toMap
     assert(got(2L) > got(1L), s"heavy neighbor did not out-rank: $got")
   }
 
   test("q211/q212 run against the fixture and stay internally consistent") {
-    val a = Queries.degreeAssortativity(spark, sf).collect().head
+    val a = GraphQueries.degreeAssortativity(spark, sf).collect().head
     val r = a.getDouble(a.fieldIndex("assortativity"))
     assert(r >= -1.0 && r <= 1.0)
     assert(a.getLong(a.fieldIndex("n_edges")) > 0)
-    val rbm = Queries.reciprocalBestMatch(spark, sf).collect()
+    val rbm = GraphQueries.reciprocalBestMatch(spark, sf).collect()
     assert(rbm.nonEmpty)
     // mutual-best pairs are a MATCHING: no vertex appears twice
     val verts = rbm.flatMap(x => Seq(x.getLong(0), x.getLong(1)))

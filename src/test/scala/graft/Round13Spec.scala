@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Collocations, KCore, LabelProp}
+import graft.queries._
 
 /** Round-13 contracts: the planted-collocation PMI fixture, the
   * directed-PageRank dangling-mass arithmetic (hand-computed round +
@@ -49,7 +50,7 @@ class Round13Spec extends AnyFunSuite {
     // 1 →(w2)→ 2, 1 →(w1)→ 3, 2 →(w1)→ 3; node 3 dangling
     val edges = Seq((1L, 2L, 2L), (1L, 3L, 1L), (2L, 3L, 1L))
       .toDF("src", "dst", "w")
-    val got = Queries.directedPagerankRounds(edges, 1)
+    val got = GraphQueries.directedPagerankRounds(edges, 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // scale 1e9, base 150e6; d = p(3) = 1e9, share = 85e9 div 300
     // = 283,333,333; per-node quotient for 1: 85e9 div 300 (tw=3),
@@ -68,7 +69,7 @@ class Round13Spec extends AnyFunSuite {
   test("directedPagerankRounds without danglers adds no redistribution term") {
     // 2-cycle: every node has out-mass, d = 0 each round
     val edges = Seq((1L, 2L, 1L), (2L, 1L, 1L)).toDF("src", "dst", "w")
-    val got = Queries.directedPagerankRounds(edges, 3)
+    val got = GraphQueries.directedPagerankRounds(edges, 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // symmetric fixpoint: base + (85·p div 100) each round, identical
     // per node; round 1: 150e6 + 850e6 = 1e9 → stationary
@@ -110,9 +111,9 @@ class Round13Spec extends AnyFunSuite {
   test("weighted PageRank computes disjoint replicas independently") {
     val g = baseGraph()
     // w ≡ 1 degenerates to q155's degree split; real w covers q213
-    val single = Queries.weightedPagerankRounds(
+    val single = GraphQueries.weightedPagerankRounds(
       g.select(col("x").as("src"), col("y").as("dst"), col("w")), 3)
-    val union = Queries.weightedPagerankRounds(
+    val union = GraphQueries.weightedPagerankRounds(
       replicated(g).select(col("x").as("src"), col("y").as("dst"), col("w")), 3)
     assertReplicaEquality(single, union, Seq("item"), "q213-family")
   }
@@ -141,7 +142,7 @@ class Round13Spec extends AnyFunSuite {
     // breakdown property that motivates the estimator
     val daily = Seq(("A", 0L, 0L), ("A", 1L, 2L), ("A", 2L, 4L),
       ("A", 3L, 6L), ("A", 4L, 1000L)).toDF("l_returnflag", "x", "y")
-    val r = Queries.theilSenFromDaily(daily).collect()
+    val r = AnalyticsQueries.theilSenFromDaily(daily).collect()
     assert(r.length == 1)
     assert(r.head.getLong(1) == 10L)
     assert(r.head.getDouble(2) == 2.0)
@@ -165,7 +166,7 @@ class Round13Spec extends AnyFunSuite {
   // --- Wilson interval / belief revisions ----------------------------------------------
 
   test("conversionCi bounds bracket the rate and stay inside [0,1]") {
-    val out = Queries.conversionCi(spark, sf)
+    val out = AnalyticsQueries.conversionCi(spark, sf)
     assert(out.count() > 0)
     // 1-ulp tolerance at the extremes: at p = 1 the Wilson hi is
     // EXACTLY 1 mathematically but the float expression reads 1 + ε
@@ -179,18 +180,18 @@ class Round13Spec extends AnyFunSuite {
   }
 
   test("beliefRevisions buckets partition each later belief set") {
-    val out = Queries.beliefRevisions(spark, sf).collect()
-    assert(out.length == Queries.TravelTs.size - 1)
+    val out = RuntimeQueries.beliefRevisions(spark, sf).collect()
+    assert(out.length == RuntimeQueries.TravelTs.size - 1)
     // every row of the later belief set lands in exactly one bucket:
     // the four counts sum to that version's as-of snapshot size
-    Queries.TravelTs.sliding(2).zipWithIndex.foreach { case (Seq(_, k2), i) =>
+    RuntimeQueries.TravelTs.sliding(2).zipWithIndex.foreach { case (Seq(_, k2), i) =>
       val n2 = graft.operators.Scd.asOfSnapshot(
         graft.operators.Scd.scd2FromChangelog(
           Tables.events(spark, sf)
             .filter(col("ts") < graft.Cols.utcTs(k2))
             .select("user_id", "event_id", "event_type", "value", "ts"),
           keys = Seq("user_id"), seqCol = "ts", tieCols = Seq("event_id")),
-        graft.Cols.utcTs(Queries.BtValidTs)).count()
+        graft.Cols.utcTs(RuntimeQueries.BtValidTs)).count()
       val r = out(i)
       assert(r.getLong(1) + r.getLong(2) + r.getLong(3) + r.getLong(4) == n2,
         s"transition ${i + 1}: buckets must partition the k2 belief set")
@@ -204,7 +205,7 @@ class Round13Spec extends AnyFunSuite {
     // round 2 ties (a,b)=3 with (aa,a)=3 → lexicographic pair order
     // picks (a,b); round 3 merges (aa,ab); round 4 exhausts → early stop
     val docs = Seq("aaab aaab", "aaab").toDF("text")
-    val got = Queries.bpeMergesFrom(spark, docs, col("text"), 5)
+    val got = TextQueries.bpeMergesFrom(spark, docs, col("text"), 5)
       .collect().map(r =>
         (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
     assert(got.toSeq == Seq(
@@ -214,21 +215,21 @@ class Round13Spec extends AnyFunSuite {
   // --- PQ code assignment --------------------------------------------------------------
 
   test("pqCodes assigns a seed vector to its own codebook entry at distance zero") {
-    val out = Queries.pqCodes(spark, sf)
+    val out = AnnQueries.pqCodes(spark, sf)
     // codes live in [0, PqCodes)
     assert(out.filter(col("code") < 0 ||
-      col("code") >= Queries.PqCodes).count() == 0)
+      col("code") >= AnnQueries.PqCodes).count() == 0)
     assert(out.groupBy("vec_id").count()
-      .filter(col("count") =!= Queries.PqSub).count() == 0,
+      .filter(col("count") =!= AnnQueries.PqSub).count() == 0,
       "every vector must carry exactly one code per subspace")
     // the seed vectors ARE centroids: their nearest sub-centroid is
     // themselves, at exactly 0.0 in every subspace
     val emb = Tables.embeddings(spark, sf)
-    val seedIds = emb.filter(col("vec_id") >= Queries.AnnQueryMaxId)
-      .orderBy("vec_id").limit(Queries.PqCodes)
+    val seedIds = emb.filter(col("vec_id") >= AnnQueries.AnnQueryMaxId)
+      .orderBy("vec_id").limit(AnnQueries.PqCodes)
       .select("vec_id").collect().map(_.getLong(0))
     val seedRows = out.filter(col("vec_id").isin(seedIds: _*))
-    assert(seedRows.count() == Queries.PqCodes.toLong * Queries.PqSub)
+    assert(seedRows.count() == AnnQueries.PqCodes.toLong * AnnQueries.PqSub)
     assert(seedRows.filter(col("dist2") =!= 0.0).count() == 0,
       "a codebook seed must quantize to itself at distance 0")
   }
@@ -276,8 +277,8 @@ class Round13Spec extends AnyFunSuite {
 
   test("directed PageRank computes disjoint replicas independently") {
     val g = baseGraph().select(col("x").as("src"), col("y").as("dst"), col("w"))
-    val single = Queries.directedPagerankRounds(g, 3)
-    val union = Queries.directedPagerankRounds(
+    val single = GraphQueries.directedPagerankRounds(g, 3)
+    val union = GraphQueries.directedPagerankRounds(
       g.unionByName(g.select((col("src") + Off).as("src"),
         (col("dst") + Off).as("dst"), col("w"))), 3)
     // NOT generally true for the dangling term (the pool is global);

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Scc, ZOrder}
+import graft.queries.{GraphQueries, RuntimeQueries}
 
 /** Round-14 contracts. q230 Hilbert write path: the probe scan must
   * prune at the partition-directory level (PartitionFilters on hblock
@@ -30,18 +31,18 @@ class Round14Spec extends AnyFunSuite {
         datediff(to_date(col("o_orderdate")), to_date(lit("1970-01-01")))
           .cast("long"))
     ZOrder.writeHilbertLayout(orders, col("o_custkey"), col("day"), path,
-      Queries.ZQBits, Queries.ZBlockShift)
+      RuntimeQueries.ZQBits, RuntimeQueries.ZBlockShift)
     val man = spark.read.parquet(path + "_manifest")
     val total = man.count()
     val hit = man.filter(
-      ZOrder.quantize(lit(Queries.HilXLo), col("minx"), col("maxx"),
-        Queries.ZQBits) <= col("max_x") &&
-        col("min_x") <= ZOrder.quantize(lit(Queries.HilXHi), col("minx"),
-          col("maxx"), Queries.ZQBits) &&
-        ZOrder.quantize(lit(Queries.HilDayLo), col("miny"), col("maxy"),
-          Queries.ZQBits) <= col("max_y") &&
-        col("min_y") <= ZOrder.quantize(lit(Queries.HilDayHi), col("miny"),
-          col("maxy"), Queries.ZQBits)).count()
+      ZOrder.quantize(lit(RuntimeQueries.HilXLo), col("minx"), col("maxx"),
+        RuntimeQueries.ZQBits) <= col("max_x") &&
+        col("min_x") <= ZOrder.quantize(lit(RuntimeQueries.HilXHi), col("minx"),
+          col("maxx"), RuntimeQueries.ZQBits) &&
+        ZOrder.quantize(lit(RuntimeQueries.HilDayLo), col("miny"), col("maxy"),
+          RuntimeQueries.ZQBits) <= col("max_y") &&
+        col("min_y") <= ZOrder.quantize(lit(RuntimeQueries.HilDayHi), col("miny"),
+          col("maxy"), RuntimeQueries.ZQBits)).count()
     assert(hit > 0, "probe must intersect at least one block")
     assert(hit < total,
       s"probe must prune: $hit of $total blocks — the manifest gives no skipping")
@@ -114,7 +115,7 @@ class Round14Spec extends AnyFunSuite {
 
   test("Scc.components: two disjoint replicas equal two independent runs") {
     val li = Tables.lineitem(spark, sf)
-      .filter(pmod(col("l_orderkey"), lit(Queries.SccOrderMod.toLong)) === 0)
+      .filter(pmod(col("l_orderkey"), lit(GraphQueries.SccOrderMod.toLong)) === 0)
       .select("l_orderkey", "l_linenumber", "l_partkey")
     val a = li.alias("a")
     val b = li.alias("b")
@@ -157,7 +158,7 @@ class Round14Spec extends AnyFunSuite {
         datediff(to_date(col("o_orderdate")), to_date(lit("1970-01-01")))
           .cast("long"))
     ZOrder.writeHilbertLayout(orders, col("o_custkey"), col("day"), path,
-      Queries.ZQBits, Queries.ZBlockShift)
+      RuntimeQueries.ZQBits, RuntimeQueries.ZBlockShift)
     val dirs = new java.io.File(path).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("hblock="))
       .map(_.getName.stripPrefix("hblock=").toLong).sorted

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Median
+import graft.queries._
 
 /** Round-15 contracts: the condensation-DAG depths on a planted
   * hand-computable graph, the weighted-quantile decomposition's two
@@ -25,7 +26,7 @@ class Round15Spec extends AnyFunSuite {
       (2L, 3L), (4L, 5L),
       (6L, 7L)
     ).toDF("src", "dst")
-    val got = Queries.condensationDepths(edges)
+    val got = GraphQueries.condensationDepths(edges)
       .orderBy("scc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == Seq((1L, 2L, 0L), (3L, 2L, 1L), (5L, 1L, 2L),
@@ -34,7 +35,7 @@ class Round15Spec extends AnyFunSuite {
 
   test("q236: a 3-cycle feeding a 3-chain layers at depths 0..3") {
     import spark.implicits._
-    val res = Queries.condensationDepths(
+    val res = GraphQueries.condensationDepths(
       Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 6L))
         .toDF("src", "dst"))
     val rows = res.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
@@ -48,11 +49,11 @@ class Round15Spec extends AnyFunSuite {
         col("l_extendedprice").cast("double").as("v"))
       .withColumn("w", lit(1L))
     val weighted = Median.groupedWeightedQuantiles(base, "g", "v", "w",
-        Queries.WqQuantiles, bucketScale = 1.0 / 64.0)
+        AnalyticsQueries.WqQuantiles, bucketScale = 1.0 / 64.0)
       .select(col("g"), col("q"), col("quantile"))
       .orderBy("g", "q").collect()
     val plain = Median.groupedExactQuantiles(base, "g", "v",
-        Queries.WqQuantiles, bucketScale = 1.0 / 64.0)
+        AnalyticsQueries.WqQuantiles, bucketScale = 1.0 / 64.0)
       .orderBy("g", "q").collect()
     assert(weighted.length == plain.length && weighted.length > 0)
     weighted.zip(plain).foreach { case (a, b) =>
@@ -89,19 +90,19 @@ class Round15Spec extends AnyFunSuite {
   }
 
   test("q237: a corpus vector that IS a codebook seed scores the exact squared L2") {
-    val subDim = graft.functions.Lsh.Dim / Queries.PqSub
+    val subDim = graft.functions.Lsh.Dim / AnnQueries.PqSub
     val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val seeds = emb.filter(col("vec_id") >= Queries.AnnQueryMaxId)
-      .orderBy("vec_id").limit(Queries.PqCodes)
+    val seeds = emb.filter(col("vec_id") >= AnnQueries.AnnQueryMaxId)
+      .orderBy("vec_id").limit(AnnQueries.PqCodes)
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val queries = emb.filter(col("vec_id") < Queries.AnnQueryMaxId)
+    val queries = emb.filter(col("vec_id") < AnnQueries.AnnQueryMaxId)
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
     assert(seeds.nonEmpty && queries.nonEmpty)
     // exact distance in the SAME association the ADC sum uses: sum of
     // per-subspace left-folds (a single 64-term fold differs in ulps)
     def exact(q: Seq[Double], x: Seq[Double]): Double =
-      (0 until Queries.PqSub).map { sp =>
+      (0 until AnnQueries.PqSub).map { sp =>
         var acc = 0.0
         var i = 0
         while (i < subDim) {
@@ -111,7 +112,7 @@ class Round15Spec extends AnyFunSuite {
         }
         acc
       }.sum
-    val scores = Queries.adcScores(spark, sf)
+    val scores = AnnQueries.adcScores(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     var checked = 0
     for ((qid, qv) <- queries; (sid, sv) <- seeds) {
@@ -121,11 +122,11 @@ class Round15Spec extends AnyFunSuite {
         s"ADC($qid, seed $sid) = $adc != exact $ex")
       checked += 1
     }
-    assert(checked >= Queries.PqCodes)
+    assert(checked >= AnnQueries.PqCodes)
   }
 
   test("q238: both zone maps are supersets of truth; time bands prune better two-level") {
-    val res = Queries.hilbertTwoLevelCompare(spark, sf)
+    val res = RuntimeQueries.hilbertTwoLevelCompare(spark, sf)
       .collect().map(r => r.getInt(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     // true matching rows per probe (the floor any zone map must cover)
@@ -133,7 +134,7 @@ class Round15Spec extends AnyFunSuite {
       .select(col("o_custkey").as("x"),
         datediff(to_date(col("o_orderdate")), to_date(lit("1970-01-01")))
           .cast("long").as("y"))
-    Queries.TwoLevelProbes.foreach { case (id, xlo, xhi, ylo, yhi) =>
+    RuntimeQueries.TwoLevelProbes.foreach { case (id, xlo, xhi, ylo, yhi) =>
       val truth = orders.filter(col("x").between(xlo, xhi) &&
         col("y").between(ylo, yhi)).count()
       val (_, rowsFlat, _, rowsTwo) = res(id)
@@ -148,9 +149,9 @@ class Round15Spec extends AnyFunSuite {
   }
 
   test("q239: composed IVF+PQ scores agree with the full ADC scan on every returned pair") {
-    val full = Queries.adcScores(spark, sf)
+    val full = AnnQueries.adcScores(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val got = Queries.ivfPqSearch(spark, sf).collect()
+    val got = AnnQueries.ivfPqSearch(spark, sf).collect()
     assert(got.nonEmpty)
     got.foreach { r =>
       val key = (r.getLong(0), r.getLong(2))
@@ -160,14 +161,14 @@ class Round15Spec extends AnyFunSuite {
     // and at nprobe = all lists the composed search IS the full ADC
     // top-k (probing everything removes the only approximation layer)
     val labels = Tables.embeddings(spark, sf)
-      .filter(col("vec_id") >= Queries.AnnQueryMaxId)
+      .filter(col("vec_id") >= AnnQueries.AnnQueryMaxId)
       .select("label").distinct().count()
-    assert(Queries.IvfNProbe <= labels,
+    assert(AnnQueries.IvfNProbe <= labels,
       "fixture sanity: nprobe must not exceed the list count")
   }
 
   test("q237: top-k output is rank-contiguous and ordered by (dist, vec_id)") {
-    val rows = Queries.pqAdcTopK(spark, sf).collect()
+    val rows = AnnQueries.pqAdcTopK(spark, sf).collect()
     val byQ = rows.groupBy(_.getLong(0))
     byQ.foreach { case (q, rs) =>
       val sorted = rs.sortBy(_.getLong(1))
@@ -220,10 +221,10 @@ class Round15Spec extends AnyFunSuite {
   }
 
   test("q240: maintained view equals the full recompute") {
-    val got = Queries.ivmSigned(spark, sf)
+    val got = EtlQueries.ivmSigned(spark, sf)
     val recompute = Tables.events(spark, sf)
-      .filter(col("ts") > Cols.utcTs(Queries.SplitTs) ||
-        pmod(col("event_id"), lit(Queries.IvmDeleteMod)) =!= 0)
+      .filter(col("ts") > Cols.utcTs(EtlQueries.SplitTs) ||
+        pmod(col("event_id"), lit(EtlQueries.IvmDeleteMod)) =!= 0)
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"),
         sum(Cols.dec2(col("value"))).cast("double").as("total_value"))
@@ -233,8 +234,8 @@ class Round15Spec extends AnyFunSuite {
   // --- q241: CMS join-cardinality bound ---------------------------------------
 
   test("q241: every depth's inner product upper-bounds the exact join size") {
-    val rows = Queries.joinSizeCms(spark, sf).collect()
-    assert(rows.length == Queries.CmsDepth)
+    val rows = RuntimeQueries.joinSizeCms(spark, sf).collect()
+    assert(rows.length == SketchQueries.CmsDepth)
     val exact = rows.head.getLong(3)
     val est = rows.head.getLong(2)
     assert(exact > 0L, "fixture sanity: the probe join must be non-empty")
@@ -246,7 +247,7 @@ class Round15Spec extends AnyFunSuite {
   // --- q242: ORC scan contract -------------------------------------------------
 
   test("q242: the ORC read-back pushes the range filter and prunes columns") {
-    val plan = Queries.orcRoundtrip(spark, sf).queryExecution.executedPlan
+    val plan = RuntimeQueries.orcRoundtrip(spark, sf).queryExecution.executedPlan
       .toString
     val scan = plan.linesIterator.filter(_.contains("Batched")).mkString("\n")
     assert(plan.contains("PushedFilters: ["), s"no PushedFilters in:\n$plan")
@@ -265,8 +266,8 @@ class Round15Spec extends AnyFunSuite {
   // --- q243: bloom path ≡ exact path -------------------------------------------
 
   test("q243: bloom-prefiltered decontamination is bit-identical to q56") {
-    val exact = Queries.decontaminate(spark, sf)
-    val bloom = Queries.decontaminateBloom(spark, sf)
+    val exact = DedupQueries.decontaminate(spark, sf)
+    val bloom = DedupQueries.decontaminateBloom(spark, sf)
     assert(bloom.exceptAll(exact).isEmpty && exact.exceptAll(bloom).isEmpty)
   }
 
@@ -276,23 +277,23 @@ class Round15Spec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
         col("label"))
-    val corpus = emb.filter(col("vec_id") >= Queries.AnnQueryMaxId)
+    val corpus = emb.filter(col("vec_id") >= AnnQueries.AnnQueryMaxId)
     val means = graft.operators.Ivf.meanCentroids(corpus, "v", "label")
-    val (res, cb) = Queries.residualsAndCodebook(corpus, means)
-    val subDim = graft.functions.Lsh.Dim / Queries.PqSub
-    val codes = Queries.residualCodesFrame(res, cb, subDim)
+    val (res, cb) = AnnQueries.residualsAndCodebook(corpus, means)
+    val subDim = graft.functions.Lsh.Dim / AnnQueries.PqSub
+    val codes = AnnQueries.residualCodesFrame(res, cb, subDim)
     // the PqCodes lowest corpus ids ARE the codebook: every one of their
     // subspace assignments must land at exactly 0.0 (d − d ≡ 0 in IEEE)
-    val seedIds = res.orderBy("vec_id").limit(Queries.PqCodes)
+    val seedIds = res.orderBy("vec_id").limit(AnnQueries.PqCodes)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     val seedRows = codes.filter(col("vec_id").isin(seedIds.toSeq: _*)).collect()
-    assert(seedRows.length == seedIds.size * Queries.PqSub)
+    assert(seedRows.length == seedIds.size * AnnQueries.PqSub)
     seedRows.foreach(r => assert(r.getDouble(4) == 0.0,
       s"seed ${r.getLong(0)} subspace ${r.getInt(2)} dist ${r.getDouble(4)}"))
   }
 
   test("q246: returned neighbors come only from the query's probed lists") {
-    val got = Queries.ivfPqResidualSearch(spark, sf).collect()
+    val got = AnnQueries.ivfPqResidualSearch(spark, sf).collect()
     assert(got.nonEmpty)
     val byQ = got.groupBy(_.getLong(0))
     byQ.foreach { case (q, rs) =>
@@ -304,14 +305,14 @@ class Round15Spec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
         col("label"))
-    val labelOf = emb.filter(col("vec_id") >= Queries.AnnQueryMaxId)
+    val labelOf = emb.filter(col("vec_id") >= AnnQueries.AnnQueryMaxId)
       .select("vec_id", "label").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     val means = graft.operators.Ivf
-      .meanCentroids(emb.filter(col("vec_id") >= Queries.AnnQueryMaxId),
+      .meanCentroids(emb.filter(col("vec_id") >= AnnQueries.AnnQueryMaxId),
         "v", "label")
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
-    val qvs = emb.filter(col("vec_id") < Queries.AnnQueryMaxId)
+    val qvs = emb.filter(col("vec_id") < AnnQueries.AnnQueryMaxId)
       .select("vec_id", "v").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1))).toMap
     got.foreach { r =>
@@ -322,7 +323,7 @@ class Round15Spec extends AnyFunSuite {
         var i = 0
         while (i < qv.length) { val d = qv(i) - m(i); acc += d * d; i += 1 }
         (acc, l)
-      }.sorted.take(Queries.IvfNProbe).map(_._2).toSet
+      }.sorted.take(AnnQueries.IvfNProbe).map(_._2).toSet
       assert(probed.contains(labelOf(vid)),
         s"query $qid returned $vid from unprobed list ${labelOf(vid)}")
     }
@@ -331,10 +332,10 @@ class Round15Spec extends AnyFunSuite {
   // --- q247: join-agg IVM ---------------------------------------------------------
 
   test("q247: maintained join-agg view equals the full recompute") {
-    val got = Queries.ivmJoinAgg(spark, sf)
+    val got = EtlQueries.ivmJoinAgg(spark, sf)
     val li = Tables.lineitem(spark, sf)
-      .filter(col("l_shipdate") >= Cols.ntzTs(Queries.IvmJoinCutTs) ||
-        pmod(col("l_linenumber"), lit(Queries.IvmJoinDeleteMod)) =!= 0)
+      .filter(col("l_shipdate") >= Cols.ntzTs(EtlQueries.IvmJoinCutTs) ||
+        pmod(col("l_linenumber"), lit(EtlQueries.IvmJoinDeleteMod)) =!= 0)
     val o = Tables.orders(spark, sf).select("o_orderkey", "o_custkey")
     val c = Tables.customer(spark, sf).select("c_custkey", "c_nationkey")
     val full = li.join(o, li("l_orderkey") === o("o_orderkey"))
@@ -349,11 +350,11 @@ class Round15Spec extends AnyFunSuite {
   }
 
   test("q249: dim-change IVM equals the star report over the updated dimension") {
-    val got = Queries.ivmDimChange(spark, sf)
+    val got = EtlQueries.ivmDimChange(spark, sf)
     val updated = Tables.customer(spark, sf)
       .select(col("c_custkey"),
-        when(pmod(col("c_custkey"), lit(Queries.DimChangeMod)) === 0,
-          pmod(col("c_nationkey") + Queries.DimChangeShift, lit(25)))
+        when(pmod(col("c_custkey"), lit(EtlQueries.DimChangeMod)) === 0,
+          pmod(col("c_nationkey") + EtlQueries.DimChangeShift, lit(25)))
           .otherwise(col("c_nationkey")).as("c_nationkey"))
     val li = Tables.lineitem(spark, sf)
     val o = Tables.orders(spark, sf).select("o_orderkey", "o_custkey")
@@ -369,7 +370,7 @@ class Round15Spec extends AnyFunSuite {
   }
 
   test("q250: the split rollup conserves every verified pair") {
-    val rows = Queries.splitLeakage(spark, sf).collect()
+    val rows = CurationQueries.splitLeakage(spark, sf).collect()
     assert(rows.nonEmpty)
     val total = Queries.verifiedPairs(spark, sf).count()
     assert(rows.map(_.getLong(2)).sum == total,
@@ -379,7 +380,7 @@ class Round15Spec extends AnyFunSuite {
   }
 
   test("q251: cluster-hash split closes the leak the doc-hash split measures") {
-    val assign = Queries.clusterSplitAssign(spark, sf).select("doc_id", "split")
+    val assign = CurationQueries.clusterSplitAssign(spark, sf).select("doc_id", "split")
     val leaks = Queries.verifiedPairs(spark, sf)
       .join(assign.select(col("doc_id").as("doc_a"), col("split").as("sa")),
         "doc_a")
@@ -389,7 +390,7 @@ class Round15Spec extends AnyFunSuite {
     assert(leaks == 0L, s"$leaks near-dup pairs cross the cluster split")
     // and the fixture's doc-hash split DOES leak — the problem is real,
     // not vacuously absent
-    val docLeaks = Queries.splitLeakage(spark, sf)
+    val docLeaks = CurationQueries.splitLeakage(spark, sf)
       .filter(col("split_a") =!= col("split_b"))
       .agg(coalesce(sum("n_pairs"), lit(0L))).head().getLong(0)
     assert(docLeaks > 0L, "fixture sanity: doc-hash split shows no leak to fix")
@@ -424,7 +425,7 @@ class Round15Spec extends AnyFunSuite {
     //   existing edges never appear
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (1L, 5L))
       .toDF("a", "b")
-    val got = Queries.linkPredictionFrom(e, 10, Queries.LinkMaxMiddleDeg)
+    val got = GraphQueries.linkPredictionFrom(e, 10, GraphQueries.LinkMaxMiddleDeg)
       .collect()
       .map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3)))).toMap
     assert(got.keySet == Set((1L, 3L), (2L, 4L), (2L, 5L), (4L, 5L)))
@@ -436,18 +437,18 @@ class Round15Spec extends AnyFunSuite {
   }
 
   test("q254: the recall instrument reads exactly 1.0 on the ground truth itself") {
-    val perfect = Queries.recallAgainstExact(spark, sf,
-      Queries.exactL2TopK(spark, sf)).collect()
-    assert(perfect.length == Queries.AnnQueryMaxId)
+    val perfect = AnnQueries.recallAgainstExact(spark, sf,
+      AnnQueries.exactL2TopK(spark, sf)).collect()
+    assert(perfect.length == AnnQueries.AnnQueryMaxId)
     perfect.foreach { r =>
-      assert(r.getLong(1) == Queries.AnnK && r.getDouble(2) == 1.0,
+      assert(r.getLong(1) == AnnQueries.AnnK && r.getDouble(2) == 1.0,
         s"query ${r.getLong(0)}: instrument reads ${r.getDouble(2)} on truth")
     }
     // and on the real ADC predictions it reads a proper fraction
-    val real = Queries.pqRecall(spark, sf).collect()
-    assert(real.length == Queries.AnnQueryMaxId)
+    val real = AnnQueries.pqRecall(spark, sf).collect()
+    assert(real.length == AnnQueries.AnnQueryMaxId)
     real.foreach { r =>
-      assert(r.getLong(1) >= 0 && r.getLong(1) <= Queries.AnnK &&
+      assert(r.getLong(1) >= 0 && r.getLong(1) <= AnnQueries.AnnK &&
         r.getDouble(2) >= 0.0 && r.getDouble(2) <= 1.0)
     }
   }
@@ -489,7 +490,7 @@ class Round15Spec extends AnyFunSuite {
       // u4: pure signups → empty-match aggregates stay 0, not null
       evs(4L, Seq("signup", "signup"))
     ).toDF("user_id", "ts", "event_id", "event_type")
-    val got = Queries.journeyReport(events).orderBy("user_id").collect()
+    val got = AnalyticsQueries.journeyReport(events).orderBy("user_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     assert(got == Seq(
       (1L, 2L, 6L, 4L),
@@ -529,7 +530,7 @@ class Round15Spec extends AnyFunSuite {
   }
 
   test("q244: segment set covers exactly the pairwise overlaps (no dup segments)") {
-    val rows = Queries.temporalAlign(spark, sf)
+    val rows = EtlQueries.temporalAlign(spark, sf)
     // every closed segment is strictly positive-length, and within a user
     // segments for a fixed (a_type run) never overlap each other:
     // elementary segments tile, they don't stack

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Incremental, Scd}
+import graft.queries._
 
 /** Round-16 contracts: the q255 rescue guard is ALIVE in the executed
   * plan (not pruned — ADVICE r15), signed-delta algebra treats an
@@ -76,13 +77,13 @@ class Round16Spec extends AnyFunSuite {
     // independent wedge 201–202–203 (middle deg 2)
     val edges = ((1L to 10L).map(i => (i, 100L)) ++
       Seq((201L, 202L), (202L, 203L))).toDF("a", "b")
-    val capped = Queries.linkPredictionFrom(edges, topK = 100, maxMiddleDeg = 5L)
+    val capped = GraphQueries.linkPredictionFrom(edges, topK = 100, maxMiddleDeg = 5L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     // hub-mediated spoke pairs are gone; the bounded wedge remains, and
     // pref_attach still uses TRUE degrees (quarantine bounds wedge
     // enumeration, not the degree table)
     assert(capped.toSeq == Seq((201L, 203L, 1L, 1L)), capped.mkString(","))
-    val uncapped = Queries.linkPredictionFrom(edges, topK = 100,
+    val uncapped = GraphQueries.linkPredictionFrom(edges, topK = 100,
       maxMiddleDeg = 100L).collect()
     // cap lifted: the hub mediates all C(10,2) spoke pairs again
     assert(uncapped.length == 45 + 1, uncapped.length.toString)
@@ -90,12 +91,12 @@ class Round16Spec extends AnyFunSuite {
 
   test("q253: LinkMaxMiddleDeg is non-binding on the fixture co-purchase graph") {
     val e = Queries.copurchaseEdges(spark, sf)
-      .filter(col("n_baskets") >= Queries.CoMinSupport)
+      .filter(col("n_baskets") >= AnalyticsQueries.CoMinSupport)
       .select(col("item_a").as("a"), col("item_b").as("b"))
     val maxDeg = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
       .groupBy("a").agg(count(lit(1)).as("deg"))
       .agg(max(col("deg"))).head().getLong(0)
-    assert(maxDeg <= Queries.LinkMaxMiddleDeg,
+    assert(maxDeg <= GraphQueries.LinkMaxMiddleDeg,
       s"fixture max degree $maxDeg exceeds the quarantine cap — the gate " +
         "output would change; re-derive the cap")
   }
@@ -107,7 +108,7 @@ class Round16Spec extends AnyFunSuite {
     val organic = Seq((2L, 1L, 10L, "view"), (2L, 2L, 11L, "purchase"))
     val bot = (1L to 6L).map(i => (1L, i + 10L, i, "view"))
     val df = (organic ++ bot).toDF("user_id", "ts", "event_id", "event_type")
-    val got = Queries.journeyReport(df, maxEvents = 5L)
+    val got = AnalyticsQueries.journeyReport(df, maxEvents = 5L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     // bot (6 events > cap 5) dropped WHOLE — not truncated; organic user
     // 2's v→p journey matches
@@ -118,7 +119,7 @@ class Round16Spec extends AnyFunSuite {
     val maxN = Tables.events(spark, sf)
       .groupBy("user_id").agg(count(lit(1)).as("n"))
       .agg(max(col("n"))).head().getLong(0)
-    assert(maxN <= Queries.JourneyMaxEvents,
+    assert(maxN <= AnalyticsQueries.JourneyMaxEvents,
       s"fixture max per-user events $maxN exceeds the cap — the gate " +
         "output would change; re-derive the cap")
   }
@@ -161,7 +162,7 @@ class Round16Spec extends AnyFunSuite {
 
   test("q258: incremental merge fold ≡ full rebuild; redelivery is idempotent") {
     val slice = exceptSlice
-    val cut = lit(Queries.SplitTs).cast("timestamp")
+    val cut = lit(EtlQueries.SplitTs).cast("timestamp")
     val b1 = slice.filter(col("ts") < cut)
     val b2 = slice.filter(col("ts") >= cut)
     val keys = Seq("user_id")
@@ -182,19 +183,19 @@ class Round16Spec extends AnyFunSuite {
   // --- q259/q260: trained residual codebook ---------------------------------
 
   test("q259: Lloyd rounds reduce total assignment distortion on the fixture") {
-    val subDim = graft.functions.Lsh.Dim / Queries.PqSub
+    val subDim = graft.functions.Lsh.Dim / AnnQueries.PqSub
     val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
         col("label"))
-    val corpus = emb.filter(col("vec_id") >= Queries.AnnQueryMaxId)
+    val corpus = emb.filter(col("vec_id") >= AnnQueries.AnnQueryMaxId)
     val means = graft.operators.Ivf.meanCentroids(corpus, "v", "label")
-    val (res, cb) = Queries.residualsAndCodebook(corpus, means)
-    val sub = Queries.subspaceFrame(res, subDim).persist()
-    val seed = Queries.seedSubCodebook(cb, subDim)
-    val trained = Queries.trainSubCodebook(sub, seed, Queries.ResTrainIters)
+    val (res, cb) = AnnQueries.residualsAndCodebook(corpus, means)
+    val sub = AnnQueries.subspaceFrame(res, subDim).persist()
+    val seed = AnnQueries.seedSubCodebook(cb, subDim)
+    val trained = AnnQueries.trainSubCodebook(sub, seed, AnnQueries.ResTrainIters)
     def distortion(cbSub: IndexedSeq[IndexedSeq[Seq[Double]]]): Double =
-      Queries.assignSubCodes(sub,
-        Queries.subCodebookDf(spark, cbSub))
+      AnnQueries.assignSubCodes(sub,
+        AnnQueries.subCodebookDf(spark, cbSub))
         .agg(sum(col("dist2"))).head().getDouble(0)
     val d0 = distortion(seed)
     val dT = distortion(trained)
@@ -212,12 +213,12 @@ class Round16Spec extends AnyFunSuite {
     // untrained 0.4, while at sf0.01 it reads 0.12 vs 0.08), so the
     // contract pinned here is the INSTRUMENT's: every query present,
     // hits within [0, k], recall = n_hits/k exactly
-    val rows = Queries.trainedRecall(spark, sf).collect()
-    assert(rows.length == Queries.AnnQueryMaxId)
+    val rows = AnnQueries.trainedRecall(spark, sf).collect()
+    assert(rows.length == AnnQueries.AnnQueryMaxId)
     rows.foreach { r =>
       val hits = r.getLong(1)
-      assert(hits >= 0 && hits <= Queries.AnnK, r.toString)
-      assert(r.getDouble(2) == hits.toDouble / Queries.AnnK, r.toString)
+      assert(hits >= 0 && hits <= AnnQueries.AnnK, r.toString)
+      assert(r.getDouble(2) == hits.toDouble / AnnQueries.AnnK, r.toString)
     }
   }
 
@@ -231,7 +232,7 @@ class Round16Spec extends AnyFunSuite {
       .toDF("vec_id", "subspace", "sv")
       .withColumn("label", lit(0))
     val seed = IndexedSeq(IndexedSeq(Seq(0.5, 0.5), Seq(100.0, 100.0)))
-    val trained = Queries.trainSubCodebook(sub, seed, iters = 1)
+    val trained = AnnQueries.trainSubCodebook(sub, seed, iters = 1)
     assert(trained(0)(1) == Seq(100.0, 100.0),
       s"memberless code moved: ${trained(0)(1)}")
     // the member code's centroid is the floor-grid mean of (1,1),(1,1),(1,1.25)
@@ -267,7 +268,7 @@ class Round16Spec extends AnyFunSuite {
   test("q262: the trailing-window register max equals the union sketch exactly") {
     import spark.implicits._
     import graft.functions.Sketches
-    val m = Queries.HllSlideM
+    val m = SketchQueries.HllSlideM
     val d1 = java.sql.Date.valueOf("2024-01-01")
     val d2 = java.sql.Date.valueOf("2024-01-02")
     val ev = ((1L to 20L).map(u => (u, d1)) ++ (21L to 40L).map(u => (u, d2)))
@@ -295,7 +296,7 @@ class Round16Spec extends AnyFunSuite {
 
   test("q264: planted supplies allocate the exact closed form") {
     import spark.implicits._
-    val got = Queries.waterfillFrom(
+    val got = CurationQueries.waterfillFrom(
       Seq(("a", 10L), ("b", 20L), ("c", 100L)).toDF("source", "supply_tokens"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getBoolean(3)))
@@ -308,35 +309,35 @@ class Round16Spec extends AnyFunSuite {
     import spark.implicits._
     // budget = 18 div 2 = 9 over supplies 5,6,7: nobody fits whole
     // (5+5·2=15 > 9) → level 3, remainder 0 → 3,3,3
-    val even = Queries.waterfillFrom(
+    val even = CurationQueries.waterfillFrom(
       Seq(("x", 5L), ("y", 6L), ("z", 7L)).toDF("source", "supply_tokens"))
       .collect().map(r => (r.getString(0), r.getLong(2)))
     assert(even.toSeq == Seq(("x", 3L), ("y", 3L), ("z", 3L)),
       even.mkString(","))
     // budget = 20 div 2 = 10 → level 3 rem 1: the asc-first source
     // takes the extra token, Σ = 10 exactly
-    val rem = Queries.waterfillFrom(
+    val rem = CurationQueries.waterfillFrom(
       Seq(("x", 5L), ("y", 6L), ("z", 9L)).toDF("source", "supply_tokens"))
       .collect().map(r => (r.getString(0), r.getLong(2)))
     assert(rem.map(_._2).sum == 10L, rem.mkString(","))
     assert(rem.toSeq == Seq(("x", 4L), ("y", 3L), ("z", 3L)),
       rem.mkString(","))
     // fixture invariants: Σ alloc ≡ budget (= total div 2), alloc ≤ supply
-    val fix = Queries.budgetWaterfill(spark, sf).collect()
+    val fix = CurationQueries.budgetWaterfill(spark, sf).collect()
     val total = fix.map(_.getLong(1)).sum
-    assert(fix.map(_.getLong(2)).sum == total / Queries.WaterfillDen)
+    assert(fix.map(_.getLong(2)).sum == total / CurationQueries.WaterfillDen)
     fix.foreach(r => assert(r.getLong(2) <= r.getLong(1), r.toString))
   }
 
   // --- q263: left-outer stream interval join --------------------------------
 
   test("q263: unmatched purchases emit null-click rows; matches equal the inner join") {
-    val out = Queries.streamedIntervalLeftJoin(spark, sf)
+    val out = StreamingQueries.streamedIntervalLeftJoin(spark, sf)
     val rows = out.collect()
     val matched = rows.filter(!_.isNullAt(3))
     val unmatched = rows.filter(_.isNullAt(3))
     // the outer join's matched subset IS the inner join...
-    val inner = Queries.streamedIntervalJoin(spark, sf).collect()
+    val inner = StreamingQueries.streamedIntervalJoin(spark, sf).collect()
     assert(matched.length == inner.length,
       s"matched ${matched.length} != inner ${inner.length}")
     // ...and every purchase appears exactly once among (match-keys ∪ unmatched)
@@ -362,7 +363,7 @@ class Round16Spec extends AnyFunSuite {
     val expect = ev.groupBy("user_id")
       .agg(min(unix_micros(col("ts"))).as("f"))
       .agg(sum(lit(close) - col("f"))).head().getLong(0)
-    val rep = Queries.timeInState(spark, sf)
+    val rep = AnalyticsQueries.timeInState(spark, sf)
     val got = rep.agg(sum(col("micros_in_state"))).head().getLong(0)
     assert(got == expect, s"$got != $expect")
     val shares = rep.agg(sum(col("share"))).head().getDouble(0)
@@ -372,13 +373,13 @@ class Round16Spec extends AnyFunSuite {
   // --- q266: Neyman allocation invariants -----------------------------------
 
   test("q266: allocations sum to the budget and sit within 1 of the exact share") {
-    val rep = Queries.neymanAllocation(spark, sf).collect()
-    assert(rep.map(_.getLong(3)).sum == Queries.NeymanBudget)
+    val rep = CurationQueries.neymanAllocation(spark, sf).collect()
+    assert(rep.map(_.getLong(3)).sum == CurationQueries.NeymanBudget)
     // largest-remainder property: every allocation is floor or ceil of
     // its exact share — recompute the share from the reported columns
     val wsum = rep.map(r => r.getLong(1).toDouble * r.getDouble(2)).sum
     rep.foreach { r =>
-      val exact = Queries.NeymanBudget.toDouble *
+      val exact = CurationQueries.NeymanBudget.toDouble *
         (r.getLong(1).toDouble * r.getDouble(2)) / wsum
       val a = r.getLong(3).toDouble
       assert(a >= math.floor(exact) && a <= math.floor(exact) + 1.0,
@@ -389,21 +390,21 @@ class Round16Spec extends AnyFunSuite {
   // --- q267: SRM check formula ----------------------------------------------
 
   test("q267: chi-square column is exactly (a-b)^2/(a+b) and gates the flag") {
-    Queries.srmCheck(spark, sf).collect().foreach { r =>
+    AnalyticsQueries.srmCheck(spark, sf).collect().foreach { r =>
       val (a, b) = (r.getLong(1), r.getLong(2))
       val chi2 = ((a - b) * (a - b)).toDouble / (a + b).toDouble
       assert(r.getDouble(3) == chi2, r.toString)
-      assert(r.getBoolean(4) == (chi2 > Queries.SrmCritical), r.toString)
+      assert(r.getBoolean(4) == (chi2 > AnalyticsQueries.SrmCritical), r.toString)
     }
   }
 
   // --- q268/q269: streaming window algebra ----------------------------------
 
   test("q268: each flushed sliding cell equals the sum of its member tumbling days") {
-    val slide = Queries.streamedSlidingAgg(spark, sf).collect()
+    val slide = StreamingQueries.streamedSlidingAgg(spark, sf).collect()
       .map(r => ((r.getTimestamp(0), r.getString(2)),
         (r.getLong(3), r.getLong(4)))).toMap
-    val daily = Queries.streamedDailyAgg(spark, sf).collect()
+    val daily = StreamingQueries.streamedDailyAgg(spark, sf).collect()
       .map(r => ((r.getTimestamp(0), r.getString(2)),
         (r.getLong(3), r.getLong(4))))
     assert(slide.nonEmpty && daily.nonEmpty)
@@ -429,8 +430,8 @@ class Round16Spec extends AnyFunSuite {
   }
 
   test("q269: full outer = left outer plus purchase-less clicks") {
-    val full = Queries.streamedIntervalFullJoin(spark, sf)
-    val left = Queries.streamedIntervalLeftJoin(spark, sf)
+    val full = StreamingQueries.streamedIntervalFullJoin(spark, sf)
+    val left = StreamingQueries.streamedIntervalLeftJoin(spark, sf)
     // the purchase-bearing subset of the full join IS the left join
     val purchSide = full.filter(col("purchase_id").isNotNull)
     assert(purchSide.exceptAll(left).count() == 0 &&
@@ -448,7 +449,7 @@ class Round16Spec extends AnyFunSuite {
   }
 
   test("q258: validity audit — no overlaps, no gaps, exactly one current per key") {
-    val scd = Queries.scd2TrackedExcept(spark, sf)
+    val scd = AnalyticsQueries.scd2TrackedExcept(spark, sf)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("effective_from"), col("event_id"))
     val bad = scd

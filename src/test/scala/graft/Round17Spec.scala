@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Scc, SuffixSpans}
+import graft.queries._
 
 /** Round-17 contracts (VERDICT r16 directives). */
 class Round17Spec extends AnyFunSuite {
@@ -24,7 +25,7 @@ class Round17Spec extends AnyFunSuite {
       (20L, 30L), (30L, 31L), (31L, 32L),    // out-tendril core→30→31→32
       (40L, 40L)                             // self-loop singleton
     ).toDF("src", "dst")
-    val basket = Queries.basketEdges(spark, sf)
+    val basket = GraphQueries.basketEdges(spark, sf)
     for (edges <- Seq(planted, basket)) {
       val trimmed = Scc.components(edges)
       val colored = Scc.components(edges, maxTrimRounds = 0)
@@ -37,17 +38,17 @@ class Round17Spec extends AnyFunSuite {
   // --- directive 1: the clustered ANN operating point ------------------------------
 
   test("cfx fixture is clustered: separation >> spread, and exact top-k stays in-cluster") {
-    val rep = Queries.cfxFixtureReport(spark, sf).collect()
-    assert(rep.length == Queries.CfxClusters)
+    val rep = AnnQueries.cfxFixtureReport(spark, sf).collect()
+    assert(rep.length == AnnQueries.CfxClusters)
     val maxWithin = rep.map(_.getDouble(2)).max
     val minInter = rep.map(_.getDouble(3)).min
     assert(minInter > 100 * maxWithin,
       s"planted mixture must separate: min inter $minInter vs within $maxWithin")
     // the clustered-regime consequence the recall rows rely on: every
     // exact L2 neighbor shares its query's planted cluster
-    val emb = Queries.clusteredEmbeddings(spark, sf)
+    val emb = AnnQueries.clusteredEmbeddings(spark, sf)
     val lab = emb.select(col("vec_id"), col("label"))
-    val crossCluster = Queries.exactL2TopKFrom(emb)
+    val crossCluster = AnnQueries.exactL2TopKFrom(emb)
       .join(lab.withColumnRenamed("vec_id", "query_id")
         .withColumnRenamed("label", "ql"), "query_id")
       .join(lab, "vec_id")
@@ -56,8 +57,8 @@ class Round17Spec extends AnyFunSuite {
   }
 
   test("cfx recall instrument reads 1.0 on the ground truth itself") {
-    val truth = Queries.exactL2TopKFrom(Queries.clusteredEmbeddings(spark, sf))
-    val r = Queries.recallOf(truth, truth).collect()
+    val truth = AnnQueries.exactL2TopKFrom(AnnQueries.clusteredEmbeddings(spark, sf))
+    val r = AnnQueries.recallOf(truth, truth).collect()
     assert(r.nonEmpty && r.forall(_.getDouble(2) == 1.0))
   }
 
@@ -66,9 +67,9 @@ class Round17Spec extends AnyFunSuite {
     // nprobe ≪ lists for the trained-residual encode, strictly above
     // the raw encode at the identical code budget and training.
     // (Deterministic fixture: sf0.001 reads 0.92 avg vs 0.80 avg.)
-    assert(Queries.CfxNProbe * 8 <= Queries.CfxClusters, "nprobe must be << lists")
-    val tr = Queries.cfxTrainedRecall(spark, sf).collect()
-    val rw = Queries.cfxRawRecall(spark, sf).collect()
+    assert(AnnQueries.CfxNProbe * 8 <= AnnQueries.CfxClusters, "nprobe must be << lists")
+    val tr = AnnQueries.cfxTrainedRecall(spark, sf).collect()
+    val rw = AnnQueries.cfxRawRecall(spark, sf).collect()
     val trAvg = tr.map(_.getDouble(2)).sum / tr.length
     val rwAvg = rw.map(_.getDouble(2)).sum / rw.length
     assert(trAvg >= 0.8, s"trained-residual recall@5 avg $trAvg below the usable bar")
@@ -89,7 +90,7 @@ class Round17Spec extends AnyFunSuite {
     val gib = (100L, "en",
       "zq wv xj kl mn bp rs tu vg fh cd ey oa iu qz wx jv lk nm pb sr ut")
     val docs = (fluent :+ gib).toDF("doc_id", "lang", "text")
-    val out = Queries.knPerplexityFrom(docs).collect()
+    val out = CurationQueries.knPerplexityFrom(docs).collect()
       .map(r => (r.getLong(0), r.getDouble(4), r.getLong(5))).toList
     val (gibRows, fluentRows) = out.partition(_._1 == 100L)
     assert(gibRows.size == 1 && fluentRows.size == 6)
@@ -107,7 +108,7 @@ class Round17Spec extends AnyFunSuite {
     //   P(c|a) = num (4·1−3)·2 + 3·2·1 = 8, den 32 → P=0.25 → bits=2
     val docs = Seq((1L, "en", "a b"), (2L, "en", "a b"), (3L, "en", "a b"),
       (4L, "en", "a c")).toDF("doc_id", "lang", "text")
-    val out = Queries.knPerplexityFrom(docs).collect()
+    val out = CurationQueries.knPerplexityFrom(docs).collect()
       .map(r => (r.getLong(0), r.getLong(3))).toMap
     assert(out(1L) == 0L && out(2L) == 0L && out(3L) == 0L && out(4L) == 2L,
       s"hand-computed bits mismatch: $out")
@@ -227,10 +228,10 @@ class Round17Spec extends AnyFunSuite {
   }
 
   test("3-D probe panel: control row scans everything, point probes stay tiny, manifests cover all rows") {
-    val rep = Queries.hilbert3PruningCompare(spark, sf)
+    val rep = RuntimeQueries.hilbert3PruningCompare(spark, sf)
       .orderBy("probe_id").collect()
     assert(rep.length == 6)
-    val man = Queries.zorder3Manifest(spark, sf)
+    val man = RuntimeQueries.zorder3Manifest(spark, sf)
     val (totBlocks, totRows) = (man.count(),
       man.agg(sum("n_rows")).head().getLong(0))
     val full = rep.last // probe 6: the full-grid control row
@@ -256,10 +257,10 @@ class Round17Spec extends AnyFunSuite {
     val docs = Seq((1L, "aaab aaab"), (2L, "aaab ab"), (3L, "ab"))
       .toDF("doc_id", "text")
     // premise: the trained merges are exactly ((a,a),(a,b))
-    val merges = Queries.bpeMergesFrom(spark, docs, col("text"), 2)
+    val merges = TextQueries.bpeMergesFrom(spark, docs, col("text"), 2)
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
     assert(merges == Seq(("a", "a"), ("a", "b")), s"merges: $merges")
-    val got = Queries.bpeEncodeFrom(spark, docs, 2).collect()
+    val got = CurationQueries.bpeEncodeFrom(spark, docs, 2).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     // doc1: 2 words x 2 tokens; doc2: 2+1; doc3: 1
     assert(got == Map(1L -> (2L, 4L), 2L -> (2L, 3L), 3L -> (1L, 1L)),
@@ -278,7 +279,7 @@ class Round17Spec extends AnyFunSuite {
     val d4 = "totally unique text with no repeats at all ......."
     val docs = Seq((1L, d1), (2L, d2), (3L, d3), (4L, d4))
       .toDF("doc_id", "text")
-    val got = Queries.dedupExciseFrom(docs).collect()
+    val got = DedupQueries.dedupExciseFrom(docs).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3))))
       .toMap
     assert(got(1L) == ((2L, 32L, "XYZ")),
@@ -303,7 +304,7 @@ class Round17Spec extends AnyFunSuite {
     val beyond = "T" * 104 // past SuffixMaxChars = 512: never analyzed
     val docs = Seq((1L, s"$run$filler$beyond"), (2L, s"$run-pad"))
       .toDF("doc_id", "text")
-    val got = Queries.dedupExciseFrom(docs).collect()
+    val got = DedupQueries.dedupExciseFrom(docs).collect()
       .map(r => r.getLong(0) -> r.getString(3)).toMap
     assert(got(1L) == filler + beyond,
       "only the shared run is cut; the beyond-cap tail survives verbatim")
@@ -330,20 +331,20 @@ class Round17Spec extends AnyFunSuite {
       // charges the smoothing floor for every bigram
       (901L, "zz qq xx vv ww zz qq xx vv ww", "fr"))
     val docs = (seed ++ junkPool ++ probes).toDF("doc_id", "text", "lang")
-    val got = Queries.dsirWeightsFrom(docs).collect()
+    val got = CurationQueries.dsirWeightsFrom(docs).collect()
       .map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3))).toMap
     assert(got(1)._1 == 9, "10 words must yield 9 bigram occurrences")
     assert(got(900L)._2 > 0, s"target-like content must save bits, got ${got(900L)}")
     assert(got(901L)._2 < 0, s"junk content must cost bits, got ${got(901L)}")
     assert(got(900L)._2 > got(901L)._2 + 8,
       "the target-vs-junk gap must dwarf the 1-bit bucket quantization")
-    val sel = Queries.dsirSelect(spark, sf).collect()
+    val sel = CurationQueries.dsirSelect(spark, sf).collect()
     assert(sel.nonEmpty)
     // the selection is a valid prefix: budget respected for every kept
     // doc, cumulative sums self-consistent
     sel.foreach { r =>
       assert(r.getAs[Long]("cum_tokens") - r.getAs[Long]("tokens")
-        < Queries.DsirTokenBudget)
+        < CurationQueries.DsirTokenBudget)
     }
     assert(sel.map(_.getAs[Long]("tokens")).sum ==
       sel.map(_.getAs[Long]("cum_tokens")).max,

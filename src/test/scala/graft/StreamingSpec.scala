@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming._
+import graft.queries._
 
 /** Streaming components driven end-to-end with real `availableNow` runs:
   * parquet landing dirs play the cloud-files source, checkpoints carry
@@ -16,8 +17,8 @@ class StreamingSpec extends AnyFunSuite {
 
   private val eventCols = Seq("user_id", "event_id", "event_type", "value", "ts")
   private lazy val ev = Tables.events(spark, sf).select(eventCols.map(col): _*)
-  private lazy val half1 = ev.filter(col("ts") <= Cols.utcTs(Queries.SplitTs))
-  private lazy val half2 = ev.filter(col("ts") > Cols.utcTs(Queries.SplitTs))
+  private lazy val half1 = ev.filter(col("ts") <= Cols.utcTs(EtlQueries.SplitTs))
+  private lazy val half2 = ev.filter(col("ts") > Cols.utcTs(EtlQueries.SplitTs))
 
   private def tmp(): String = TestSession.tempDir("graft_stream")
 
@@ -104,7 +105,7 @@ class StreamingSpec extends AnyFunSuite {
     half2.write.mode("append").parquet(src)
     run()
     val got = graft.sources.Snapshots.read(spark, target).select(eventCols.map(col): _*)
-    val exp = Queries.scd1Latest(spark, sf).select(eventCols.map(col): _*)
+    val exp = EtlQueries.scd1Latest(spark, sf).select(eventCols.map(col): _*)
     assert(got.except(exp).count() == 0 && exp.except(got).count() == 0)
   }
 
@@ -149,7 +150,7 @@ class StreamingSpec extends AnyFunSuite {
     // A 10-year lateness keeps the watermark behind every event, so no
     // open tail is flushed by the TTL: this test isolates the fold logic
     // (closed-session convergence); eviction has its own churn spec below.
-    val q = SessionizeStream.sessionize(stream, Queries.SessionGapMicros,
+    val q = SessionizeStream.sessionize(stream, AnalyticsQueries.SessionGapMicros,
         lateness = "3650 days")
       .writeStream.format("memory").queryName("graft_sessions")
       .option("checkpointLocation", s"$dir/cp")
@@ -160,7 +161,7 @@ class StreamingSpec extends AnyFunSuite {
     // one batch closes every session except each key's open tail
     val batch = operators.Sessionize.sessions(
       Tables.events(spark, sf).select("user_id", "event_id", "ts", "value"),
-      "user_id", "ts", Seq("event_id"), "value", Queries.SessionGapMicros)
+      "user_id", "ts", Seq("event_id"), "value", AnalyticsQueries.SessionGapMicros)
     val lastSeq = batch.groupBy("user_id").agg(max("session_seq").as("last_seq"))
     val expected = batch.join(lastSeq, "user_id")
       .filter(col("session_seq") < col("last_seq"))
@@ -180,12 +181,12 @@ class StreamingSpec extends AnyFunSuite {
     val (idxPath, corpusPath) = (s"$dir/index", s"$dir/corpus")
     val docs = Tables.documents(spark, sf)
     val mid = 250L
-    val t = Queries.JaccardThreshold
+    val t = DedupQueries.JaccardThreshold
     def run(): Unit =
       IngestPipeline.boundedFileStream(spark, src, docs.schema)
         .writeStream
         .foreachBatch(StreamingNearDup.dedupSink(idxPath, corpusPath,
-          "doc_id", "text", Queries.JaccardN, t) _)
+          "doc_id", "text", DedupQueries.JaccardN, t) _)
         .option("checkpointLocation", cp)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start().awaitTermination()
@@ -197,7 +198,7 @@ class StreamingSpec extends AnyFunSuite {
     // Expected: replay the sink's documented drop rule with the batch
     // operators — drop d when a pair (p, d) exists with p in the same
     // batch, or p admitted to the index by an earlier batch.
-    val pairs = operators.NearDup.minHashLshPairs(docs, "doc_id", "text", Queries.JaccardN)
+    val pairs = operators.NearDup.minHashLshPairs(docs, "doc_id", "text", DedupQueries.JaccardN)
       .filter(col("est_jaccard") >= t)
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -246,7 +247,7 @@ class StreamingSpec extends AnyFunSuite {
     val stats = (0 until batches).map { b =>
       val t0 = System.nanoTime()
       StreamingNearDup.dedupSink(idxPath, corpusPath, "doc_id", "text",
-        Queries.JaccardN, Queries.JaccardThreshold)(batchDocs(b, size), b.toLong)
+        DedupQueries.JaccardN, DedupQueries.JaccardThreshold)(batchDocs(b, size), b.toLong)
       val secs = (System.nanoTime() - t0) / 1e9
       val seg = graft.sources.Snapshots.logSegments(spark, idxPath).get.last
       val segBytes = {
@@ -317,7 +318,7 @@ class StreamingSpec extends AnyFunSuite {
     val got = emitted.join(last, Seq("user", "batch"))
       .select(col("user").as("user_id"), col("stage"),
         col("view_micros"), col("click_micros"), col("purchase_micros"))
-    val exp = Queries.funnel(spark, sf)
+    val exp = AnalyticsQueries.funnel(spark, sf)
       .select(col("user_id"), col("stage"),
         unix_micros(col("view_ts")).as("view_micros"),
         unix_micros(col("click_ts")).as("click_micros"),
@@ -613,7 +614,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming CMS: committed per-batch counters finalize to the batch sketch") {
     val dir = tmp()
     val (src, cp, store) = (s"$dir/src", s"$dir/cp", s"$dir/cms")
-    val (depth, width) = (Queries.CmsDepth, Queries.CmsWidth)
+    val (depth, width) = (SketchQueries.CmsDepth, SketchQueries.CmsWidth)
     def fp(c: org.apache.spark.sql.Column) = graft.functions.Sketches.keyHash(c)
     // Same contract as the histogram sketch: each micro-batch commits ONLY
     // its own depth×width partial cells (O(batch) work, O(d·w) rows);
@@ -710,7 +711,7 @@ class StreamingSpec extends AnyFunSuite {
     half2.write.mode("append").parquet(src)
     run()
     val got = graft.sources.Snapshots.read(spark, target).select(outCols.map(col): _*)
-    val exp = Queries.scd2Build(spark, sf).select(outCols.map(col): _*)
+    val exp = EtlQueries.scd2Build(spark, sf).select(outCols.map(col): _*)
     assert(got.except(exp).count() == 0 && exp.except(got).count() == 0)
   }
 }
