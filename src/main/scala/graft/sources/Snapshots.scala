@@ -1,8 +1,13 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.{HadoopReadOptions, ParquetReadOptions}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Crash-safe parquet snapshot store: a manifest-pointer commit protocol
   * with never-zero live copies, in three flavors:
@@ -249,7 +254,7 @@ object Snapshots {
 
   private def readResolved(spark: SparkSession, target: String, v: Long): DataFrame = {
     readManifest(spark, target, v) match {
-      case WholeTable(name) => spark.read.parquet(new Path(target, name).toString)
+      case WholeTable(name) => readDirs(spark, Seq(new Path(target, name)))
       case Bucketed(_, entries) =>
         // a legally-published manifest can reference zero buckets (every
         // touched bucket merged to zero rows, nothing carried) — mirror
@@ -263,7 +268,7 @@ object Snapshots {
         val live = segments.filter(_.rows > 0)
         require(live.nonEmpty, s"log store at $target holds no rows yet " +
           "(only empty segments) — guard reads with totalRows > 0")
-        spark.read.parquet(live.map(s => new Path(target, s.dir).toString): _*)
+        readDirs(spark, live.map(s => new Path(target, s.dir)))
     }
   }
 
@@ -273,7 +278,36 @@ object Snapshots {
   def readEntries(spark: SparkSession, target: String,
                   entries: Seq[BucketEntry]): DataFrame = {
     require(entries.nonEmpty, "readEntries needs at least one bucket entry")
-    spark.read.parquet(entries.map(e => new Path(target, e.dir).toString): _*)
+    readDirs(spark, entries.map(e => new Path(target, e.dir)))
+  }
+
+  /** Read the parquet data under `dirs` with the schema `storedSchema`
+    * finds, so the read launches no schema-inference job.
+    */
+  private def readDirs(spark: SparkSession, dirs: Seq[Path]): DataFrame =
+    storedSchema(spark, dirs).fold(spark.read)(spark.read.schema)
+      .parquet(dirs.map(_.toString): _*)
+
+  /** The logical schema a plain `spark.read.parquet(dirs)` would infer,
+    * taken in this process from the footer of the file that inference
+    * reads (the first data file by path): the Spark row-metadata JSON
+    * every Spark parquet write stores. Inference would spend a one-task
+    * Spark job on that same footer. None when the file carries no such
+    * JSON (a foreign writer); the reader then infers as usual.
+    */
+  private def storedSchema(spark: SparkSession, dirs: Seq[Path]): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = dirs.head.getFileSystem(conf)
+    val first = dirs.iterator.filter(fs.exists).flatMap(fs.listStatus(_).iterator)
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .minByOption(_.getPath.toString)
+    first.flatMap { f =>
+      val json = withFooter(f, conf, HadoopReadOptions.builder(conf).build())(r => Option(
+        r.getFooter.getFileMetaData.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY)))
+      json.flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption.collect {
+        case st: StructType => st })
+    }
   }
 
   /** Bounded attempts for optimistic-concurrency loops: version CAS
@@ -687,17 +721,21 @@ object Snapshots {
     * read every live bucket, rewrite all of them into `snap-<v+1>`, and
     * publish a manifest whose entries all point there (row counts carry
     * over — the data is unchanged). Readers stay consistent throughout
-    * (same protocol). Cost is one full-table rewrite; callers amortize it
-    * with `maybeCompact`.
+    * (same protocol). Cost is one scan of the live bucket dirs plus one
+    * partitioned write, so the number of Spark jobs does not depend on the
+    * bucket count; callers amortize the full-table rewrite with
+    * `maybeCompact`.
     */
   def compactBuckets(spark: SparkSession, target: String): Unit =
     currentBuckets(spark, target).foreach { case (numBuckets, entries) =>
       if (entries.nonEmpty) {
-        // each bucket dir re-tagged with its bucket id so one partitioned
-        // write routes every row back to the same bucket
-        val full = entries.map { e =>
-          readEntries(spark, target, Seq(e)).withColumn(BucketCol, lit(e.bucket))
-        }.reduce(_ unionByName _)
+        // every row keeps the bucket of the dir its file sits in (the last
+        // `graft_bucket=<b>` segment of the file path), so one partitioned
+        // write routes it back to the same bucket
+        val live = readEntries(spark, target, entries)
+        val full = live.withColumn(BucketCol, regexp_extract(
+          live.metadataColumn("_metadata").getField("file_path"),
+          s"/$BucketCol=([0-9]+)/[^/]+$$", 1).cast("int"))
         val staged = writeBucketSnapshot(full, target)
         // compaction is optional maintenance: a concurrent commit that
         // moves any bucket under it just cancels this pass (the staged
@@ -739,12 +777,17 @@ object Snapshots {
     val fs = dir.getFileSystem(conf)
     def files(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
       .flatMap(s => if (s.isDirectory) files(s.getPath) else Seq(s))
-    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
+    val options = HadoopReadOptions.builder(conf).build()
     files(dir).filter(_.getPath.getName.endsWith(".parquet")).map { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf), options)
-      try f.getPath.getParent.getName -> r.getRecordCount finally r.close()
+      withFooter(f, conf, options)(f.getPath.getParent.getName -> _.getRecordCount)
     }.groupMapReduce(_._1)(_._2)(_ + _)
+  }
+
+  /** Open one parquet file's footer in this process and apply `body`. */
+  private def withFooter[A](f: FileStatus, conf: org.apache.hadoop.conf.Configuration,
+                            options: ParquetReadOptions)(body: ParquetFileReader => A): A = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf), options)
+    try body(r) finally r.close()
   }
 
   /** The bucketed read-merge-write commit both the medallion gold layer
@@ -895,8 +938,7 @@ object Snapshots {
     logSegments(spark, target).foreach { segments =>
       val live = segments.filter(_.rows > 0)
       if (segments.size > 1 && live.nonEmpty) {
-        val dir = writeSnapshot(
-          spark.read.parquet(live.map(s => new Path(target, s.dir).toString): _*), target)
+        val dir = writeSnapshot(readDirs(spark, live.map(s => new Path(target, s.dir))), target)
         val folded = AppendLog(Seq(LogSegment(dir, live.map(_.rows).sum, segments.last.token)))
         // compaction is optional maintenance: publish only over the log it
         // read — a moved log declines and a reaped stage cancels the pass,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.functions.{col, timestamp_micros}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Real-time conversion-funnel tracking via `mapGroupsWithState`: per
   * user, the earliest view → first click after it → first purchase after

@@ -119,7 +119,6 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
   }
 
   test("collision-lever geometry (Sim64) yields exactly the 64-bit-verified subset of q23") {
-    import graft.functions.Lsh
     // Word 1 of Sim64 IS the Sim32 fingerprint, so hamming64 <= 3 implies
     // hamming32 <= 3, and both blockings are pigeonhole-complete at this
     // radius: q62's pairs must be a subset of q23's, found with 2^-16
@@ -205,7 +204,6 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
   test("broadcast-join list assignment matches the literal-kernel path exactly") {
     // The large-k path (plan-size O(1) in k) must assign every vector to the
     // same list as the plan-literal path, including first-wins tie order.
-    import spark.implicits._
     val emb = Tables.embeddings(spark, sf)
     val cents = Ivf.trainKMeans(emb, "vec_id", "embedding",
       k = 10, iters = 2, seedByHash = false)
@@ -769,7 +767,6 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
   }
 
   test("CMS estimates dominate exact counts and counters merge additively") {
-    import spark.implicits._
     import graft.functions.Sketches
     val docs = Tables.documents(spark, sf)
     val words = docs.select(explode(graft.functions.TextAnalysis.words(col("text"))).as("word"))

@@ -201,6 +201,126 @@ class PipelineSpec extends AnyFunSuite {
       Map(0 -> 2L, 1 -> 1L, 2 -> 2L))
   }
 
+  /** A 1000-key store bucketed `numBuckets` ways: one commit of every key,
+    * then one rewriting the keys of each bucket in `later` (one root each).
+    */
+  private def fragmentedStore(target: String, numBuckets: Int, later: Seq[Set[Int]]): Unit = {
+    import spark.implicits._
+    val all = (0L until 1000L).map(k => (k, s"v$k")).toDF("id", "v")
+    def commit(df: org.apache.spark.sql.DataFrame): Unit =
+      Snapshots.mergeCommitBuckets(df, target, Seq("id"), numBuckets)(identity)(
+        (base, u) => base.join(u.select("id"), Seq("id"), "left_anti").unionByName(u))
+    commit(all)
+    later.foreach { bs =>
+      commit(all.filter(Snapshots.bucketOf(Seq("id"), numBuckets).isin(bs.toSeq: _*))
+        .withColumn("v", concat(col("v"), lit("'"))))
+    }
+  }
+
+  /** `body`'s result, the Spark jobs it starts and the tasks of the stages
+    * they submit, told apart by job group on a listener. A marker job in
+    * a second group, started after `body`, flushes the listener queue
+    * (events of one queue arrive in order).
+    */
+  private def sparkWork[A](body: => A): (A, Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageSubmitted}
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    def groupOf(p: java.util.Properties) =
+      Option(p).flatMap(q => Option(q.getProperty("spark.jobGroup.id")))
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groupOf(e.properties).foreach(jobs.add)
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (groupOf(e.properties).contains(group)) tasks.addAndGet(e.stageInfo.numTasks)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val result = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!jobs.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.contains(marker), "the listener never saw the marker job")
+      (result, jobs.toArray.count(_ == group), tasks.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("compaction puts every row back into its own bucket dir") {
+    // a space and a key=value segment in the store path: neither may be
+    // taken for a bucket
+    val target = TestSession.tempDir("graft_compact_place") + "/x=1/gold store/t"
+    fragmentedStore(target, 16, Seq(Set(1, 2, 3), Set(12, 13), Set(0, 15)))
+    val (n, before) = Snapshots.currentBuckets(spark, target).get
+    assert(n == 16 && before.size == 16, s"every bucket holds keys: $before")
+    assert(Snapshots.referencedRoots(spark, target) == 4)
+    val rowsBefore = Snapshots.read(spark, target).collect().toSet
+    Snapshots.compactBuckets(spark, target)
+    val after = Snapshots.currentBuckets(spark, target).get._2
+    assert(Snapshots.referencedRoots(spark, target) == 1)
+    assert(after.map(e => e.bucket -> e.rows) == before.map(e => e.bucket -> e.rows),
+      "per-bucket manifest row counts carry over unchanged")
+    after.foreach { e =>
+      val dir = new org.apache.hadoop.fs.Path(target, e.dir).toString
+      val got = spark.read.parquet(dir)
+        .select(Snapshots.bucketOf(Seq("id"), 16).as("b")).groupBy("b").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      assert(got == Map(e.bucket -> e.rows), s"bucket ${e.bucket} dir ${e.dir} holds $got")
+    }
+    assert(Snapshots.read(spark, target).collect().toSet == rowsBefore)
+  }
+
+  test("compaction job count does not grow with the bucket count") {
+    def compactWork(numBuckets: Int): (Int, Int) = {
+      val target = TestSession.tempDir(s"graft_compact_jobs$numBuckets") + "/t"
+      fragmentedStore(target, numBuckets, Seq(Set(0, 1)))
+      assert(Snapshots.referencedRoots(spark, target) == 2)
+      val (_, jobs, tasks) = sparkWork(Snapshots.compactBuckets(spark, target))
+      assert(Snapshots.referencedRoots(spark, target) == 1)
+      (jobs, tasks)
+    }
+    val ((wideJobs, wideTasks), (narrowJobs, narrowTasks)) = (compactWork(32), compactWork(4))
+    assert(wideJobs == narrowJobs && wideJobs <= 4,
+      s"32 buckets took $wideJobs jobs, 4 buckets took $narrowJobs")
+    // one scan packs the small bucket files into a few read tasks; a
+    // read per bucket would start a task per bucket
+    assert(wideTasks <= 2 * narrowTasks,
+      s"32 buckets took $wideTasks tasks, 4 buckets took $narrowTasks")
+  }
+
+  test("snapshot reads take the schema Spark infers, without a Spark job") {
+    import spark.implicits._
+    val base = TestSession.tempDir("graft_read_schema")
+    val df = (1L to 8L).map { i =>
+      (i, if (i % 2 == 0) null else s"s$i", i * 0.5,
+        if (i % 3 == 0) null else BigDecimal(i) / 4, Seq.fill(i.toInt % 3)(i.toInt))
+    }.toDF("id", "s", "d", "m", "xs")
+      .withColumn("ts", timestamp_seconds(col("id")))
+      .withColumn("st", struct(col("id").as("k"), col("s").as("w")))
+    Snapshots.commit(df, s"$base/whole")
+    Snapshots.mergeCommitBuckets(df, s"$base/bucketed", Seq("id"), 4)(identity)(
+      (b, u) => b.unionByName(u))
+    Snapshots.appendCommit(df, s"$base/log", 1L)
+    Snapshots.appendCommit(df.filter(col("id") === 2L), s"$base/log", 2L)
+    val dirsOf = Map(
+      "whole" -> new java.io.File(s"$base/whole").list().filter(_.startsWith("snap-")).toSeq,
+      "bucketed" -> Snapshots.currentBuckets(spark, s"$base/bucketed").get._2.map(_.dir),
+      "log" -> Snapshots.logSegments(spark, s"$base/log").get.map(_.dir))
+    dirsOf.foreach { case (t, ds) =>
+      assert(ds.size >= (if (t == "whole") 1 else 2), s"$t store dirs $ds")
+      val (read, jobs, _) = sparkWork(Snapshots.read(spark, s"$base/$t"))
+      assert(jobs == 0, s"reading the $t store started $jobs Spark jobs")
+      val plain = spark.read.parquet(ds.map(d => s"$base/$t/$d"): _*)
+      assert(read.schema == plain.schema, s"$t store schema")
+      assert(read.count() == plain.count())
+    }
+  }
+
   test("random batch folds through bucketed commits equal one global latest-wins") {
     import spark.implicits._
     val rnd = new scala.util.Random(19)
