@@ -1,5 +1,31 @@
 package graft
 object Bench {
+  /** One measured block: median seconds (-1 on failure), GC ms and heap
+    * peak over the timed runs, the executor task deltas (run ms, GC ms,
+    * spill bytes, shuffle-read bytes) and the first failure, if any.
+    */
+  private final case class Block(sec: Double, gcMs: Long, heapPeakMb: Long,
+                                 task: Seq[Long], error: Option[String]) {
+    /** `,"error":"..."` on a failed block, empty otherwise. */
+    def errorField: String = error.fold("")(e => s""","error":${jsonString(e)}""")
+  }
+
+  /** Class and first message line of a failure, bounded so a per-query
+    * line stays short.
+    */
+  private def describe(e: Throwable): String = {
+    val msg = Option(e.getMessage).map(_.linesIterator.nextOption().getOrElse("")).getOrElse("")
+    s"${e.getClass.getName}: $msg".take(300)
+  }
+
+  private def jsonString(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local()
@@ -28,8 +54,9 @@ object Bench {
           org.apache.spark.sql.functions.col("__h"))).head()
     }
     if (new java.io.File(warmDir).isDirectory)
-      queries.foreach { case (_, fn) =>
-        try forceEval(fn(spark, warmDir)) catch { case _: Throwable => () }
+      queries.foreach { case (name, fn) =>
+        try forceEval(fn(spark, warmDir))
+        catch { case e: Throwable => System.err.println(s"warmup $name failed: ${describe(e)}") }
       }
     // Median of 3 timed runs per query AFTER one untimed run at the target
     // SF (JMH-style: warm up, then measure steady state, consecutively).
@@ -128,12 +155,21 @@ object Bench {
       spark.catalog.clearCache()
       System.gc()
     }
-    val results = queries.map { case (name, fn) =>
-      var failed = false
+    // One measurement block, the protocol shared by the suite loop and
+    // the adjudication re-run: equal-footing sweep, one untimed run,
+    // GC, bus drain, three timed runs, bus drain; median of the three,
+    // or -1 if any run threw (a throwing query must not record its
+    // fast elapsed time as a valid sample — that reads as a speedup).
+    // The FIRST exception's class and message ride along so the row
+    // says why it failed.
+    def measure(fn: (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame): Block = {
       sweep()
+      var error: Option[String] = None
       def run(): Double = {
         val t0 = System.nanoTime()
-        try { forceEval(fn(spark, sfDir)) } catch { case _: Throwable => failed = true }
+        try forceEval(fn(spark, sfDir))
+        catch { case e: Throwable => if (error.isEmpty) error = Some(describe(e)) }
         (System.nanoTime() - t0) / 1e9
       }
       run() // untimed steady-state run at the target SF (JIT depth)
@@ -157,15 +193,17 @@ object Bench {
       // sum of per-pool peaks (eden+survivor+old): an upper bound on the
       // true simultaneous high-water, but self-consistent across rows
       val heapPeakMb = heapPools.map(_.getPeakUsage.getUsed).sum / 1048576
-      // A throwing query must not record its (fast) elapsed time as a
-      // valid sample — that reads as a speedup. -1 is the failure sentinel.
-      val sec = if (failed) -1.0 else times.sorted.apply(1)
+      Block(if (error.isDefined) -1.0 else times.sorted.apply(1), gcMs,
+        heapPeakMb, taskD, error)
+    }
+    val results = queries.map { case (name, fn) =>
+      val r = measure(fn)
       // One short line per query, printed as it completes: the driver's
       // tail capture truncated the single giant summary line in round 6
       // (BENCH_r06.json "parsed": null, 22/80 timings lost), and short
       // per-query lines can't fall off a byte-bounded tail the same way.
-      println(s"""{"query":"$name","sec":$sec,"gc_ms":$gcMs,"heap_peak_mb":$heapPeakMb,"task_ms":${taskD(0)},"task_gc_ms":${taskD(1)},"spill_mb":${taskD(2) / 1048576},"shuffle_mb":${taskD(3) / 1048576}}""")
-      name -> ((sec, gcMs, heapPeakMb, taskD))
+      println(s"""{"query":"$name","sec":${r.sec},"gc_ms":${r.gcMs},"heap_peak_mb":${r.heapPeakMb},"task_ms":${r.task(0)},"task_gc_ms":${r.task(1)},"spill_mb":${r.task(2) / 1048576},"shuffle_mb":${r.task(3) / 1048576}${r.errorField}}""")
+      name -> r
     }
     // Auto-adjudication (VERDICT r13 process item): every row whose
     // in-suite median exceeds 2x its BASELINE.md pin is re-run ISOLATED
@@ -183,43 +221,23 @@ object Bench {
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
       } catch { case _: Throwable => Map.empty }
     val adjudicated = results.collect {
-      case (name, (sec, _, _, _))
-          if sec > 0 && pins.get(name).exists(p => sec > 2 * p) =>
-        sweep()
-        val fn = queries(name)
-        // Track failure like the suite loop: a query that THROWS during
-        // its isolated re-run must not record a fast, plausible elapsed
-        // time as isolated_sec — -1 is the same failure sentinel run()
-        // uses, so a failed adjudication is visibly failed in the map.
-        var isoFailed = false
-        def run1(): Double = {
-          val t0 = System.nanoTime()
-          try forceEval(fn(spark, sfDir)) catch { case _: Throwable => isoFailed = true }
-          (System.nanoTime() - t0) / 1e9
-        }
-        run1() // untimed steady-state run, the suite protocol
-        System.gc() // the suite protocol's post-untimed collection
-        drainBus()
-        val task0 = taskAgg.snap
-        val isoTimes = (1 to 3).map(_ => run1())
-        drainBus()
-        val taskD = taskAgg.snap.zip(task0).map { case (a, b) => a - b }
-        val iso = if (isoFailed) -1.0 else isoTimes.sorted.apply(1)
+      case (name, r) if r.sec > 0 && pins.get(name).exists(p => r.sec > 2 * p) =>
+        val iso = measure(queries(name))
         // the isolated task_ms next to the in-suite task_ms (in diag) is
         // the diagnosis: flat task_ms + inflated wall = driver-side
         // stall; inflated task_ms = real executor work appeared in-suite
-        println(s"""{"adjudicate":"$name","insuite_sec":$sec,"isolated_sec":$iso,"pin_sec":${pins(name)},"iso_task_ms":${taskD(0)},"iso_task_gc_ms":${taskD(1)}}""")
-        name -> ((iso, taskD))
+        println(s"""{"adjudicate":"$name","insuite_sec":${r.sec},"isolated_sec":${iso.sec},"pin_sec":${pins(name)},"iso_task_ms":${iso.task(0)},"iso_task_gc_ms":${iso.task(1)}${iso.errorField}}""")
+        name -> iso
     }
     val adjJson = adjudicated.map { case (k, v) =>
-      s"""\"$k\":{"insuite_sec":${results(k)._1},"isolated_sec":${v._1},"pin_sec":${pins(k)},"iso_task_ms":${v._2(0)},"iso_task_gc_ms":${v._2(1)}}"""
+      s"""\"$k\":{"insuite_sec":${results(k).sec},"isolated_sec":${v.sec},"pin_sec":${pins(k)},"iso_task_ms":${v.task(0)},"iso_task_gc_ms":${v.task(1)}${v.errorField}}"""
     }.mkString("{", ",", "}")
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v._1 }
+    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v.sec }
       .mkString("{", ",", "}")
     // per-query diagnostics, file artifact only (the stdout line is
     // byte-bounded; the per-query lines above carry them for the tail)
     val diag = results.map { case (k, v) =>
-      s"""\"$k\":{"gc_ms":${v._2},"heap_peak_mb":${v._3},"task_ms":${v._4(0)},"task_gc_ms":${v._4(1)},"spill_mb":${v._4(2) / 1048576},"shuffle_mb":${v._4(3) / 1048576}}"""
+      s"""\"$k\":{"gc_ms":${v.gcMs},"heap_peak_mb":${v.heapPeakMb},"task_ms":${v.task(0)},"task_gc_ms":${v.task(1)},"spill_mb":${v.task(2) / 1048576},"shuffle_mb":${v.task(3) / 1048576}${v.errorField}}"""
     }.mkString("{", ",", "}")
     // Stdout summary uses SHORT keys (the qNN prefix) and 3-decimal
     // seconds: the driver keeps only a byte-bounded tail of stdout, and
@@ -228,15 +246,15 @@ object Bench {
     // survives the capture; the full-name line still lands in the
     // results file below for the human record.
     val qsShort = results.map { case (k, v) =>
-      "\"" + k.takeWhile(_ != '_') + "\":" + BigDecimal(v._1)
+      "\"" + k.takeWhile(_ != '_') + "\":" + BigDecimal(v.sec)
         .setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
     }.mkString("{", ",", "}")
     // failed queries are EXCLUDED from total (their -1 sentinel would make
     // it nonsense), so name them explicitly — otherwise a broken query
     // shrinks the total and reads as a fleet-wide speedup round-over-round
-    val failures = results.collect { case (k, v) if v._1 < 0 => s"\"$k\"" }
+    val failures = results.collect { case (k, v) if v.sec < 0 => s"\"$k\"" }
     val fq = failures.mkString("[", ",", "]")
-    val total = if (failures.nonEmpty) -1.0 else results.values.map(_._1).sum
+    val total = if (failures.nonEmpty) -1.0 else results.values.map(_.sec).sum
     val fullSummary =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"diag":$diag,"adjudication":$adjJson,"failures":$fq,"sf":"$sfDir"}"""
     val summary =
@@ -274,7 +292,7 @@ object Bench {
     // 64-entry chunk under ~1KB.
     results.toSeq.grouped(64).zipWithIndex.foreach { case (chunk, i) =>
       val m = chunk.map { case (k, v) =>
-        "\"" + k.takeWhile(_ != '_') + "\":" + BigDecimal(v._1)
+        "\"" + k.takeWhile(_ != '_') + "\":" + BigDecimal(v.sec)
           .setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
       }.mkString("{", ",", "}")
       println(s"""{"qchunk":$i,"of":${(results.size + 63) / 64},"queries":$m}""")
@@ -290,13 +308,13 @@ object Bench {
     def r3(x: Double): Double =
       BigDecimal(x).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
     val ratios = results.toSeq.collect {
-      case (k, v) if v._1 > 0 && pins.contains(k) => v._1 / pins(k)
+      case (k, v) if v.sec > 0 && pins.contains(k) => v.sec / pins(k)
     }.sorted
     val medianVsPin =
       if (ratios.isEmpty) "null" else r3(ratios(ratios.size / 2)).toString
     val over2x = results.toSeq.collect {
-      case (k, v) if v._1 > 0 && pins.get(k).exists(p => v._1 > 2 * p) =>
-        "\"" + k.takeWhile(_ != '_') + "\":" + r3(v._1 / pins(k))
+      case (k, v) if v.sec > 0 && pins.get(k).exists(p => v.sec > 2 * p) =>
+        "\"" + k.takeWhile(_ != '_') + "\":" + r3(v.sec / pins(k))
     }.mkString("{", ",", "}")
     println(s"""{"metric":"total","value":$total,"unit":"sec","rows":${results.size},"failures":$fq,"median_vs_pin":$medianVsPin,"pinned_rows":${ratios.size},"over2x":$over2x,"sf":"$sfDir"}""")
     spark.stop()

@@ -75,14 +75,6 @@ object Lsh {
   def fingerprints(strings: Column): Column =
     transform(strings, s => TextAnalysis.rollingFingerprint(s))
 
-  /** MinHash signature: sig[i] = min over set elements of (A[i]*fp + B[i]) mod P. */
-  def minHashSignature(fps: Column): Column = {
-    val (aArr, bArr) = (litArr(A), litArr(B))
-    transform(sequence(lit(1), lit(K)), i =>
-      array_min(transform(fps, v =>
-        (element_at(aArr, i) * v + element_at(bArr, i)) % lit(P))))
-  }
-
   /** Band keys: fold each band's `rowsPerBand` signature values with a
     * base-31 polynomial, reduced mod P each step so any rowsPerBand stays
     * exact in i64 (the unreduced fold overflows past r=6: 31^r·P > 2^63).
@@ -147,18 +139,6 @@ object Lsh {
     * prefer staging gvals/simHashFromG in separate projections).
     */
   def simHash(fps: Column): Column = simHashFromG(gvals(fps))
-
-  /** Byte-bands of a SimHash for candidate blocking: 4 bytes; by
-    * pigeonhole any pair with hamming <= 3 shares at least one byte.
-    */
-  val SimBands: Int = 4
-
-  def simHashBands(sim: Column): Column =
-    transform(sequence(lit(0), lit(SimBands - 1)), t =>
-      struct(
-        t.as("band"),
-        (floor(sim.cast("double") / element_at(litArr(Seq(1L, 256L, 65536L, 16777216L)), t + 1))
-          .cast("long") % 256).as("key")))
 
   /** Hamming distance between two SimHash fingerprints. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

@@ -51,12 +51,6 @@ object Enrich {
         "Friday", "Saturday").map(lit): _*),
       dayofweek(d))
 
-  /** Extract a scalar JSON field (JSONPath) as a typed column. Codegen'd
-    * `get_json_object`; schema-on-read like the rescue-column handling in
-    * the reference's autoloader setup.
-    */
-  def jsonField(src: Column, path: String): Column = get_json_object(src, path)
-
   /** Extract one long field via schema-directed parsing — `from_json` with
     * a one-field schema is ~2x faster than JsonPath evaluation
     * (`get_json_object`) because Jackson stops at the projected field.

@@ -111,40 +111,6 @@ object Incremental {
       .filter(col(countCol) > 0)
   }
 
-  /** Keyed full-outer diff between two snapshots of the same entity table
-    * (state at watermark T1 vs T2) — the change-feed a CDC consumer
-    * derives when the source publishes states instead of deltas. Each
-    * output row carries the key, `old_<c>`/`new_<c>` for every compared
-    * column, and a `change` verdict: `added` (key only in new), `removed`
-    * (key only in old), `changed` (any compared column differs under
-    * null-safe equality), else `unchanged`. Presence is tracked by
-    * explicit marker columns, not by null-probing a compared column — a
-    * legitimately-null attribute must not read as an absent row. One
-    * shuffle per side on the key (the full-outer join); at 100 TB both
-    * sides bucket by the key and the join is exchange-free.
-    */
-  def snapshotDiff(oldSnap: DataFrame, newSnap: DataFrame, keys: Seq[String],
-                   compareCols: Seq[String]): DataFrame = {
-    val o = compareCols.foldLeft(
-      oldSnap.select((keys ++ compareCols).map(col): _*)
-        .withColumn("__old_p", lit(true)))((d, c) =>
-      d.withColumnRenamed(c, s"old_$c"))
-    val n = compareCols.foldLeft(
-      newSnap.select((keys ++ compareCols).map(col): _*)
-        .withColumn("__new_p", lit(true)))((d, c) =>
-      d.withColumnRenamed(c, s"new_$c"))
-    val anyDiff = compareCols
-      .map(c => !(col(s"old_$c") <=> col(s"new_$c")))
-      .reduce(_ || _)
-    o.join(n, keys, "full_outer")
-      .withColumn("change",
-        when(col("__old_p").isNull, "added")
-          .when(col("__new_p").isNull, "removed")
-          .when(anyDiff, "changed")
-          .otherwise("unchanged"))
-      .drop("__old_p", "__new_p")
-  }
-
   /** Late-arrival audit: watermark CDC silently misses rows whose sequence
     * value lands AT OR BELOW the stored watermark after extraction already
     * passed it (a writer committing out of order) — the blind spot every

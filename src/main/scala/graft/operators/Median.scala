@@ -1,31 +1,49 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Distributed EXACT median (quantile_cont(0.5) semantics, linear
-  * interpolation) without the collect-every-value-per-group aggregate.
+/** Distributed EXACT order statistics (medians and quantiles, weighted
+  * or not) without the collect-every-value-per-group aggregate.
   *
   * Spark's exact `percentile` materializes each group's full value set
   * in one aggregation buffer — at millions of values per group that is
   * a single-threaded merge + sort per group and a GC storm (q220's
   * first draft: 13.5 s / 4 s GC for 3 groups × 3.1M slopes). The
-  * bucket decomposition replaces it with the q196 weighted-median
-  * trick generalized to interpolation: one distributed hash-agg to
-  * per-(group, bucket) counts, a cumulative over the SMALL bucket
-  * frame locates the bucket(s) holding the two interpolation ranks,
-  * and only THOSE buckets' populations are ever sorted (a per-bucket
-  * window — the decomposition's parallel unit). Values never leave
-  * the executors; no group's full set is materialized anywhere.
+  * value-bucket decomposition replaces it: one distributed hash-agg to
+  * per-(group, bucket) weight sums, a cumulative over the SMALL bucket
+  * frame locates the bucket(s) holding the needed ranks, and only THOSE
+  * buckets' populations are ever sorted (a per-bucket window — the
+  * decomposition's parallel unit). Values never leave the executors; no
+  * group's full set is materialized anywhere.
   *
-  * Exactness: the two ranked endpoint VALUES are exact order
-  * statistics, and the interpolation is the exact expression shape
-  * `percentile` / quantile_cont evaluate: `vl·(1−frac) + vu·frac` —
-  * NOT the algebraically-equal `vl + (vu−vl)·frac`, which differs in
-  * the last ulp (measured: 81364.255 vs 81364.25499999999 at q = 0.75
-  * on the sf0.001 prices). The q220/q226 gates prove bit-identity
-  * against DuckDB's quantile_cont.
+  * One core (`orderStats`) does this for every caller; the public
+  * entry points are projections of it. An unweighted value is a row of
+  * weight 1, so the unweighted forms are the weighted ones at unit
+  * weights, and a median is the quantile q = 0.5.
+  *
+  * Exactness: the ranked endpoint VALUES are exact order statistics,
+  * and the interpolation is the exact expression shape `percentile` /
+  * quantile_cont evaluate: `vl·(1−frac) + vu·frac` — NOT the
+  * algebraically-equal `vl + (vu−vl)·frac`, which differs in the last
+  * ulp (measured: 81364.255 vs 81364.25499999999 at q = 0.75 on the
+  * sf0.001 prices). At q = 0.5 that shape is `vl·0.5 + vu·0.5`. The
+  * q220/q226/q235 gates prove bit-identity against DuckDB's
+  * quantile_cont. Spark's `percentile` agrees bit for bit except at a
+  * fractional position between two EQUAL endpoint values: it returns
+  * that value as is, where quantile_cont and this operator still
+  * evaluate the shape above, which can miss it by an ulp (pinned in
+  * QuantileSpec).
+  *
+  * Input contract: NULL values and weights are ignored (they carry no
+  * rank), matching `percentile` / quantile_cont. Values must be FINITE
+  * doubles with |v·bucketScale| < 2^63: NaN/±Infinity (and magnitudes
+  * past the long range) would trap the bucket cast under ANSI mode
+  * rather than silently mis-rank — callers feeding unsanitized measures
+  * filter `isnan`/`abs(v) != Infinity` first. Weights are non-negative
+  * int64; a zero-weight row carries no rank, and a group whose total
+  * weight is zero has no defined quantile and is EXCLUDED.
   *
   * Degenerate case: if a single bucket holds a group's whole value
   * set (near-constant values at the chosen `bucketScale`), the final
@@ -40,153 +58,39 @@ import org.apache.spark.sql.functions._
   */
 object Median {
 
-  /** One row per group: (`groupCol`, n_values, `out` = exact
-    * interpolated median of `valueCol` as double). The input frame is
-    * executed exactly TWICE (the bucket-count pass and the
-    * target-bucket extraction pass) however expensive it is to
-    * produce — counts, ranks, and target buckets all ride the small
-    * checkpointed bucket-count frame, and both interpolation endpoints
-    * come out of ONE conditional aggregation.
+  /** The one rank search. Semantics are `quantile_cont` over the
+    * weight-EXPANDED multiset (each row counted `w` times): pos =
+    * q·(tw−1) on the expanded size tw (the same double product
+    * `percentile` computes), and the two endpoint EXPANDED ranks
+    * rl = floor(pos)+1, ru = ceil(pos)+1 map back to rows through
+    * cumulative weights (a row with entry weight c covers expanded
+    * ranks (c, c+w]). The expansion is never materialized.
     *
-    * NULL values are ignored (they carry no rank), matching
-    * `percentile` / quantile_cont. Values must be FINITE doubles with
-    * |v·bucketScale| < 2^63: NaN/±Infinity (and magnitudes past the
-    * long range) would trap the bucket cast under ANSI mode rather
-    * than silently mis-rank — callers feeding unsanitized measures
-    * filter `isnan`/`abs(v) != Infinity` first.
-    */
-  def groupedExactMedian(df: DataFrame, groupCol: String, valueCol: String,
-                         out: String,
-                         bucketScale: Double = 64.0): DataFrame = {
-    val base = df.select(col(groupCol).as("g"), col(valueCol).cast("double").as("v"))
-      .filter(col("v").isNotNull)
-    val bucketed = base
-      .withColumn("b", floor(col("v") * lit(bucketScale)).cast("long"))
-    // pass 1: per-(group, bucket) counts — O(occupied buckets) rows,
-    // checkpointed so every derived frame reads it, not the input
-    val bc = bucketed.groupBy("g", "b").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
-    // 1-based ranks of the two interpolation endpoints:
-    // pos = (n−1)/2 (0-based), lower = floor, upper = ceil
-    val n = bc.groupBy("g").agg(sum("cnt").as("n"))
-      .select(col("g"), col("n"),
-        (floor((col("n") - 1) / 2) + 1).cast("long").as("rl"),
-        (ceil((col("n") - 1) / 2) + 1).cast("long").as("ru"))
-    val wB = Window.partitionBy("g").orderBy("b")
-    val tgt = bc
-      .withColumn("cum", sum("cnt").over(wB))
-      .withColumn("before", col("cum") - col("cnt"))
-      .join(n, "g")
-      .filter((col("rl") > col("before") && col("rl") <= col("cum")) ||
-        (col("ru") > col("before") && col("ru") <= col("cum")))
-      .select(col("g"), col("b"), col("before"), col("rl"), col("ru"),
-        col("n"))
-    // pass 2: rank ONLY the target buckets' populations; both endpoint
-    // values from one conditional agg (no second extraction pass)
-    val wV = Window.partitionBy("g", "b").orderBy("v")
-    bucketed.join(broadcast(tgt), Seq("g", "b"))
-      .withColumn("r", row_number().over(wV) + col("before"))
-      .filter(col("r") === col("rl") || col("r") === col("ru"))
-      .groupBy("g")
-      .agg(first(col("n")).as("n_values"),
-        min(when(col("r") === col("rl"), col("v"))).as("vl"),
-        min(when(col("r") === col("ru"), col("v"))).as("vu"))
-      .select(col("g").as(groupCol), col("n_values"),
-        (col("vl") * lit(0.5) + col("vu") * lit(0.5)).as(out))
-  }
-
-  /** The decomposition generalized to WEIGHTED lower medians — the
-    * q196 value-bucket trick subsumed under this operator (VERDICT r13
-    * item 3): the crossing value v* where the running weight first
-    * satisfies 2·cw ≥ tw, computed without materializing any group's
-    * value set. Pass 1 collapses to per-(group, bucket) WEIGHT sums
-    * (one hash-agg, checkpointed); the cumulative over that small
-    * frame locates the single crossing bucket and the exact weight
-    * carried INTO it; pass 2 ranks only the crossing bucket's
-    * population by value with the entry offset added. Exactness: the
-    * weights are int64 and the crossing test is an integer
-    * cross-multiplication, so the emitted value is an exact order
-    * statistic — no interpolation, bit-identical to the oracle's
-    * window form. Ties among equal values need no tiebreak: the
-    * crossing VALUE is invariant to permutations within an equal-value
-    * run (only which row crosses moves, never the value). Same input
-    * contract as `groupedExactMedian` plus non-null, non-negative
-    * int64 weights. A group whose TOTAL weight is zero (all-zero
-    * weights — allowed by the non-negativity contract) has no defined
-    * median; such groups are EXCLUDED from the output (the `tw > 0`
-    * filter below) rather than silently reporting the group's minimum
-    * value, which is what the vacuously-true crossing test would emit.
-    */
-  def groupedWeightedMedian(df: DataFrame, groupCol: String, valueCol: String,
-                            weightCol: String, out: String,
-                            bucketScale: Double = 64.0): DataFrame = {
-    val base = df.select(col(groupCol).as("g"),
-        col(valueCol).cast("double").as("v"),
-        col(weightCol).cast("long").as("w"))
-      .filter(col("v").isNotNull && col("w").isNotNull)
-    val bucketed = base
-      .withColumn("b", floor(col("v") * lit(bucketScale)).cast("long"))
-    val bc = bucketed.groupBy("g", "b").agg(sum("w").as("bw"))
-      .localCheckpoint(true)
-    val wB = Window.partitionBy("g").orderBy("b")
-    val cum = bc.withColumn("cb", sum("bw").over(wB))
-    val tot = bc.groupBy("g").agg(sum("bw").as("tw"))
-    // first bucket whose cumulative weight crosses half; min-struct by
-    // bucket carries that bucket's entry weight (cb − bw) along
-    val bstar = cum.join(tot, "g")
-      .filter(col("tw") > 0 && lit(2) * col("cb") >= col("tw"))
-      .groupBy("g", "tw")
-      .agg(min(struct(col("b"), (col("cb") - col("bw")).as("below"))).as("m"))
-      .select(col("g"), col("tw"), col("m.b").as("b"),
-        col("m.below").as("below"))
-    val wIn = Window.partitionBy("g", "b").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    bucketed.join(broadcast(bstar), Seq("g", "b"))
-      .withColumn("cw", col("below") + sum("w").over(wIn))
-      .filter(lit(2) * col("cw") >= col("tw"))
-      .groupBy("g", "tw")
-      .agg(min("v").as(out))
-      .select(col("g").as(groupCol), col("tw").as("total_weight"), col(out))
-  }
-
-  /** The decomposition generalized to WEIGHTED interpolated quantiles —
-    * the q226 ↔ q231 merge: semantics are EXACTLY `quantile_cont` over
-    * the weight-EXPANDED multiset (each row counted `w` times), so unit
-    * weights reduce to `groupedExactQuantiles` bit-for-bit (spec-pinned)
-    * and the oracle can replay it by literally expanding the weights.
-    * pos = q·(tw−1) on the expanded size tw (the same double product
-    * `percentile` computes); the two endpoint EXPANDED ranks rl/ru map
-    * back to original rows through cumulative weights (a value v with
-    * entry weight c covers expanded ranks (c, c+w]); interpolation is
-    * the evaluated expression shape vl·(1−frac) + vu·frac.
+    * The input is executed exactly TWICE however expensive it is to
+    * produce: pass 1 is per-(group, bucket) weight sums, checkpointed;
+    * the rank table is groups × quantiles (broadcast); pass 2 ranks
+    * only the covering buckets' populations by running weight. Ties
+    * among equal values need no tiebreak — the ranks covered by an
+    * equal-value run map to that value regardless of intra-run order.
     *
-    * Never materializes the expansion: pass 1 is per-(group, bucket)
-    * WEIGHT sums; the rank table is groups × quantiles (broadcast);
-    * pass 2 ranks only the covering buckets' populations by cumulative
-    * weight. Ties among equal values need no tiebreak — the ranks
-    * covered by an equal-value run map to that value regardless of
-    * intra-run order. Same input contract as `groupedWeightedMedian`;
-    * zero-weight rows carry no expanded copies and are dropped, and a
-    * group whose total weight is zero has no defined quantile and is
-    * excluded.
+    * One row per (group, q): `g`, `q`, `tw` (total weight), `vl`/`vu`
+    * (the values at ranks rl/ru) and `frac` (pos − floor(pos)).
     */
-  def groupedWeightedQuantiles(df: DataFrame, groupCol: String,
-                               valueCol: String, weightCol: String,
-                               quantiles: Seq[Double],
-                               bucketScale: Double = 64.0): DataFrame = {
+  private[graft] def orderStats(df: DataFrame, group: Column, value: Column,
+                                weight: Column, quantiles: Seq[Double],
+                                bucketScale: Double): DataFrame = {
     require(quantiles.nonEmpty && quantiles.forall(q => q >= 0 && q <= 1),
       s"quantiles must be in [0, 1]: $quantiles")
-    val base = df.select(col(groupCol).as("g"),
-        col(valueCol).cast("double").as("v"),
-        col(weightCol).cast("long").as("w"))
+    val bucketed = df.select(group.as("g"), value.cast("double").as("v"),
+        weight.cast("long").as("w"))
       .filter(col("v").isNotNull && col("w").isNotNull && col("w") > 0)
-    val bucketed = base
       .withColumn("b", floor(col("v") * lit(bucketScale)).cast("long"))
+    // pass 1: per-(group, bucket) weights — O(occupied buckets) rows,
+    // checkpointed so every derived frame reads it, not the input
     val bc = bucketed.groupBy("g", "b").agg(sum("w").as("bw"))
       .localCheckpoint(true)
     val spark = df.sparkSession
     import spark.implicits._
-    // pos = q·(tw−1) on the EXPANDED count tw — quantile_cont's shape
     val ranks = bc.groupBy("g").agg(sum("bw").as("tw"))
       .crossJoin(broadcast(quantiles.toDF("q")))
       .withColumn("pos", (col("tw") - 1) * col("q"))
@@ -194,93 +98,82 @@ object Median {
         (floor(col("pos")) + 1).cast("long").as("rl"),
         (ceil(col("pos")) + 1).cast("long").as("ru"),
         (col("pos") - floor(col("pos"))).as("frac"))
+    def covers(rank: String, below: Column, upTo: Column): Column =
+      col(rank) > below && col(rank) <= upTo
+    // buckets whose expanded-rank span covers ANY needed rank (deduped
+    // across quantiles)
     val wB = Window.partitionBy("g").orderBy("b")
-    val cum = bc
+    val tgt = bc
       .withColumn("cum", sum("bw").over(wB))
       .withColumn("before", col("cum") - col("bw"))
-    // buckets whose expanded-rank span covers ANY needed rank
-    val tgt = cum.join(ranks, "g")
-      .filter((col("rl") > col("before") && col("rl") <= col("cum")) ||
-        (col("ru") > col("before") && col("ru") <= col("cum")))
+      .join(ranks, "g")
+      .filter(covers("rl", col("before"), col("cum")) ||
+        covers("ru", col("before"), col("cum")))
       .select("g", "b", "before").distinct()
-    // within the covering buckets: running EXPANDED rank by value; the
-    // row covers expanded ranks (cw − w, cw]
+    // pass 2, within the covering buckets: running EXPANDED rank by
+    // value; the row covers expanded ranks (cw − w, cw]
     val wV = Window.partitionBy("g", "b").orderBy("v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = bucketed.join(broadcast(tgt), Seq("g", "b"))
+    val lower = covers("rl", col("cw") - col("w"), col("cw"))
+    val upper = covers("ru", col("cw") - col("w"), col("cw"))
+    bucketed.join(broadcast(tgt), Seq("g", "b"))
       .withColumn("cw", col("before") + sum("w").over(wV))
-    ranked.join(broadcast(ranks.withColumnRenamed("g", "g2")),
-        col("g") === col("g2") &&
-          ((col("rl") > col("cw") - col("w") && col("rl") <= col("cw")) ||
-            (col("ru") > col("cw") - col("w") && col("ru") <= col("cw"))))
-      .groupBy(col("g"), col("q"), col("frac"), col("tw"))
-      .agg(
-        min(when(col("rl") > col("cw") - col("w") && col("rl") <= col("cw"),
-          col("v"))).as("vl"),
-        min(when(col("ru") > col("cw") - col("w") && col("ru") <= col("cw"),
-          col("v"))).as("vu"))
-      .select(col("g").as(groupCol), col("q"), col("tw").as("total_weight"),
-        (col("vl") * (lit(1.0) - col("frac")) + col("vu") * col("frac"))
-          .as("quantile"))
+      .join(broadcast(ranks.withColumnRenamed("g", "g2")),
+        col("g") === col("g2") && (lower || upper))
+      .groupBy("g", "q", "tw", "frac")
+      .agg(min(when(lower, col("v"))).as("vl"),
+        min(when(upper, col("v"))).as("vu"))
   }
 
-  /** The decomposition generalized to ARBITRARY quantiles: one row per
-    * (group, q) with the exact interpolated quantile — Spark's
-    * `percentile(v, array(...))` ≡ quantile_cont semantics (pos =
-    * q·(n−1), linear interpolation between the two neighboring order
-    * statistics), without materializing any group's value set. The
-    * rank/fraction table is groups × quantiles (tiny, broadcast); the
-    * value frame is still executed exactly twice. Subsumes
-    * `groupedExactMedian` (q = 0.5); kept separate because the median
-    * form is gated (q220) and returns counts.
-    *
-    * Same input contract as `groupedExactMedian`: NULLs are ignored,
-    * values must be finite with |v·bucketScale| < 2^63.
+  /** quantile_cont's interpolation between the two ranked endpoints. */
+  private def interpolated: Column =
+    col("vl") * (lit(1.0) - col("frac")) + col("vu") * col("frac")
+
+  /** One row per group: (`groupCol`, n_values, `out` = exact
+    * interpolated median of `valueCol` as double).
+    */
+  def groupedExactMedian(df: DataFrame, groupCol: String, valueCol: String,
+                         out: String,
+                         bucketScale: Double = 64.0): DataFrame =
+    orderStats(df, col(groupCol), col(valueCol), lit(1L), Seq(0.5), bucketScale)
+      .select(col("g").as(groupCol), col("tw").as("n_values"),
+        interpolated.as(out))
+
+  /** WEIGHTED lower median, one row per group: (`groupCol`,
+    * total_weight, `out`). The emitted value is the row holding
+    * expanded rank floor((tw−1)/2)+1 = ceil(tw/2) — the crossing value
+    * v* where the running weight first satisfies 2·cw ≥ tw (q196's
+    * definition): an exact order statistic, no interpolation.
+    */
+  def groupedWeightedMedian(df: DataFrame, groupCol: String, valueCol: String,
+                            weightCol: String, out: String,
+                            bucketScale: Double = 64.0): DataFrame =
+    orderStats(df, col(groupCol), col(valueCol), col(weightCol), Seq(0.5),
+        bucketScale)
+      .select(col("g").as(groupCol), col("tw").as("total_weight"),
+        col("vl").as(out))
+
+  /** WEIGHTED interpolated quantiles, one row per (group, q):
+    * (`groupCol`, q, total_weight, quantile) — `quantile_cont` over the
+    * weight-expanded multiset, so the oracle can replay it by literally
+    * expanding the weights.
+    */
+  def groupedWeightedQuantiles(df: DataFrame, groupCol: String,
+                               valueCol: String, weightCol: String,
+                               quantiles: Seq[Double],
+                               bucketScale: Double = 64.0): DataFrame =
+    orderStats(df, col(groupCol), col(valueCol), col(weightCol), quantiles,
+        bucketScale)
+      .select(col("g").as(groupCol), col("q"), col("tw").as("total_weight"),
+        interpolated.as("quantile"))
+
+  /** Interpolated quantiles, one row per (group, q): (`groupCol`, q,
+    * quantile) — quantile_cont semantics (pos = q·(n−1)).
     */
   def groupedExactQuantiles(df: DataFrame, groupCol: String, valueCol: String,
                             quantiles: Seq[Double],
-                            bucketScale: Double = 64.0): DataFrame = {
-    require(quantiles.nonEmpty && quantiles.forall(q => q >= 0 && q <= 1),
-      s"quantiles must be in [0, 1]: $quantiles")
-    val base = df.select(col(groupCol).as("g"), col(valueCol).cast("double").as("v"))
-      .filter(col("v").isNotNull)
-    val bucketed = base
-      .withColumn("b", floor(col("v") * lit(bucketScale)).cast("long"))
-    val bc = bucketed.groupBy("g", "b").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
-    val spark = df.sparkSession
-    import spark.implicits._
-    // pos = q·(n−1): the same double product `percentile` computes, so
-    // frac (and with it the interpolation) is bit-identical
-    val ranks = bc.groupBy("g").agg(sum("cnt").as("n"))
-      .crossJoin(broadcast(quantiles.toDF("q")))
-      .withColumn("pos", (col("n") - 1) * col("q"))
-      .select(col("g"), col("q"),
-        (floor(col("pos")) + 1).cast("long").as("rl"),
-        (ceil(col("pos")) + 1).cast("long").as("ru"),
-        (col("pos") - floor(col("pos"))).as("frac"))
-    val wB = Window.partitionBy("g").orderBy("b")
-    val cum = bc
-      .withColumn("cum", sum("cnt").over(wB))
-      .withColumn("before", col("cum") - col("cnt"))
-    // buckets holding ANY needed rank (deduped across quantiles)
-    val tgt = cum.join(ranks, "g")
-      .filter((col("rl") > col("before") && col("rl") <= col("cum")) ||
-        (col("ru") > col("before") && col("ru") <= col("cum")))
-      .select("g", "b", "before").distinct()
-    val wV = Window.partitionBy("g", "b").orderBy("v")
-    val ranked = bucketed.join(broadcast(tgt), Seq("g", "b"))
-      .withColumn("r", row_number().over(wV) + col("before"))
-    ranked.join(broadcast(ranks.withColumnRenamed("g", "g2")),
-        col("g") === col("g2") &&
-          (col("r") === col("rl") || col("r") === col("ru")))
-      .select(col("g"), col("q"), col("frac"), col("r"),
-        col("rl"), col("ru"), col("v"))
-      .groupBy("g", "q", "frac")
-      .agg(min(when(col("r") === col("rl"), col("v"))).as("vl"),
-        min(when(col("r") === col("ru"), col("v"))).as("vu"))
-      .select(col("g").as(groupCol), col("q"),
-        (col("vl") * (lit(1.0) - col("frac")) + col("vu") * col("frac"))
-          .as("quantile"))
-  }
+                            bucketScale: Double = 64.0): DataFrame =
+    orderStats(df, col(groupCol), col(valueCol), lit(1L), quantiles,
+        bucketScale)
+      .select(col("g").as(groupCol), col("q"), interpolated.as("quantile"))
 }

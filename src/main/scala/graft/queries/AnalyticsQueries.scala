@@ -2881,62 +2881,28 @@ object AnalyticsQueries extends QueryFamily {
   // under the total order (value, keys), the first row whose running
   // weight reaches half the total — integer cross-multiplication
   // (2·cw ≥ tw, weights exact longs) so no 0.5-boundary float ever
-  // decides.
+  // decides. That row holds expanded rank ceil(tw/2), the lower end
+  // `vl` of `Median`'s rank search at q = 0.5.
   //
   // Scale shape (the first draft's per-group window sorted ENTIRE
   // groups — with 3 return flags that is three single-task sorts of
-  // n/3 rows each, measured near-linear 1.2→21 s at 30×): value-bucket
-  // decomposition instead. (1) per-(group, bucket) weight cells — one
-  // hash-agg, fully distributed; (2) per-group cumulative over the tiny
-  // O(buckets) frame finds the CROSSING BUCKET and the cumulative
-  // weight strictly below it; (3) only that bucket's rows (≈ rows ÷
-  // buckets) are sorted to locate the crossing row. Bucket = floor(v /
-  // 2^11): the divisor is a POWER OF TWO, so the decimal→double cast
-  // (≤15 significant digits, exact) followed by the division is exact
-  // and the floor is engine-portable; bucket count is the scale knob.
-  // Qualifying rows form a SUFFIX of the order (cw nondecreasing), so
-  // min(value) over them IS the crossing value — no second window. The
+  // n/3 rows each, measured near-linear 1.2→21 s at 30×): the
+  // value-bucket decomposition in `Median.orderStats` instead, which
+  // sorts only the crossing bucket's rows. Bucket = floor(v / 2^11):
+  // the divisor is a POWER OF TWO, so the decimal→double cast (≤15
+  // significant digits, exact) followed by the scaling is exact and
+  // the floor is engine-portable; bucket count is the scale knob. The
   // oracle keeps the one-window definitional form; the gate proves the
   // decomposition equals it.
   val WmBucketWidth = 2048.0
 
-  def weightedMedian(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_returnflag").as("g"), dec2(col("l_extendedprice")).as("v"),
-        col("l_quantity").cast("long").as("w"),
-        col("l_orderkey"), col("l_linenumber"))
-      .withColumn("bucket",
-        floor(col("v").cast("double") / lit(WmBucketWidth)).cast("long"))
-    val cells = li.groupBy("g", "bucket").agg(sum("w").as("bw"))
-    val wB = Window.partitionBy("g").orderBy("bucket")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = cells.withColumn("cb", sum(col("bw")).over(wB))
-    val tot = cells.groupBy("g").agg(sum("bw").as("tw"))
-    val bstar = cum.join(tot, "g")
-      .filter(lit(2) * col("cb") >= col("tw"))
-      .groupBy("g", "tw").agg(min(col("bucket")).as("bstar"))
-    // the crossing bucket's own cumulative minus its weight = the exact
-    // running weight carried INTO the bucket (aliased: cum and bstar
-    // share the cells lineage, so bare columns would be ambiguous)
-    val c2 = cum.alias("c2")
-    val b2 = bstar.alias("b2")
-    val entry = c2.join(b2,
-        col("c2.g") === col("b2.g") && col("c2.bucket") === col("b2.bstar"))
-      .select(col("b2.g").as("g"), col("b2.tw").as("tw"),
-        col("b2.bstar").as("bstar"),
-        (col("c2.cb") - col("c2.bw")).as("below"))
-    val wIn = Window.partitionBy("g")
-      .orderBy(col("v"), col("l_orderkey"), col("l_linenumber"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    li.join(broadcast(entry), Seq("g"))
-      .filter(col("bucket") === col("bstar"))
-      .withColumn("cw", col("below") + sum(col("w")).over(wIn))
-      .filter(lit(2) * col("cw") >= col("tw"))
-      .groupBy(col("g").as("l_returnflag"), col("tw").as("total_weight"))
-      .agg(min(col("v")).cast("double").as("weighted_median"))
+  def weightedMedian(spark: SparkSession, dir: String): DataFrame =
+    Median.orderStats(Tables.lineitem(spark, dir), col("l_returnflag"),
+        dec2(col("l_extendedprice")), col("l_quantity"), Seq(0.5),
+        bucketScale = 1.0 / WmBucketWidth)
+      .select(col("g").as("l_returnflag"), col("tw").as("total_weight"),
+        col("vl").as("weighted_median"))
       .orderBy("l_returnflag")
-  }
 
   val weightedMedianSpec = query("q196_weighted_median", weightedMedian,
       // qualifying rows are a suffix of the (v, keys) order, so MIN(v)
@@ -3814,15 +3780,11 @@ object AnalyticsQueries extends QueryFamily {
     })
 
   // --- q231: weighted median via the generalized Median operator ----------------------
-  // q196's report through `Median.groupedWeightedMedian` — the
-  // q197↔q11 / q226↔q68 twin pattern: same rows, same oracle,
-  // different physical plan. q196 hand-rolls the value-bucket
-  // decomposition inline; this routes it through the REUSABLE operator
-  // (which also serves unweighted medians/quantiles), proving the
-  // generalization subsumes the inline form bit-for-bit. The
-  // bucketScale 2^-11 reproduces q196's 2048-wide buckets: scaling by
-  // an exact power of two is an exact double operation, so bucket
-  // assignment is identical between the twins.
+  // q196's report through the public `Median.groupedWeightedMedian`
+  // entry point — same rows, same oracle. q196 projects the rank
+  // search's lower endpoint itself; this twin pins that the public
+  // weighted-median projection agrees with it bit-for-bit. The
+  // bucketScale 2^-11 reproduces q196's 2048-wide buckets.
   def weightedMedianDecomposed(spark: SparkSession, dir: String): DataFrame =
     Median.groupedWeightedMedian(
       Tables.lineitem(spark, dir)

@@ -892,36 +892,51 @@ object RuntimeQueries extends QueryFamily {
     val orders = Tables.orders(spark, dir)
     val mz = ZOrder.layoutManifest(orders, x, y, ZQBits, ZBlockShift)
     val mh = ZOrder.hilbertLayoutManifest(orders, x, y, ZQBits, ZBlockShift)
-    val probes = PruneProbes.toDF("probe_id", "xlo", "xhi", "ylo", "yhi")
-    def touched(man: DataFrame, bc: String, rc: String) =
-      probes.join(broadcast(man),
-          col("xlo") <= col("max_x") && col("min_x") <= col("xhi") &&
-            col("ylo") <= col("max_y") && col("min_y") <= col("yhi"), "left")
+    probePanel(PruneProbes.toDF("probe_id", "xlo", "xhi", "ylo", "yhi"),
+      Seq("x", "y"), mz -> "z", mh -> "h")
+  }
+
+  /** The probe-panel comparison shared by q227, q238 and q278: per
+    * probe box, the blocks and rows a scan must touch under each of two
+    * zone maps (`blocks_<tag>`, `rows_<tag>`). A box touches a block
+    * when their ranges overlap on every axis `a` — `<a>lo`/`<a>hi` on
+    * the probe, `min_<a>`/`max_<a>` on the block. Probes are a tiny
+    * broadcast; both manifests are O(blocks).
+    */
+  private def probePanel(probes: DataFrame, axes: Seq[String],
+                         a: (DataFrame, String),
+                         b: (DataFrame, String)): DataFrame = {
+    val overlap = axes.flatMap(x => Seq(col(s"${x}lo") <= col(s"max_$x"),
+      col(s"min_$x") <= col(s"${x}hi"))).reduce(_ && _)
+    def touched(man: (DataFrame, String)) =
+      probes.join(broadcast(man._1), overlap, "left")
         .groupBy("probe_id")
-        .agg(count(col("block")).as(bc),
-          coalesce(sum("n_rows"), lit(0L)).as(rc))
-    touched(mz, "blocks_z", "rows_z")
-      .join(touched(mh, "blocks_h", "rows_h"), Seq("probe_id"))
-      .orderBy("probe_id")
+        .agg(count(col("block")).as(s"blocks_${man._2}"),
+          coalesce(sum("n_rows"), lit(0L)).as(s"rows_${man._2}"))
+    touched(a).join(touched(b), Seq("probe_id")).orderBy("probe_id")
+  }
+
+  /** The oracle twin of one `probePanel` side (q227, q278). */
+  private def touchedSql(man: String, tag: String, axes: Seq[String]): String = {
+    val overlap = axes.map(x => s"${x}lo <= max_$x AND min_$x <= ${x}hi")
+      .mkString("              ON ", "\n             AND ", "")
+    s"""SELECT probe_id, CAST(COUNT(block) AS BIGINT) AS blocks_$tag,
+                   CAST(COALESCE(SUM(n_rows), 0) AS BIGINT) AS rows_$tag
+            FROM probes LEFT JOIN $man
+$overlap
+            GROUP BY 1"""
   }
 
   query("q227_hilbert_vs_morton", hilbertPruningCompare, {
       val probes = PruneProbes
         .map { case (i, xl, xh, yl, yh) => s"($i, $xl, $xh, $yl, $yh)" }
         .mkString(",\n              ")
-      def touched(man: String, bc: String, rc: String) =
-        s"""SELECT probe_id, CAST(COUNT(block) AS BIGINT) AS $bc,
-                   CAST(COALESCE(SUM(n_rows), 0) AS BIGINT) AS $rc
-            FROM probes LEFT JOIN $man
-              ON xlo <= max_x AND min_x <= xhi
-             AND ylo <= max_y AND min_y <= yhi
-            GROUP BY 1"""
       s"""WITH mz AS ($zorderManifestSql),
           mh AS ($hilbertManifestSql),
           probes(probe_id, xlo, xhi, ylo, yhi) AS (VALUES
               $probes),
-          tz AS (${touched("mz", "blocks_z", "rows_z")}),
-          th AS (${touched("mh", "blocks_h", "rows_h")})
+          tz AS (${touchedSql("mz", "z", Seq("x", "y"))}),
+          th AS (${touchedSql("mh", "h", Seq("x", "y"))})
           SELECT probe_id, blocks_z, rows_z, blocks_h, rows_h
           FROM tz JOIN th USING (probe_id)"""
     })
@@ -972,19 +987,9 @@ object RuntimeQueries extends QueryFamily {
     val (li, x, y, z) = lineitem3Dims(spark, dir)
     val mz = ZOrder.layoutManifest3(li, x, y, z, Z3QBits, Z3BlockShift)
     val mh = ZOrder.hilbertManifest3(li, x, y, z, Z3QBits, Z3BlockShift)
-    val probes = PruneProbes3
-      .toDF("probe_id", "xlo", "xhi", "ylo", "yhi", "zlo", "zhi")
-    def touched(man: DataFrame, bc: String, rc: String) =
-      probes.join(broadcast(man),
-          col("xlo") <= col("max_x") && col("min_x") <= col("xhi") &&
-            col("ylo") <= col("max_y") && col("min_y") <= col("yhi") &&
-            col("zlo") <= col("max_z") && col("min_z") <= col("zhi"), "left")
-        .groupBy("probe_id")
-        .agg(count(col("block")).as(bc),
-          coalesce(sum("n_rows"), lit(0L)).as(rc))
-    touched(mz, "blocks_z", "rows_z")
-      .join(touched(mh, "blocks_h", "rows_h"), Seq("probe_id"))
-      .orderBy("probe_id")
+    probePanel(
+      PruneProbes3.toDF("probe_id", "xlo", "xhi", "ylo", "yhi", "zlo", "zhi"),
+      Seq("x", "y", "z"), mz -> "z", mh -> "h")
   }
 
   query("q278_hilbert3_vs_morton3", hilbert3PruningCompare, {
@@ -992,20 +997,12 @@ object RuntimeQueries extends QueryFamily {
         .map { case (i, xl, xh, yl, yh, zl, zh) =>
           s"($i, $xl, $xh, $yl, $yh, $zl, $zh)" }
         .mkString(",\n              ")
-      def touched(man: String, bc: String, rc: String) =
-        s"""SELECT probe_id, CAST(COUNT(block) AS BIGINT) AS $bc,
-                   CAST(COALESCE(SUM(n_rows), 0) AS BIGINT) AS $rc
-            FROM probes LEFT JOIN $man
-              ON xlo <= max_x AND min_x <= xhi
-             AND ylo <= max_y AND min_y <= yhi
-             AND zlo <= max_z AND min_z <= zhi
-            GROUP BY 1"""
       s"""WITH mz3 AS ($zorder3ManifestSql),
           mh3 AS ($hilbert3ManifestSql),
           probes(probe_id, xlo, xhi, ylo, yhi, zlo, zhi) AS (VALUES
               $probes),
-          tz AS (${touched("mz3", "blocks_z", "rows_z")}),
-          th AS (${touched("mh3", "blocks_h", "rows_h")})
+          tz AS (${touchedSql("mz3", "z", Seq("x", "y", "z"))}),
+          th AS (${touchedSql("mh3", "h", Seq("x", "y", "z"))})
           SELECT probe_id, blocks_z, rows_z, blocks_h, rows_h
           FROM tz JOIN th USING (probe_id)"""
     })
@@ -1038,17 +1035,8 @@ object RuntimeQueries extends QueryFamily {
     val flat = ZOrder.rawHilbertManifest(orders, x, y, ZQBits, ZBlockShift)
     val two = ZOrder.twoLevelHilbertManifest(orders, x, y, ObBits, ZQBits,
       ZBlockShift)
-    val probes = TwoLevelProbes.toDF("probe_id", "xlo", "xhi", "ylo", "yhi")
-    def touched(man: DataFrame, bc: String, rc: String) =
-      probes.join(broadcast(man),
-          col("xlo") <= col("max_x") && col("min_x") <= col("xhi") &&
-            col("ylo") <= col("max_y") && col("min_y") <= col("yhi"), "left")
-        .groupBy("probe_id")
-        .agg(count(col("block")).as(bc),
-          coalesce(sum("n_rows"), lit(0L)).as(rc))
-    touched(flat, "blocks_flat", "rows_flat")
-      .join(touched(two, "blocks_two", "rows_two"), Seq("probe_id"))
-      .orderBy("probe_id")
+    probePanel(TwoLevelProbes.toDF("probe_id", "xlo", "xhi", "ylo", "yhi"),
+      Seq("x", "y"), flat -> "flat", two -> "two")
   }
 
   // q238 — both zone maps rebuilt in SQL: the flat walk on global

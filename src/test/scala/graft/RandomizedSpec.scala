@@ -470,32 +470,6 @@ class RandomizedSpec extends AnyFunSuite {
     }
   }
 
-  test("q231: weighted median is bucketScale-invariant and matches a reference") {
-    import graft.operators.Median
-    val rows = (0 until 1500).map { _ =>
-      (rnd.nextInt(5).toLong, // group
-        (rnd.nextInt(40000) - 20000) / 100.0, // money-like, ties likely
-        rnd.nextInt(6).toLong) // weights incl. ZERO
-    }
-    val df = rows.toDF("g", "v", "w")
-    // driver reference: smallest v with 2·cumw >= total (zero-weight
-    // rows carry no mass; all-zero groups undefined => excluded)
-    val expected = rows.groupBy(_._1).flatMap { case (g, rs) =>
-      val tw = rs.map(_._3).sum
-      if (tw == 0) None
-      else {
-        val sorted = rs.sortBy(_._2)
-        var cw = 0L
-        Some(g -> sorted.find { r => cw += r._3; 2 * cw >= tw }.get._2)
-      }
-    }
-    for (scale <- Seq(math.pow(2, -20), 1.0 / 64, 1.0, 2048.0, math.pow(2, 20))) {
-      val got = Median.groupedWeightedMedian(df, "g", "v", "w", "m", scale)
-        .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-      assert(got == expected, s"bucketScale=$scale: $got != $expected")
-    }
-  }
-
   test("q233: span mining matches a driver replay, glue-char collisions included") {
     import graft.operators.Collocations
     // tiny vocabulary forces heavy bigram repetition; some words carry

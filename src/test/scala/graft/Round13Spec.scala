@@ -134,20 +134,6 @@ class Round13Spec extends AnyFunSuite {
     assertReplicaEquality(single, union, Seq("node", "label"), "q206")
   }
 
-  // --- Theil–Sen robust trend --------------------------------------------------------
-
-  test("theilSenFromDaily shrugs off the outlier that would own the OLS fit") {
-    // y = 2x on days 0..3, then a corrupted day 4 (y = 1000): 6 of the
-    // 10 pairwise slopes are exactly 2, so the median is 2.0 — the
-    // breakdown property that motivates the estimator
-    val daily = Seq(("A", 0L, 0L), ("A", 1L, 2L), ("A", 2L, 4L),
-      ("A", 3L, 6L), ("A", 4L, 1000L)).toDF("l_returnflag", "x", "y")
-    val r = AnalyticsQueries.theilSenFromDaily(daily).collect()
-    assert(r.length == 1)
-    assert(r.head.getLong(1) == 10L)
-    assert(r.head.getDouble(2) == 2.0)
-  }
-
   // --- Kneser–Ney continuation counts --------------------------------------------------
 
   test("kneserNeyCounts separates frequency from context diversity") {

@@ -53,25 +53,6 @@ class Round14Spec extends AnyFunSuite {
       s"manifest rows $manRows != written rows $dataRows")
   }
 
-  test("q231: the generalized weighted median equals q196's inline decomposition bit-for-bit") {
-    val twin = SparkEntry.queries("q231_weighted_median_decomposed")(spark, sf)
-    val inline = SparkEntry.queries("q196_weighted_median")(spark, sf)
-    assert(twin.exceptAll(inline).isEmpty && inline.exceptAll(twin).isEmpty)
-  }
-
-  test("groupedWeightedMedian ignores NULL values and weights, exact on a hand fixture") {
-    import spark.implicits._
-    val df = Seq[(String, java.lang.Double, java.lang.Long)](
-      ("a", 1.0, 1L), ("a", 2.0, 2L), ("a", 3.0, 1L), // tw=4, crossing at 2.0
-      ("a", null, 9L), ("a", 5.0, null),              // both ignored
-      ("b", 10.0, 1L)).toDF("g", "v", "w")
-    val got = graft.operators.Median
-      .groupedWeightedMedian(df, "g", "v", "w", "wm")
-      .orderBy("g").collect()
-    assert(got.map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq ==
-      Seq(("a", 4L, 2.0), ("b", 1L, 10.0)))
-  }
-
   // --- q233: collocation spans -------------------------------------------------------
 
   test("collocationSpans surfaces the planted trigram across rounds (hand-computed lifts)") {

@@ -2,13 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Median
 import graft.queries._
 
 /** Round-15 contracts: the condensation-DAG depths on a planted
-  * hand-computable graph, the weighted-quantile decomposition's two
-  * exactness anchors (unit weights ≡ the unweighted decomposition;
-  * hand-expanded fixture), and the PQ ADC scan's seed-exactness (a
+  * hand-computable graph and the PQ ADC scan's seed-exactness (a
   * corpus vector that IS a codebook seed must score the exact squared
   * L2 distance to every query — the lookup table contributes the whole
   * distance, so any error in LUT construction, code pivot, or the
@@ -41,52 +38,6 @@ class Round15Spec extends AnyFunSuite {
     val rows = res.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     // SCC {1,2,3} (id 1, depth 0) → 4 → 5 → 6
     assert(rows == Map(1L -> 0L, 4L -> 1L, 5L -> 2L, 6L -> 3L))
-  }
-
-  test("q235: unit weights reduce to the unweighted quantile decomposition bit-for-bit") {
-    val base = Tables.lineitem(spark, sf)
-      .select(col("l_returnflag").as("g"),
-        col("l_extendedprice").cast("double").as("v"))
-      .withColumn("w", lit(1L))
-    val weighted = Median.groupedWeightedQuantiles(base, "g", "v", "w",
-        AnalyticsQueries.WqQuantiles, bucketScale = 1.0 / 64.0)
-      .select(col("g"), col("q"), col("quantile"))
-      .orderBy("g", "q").collect()
-    val plain = Median.groupedExactQuantiles(base, "g", "v",
-        AnalyticsQueries.WqQuantiles, bucketScale = 1.0 / 64.0)
-      .orderBy("g", "q").collect()
-    assert(weighted.length == plain.length && weighted.length > 0)
-    weighted.zip(plain).foreach { case (a, b) =>
-      assert(a.getString(0) == b.getString(0) &&
-        a.getDouble(1) == b.getDouble(1), s"$a vs $b")
-      assert(a.getDouble(2) == b.getDouble(2),
-        s"group ${a.getString(0)} q=${a.getDouble(1)}: " +
-          s"${a.getDouble(2)} != ${b.getDouble(2)}")
-    }
-  }
-
-  test("q235: hand-expanded fixture (weights as copies)") {
-    import spark.implicits._
-    // expanded multiset: 10,10,20,20,20,30 — quantile_cont positions
-    val df = Seq(("a", 10.0, 2L), ("a", 20.0, 3L), ("a", 30.0, 1L))
-      .toDF("g", "v", "w")
-    val got = Median.groupedWeightedQuantiles(df, "g", "v", "w",
-        Seq(0.0, 0.25, 0.5, 1.0), bucketScale = 1.0)
-      .orderBy("q").collect()
-      .map(r => (r.getDouble(1), r.getLong(2), r.getDouble(3))).toSeq
-    // pos = q·5: 0 → 10; 1.25 → 10·.75 + 20·.25 = 12.5; 2.5 → 20; 5 → 30
-    assert(got == Seq((0.0, 6L, 10.0), (0.25, 6L, 12.5),
-      (0.5, 6L, 20.0), (1.0, 6L, 30.0)))
-  }
-
-  test("q235: zero-weight rows carry no rank; all-zero groups are excluded") {
-    import spark.implicits._
-    val df = Seq(("a", 1.0, 0L), ("a", 2.0, 1L), ("b", 9.0, 0L))
-      .toDF("g", "v", "w")
-    val got = Median.groupedWeightedQuantiles(df, "g", "v", "w", Seq(0.5))
-      .collect()
-    assert(got.length == 1 && got(0).getString(0) == "a" &&
-      got(0).getDouble(3) == 2.0)
   }
 
   test("q237: a corpus vector that IS a codebook seed scores the exact squared L2") {
