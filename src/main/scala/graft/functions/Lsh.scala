@@ -69,8 +69,6 @@ object Lsh {
     */
   val Mh64: MinHashGeometry = MinHashGeometry(64, 8)
 
-  private def litArr(xs: Seq[Long]): Column = array(xs.map(lit): _*)
-
   /** Per-element polynomial fingerprints of a string array. */
   def fingerprints(strings: Column): Column =
     transform(strings, s => TextAnalysis.rollingFingerprint(s))
@@ -106,42 +104,6 @@ object Lsh {
   val GA: Long = 2654435761L
   val GB: Long = 2246822519L
   val TwoPow32: Long = 4294967296L
-
-  private val pow2: Seq[Long] = (0 until SimBits).map(j => 1L << j)
-
-  /** Mixed 32-bit hashes of the element fingerprints (SimHash stage 1).
-    * Materialize this as its own column: referencing it from the 32
-    * per-bit majority counts below would otherwise re-inline (and
-    * re-evaluate) the whole upstream fingerprint fold per bit.
-    */
-  def gvals(fps: Column): Column =
-    transform(fps, v => (lit(GA) * v + lit(GB)) % lit(TwoPow32))
-
-  /** SimHash fingerprint from pre-materialized g-values: bit j is set when
-    * elements with bit j set are a (tie-wins) majority. Bit extraction
-    * uses `floor(v / 2^j) mod 2` — division by a power of two is exact in
-    * binary floating point, and `floor` (not a raw cast) keeps Spark and
-    * DuckDB identical (DuckDB's double→int cast rounds).
-    */
-  def simHashFromG(gs: Column): Column = {
-    val pw = litArr(pow2)
-    aggregate(
-      transform(sequence(lit(0), lit(SimBits - 1)), j => {
-        val p = element_at(pw, j + 1)
-        val cnt1 = size(filter(gs, v =>
-          floor(v.cast("double") / p) % 2 === 1))
-        when(cnt1 * 2 >= size(gs), p).otherwise(lit(0L))
-      }),
-      lit(0L), (acc, x) => acc + x)
-  }
-
-  /** SimHash of a set of element fingerprints (single-expression form —
-    * prefer staging gvals/simHashFromG in separate projections).
-    */
-  def simHash(fps: Column): Column = simHashFromG(gvals(fps))
-
-  /** Hamming distance between two SimHash fingerprints. */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   // ---- Parameterized SimHash geometry -------------------------------------
 

@@ -72,33 +72,36 @@ object Ivf {
     */
   def annIvfTopK(emb: DataFrame, idCol: String, vecCol: String, labelCol: String,
                  queryMaxId: Long, nprobe: Int, k: Int): DataFrame = {
-    val e = NearDup.withNorm(emb, idCol, vecCol)
+    val corpus = NearDup.withNorm(emb, idCol, vecCol)
       .join(emb.select(col(idCol), col(labelCol)), idCol)
-    val q = e.filter(col(idCol) < queryMaxId)
-      .select(col(idCol).as("query_id"), col(vecCol).as("qe"), col("nrm").as("qn"))
-    val corpus = e.filter(col(idCol) >= queryMaxId)
+      .filter(col(idCol) >= queryMaxId)
       .select(col(idCol).as("neighbor_id"), col(labelCol),
         col(vecCol).as("ce"), col("nrm").as("cn"))
-    val cents = centroids(emb.filter(col(idCol) >= queryMaxId), vecCol, labelCol)
+    NearDup.cosTopK(
+      probeLists(emb, idCol, vecCol, labelCol, queryMaxId, nprobe)
+        .join(corpus, labelCol), k)
+  }
 
-    val wProbe = org.apache.spark.sql.expressions.Window
+  /** The coarse probe: each query's (id < `queryMaxId`) `nprobe` lists by
+    * cosine to their exact-decimal sum centroid, ties to the lower label.
+    * Output: (query_id, qe, qn, labelCol) — one row per probed list.
+    */
+  private[graft] def probeLists(emb: DataFrame, idCol: String, vecCol: String,
+                                labelCol: String, queryMaxId: Long,
+                                nprobe: Int): DataFrame = {
+    val q = NearDup.withNorm(emb, idCol, vecCol)
+      .filter(col(idCol) < queryMaxId)
+      .select(col(idCol).as("query_id"), col(vecCol).as("qe"), col("nrm").as("qn"))
+    val cents = centroids(emb.filter(col(idCol) >= queryMaxId), vecCol, labelCol)
+    val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("ccos").desc, col(labelCol))
-    val probes = q.crossJoin(broadcast(cents))
+    q.crossJoin(broadcast(cents))
       .withColumn("ccos",
         Similarity.dot(col("qe"), col("centroid")) /
           (col("qn") * sqrt(Similarity.dot(col("centroid"), col("centroid")))))
-      .withColumn("lr", row_number().over(wProbe))
+      .withColumn("lr", row_number().over(w))
       .filter(col("lr") <= nprobe)
       .select("query_id", "qe", "qn", labelCol)
-
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    probes.join(corpus, labelCol)
-      .withColumn("cos",
-        Similarity.cosineFrom(Similarity.dot(col("qe"), col("ce")), col("qn"), col("cn")))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
   }
 
   /** List assignment against a trained quantizer: argmax cosine over the

@@ -38,12 +38,48 @@ object NearDup {
     */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         n: Int, threshold: Double,
-                        maxPostings: Int = DefaultMaxPostings): DataFrame = {
+                        maxPostings: Int = DefaultMaxPostings): DataFrame =
+    sharedShingleCounts(docs, idCol, textCol, n, maxPostings)
+      .withColumn("jaccard",
+        col("common").cast("double") / (col("na") + col("nb") - col("common")))
+      .filter(col("jaccard") >= lit(threshold))
+      .select("doc_a", "doc_b", "common", "jaccard")
+
+  /** Asymmetric CONTAINMENT pairs — the truncation/expansion duplicates
+    * symmetric Jaccard structurally misses: a 200-gram excerpt fully
+    * inside a 2000-gram page has Jaccard 0.1 (below any dedup threshold,
+    * and MinHash bands recall BY Jaccard so LSH won't surface it either)
+    * but containment |A∩B|/|A| = 1.0. Same df-capped posting-list join
+    * as `ngramJaccardPairs` — the shared-shingle count is what both
+    * scores need; only the normalization differs — kept when EITHER
+    * direction's containment clears `threshold`. Same scale posture:
+    * never an n² pair matrix, per-shingle fan-out bounded by the df cap.
+    * Output: (doc_a, doc_b, common, cont_a_in_b, cont_b_in_a, jaccard),
+    * doc_a < doc_b.
+    */
+  def ngramContainmentPairs(docs: DataFrame, idCol: String, textCol: String,
+                            n: Int, threshold: Double,
+                            maxPostings: Int = DefaultMaxPostings): DataFrame =
+    sharedShingleCounts(docs, idCol, textCol, n, maxPostings)
+      .withColumn("cont_a_in_b", col("common").cast("double") / col("na"))
+      .withColumn("cont_b_in_a", col("common").cast("double") / col("nb"))
+      .filter(greatest(col("cont_a_in_b"), col("cont_b_in_a")) >= lit(threshold))
+      .withColumn("jaccard",
+        col("common").cast("double") / (col("na") + col("nb") - col("common")))
+      .select("doc_a", "doc_b", "common", "cont_a_in_b", "cont_b_in_a", "jaccard")
+
+  /** (doc_a, doc_b, na, nb, common) for every doc pair sharing a shingle
+    * of the df-capped domain (see object doc): na/nb are the capped set
+    * sizes, common the shared-shingle count — what both the Jaccard and
+    * the containment scores need. doc_a < doc_b.
+    */
+  private def sharedShingleCounts(docs: DataFrame, idCol: String, textCol: String,
+                                  n: Int, maxPostings: Int): DataFrame = {
     val ex0 = shingleSets(docs, idCol, textCol, n)
       .select(col(idCol), explode(col("sh")).as("s"))
     // df cap: aggregate (partial map-side combine absorbs hot keys), then
     // a semi-join keeps only informative shingles. Set sizes are counted
-    // AFTER the cap so both join sides and the Jaccard denominator see the
+    // AFTER the cap so both join sides and the score denominators see the
     // same shingle domain.
     val ok = ex0.groupBy("s").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxPostings)
@@ -64,48 +100,6 @@ object NearDup {
         col("l.n").as("na"), col("r.n").as("nb"))
       .groupBy("doc_a", "doc_b", "na", "nb")
       .agg(count(lit(1)).as("common"))
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("na") + col("nb") - col("common")))
-      .filter(col("jaccard") >= lit(threshold))
-      .select("doc_a", "doc_b", "common", "jaccard")
-  }
-
-  /** Asymmetric CONTAINMENT pairs — the truncation/expansion duplicates
-    * symmetric Jaccard structurally misses: a 200-gram excerpt fully
-    * inside a 2000-gram page has Jaccard 0.1 (below any dedup threshold,
-    * and MinHash bands recall BY Jaccard so LSH won't surface it either)
-    * but containment |A∩B|/|A| = 1.0. Same df-capped posting-list join
-    * as `ngramJaccardPairs` — the shared-shingle count is what both
-    * scores need; only the normalization differs — kept when EITHER
-    * direction's containment clears `threshold`. Same scale posture:
-    * never an n² pair matrix, per-shingle fan-out bounded by the df cap.
-    * Output: (doc_a, doc_b, common, cont_a_in_b, cont_b_in_a, jaccard),
-    * doc_a < doc_b.
-    */
-  def ngramContainmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                            n: Int, threshold: Double,
-                            maxPostings: Int = DefaultMaxPostings): DataFrame = {
-    val ex0 = shingleSets(docs, idCol, textCol, n)
-      .select(col(idCol), explode(col("sh")).as("s"))
-    val ok = ex0.groupBy("s").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxPostings)
-      .select("s")
-    val ex = ex0.join(ok, Seq("s"), "left_semi")
-      .withColumn("n", count(lit(1))
-        .over(org.apache.spark.sql.expressions.Window.partitionBy(idCol)))
-    val l = ex.alias("l")
-    val r = ex.alias("r")
-    l.join(r, col("l.s") === col("r.s") && col(s"l.$idCol") < col(s"r.$idCol"))
-      .select(col(s"l.$idCol").as("doc_a"), col(s"r.$idCol").as("doc_b"),
-        col("l.n").as("na"), col("r.n").as("nb"))
-      .groupBy("doc_a", "doc_b", "na", "nb")
-      .agg(count(lit(1)).as("common"))
-      .withColumn("cont_a_in_b", col("common").cast("double") / col("na"))
-      .withColumn("cont_b_in_a", col("common").cast("double") / col("nb"))
-      .filter(greatest(col("cont_a_in_b"), col("cont_b_in_a")) >= lit(threshold))
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("na") + col("nb") - col("common")))
-      .select("doc_a", "doc_b", "common", "cont_a_in_b", "cont_b_in_a", "jaccard")
   }
 
   /** EXACT Jaccard pairs via PPJoin-style PREFIX FILTERING (Chaudhuri et
@@ -378,11 +372,19 @@ object NearDup {
     val cb = banded(e.filter(col(idCol) >= queryMaxId), bits => Lsh.planeBandKeys(bits))
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("ce"), col("nrm").as("cn"),
         col("band"), col("key"))
+    cosTopK(cb.join(broadcast(qb), Seq("band", "key"))
+      .dropDuplicates("query_id", "neighbor_id"), k)
+  }
+
+  /** Per-query top-k by exact cosine over (query_id, qe, qn, neighbor_id,
+    * ce, cn) candidate rows, ties to the lower neighbor_id — the one
+    * ranking tail of the brute-force, LSH and IVF searches.
+    * Output: (query_id, neighbor_id, cos, rank).
+    */
+  private[operators] def cosTopK(cand: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    cb.join(broadcast(qb), Seq("band", "key"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("cos",
+    cand.withColumn("cos",
         Similarity.cosineFrom(Similarity.dot(col("qe"), col("ce")), col("qn"), col("cn")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -494,13 +496,6 @@ object NearDup {
       col("embedding").as("qe"), col("nrm").as("qn"))
     val c = corpus.select(col("vec_id").as("neighbor_id"),
       col("embedding").as("ce"), col("nrm").as("cn"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    c.crossJoin(broadcast(q))
-      .withColumn("cos",
-        Similarity.cosineFrom(Similarity.dot(col("qe"), col("ce")), col("qn"), col("cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+    cosTopK(c.crossJoin(broadcast(q)), k)
   }
 }

@@ -287,8 +287,7 @@ object AnnQueries extends QueryFamily {
   val BigKAssignMaxId = 1000L
 
   def ivfAssignBigK(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val emb = embV(spark, dir)
     val base = emb.filter(col("vec_id") >= AnnQueryMaxId)
       .orderBy("vec_id").limit(BigKLists)
       .select("v").collect().map(_.getSeq[Double](0).toSeq).toSeq
@@ -460,16 +459,8 @@ object AnnQueries extends QueryFamily {
 
   def pqCodes(spark: SparkSession, dir: String): DataFrame = {
     val subDim = graft.functions.Lsh.Dim / PqSub
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    // bounded driver state: PqCodes seed vectors (the q59/q61 pattern)
-    val seeds = emb.filter(col("vec_id") >= AnnQueryMaxId)
-      .orderBy("vec_id").limit(PqCodes)
-      .select("v").collect().map(_.getSeq[Double](0))
-    val cents = for (s <- 0 until PqSub; c <- seeds.indices)
-      yield (s, c, seeds(c).slice(s * subDim, (s + 1) * subDim))
-    import spark.implicits._
-    val cdf = cents.toDF("subspace", "code", "cent")
+    val emb = embV(spark, dir)
+    val cdf = subCodebookDf(spark, seedSubCodebook(pqSeeds(emb), subDim))
     val sub = emb.select(col("vec_id"),
         explode(array((0 until PqSub).map(s =>
           struct(lit(s).as("subspace"),
@@ -502,12 +493,7 @@ object AnnQueries extends QueryFamily {
   // extended to streams).
   def streamedPqAssign(spark: SparkSession, dir: String): DataFrame = {
     val subDim = graft.functions.Lsh.Dim / PqSub
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    // bounded driver state: PqCodes seed vectors (the q59/q61/q223 draw)
-    val seeds = emb.filter(col("vec_id") >= AnnQueryMaxId)
-      .orderBy("vec_id").limit(PqCodes)
-      .select("v").collect().map(_.getSeq[Double](0))
+    val seeds = pqSeeds(embV(spark, dir))
     import spark.implicits._
     // seeds.indices, not 0 until PqCodes: the batch twin q223 iterates
     // the ACTUAL seed count, so a short/filtered corpus (< PqCodes
@@ -553,16 +539,8 @@ object AnnQueries extends QueryFamily {
   // left-associated expression; ties break on vec_id. The wide code
   // row (one row per vector, 4 code columns) is the in-memory layout a
   // real PQ index ships.
-  def pqAdcTopK(spark: SparkSession, dir: String): DataFrame = {
-    val scored = adcScores(spark, dir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("adc_dist2"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= AnnK)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("adc_dist2"))
-      .orderBy("query_id", "rank")
-  }
+  def pqAdcTopK(spark: SparkSession, dir: String): DataFrame =
+    adcTopK(adcScores(spark, dir))
 
   // q237 — ADC replay: the same codes CTE as q223, a per-query LUT of
   // subspace distances (list_reduce fold ≡ the driver's fold from
@@ -581,62 +559,96 @@ object AnnQueries extends QueryFamily {
     * surviving top-k.
     */
   private[graft] def adcScores(spark: SparkSession, dir: String): DataFrame =
-    pqWideCodes(spark, dir).crossJoin(broadcast(pqLutDf(spark, dir)))
-      .select(col("query_id"), col("vec_id"), adcDist2.as("adc_dist2"))
+    adcScored(pqWideCodes(spark, dir).crossJoin(broadcast(pqLutDf(spark, dir))),
+      PqSub)
 
-  /** The 4-lookup fixed-order ADC sum over (c0..c3) × (t0..t3) rows. */
-  private def adcDist2 =
-    element_at(col("t0"), col("c0").cast("int") + 1) +
-      element_at(col("t1"), col("c1").cast("int") + 1) +
-      element_at(col("t2"), col("c2").cast("int") + 1) +
-      element_at(col("t3"), col("c3").cast("int") + 1)
-
-  /** Per-query LUT frame (query_id, t0..t3): lut(s)(c) = ‖q_s −
-    * cent_{s,c}‖², folded from 0.0 in index order — the exact shape the
-    * oracle's list_reduce yields. Bounded driver state (queries ×
-    * PqSub × PqCodes doubles); broadcast by the consumers.
+  /** (query_id, vec_id, adc_dist2) of rows carrying wide codes c0..c{n-1}
+    * and their query's LUT `tabs`: the n-lookup ADC sum, one fixed
+    * left-associated expression (tabs[s] is 0-based in Spark SQL).
     */
-  private def pqLutDf(spark: SparkSession, dir: String): DataFrame = {
-    val subDim = graft.functions.Lsh.Dim / PqSub
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val seeds = emb.filter(col("vec_id") >= AnnQueryMaxId)
-      .orderBy("vec_id").limit(PqCodes)
-      .select("v").collect().map(_.getSeq[Double](0))
-    val qvs = emb.filter(col("vec_id") < AnnQueryMaxId)
-      .orderBy("vec_id")
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val luts = qvs.map { case (qid, qv) =>
-      val tabs = (0 until PqSub).map { sp =>
-        seeds.indices.map { c =>
-          var acc = 0.0
-          var i = 0
-          while (i < subDim) {
-            val dlt = qv(sp * subDim + i) - seeds(c)(sp * subDim + i)
-            acc += dlt * dlt
-            i += 1
-          }
-          acc
-        }
-      }
-      (qid, tabs(0), tabs(1), tabs(2), tabs(3))
-    }.toSeq
-    import spark.implicits._
-    luts.toDF("query_id", "t0", "t1", "t2", "t3")
+  private def adcScored(joined: DataFrame, nSub: Int): DataFrame =
+    joined.select(col("query_id"), col("vec_id"),
+      (0 until nSub).map(s => expr(s"tabs[$s][c$s]")).reduce(_ + _)
+        .as("adc_dist2"))
+
+  /** Per-query top-AnnK of an ADC score frame, ties to the lower vec_id —
+    * the one ranking tail of q237, q239 and the probed-ADC core.
+    */
+  private def adcTopK(scored: DataFrame): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("query_id").orderBy(col("adc_dist2"), col("vec_id"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= AnnK)
+      .select(col("query_id"), col("rank").cast("long").as("rank"),
+        col("vec_id"), col("adc_dist2"))
+      .orderBy("query_id", "rank")
   }
 
-  /** Wide PQ code rows for the corpus (one row, PqSub code columns) —
-    * the in-memory layout a real PQ index ships.
+  /** Per-query LUT frame (query_id, tabs) over the seed codebook:
+    * tabs(s)(c) = ‖q_s − cent_{s,c}‖², folded from 0.0 in index order —
+    * the exact shape the oracle's list_reduce yields. Bounded driver
+    * state (queries × PqSub × PqCodes doubles); broadcast by the
+    * consumers.
     */
+  private def pqLutDf(spark: SparkSession, dir: String): DataFrame = {
+    val emb = embV(spark, dir)
+    val cbSub = seedSubCodebook(pqSeeds(emb), graft.functions.Lsh.Dim / PqSub)
+    import spark.implicits._
+    emb.filter(col("vec_id") < AnnQueryMaxId).orderBy("vec_id").collect()
+      .map(r => (r.getLong(0), lutTabs(r.getSeq[Double](1), cbSub)))
+      .toSeq.toDF("query_id", "tabs")
+  }
+
+  /** One query's ADC tables [subspace][code]: the squared L2 from its
+    * subvector to each code's subvector.
+    */
+  private def lutTabs(qv: Seq[Double],
+                      cbSub: IndexedSeq[IndexedSeq[Seq[Double]]])
+      : IndexedSeq[IndexedSeq[Double]] =
+    cbSub.indices.map(s =>
+      cbSub(s).map(c => l2Fold(qv, s * c.length, c, 0, c.length)))
+
+  /** Squared L2 over `len` positions of `a` from `aFrom` and `b` from
+    * `bFrom`, folded from 0.0 in index order — the driver-side twin of
+    * the oracle's list_reduce.
+    */
+  private def l2Fold(a: Seq[Double], aFrom: Int, b: Seq[Double], bFrom: Int,
+                     len: Int): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < len) {
+      val d = a(aFrom + i) - b(bFrom + i)
+      acc += d * d
+      i += 1
+    }
+    acc
+  }
+
+  /** One row per `keys` with the per-subspace codes pivoted into
+    * columns c0..c{nSub-1} — the in-memory layout a real PQ index ships.
+    */
+  private def wideCodes(codes: DataFrame, nSub: Int, keys: String*): DataFrame = {
+    val pivots = (0 until nSub).map(s =>
+      min(when(col("subspace") === s, col("code"))).as(s"c$s"))
+    codes.groupBy(keys.map(col): _*).agg(pivots.head, pivots.tail: _*)
+  }
+
+  /** Wide PQ code rows for the corpus. */
   private def pqWideCodes(spark: SparkSession, dir: String): DataFrame =
-    pqCodes(spark, dir)
-      .filter(col("vec_id") >= AnnQueryMaxId)
-      .groupBy("vec_id")
-      .agg(
-        min(when(col("subspace") === 0, col("code"))).as("c0"),
-        min(when(col("subspace") === 1, col("code"))).as("c1"),
-        min(when(col("subspace") === 2, col("code"))).as("c2"),
-        min(when(col("subspace") === 3, col("code"))).as("c3"))
+    wideCodes(pqCodes(spark, dir).filter(col("vec_id") >= AnnQueryMaxId),
+      PqSub, "vec_id")
+
+  /** The embeddings as (vec_id, v: array<double>, extra…). */
+  private def embV(spark: SparkSession, dir: String, extra: String*): DataFrame =
+    Tables.embeddings(spark, dir).select(col("vec_id") +:
+      col("embedding").cast("array<double>").as("v") +: extra.map(col): _*)
+
+  /** The PqCodes lowest corpus vectors — the q223 codebook seeds (bounded
+    * driver state, the q59/q61 draw).
+    */
+  private def pqSeeds(emb: DataFrame): Array[Seq[Double]] =
+    emb.filter(col("vec_id") >= AnnQueryMaxId).orderBy("vec_id").limit(PqCodes)
+      .select("v").collect().map(_.getSeq[Double](0))
 
   // --- q239: IVF + PQ — the composed billion-scale ANN read path -----------------------
   // The full story assembled from its gated parts: q33's coarse probe
@@ -652,34 +664,14 @@ object AnnQueries extends QueryFamily {
   // IVF-PQ cost model, expressed in three joins.
   def ivfPqSearch(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val e = NearDup.withNorm(emb, "vec_id", "embedding")
-    val q = e.filter(col("vec_id") < AnnQueryMaxId)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"))
-    val cents = Ivf.centroids(
-      emb.filter(col("vec_id") >= AnnQueryMaxId), "embedding", "label")
-    val wProbe = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("ccos").desc, col("label"))
-    val probes = q.crossJoin(broadcast(cents))
-      .withColumn("ccos",
-        graft.functions.Similarity.dot(col("qe"), col("centroid")) /
-          (col("qn") * sqrt(graft.functions.Similarity
-            .dot(col("centroid"), col("centroid")))))
-      .withColumn("lr", row_number().over(wProbe))
-      .filter(col("lr") <= IvfNProbe)
+    val probes = Ivf.probeLists(emb, "vec_id", "embedding", "label",
+        AnnQueryMaxId, IvfNProbe)
       .select("query_id", "label")
     val cand = pqWideCodes(spark, dir)
       .join(emb.select(col("vec_id"), col("label")), "vec_id")
       .join(broadcast(probes), "label")
-    val scored = cand.join(broadcast(pqLutDf(spark, dir)), "query_id")
-      .select(col("query_id"), col("vec_id"), adcDist2.as("adc_dist2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("adc_dist2"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= AnnK)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("adc_dist2"))
-      .orderBy("query_id", "rank")
+    adcTopK(adcScored(cand.join(broadcast(pqLutDf(spark, dir)), "query_id"),
+      PqSub))
   }
 
   // q239 — the q33 probe CTEs (centroid cosine, top-nprobe lists per
@@ -831,80 +823,59 @@ object AnnQueries extends QueryFamily {
   query("q260_trained_recall", trainedRecall, residualRecallSql(ResTrainIters))
 
   /** The residual IVF-PQ read path, parameterized by Lloyd rounds on
-    * the subspace codebooks (0 = q246's untrained seeds).
+    * the subspace codebooks (0 = q246's untrained seeds): the probed-ADC
+    * core at the 4×16 geometry, seeded from the PqCodes lowest-id
+    * residuals and trained per call.
     */
   private[graft] def residualAdcSearch(spark: SparkSession, dir: String,
-                                       trainIters: Int): DataFrame = {
-    val subDim = graft.functions.Lsh.Dim / PqSub
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
-        col("label"))
+                                       trainIters: Int): DataFrame =
+    probedAdcSearch(embV(spark, dir, "label"), PqSub, IvfNProbe,
+      encodeRaw = false, (res, sub) => trainSubCodebook(sub,
+        seedSubCodebook(seedRows(res, PqCodes), graft.functions.Lsh.Dim / PqSub),
+        trainIters))
+
+  /** The probed IVF-PQ ADC read path over a (vec_id, label, v) frame —
+    * one implementation behind q246/q259 (4×16, residual, nprobe 9) and
+    * q271/q272 (8×256, residual or raw, nprobe 2). The coarse quantizer
+    * is L2-to-mean over `Ivf.meanCentroids`; the corpus is coded (the
+    * residual to its list mean, or the raw vector when `encodeRaw`) into
+    * `nSub` subspaces against `codebook(res, sub)`; each query probes its
+    * `nprobe` nearest means (ties to the lower label) and gets one ADC
+    * table per probed list, built from its own residual to that list's
+    * mean (or the raw query). One broadcast join of the wide code rows
+    * with the (query, label)-keyed tables restricts candidates to probed
+    * lists and delivers the tables; the fixed-order ADC sum ranks them.
+    * Driver state stays bounded: lists × dim means, the codebook, and
+    * queries × nprobe × nSub × codes doubles.
+    */
+  private def probedAdcSearch(emb: DataFrame, nSub: Int, nprobe: Int,
+      encodeRaw: Boolean,
+      codebook: (DataFrame, DataFrame) => IndexedSeq[IndexedSeq[Seq[Double]]])
+      : DataFrame = {
+    val spark = emb.sparkSession
+    import spark.implicits._
     val corpus = emb.filter(col("vec_id") >= AnnQueryMaxId)
     val means = Ivf.meanCentroids(corpus, "v", "label")
-    val (res, cb) = residualsAndCodebook(corpus, means)
-    val sub = subspaceFrame(res, subDim)
-    val seed = seedSubCodebook(cb, subDim)
-    val cbSub =
-      if (trainIters == 0) seed else trainSubCodebook(sub, seed, trainIters)
-    val codes = assignSubCodes(sub, subCodebookDf(spark, cbSub))
-    val wide = codes.groupBy("vec_id", "label")
-      .agg(
-        min(when(col("subspace") === 0, col("code"))).as("c0"),
-        min(when(col("subspace") === 1, col("code"))).as("c1"),
-        min(when(col("subspace") === 2, col("code"))).as("c2"),
-        min(when(col("subspace") === 3, col("code"))).as("c3"))
-    // bounded driver state: coarse means (lists × dim) + query vectors →
-    // probe sets and per-(query, list) ADC tables
-    import spark.implicits._
-    val meanArr = means.collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
+    val res =
+      if (encodeRaw) corpus.select(col("vec_id"), col("label"), col("v").as("r"))
+      else residualFrame(corpus, means)
+    val sub = subspaceFrame(res, graft.functions.Lsh.Dim / nSub, nSub)
+    val cbSub = codebook(res, sub)
+    val wide = wideCodes(assignSubCodes(sub, subCodebookDf(spark, cbSub)),
+      nSub, "vec_id", "label")
+    val meanArr = means.collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
     val qvs = emb.filter(col("vec_id") < AnnQueryMaxId).orderBy("vec_id")
       .select("vec_id", "v").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    def foldL2(a: Seq[Double], b: Seq[Double], from: Int, len: Int): Double = {
-      var acc = 0.0
-      var i = 0
-      while (i < len) {
-        val d = a(from + i) - b(from + i)
-        acc += d * d
-        i += 1
-      }
-      acc
-    }
-    // as foldL2 but the codebook side is a subDim-vector indexed from 0
-    // (identical arithmetic to the pre-training slice layout)
-    def foldL2Sub(a: Seq[Double], b: Seq[Double], from: Int): Double = {
-      var acc = 0.0
-      var i = 0
-      while (i < b.length) {
-        val d = a(from + i) - b(i)
-        acc += d * d
-        i += 1
-      }
-      acc
-    }
     val luts = qvs.flatMap { case (qid, qv) =>
-      val probed = meanArr
-        .map { case (l, m) => (foldL2(qv, m, 0, qv.length), l) }
-        .sorted.take(IvfNProbe)
-      probed.map { case (_, l) =>
-        val m = meanArr.find(_._1 == l).get._2
-        val qr = qv.indices.map(i => qv(i) - m(i))
-        val tabs = (0 until PqSub).map { s =>
-          cbSub(s).indices.map(c => foldL2Sub(qr, cbSub(s)(c), s * subDim))
+      meanArr.sortBy { case (l, m) => (l2Fold(qv, 0, m, 0, qv.length), l) }
+        .take(nprobe)
+        .map { case (l, m) =>
+          val enc = if (encodeRaw) qv else qv.indices.map(i => qv(i) - m(i))
+          (qid, l, lutTabs(enc, cbSub))
         }
-        (qid, l, tabs(0), tabs(1), tabs(2), tabs(3))
-      }
-    }.toSeq.toDF("query_id", "label", "t0", "t1", "t2", "t3")
-    val scored = wide.join(broadcast(luts), Seq("label"))
-      .select(col("query_id"), col("vec_id"), adcDist2.as("adc_dist2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("adc_dist2"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= AnnK)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("adc_dist2"))
-      .orderBy("query_id", "rank")
+    }.toSeq.toDF("query_id", "label", "tabs")
+    adcTopK(adcScored(wide.join(broadcast(luts), Seq("label")), nSub))
   }
 
   // --- q254: PQ recall harness -----------------------------------------------------------
@@ -980,21 +951,8 @@ object AnnQueries extends QueryFamily {
   query("q257_residual_recall", residualRecall, residualRecallSql(0))
 
   /** Exact L2 top-k per query — the ANN ground truth. */
-  private[graft] def exactL2TopK(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val q = emb.filter(col("vec_id") < AnnQueryMaxId)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("d2"), col("vec_id"))
-    emb.filter(col("vec_id") >= AnnQueryMaxId)
-      .crossJoin(broadcast(q))
-      .withColumn("d2",
-        graft.plans.VectorExprs.l2dist2(col("qv"), col("v")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= AnnK)
-      .select("query_id", "vec_id")
-  }
+  private[graft] def exactL2TopK(spark: SparkSession, dir: String): DataFrame =
+    exactL2TopKFrom(embV(spark, dir))
 
   /** Recall@AnnK of `preds` (query_id, vec_id) against the exact top-k —
     * factored so the spec can run the instrument on the ground truth
@@ -1002,41 +960,24 @@ object AnnQueries extends QueryFamily {
     */
   private[graft] def recallAgainstExact(spark: SparkSession, dir: String,
                                         preds: DataFrame): DataFrame =
-    exactL2TopK(spark, dir)
-      .join(preds.withColumn("__hit", lit(1)),
-        Seq("query_id", "vec_id"), "left")
-      .groupBy("query_id")
-      .agg(coalesce(sum(col("__hit")), lit(0)).cast("long").as("n_hits"))
-      .withColumn("recall", col("n_hits").cast("double") / lit(AnnK))
-      .orderBy("query_id")
+    recallOf(exactL2TopK(spark, dir), preds)
 
-  /** Residual frame (vec_id, label, r = v − mean_label) and the residual
-    * codebook (the PqCodes lowest corpus ids' residuals, bounded collect).
-    */
-  private[graft] def residualsAndCodebook(
-      corpus: DataFrame, means: DataFrame): (DataFrame, Array[Seq[Double]]) = {
-    val res = corpus.join(broadcast(means), "label")
+  /** Residual frame (vec_id, label, r = v − mean_label). */
+  private[graft] def residualFrame(corpus: DataFrame, means: DataFrame): DataFrame =
+    corpus.join(broadcast(means), "label")
       .select(col("vec_id"), col("label"),
         zip_with(col("v"), col("centroid"), (x, c) => x - c).as("r"))
-    val cb = res.orderBy("vec_id").limit(PqCodes)
-      .select("r").collect().map(_.getSeq[Double](0))
-    (res, cb)
-  }
 
-  /** Per-(vec, subspace) residual code assignment WITH its distance —
-    * factored so the spec can pin the seed-exactness property (a vector
-    * whose residual IS a codebook entry must code to it at distance
-    * exactly 0.0 in every subspace).
+  /** The `n` lowest-id rows' coded vectors `r` — the whole-vector
+    * codebook seeds (bounded collect).
     */
-  private[graft] def residualCodesFrame(res: DataFrame, cb: Array[Seq[Double]],
-                                        subDim: Int): DataFrame =
-    assignSubCodes(subspaceFrame(res, subDim),
-      subCodebookDf(res.sparkSession, seedSubCodebook(cb, subDim)))
+  private[graft] def seedRows(res: DataFrame, n: Int): Array[Seq[Double]] =
+    res.orderBy("vec_id").limit(n).select("r").collect().map(_.getSeq[Double](0))
 
   /** The seed per-subspace codebook [subspace][code]: the whole-vector
-    * seed residuals sliced — q246's untrained geometry, and Lloyd's
-    * round-0 state for q259. `nSub` defaults to the q246 geometry; the
-    * q270 clustered-fixture arc passes its own.
+    * seeds sliced — q223's and q246's untrained geometry, and Lloyd's
+    * round-0 state for q259. `nSub` defaults to the 4-subspace geometry;
+    * the q270 clustered-fixture arc passes its own.
     */
   private[graft] def seedSubCodebook(cb: Array[Seq[Double]], subDim: Int,
                                      nSub: Int = PqSub)
@@ -1154,8 +1095,9 @@ object AnnQueries extends QueryFamily {
   // complementary regime. Scale shape: codebooks/LUTs are bounded
   // driver state (lists×dim + sub×codes×subDim + queries×nprobe
   // tables), the corpus-side work is one broadcast-join encode scan
-  // per Lloyd round and a codes-only ADC scan — the q246/q259
-  // machinery unchanged, just parameterized.
+  // per Lloyd round and a codes-only ADC scan. q271/q272 run the same
+  // probedAdcSearch core as q246/q259; only the geometry, nprobe,
+  // encode and the memoized codebook differ.
   val CfxClusters = 64
   val CfxSub = 8
   val CfxCodes = 256
@@ -1191,88 +1133,26 @@ object AnnQueries extends QueryFamily {
                       as double) - 64.0D) / 128.0D)"""))
   }
 
-  /** The shared 8×256 trained-ADC read path over the planted corpus.
+  /** The 8×256 trained-ADC read path over the planted corpus: the
+    * probed-ADC core at CfxSub × CfxCodes, nprobe CfxNProbe.
     * `encodeRaw = false` codes the residual to the list mean (true
     * IVF-PQ); `encodeRaw = true` codes the raw vector against the same
     * code budget and training — list PROBING uses the real means in
-    * both modes, so the encode is the only experimental variable.
+    * both modes, so the encode is the only experimental variable. The
+    * codebook is trained ONCE per (session, dir, encode): a quantizer's
+    * codebook is index BUILD state, not per-search work — a production
+    * IVF-PQ trains at ingest and serves many queries. The memo is
+    * bounded driver state (8 × 256 × 8 doubles); Bench's untimed first
+    * run pays the training, the same footing the dedup decision-table
+    * family gets from its pairsMemo.
     */
   private[graft] def cfxAdcSearch(spark: SparkSession, dir: String,
-                                  encodeRaw: Boolean): DataFrame = {
-    import spark.implicits._
-    val subDim = graft.functions.Lsh.Dim / CfxSub
-    val emb = clusteredEmbeddings(spark, dir)
-    val corpus = emb.filter(col("vec_id") >= AnnQueryMaxId)
-    val means = Ivf.meanCentroids(corpus, "v", "label")
-    val res =
-      if (encodeRaw)
-        corpus.select(col("vec_id"), col("label"), col("v").as("r"))
-      else corpus.join(broadcast(means), "label")
-        .select(col("vec_id"), col("label"),
-          zip_with(col("v"), col("centroid"), (x, c) => x - c).as("r"))
-    val sub = subspaceFrame(res, subDim, CfxSub)
-    // train ONCE per (session, dir, encode): a quantizer's codebook is
-    // index BUILD state, not per-search work — a production IVF-PQ
-    // trains at ingest and serves many queries. The memo is bounded
-    // driver state (8 × 256 × 8 doubles); Bench's untimed first run
-    // pays the training, the same footing the dedup decision-table
-    // family gets from its pairsMemo.
-    val cbSub = Queries.cfxCodebookMemo(spark, (dir, encodeRaw)) {
-      val cb = res.orderBy("vec_id").limit(CfxCodes)
-        .select("r").collect().map(_.getSeq[Double](0))
-      trainSubCodebook(sub, seedSubCodebook(cb, subDim, CfxSub),
-        CfxTrainIters)
-    }
-    val codes = assignSubCodes(sub, subCodebookDf(spark, cbSub))
-    val pivots = (0 until CfxSub).map(s =>
-      min(when(col("subspace") === s, col("code"))).as(s"c$s"))
-    val wide = codes.groupBy("vec_id", "label")
-      .agg(pivots.head, pivots.tail: _*)
-    // bounded driver state: 16 means × 64 dims + 10 query vectors →
-    // probe sets and per-(query, list) 8×256 ADC tables
-    val meanArr = means.collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
-    val qvs = emb.filter(col("vec_id") < AnnQueryMaxId).orderBy("vec_id")
-      .select("vec_id", "v").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    def foldL2(a: Seq[Double], b: Seq[Double]): Double = {
-      var acc = 0.0
-      var i = 0
-      while (i < a.length) { val d = a(i) - b(i); acc += d * d; i += 1 }
-      acc
-    }
-    def foldL2Sub(a: Seq[Double], b: Seq[Double], from: Int): Double = {
-      var acc = 0.0
-      var i = 0
-      while (i < b.length) { val d = a(from + i) - b(i); acc += d * d; i += 1 }
-      acc
-    }
-    val luts = qvs.flatMap { case (qid, qv) =>
-      val probed = meanArr
-        .map { case (l, m) => (foldL2(qv, m), l) }
-        .sorted.take(CfxNProbe)
-      probed.map { case (_, l) =>
-        val m = meanArr.find(_._1 == l).get._2
-        val enc = if (encodeRaw) qv else qv.indices.map(i => qv(i) - m(i))
-        val tabs = (0 until CfxSub).map(s =>
-          cbSub(s).map(c => foldL2Sub(enc, c, s * subDim)))
-        (qid, l, tabs)
-      }
-    }.toSeq.toDF("query_id", "label", "tabs")
-    // fixed-order 8-term lookup sum (arr[i] is 0-based in Spark SQL) —
-    // the oracle's pivoted MIN-CASE sum folds in the same order
-    val adc = (0 until CfxSub)
-      .map(s => expr(s"tabs[$s][c$s]")).reduce(_ + _)
-    val scored = wide.join(broadcast(luts), Seq("label"))
-      .select(col("query_id"), col("vec_id"), adc.as("adc_dist2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("adc_dist2"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= AnnK)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("adc_dist2"))
-      .orderBy("query_id", "rank")
-  }
+                                  encodeRaw: Boolean): DataFrame =
+    probedAdcSearch(clusteredEmbeddings(spark, dir), CfxSub, CfxNProbe,
+      encodeRaw, (res, sub) => Queries.cfxCodebookMemo(spark, (dir, encodeRaw)) {
+        trainSubCodebook(sub, seedSubCodebook(seedRows(res, CfxCodes),
+          graft.functions.Lsh.Dim / CfxSub, CfxSub), CfxTrainIters)
+      })
 
   /** Exact L2 top-k ground truth over any (vec_id, v) frame. */
   private[graft] def exactL2TopKFrom(emb: DataFrame): DataFrame = {

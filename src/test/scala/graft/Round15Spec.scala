@@ -222,64 +222,6 @@ class Round15Spec extends AnyFunSuite {
     assert(bloom.exceptAll(exact).isEmpty && exact.exceptAll(bloom).isEmpty)
   }
 
-  // --- q246: residual PQ exactness ----------------------------------------------
-
-  test("q246: a vector whose residual IS a codebook entry codes to it at dist 0") {
-    val emb = Tables.embeddings(spark, sf)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
-        col("label"))
-    val corpus = emb.filter(col("vec_id") >= AnnQueries.AnnQueryMaxId)
-    val means = graft.operators.Ivf.meanCentroids(corpus, "v", "label")
-    val (res, cb) = AnnQueries.residualsAndCodebook(corpus, means)
-    val subDim = graft.functions.Lsh.Dim / AnnQueries.PqSub
-    val codes = AnnQueries.residualCodesFrame(res, cb, subDim)
-    // the PqCodes lowest corpus ids ARE the codebook: every one of their
-    // subspace assignments must land at exactly 0.0 (d − d ≡ 0 in IEEE)
-    val seedIds = res.orderBy("vec_id").limit(AnnQueries.PqCodes)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    val seedRows = codes.filter(col("vec_id").isin(seedIds.toSeq: _*)).collect()
-    assert(seedRows.length == seedIds.size * AnnQueries.PqSub)
-    seedRows.foreach(r => assert(r.getDouble(4) == 0.0,
-      s"seed ${r.getLong(0)} subspace ${r.getInt(2)} dist ${r.getDouble(4)}"))
-  }
-
-  test("q246: returned neighbors come only from the query's probed lists") {
-    val got = AnnQueries.ivfPqResidualSearch(spark, sf).collect()
-    assert(got.nonEmpty)
-    val byQ = got.groupBy(_.getLong(0))
-    byQ.foreach { case (q, rs) =>
-      val ranks = rs.map(_.getLong(1)).sorted.toSeq
-      assert(ranks == (1L to ranks.length).toSeq, s"query $q ranks not contiguous")
-    }
-    // independently recompute the probe sets (quantized means + L2, the
-    // operator's documented formulas) and pin the candidate restriction
-    val emb = Tables.embeddings(spark, sf)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
-        col("label"))
-    val labelOf = emb.filter(col("vec_id") >= AnnQueries.AnnQueryMaxId)
-      .select("vec_id", "label").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val means = graft.operators.Ivf
-      .meanCentroids(emb.filter(col("vec_id") >= AnnQueries.AnnQueryMaxId),
-        "v", "label")
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
-    val qvs = emb.filter(col("vec_id") < AnnQueries.AnnQueryMaxId)
-      .select("vec_id", "v").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1))).toMap
-    got.foreach { r =>
-      val (qid, vid) = (r.getLong(0), r.getLong(2))
-      val qv = qvs(qid)
-      val probed = means.map { case (l, m) =>
-        var acc = 0.0
-        var i = 0
-        while (i < qv.length) { val d = qv(i) - m(i); acc += d * d; i += 1 }
-        (acc, l)
-      }.sorted.take(AnnQueries.IvfNProbe).map(_._2).toSet
-      assert(probed.contains(labelOf(vid)),
-        s"query $qid returned $vid from unprobed list ${labelOf(vid)}")
-    }
-  }
-
   // --- q247: join-agg IVM ---------------------------------------------------------
 
   test("q247: maintained join-agg view equals the full recompute") {

@@ -180,69 +180,6 @@ class Round16Spec extends AnyFunSuite {
       rebuilt.exceptAll(redelivered).count() == 0)
   }
 
-  // --- q259/q260: trained residual codebook ---------------------------------
-
-  test("q259: Lloyd rounds reduce total assignment distortion on the fixture") {
-    val subDim = graft.functions.Lsh.Dim / AnnQueries.PqSub
-    val emb = Tables.embeddings(spark, sf)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
-        col("label"))
-    val corpus = emb.filter(col("vec_id") >= AnnQueries.AnnQueryMaxId)
-    val means = graft.operators.Ivf.meanCentroids(corpus, "v", "label")
-    val (res, cb) = AnnQueries.residualsAndCodebook(corpus, means)
-    val sub = AnnQueries.subspaceFrame(res, subDim).persist()
-    val seed = AnnQueries.seedSubCodebook(cb, subDim)
-    val trained = AnnQueries.trainSubCodebook(sub, seed, AnnQueries.ResTrainIters)
-    def distortion(cbSub: IndexedSeq[IndexedSeq[Seq[Double]]]): Double =
-      AnnQueries.assignSubCodes(sub,
-        AnnQueries.subCodebookDf(spark, cbSub))
-        .agg(sum(col("dist2"))).head().getDouble(0)
-    val d0 = distortion(seed)
-    val dT = distortion(trained)
-    sub.unpersist()
-    assert(dT <= d0, s"training raised distortion: $d0 -> $dT")
-    assert(dT < 0.9 * d0,
-      s"training barely moved distortion ($d0 -> $dT) — Lloyd is not " +
-        "actually re-centering")
-  }
-
-  test("q260: the trained-recall instrument reports a proper per-query fraction over the shared ground truth") {
-    // recall monotonicity under training is NOT a theorem (Lloyd
-    // minimizes reconstruction distortion, which only correlates with
-    // recall — on the 200-vector sf0.001 corpus training reads 0.3 vs
-    // untrained 0.4, while at sf0.01 it reads 0.12 vs 0.08), so the
-    // contract pinned here is the INSTRUMENT's: every query present,
-    // hits within [0, k], recall = n_hits/k exactly
-    val rows = AnnQueries.trainedRecall(spark, sf).collect()
-    assert(rows.length == AnnQueries.AnnQueryMaxId)
-    rows.foreach { r =>
-      val hits = r.getLong(1)
-      assert(hits >= 0 && hits <= AnnQueries.AnnK, r.toString)
-      assert(r.getDouble(2) == hits.toDouble / AnnQueries.AnnK, r.toString)
-    }
-  }
-
-  test("trainSubCodebook: a code with no members keeps its previous centroid") {
-    import spark.implicits._
-    // all subvectors sit at (1,1); code 0 is nearby, code 1 is far —
-    // after a round, code 0 re-centers to the exact mean and code 1
-    // (memberless) must carry its seed unchanged
-    val sub = Seq(
-      (1L, 0, Seq(1.0, 1.0)), (2L, 0, Seq(1.0, 1.0)), (3L, 0, Seq(1.0, 1.25)))
-      .toDF("vec_id", "subspace", "sv")
-      .withColumn("label", lit(0))
-    val seed = IndexedSeq(IndexedSeq(Seq(0.5, 0.5), Seq(100.0, 100.0)))
-    val trained = AnnQueries.trainSubCodebook(sub, seed, iters = 1)
-    assert(trained(0)(1) == Seq(100.0, 100.0),
-      s"memberless code moved: ${trained(0)(1)}")
-    // the member code's centroid is the floor-grid mean of (1,1),(1,1),(1,1.25)
-    val S = graft.operators.Ivf.MeanQuantScale.toDouble
-    val exp0 = (3 * math.floor(1.0 * S)) / (3 * S)
-    val exp1 = (math.floor(1.0 * S) * 2 + math.floor(1.25 * S)) / (3 * S)
-    assert(trained(0)(0) == Seq(exp0, exp1),
-      s"member code mean mismatch: ${trained(0)(0)} vs ${Seq(exp0, exp1)}")
-  }
-
   // --- q261: compaction planner ---------------------------------------------
 
   test("q261: cumulative-offset bin rule on a planted manifest") {

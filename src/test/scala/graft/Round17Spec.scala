@@ -35,48 +35,6 @@ class Round17Spec extends AnyFunSuite {
     }
   }
 
-  // --- directive 1: the clustered ANN operating point ------------------------------
-
-  test("cfx fixture is clustered: separation >> spread, and exact top-k stays in-cluster") {
-    val rep = AnnQueries.cfxFixtureReport(spark, sf).collect()
-    assert(rep.length == AnnQueries.CfxClusters)
-    val maxWithin = rep.map(_.getDouble(2)).max
-    val minInter = rep.map(_.getDouble(3)).min
-    assert(minInter > 100 * maxWithin,
-      s"planted mixture must separate: min inter $minInter vs within $maxWithin")
-    // the clustered-regime consequence the recall rows rely on: every
-    // exact L2 neighbor shares its query's planted cluster
-    val emb = AnnQueries.clusteredEmbeddings(spark, sf)
-    val lab = emb.select(col("vec_id"), col("label"))
-    val crossCluster = AnnQueries.exactL2TopKFrom(emb)
-      .join(lab.withColumnRenamed("vec_id", "query_id")
-        .withColumnRenamed("label", "ql"), "query_id")
-      .join(lab, "vec_id")
-      .filter(col("ql") =!= col("label")).count()
-    assert(crossCluster == 0, "exact top-k crossed a planted cluster")
-  }
-
-  test("cfx recall instrument reads 1.0 on the ground truth itself") {
-    val truth = AnnQueries.exactL2TopKFrom(AnnQueries.clusteredEmbeddings(spark, sf))
-    val r = AnnQueries.recallOf(truth, truth).collect()
-    assert(r.nonEmpty && r.forall(_.getDouble(2) == 1.0))
-  }
-
-  test("cfx operating point: trained residual reads a usable recall and beats raw at equal budget") {
-    // the r16 directive-1 'done' criterion, pinned: recall@5 ≥ ~0.8 at
-    // nprobe ≪ lists for the trained-residual encode, strictly above
-    // the raw encode at the identical code budget and training.
-    // (Deterministic fixture: sf0.001 reads 0.92 avg vs 0.80 avg.)
-    assert(AnnQueries.CfxNProbe * 8 <= AnnQueries.CfxClusters, "nprobe must be << lists")
-    val tr = AnnQueries.cfxTrainedRecall(spark, sf).collect()
-    val rw = AnnQueries.cfxRawRecall(spark, sf).collect()
-    val trAvg = tr.map(_.getDouble(2)).sum / tr.length
-    val rwAvg = rw.map(_.getDouble(2)).sum / rw.length
-    assert(trAvg >= 0.8, s"trained-residual recall@5 avg $trAvg below the usable bar")
-    assert(trAvg > rwAvg,
-      s"residual must beat raw at equal budget on clustered data: $trAvg vs $rwAvg")
-  }
-
   // --- directive 3: KN perplexity filter --------------------------------------------
 
   test("KN perplexity: planted gibberish scores strictly more bits/token than fluent text, lands in the tail bucket") {
