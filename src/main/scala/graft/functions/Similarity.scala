@@ -12,10 +12,13 @@ import org.apache.spark.sql.functions._
   * identical op order the DuckDB oracle uses (`list_reduce`), so cosine
   * scores are bit-identical across engines.
   *
-  * Scale posture: these are the per-pair kernels. Pair GENERATION is the
-  * scale problem — brute force is O(n²) and kept as the correctness
-  * baseline; the LSH operators (random-hyperplane bucketing) are the
-  * 100 TB path, reducing candidate pairs to near-linear.
+  * Scale posture: these are the per-pair kernels of candidate-pair
+  * paths. Pair GENERATION is the scale problem — the O(n²) brute force
+  * (`NearDup.embeddingCosinePairs`) does not use them per pair: it runs
+  * the same fold over packed primitive blocks (`graft.plans.CosineBlocks`)
+  * and is kept as the correctness baseline; the LSH operators
+  * (random-hyperplane bucketing) are the 100 TB path, reducing candidate
+  * pairs to near-linear.
   */
 object Similarity {
 

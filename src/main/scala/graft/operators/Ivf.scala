@@ -72,11 +72,9 @@ object Ivf {
     */
   def annIvfTopK(emb: DataFrame, idCol: String, vecCol: String, labelCol: String,
                  queryMaxId: Long, nprobe: Int, k: Int): DataFrame = {
-    val corpus = NearDup.withNorm(emb, idCol, vecCol)
-      .join(emb.select(col(idCol), col(labelCol)), idCol)
-      .filter(col(idCol) >= queryMaxId)
+    val corpus = emb.filter(col(idCol) >= queryMaxId)
       .select(col(idCol).as("neighbor_id"), col(labelCol),
-        col(vecCol).as("ce"), col("nrm").as("cn"))
+        col(vecCol).as("ce"), Similarity.l2Norm(col(vecCol)).as("cn"))
     NearDup.cosTopK(
       probeLists(emb, idCol, vecCol, labelCol, queryMaxId, nprobe)
         .join(corpus, labelCol), k)

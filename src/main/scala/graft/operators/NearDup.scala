@@ -1,8 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.LeanCheckpoint
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 import graft.functions.{Lsh, Similarity, TextAnalysis}
+import graft.plans.CosineBlocks
 
 /** Near-duplicate detection over documents and embeddings.
   *
@@ -22,7 +27,10 @@ import graft.functions.{Lsh, Similarity, TextAnalysis}
   * Jaccard domain is then "shingles with df <= cap" on both engines — an
   * explicit, deterministic semantic rather than a silent truncation. The
   * embedding path's brute force IS quadratic and exists as the correctness
-  * baseline for the LSH operators, which are the 100 TB path.
+  * baseline for the LSH operators, which are the 100 TB path; it is one
+  * primitive all-pairs kernel (`graft.plans.CosineBlocks`) over vectors
+  * packed once, not a pair join, so no row exists for a pair below the
+  * threshold.
   */
 object NearDup {
 
@@ -438,20 +446,50 @@ object NearDup {
       .select("vec_a", "vec_b", "cos")
   }
 
-  /** Brute-force cosine near-dup pairs >= `threshold` (correctness
-    * baseline; quadratic — the LSH variant is the scale path).
+  /** Brute-force cosine near-dup pairs >= `threshold`: the exhaustive
+    * baseline the LSH and cluster-pruned paths are checked against,
+    * quadratic by nature. It is one primitive kernel evaluated once per
+    * call (`graft.plans.CosineBlocks`): one job collects the (id, vector)
+    * rows, the driver packs them with their norms into a row-major double
+    * matrix (n·dim doubles — the n² pair scan, not the matrix, bounds
+    * this path), the
+    * matrix is broadcast, and tasks spread over the session's cores scan
+    * its block pairs; only pairs that pass the threshold become rows. The
+    * rows are materialized in the same call (`LeanCheckpoint.ofRows`), so
+    * a caller's sort samples them instead of re-running the kernel, and
+    * the broadcast is destroyed before returning. Null ids and null
+    * vectors pair with nothing; a repeated id keeps its multiplicity.
     * Output: (vec_a, vec_b, cos), vec_a < vec_b.
     */
   def embeddingCosinePairs(emb: DataFrame, idCol: String, vecCol: String,
                            threshold: Double): DataFrame = {
-    val e = withNorm(emb, idCol, vecCol)
-    val a = e.select(col(idCol).as("vec_a"), col(vecCol).as("ea"), col("nrm").as("na"))
-    val b = e.select(col(idCol).as("vec_b"), col(vecCol).as("eb"), col("nrm").as("nb"))
-    a.join(b, col("vec_a") < col("vec_b"))
-      .withColumn("cos",
-        Similarity.cosineFrom(Similarity.dot(col("ea"), col("eb")), col("na"), col("nb")))
-      .filter(col("cos") >= lit(threshold))
-      .select("vec_a", "vec_b", "cos")
+    val spark = emb.sparkSession
+    val sc = spark.sparkContext
+    val sel = emb.select(col(idCol), col(vecCol))
+    val Array(idField, vecField) = sel.schema.fields
+    val idType = idField.dataType
+    val vecType = vecField.dataType
+    require(idType == LongType || idType == IntegerType,
+      s"cosine pair ids must be int or long, got $idType")
+    val packed = CosineBlocks.pack(
+      GraftColumnBridge.internalRows(sel).map(_.copy()).collect().iterator, idType, vecType)
+    val ansi = spark.conf.get("spark.sql.ansi.enabled").toBoolean
+    val blockPairs = CosineBlocks.blockPairs(packed.blocks)
+    val bc = sc.broadcast(packed)
+    val rows = sc.parallelize(blockPairs,
+        math.max(1, math.min(sc.defaultParallelism, blockPairs.size)))
+      .mapPartitions(_.flatMap { case (a, b) =>
+        val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+        CosineBlocks.scan(bc.value, a, b, threshold, ansi) { (x, y, cos) =>
+          out += new GenericInternalRow(Array[Any](
+            CosineBlocks.idValue(x, idType), CosineBlocks.idValue(y, idType), cos))
+        }
+        out
+      })
+      .setName(CosineBlocks.RddName)
+    val schema = StructType(Seq(StructField("vec_a", idType, idField.nullable),
+      StructField("vec_b", idType, idField.nullable), StructField("cos", DoubleType)))
+    try LeanCheckpoint.ofRows(spark, rows, schema) finally bc.destroy()
   }
 
   /** SemDeDup-style cluster-pruned embedding near-dup: every vector is

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.LeanCheckpoint
 
 /** Triangle counting over an undirected graph by DEGREE ORIENTATION —
   * the standard distributed plan (Suri & Vassilvitskii's MR triangle
@@ -59,8 +60,15 @@ object Triangles {
     * x < y by id, enumerated from edges oriented (u, v) from the lower to
     * the higher endpoint under the total order (deg, id); and the edge
     * frame that closes a wedge at its canonical (x, y), broadcast-hinted
-    * together with the oriented side when an exact count over the
-    * (typically cached) edge frame fits `bcastMaxEdges`.
+    * together with the oriented side when the oriented edge count fits
+    * `bcastMaxEdges`.
+    *
+    * `deg` and `oriented` are each evaluated once, as lean checkpoints:
+    * left as plan subtrees, each consumer would re-aggregate the degrees
+    * in its own exchange (the `isnotnull` filters pushed into each copy
+    * defeat exchange reuse). The gate's edge count rides the
+    * materialization of `oriented` (one row per edge with non-null
+    * endpoints) instead of taking a pass of its own.
     */
   private final case class Prelude(e: DataFrame, deg: DataFrame,
                                    wedges: DataFrame, closing: DataFrame)
@@ -69,19 +77,18 @@ object Triangles {
                       bcastMaxEdges: Long): Prelude = {
     val e = edges.select(least(col(aCol), col(bCol)).as("x"),
       greatest(col(aCol), col(bCol)).as("y"))
-    val small = e.count() <= bcastMaxEdges
-    def hinted(df: DataFrame) = if (small) broadcast(df) else df
-    val deg = e.select(col("x").as("n"))
+    val deg = LeanCheckpoint.localCheckpoint(e.select(col("x").as("n"))
       .unionByName(e.select(col("y").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("deg"))
+      .groupBy("n").agg(count(lit(1)).as("deg")))
     // struct comparison is lexicographic in both engines
     val withDeg = e
       .join(deg.select(col("n").as("x"), col("deg").as("dx")), "x")
       .join(deg.select(col("n").as("y"), col("deg").as("dy")), "y")
     val xFirst = struct(col("dx"), col("x")) < struct(col("dy"), col("y"))
-    val oriented = withDeg.select(
+    val (oriented, nEdges) = LeanCheckpoint.localCheckpointCounted(withDeg.select(
       when(xFirst, col("x")).otherwise(col("y")).as("u"),
-      when(xFirst, col("y")).otherwise(col("x")).as("v"))
+      when(xFirst, col("y")).otherwise(col("x")).as("v")))
+    def hinted(df: DataFrame) = if (nEdges <= bcastMaxEdges) broadcast(df) else df
     val wedges = oriented.alias("e1").join(hinted(oriented).alias("e2"),
         col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
       .select(col("e1.u").as("u"),

@@ -31,4 +31,16 @@ object GraftColumnBridge {
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `df`'s rows as the `InternalRow`s its plan produces — what a
+    * primitive kernel reads without `df.rdd`'s per-row conversion.
+    */
+  def internalRows(df: DataFrame): org.apache.spark.rdd.RDD[catalyst.InternalRow] =
+    df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd
+
+  /** Spark's ANSI DIVIDE_BY_ZERO error, for kernels that replace a
+    * `Divide` (`QueryExecutionErrors` is private[sql]).
+    */
+  def divideByZero(): ArithmeticException =
+    errors.QueryExecutionErrors.divideByZeroError(null)
 }

@@ -36,13 +36,29 @@ object LeanCheckpoint {
     * whose logical plan is a bare `LogicalRDD` leaf over the stored
     * rows — no origin stats, no origin constraints.
     */
-  def localCheckpoint(df: DataFrame): DataFrame = {
+  def localCheckpoint(df: DataFrame): DataFrame = localCheckpointCounted(df)._1
+
+  /** [[localCheckpoint]] that also returns the row count its
+    * materializing action computes anyway.
+    */
+  def localCheckpointCounted(df: DataFrame): (DataFrame, Long) = {
     val cds = df.asInstanceOf[classic.Dataset[Row]]
     val rdd = cds.queryExecution.toRdd.map(_.copy())
     rdd.localCheckpoint()
-    rdd.count() // eager materialization (the localCheckpoint contract)
-    cds.sparkSession.internalCreateDataFrame(rdd, cds.schema)
+    val n = rdd.count() // eager materialization (the localCheckpoint contract)
+    (cds.sparkSession.internalCreateDataFrame(rdd, cds.schema), n)
   }
+
+  /** [[localCheckpoint]] of the DataFrame over `rows` (typed by
+    * `schema`): a kernel that emits `InternalRow`s runs exactly once,
+    * in this call, and later readers — a sort's range sample included —
+    * read the stored rows.
+    */
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+             rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+             schema: org.apache.spark.sql.types.StructType): DataFrame =
+    localCheckpoint(spark.asInstanceOf[classic.SparkSession]
+      .internalCreateDataFrame(rows, schema))
 
   /** [[localCheckpoint]] in SERIALIZED storage, returning the persisted
     * RDD as an explicit lifetime handle. For loops whose round frames

@@ -635,6 +635,40 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
     assert(pruned.nonEmpty, "corpus should contain same-cluster near-dups")
   }
 
+  test("q24 runs the cosine kernel's stage once per call, over every core") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    val sc = spark.sparkContext
+    val group = s"q24-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    // (job group, tasks) of every submitted stage that runs the kernel RDD
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == marker || e.stageInfo.rddInfos.exists(_.name == graft.plans.CosineBlocks.RddName))
+          stages.add((g, e.stageInfo.numTasks))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "q24")
+      // written as a user keeps it: the sort's range sample, its map stage
+      // and the write all read the pairs the one kernel stage produced
+      try DedupQueries.dedupEmbedding(spark, sf).write.mode("overwrite")
+        .parquet(TestSession.tempDir("graft_q24") + "/out")
+      finally sc.clearJobGroup()
+      // the listener bus delivers in order: once the marker stage is seen,
+      // every stage of the call has been
+      sc.setJobGroup(marker, "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!stages.toArray.exists(_ == ((marker, 1))) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      val kernel = stages.toArray.toSeq.collect { case (g: String, n: Int) if g == group => n }
+      assert(kernel == Seq(sc.defaultParallelism), s"kernel stages (tasks each): $kernel")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("co-occurrence pairs: repeat basket lines count once, support is per-basket") {
     import spark.implicits._
     import graft.operators.Analytics

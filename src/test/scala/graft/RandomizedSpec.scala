@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.Lsh
-import graft.operators.{Components, Dedup, Scd}
+import graft.functions.{Lsh, Similarity}
+import graft.operators.{Components, Dedup, NearDup, Scd}
 import graft.queries.AnalyticsQueries
 
 /** Randomized property checks with a fixed seed: custom kernels are
@@ -574,6 +576,82 @@ class RandomizedSpec extends AnyFunSuite {
         if (win.size % 2 == 1) win((win.size - 1) / 2).toDouble
         else (win(win.size / 2 - 1).toDouble + win(win.size / 2).toDouble) / 2.0
       assert(got(d) == ref, s"day $d: ${got(d)} != $ref over $win")
+    }
+  }
+
+  // --- q24: the block kernel ≡ the nested-loop join it replaced ---------------
+
+  /** The formulation `NearDup.embeddingCosinePairs` had before its block
+    * kernel: a nested-loop self-join on id order with a per-pair `VecDot`
+    * and the threshold as a filter. It is the reference the kernel must
+    * equal bit for bit, errors included.
+    */
+  private def joinCosinePairs(emb: DataFrame, threshold: Double): DataFrame = {
+    val e = NearDup.withNorm(emb, "vec_id", "embedding")
+    val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"), col("nrm").as("na"))
+    val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("eb"), col("nrm").as("nb"))
+    a.join(b, col("vec_a") < col("vec_b"))
+      .withColumn("cos", Similarity.cosineFrom(
+        Similarity.dot(col("ea"), col("eb")), col("na"), col("nb")))
+      .filter(col("cos") >= lit(threshold))
+      .select("vec_a", "vec_b", "cos")
+  }
+
+  /** Sorted (vec_a, vec_b, cos bits) rows, or the error class. */
+  private def cosineOutcome(pairs: => DataFrame): Either[String, Seq[(Long, Long, Long)]] =
+    try Right(pairs.collect().map(r => (r.getLong(0), r.getLong(1),
+      java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSeq.sorted)
+    catch {
+      case e: Exception =>
+        val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        Left(chain.map(_.getMessage).find(m => m != null && m.contains("DIVIDE_BY_ZERO"))
+          .map(_ => "DIVIDE_BY_ZERO").getOrElse(throw e))
+    }
+
+  private def embFrame(s: SparkSession, rows: Seq[(Option[Long], Option[Seq[Double]])],
+                       floats: Boolean): DataFrame = {
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(if (floats) FloatType else DoubleType))))
+    s.createDataFrame(java.util.Arrays.asList(rows.map { case (id, v) =>
+      Row(id.map(Long.box).orNull,
+        v.map(xs => if (floats) xs.map(_.toFloat) else xs).orNull)
+    }: _*), schema)
+  }
+
+  test("q24: the block cosine kernel equals the nested-loop join bit for bit") {
+    import graft.plans.CosineBlocks.BlockRows
+    def gauss(d: Int) = Seq.fill(d)(rnd.nextGaussian())
+    def rows(n: Int, len: => Int) = (0 until n).map(_ => (Some(rnd.nextInt(n).toLong), Some(gauss(len))))
+    val messy = rows(2 * BlockRows + 37, 12) ++ Seq(
+      (None, Some(gauss(12))), (None, Some(gauss(12))), (Some(7L), None), (Some(9L), None),
+      (Some(5L), Some(gauss(11) :+ Double.NaN)), (Some(6L), Some(Double.PositiveInfinity +: gauss(11))))
+    val zero = rows(BlockRows + 3, 8) :+ (Some(3L), Some(Seq.fill(8)(0.0)))
+    val cases = Seq(
+      ("messy, floats", messy, true, 0.4),
+      ("messy, doubles", messy, false, 0.4),
+      ("unequal lengths", rows(2 * BlockRows + 5, 1 + rnd.nextInt(12)), true, 0.3),
+      ("n = 0", Nil, true, 0.4),
+      ("n = 1", rows(1, 12), true, 0.4),
+      ("n = BlockRows", rows(BlockRows, 6), false, 0.5),
+      ("cos on the threshold",
+        Seq((Some(1L), Some(Seq(3.0, 4.0))), (Some(2L), Some(Seq(4.0, 3.0)))), true, 24.0 / 25.0),
+      ("a zero vector", zero, true, 0.4))
+    // ANSI decides what a zero norm product gives: an error, or a null
+    // cosine that the threshold drops
+    val lenient = spark.newSession()
+    lenient.conf.set("spark.sql.ansi.enabled", "false")
+    for ((name, input, floats, thr) <- cases; s <- Seq(spark, lenient)) {
+      val emb = embFrame(s, input, floats)
+      val want = cosineOutcome(joinCosinePairs(emb, thr))
+      val got = cosineOutcome(NearDup.embeddingCosinePairs(emb, "vec_id", "embedding", thr))
+      val ansi = s.conf.get("spark.sql.ansi.enabled")
+      assert(got == want, s"$name (ansi=$ansi): kernel ${got.map(_.take(5))} vs join ${want.map(_.take(5))}")
+      if (name.startsWith("messy"))
+        assert(want.exists(p => p.size > 1000 && p.exists(r => java.lang.Double.isNaN(
+          java.lang.Double.longBitsToDouble(r._3)))), s"$name: pairs and NaN pairs expected")
+      if (name == "cos on the threshold") assert(want.exists(_.size == 1))
+      if (name == "a zero vector")
+        assert(want.isLeft == (ansi == "true"), s"$name (ansi=$ansi): $want")
     }
   }
 }
