@@ -7,8 +7,8 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_QUERIES restricts the dump for local iteration; the
-    // driver leaves it unset and dumps the full surface.
+    // SPARK_GRAFT_QUERIES restricts the dump, oracle SQL included, for
+    // local iteration; unset, the full surface is dumped.
     val selected = Sessions.selectQueries()
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -29,7 +29,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (k, _) => selected.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

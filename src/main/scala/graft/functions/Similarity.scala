@@ -35,10 +35,12 @@ object Similarity {
 
   /** Cosine similarity from a precomputed dot and norms — the caller
     * precomputes each row's norm ONCE (cheap column) so an n×m pair join
-    * only pays the dot product per pair.
+    * only pays the dot product per pair. A zero vector's cosine is NULL
+    * whatever `spark.sql.ansi.enabled` says, as in DuckDB: a threshold
+    * drops the pair and a descending rank puts it last.
     */
   def cosineFrom(dotAB: Column, normA: Column, normB: Column): Column =
-    dotAB / (normA * normB)
+    try_divide(dotAB, normA * normB)
 
   /** Cosine similarity of two raw vectors. */
   def cosine(a: Column, b: Column): Column =

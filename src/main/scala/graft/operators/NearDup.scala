@@ -473,14 +473,13 @@ object NearDup {
       s"cosine pair ids must be int or long, got $idType")
     val packed = CosineBlocks.pack(
       GraftColumnBridge.internalRows(sel).map(_.copy()).collect().iterator, idType, vecType)
-    val ansi = spark.conf.get("spark.sql.ansi.enabled").toBoolean
     val blockPairs = CosineBlocks.blockPairs(packed.blocks)
     val bc = sc.broadcast(packed)
     val rows = sc.parallelize(blockPairs,
         math.max(1, math.min(sc.defaultParallelism, blockPairs.size)))
       .mapPartitions(_.flatMap { case (a, b) =>
         val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-        CosineBlocks.scan(bc.value, a, b, threshold, ansi) { (x, y, cos) =>
+        CosineBlocks.scan(bc.value, a, b, threshold) { (x, y, cos) =>
           out += new GenericInternalRow(Array[Any](
             CosineBlocks.idValue(x, idType), CosineBlocks.idValue(y, idType), cos))
         }

@@ -17,10 +17,9 @@ import org.apache.spark.sql.types._
   * to right from 0.0 over the shorter length, `nrm = sqrt(dot(v, v))` and
   * `cos = dot / (na · nb)`. Four pairs share one sweep over `k` with four
   * separate accumulators; no pair's own sum is reassociated or fused.
-  * Spark's division semantics carry over: a zero norm product yields SQL
-  * NULL (the pair is dropped) or, under ANSI mode, the DIVIDE_BY_ZERO
-  * error; `cos ≥ threshold` compares like Spark's `>=`, where NaN sorts
-  * above every number.
+  * A zero norm product gives `Similarity.cosineFrom`'s NULL cosine, so the
+  * pair is dropped under any ANSI setting; `cos ≥ threshold` compares like
+  * Spark's `>=`, where NaN sorts above every number.
   */
 object CosineBlocks {
 
@@ -87,7 +86,7 @@ object CosineBlocks {
     * `threshold`; within block a == b each row meets only the rows after
     * it. Equal ids never pair, so a repeated id keeps its multiplicity.
     */
-  def scan(m: Packed, a: Int, b: Int, threshold: Double, ansi: Boolean)(
+  def scan(m: Packed, a: Int, b: Int, threshold: Double)(
       emit: (Long, Long, Double) => Unit): Unit = {
     val v = m.vals
     val off = m.off
@@ -99,9 +98,7 @@ object CosineBlocks {
       val y = m.ids(j)
       if (x != y) {
         val p = m.nrm(i) * m.nrm(j)
-        if (p == 0.0) {
-          if (ansi) throw org.apache.spark.sql.GraftColumnBridge.divideByZero()
-        } else {
+        if (p != 0.0) {
           val cos = dot / p
           if (cos >= threshold || java.lang.Double.isNaN(cos)) {
             if (x < y) emit(x, y, cos) else emit(y, x, cos)

@@ -21,19 +21,8 @@ object AnnQueries extends QueryFamily {
 
   query("q26_ann_lsh", annLsh, {
       import graft.functions.Lsh._
-      s"""WITH e AS (SELECT vec_id, embedding, $nrmSql AS nrm FROM embeddings),
-          bits AS (SELECT vec_id,
-                          list_transform(generate_series(0, ${Planes - 1}), p ->
-                            CASE WHEN list_reduce(list_transform(generate_series(1, $Dim), i ->
-                                   (CAST(((p*$Dim+i) * 2654435761) % $TwoPow32 AS DOUBLE)
-                                      / 4294967296.0 - 0.5)
-                                   * CAST(embedding[i] AS DOUBLE)), (x,y) -> x+y) >= 0
-                                 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS bits
-                   FROM e),
-          bands AS (SELECT vec_id, t,
-                           list_reduce(bits[t*$RowsRp+1 : t*$RowsRp+$RowsRp],
-                             (x,y) -> x*2+y) AS key
-                    FROM bits, (SELECT unnest(generate_series(0, ${BandsRp - 1})) AS t) bt),
+      s"""WITH $embNrmCte,
+          $planeBandsCtes,
           qb AS (SELECT vec_id, t, xor(key, m) AS key
                  FROM bands,
                       (SELECT unnest(${sqlArr(0L +: (0 until RowsRp).map(j => 1L << j))}) AS m) pm
@@ -41,16 +30,8 @@ object AnnQueries extends QueryFamily {
           cand AS (SELECT DISTINCT qb.vec_id AS query_id, c.vec_id AS neighbor_id
                    FROM qb JOIN bands c ON qb.t = c.t AND qb.key = c.key
                    WHERE c.vec_id >= ${AnnQueryMaxId}),
-          scored AS (SELECT query_id, neighbor_id,
-                            ${dotSql("eq.embedding", "ec.embedding")} / (eq.nrm * ec.nrm) AS cos
-                     FROM cand JOIN e eq ON query_id = eq.vec_id
-                               JOIN e ec ON neighbor_id = ec.vec_id)
-          SELECT query_id, neighbor_id, cos, rank FROM (
-            SELECT query_id, neighbor_id, cos,
-                   CAST(row_number() OVER (PARTITION BY query_id
-                                           ORDER BY cos DESC, neighbor_id) AS INT) AS rank
-            FROM scored)
-          WHERE rank <= ${AnnK}"""
+          $cosSidesCtes
+          ${cosTopKSql("cand JOIN q USING (query_id) JOIN c USING (neighbor_id)")}"""
     })
 
   // --- q25: brute-force cosine top-k ANN -------------------------------------
@@ -67,20 +48,9 @@ object AnnQueries extends QueryFamily {
   }
 
   query("q25_ann_bruteforce", annBruteForce,
-      s"""WITH e AS (SELECT vec_id, embedding, $nrmSql AS nrm FROM embeddings),
-          q AS (SELECT vec_id AS query_id, embedding AS qe, nrm AS qn
-                FROM e WHERE vec_id < ${AnnQueryMaxId}),
-          c AS (SELECT vec_id AS neighbor_id, embedding AS ce, nrm AS cn
-                FROM e WHERE vec_id >= ${AnnQueryMaxId}),
-          s AS (SELECT query_id, neighbor_id,
-                       ${dotSql("qe", "ce")} / (qn * cn) AS cos
-                FROM c, q)
-          SELECT query_id, neighbor_id, cos, rank FROM (
-            SELECT query_id, neighbor_id, cos,
-                   CAST(row_number() OVER (PARTITION BY query_id
-                                           ORDER BY cos DESC, neighbor_id) AS INT) AS rank
-            FROM s)
-          WHERE rank <= ${AnnK}""")
+      s"""WITH $embNrmCte,
+          $cosSidesCtes
+          ${cosTopKSql("q, c")}""")
 
   // --- q79: hybrid retrieval — BM25 recall stage + dense cosine rerank --------
   // The two-stage retrieval every RAG corpus pipeline runs: a cheap
@@ -139,41 +109,7 @@ object AnnQueries extends QueryFamily {
       AnnQueryMaxId, IvfNProbe, AnnK)
       .orderBy("query_id", "rank")
 
-  query("q33_ann_ivf", annIvf, {
-      import graft.functions.Lsh.Dim
-      s"""WITH e AS (SELECT vec_id, embedding, label, $nrmSql AS nrm FROM embeddings),
-          q AS (SELECT vec_id AS query_id, embedding AS qe, nrm AS qn
-                FROM e WHERE vec_id < ${AnnQueryMaxId}),
-          c AS (SELECT vec_id AS neighbor_id, label, embedding AS ce, nrm AS cn
-                FROM e WHERE vec_id >= ${AnnQueryMaxId}),
-          cent AS (
-            SELECT label, array_agg(CAST(s AS DOUBLE) ORDER BY i) AS centroid
-            FROM (SELECT label, i,
-                         SUM(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(20,10))) AS s
-                  FROM e, (SELECT unnest(generate_series(1, $Dim)) AS i) g
-                  WHERE vec_id >= ${AnnQueryMaxId}
-                  GROUP BY 1, 2)
-            GROUP BY label),
-          pr AS (
-            SELECT query_id, qe, qn, label FROM (
-              SELECT query_id, qe, qn, label,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY ccos DESC, label) AS lr
-              FROM (SELECT q.query_id, q.qe, q.qn, cent.label,
-                           ${dotSql("qe", "centroid")}
-                             / (q.qn * sqrt(${dotSql("centroid", "centroid")})) AS ccos
-                    FROM q, cent))
-            WHERE lr <= ${IvfNProbe}),
-          scored AS (
-            SELECT query_id, neighbor_id, ${dotSql("qe", "ce")} / (qn * cn) AS cos
-            FROM pr JOIN c USING (label))
-          SELECT query_id, neighbor_id, cos, rank FROM (
-            SELECT query_id, neighbor_id, cos,
-                   CAST(row_number() OVER (PARTITION BY query_id
-                                           ORDER BY cos DESC, neighbor_id) AS INT) AS rank
-            FROM scored)
-          WHERE rank <= ${AnnK}"""
-    })
+  query("q33_ann_ivf", annIvf, ivfSearchSql(embNrmCte))
 
   // --- q59: IVF ANN over a TRAINED k-means quantizer --------------------------
   // The full production path: deterministic Lloyd training (id-order seeds so
@@ -225,7 +161,7 @@ object AnnQueries extends QueryFamily {
                     FROM $a, (SELECT unnest(generate_series(1, $Dim)) AS i) g
                     GROUP BY 1, 2)
               GROUP BY list) r ON p.list = r.list"""
-      s"""WITH train AS (
+      ivfSearchSql(s"""train AS (
             SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
             FROM embeddings WHERE vec_id >= ${AnnQueryMaxId}),
           c0 AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) - 1 AS list,
@@ -243,38 +179,7 @@ object AnnQueries extends QueryFamily {
                    FROM embeddings),
           lab AS (${assign("allv", "u2")}),
           e AS (SELECT a.vec_id, a.embedding, lab.list AS label, $nrmSql AS nrm
-                FROM allv a JOIN lab ON a.vec_id = lab.vec_id),
-          q AS (SELECT vec_id AS query_id, embedding AS qe, nrm AS qn
-                FROM e WHERE vec_id < ${AnnQueryMaxId}),
-          c AS (SELECT vec_id AS neighbor_id, label, embedding AS ce, nrm AS cn
-                FROM e WHERE vec_id >= ${AnnQueryMaxId}),
-          cent AS (
-            SELECT label, array_agg(CAST(s AS DOUBLE) ORDER BY i) AS centroid
-            FROM (SELECT label, i,
-                         SUM(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(20,10))) AS s
-                  FROM e, (SELECT unnest(generate_series(1, $Dim)) AS i) g
-                  WHERE vec_id >= ${AnnQueryMaxId}
-                  GROUP BY 1, 2)
-            GROUP BY label),
-          pr AS (
-            SELECT query_id, qe, qn, label FROM (
-              SELECT query_id, qe, qn, label,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY ccos DESC, label) AS lr
-              FROM (SELECT q.query_id, q.qe, q.qn, cent.label,
-                           ${dotSql("qe", "centroid")}
-                             / (q.qn * sqrt(${dotSql("centroid", "centroid")})) AS ccos
-                    FROM q, cent))
-            WHERE lr <= ${IvfNProbe}),
-          scored AS (
-            SELECT query_id, neighbor_id, ${dotSql("qe", "ce")} / (qn * cn) AS cos
-            FROM pr JOIN c USING (label))
-          SELECT query_id, neighbor_id, cos, rank FROM (
-            SELECT query_id, neighbor_id, cos,
-                   CAST(row_number() OVER (PARTITION BY query_id
-                                           ORDER BY cos DESC, neighbor_id) AS INT) AS rank
-            FROM scored)
-          WHERE rank <= ${AnnK}"""
+                FROM allv a JOIN lab ON a.vec_id = lab.vec_id)""")
     })
 
   // --- q61: LARGE-k quantizer assignment (broadcast-table path) ---------------
@@ -547,10 +452,7 @@ object AnnQueries extends QueryFamily {
   // 0.0), the 4-term sum pivoted per subspace so the addition order
   // is FIXED (a hash-agg SUM over subspaces would be order-unstable
   // in the last ulp), row_number tiebreak on vec_id.
-  query("q237_pq_adc_topk", pqAdcTopK,
-      s"""WITH $pqAdcRankedCtes
-          SELECT query_id, rank, vec_id, adc_dist2 FROM adck
-          WHERE rank <= ${AnnK}""")
+  query("q237_pq_adc_topk", pqAdcTopK, adcTopKSql(pqAdcRankedCtes))
 
   /** Every (query, corpus-vector) ADC distance — factored so the spec
     * can check the seed-exactness property (a corpus vector that IS a
@@ -677,68 +579,18 @@ object AnnQueries extends QueryFamily {
   // q239 — the q33 probe CTEs (centroid cosine, top-nprobe lists per
   // query) restrict the q237 ADC scoring to probed-list members; the
   // same per-subspace MIN-CASE pivots fix the 4-term addition order.
-  query("q239_ivf_pq_search", ivfPqSearch, {
-      import graft.functions.Lsh.Dim
-      val subDim = Dim / PqSub
-      val adcSum = (0 until PqSub).map(i =>
-        s"MIN(CASE WHEN subspace = $i THEN d2 END)").mkString(" + ")
-      s"""WITH $pqCtes,
-          en AS (SELECT vec_id, label,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-                        $nrmSql AS nrm
-                 FROM embeddings),
-          q AS (SELECT vec_id AS query_id, v AS qe, nrm AS qn
-                FROM en WHERE vec_id < ${AnnQueryMaxId}),
-          cent AS (
-            SELECT label, array_agg(CAST(s AS DOUBLE) ORDER BY i) AS centroid
-            FROM (SELECT label, i,
-                         SUM(CAST(v[i] AS DECIMAL(20,10))) AS s
-                  FROM en, (SELECT unnest(generate_series(1, $Dim)) AS i) g
-                  WHERE vec_id >= ${AnnQueryMaxId}
-                  GROUP BY 1, 2)
-            GROUP BY label),
-          pr AS (
-            SELECT query_id, label FROM (
-              SELECT query_id, label,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY ccos DESC, label) AS lr
-              FROM (SELECT q.query_id, cent.label,
-                           ${dotSql("qe", "centroid")}
-                             / (q.qn * sqrt(${dotSql("centroid", "centroid")})) AS ccos
-                    FROM q, cent))
-            WHERE lr <= ${IvfNProbe}),
-          qq AS (SELECT vec_id AS query_id, v FROM emb
-                 WHERE vec_id < ${AnnQueryMaxId}),
-          qsub AS (SELECT query_id, sp.subspace,
-                          list_slice(v, sp.subspace * $subDim + 1,
-                                     (sp.subspace + 1) * $subDim) AS qsv
-                   FROM qq, sp),
-          lut AS (SELECT query_id, qsub.subspace, code,
-                         list_reduce(list_transform(
-                           generate_series(1, $subDim),
-                           i -> (qsv[i] - cent[i]) * (qsv[i] - cent[i])),
-                           (a, b) -> a + b) AS d2
-                  FROM qsub JOIN cents ON qsub.subspace = cents.subspace),
-          cand AS (SELECT pr.query_id, en2.vec_id
-                   FROM pr JOIN (SELECT vec_id, label FROM en
-                                 WHERE vec_id >= ${AnnQueryMaxId}) en2
-                     USING (label)),
-          corp AS (SELECT vec_id, subspace, code FROM codes
-                   WHERE vec_id >= ${AnnQueryMaxId}),
-          j AS (SELECT cand.query_id, cand.vec_id, corp.subspace, d2
-                FROM cand JOIN corp ON corp.vec_id = cand.vec_id
-                          JOIN lut ON lut.query_id = cand.query_id
-                                  AND lut.subspace = corp.subspace
-                                  AND lut.code = corp.code),
-          sq AS (SELECT query_id, vec_id,
-                        $adcSum AS adc_dist2
-                 FROM j GROUP BY 1, 2)
-          SELECT query_id, rank, vec_id, adc_dist2 FROM (
-            SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-                        ORDER BY adc_dist2, vec_id) AS BIGINT) AS rank
-            FROM sq)
-          WHERE rank <= ${AnnK}"""
-    })
+  query("q239_ivf_pq_search", ivfPqSearch,
+      adcTopKSql(s"""$pqCtes,
+          $embNrmCte,
+          $ivfProbeCtes,
+          $pqLutCtes,
+          j AS (SELECT pr.query_id, c.neighbor_id AS vec_id, codes.subspace, d2
+                FROM pr JOIN c USING (label)
+                        JOIN codes ON codes.vec_id = c.neighbor_id
+                        JOIN lut ON lut.query_id = pr.query_id
+                                AND lut.subspace = codes.subspace
+                                AND lut.code = codes.code),
+          ${adcRankCtes(PqSub)}"""))
 
   // --- q246: residual IVF-PQ search (the true FAISS IVFPQ encode) -----------------------
   // q223/q237/q239 quantize the raw vectors; production IVFPQ quantizes
@@ -767,10 +619,7 @@ object AnnQueries extends QueryFamily {
   // tie-broken on code), L2-to-mean probe (tie on label), per-(query,
   // probed-list) LUTs, per-subspace MIN-CASE pivot fixing the 4-term
   // addition order, vec_id tiebreak on the final rank.
-  query("q246_ivf_pq_residual", ivfPqResidualSearch,
-      s"""WITH ${resAdcRankedCtes(0)}
-          SELECT query_id, rank, vec_id, adc_dist2 FROM radck
-          WHERE rank <= ${AnnK}""")
+  query("q246_ivf_pq_residual", ivfPqResidualSearch, adcTopKSql(residualAdcCtes(0)))
 
   // --- q259: TRAINED residual codebook search (the q257 lever, built) -------------------
   // q257's verdict: the residual encode loses to the raw codebook
@@ -792,10 +641,7 @@ object AnnQueries extends QueryFamily {
   // q259 — the TRAINED chain: the identical final SELECT over the
   // CTE list with ResTrainIters Lloyd rounds spliced between the
   // seed codebook and the encode.
-  query("q259_pq_trained", pqTrainedSearch,
-      s"""WITH ${resAdcRankedCtes(ResTrainIters)}
-          SELECT query_id, rank, vec_id, adc_dist2 FROM radck
-          WHERE rank <= ${AnnK}""")
+  query("q259_pq_trained", pqTrainedSearch, adcTopKSql(residualAdcCtes(ResTrainIters)))
 
   // --- q260: the trained codebook's recall row ------------------------------------------
   // The measurement that closes the q254→q257→q259 arc: same exact-L2
@@ -820,7 +666,7 @@ object AnnQueries extends QueryFamily {
 
   // q260 — the recall row of the TRAINED chain (the q254→q257→q259
   // arc's measurement): same ground truth, q259's candidates.
-  query("q260_trained_recall", trainedRecall, residualRecallSql(ResTrainIters))
+  query("q260_trained_recall", trainedRecall, recallSql(residualAdcCtes(ResTrainIters)))
 
   /** The residual IVF-PQ read path, parameterized by Lloyd rounds on
     * the subspace codebooks (0 = q246's untrained seeds): the probed-ADC
@@ -893,35 +739,7 @@ object AnnQueries extends QueryFamily {
   // q254 — exact L2 top-k (the same fixed-fold distance, vec_id
   // tiebreak) left-joined against the q237 ADC top-k from the SHARED
   // ranked CTE chain; per-query hit counts and recall@k.
-  query("q254_pq_recall", pqRecall, {
-      import graft.functions.Lsh.Dim
-      s"""WITH $pqAdcRankedCtes,
-          corpv AS (SELECT vec_id, v FROM emb
-                    WHERE vec_id >= ${AnnQueryMaxId}),
-          exact AS (SELECT query_id, corpv.vec_id,
-                           list_reduce(list_transform(
-                             generate_series(1, $Dim),
-                             i -> (qq.v[i] - corpv.v[i]) *
-                                  (qq.v[i] - corpv.v[i])),
-                             (a, b) -> a + b) AS d2
-                    FROM qq, corpv),
-          ext AS (SELECT query_id, vec_id FROM (
-                    SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY d2, vec_id) AS rk
-                    FROM exact)
-                  WHERE rk <= ${AnnK}),
-          hits AS (SELECT e.query_id,
-                          CAST(SUM(CASE WHEN a.vec_id IS NOT NULL
-                                        THEN 1 ELSE 0 END) AS BIGINT)
-                            AS n_hits
-                   FROM ext e LEFT JOIN (SELECT query_id, vec_id FROM adck
-                                         WHERE rank <= ${AnnK}) a
-                     ON e.query_id = a.query_id AND e.vec_id = a.vec_id
-                   GROUP BY 1)
-          SELECT query_id, n_hits,
-                 CAST(n_hits AS DOUBLE) / ${AnnK} AS recall
-          FROM hits"""
-    })
+  query("q254_pq_recall", pqRecall, recallSql(pqAdcRankedCtes))
 
   // --- q257: residual-PQ recall (the q246 claim, measured) ------------------------------
   // q254 reads recall 0.16 for the RAW 4×16 codebook and q246's whole
@@ -948,7 +766,7 @@ object AnnQueries extends QueryFamily {
   // q257 — the residual chain's OWN recall row (q254 measures the raw
   // codebook; this measures what q246 claims to fix): the shared
   // residual-ADC ranked CTE against the same exact-L2 ground truth.
-  query("q257_residual_recall", residualRecall, residualRecallSql(0))
+  query("q257_residual_recall", residualRecall, recallSql(residualAdcCtes(0)))
 
   /** Exact L2 top-k per query — the ANN ground truth. */
   private[graft] def exactL2TopK(spark: SparkSession, dir: String): DataFrame =
@@ -1215,36 +1033,16 @@ object AnnQueries extends QueryFamily {
   // d² (separation ≫ spread is what makes q271/q272 meaningful)
   query("q270_cfx_fixture", cfxFixtureReport, {
       import graft.functions.Lsh.Dim
-      val S = operators.Ivf.MeanQuantScale
-      s"""WITH $cfxEmbCte,
-          ccorp AS (SELECT vec_id, label, v FROM cemb
-                    WHERE vec_id >= ${AnnQueryMaxId}),
-          cmean AS (SELECT label, array_agg(m ORDER BY i) AS centroid FROM (
-                      SELECT label, i,
-                             CAST(SUM(CAST(floor(v[i] * $S) AS BIGINT))
-                               AS DOUBLE)
-                               / CAST(COUNT(*) * $S AS DOUBLE) AS m
-                      FROM ccorp,
-                           (SELECT unnest(generate_series(1, $Dim)) AS i) g
-                      GROUP BY 1, 2)
-                    GROUP BY label),
-          wd AS (SELECT ccorp.label,
-                        list_reduce(list_transform(
-                          generate_series(1, $Dim),
-                          i -> (v[i] - centroid[i]) * (v[i] - centroid[i])),
-                          (x, y) -> x + y) AS d2
-                 FROM ccorp JOIN cmean USING (label)),
+      s"""WITH $cfxEmbCtes,
+          $corpMeanCtes,
+          wd AS (SELECT label, ${l2Sql("v", "cent", Dim)} AS d2
+                 FROM corp JOIN mean USING (label)),
           w AS (SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vecs,
-                       CAST(SUM(CAST(floor(d2 * $S) AS BIGINT)) AS DOUBLE)
-                         / CAST(COUNT(*) * $S AS DOUBLE) AS avg_within_d2
+                       ${gridMeanSql("d2")} AS avg_within_d2
                 FROM wd GROUP BY 1),
           inter AS (SELECT a.label,
-                           MIN(list_reduce(list_transform(
-                             generate_series(1, $Dim),
-                             i -> (a.centroid[i] - b.centroid[i]) *
-                                  (a.centroid[i] - b.centroid[i])),
-                             (x, y) -> x + y)) AS min_inter_d2
-                    FROM cmean a JOIN cmean b ON a.label <> b.label
+                           MIN(${l2Sql("a.cent", "b.cent", Dim)}) AS min_inter_d2
+                    FROM mean a JOIN mean b ON a.label <> b.label
                     GROUP BY 1)
           SELECT CAST(w.label AS BIGINT) AS label, n_vecs,
                  avg_within_d2, min_inter_d2
@@ -1260,14 +1058,15 @@ object AnnQueries extends QueryFamily {
   // training and probing; the encode (residual vs raw) is the only
   // difference, so the recall gap IS the residual transform's value
   // on clustered data
-  query("q271_cfx_trained_recall", cfxTrainedRecall, cfxRecallSql(encodeRaw = false))
+  query("q271_cfx_trained_recall", cfxTrainedRecall,
+    recallSql(cfxAdcCtes(encodeRaw = false)))
 
   def cfxRawRecall(spark: SparkSession, dir: String): DataFrame =
     recallOf(exactL2TopKFrom(clusteredEmbeddings(spark, dir)),
       cfxAdcSearch(spark, dir, encodeRaw = true)
         .select("query_id", "vec_id"))
 
-  query("q272_cfx_raw_recall", cfxRawRecall, cfxRecallSql(encodeRaw = true))
+  query("q272_cfx_raw_recall", cfxRawRecall, recallSql(cfxAdcCtes(encodeRaw = true)))
 
   // --- oracle SQL fragments the specs above share --------------------------
 
@@ -1279,7 +1078,8 @@ object AnnQueries extends QueryFamily {
         SELECT vec_id, subspace, code, dist2 FROM codes"""
 
   /** The shared PQ CTE chain (emb → seeds → cents → sub → scored →
-    * codes), used by q223/q234 (assignment) and q237 (ADC search).
+    * codes), used by q223/q234 (assignment) and the q237/q239/q254 ADC
+    * searches.
     */
   private lazy val pqCtes: String = {
       val subDim = graft.functions.Lsh.Dim / PqSub
@@ -1318,378 +1118,269 @@ object AnnQueries extends QueryFamily {
           WHERE rn = 1)"""
   }
 
-  /** The q237 ADC chain up to the RANKED score table `adck` (query_id,
-    * vec_id, adc_dist2, rank) — shared by the q237 gate and q254's
-    * recall harness, which compares it against the exact top-k.
+  /** The embeddings with their norms, `e` (vec_id, label, embedding, nrm). */
+  private lazy val embNrmCte: String =
+    s"e AS (SELECT vec_id, label, embedding, $nrmSql AS nrm FROM embeddings)"
+
+  /** `e` split into the query side `q` (query_id, qe, qn) and the corpus
+    * side `c` (neighbor_id, label, ce, cn) of the cosine searches.
     */
-  /** The residual IVF-PQ chain as a shared ranked CTE list (ending in
-    * `radck`, the per-query ADC ranking), parameterized by Lloyd
-    * training rounds on the subspace codebooks (0 = q246/q257's
-    * untrained seeds; ResTrainIters = q259/q260) — each gate and its
-    * recall instrument must score the SAME chain, so it is one
-    * definition, the pqAdcRankedCtes pattern. Training rounds replay
-    * trainSubCodebook verbatim: argmin assignment tie-broken on code,
-    * floor-onto-2^20-grid exact means, empty codes carry the previous
-    * centroid via COALESCE.
+  private lazy val cosSidesCtes: String =
+    s"""q AS (SELECT vec_id AS query_id, embedding AS qe, nrm AS qn
+              FROM e WHERE vec_id < ${AnnQueryMaxId}),
+        c AS (SELECT vec_id AS neighbor_id, label, embedding AS ce, nrm AS cn
+              FROM e WHERE vec_id >= ${AnnQueryMaxId})"""
+
+  /** Per-query top-AnnK by exact cosine over the candidate rows of `cand`
+    * (query_id, qe, qn, neighbor_id, ce, cn), ties to the lower
+    * neighbor_id — ≡ NearDup.cosTopK.
     */
-  /** recall@k of the iters-round residual chain vs the exact-L2 ground
-    * truth — q257 (iters=0) and q260 (trained) share this text.
+  private def cosTopKSql(cand: String): String =
+    s"""SELECT query_id, neighbor_id, cos, rank FROM (
+          SELECT query_id, neighbor_id, cos,
+                 CAST(row_number() OVER (PARTITION BY query_id
+                                         ORDER BY cos DESC, neighbor_id) AS INT) AS rank
+          FROM (SELECT query_id, neighbor_id, ${dotSql("qe", "ce")} / (qn * cn) AS cos
+                FROM $cand))
+        WHERE rank <= ${AnnK}"""
+
+  /** The IVF probe over `e`: exact-decimal sum centroids `cent` of the
+    * corpus lists and the IvfNProbe lists per query by centroid cosine,
+    * ties to the lower label, as `pr` (query_id, qe, qn, label) —
+    * ≡ Ivf.probeLists.
     */
-  /** The planted-mixture corpus as SQL — the same integer-hash grid
-    * arithmetic as clusteredEmbeddings, so the fixture is
-    * bit-identical across engines by construction (exact {0,4,…,60}
-    * centers + exact k/128 noise; every term a small-integer ratio).
-    */
-  private lazy val cfxEmbCte: String = {
-    import graft.functions.{Lsh, Sketches}
-    s"""cids AS (SELECT vec_id * ${CfxExpand} + j AS vec_id
-                 FROM embeddings,
-                      (SELECT unnest(generate_series(0,
-                         ${CfxExpand - 1})) AS j) e),
-        cemb AS (SELECT vec_id,
-                   CAST(vec_id % ${CfxClusters} AS INT) AS label,
-                   list_transform(generate_series(1, ${Lsh.Dim}), i ->
-                     CAST((${Lsh.A(0)} * (vec_id % ${CfxClusters} + 1)
-                           + ${Lsh.B(0)} * i) % ${Sketches.P} % 16 AS DOUBLE)
-                       * 4.0
-                     + (CAST((${Lsh.A(1)} * (vec_id + 1)
-                              + ${Lsh.B(1)} * i) % ${Sketches.P} % 129
-                         AS DOUBLE) - 64.0) / 128.0) AS v
-                 FROM cids)"""
+  private lazy val ivfProbeCtes: String = {
+    import graft.functions.Lsh.Dim
+    s"""$cosSidesCtes,
+        cent AS (
+          SELECT label, array_agg(CAST(s AS DOUBLE) ORDER BY i) AS centroid
+          FROM (SELECT label, i,
+                       SUM(CAST(CAST(ce[i] AS DOUBLE) AS DECIMAL(20,10))) AS s
+                FROM c, (SELECT unnest(generate_series(1, $Dim)) AS i) g
+                GROUP BY 1, 2)
+          GROUP BY label),
+        pr AS (
+          SELECT query_id, qe, qn, label FROM (
+            SELECT *, row_number() OVER (PARTITION BY query_id
+                                         ORDER BY ccos DESC, label) AS lr
+            FROM (SELECT query_id, qe, qn, label,
+                         ${dotSql("qe", "centroid")}
+                           / (qn * sqrt(${dotSql("centroid", "centroid")})) AS ccos
+                  FROM q, cent))
+          WHERE lr <= ${IvfNProbe})"""
   }
 
-  /** The 8×256 trained-ADC chain over the planted corpus (the q259
-    * Lloyd-replay CTEs, parameterized to the cfx geometry and to the
-    * encode mode — `encodeRaw` switches r = v vs r = v − mean, the only
-    * difference between the q271 and q272 oracles).
+  /** q33/q59: the IVF probe and exact cosine top-k over the lists that the
+    * CTEs `eCtes` assign in `e` — ≡ Ivf.annIvfTopK.
     */
-  private def cfxAdcRankedCtes(encodeRaw: Boolean): String = {
-    import graft.functions.Lsh.Dim
-    val nSub = CfxSub
-    val nCodes = CfxCodes
-    val iters = CfxTrainIters
-    val subDim = Dim / nSub
+  private def ivfSearchSql(eCtes: String): String =
+    s"""WITH $eCtes,
+        $ivfProbeCtes
+        ${cosTopKSql("pr JOIN c USING (label)")}"""
+
+  /** Squared L2 of the `n`-vectors `a` and `b`, folded in index order
+    * — ≡ l2Fold and VectorExprs.l2dist2.
+    */
+  private def l2Sql(a: String, b: String, n: Int): String =
+    s"""list_reduce(list_transform(generate_series(1, $n),
+          i -> ($a[i] - $b[i]) * ($a[i] - $b[i])), (x, y) -> x + y)"""
+
+  /** Subspace `sp.subspace`'s slice of list `x`. */
+  private def sliceSql(x: String, subDim: Int): String =
+    s"list_slice($x, sp.subspace * $subDim + 1, (sp.subspace + 1) * $subDim)"
+
+  /** The mean of `x` over a group on the 2^20 grid (floored integer sum,
+    * one division) — the exact mean every engine rounds alike.
+    */
+  private def gridMeanSql(x: String): String = {
     val S = operators.Ivf.MeanQuantScale
+    s"CAST(SUM(CAST(floor($x * $S) AS BIGINT)) AS DOUBLE) / CAST(COUNT(*) * $S AS DOUBLE)"
+  }
+
+  /** Per-`keys` grid means `cent` of the `n`-vectors `v` over `src` —
+    * ≡ Ivf.meanCentroids and trainSubCodebook's re-centering.
+    */
+  private def gridMeansSql(keys: String, src: String, v: String, n: Int): String =
+    s"""SELECT $keys, array_agg(m ORDER BY i) AS cent FROM (
+          SELECT $keys, i, ${gridMeanSql(s"$v[i]")} AS m
+          FROM $src, (SELECT unnest(generate_series(1, $n)) AS i) g
+          GROUP BY $keys, i)
+        GROUP BY $keys"""
+
+  /** The fixture's corpus `corp` and its list means `mean` (label, cent). */
+  private lazy val corpMeanCtes: String =
+    s"""corp AS (SELECT vec_id, label, v FROM emb WHERE vec_id >= ${AnnQueryMaxId}),
+        mean AS (${gridMeansSql("label", "corp", "v", graft.functions.Lsh.Dim)})"""
+
+  /** The fixture's queries `qq` (query_id, v). */
+  private lazy val qqCte: String =
+    s"qq AS (SELECT vec_id AS query_id, v FROM emb WHERE vec_id < ${AnnQueryMaxId})"
+
+  /** Per-(`keys`) ADC tables `lut` (keys, subspace, code, d2) of the
+    * query vectors `qv` in `src` against the codebook `cents` — ≡ lutTabs.
+    */
+  private def lutCtes(src: String, keys: String, qv: String, subDim: Int): String =
+    s"""qsub AS (SELECT $keys, sp.subspace, ${sliceSql(qv, subDim)} AS qsv
+                 FROM $src, sp),
+        lut AS (SELECT $keys, qsub.subspace, code, ${l2Sql("qsv", "cent", subDim)} AS d2
+                FROM qsub JOIN cents ON qsub.subspace = cents.subspace)"""
+
+  /** The per-query LUTs over the q223 seed codebook — ≡ pqLutDf. */
+  private lazy val pqLutCtes: String =
+    s"""$qqCte,
+        ${lutCtes("qq", "query_id", "v", graft.functions.Lsh.Dim / PqSub)}"""
+
+  /** The ADC sum of the `nSub` lookups `j` (query_id, vec_id, subspace,
+    * d2) pivoted per subspace, so the addition order is fixed, and ranked
+    * per query on (adc_dist2, vec_id) as `adck` — ≡ adcScored + adcTopK.
+    */
+  private def adcRankCtes(nSub: Int): String = {
     val adcSum = (0 until nSub).map(i =>
       s"MIN(CASE WHEN subspace = $i THEN d2 END)").mkString(" + ")
-    val resDef =
-      if (encodeRaw)
-        s"""res AS (SELECT vec_id, label, v AS r FROM ccorp)"""
-      else
-        s"""res AS (SELECT vec_id, ccorp.label,
-                         list_transform(generate_series(1, $Dim),
-                           i -> v[i] - centroid[i]) AS r
-                  FROM ccorp JOIN cmean USING (label))"""
-    val rounds = (1 to iters).map { r =>
-      s"""sc$r AS (SELECT vec_id, sub.subspace, code,
-                      list_reduce(list_transform(
-                        generate_series(1, $subDim),
-                        i -> (sv[i] - cent[i]) * (sv[i] - cent[i])),
-                        (x, y) -> x + y) AS d2
-               FROM sub JOIN cents${r - 1} cc
-                 ON sub.subspace = cc.subspace),
-        asg$r AS (SELECT vec_id, subspace, code FROM (
-                    SELECT *, row_number() OVER (
-                      PARTITION BY vec_id, subspace
-                      ORDER BY d2, code) AS rn FROM sc$r)
-                  WHERE rn = 1),
-        mm$r AS (SELECT a.subspace, a.code, i,
-                        CAST(SUM(CAST(floor(sv[i] * $S) AS BIGINT))
-                             AS DOUBLE)
-                          / CAST(COUNT(*) * $S AS DOUBLE) AS m
-                 FROM asg$r a JOIN sub ON a.vec_id = sub.vec_id
-                                      AND a.subspace = sub.subspace,
-                      (SELECT unnest(generate_series(1, $subDim)) AS i) g
-                 GROUP BY 1, 2, 3),
-        cn$r AS (SELECT subspace, code, array_agg(m ORDER BY i) AS cent
-                 FROM mm$r GROUP BY 1, 2),
-        cents$r AS (SELECT p.subspace, p.code,
-                           COALESCE(n.cent, p.cent) AS cent
-                    FROM cents${r - 1} p LEFT JOIN cn$r n
-                      ON p.subspace = n.subspace AND p.code = n.code)"""
-    }.map(",\n        " + _).mkString
-    s"""$cfxEmbCte,
-        ccorp AS (SELECT vec_id, label, v FROM cemb
-                  WHERE vec_id >= ${AnnQueryMaxId}),
-        cmean AS (SELECT label, array_agg(m ORDER BY i) AS centroid FROM (
-                    SELECT label, i,
-                           CAST(SUM(CAST(floor(v[i] * $S) AS BIGINT))
-                             AS DOUBLE)
-                             / CAST(COUNT(*) * $S AS DOUBLE) AS m
-                    FROM ccorp,
-                         (SELECT unnest(generate_series(1, $Dim)) AS i) g
-                    GROUP BY 1, 2)
-                  GROUP BY label),
-        $resDef,
-        cb AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT)
-                        - 1 AS code, r
-               FROM (SELECT vec_id, r FROM res
-                     ORDER BY vec_id LIMIT $nCodes)),
-        sp AS (SELECT CAST(unnest(generate_series(0, ${nSub - 1}))
-                 AS INT) AS subspace),
-        cents0 AS (SELECT sp.subspace, cb.code,
-                          list_slice(r, sp.subspace * $subDim + 1,
-                                     (sp.subspace + 1) * $subDim) AS cent
-                   FROM cb, sp),
-        sub AS (SELECT vec_id, label, sp.subspace,
-                       list_slice(r, sp.subspace * $subDim + 1,
-                                  (sp.subspace + 1) * $subDim) AS sv
-                FROM res, sp)$rounds,
-        cents AS (SELECT subspace, code, cent FROM cents$iters),
-        scoredc AS (SELECT vec_id, label, sub.subspace, code,
-                           list_reduce(list_transform(
-                             generate_series(1, $subDim),
-                             i -> (sv[i] - cent[i]) * (sv[i] - cent[i])),
-                             (x, y) -> x + y) AS d2
-                    FROM sub JOIN cents ON sub.subspace = cents.subspace),
-        codes AS (SELECT vec_id, label, subspace, code FROM (
-                    SELECT *, row_number() OVER (PARTITION BY vec_id, subspace
-                               ORDER BY d2, code) AS rn
-                    FROM scoredc)
-                  WHERE rn = 1),
-        q AS (SELECT vec_id AS query_id, v FROM cemb
-              WHERE vec_id < ${AnnQueryMaxId}),
-        qd AS (SELECT query_id, label,
-                      list_reduce(list_transform(generate_series(1, $Dim),
-                        i -> (v[i] - centroid[i]) * (v[i] - centroid[i])),
-                        (x, y) -> x + y) AS cd2,
-                      ${if (encodeRaw) "v AS qr"
-                        else s"""list_transform(generate_series(1, $Dim),
-                        i -> v[i] - centroid[i]) AS qr"""}
-               FROM q, cmean),
-        pr AS (SELECT query_id, label, qr FROM (
-                 SELECT *, row_number() OVER (PARTITION BY query_id
-                            ORDER BY cd2, label) AS lr
-                 FROM qd)
-               WHERE lr <= ${CfxNProbe}),
-        qsub AS (SELECT query_id, label, sp.subspace,
-                        list_slice(qr, sp.subspace * $subDim + 1,
-                                   (sp.subspace + 1) * $subDim) AS qsv
-                 FROM pr, sp),
-        lut AS (SELECT query_id, label, qsub.subspace, code,
-                       list_reduce(list_transform(
-                         generate_series(1, $subDim),
-                         i -> (qsv[i] - cent[i]) * (qsv[i] - cent[i])),
-                         (x, y) -> x + y) AS d2
-                FROM qsub JOIN cents ON qsub.subspace = cents.subspace),
-        j AS (SELECT lut.query_id, codes.vec_id, codes.subspace, d2
-              FROM codes JOIN lut ON lut.label = codes.label
-                                 AND lut.subspace = codes.subspace
-                                 AND lut.code = codes.code),
-        sq AS (SELECT query_id, vec_id, $adcSum AS adc_dist2
-               FROM j GROUP BY 1, 2),
-        radck AS (SELECT query_id, vec_id, adc_dist2,
-                         CAST(row_number() OVER (PARTITION BY query_id
-                           ORDER BY adc_dist2, vec_id) AS BIGINT) AS rank
-                  FROM sq)"""
-  }
-
-  private def cfxRecallSql(encodeRaw: Boolean): String = {
-    import graft.functions.Lsh.Dim
-    s"""WITH ${cfxAdcRankedCtes(encodeRaw)},
-        corpv AS (SELECT vec_id, v FROM cemb
-                  WHERE vec_id >= ${AnnQueryMaxId}),
-        exact AS (SELECT q.query_id, corpv.vec_id,
-                         list_reduce(list_transform(
-                           generate_series(1, $Dim),
-                           i -> (q.v[i] - corpv.v[i]) *
-                                (q.v[i] - corpv.v[i])),
-                           (x, y) -> x + y) AS d2
-                  FROM q, corpv),
-        ext AS (SELECT query_id, vec_id FROM (
-                  SELECT *, row_number() OVER (PARTITION BY query_id
-                             ORDER BY d2, vec_id) AS rk
-                  FROM exact)
-                WHERE rk <= ${AnnK}),
-        hits AS (SELECT e.query_id,
-                        CAST(SUM(CASE WHEN a.vec_id IS NOT NULL
-                                      THEN 1 ELSE 0 END) AS BIGINT)
-                          AS n_hits
-                 FROM ext e LEFT JOIN (SELECT query_id, vec_id FROM radck
-                                       WHERE rank <= ${AnnK}) a
-                   ON e.query_id = a.query_id AND e.vec_id = a.vec_id
-                 GROUP BY 1)
-        SELECT query_id, n_hits,
-               CAST(n_hits AS DOUBLE) / ${AnnK} AS recall
-        FROM hits"""
-  }
-
-  private def residualRecallSql(iters: Int): String = {
-    import graft.functions.Lsh.Dim
-    s"""WITH ${resAdcRankedCtes(iters)},
-        corpv AS (SELECT vec_id, v FROM emb
-                  WHERE vec_id >= ${AnnQueryMaxId}),
-        exact AS (SELECT q.query_id, corpv.vec_id,
-                         list_reduce(list_transform(
-                           generate_series(1, $Dim),
-                           i -> (q.v[i] - corpv.v[i]) *
-                                (q.v[i] - corpv.v[i])),
-                           (a, b) -> a + b) AS d2
-                  FROM q, corpv),
-        ext AS (SELECT query_id, vec_id FROM (
-                  SELECT *, row_number() OVER (PARTITION BY query_id
-                             ORDER BY d2, vec_id) AS rk
-                  FROM exact)
-                WHERE rk <= ${AnnK}),
-        hits AS (SELECT e.query_id,
-                        CAST(SUM(CASE WHEN a.vec_id IS NOT NULL
-                                      THEN 1 ELSE 0 END) AS BIGINT)
-                          AS n_hits
-                 FROM ext e LEFT JOIN (SELECT query_id, vec_id FROM radck
-                                       WHERE rank <= ${AnnK}) a
-                   ON e.query_id = a.query_id AND e.vec_id = a.vec_id
-                 GROUP BY 1)
-        SELECT query_id, n_hits,
-               CAST(n_hits AS DOUBLE) / ${AnnK} AS recall
-        FROM hits"""
-  }
-
-  private def resAdcRankedCtes(iters: Int): String = {
-      import graft.functions.Lsh.Dim
-      val subDim = Dim / PqSub
-      val S = operators.Ivf.MeanQuantScale
-      val adcSum = (0 until PqSub).map(i =>
-        s"MIN(CASE WHEN subspace = $i THEN d2 END)").mkString(" + ")
-      val rounds = (1 to iters).map { r =>
-        s"""sc$r AS (SELECT vec_id, sub.subspace, code,
-                        list_reduce(list_transform(
-                          generate_series(1, $subDim),
-                          i -> (sv[i] - cent[i]) * (sv[i] - cent[i])),
-                          (a, b) -> a + b) AS d2
-                 FROM sub JOIN cents${r - 1} cc
-                   ON sub.subspace = cc.subspace),
-          asg$r AS (SELECT vec_id, subspace, code FROM (
-                      SELECT *, row_number() OVER (
-                        PARTITION BY vec_id, subspace
-                        ORDER BY d2, code) AS rn FROM sc$r)
-                    WHERE rn = 1),
-          mm$r AS (SELECT a.subspace, a.code, i,
-                          CAST(SUM(CAST(floor(sv[i] * $S) AS BIGINT))
-                               AS DOUBLE)
-                            / CAST(COUNT(*) * $S AS DOUBLE) AS m
-                   FROM asg$r a JOIN sub ON a.vec_id = sub.vec_id
-                                        AND a.subspace = sub.subspace,
-                        (SELECT unnest(generate_series(1, $subDim)) AS i) g
-                   GROUP BY 1, 2, 3),
-          cn$r AS (SELECT subspace, code, array_agg(m ORDER BY i) AS cent
-                   FROM mm$r GROUP BY 1, 2),
-          cents$r AS (SELECT p.subspace, p.code,
-                             COALESCE(n.cent, p.cent) AS cent
-                      FROM cents${r - 1} p LEFT JOIN cn$r n
-                        ON p.subspace = n.subspace AND p.code = n.code)"""
-      }.map(",\n          " + _).mkString
-      s"""emb AS (SELECT vec_id, label,
-                              list_transform(embedding,
-                                x -> CAST(x AS DOUBLE)) AS v
-                       FROM embeddings),
-          corp AS (SELECT vec_id, label, v FROM emb
-                   WHERE vec_id >= ${AnnQueryMaxId}),
-          mean AS (SELECT label, array_agg(m ORDER BY i) AS centroid FROM (
-                     SELECT label, i,
-                            CAST(SUM(CAST(floor(v[i] *
-                                ${operators.Ivf.MeanQuantScale}) AS BIGINT))
-                              AS DOUBLE)
-                              / CAST(COUNT(*) *
-                                  ${operators.Ivf.MeanQuantScale} AS DOUBLE)
-                              AS m
-                     FROM corp, (SELECT unnest(generate_series(1, $Dim)) AS i) g
-                     GROUP BY 1, 2)
-                   GROUP BY label),
-          res AS (SELECT vec_id, corp.label,
-                         list_transform(generate_series(1, $Dim),
-                           i -> v[i] - centroid[i]) AS r
-                  FROM corp JOIN mean USING (label)),
-          cb AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT)
-                          - 1 AS code, r
-                 FROM (SELECT vec_id, r FROM res
-                       ORDER BY vec_id LIMIT ${PqCodes})),
-          sp AS (SELECT CAST(unnest(generate_series(0, ${PqSub - 1}))
-                   AS INT) AS subspace),
-          cents0 AS (SELECT sp.subspace, cb.code,
-                            list_slice(r, sp.subspace * $subDim + 1,
-                                       (sp.subspace + 1) * $subDim) AS cent
-                     FROM cb, sp),
-          sub AS (SELECT vec_id, label, sp.subspace,
-                         list_slice(r, sp.subspace * $subDim + 1,
-                                    (sp.subspace + 1) * $subDim) AS sv
-                  FROM res, sp)$rounds,
-          cents AS (SELECT subspace, code, cent FROM cents$iters),
-          scoredc AS (SELECT vec_id, label, sub.subspace, code,
-                             list_reduce(list_transform(
-                               generate_series(1, $subDim),
-                               i -> (sv[i] - cent[i]) * (sv[i] - cent[i])),
-                               (a, b) -> a + b) AS d2
-                      FROM sub JOIN cents ON sub.subspace = cents.subspace),
-          codes AS (SELECT vec_id, label, subspace, code FROM (
-                      SELECT *, row_number() OVER (PARTITION BY vec_id, subspace
-                                 ORDER BY d2, code) AS rn
-                      FROM scoredc)
-                    WHERE rn = 1),
-          q AS (SELECT vec_id AS query_id, v FROM emb
-                WHERE vec_id < ${AnnQueryMaxId}),
-          qd AS (SELECT query_id, label,
-                        list_reduce(list_transform(generate_series(1, $Dim),
-                          i -> (v[i] - centroid[i]) * (v[i] - centroid[i])),
-                          (a, b) -> a + b) AS cd2,
-                        list_transform(generate_series(1, $Dim),
-                          i -> v[i] - centroid[i]) AS qr
-                 FROM q, mean),
-          pr AS (SELECT query_id, label, qr FROM (
-                   SELECT *, row_number() OVER (PARTITION BY query_id
-                              ORDER BY cd2, label) AS lr
-                   FROM qd)
-                 WHERE lr <= ${IvfNProbe}),
-          qsub AS (SELECT query_id, label, sp.subspace,
-                          list_slice(qr, sp.subspace * $subDim + 1,
-                                     (sp.subspace + 1) * $subDim) AS qsv
-                   FROM pr, sp),
-          lut AS (SELECT query_id, label, qsub.subspace, code,
-                         list_reduce(list_transform(
-                           generate_series(1, $subDim),
-                           i -> (qsv[i] - cent[i]) * (qsv[i] - cent[i])),
-                           (a, b) -> a + b) AS d2
-                  FROM qsub JOIN cents ON qsub.subspace = cents.subspace),
-          j AS (SELECT lut.query_id, codes.vec_id, codes.subspace, d2
-                FROM codes JOIN lut ON lut.label = codes.label
-                                   AND lut.subspace = codes.subspace
-                                   AND lut.code = codes.code),
-          sq AS (SELECT query_id, vec_id, $adcSum AS adc_dist2
-                 FROM j GROUP BY 1, 2),
-          radck AS (SELECT query_id, vec_id, adc_dist2,
-                           CAST(row_number() OVER (PARTITION BY query_id
-                             ORDER BY adc_dist2, vec_id) AS BIGINT) AS rank
-                    FROM sq)"""
-    }
-
-  private lazy val pqAdcRankedCtes: String = {
-    val subDim = graft.functions.Lsh.Dim / PqSub
-    val adcSum = (0 until PqSub).map(i =>
-      s"MIN(CASE WHEN subspace = $i THEN d2 END)").mkString(" + ")
-    s"""$pqCtes,
-        qq AS (SELECT vec_id AS query_id, v FROM emb
-               WHERE vec_id < ${AnnQueryMaxId}),
-        qsub AS (SELECT query_id, sp.subspace,
-                        list_slice(v, sp.subspace * $subDim + 1,
-                                   (sp.subspace + 1) * $subDim) AS qsv
-                 FROM qq, sp),
-        lut AS (SELECT query_id, qsub.subspace, code,
-                       list_reduce(list_transform(
-                         generate_series(1, $subDim),
-                         i -> (qsv[i] - cent[i]) * (qsv[i] - cent[i])),
-                         (a, b) -> a + b) AS d2
-                FROM qsub JOIN cents ON qsub.subspace = cents.subspace),
-        corp AS (SELECT vec_id, subspace, code FROM codes
-                 WHERE vec_id >= ${AnnQueryMaxId}),
-        j AS (SELECT query_id, vec_id, corp.subspace, d2
-              FROM corp JOIN lut ON corp.subspace = lut.subspace
-                                AND corp.code = lut.code),
-        sq AS (SELECT query_id, vec_id,
-                      $adcSum AS adc_dist2
+    s"""sq AS (SELECT query_id, vec_id, $adcSum AS adc_dist2
                FROM j GROUP BY 1, 2),
         adck AS (SELECT query_id, vec_id, adc_dist2,
                         CAST(row_number() OVER (PARTITION BY query_id
                           ORDER BY adc_dist2, vec_id) AS BIGINT) AS rank
                  FROM sq)"""
+  }
+
+  /** The top-AnnK rows of the ranked `adck` that `ctes` end in. */
+  private def adcTopKSql(ctes: String): String =
+    s"""WITH $ctes
+        SELECT query_id, rank, vec_id, adc_dist2 FROM adck
+        WHERE rank <= ${AnnK}"""
+
+  /** The q237 ADC chain up to `adck`: the q223 codes of the whole corpus
+    * scored through the per-query LUTs.
+    */
+  private lazy val pqAdcRankedCtes: String =
+    s"""$pqCtes,
+        $pqLutCtes,
+        j AS (SELECT query_id, vec_id, codes.subspace, d2
+              FROM codes JOIN lut ON codes.subspace = lut.subspace
+                                 AND codes.code = lut.code
+              WHERE vec_id >= ${AnnQueryMaxId}),
+        ${adcRankCtes(PqSub)}"""
+
+  /** The probed IVF-PQ chain over the fixture CTEs `fixture` (ending in
+    * `emb` (vec_id, label, v)) up to `adck` — ≡ probedAdcSearch: list
+    * means, residual or raw encode, `nCodes` lowest-id seeds sliced into
+    * `nSub` subspaces and `iters` Lloyd rounds (≡ trainSubCodebook:
+    * argmin ties to the lower code, grid means, a memberless code keeps
+    * its centroid), the codes, the `nprobe` nearest means per query (ties
+    * to the lower label), per-(query, list) LUTs and the ADC ranking.
+    */
+  private def probedAdcCtes(fixture: String, nSub: Int, nCodes: Int, nprobe: Int,
+                            iters: Int, encodeRaw: Boolean): String = {
+    import graft.functions.Lsh.Dim
+    val subDim = Dim / nSub
+    def coded(v: String) =
+      if (encodeRaw) v else s"list_transform(generate_series(1, $Dim), i -> $v[i] - cent[i])"
+    def assign(cb: String) =
+      s"""SELECT vec_id, label, subspace, code FROM (
+            SELECT *, row_number() OVER (PARTITION BY vec_id, subspace
+                                         ORDER BY d2, code) AS rn
+            FROM (SELECT vec_id, label, sub.subspace, code,
+                         ${l2Sql("sv", "cent", subDim)} AS d2
+                  FROM sub JOIN $cb cb ON sub.subspace = cb.subspace))
+          WHERE rn = 1"""
+    val rounds = (1 to iters).map { r =>
+      s""",
+        asg$r AS (${assign(s"cents${r - 1}")}),
+        cn$r AS (${gridMeansSql("subspace, code",
+                   s"asg$r JOIN sub USING (vec_id, subspace)", "sv", subDim)}),
+        cents$r AS (SELECT p.subspace, p.code, COALESCE(n.cent, p.cent) AS cent
+                    FROM cents${r - 1} p LEFT JOIN cn$r n
+                      ON p.subspace = n.subspace AND p.code = n.code)"""
+    }.mkString
+    s"""$fixture,
+        $corpMeanCtes,
+        res AS (SELECT vec_id, label, ${coded("v")} AS r
+                FROM corp JOIN mean USING (label)),
+        seeds AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) - 1 AS code, r
+                  FROM (SELECT vec_id, r FROM res ORDER BY vec_id LIMIT $nCodes)),
+        sp AS (SELECT CAST(unnest(generate_series(0, ${nSub - 1})) AS INT) AS subspace),
+        cents0 AS (SELECT sp.subspace, code, ${sliceSql("r", subDim)} AS cent
+                   FROM seeds, sp),
+        sub AS (SELECT vec_id, label, sp.subspace, ${sliceSql("r", subDim)} AS sv
+                FROM res, sp)$rounds,
+        cents AS (SELECT subspace, code, cent FROM cents$iters),
+        codes AS (${assign("cents")}),
+        $qqCte,
+        pr AS (SELECT query_id, label, qr FROM (
+                 SELECT *, row_number() OVER (PARTITION BY query_id
+                                              ORDER BY d2, label) AS lr
+                 FROM (SELECT query_id, label, ${coded("v")} AS qr,
+                              ${l2Sql("v", "cent", Dim)} AS d2
+                       FROM qq, mean))
+               WHERE lr <= $nprobe),
+        ${lutCtes("pr", "query_id, label", "qr", subDim)},
+        j AS (SELECT lut.query_id, codes.vec_id, codes.subspace, d2
+              FROM codes JOIN lut ON lut.label = codes.label
+                                 AND lut.subspace = codes.subspace
+                                 AND lut.code = codes.code),
+        ${adcRankCtes(nSub)}"""
+  }
+
+  /** The residual IVF-PQ chain with `iters` Lloyd rounds — ≡
+    * residualAdcSearch (q246/q257 untrained, q259/q260 trained).
+    */
+  private def residualAdcCtes(iters: Int): String =
+    probedAdcCtes(
+      """emb AS (SELECT vec_id, label,
+                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+                 FROM embeddings)""",
+      PqSub, PqCodes, IvfNProbe, iters, encodeRaw = false)
+
+  /** The planted-mixture corpus as SQL, `emb` (vec_id, label, v) — the
+    * same integer-hash grid arithmetic as clusteredEmbeddings, so the
+    * fixture is bit-identical across engines by construction (exact
+    * {0,4,…,60} centers + exact k/128 noise; every term a small-integer
+    * ratio).
+    */
+  private lazy val cfxEmbCtes: String = {
+    import graft.functions.{Lsh, Sketches}
+    s"""cids AS (SELECT vec_id * ${CfxExpand} + j AS vec_id
+                 FROM embeddings,
+                      (SELECT unnest(generate_series(0,
+                         ${CfxExpand - 1})) AS j) e),
+        emb AS (SELECT vec_id,
+                  CAST(vec_id % ${CfxClusters} AS INT) AS label,
+                  list_transform(generate_series(1, ${Lsh.Dim}), i ->
+                    CAST((${Lsh.A(0)} * (vec_id % ${CfxClusters} + 1)
+                          + ${Lsh.B(0)} * i) % ${Sketches.P} % 16 AS DOUBLE)
+                      * 4.0
+                    + (CAST((${Lsh.A(1)} * (vec_id + 1)
+                             + ${Lsh.B(1)} * i) % ${Sketches.P} % 129
+                        AS DOUBLE) - 64.0) / 128.0) AS v
+                FROM cids)"""
+  }
+
+  /** The 8×256 trained chain over the planted corpus — ≡ cfxAdcSearch;
+    * `encodeRaw` is the only difference between the q271 and q272 oracles.
+    */
+  private def cfxAdcCtes(encodeRaw: Boolean): String =
+    probedAdcCtes(cfxEmbCtes, CfxSub, CfxCodes, CfxNProbe, CfxTrainIters, encodeRaw)
+
+  /** recall@AnnK of the ranked `adck` that `adcCtes` end in against the
+    * exact-L2 top-k of their queries `qq` over the corpus of `emb` —
+    * ≡ recallOf(exactL2TopKFrom(emb), preds).
+    */
+  private def recallSql(adcCtes: String): String = {
+    import graft.functions.Lsh.Dim
+    s"""WITH $adcCtes,
+        ext AS (SELECT query_id, vec_id FROM (
+                  SELECT *, row_number() OVER (PARTITION BY query_id
+                                               ORDER BY d2, vec_id) AS rk
+                  FROM (SELECT query_id, c.vec_id, ${l2Sql("qq.v", "c.v", Dim)} AS d2
+                        FROM qq, emb c WHERE c.vec_id >= ${AnnQueryMaxId}))
+                WHERE rk <= ${AnnK})
+        SELECT e.query_id, COUNT(a.vec_id) AS n_hits,
+               CAST(COUNT(a.vec_id) AS DOUBLE) / ${AnnK} AS recall
+        FROM ext e LEFT JOIN adck a
+          ON e.query_id = a.query_id AND e.vec_id = a.vec_id AND a.rank <= ${AnnK}
+        GROUP BY 1"""
   }
 
   /** BM25 scored-docs SQL shared by q69/q79 — ≡ TextQueries.bm25Scores (same

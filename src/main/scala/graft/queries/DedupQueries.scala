@@ -106,21 +106,9 @@ object DedupQueries extends QueryFamily {
       "embedding", CosineThreshold)
       .orderBy("vec_a", "vec_b")
 
-  query("q51_dedup_embedding_lsh", dedupEmbeddingLsh, {
-      import graft.functions.Lsh._
+  query("q51_dedup_embedding_lsh", dedupEmbeddingLsh,
       s"""WITH e AS (SELECT vec_id, embedding, $nrmSql AS nrm FROM embeddings),
-          bits AS (SELECT vec_id,
-                          list_transform(generate_series(0, ${Planes - 1}), p ->
-                            CASE WHEN list_reduce(list_transform(generate_series(1, $Dim), i ->
-                                   (CAST(((p*$Dim+i) * 2654435761) % $TwoPow32 AS DOUBLE)
-                                      / 4294967296.0 - 0.5)
-                                   * CAST(embedding[i] AS DOUBLE)), (x,y) -> x+y) >= 0
-                                 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS bits
-                   FROM e),
-          bands AS (SELECT vec_id, t,
-                           list_reduce(bits[t*$RowsRp+1 : t*$RowsRp+$RowsRp],
-                             (x,y) -> x*2+y) AS key
-                    FROM bits, (SELECT unnest(generate_series(0, ${BandsRp - 1})) AS t) bt),
+          $planeBandsCtes,
           cand AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
                    FROM bands a JOIN bands b
                      ON a.t = b.t AND a.key = b.key AND a.vec_id < b.vec_id)
@@ -129,8 +117,7 @@ object DedupQueries extends QueryFamily {
                    ${dotSql("ea.embedding", "eb.embedding")} / (ea.nrm * eb.nrm) AS cos
             FROM cand JOIN e ea ON vec_a = ea.vec_id
                       JOIN e eb ON vec_b = eb.vec_id)
-          WHERE cos >= ${CosineThreshold}"""
-    })
+          WHERE cos >= ${CosineThreshold}""")
 
   // --- q34: near-dup clusters → canonical doc per component -------------------
   // Edges come from the scale path: MinHash-LSH candidates verified with

@@ -26,56 +26,36 @@ object GraphQueries extends QueryFamily {
   def pagerankCopurchase(spark: SparkSession, dir: String): DataFrame =
     pagerankRounds(spark, dir, PrRounds)
 
-  query("q155_pagerank_copurchase", pagerankCopurchase, {
-      val s = PrScale
-      val base = 15L * s / 100L
-      // three unrolled integer-PageRank rounds, `//` ≡ Spark's `div`
-      def round(prev: String, out: String) =
-        s"""$out AS (SELECT ed.dst AS i,
-                    $base + SUM((85 * p.p) // (100 * deg.d)) AS p
-             FROM ed JOIN $prev p ON ed.src = p.i
-                     JOIN deg ON ed.src = deg.src
-             GROUP BY 1)"""
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i
-                         FROM lineitem),
-          e0 AS (SELECT a.i AS src, b2.i AS dst
-                 FROM items a JOIN items b2 ON a.b = b2.b AND a.i < b2.i
-                 GROUP BY 1, 2),
-          ed AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-          deg AS (SELECT src, COUNT(*) AS d FROM ed GROUP BY 1),
-          p0 AS (SELECT src AS i, CAST($s AS BIGINT) AS p FROM deg),
-          ${round("p0", "p1")},
-          ${round("p1", "p2")},
-          ${round("p2", "p3")}
-          SELECT i AS item, CAST(p AS BIGINT) AS rank_score FROM p3"""
-    })
+  query("q155_pagerank_copurchase", pagerankCopurchase, pagerankSql(PrRounds))
 
   def pagerankDeep(spark: SparkSession, dir: String): DataFrame =
     pagerankRounds(spark, dir, PrRoundsDeep)
 
-  query("q186_pagerank_deep", pagerankDeep, {
-      val s = PrScale
-      val base = 15L * s / 100L
-      def round(prev: String, out: String) =
-        s"""$out AS (SELECT ed.dst AS i,
-                    $base + SUM((85 * p.p) // (100 * deg.d)) AS p
-             FROM ed JOIN $prev p ON ed.src = p.i
-                     JOIN deg ON ed.src = deg.src
-             GROUP BY 1)"""
-      val rounds = (1 to PrRoundsDeep)
-        .map(r => round(s"p${r - 1}", s"p$r")).mkString(",\n          ")
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i
-                         FROM lineitem),
-          e0 AS (SELECT a.i AS src, b2.i AS dst
-                 FROM items a JOIN items b2 ON a.b = b2.b AND a.i < b2.i
-                 GROUP BY 1, 2),
-          ed AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-          deg AS (SELECT src, COUNT(*) AS d FROM ed GROUP BY 1),
-          p0 AS (SELECT src AS i, CAST($s AS BIGINT) AS p FROM deg),
-          $rounds
-          SELECT i AS item, CAST(p AS BIGINT) AS rank_score
-          FROM p${PrRoundsDeep}"""
-    })
+  query("q186_pagerank_deep", pagerankDeep, pagerankSql(PrRoundsDeep))
+
+  /** `rounds` unrolled integer-PageRank rounds over the co-purchase graph
+    * (`//` ≡ Spark's `div`) — ≡ pagerankRounds.
+    */
+  private def pagerankSql(rounds: Int): String = {
+    val s = PrScale
+    val base = 15L * s / 100L
+    val steps = (1 to rounds).map(r =>
+      s"""p$r AS (SELECT ed.dst AS i,
+                  $base + SUM((85 * p.p) // (100 * deg.d)) AS p
+           FROM ed JOIN p${r - 1} p ON ed.src = p.i
+                   JOIN deg ON ed.src = deg.src
+           GROUP BY 1)""").mkString(",\n          ")
+    s"""WITH items AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i
+                       FROM lineitem),
+        e0 AS (SELECT a.i AS src, b2.i AS dst
+               FROM items a JOIN items b2 ON a.b = b2.b AND a.i < b2.i
+               GROUP BY 1, 2),
+        ed AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
+        deg AS (SELECT src, COUNT(*) AS d FROM ed GROUP BY 1),
+        p0 AS (SELECT src AS i, CAST($s AS BIGINT) AS p FROM deg),
+        $steps
+        SELECT i AS item, CAST(p AS BIGINT) AS rank_score FROM p$rounds"""
+  }
 
   def pagerankRounds(spark: SparkSession, dir: String, rounds: Int): DataFrame = {
     require(rounds >= 1, "pagerank needs at least one round")

@@ -29,6 +29,26 @@ object OracleSql {
 
   private[graft] def sqlArr(xs: Seq[Long]): String = xs.mkString("[", ",", "]")
 
+  /** Random-hyperplane sign bits `bits` of `e`'s embeddings and their band
+    * keys `bands` (vec_id, t, key) — ≡ Lsh.planeBits → Lsh.planeBandKeys
+    * (q26, q51).
+    */
+  private[graft] val planeBandsCtes: String = {
+    import graft.functions.Lsh._
+    s"""bits AS (SELECT vec_id,
+                        list_transform(generate_series(0, ${Planes - 1}), p ->
+                          CASE WHEN list_reduce(list_transform(generate_series(1, $Dim), i ->
+                                 (CAST(((p*$Dim+i) * 2654435761) % $TwoPow32 AS DOUBLE)
+                                    / 4294967296.0 - 0.5)
+                                 * CAST(embedding[i] AS DOUBLE)), (x,y) -> x+y) >= 0
+                               THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS bits
+                 FROM e),
+        bands AS (SELECT vec_id, t,
+                         list_reduce(bits[t*$RowsRp+1 : t*$RowsRp+$RowsRp],
+                           (x,y) -> x*2+y) AS key
+                  FROM bits, (SELECT unnest(generate_series(0, ${BandsRp - 1})) AS t) bt)"""
+  }
+
   /** Shared CTE chain for near-dup connected components (q34, q65):
     * MinHash-LSH banding candidates (same CTEs as q22, legacy Mh16
     * geometry) verified by exact Jaccard on the candidate set only, then

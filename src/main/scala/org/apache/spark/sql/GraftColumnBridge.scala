@@ -37,10 +37,4 @@ object GraftColumnBridge {
     */
   def internalRows(df: DataFrame): org.apache.spark.rdd.RDD[catalyst.InternalRow] =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd
-
-  /** Spark's ANSI DIVIDE_BY_ZERO error, for kernels that replace a
-    * `Divide` (`QueryExecutionErrors` is private[sql]).
-    */
-  def divideByZero(): ArithmeticException =
-    errors.QueryExecutionErrors.divideByZeroError(null)
 }

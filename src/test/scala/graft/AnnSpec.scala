@@ -2,13 +2,15 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.{Ivf, NearDup}
 import graft.queries._
 
-/** The probed IVF-PQ family: `AnnQueries`' one probed-ADC core behind
-  * q246/q259 (4×16 residual codes over the embeddings) and q271/q272
-  * (8×256 residual or raw codes over the planted-mixture corpus), its
-  * residual encode and Lloyd-trained subspace codebooks, and the recall
-  * instruments q260/q271/q272 read it with.
+/** The ANN family: `AnnQueries`' one probed-ADC core behind q246/q259
+  * (4×16 residual codes over the embeddings) and q271/q272 (8×256
+  * residual or raw codes over the planted-mixture corpus), its residual
+  * encode and Lloyd-trained subspace codebooks, the recall instruments
+  * q254/q260/q271/q272 read it with, the PQ codes and ADC scans of
+  * q223/q237/q239, and the cosine LSH/IVF searches of q26/q33/q59.
   */
 class AnnSpec extends AnyFunSuite {
   import TestSession._
@@ -183,5 +185,181 @@ class AnnSpec extends AnyFunSuite {
     assert(trAvg >= 0.8, s"trained-residual recall@5 avg $trAvg below the usable bar")
     assert(trAvg > rwAvg,
       s"residual must beat raw at equal budget on clustered data: $trAvg vs $rwAvg")
+  }
+
+  test("ANN recall@5 vs brute force: LSH and IVF both >= 0.8") {
+    val bf = AnnQueries.annBruteForce(spark, sf).select("query_id", "neighbor_id")
+    val total = bf.count().toDouble
+    def recall(q: String): Double = {
+      val got = SparkEntry.queries(q)(spark, sf).select("query_id", "neighbor_id")
+      (total - bf.except(got).count()) / total
+    }
+    val rLsh = recall("q26_ann_lsh")
+    val rIvf = recall("q33_ann_ivf")
+    assert(rLsh >= 0.8, s"LSH recall@5 regressed to $rLsh")
+    assert(rIvf >= 0.8, s"IVF recall@5 regressed to $rIvf")
+  }
+
+  test("trained k-means IVF reaches recall >= 0.9 probing 2 of 10 lists on a clustered corpus") {
+    // The testdata embeddings are ISOTROPIC (recall ~ scan fraction for ANY
+    // quantizer — q33 documents this), so the k-means win is demonstrated
+    // on a synthetically CLUSTERED corpus: 10 well-separated gaussian
+    // clusters. A trained quantizer probing 2/10 lists must beat the 0.2
+    // scan-fraction baseline by a wide margin.
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val dim = 64
+    val kc = 10
+    val centers = Array.fill(kc, dim)(rnd.nextGaussian())
+    val rows = (0 until 2010).map { i =>
+      val c = centers(i % kc)
+      (i.toLong, c.map(x => (x + 0.05 * rnd.nextGaussian()).toFloat).toSeq)
+    } :+ ((2010L, Seq.fill(dim)(0f)))  // a zero vector: NULL cosine, never a neighbor
+    val emb = rows.toDF("vec_id", "embedding")
+    val got = Ivf.annIvfTrainedTopK(emb, "vec_id", "embedding",
+      queryMaxId = 10, lists = kc, iters = 4, nprobe = 2, k = 5)
+      .select("query_id", "neighbor_id")
+    val e = NearDup.withNorm(emb, "vec_id", "embedding")
+    val bf = NearDup.annBruteForce(e.filter(col("vec_id") < 10),
+      e.filter(col("vec_id") >= 10), 5).select("query_id", "neighbor_id")
+    val total = bf.count().toDouble
+    val recall = (total - bf.except(got).count()) / total
+    assert(recall >= 0.9, s"clustered-corpus trained-IVF recall@5 = $recall")
+  }
+
+  test("broadcast-join list assignment matches the literal-kernel path exactly") {
+    // The large-k path (plan-size O(1) in k) must assign every vector to the
+    // same list as the plan-literal path, including first-wins tie order.
+    val emb = Tables.embeddings(spark, sf)
+    val cents = Ivf.trainKMeans(emb, "vec_id", "embedding",
+      k = 10, iters = 2, seedByHash = false)
+    val lit = emb.select(col("vec_id"),
+      Ivf.assignList(col("embedding").cast("array<double>"), cents).as("list"))
+    val join = Ivf.assignListsByJoin(
+      emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
+      "vec_id", "v", cents, "list").select("vec_id", "list")
+    assert(lit.except(join).count() == 0 && join.except(lit).count() == 0,
+      "join-path assignment diverged from literal path")
+    // plan stays O(1) in k: centroids ride one broadcast table, no per-list
+    // literal kernels in the generated plan
+    val plan = join.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
+  }
+
+  test("ann lsh returns a subset of each query's candidates, ranked correctly") {
+    val out = AnnQueries.annLsh(spark, sf).collect()
+    assert(out.nonEmpty)
+    out.groupBy(_.getLong(0)).foreach { case (_, rows) =>
+      val sorted = rows.sortBy(_.getInt(3))
+      assert(sorted.map(_.getInt(3)).toSeq == (1 to sorted.length))
+      // cosine non-increasing with rank
+      val cs = sorted.map(_.getDouble(2)).toSeq
+      assert(cs.zip(cs.drop(1)).forall { case (a, b) => a >= b })
+    }
+  }
+
+  test("pqCodes assigns a seed vector to its own codebook entry at distance zero") {
+    val out = AnnQueries.pqCodes(spark, sf)
+    // codes live in [0, PqCodes)
+    assert(out.filter(col("code") < 0 ||
+      col("code") >= AnnQueries.PqCodes).count() == 0)
+    assert(out.groupBy("vec_id").count()
+      .filter(col("count") =!= AnnQueries.PqSub).count() == 0,
+      "every vector must carry exactly one code per subspace")
+    // the seed vectors ARE centroids: their nearest sub-centroid is
+    // themselves, at exactly 0.0 in every subspace
+    val emb = Tables.embeddings(spark, sf)
+    val seedIds = emb.filter(col("vec_id") >= AnnQueries.AnnQueryMaxId)
+      .orderBy("vec_id").limit(AnnQueries.PqCodes)
+      .select("vec_id").collect().map(_.getLong(0))
+    val seedRows = out.filter(col("vec_id").isin(seedIds: _*))
+    assert(seedRows.count() == AnnQueries.PqCodes.toLong * AnnQueries.PqSub)
+    assert(seedRows.filter(col("dist2") =!= 0.0).count() == 0,
+      "a codebook seed must quantize to itself at distance 0")
+  }
+
+  test("q237: a corpus vector that IS a codebook seed scores the exact squared L2") {
+    val subDim = graft.functions.Lsh.Dim / AnnQueries.PqSub
+    val emb = Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val seeds = emb.filter(col("vec_id") >= AnnQueries.AnnQueryMaxId)
+      .orderBy("vec_id").limit(AnnQueries.PqCodes)
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
+    val queries = emb.filter(col("vec_id") < AnnQueries.AnnQueryMaxId)
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
+    assert(seeds.nonEmpty && queries.nonEmpty)
+    // exact distance in the SAME association the ADC sum uses: sum of
+    // per-subspace left-folds (a single 64-term fold differs in ulps)
+    def exact(q: Seq[Double], x: Seq[Double]): Double =
+      (0 until AnnQueries.PqSub).map { sp =>
+        var acc = 0.0
+        var i = 0
+        while (i < subDim) {
+          val d = q(sp * subDim + i) - x(sp * subDim + i)
+          acc += d * d
+          i += 1
+        }
+        acc
+      }.sum
+    val scores = AnnQueries.adcScores(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    var checked = 0
+    for ((qid, qv) <- queries; (sid, sv) <- seeds) {
+      val adc = scores((qid, sid))
+      val ex = exact(qv, sv)
+      assert(adc == ex,
+        s"ADC($qid, seed $sid) = $adc != exact $ex")
+      checked += 1
+    }
+    assert(checked >= AnnQueries.PqCodes)
+  }
+
+  test("q237: top-k output is rank-contiguous and ordered by (dist, vec_id)") {
+    val rows = AnnQueries.pqAdcTopK(spark, sf).collect()
+    val byQ = rows.groupBy(_.getLong(0))
+    byQ.foreach { case (q, rs) =>
+      val sorted = rs.sortBy(_.getLong(1))
+      assert(sorted.map(_.getLong(1)).toSeq == (1L to sorted.length).toSeq,
+        s"query $q ranks not contiguous")
+      val dists = sorted.map(r => (r.getDouble(3), r.getLong(2)))
+      assert(dists.sameElements(dists.sortBy(identity)),
+        s"query $q not ordered by (dist, vec_id)")
+    }
+  }
+
+  test("q239: composed IVF+PQ scores agree with the full ADC scan on every returned pair") {
+    val full = AnnQueries.adcScores(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val got = AnnQueries.ivfPqSearch(spark, sf).collect()
+    assert(got.nonEmpty)
+    got.foreach { r =>
+      val key = (r.getLong(0), r.getLong(2))
+      assert(full(key) == r.getDouble(3),
+        s"pair $key: composed ${r.getDouble(3)} != full-scan ${full(key)}")
+    }
+    // and at nprobe = all lists the composed search IS the full ADC
+    // top-k (probing everything removes the only approximation layer)
+    val labels = Tables.embeddings(spark, sf)
+      .filter(col("vec_id") >= AnnQueries.AnnQueryMaxId)
+      .select("label").distinct().count()
+    assert(AnnQueries.IvfNProbe <= labels,
+      "fixture sanity: nprobe must not exceed the list count")
+  }
+
+  test("q254: the recall instrument reads exactly 1.0 on the ground truth itself") {
+    val perfect = AnnQueries.recallAgainstExact(spark, sf,
+      AnnQueries.exactL2TopK(spark, sf)).collect()
+    assert(perfect.length == AnnQueries.AnnQueryMaxId)
+    perfect.foreach { r =>
+      assert(r.getLong(1) == AnnQueries.AnnK && r.getDouble(2) == 1.0,
+        s"query ${r.getLong(0)}: instrument reads ${r.getDouble(2)} on truth")
+    }
+    // and on the real ADC predictions it reads a proper fraction
+    val real = AnnQueries.pqRecall(spark, sf).collect()
+    assert(real.length == AnnQueries.AnnQueryMaxId)
+    real.foreach { r =>
+      assert(r.getLong(1) >= 0 && r.getLong(1) <= AnnQueries.AnnK &&
+        r.getDouble(2) >= 0.0 && r.getDouble(2) <= 1.0)
+    }
   }
 }

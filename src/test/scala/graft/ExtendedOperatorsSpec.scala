@@ -161,65 +161,6 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
     assert(verified.except(exact).count() == 0, "scale path emitted a false pair")
   }
 
-  test("ANN recall@5 vs brute force: LSH and IVF both >= 0.8") {
-    val bf = AnnQueries.annBruteForce(spark, sf).select("query_id", "neighbor_id")
-    val total = bf.count().toDouble
-    def recall(q: String): Double = {
-      val got = SparkEntry.queries(q)(spark, sf).select("query_id", "neighbor_id")
-      (total - bf.except(got).count()) / total
-    }
-    val rLsh = recall("q26_ann_lsh")
-    val rIvf = recall("q33_ann_ivf")
-    assert(rLsh >= 0.8, s"LSH recall@5 regressed to $rLsh")
-    assert(rIvf >= 0.8, s"IVF recall@5 regressed to $rIvf")
-  }
-
-  test("trained k-means IVF reaches recall >= 0.9 probing 2 of 10 lists on a clustered corpus") {
-    // The testdata embeddings are ISOTROPIC (recall ~ scan fraction for ANY
-    // quantizer — q33 documents this), so the k-means win is demonstrated
-    // on a synthetically CLUSTERED corpus: 10 well-separated gaussian
-    // clusters. A trained quantizer probing 2/10 lists must beat the 0.2
-    // scan-fraction baseline by a wide margin.
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val dim = 64
-    val kc = 10
-    val centers = Array.fill(kc, dim)(rnd.nextGaussian())
-    val rows = (0 until 2010).map { i =>
-      val c = centers(i % kc)
-      (i.toLong, c.map(x => (x + 0.05 * rnd.nextGaussian()).toFloat).toSeq)
-    }
-    val emb = rows.toDF("vec_id", "embedding")
-    val got = Ivf.annIvfTrainedTopK(emb, "vec_id", "embedding",
-      queryMaxId = 10, lists = kc, iters = 4, nprobe = 2, k = 5)
-      .select("query_id", "neighbor_id")
-    val e = NearDup.withNorm(emb, "vec_id", "embedding")
-    val bf = NearDup.annBruteForce(e.filter(col("vec_id") < 10),
-      e.filter(col("vec_id") >= 10), 5).select("query_id", "neighbor_id")
-    val total = bf.count().toDouble
-    val recall = (total - bf.except(got).count()) / total
-    assert(recall >= 0.9, s"clustered-corpus trained-IVF recall@5 = $recall")
-  }
-
-  test("broadcast-join list assignment matches the literal-kernel path exactly") {
-    // The large-k path (plan-size O(1) in k) must assign every vector to the
-    // same list as the plan-literal path, including first-wins tie order.
-    val emb = Tables.embeddings(spark, sf)
-    val cents = Ivf.trainKMeans(emb, "vec_id", "embedding",
-      k = 10, iters = 2, seedByHash = false)
-    val lit = emb.select(col("vec_id"),
-      Ivf.assignList(col("embedding").cast("array<double>"), cents).as("list"))
-    val join = Ivf.assignListsByJoin(
-      emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
-      "vec_id", "v", cents, "list").select("vec_id", "list")
-    assert(lit.except(join).count() == 0 && join.except(lit).count() == 0,
-      "join-path assignment diverged from literal path")
-    // plan stays O(1) in k: centroids ride one broadcast table, no per-list
-    // literal kernels in the generated plan
-    val plan = join.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
-  }
-
   test("shard packing covers every document with contiguous bounded shards") {
     val shards = CurationQueries.shardPack(spark, sf).collect()
     val docs = Tables.documents(spark, sf)
@@ -234,18 +175,6 @@ class ExtendedOperatorsSpec extends AnyFunSuite {
         assert(r.getLong(3) < CurationQueries.ShardTokens + maxDocTokens,
           s"$src shard ${r.getLong(1)} too large: ${r.getLong(3)}")
       }
-    }
-  }
-
-  test("ann lsh returns a subset of each query's candidates, ranked correctly") {
-    val out = AnnQueries.annLsh(spark, sf).collect()
-    assert(out.nonEmpty)
-    out.groupBy(_.getLong(0)).foreach { case (_, rows) =>
-      val sorted = rows.sortBy(_.getInt(3))
-      assert(sorted.map(_.getInt(3)).toSeq == (1 to sorted.length))
-      // cosine non-increasing with rank
-      val cs = sorted.map(_.getDouble(2)).toSeq
-      assert(cs.zip(cs.drop(1)).forall { case (a, b) => a >= b })
     }
   }
 

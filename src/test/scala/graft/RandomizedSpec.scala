@@ -597,16 +597,10 @@ class RandomizedSpec extends AnyFunSuite {
       .select("vec_a", "vec_b", "cos")
   }
 
-  /** Sorted (vec_a, vec_b, cos bits) rows, or the error class. */
-  private def cosineOutcome(pairs: => DataFrame): Either[String, Seq[(Long, Long, Long)]] =
-    try Right(pairs.collect().map(r => (r.getLong(0), r.getLong(1),
-      java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSeq.sorted)
-    catch {
-      case e: Exception =>
-        val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        Left(chain.map(_.getMessage).find(m => m != null && m.contains("DIVIDE_BY_ZERO"))
-          .map(_ => "DIVIDE_BY_ZERO").getOrElse(throw e))
-    }
+  /** Sorted (vec_a, vec_b, cos bits) rows. */
+  private def cosineOutcome(pairs: DataFrame): Seq[(Long, Long, Long)] =
+    pairs.collect().map(r => (r.getLong(0), r.getLong(1),
+      java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSeq.sorted
 
   private def embFrame(s: SparkSession, rows: Seq[(Option[Long], Option[Seq[Double]])],
                        floats: Boolean): DataFrame = {
@@ -636,8 +630,8 @@ class RandomizedSpec extends AnyFunSuite {
       ("cos on the threshold",
         Seq((Some(1L), Some(Seq(3.0, 4.0))), (Some(2L), Some(Seq(4.0, 3.0)))), true, 24.0 / 25.0),
       ("a zero vector", zero, true, 0.4))
-    // ANSI decides what a zero norm product gives: an error, or a null
-    // cosine that the threshold drops
+    // a zero norm product gives a NULL cosine that the threshold drops,
+    // with ANSI on and off
     val lenient = spark.newSession()
     lenient.conf.set("spark.sql.ansi.enabled", "false")
     for ((name, input, floats, thr) <- cases; s <- Seq(spark, lenient)) {
@@ -645,13 +639,14 @@ class RandomizedSpec extends AnyFunSuite {
       val want = cosineOutcome(joinCosinePairs(emb, thr))
       val got = cosineOutcome(NearDup.embeddingCosinePairs(emb, "vec_id", "embedding", thr))
       val ansi = s.conf.get("spark.sql.ansi.enabled")
-      assert(got == want, s"$name (ansi=$ansi): kernel ${got.map(_.take(5))} vs join ${want.map(_.take(5))}")
+      assert(got == want, s"$name (ansi=$ansi): kernel ${got.take(5)} vs join ${want.take(5)}")
       if (name.startsWith("messy"))
-        assert(want.exists(p => p.size > 1000 && p.exists(r => java.lang.Double.isNaN(
-          java.lang.Double.longBitsToDouble(r._3)))), s"$name: pairs and NaN pairs expected")
-      if (name == "cos on the threshold") assert(want.exists(_.size == 1))
+        assert(want.size > 1000 && want.exists(r => java.lang.Double.isNaN(
+          java.lang.Double.longBitsToDouble(r._3))), s"$name: pairs and NaN pairs expected")
+      if (name == "cos on the threshold") assert(want.size == 1)
       if (name == "a zero vector")
-        assert(want.isLeft == (ansi == "true"), s"$name (ansi=$ansi): $want")
+        assert(want == cosineOutcome(joinCosinePairs(embFrame(s, input.init, floats), thr)),
+          s"$name (ansi=$ansi): the zero vector paired")
     }
   }
 }

@@ -198,28 +198,6 @@ class Round13Spec extends AnyFunSuite {
       (1, "a", "a", 6L), (2, "a", "b", 3L), (3, "aa", "ab", 3L)))
   }
 
-  // --- PQ code assignment --------------------------------------------------------------
-
-  test("pqCodes assigns a seed vector to its own codebook entry at distance zero") {
-    val out = AnnQueries.pqCodes(spark, sf)
-    // codes live in [0, PqCodes)
-    assert(out.filter(col("code") < 0 ||
-      col("code") >= AnnQueries.PqCodes).count() == 0)
-    assert(out.groupBy("vec_id").count()
-      .filter(col("count") =!= AnnQueries.PqSub).count() == 0,
-      "every vector must carry exactly one code per subspace")
-    // the seed vectors ARE centroids: their nearest sub-centroid is
-    // themselves, at exactly 0.0 in every subspace
-    val emb = Tables.embeddings(spark, sf)
-    val seedIds = emb.filter(col("vec_id") >= AnnQueries.AnnQueryMaxId)
-      .orderBy("vec_id").limit(AnnQueries.PqCodes)
-      .select("vec_id").collect().map(_.getLong(0))
-    val seedRows = out.filter(col("vec_id").isin(seedIds: _*))
-    assert(seedRows.count() == AnnQueries.PqCodes.toLong * AnnQueries.PqSub)
-    assert(seedRows.filter(col("dist2") =!= 0.0).count() == 0,
-      "a codebook seed must quantize to itself at distance 0")
-  }
-
   // --- Hilbert curve kernel ----------------------------------------------------------
 
   test("hilbert kernel matches the order-1 curve and is bijective on the grid") {

@@ -5,11 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.queries._
 
 /** Round-15 contracts: the condensation-DAG depths on a planted
-  * hand-computable graph and the PQ ADC scan's seed-exactness (a
-  * corpus vector that IS a codebook seed must score the exact squared
-  * L2 distance to every query — the lookup table contributes the whole
-  * distance, so any error in LUT construction, code pivot, or the
-  * 4-term sum shows up as a bit mismatch).
+  * hand-computable graph, zone maps, signed-delta IVM and the other
+  * round-15 operators (its PQ/ANN tests live in AnnSpec).
   */
 class Round15Spec extends AnyFunSuite {
   import TestSession._
@@ -40,42 +37,6 @@ class Round15Spec extends AnyFunSuite {
     assert(rows == Map(1L -> 0L, 4L -> 1L, 5L -> 2L, 6L -> 3L))
   }
 
-  test("q237: a corpus vector that IS a codebook seed scores the exact squared L2") {
-    val subDim = graft.functions.Lsh.Dim / AnnQueries.PqSub
-    val emb = Tables.embeddings(spark, sf)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val seeds = emb.filter(col("vec_id") >= AnnQueries.AnnQueryMaxId)
-      .orderBy("vec_id").limit(AnnQueries.PqCodes)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val queries = emb.filter(col("vec_id") < AnnQueries.AnnQueryMaxId)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-    assert(seeds.nonEmpty && queries.nonEmpty)
-    // exact distance in the SAME association the ADC sum uses: sum of
-    // per-subspace left-folds (a single 64-term fold differs in ulps)
-    def exact(q: Seq[Double], x: Seq[Double]): Double =
-      (0 until AnnQueries.PqSub).map { sp =>
-        var acc = 0.0
-        var i = 0
-        while (i < subDim) {
-          val d = q(sp * subDim + i) - x(sp * subDim + i)
-          acc += d * d
-          i += 1
-        }
-        acc
-      }.sum
-    val scores = AnnQueries.adcScores(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    var checked = 0
-    for ((qid, qv) <- queries; (sid, sv) <- seeds) {
-      val adc = scores((qid, sid))
-      val ex = exact(qv, sv)
-      assert(adc == ex,
-        s"ADC($qid, seed $sid) = $adc != exact $ex")
-      checked += 1
-    }
-    assert(checked >= AnnQueries.PqCodes)
-  }
-
   test("q238: both zone maps are supersets of truth; time bands prune better two-level") {
     val res = RuntimeQueries.hilbertTwoLevelCompare(spark, sf)
       .collect().map(r => r.getInt(0) ->
@@ -97,38 +58,6 @@ class Round15Spec extends AnyFunSuite {
     val (_, fRows, _, tRows) = res(2)
     assert(tRows <= fRows,
       s"time-band probe: two-level touched $tRows > flat $fRows")
-  }
-
-  test("q239: composed IVF+PQ scores agree with the full ADC scan on every returned pair") {
-    val full = AnnQueries.adcScores(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val got = AnnQueries.ivfPqSearch(spark, sf).collect()
-    assert(got.nonEmpty)
-    got.foreach { r =>
-      val key = (r.getLong(0), r.getLong(2))
-      assert(full(key) == r.getDouble(3),
-        s"pair $key: composed ${r.getDouble(3)} != full-scan ${full(key)}")
-    }
-    // and at nprobe = all lists the composed search IS the full ADC
-    // top-k (probing everything removes the only approximation layer)
-    val labels = Tables.embeddings(spark, sf)
-      .filter(col("vec_id") >= AnnQueries.AnnQueryMaxId)
-      .select("label").distinct().count()
-    assert(AnnQueries.IvfNProbe <= labels,
-      "fixture sanity: nprobe must not exceed the list count")
-  }
-
-  test("q237: top-k output is rank-contiguous and ordered by (dist, vec_id)") {
-    val rows = AnnQueries.pqAdcTopK(spark, sf).collect()
-    val byQ = rows.groupBy(_.getLong(0))
-    byQ.foreach { case (q, rs) =>
-      val sorted = rs.sortBy(_.getLong(1))
-      assert(sorted.map(_.getLong(1)).toSeq == (1L to sorted.length).toSeq,
-        s"query $q ranks not contiguous")
-      val dists = sorted.map(r => (r.getDouble(3), r.getLong(2)))
-      assert(dists.sameElements(dists.sortBy(identity)),
-        s"query $q not ordered by (dist, vec_id)")
-    }
   }
 
   // --- q240: signed-delta IVM -------------------------------------------------
@@ -327,23 +256,6 @@ class Round15Spec extends AnyFunSuite {
     assert(got((2L, 4L)) == (2L, 4L))
     assert(got((2L, 5L)) == (1L, 2L))
     assert(got((4L, 5L)) == (1L, 2L))
-  }
-
-  test("q254: the recall instrument reads exactly 1.0 on the ground truth itself") {
-    val perfect = AnnQueries.recallAgainstExact(spark, sf,
-      AnnQueries.exactL2TopK(spark, sf)).collect()
-    assert(perfect.length == AnnQueries.AnnQueryMaxId)
-    perfect.foreach { r =>
-      assert(r.getLong(1) == AnnQueries.AnnK && r.getDouble(2) == 1.0,
-        s"query ${r.getLong(0)}: instrument reads ${r.getDouble(2)} on truth")
-    }
-    // and on the real ADC predictions it reads a proper fraction
-    val real = AnnQueries.pqRecall(spark, sf).collect()
-    assert(real.length == AnnQueries.AnnQueryMaxId)
-    real.foreach { r =>
-      assert(r.getLong(1) >= 0 && r.getLong(1) <= AnnQueries.AnnK &&
-        r.getDouble(2) >= 0.0 && r.getDouble(2) <= 1.0)
-    }
   }
 
   test("q255: a malformed CSV row lands in the rescue column, clean rows parse") {
