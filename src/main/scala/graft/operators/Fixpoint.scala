@@ -11,7 +11,9 @@ import org.apache.spark.sql.graft.LeanCheckpoint.Ops
 import org.apache.spark.storage.StorageLevel
 
 /** The iteration discipline of the graph tier (PageRank ×3, LabelProp,
-  * BFS, Components, SCC, k-core, condensation depths), stated once:
+  * BFS, Components, SCC above its kernel gate, k-core, condensation
+  * depths; SCC on a graph that fits the driver runs no loop, as
+  * `Scc.components` labels it in one Tarjan pass), stated once:
   *
   *  1. A frame joined on the same key every round (the edge list) is
   *     cached ONCE, hash-partitioned on that key with a data-sized

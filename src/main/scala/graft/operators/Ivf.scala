@@ -82,6 +82,8 @@ object Ivf {
 
   /** The coarse probe: each query's (id < `queryMaxId`) `nprobe` lists by
     * cosine to their exact-decimal sum centroid, ties to the lower label.
+    * A zero query or centroid has a NULL cosine (`Similarity.cosineFrom`),
+    * which ranks last.
     * Output: (query_id, qe, qn, labelCol) — one row per probed list.
     */
   private[graft] def probeLists(emb: DataFrame, idCol: String, vecCol: String,
@@ -95,8 +97,8 @@ object Ivf {
       .partitionBy("query_id").orderBy(col("ccos").desc, col(labelCol))
     q.crossJoin(broadcast(cents))
       .withColumn("ccos",
-        Similarity.dot(col("qe"), col("centroid")) /
-          (col("qn") * sqrt(Similarity.dot(col("centroid"), col("centroid")))))
+        Similarity.cosineFrom(Similarity.dot(col("qe"), col("centroid")),
+          col("qn"), sqrt(Similarity.dot(col("centroid"), col("centroid")))))
       .withColumn("lr", row_number().over(w))
       .filter(col("lr") <= nprobe)
       .select("query_id", "qe", "qn", labelCol)

@@ -43,17 +43,12 @@ import org.apache.spark.sql.graft.LeanCheckpoint
 object Triangles {
 
   /** Edge-count bound under which the oriented and closing edge frames
-    * are broadcast: both hash relations (≈48 B/row each) must fit in an
-    * eighth of the driver heap, which builds them, and in
-    * `spark.driver.maxResultSize` (0 = unlimited), since their rows are
-    * collected there first.
+    * are broadcast: both hash relations (≈48 B/row each) must fit in the
+    * driver's share for one collected graph (`GraphCsr.driverBytes`),
+    * since the driver collects their rows and builds them.
     */
-  private[graft] def defaultBcastMaxEdges(spark: SparkSession): Long = {
-    val maxResult = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.sparkContext.getConf.get("spark.driver.maxResultSize", "1g"))
-    val heapShare = Runtime.getRuntime.maxMemory / 8
-    (if (maxResult > 0) math.min(heapShare, maxResult) else heapShare) / (2 * 48)
-  }
+  private[graft] def defaultBcastMaxEdges(spark: SparkSession): Long =
+    graft.plans.GraphCsr.driverBytes(spark) / (2 * 48)
 
   /** The shared front of both counts: edges canonicalized to (x, y) =
     * (least, greatest); per-node degrees; every wedge (u; x, y) with

@@ -644,13 +644,16 @@ object GraphQueries extends QueryFamily {
       .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
   }
 
-  def sccBaskets(spark: SparkSession, dir: String): DataFrame = {
-    val comp = Scc.components(basketEdges(spark, dir))
-    val sizes = comp.groupBy("scc_id").agg(count(lit(1)).as("scc_size"))
-    comp.join(sizes, "scc_id")
-      .select(col("node").as("item"), col("scc_id"), col("scc_size"))
+  def sccBaskets(spark: SparkSession, dir: String): DataFrame =
+    // sizes by a window over the labels: one exchange where a size
+    // aggregate joined back needs three; a null label (the null-endpoint
+    // row) has no size, as the join it replaces never matched it
+    Scc.components(basketEdges(spark, dir))
+      .filter(col("scc_id").isNotNull)
+      .select(col("node").as("item"), col("scc_id"),
+        count(lit(1)).over(org.apache.spark.sql.expressions.Window
+          .partitionBy("scc_id")).as("scc_size"))
       .orderBy("item")
-  }
 
   query("q232_scc", sccBaskets,
       // mutual-reachability closure: node u and v share an SCC iff each
@@ -703,11 +706,17 @@ object GraphQueries extends QueryFamily {
     * frame — factored out so the spec can drive it with a planted
     * hand-computable DAG (the weightedPagerankRounds pattern).
     */
-  private[graft] def condensationDepths(edgeFrame: DataFrame): DataFrame = {
+  private[graft] def condensationDepths(edgeFrame: DataFrame): DataFrame =
+    condensationDepths(edgeFrame, Scc.kernelMaxEdges(edgeFrame.sparkSession))
+
+  /** `condensationDepths` with `Scc.components`' kernel gate given. */
+  private[graft] def condensationDepths(edgeFrame: DataFrame,
+                                        sccKernelMaxEdges: Long): DataFrame = {
     import org.apache.spark.sql.graft.LeanCheckpoint
     import LeanCheckpoint.Ops
     val ed = edgeFrame.leanCheckpoint()
-    val comp = Scc.components(ed)
+    val comp = Scc.components(ed, sccKernelMaxEdges,
+      Scc.MaxOuterRounds, Scc.MaxPropRounds, Scc.MaxTrimRounds)
     val cS = comp.select(col("node").as("src"), col("scc_id").as("cs"))
     val cD = comp.select(col("node").as("dst"), col("scc_id").as("cd"))
     val ce = ed.join(cS, "src").join(cD, "dst")

@@ -32,6 +32,13 @@ object GraftColumnBridge {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** The DataFrame over `rows` typed by `schema`: a leaf whose
+    * partitions are `rows`' own, with no materialization.
+    */
+  def ofInternalRows(spark: SparkSession, rows: org.apache.spark.rdd.RDD[catalyst.InternalRow],
+                     schema: types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
   /** `df`'s rows as the `InternalRow`s its plan produces — what a
     * primitive kernel reads without `df.rdd`'s per-row conversion.
     */

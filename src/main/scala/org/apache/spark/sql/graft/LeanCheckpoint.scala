@@ -42,11 +42,44 @@ object LeanCheckpoint {
     * materializing action computes anyway.
     */
   def localCheckpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val (leaf, counts) = localCheckpointEach(df)((_, rows) => rows.size.toLong)
+    (leaf, counts.sum)
+  }
+
+  /** [[localCheckpoint]] that also returns `f(partitions, rows)` for each
+    * of the `partitions` partitions, computed by the materializing job
+    * itself (eager materialization is the localCheckpoint contract: the
+    * block store takes the whole partition before `f` reads it, however
+    * far `f` reads).
+    *
+    * The rows come from a query execution of this call's own, so the
+    * broadcast relations its plan built serve this one job: they are
+    * destroyed as soon as it ends (a local checkpoint never recomputes
+    * from its plan), not left on the driver until a GC lets Spark's
+    * cleaner find them.
+    */
+  def localCheckpointEach[T: scala.reflect.ClassTag](df: DataFrame)(
+      f: (Int, Iterator[org.apache.spark.sql.catalyst.InternalRow]) => T): (DataFrame, Array[T]) = {
     val cds = df.asInstanceOf[classic.Dataset[Row]]
-    val rdd = cds.queryExecution.toRdd.map(_.copy())
+    val qe = cds.sparkSession.sessionState.executePlan(cds.queryExecution.analyzed)
+    val rdd = qe.toRdd.map(_.copy())
     rdd.localCheckpoint()
-    val n = rdd.count() // eager materialization (the localCheckpoint contract)
-    (cds.sparkSession.internalCreateDataFrame(rdd, cds.schema), n)
+    val parts = rdd.getNumPartitions
+    val each = rdd.mapPartitions(rows => Iterator.single(f(parts, rows))).collect()
+    PlanBroadcasts.release(qe.executedPlan)
+    (cds.sparkSession.internalCreateDataFrame(rdd, cds.schema), each)
+  }
+
+  private object PlanBroadcasts
+      extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+    /** Destroys every broadcast relation an adaptive `plan` (subqueries
+      * included) has built: those of its materialized broadcast stages.
+      */
+    def release(plan: org.apache.spark.sql.execution.SparkPlan): Unit =
+      collectWithSubqueries(plan) {
+        case s: org.apache.spark.sql.execution.adaptive.BroadcastQueryStageExec
+            if s.isMaterialized => s.broadcast.relationFuture.get()
+      }.distinct.foreach(_.destroy())
   }
 
   /** [[localCheckpoint]] of the DataFrame over `rows` (typed by
@@ -104,23 +137,17 @@ object LeanCheckpoint {
     */
   def localCheckpointSummed(df: DataFrame,
                             longCol: String): (DataFrame, Long, BigInt) = {
-    val cds = df.asInstanceOf[classic.Dataset[Row]]
-    val idx = cds.schema.fieldIndex(longCol)
-    require(cds.schema(idx).dataType ==
+    val idx = df.schema.fieldIndex(longCol)
+    require(df.schema(idx).dataType ==
       org.apache.spark.sql.types.LongType,
       s"localCheckpointSummed needs a LongType column, got " +
-        s"${cds.schema(idx).dataType} for '$longCol'")
-    val rdd = cds.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    // an action on the derived RDD computes (and thereby persists) the
-    // checkpointed parent's partitions — same materialization contract
-    // as the count() in localCheckpoint above
-    val (cnt, sm) = rdd.mapPartitions { it =>
+        s"${df.schema(idx).dataType} for '$longCol'")
+    val (leaf, each) = localCheckpointEach(df) { (_, it) =>
       var c = 0L
       var s = BigInt(0)
       it.foreach { r => c += 1; if (!r.isNullAt(idx)) s += r.getLong(idx) }
-      Iterator.single((c, s))
-    }.fold((0L, BigInt(0))) { case ((c1, s1), (c2, s2)) => (c1 + c2, s1 + s2) }
-    (cds.sparkSession.internalCreateDataFrame(rdd, cds.schema), cnt, sm)
+      (c, s)
+    }
+    (leaf, each.iterator.map(_._1).sum, each.iterator.map(_._2).sum)
   }
 }

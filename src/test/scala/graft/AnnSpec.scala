@@ -214,17 +214,21 @@ class AnnSpec extends AnyFunSuite {
     val rows = (0 until 2010).map { i =>
       val c = centers(i % kc)
       (i.toLong, c.map(x => (x + 0.05 * rnd.nextGaussian()).toFloat).toSeq)
-    } :+ ((2010L, Seq.fill(dim)(0f)))  // a zero vector: NULL cosine, never a neighbor
+    } :+ ((2010L, Seq.fill(dim)(0f))) :+  // a zero vector: NULL cosine, never a neighbor
+      ((-1L, Seq.fill(dim)(0f)))           // a zero query: NULL probe cosines, listed last
     val emb = rows.toDF("vec_id", "embedding")
-    val got = Ivf.annIvfTrainedTopK(emb, "vec_id", "embedding",
+    val out = Ivf.annIvfTrainedTopK(emb, "vec_id", "embedding",
       queryMaxId = 10, lists = kc, iters = 4, nprobe = 2, k = 5)
-      .select("query_id", "neighbor_id")
+    val got = out.filter(col("query_id") >= 0).select("query_id", "neighbor_id")
     val e = NearDup.withNorm(emb, "vec_id", "embedding")
-    val bf = NearDup.annBruteForce(e.filter(col("vec_id") < 10),
+    val bf = NearDup.annBruteForce(e.filter(col("vec_id").between(0, 9)),
       e.filter(col("vec_id") >= 10), 5).select("query_id", "neighbor_id")
     val total = bf.count().toDouble
     val recall = (total - bf.except(got).count()) / total
     assert(recall >= 0.9, s"clustered-corpus trained-IVF recall@5 = $recall")
+    // the zero query still gets k neighbors, each at a NULL cosine
+    val zero = out.filter(col("query_id") === -1L).select("cos").collect()
+    assert(zero.length == 5 && zero.forall(_.isNullAt(0)), zero.toSeq)
   }
 
   test("broadcast-join list assignment matches the literal-kernel path exactly") {

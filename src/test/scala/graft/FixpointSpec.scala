@@ -31,7 +31,9 @@ class FixpointSpec extends AnyFunSuite {
       Seq(1L).toDF("n"), 3)),
     "components" -> (() => Components.connectedComponents(
       spark.range(15).select(col("id")), graph.toDF("src", "dst"))),
-    "scc" -> (() => Scc.components(graph.toDF("src", "dst"))))
+    "scc" -> (() => Scc.components(graph.toDF("src", "dst"))),
+    "scc_coloring" -> (() => Scc.components(graph.toDF("src", "dst"), -1L,
+      Scc.MaxOuterRounds, Scc.MaxPropRounds, Scc.MaxTrimRounds)))
 
   test("every cache-using loop leaves no persisted frame behind") {
     // the co-purchase memo is a deliberate long-lived persist: build it

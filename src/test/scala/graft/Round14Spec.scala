@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Scc, ZOrder}
-import graft.queries.{GraphQueries, RuntimeQueries}
+import graft.operators.ZOrder
+import graft.queries.RuntimeQueries
 
 /** Round-14 contracts. q230 Hilbert write path: the probe scan must
   * prune at the partition-directory level (PartitionFilters on hblock
@@ -75,61 +75,6 @@ class Round14Spec extends AnyFunSuite {
     // after the merge: 9 slots, ("new york", city) count 3, lift 3·9/9
     assert((r2.getInt(0), r2.getString(1), r2.getString(2), r2.getLong(3),
       r2.getDouble(4)) == ((2, "new york", "city", 3L, 3.0)))
-  }
-
-  // --- q232: SCC -------------------------------------------------------------------
-
-  test("Scc.components solves a hand-computed bow-tie exactly") {
-    import spark.implicits._
-    // two 3-cycles bridged one-way, a tendril chain off the second
-    val edges = Seq(
-      (1L, 2L), (2L, 3L), (3L, 1L),     // SCC {1,2,3}
-      (4L, 5L), (5L, 6L), (6L, 4L),     // SCC {4,5,6}
-      (3L, 4L),                         // one-way bridge
-      (6L, 7L), (7L, 8L)                // tendril: singletons {7},{8}
-    ).toDF("src", "dst")
-    val got = Scc.components(edges).orderBy("node").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(got == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L,
-      4L -> 4L, 5L -> 4L, 6L -> 4L, 7L -> 7L, 8L -> 8L))
-  }
-
-  test("Scc.components: two disjoint replicas equal two independent runs") {
-    val li = Tables.lineitem(spark, sf)
-      .filter(pmod(col("l_orderkey"), lit(GraphQueries.SccOrderMod.toLong)) === 0)
-      .select("l_orderkey", "l_linenumber", "l_partkey")
-    val a = li.alias("a")
-    val b = li.alias("b")
-    val ed = a.join(b, col("a.l_orderkey") === col("b.l_orderkey") &&
-        col("b.l_linenumber") === col("a.l_linenumber") + 1)
-      .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-    val off = 1000000L
-    val two = ed.unionByName(
-      ed.select((col("src") + off).as("src"), (col("dst") + off).as("dst")))
-    val single = Scc.components(ed)
-    val both = Scc.components(two)
-    val expected = single.select(col("node"), col("scc_id"))
-      .unionByName(single.select((col("node") + off).as("node"),
-        (col("scc_id") + off).as("scc_id")))
-    assert(both.exceptAll(expected).isEmpty && expected.exceptAll(both).isEmpty,
-      "replica labels must equal two independent runs (offset-shifted)")
-  }
-
-  test("Scc.components fails fast when the outer cap binds (no plausible partial labels)") {
-    import spark.implicits._
-    val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L), (4L, 3L))
-      .toDF("src", "dst")
-    intercept[IllegalArgumentException] {
-      Scc.components(edges, maxOuterRounds = 1).collect()
-    }
-    ()
-  }
-
-  test("Scc.components on an empty edge set returns an empty labeled frame") {
-    import spark.implicits._
-    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
-    val got = Scc.components(empty)
-    assert(got.columns.toSeq == Seq("node", "scc_id") && got.count() == 0)
   }
 
   test("q230: hive layout partitions blocks on disk (one dir per occupied block)") {

@@ -4,38 +4,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries._
 
-/** Round-15 contracts: the condensation-DAG depths on a planted
-  * hand-computable graph, zone maps, signed-delta IVM and the other
-  * round-15 operators (its PQ/ANN tests live in AnnSpec).
+/** Round-15 contracts: zone maps, signed-delta IVM and the other
+  * round-15 operators (its PQ/ANN tests live in AnnSpec, its q236
+  * condensation tests in SccSpec).
   */
 class Round15Spec extends AnyFunSuite {
   import TestSession._
-
-  test("q236: condensation depths on a planted two-chain DAG") {
-    import spark.implicits._
-    // SCCs {1,2} → {3,4} → {5} (depths 0,1,2) and {6} → {7} (0,1)
-    val edges = Seq(
-      (1L, 2L), (2L, 1L),
-      (3L, 4L), (4L, 3L),
-      (2L, 3L), (4L, 5L),
-      (6L, 7L)
-    ).toDF("src", "dst")
-    val got = GraphQueries.condensationDepths(edges)
-      .orderBy("scc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(got == Seq((1L, 2L, 0L), (3L, 2L, 1L), (5L, 1L, 2L),
-      (6L, 1L, 0L), (7L, 1L, 1L)))
-  }
-
-  test("q236: a 3-cycle feeding a 3-chain layers at depths 0..3") {
-    import spark.implicits._
-    val res = GraphQueries.condensationDepths(
-      Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 6L))
-        .toDF("src", "dst"))
-    val rows = res.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    // SCC {1,2,3} (id 1, depth 0) → 4 → 5 → 6
-    assert(rows == Map(1L -> 0L, 4L -> 1L, 5L -> 2L, 6L -> 3L))
-  }
 
   test("q238: both zone maps are supersets of truth; time bands prune better two-level") {
     val res = RuntimeQueries.hilbertTwoLevelCompare(spark, sf)

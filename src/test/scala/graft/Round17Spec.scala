@@ -2,38 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Scc, SuffixSpans}
+import graft.operators.SuffixSpans
 import graft.queries._
 
 /** Round-17 contracts (VERDICT r16 directives). */
 class Round17Spec extends AnyFunSuite {
   import TestSession._
-
-  // --- directive 5: trivial-SCC trim ----------------------------------------------
-
-  test("Scc trim+color ≡ color alone (planted tendril graph and the gated basket graph)") {
-    import spark.implicits._
-    // planted: two cycles, a one-way bridge, in-tendril AND out-tendril
-    // chains deep enough to need several trim layers, plus an isolated
-    // self-loop (degree test must ignore the self edge but still emit
-    // the singleton)
-    val planted = Seq(
-      (10L, 11L), (11L, 12L), (12L, 10L),    // SCC {10,11,12}
-      (20L, 21L), (21L, 20L),                // SCC {20,21}
-      (12L, 20L),                            // bridge
-      (1L, 2L), (2L, 3L), (3L, 10L),         // in-tendril 1→2→3→core
-      (20L, 30L), (30L, 31L), (31L, 32L),    // out-tendril core→30→31→32
-      (40L, 40L)                             // self-loop singleton
-    ).toDF("src", "dst")
-    val basket = GraphQueries.basketEdges(spark, sf)
-    for (edges <- Seq(planted, basket)) {
-      val trimmed = Scc.components(edges)
-      val colored = Scc.components(edges, maxTrimRounds = 0)
-      assert(trimmed.exceptAll(colored).isEmpty &&
-        colored.exceptAll(trimmed).isEmpty,
-        "trim must be label-invariant: trim+color ≡ color alone")
-    }
-  }
 
   // --- directive 3: KN perplexity filter --------------------------------------------
 
@@ -135,16 +109,6 @@ class Round17Spec extends AnyFunSuite {
     assert(capped.count() == 0)
     val full = SuffixSpans.repeatedSpans(docs, "doc_id", "text", 16, 512)
     assert(full.count() == 2)
-  }
-
-  test("Scc trim peels a pure tendril forest entirely (no fixpoint rounds needed)") {
-    import spark.implicits._
-    // a DAG has only singleton SCCs; trim alone must finish it
-    val dag = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 5L))
-      .toDF("src", "dst")
-    val got = Scc.components(dag).orderBy("node").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(got == Seq(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L, 5L -> 5L))
   }
 
   // --- directive 6: d-dimensional layout curves --------------------------------------

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{KCore, Scc, Triangles}
+import graft.operators.{KCore, Triangles}
 
 /** Round-19 (optimization round 2) contracts: every rewritten operator
   * must compute EXACTLY what it computed before — these specs pin the
@@ -44,42 +44,6 @@ class Round19Spec extends AnyFunSuite {
     // hub 1 sits on the two triangles {1,2,3} and {1,3,4}
     val hub = bc.find(_.getLong(0) == 1L).get
     assert(hub.getLong(hub.fieldIndex("n_triangles")) == 2L)
-  }
-
-  // --- SCC: multi-layer trim ≡ per-layer trim --------------------------------------
-
-  /** Long tendrils (deeper than one 4-layer trim batch) feeding and
-    * draining a 3-cycle, plus a 2-cycle and a pure chain: the peel
-    * must cross batch boundaries and leave exactly the cycles.
-    */
-  test("SCC components with deep tendrils across trim batches") {
-    // chain 1→2→…→10 → cycle {11,12,13} → chain 14→…→23; 2-cycle {30,31};
-    // pure chain 40→41→…→49 (all singletons)
-    val inChain = (1L to 9L).map(i => (i, i + 1)) :+ (10L, 11L)
-    val cycle = Seq((11L, 12L), (12L, 13L), (13L, 11L))
-    val outChain = Seq((13L, 14L)) ++ (14L until 23L).map(i => (i, i + 1))
-    val two = Seq((30L, 31L), (31L, 30L))
-    val chain = (40L until 49L).map(i => (i, i + 1))
-    val edges = (inChain ++ cycle ++ outChain ++ two ++ chain)
-      .toDF("src", "dst")
-    val got = Scc.components(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val nodes = (1L to 23L) ++ Seq(30L, 31L) ++ (40L to 49L)
-    assert(got.keySet == nodes.toSet)
-    for (n <- Seq(11L, 12L, 13L)) assert(got(n) == 11L, s"cycle member $n")
-    for (n <- Seq(30L, 31L)) assert(got(n) == 30L, s"2-cycle member $n")
-    for (n <- nodes if !Seq(11L, 12L, 13L, 30L, 31L).contains(n))
-      assert(got(n) == n, s"singleton $n")
-  }
-
-  test("SCC trim batch boundary: tendril depth a multiple of the unroll") {
-    // exactly 8 peel layers (2 full 4-layer batches) then a 0-peel batch
-    val edges = ((1L to 8L).map(i => (i, i + 1)) ++
-      Seq((9L, 10L), (10L, 9L))).toDF("src", "dst")
-    val got = Scc.components(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got(9L) == 9L && got(10L) == 9L)
-    for (n <- 1L to 8L) assert(got(n) == n)
   }
 
   // --- KCore: null endpoints are dropped, not kept forever -------------------------
